@@ -29,13 +29,6 @@ repo stages those frames through a checkpoint. Two modes:
     the box — cluster deployments should point it at durable storage
     via ``SparkContext.setCheckpointDir`` first.
 
-``off``
-    Identity — no materialization, full lineage kept. For PLAN
-    INSPECTION ONLY (tests asserting on window/join shapes that a
-    checkpoint would otherwise truncate out of ``explain()``); running
-    multi-pass operators in this mode re-derives staged subtrees per
-    consumer and regrows the super-linear plans staging exists to cut.
-
 Mode selection: the ``SPARK_GRAFT_STAGING`` env var at import, or
 :func:`set_staging` at runtime. A knob (not a per-call parameter)
 because the choice is a deployment property, not a per-operator one.
@@ -48,14 +41,10 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
-_VALID = ("local", "reliable", "off")
+_VALID = ("local", "reliable")
 _MODE = os.environ.get("SPARK_GRAFT_STAGING", "local")
 if _MODE not in _VALID:  # pragma: no cover - env misconfiguration
     raise ValueError(f"SPARK_GRAFT_STAGING must be one of {_VALID}, got {_MODE!r}")
-
-
-def staging_mode() -> str:
-    return _MODE
 
 
 def set_staging(mode: str) -> None:
@@ -67,8 +56,6 @@ def set_staging(mode: str) -> None:
 
 def stage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` and truncate its lineage per the active mode."""
-    if _MODE == "off":
-        return df
     if _MODE == "reliable":
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():

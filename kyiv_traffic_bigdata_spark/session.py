@@ -31,13 +31,6 @@ def get_spark(
       * UTC session time zone so timestamps compare bit-for-bit against
         UTC-naive engines (DuckDB oracle) and across clusters.
     """
-    # Activate the vendored protobuf mini-runtime BEFORE the JVM
-    # launches so TWS companion runners (which build PYTHONPATH from
-    # the JVM's env) inherit it; no-op when real protobuf is installed.
-    from .protoshim import ensure_protobuf
-
-    ensure_protobuf()
-
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -119,6 +119,9 @@ def streaming_trajectory_speeds(
 
     Input needs columns (vehicle_id:long, lat:double, lon:double, ts:long).
     Output one row per plausible consecutive-fix pair, incrementally.
+    An ``availableNow`` run does not terminate on its own (nor does
+    ``processAllAvailable`` return): the processing-time timeout keeps
+    scheduling no-data batches, so stop the query once its input is read.
     """
     return positions.groupBy("vehicle_id").applyInPandasWithState(
         make_speed_fn(gap_max_s, speed_max, state_ttl_s),
@@ -658,763 +661,3 @@ def streaming_mg_summary(tokens: DataFrame, k: int = 48) -> DataFrame:
 
 
 __all__ += ["streaming_mg_summary", "make_mg_fn", "MG_OUTPUT_SCHEMA"]
-
-
-# ---------------------------------------------------------------------------
-# transformWithState twin (the Spark 4 StatefulProcessor API)
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class TrajectorySpeedProcessor(StatefulProcessor):
-    """Spark-4 ``transformWithState`` form of the trajectory-speed op —
-    identical per-key semantics to :func:`make_speed_fn`, expressed on
-    the new StatefulProcessor API: typed ``ValueState`` for the last
-    fix with a STORE-MANAGED TTL (the state store expires the entry
-    itself — no timeout callback round-trip like GroupState), and
-    state schema evolution handled by the store. Requires the RocksDB
-    provider (the TWS contract in OSS Spark 4) — the wrapper below
-    enforces it. Both forms stay in the suite: applyInPandasWithState
-    is the broadly-deployed API, this is where Spark stateful
-    processing is going.
-    """
-
-    def __init__(
-        self,
-        gap_max_s: int = MAX_TIME_GAP_S,
-        speed_max: float = MAX_PLAUSIBLE_SPEED_KMH,
-        state_ttl_s: int = 3600,
-    ):
-        self._gap_max_s = gap_max_s
-        self._speed_max = speed_max
-        self._ttl_ms = state_ttl_s * 1000
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._fix = handle.getValueState(
-            "last_fix", STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        batch = pd.concat(list(rows), ignore_index=True)
-        if batch.empty:
-            return
-        batch = batch.sort_values("ts", kind="mergesort", ignore_index=True)
-        if self._fix.exists():
-            st = self._fix.get()
-            prev = pd.DataFrame(
-                {"lat": [float(st[0])], "lon": [float(st[1])], "ts": [int(st[2])]}
-            )
-            chain = pd.concat(
-                [prev, batch[["lat", "lon", "ts"]]], ignore_index=True
-            )
-        else:
-            chain = batch[["lat", "lon", "ts"]]
-        last = chain.iloc[-1]
-        self._fix.update(
-            (float(last["lat"]), float(last["lon"]), int(last["ts"]))
-        )
-        if len(chain) < 2:
-            return
-        cur = chain.iloc[1:].reset_index(drop=True)
-        prv = chain.iloc[:-1].reset_index(drop=True)
-        dt = (cur["ts"] - prv["ts"]).astype("int64")
-        dist = _haversine_km(
-            prv["lat"].to_numpy(), prv["lon"].to_numpy(),
-            cur["lat"].to_numpy(), cur["lon"].to_numpy(),
-        )
-        speed = pd.Series(dist, dtype="float64") * 3600.0 / dt.where(dt != 0, 1)
-        out = pd.DataFrame(
-            {
-                "vehicle_id": key[0],
-                "ts": cur["ts"].astype("int64"),
-                "dt_s": dt,
-                "dist_km": dist,
-                "speed_kmh": speed,
-            }
-        )
-        mask = (
-            (dt > 0)
-            & (dt <= self._gap_max_s)
-            & (speed > 0)
-            & (speed < self._speed_max)
-        )
-        out = out[mask.to_numpy()]
-        if not out.empty:
-            yield out
-
-    def close(self) -> None:
-        pass
-
-
-def transform_with_state_available(spark=None) -> bool:
-    """True when this platform can RUN transformWithState: the worker
-    protocol needs ``google.protobuf`` (absent in some sandboxes) and
-    the RocksDB state store (the TWS contract in OSS Spark 4). Pass the
-    SparkSession to include the store probe; None checks protobuf only.
-
-    Where protobuf is absent, the vendored mini-runtime
-    (:mod:`kyiv_traffic_bigdata_spark.protoshim`) is activated — on the
-    driver AND, when ``spark`` is given, shipped to the Python workers
-    via addPyFile — so TWS runs even in pipless sandboxes."""
-    from ..protoshim import ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        return False
-    if spark is None:
-        return True
-    from .state import rocksdb_available
-
-    return rocksdb_available(spark)
-
-
-def streaming_trajectory_speeds_v2(
-    positions: DataFrame,
-    gap_max_s: int = MAX_TIME_GAP_S,
-    speed_max: float = MAX_PLAUSIBLE_SPEED_KMH,
-    state_ttl_s: int = 3600,
-) -> DataFrame:
-    """W1 trajectory speeds on ``transformWithStateInPandas`` (same
-    contract as :func:`streaming_trajectory_speeds`). Raises unless the
-    platform can run TWS (RocksDB store + protobuf in the Python
-    workers — see :func:`transform_with_state_available`); callers on
-    platforms without either use the applyInPandasWithState form. The
-    processor's per-key logic is platform-independent and unit-tested
-    sans-IO against a fake handle (tests/test_stateful_streaming.py),
-    the same seam discipline as streaming/transport.py."""
-    from .state import ROCKSDB_PROVIDER, configure_state_store
-
-    provider = configure_state_store(positions.sparkSession)
-    if provider != ROCKSDB_PROVIDER or not transform_with_state_available(
-        positions.sparkSession
-    ):
-        raise RuntimeError(
-            "transformWithState requires the RocksDB state store and "
-            "google.protobuf in the Python workers; "
-            "use streaming_trajectory_speeds on this platform"
-        )
-    return positions.groupBy("vehicle_id").transformWithStateInPandas(
-        statefulProcessor=TrajectorySpeedProcessor(
-            gap_max_s, speed_max, state_ttl_s
-        ),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        # TTL'd state is only legal with processing-time semantics
-        # (the store needs a clock to expire against); timeMode="none"
-        # is rejected by the JVM at getValueState time.
-        timeMode="processingTime",
-    )
-
-
-__all__ += [
-    "streaming_trajectory_speeds_v2",
-    "TrajectorySpeedProcessor",
-    "transform_with_state_available",
-]
-
-
-#: recent-values window kept per user by the profile processor.
-PROFILE_RECENT_K = 3
-
-PROFILE_OUTPUT_SCHEMA = (
-    "user_id long, event_type string, n_events long, n_total long, "
-    "recent_mean double"
-)
-
-
-class UserProfileProcessor(StatefulProcessor):
-    """Online feature-store maintenance on transformWithState: per user,
-    a ``MapState`` of event-type → count and a ``ListState`` of the
-    last ``k`` event values, refreshed incrementally per micro-batch —
-    the pattern that keeps model features warm without recomputing a
-    growing history (the batch recompute is the parity oracle in the
-    test, not the production plan).
-
-    Deliberately exercises the WHOLE typed-state surface of the new
-    API: map containsKey/getValue/updateValue/values plus list
-    appendList/get/put — which also makes its e2e test the conformance
-    run for those wire paths of the vendored protobuf mini-runtime
-    (every call crosses the JVM state-server socket)."""
-
-    def __init__(self, recent_k: int = PROFILE_RECENT_K):
-        self._k = recent_k
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._counts = handle.getMapState(
-            "type_counts", "event_type string", "n long"
-        )
-        self._recent = handle.getListState("recent_vals", "ts long, v double")
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        batch = pd.concat(list(rows), ignore_index=True)
-        if batch.empty:
-            return
-        batch = batch.sort_values("ts", kind="mergesort", ignore_index=True)
-
-        # list state: append this batch's (ts, value), trim to last k
-        self._recent.appendList(
-            [
-                (int(t), float(v))
-                for t, v in zip(batch["ts"], batch["value"])
-            ]
-        )
-        vals = sorted(self._recent.get(), key=lambda r: (int(r[0]),))
-        kept = vals[-self._k :]
-        self._recent.put([(int(t), float(v)) for t, v in kept])
-        recent_mean = float(sum(v for _t, v in kept)) / len(kept)
-
-        # map state: bump per-type counts touched by this batch
-        touched: dict[str, int] = {}
-        for etype, cnt in batch.groupby("event_type").size().items():
-            cur = (
-                int(self._counts.getValue((etype,))[0])
-                if self._counts.containsKey((etype,))
-                else 0
-            )
-            self._counts.updateValue((etype,), (cur + int(cnt),))
-            touched[etype] = cur + int(cnt)
-
-        # values() iterates the full map through the state server
-        n_total = sum(int(v[0]) for v in self._counts.values())
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])] * len(touched),
-                "event_type": list(touched),
-                "n_events": list(touched.values()),
-                "n_total": [n_total] * len(touched),
-                "recent_mean": [recent_mean] * len(touched),
-            }
-        )
-
-
-def streaming_user_profiles(
-    events: DataFrame, recent_k: int = PROFILE_RECENT_K
-) -> DataFrame:
-    """Per-user incremental profile features over a STREAMING events
-    frame (user_id long, event_type string, value double, ts long).
-    Same platform contract as :func:`streaming_trajectory_speeds_v2`."""
-    from .state import ROCKSDB_PROVIDER, configure_state_store
-
-    provider = configure_state_store(events.sparkSession)
-    if provider != ROCKSDB_PROVIDER or not transform_with_state_available(
-        events.sparkSession
-    ):
-        raise RuntimeError(
-            "transformWithState requires the RocksDB state store and "
-            "google.protobuf in the Python workers"
-        )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfileProcessor(recent_k),
-        outputStructType=PROFILE_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-__all__ += [
-    "UserProfileProcessor",
-    "streaming_user_profiles",
-    "PROFILE_OUTPUT_SCHEMA",
-]
-
-
-IDLE_FLUSH_OUTPUT_SCHEMA = "user_id long, n_flushed long"
-
-
-class IdleFlushProcessor(StatefulProcessor):
-    """Timer-driven buffered flush on transformWithState: rows per key
-    accumulate into a ValueState counter and are emitted ONLY when the
-    key's processing-time timer fires — the buffer-until-idle shape
-    (micro-batch write coalescing, session finalization, delayed-ack
-    sinks) that GroupStateTimeout could only approximate with one
-    timeout per key.
-
-    Exercises the remaining typed-timer surface of the new API —
-    registerTimer / listTimers / deleteTimer on data, the expired-timer
-    callback with its iterator on fire — which makes its e2e test the
-    conformance run for the timer wire messages of the vendored
-    protobuf mini-runtime (TimerStateCallCommand, ExpiryTimerRequest,
-    StateResponseWithTimer)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._n = handle.getValueState("n", "n long")
-        self._handle = handle
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        total = sum(len(p) for p in rows)
-        if total == 0:
-            return iter(())
-        cur = int(self._n.get()[0]) if self._n.exists() else 0
-        self._n.update((cur + total,))
-        # one live timer per key: list-and-delete any stale ones, then
-        # arm a fresh timer one tick past the current batch's clock
-        for t in self._handle.listTimers():
-            self._handle.deleteTimer(t)
-        self._handle.registerTimer(
-            timer_values.getCurrentProcessingTimeInMs() + 1
-        )
-        return iter(())
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):  # noqa: ANN001,N803 — the framework invokes by these keyword names
-        if not self._n.exists():
-            return
-        n = int(self._n.get()[0])
-        self._n.clear()
-        yield pd.DataFrame(
-            {"user_id": [int(key[0])], "n_flushed": [n]}
-        )
-
-
-def streaming_idle_flush(events: DataFrame) -> DataFrame:
-    """Timer-flushed per-user row counts over a STREAMING frame with a
-    (user_id long, ...) schema. Same platform contract as the other
-    transformWithState wrappers; timeMode MUST be processingTime — the
-    timers are the whole operator."""
-    from .state import ROCKSDB_PROVIDER, configure_state_store
-
-    provider = configure_state_store(events.sparkSession)
-    if provider != ROCKSDB_PROVIDER or not transform_with_state_available(
-        events.sparkSession
-    ):
-        raise RuntimeError(
-            "transformWithState requires the RocksDB state store and "
-            "google.protobuf in the Python workers"
-        )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=IdleFlushProcessor(),
-        outputStructType=IDLE_FLUSH_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="processingTime",
-    )
-
-
-__all__ += [
-    "IdleFlushProcessor",
-    "streaming_idle_flush",
-    "IDLE_FLUSH_OUTPUT_SCHEMA",
-]
-
-
-class SessionizeProcessor(StatefulProcessor):
-    """Spark-4 ``transformWithState`` twin of :func:`make_session_fn`
-    (r09: the production sessionizer now ships on BOTH stateful APIs,
-    like trajectory speeds) — identical per-key semantics: events
-    extend the open session while the inter-event gap stays ≤ gap_s; a
-    larger gap closes and emits it; an idle key's open session is
-    flushed by a per-key PROCESSING-TIME TIMER (the TWS-native form of
-    GroupStateTimeout — re-armed on every batch, so it only fires after
-    ``state_ttl_s`` of real silence). State is the same O(1)
-    (start, last, n) triple, here a typed ValueState.
-
-    The late-data discipline matches make_session_fn line-for-line
-    (min/max widening; a late event > gap_us older than the open
-    session's start merges rather than re-opening a closed session —
-    append mode can't emit retroactively)."""
-
-    def __init__(self, gap_s: int = 1800, state_ttl_s: int = 3600):
-        self._gap_us = gap_s * 1_000_000
-        self._ttl_ms = state_ttl_s * 1000
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._cur = handle.getValueState("open_session", SESSION_STATE_SCHEMA)
-        self._handle = handle
-
-    def _row(self, key, start, last, n):
-        return pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "session_start_us": [int(start)],
-                "session_end_us": [int(last)],
-                "n_events": [int(n)],
-            }
-        )
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        batch = pd.concat(list(rows), ignore_index=True)
-        if batch.empty:
-            return
-        ts = batch["ts_us"].sort_values(kind="mergesort", ignore_index=True)
-        cur = list(self._cur.get()) if self._cur.exists() else None
-        closed = []
-        for t in ts.to_numpy():
-            t = int(t)
-            if cur is None:
-                cur = [t, t, 0]
-            elif t - cur[1] > self._gap_us:
-                closed.append(tuple(cur))
-                cur = [t, t, 0]
-            cur[0] = min(cur[0], t)
-            cur[1] = max(cur[1], t)
-            cur[2] += 1
-        self._cur.update((int(cur[0]), int(cur[1]), int(cur[2])))
-        # one live idle timer per key, pushed out by every new batch
-        for t in self._handle.listTimers():
-            self._handle.deleteTimer(t)
-        self._handle.registerTimer(
-            timer_values.getCurrentProcessingTimeInMs() + self._ttl_ms
-        )
-        for start, last, n in closed:
-            yield self._row(key, start, last, n)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):  # noqa: ANN001,N803 — framework kwarg names
-        if not self._cur.exists():
-            return
-        start, last, n = self._cur.get()
-        self._cur.clear()
-        yield self._row(key, start, last, n)
-
-
-def streaming_sessionize_v2(
-    events: DataFrame, gap_s: int = 1800, state_ttl_s: int = 3600
-) -> DataFrame:
-    """Gap-based sessions on ``transformWithStateInPandas`` (same
-    contract as :func:`streaming_sessionize`: input (user_id long,
-    ts_us long), one append row per CLOSED session). Same platform
-    contract as the other transformWithState wrappers; timeMode must be
-    processingTime — the idle-close timer is part of the operator."""
-    from .state import ROCKSDB_PROVIDER, configure_state_store
-
-    provider = configure_state_store(events.sparkSession)
-    if provider != ROCKSDB_PROVIDER or not transform_with_state_available(
-        events.sparkSession
-    ):
-        raise RuntimeError(
-            "transformWithState requires the RocksDB state store and "
-            "google.protobuf in the Python workers; "
-            "use streaming_sessionize on this platform"
-        )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionizeProcessor(gap_s, state_ttl_s),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="processingTime",
-    )
-
-
-__all__ += ["SessionizeProcessor", "streaming_sessionize_v2"]
-
-
-class MGSummaryProcessor(StatefulProcessor):
-    """Spark-4 ``transformWithState`` twin of :func:`make_mg_fn` — the
-    Misra-Gries candidate summary on the StatefulProcessor API, so the
-    newest stateful op ships on BOTH APIs like trajectory speeds and
-    sessions. Identical per-key semantics: per batch, add the batch's
-    token counts to the summary, apply the mergeable prune (subtract
-    the (k+1)-th largest, drop non-positive), emit the refreshed
-    summary. State is a typed ValueState of the ≤ k (tokens, counts)
-    arrays + running total — cumulative, so NO timer/TTL (expiring a
-    summary breaks the superset guarantee, same rationale as KMV)."""
-
-    def __init__(self, k: int = 48):
-        if k < 2:
-            raise ValueError("k must be >= 2")
-        self._k = k
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._summ = handle.getValueState("mg_summary", MG_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        import heapq
-
-        batch = pd.concat(list(rows), ignore_index=True)
-        if not batch.empty:
-            batch = batch[batch["token"].notna()]  # N must match value_counts
-        if batch.empty:
-            return
-        if self._summ.exists():
-            toks, counts, n_total = self._summ.get()
-            summ = dict(zip(toks, (int(c) for c in counts)))
-        else:
-            summ, n_total = {}, 0
-        n_total = int(n_total) + len(batch)
-        for v, c in batch["token"].value_counts().items():
-            summ[v] = summ.get(v, 0) + int(c)
-        if len(summ) > self._k:
-            m = heapq.nlargest(self._k + 1, summ.values())[-1]
-            summ = {v: c - m for v, c in summ.items() if c > m}
-        self._summ.update((list(summ.keys()), list(summ.values()), n_total))
-        yield pd.DataFrame(
-            {
-                "source": key[0],
-                "token": list(summ.keys()),
-                "residual": list(summ.values()),
-                "n_total": n_total,
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_mg_summary_v2(tokens: DataFrame, k: int = 48) -> DataFrame:
-    """Misra-Gries summary on ``transformWithStateInPandas`` (same
-    contract as :func:`streaming_mg_summary`: input (source string,
-    token string), update-mode summary refresh per batch)."""
-    from .state import ROCKSDB_PROVIDER, configure_state_store
-
-    provider = configure_state_store(tokens.sparkSession)
-    if provider != ROCKSDB_PROVIDER or not transform_with_state_available(
-        tokens.sparkSession
-    ):
-        raise RuntimeError(
-            "transformWithState requires the RocksDB state store and "
-            "google.protobuf in the Python workers; "
-            "use streaming_mg_summary on this platform"
-        )
-    return tokens.groupBy("source").transformWithStateInPandas(
-        statefulProcessor=MGSummaryProcessor(k),
-        outputStructType=MG_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
-__all__ += ["MGSummaryProcessor", "streaming_mg_summary_v2"]
-
-
-# ---------------------------------------------------------------------------
-# Spark-4 transformWithState twins for the remaining sketch-cell family
-# (r09 VERDICT ask #8: every applyInPandasWithState op ships on both
-# stateful APIs). One generic processor serves every CELL-keyed counter
-# (flat CMS and dyadic rank cells share the shape); KMV gets its own.
-# ---------------------------------------------------------------------------
-
-
-class CellCounterProcessor(StatefulProcessor):
-    """Generic additive cell counter on the StatefulProcessor API — the
-    ``transformWithState`` twin of BOTH :func:`make_cms_fn` (flat CMS,
-    key = (j, b)) and :func:`make_rank_cell_fn` (dyadic rank cells,
-    key = (g, lvl, j, b)). State per key (= per touched sketch cell) is
-    ONE long; each batch adds its row count and emits the refreshed
-    (key..., c) row. Counters are plain sums — associative and
-    commutative — so ANY batching reaches the identical counter table
-    as one batch over the union, the exact-parity argument of the
-    applyInPandasWithState forms. No timer/TTL: frequency and rank
-    sketches are cumulative; expiring cells silently undercounts
-    (CMS) or shifts every quantile left (rank)."""
-
-    def __init__(self, key_cols: list[str]):
-        if not key_cols:
-            raise ValueError("key_cols must name the grouping columns")
-        self._key_cols = list(key_cols)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._c = handle.getValueState("cell_count", "c long")
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        add = sum(len(p) for p in rows)
-        if add == 0:
-            return
-        total = (int(self._c.get()[0]) if self._c.exists() else 0) + add
-        self._c.update((total,))
-        out = {col: [k] for col, k in zip(self._key_cols, key)}
-        out["c"] = [total]
-        yield pd.DataFrame(out)
-
-    def close(self) -> None:
-        pass
-
-
-def _require_tws(df: DataFrame, fallback: str) -> None:
-    """Shared v2 guard: RocksDB store + protobuf-capable workers."""
-    from .state import ROCKSDB_PROVIDER, configure_state_store
-
-    provider = configure_state_store(df.sparkSession)
-    if provider != ROCKSDB_PROVIDER or not transform_with_state_available(
-        df.sparkSession
-    ):
-        raise RuntimeError(
-            "transformWithState requires the RocksDB state store and "
-            f"google.protobuf in the Python workers; use {fallback} "
-            "on this platform"
-        )
-
-
-def streaming_cms_counters_v2(cells: DataFrame) -> DataFrame:
-    """Count-min counter matrix on ``transformWithStateInPandas`` (same
-    contract as :func:`streaming_cms_counters`: input pre-exploded
-    (j:int, b:int) cell rows, update-mode counter refresh)."""
-    _require_tws(cells, "streaming_cms_counters")
-    return cells.groupBy("j", "b").transformWithStateInPandas(
-        statefulProcessor=CellCounterProcessor(["j", "b"]),
-        outputStructType=CMS_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
-def streaming_rank_sketch_cells_v2(cells: DataFrame) -> DataFrame:
-    """Dyadic-CMS rank-sketch counters on ``transformWithStateInPandas``
-    (same contract as :func:`streaming_rank_sketch_cells`: input
-    pre-exploded (g:string, lvl:int, j:int, b:int) cell rows from
-    ``operators.qsketch.dyadic_cells``, update-mode refresh — streamed
-    cells feed the same driver-side descent as the batch sketch)."""
-    _require_tws(cells, "streaming_rank_sketch_cells")
-    return cells.groupBy("g", "lvl", "j", "b").transformWithStateInPandas(
-        statefulProcessor=CellCounterProcessor(["g", "lvl", "j", "b"]),
-        outputStructType=QRANK_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
-class KMVProcessor(StatefulProcessor):
-    """``transformWithState`` twin of :func:`make_kmv_fn` — the bottom-k
-    (KMV) distinct sketch on the StatefulProcessor API. Identical
-    merge rule (bottom-k of the union of state and batch hashes) and
-    identical floor-form round6 estimate, so batch/stream/API parity is
-    exact by the associativity of bottom-k. State: the ≤ k smallest
-    distinct hashes (O(k) longs). No timer/TTL — cumulative sketch."""
-
-    def __init__(self, k: int = 64):
-        if k < 2:
-            raise ValueError("k must be >= 2")
-        self._k = k
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._h = handle.getValueState("kmv_hashes", "hs array<long>")
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        import math
-
-        batch = pd.concat(list(rows), ignore_index=True)
-        if batch.empty:
-            return
-        cur = list(self._h.get()[0]) if self._h.exists() else []
-        merged = sorted(set(cur).union(int(h) for h in batch["h"]))[: self._k]
-        self._h.update((merged,))
-        n = len(merged)
-        kth = merged[-1]
-        if n < self._k:
-            est = float(n)
-        else:
-            est = (
-                math.floor((self._k - 1) * 4294967296.0 / kth * 1e6 + 0.5)
-                / 1e6
-            )
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_kept": [n],
-                "kth_hash": [kth],
-                "est_users": [est],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_user_distinct_sketch_v2(events: DataFrame, k: int = 64) -> DataFrame:
-    """KMV distinct-users sketch on ``transformWithStateInPandas`` (same
-    contract as :func:`streaming_user_distinct_sketch`: input
-    (event_type:string, h:long) with ``h`` the portable md5 hash
-    computed JVM-side, update-mode estimate refresh)."""
-    _require_tws(events, "streaming_user_distinct_sketch")
-    return events.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=KMVProcessor(k),
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
-__all__ += [
-    "CellCounterProcessor",
-    "KMVProcessor",
-    "streaming_cms_counters_v2",
-    "streaming_rank_sketch_cells_v2",
-    "streaming_user_distinct_sketch_v2",
-]
-
-
-class BurstProcessor(StatefulProcessor):
-    """``transformWithState`` twin of :func:`make_burst_fn` — the k-th-
-    event-within-window burst detector on the StatefulProcessor API,
-    completing the both-APIs matrix for EVERY stateful op in this
-    module. Identical per-key semantics: O(k) state (the last k−1 event
-    timestamps), per batch the sorted new timestamps chain onto the
-    history and each new event whose span back to its (k−1)-th
-    predecessor fits the window emits a burst row (append — a burst
-    flag never changes). The idle-state TTL is a per-key processing-
-    time TIMER (the TWS-native GroupStateTimeout form, re-armed each
-    batch); on expiry the history is DROPPED, not emitted — with
-    ``state_ttl_s >= window_s`` (enforced) an idle gap long enough to
-    expire the state is also long enough that no burst window can span
-    it, so expiry never loses a burst."""
-
-    def __init__(self, k: int = 3, window_s: int = 14400,
-                 state_ttl_s: int = 86400):
-        if k < 2:
-            raise ValueError("k must be >= 2 (a 1-event burst is every event)")
-        if state_ttl_s < window_s:
-            raise ValueError(
-                "state_ttl_s must be >= window_s (burst-loss guard)"
-            )
-        self._k = k
-        self._window_us = window_s * 1_000_000
-        self._ttl_ms = state_ttl_s * 1000
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._hist = handle.getValueState("burst_hist", BURST_STATE_SCHEMA)
-        self._handle = handle
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        batch = pd.concat(list(rows), ignore_index=True)
-        if batch.empty:
-            return
-        hist = list(self._hist.get()[0]) if self._hist.exists() else []
-        new_ts = sorted(int(t) for t in batch["ts_us"].to_numpy())
-        chain = hist + new_ts
-        out_ts, out_span = [], []
-        for j in range(len(hist), len(chain)):
-            if j >= self._k - 1:
-                span = chain[j] - chain[j - (self._k - 1)]
-                if span <= self._window_us:
-                    out_ts.append(chain[j])
-                    out_span.append(span)
-        self._hist.update((chain[-(self._k - 1):],))
-        for t in self._handle.listTimers():
-            self._handle.deleteTimer(t)
-        self._handle.registerTimer(
-            timer_values.getCurrentProcessingTimeInMs() + self._ttl_ms
-        )
-        if out_ts:
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(key[0])] * len(out_ts),
-                    "ts_us": out_ts,
-                    "span_us": out_span,
-                }
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):  # noqa: ANN001,N803 — framework kwarg names
-        self._hist.clear()
-        return
-        yield  # pragma: no cover — generator contract, no emission on expiry
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_event_bursts_v2(
-    events: DataFrame, k: int = 3, window_s: int = 14400,
-    state_ttl_s: int = 86400,
-) -> DataFrame:
-    """Burst detection on ``transformWithStateInPandas`` (same contract
-    as :func:`streaming_event_bursts`: input (user_id long, ts_us
-    long), append rows; timeMode processingTime — the idle-expiry
-    timer is part of the operator)."""
-    _require_tws(events, "streaming_event_bursts")
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=BurstProcessor(k, window_s, state_ttl_s),
-        outputStructType=BURST_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="processingTime",
-    )
-
-
-__all__ += ["BurstProcessor", "streaming_event_bursts_v2"]

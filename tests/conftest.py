@@ -14,6 +14,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _no_leftover_streams(request):
+    """Fail a test that leaves a streaming query running in the shared
+    session (it would keep scheduling batches under every later test),
+    after stopping the leftovers."""
+    yield
+    if "spark" not in request.fixturenames:
+        return
+    leftover = request.getfixturevalue("spark").streams.active
+    for q in leftover:
+        q.stop()
+    if leftover:
+        pytest.fail(
+            "streaming queries left running: "
+            + ", ".join(q.name or q.id for q in leftover)
+        )
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

@@ -105,9 +105,7 @@ def test_grid_sum_max_magnitude_charge_products(spark):
     exceed the decimal(28,10) cast's 5e-11 half-grid, so per-row
     equality with the decimal path is NOT claimed; what the module
     docstring claims — and this test pins — is equality of the final
-    aggregate double within 2 ulps. Exact equality is additionally
-    reported via the assert message when it holds (it does on every
-    real table the oracle gate runs)."""
+    aggregate double within 2 ulps."""
     import math
 
     rng = random.Random(13)

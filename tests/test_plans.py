@@ -644,7 +644,9 @@ def test_kcore_peel_equi_joins_only(plans):
     assert len(re.findall(r"\(\d+\) Window", plan)) == 0
 
 
-def test_prefix_filter_ranking_window_per_doc_no_cartesian(spark, sf_dir):
+def test_prefix_filter_ranking_window_per_doc_no_cartesian(
+    spark, sf_dir, monkeypatch
+):
     """Prefix-filter join: the candidate join is an equi-join on prefix
     shingles and the df-ranking window partitions by doc_id (bounded by
     doc length) — never an unpartitioned global rank, never a cartesian
@@ -653,22 +655,14 @@ def test_prefix_filter_ranking_window_per_doc_no_cartesian(spark, sf_dir):
     AQE-skew-split the way the _df join can).
 
     The operator stages its enriched frame (checkpoints truncate the
-    window subtree out of the final explain()), so the shape is
-    asserted with staging switched off for the plan build only."""
-    from kyiv_traffic_bigdata_spark.operators.dedup import prefix_filter_pairs
-    from kyiv_traffic_bigdata_spark.operators.staging import (
-        set_staging,
-        staging_mode,
-    )
+    window subtree out of the final explain()), so the plan is built
+    with the operator's ``stage`` replaced by identity."""
+    from kyiv_traffic_bigdata_spark.operators import dedup
     from kyiv_traffic_bigdata_spark.queries import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    prior = staging_mode()
-    set_staging("off")
-    try:
-        plan = physical_plan(prefix_filter_pairs(docs), mode="simple")
-    finally:
-        set_staging(prior)
+    monkeypatch.setattr(dedup, "stage", lambda df: df)
+    plan = physical_plan(dedup.prefix_filter_pairs(docs), mode="simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     specs = re.findall(r"windowspecdefinition\(([^,]+),", plan)

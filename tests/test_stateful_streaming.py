@@ -14,6 +14,33 @@ from kyiv_traffic_bigdata_spark.streaming.stateful import streaming_trajectory_s
 SCHEMA = "vehicle_id long, lat double, lon double, ts long"
 
 
+class _FakeGroupState:
+    """Sans-IO stand-in for ``GroupState`` (same seam discipline as the
+    transport tests' fake sockets)."""
+
+    def __init__(self, value=None):
+        self._v = value
+        self.hasTimedOut = False
+        self.timeout_ms = None
+
+    @property
+    def exists(self):
+        return self._v is not None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_ms = ms
+
+    def remove(self):
+        self._v = None
+
+
 def _write_batch(dirpath, name, rows):
     (dirpath / name).write_text(
         "\n".join(
@@ -21,6 +48,33 @@ def _write_batch(dirpath, name, rows):
         )
         + "\n"
     )
+
+
+def _run_until_read(frame, name, ckpt, n_rows, timeout_s=120):
+    """Run ``frame`` into memory table ``name`` with an availableNow
+    trigger until its progress shows ``n_rows`` input rows read, then
+    stop it. The operator's processing-time timeout keeps the query
+    running no-data batches after the input is drained, so neither
+    awaitTermination nor processAllAvailable would return."""
+    q = (
+        frame.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    read = 0
+    try:
+        deadline = time.time() + timeout_s
+        while q.isActive and time.time() < deadline:
+            read = sum(p["numInputRows"] for p in q.recentProgress)
+            if read >= n_rows:
+                break
+            time.sleep(0.2)
+        assert read == n_rows, (read, q.exception())
+    finally:
+        q.stop()
 
 
 @pytest.mark.slow
@@ -67,7 +121,6 @@ def test_state_carries_across_micro_batches(spark, tmp_path):
     assert abs(rows[(1, 1060)].speed_kmh - rows[(1, 1120)].speed_kmh) < 5
 
 
-@pytest.mark.slow
 def test_implausible_pairs_are_gated(spark, tmp_path):
     src = tmp_path / "src2"
     src.mkdir()
@@ -83,17 +136,46 @@ def test_implausible_pairs_are_gated(spark, tmp_path):
         ],
     )
     stream = spark.readStream.schema(SCHEMA).json(str(src))
-    q = (
-        streaming_trajectory_speeds(stream)
-        .writeStream.format("memory")
-        .queryName("traj_gated")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _run_until_read(
+        streaming_trajectory_speeds(stream), "traj_gated", str(tmp_path / "ckpt2"), 4
     )
-    q.awaitTermination(60)
     assert spark.sql("SELECT * FROM traj_gated").count() == 0
+
+
+def test_speed_fn_logic_sans_io():
+    """make_speed_fn's per-key logic driven directly against a fake
+    GroupState: in-batch pairing, cross-batch state carry, guard
+    gating, state advance, TTL re-arming and timeout eviction."""
+    import pandas as pd
+
+    from kyiv_traffic_bigdata_spark.streaming.stateful import make_speed_fn
+
+    fn = make_speed_fn(state_ttl_s=60)
+    state = _FakeGroupState()
+
+    b1 = pd.DataFrame(
+        {"lat": [50.40, 50.41], "lon": [30.50, 30.50], "ts": [1000, 1060]}
+    )
+    out1 = pd.concat(list(fn((1,), iter([b1]), state)))
+    assert list(out1["ts"]) == [1060] and list(out1["dt_s"]) == [60]
+    # state advanced to the newest fix, TTL armed
+    assert state.get[2] == 1060
+    assert state.timeout_ms == 60_000
+
+    # batch 2: one fix -> pairs against REMEMBERED state
+    b2 = pd.DataFrame({"lat": [50.42], "lon": [30.50], "ts": [1120]})
+    out2 = pd.concat(list(fn((1,), iter([b2]), state)))
+    assert list(out2["ts"]) == [1120] and list(out2["dt_s"]) == [60]
+
+    # implausible gap is gated but still advances state
+    b3 = pd.DataFrame({"lat": [50.43], "lon": [30.50], "ts": [99_999_999]})
+    assert list(fn((1,), iter([b3]), state)) == []
+    assert state.get[2] == 99_999_999
+
+    # the TTL firing evicts the vehicle without emitting
+    state.hasTimedOut = True
+    assert list(fn((1,), iter([]), state)) == []
+    assert not state.exists
 
 
 def test_streaming_sessionize_closes_on_gap_across_batches(spark, tmp_path):
@@ -164,7 +246,6 @@ def test_streaming_sessionize_closes_on_gap_across_batches(spark, tmp_path):
     assert first.n_events == 3
 
 
-@pytest.mark.slow
 def test_stateful_ops_run_on_both_state_store_providers(spark, tmp_path):
     """SURVEY §4 posture: the stateful operators must run green on the
     RocksDB provider (disk-bounded state at 100 TB) AND on the default
@@ -194,16 +275,12 @@ def test_stateful_ops_run_on_both_state_store_providers(spark, tmp_path):
                 src, "b1.json", [(1, 50.40, 30.50, 1000), (1, 50.41, 30.50, 1060)]
             )
             stream = spark.readStream.schema(SCHEMA).json(str(src))
-            q = (
-                streaming_trajectory_speeds(stream)
-                .writeStream.format("memory")
-                .queryName(f"prov_{tag}")
-                .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+            _run_until_read(
+                streaming_trajectory_speeds(stream),
+                f"prov_{tag}",
+                str(tmp_path / f"ckpt_{tag}"),
+                2,
             )
-            q.awaitTermination(60)
             assert spark.sql(f"SELECT * FROM prov_{tag}").count() == 1, provider
     finally:
         if old is not None:
@@ -220,31 +297,9 @@ def test_session_fn_late_event_does_not_regress_session_end():
 
     from kyiv_traffic_bigdata_spark.streaming.stateful import make_session_fn
 
-    class FakeState:
-        def __init__(self, value=None):
-            self._v = value
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def setTimeoutDuration(self, _ms):
-            pass
-
-        def remove(self):
-            self._v = None
-
     US = 1_000_000
     fn = make_session_fn(gap_s=300)
-    state = FakeState((800 * US, 1000 * US, 2))  # open session, end=1000s
+    state = _FakeGroupState((800 * US, 1000 * US, 2))  # open session, end=1000s
     # batch delivers a LATE event (700s) then a fresh one (1100s)
     out = list(
         fn((1,), iter([pd.DataFrame({"ts_us": [700 * US, 1100 * US]})]), state)
@@ -256,190 +311,55 @@ def test_session_fn_late_event_does_not_regress_session_end():
     assert (start, last, n) == (700 * US, 1100 * US, 4)
 
 
-class _FakeValueState:
-    """Sans-IO stand-in for the TWS ValueState (same seam discipline as
-    the transport tests' fake sockets)."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        self.states[name] = _FakeValueState()
-        self.ttl_ms = ttlDurationMs
-        return self.states[name]
-
-    def listTimers(self):
-        return list(self.timers)
-
-    def deleteTimer(self, t):
-        self.timers.remove(t)
-
-    def registerTimer(self, t):
-        self.timers.append(t)
-
-
-class _FakeTimerValues:
-    def __init__(self, now_ms=0):
-        self._now = now_ms
-
-    def getCurrentProcessingTimeInMs(self):
-        return self._now
-
-
-def test_tws_processor_logic_sans_io():
-    """The transformWithState processor's per-key logic, driven directly
-    against a fake handle: in-batch pairing, cross-batch state carry,
-    guard gating, and state advance — platform-independent, so it runs
-    even where the TWS wire protocol (protobuf workers + RocksDB)
-    cannot."""
+def test_session_fn_logic_sans_io():
+    """make_session_fn's per-key logic against a fake GroupState:
+    cross-batch extension, gap-close emission, late-data widening, TTL
+    re-arming and the timeout flush of the open session."""
     import pandas as pd
 
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        TrajectorySpeedProcessor,
-    )
+    from kyiv_traffic_bigdata_spark.streaming.stateful import make_session_fn
 
-    p = TrajectorySpeedProcessor(state_ttl_s=60)
-    h = _FakeHandle()
-    p.init(h)
-    assert h.ttl_ms == 60_000
+    US = 1_000_000
+    fn = make_session_fn(gap_s=300, state_ttl_s=60)
+    state = _FakeGroupState()
 
-    b1 = pd.DataFrame(
-        {"lat": [50.40, 50.41], "lon": [30.50, 30.50], "ts": [1000, 1060]}
-    )
-    out1 = pd.concat(list(p.handleInputRows((1,), iter([b1]), None)))
-    assert list(out1["ts"]) == [1060] and list(out1["dt_s"]) == [60]
-    # state advanced to the newest fix
-    assert h.states["last_fix"].get()[2] == 1060
+    # batch 1 opens a session; nothing closes; TTL armed
+    b1 = pd.DataFrame({"ts_us": [1000 * US, 1060 * US]})
+    assert list(fn((1,), iter([b1]), state)) == []
+    assert state.get == (1000 * US, 1060 * US, 2)
+    assert state.timeout_ms == 60_000
 
-    # batch 2: one fix -> pairs against REMEMBERED state
-    b2 = pd.DataFrame({"lat": [50.42], "lon": [30.50], "ts": [1120]})
-    out2 = pd.concat(list(p.handleInputRows((1,), iter([b2]), None)))
-    assert list(out2["ts"]) == [1120] and list(out2["dt_s"]) == [60]
-
-    # implausible gap is gated but still advances state
-    b3 = pd.DataFrame({"lat": [50.43], "lon": [30.50], "ts": [99_999_999]})
-    assert list(p.handleInputRows((1,), iter([b3]), None)) == []
-    assert h.states["last_fix"].get()[2] == 99_999_999
-
-
-def test_transform_with_state_matches_group_state_twin(spark, tmp_path):
-    """End-to-end TWS parity with the applyInPandasWithState form.
-
-    The TWS wire protocol needs google.protobuf in the Python workers;
-    this sandbox ships none, so the availability probe activates the
-    vendored protobuf mini-runtime (protoshim) and addPyFile-ships it
-    to the workers — the run below is therefore also the conformance
-    test for the shim's wire encoding (the JVM parses every request).
-    Skips only when the RocksDB provider is genuinely absent."""
-    import pytest
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        streaming_trajectory_speeds_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available(spark):
-        missing = []
-        try:
-            import google.protobuf.descriptor  # noqa: F401
-        except Exception:  # noqa: BLE001
-            missing.append(
-                "google.protobuf (real install AND the vendored "
-                "mini-runtime both failed to import)"
-            )
-        from kyiv_traffic_bigdata_spark.streaming.state import rocksdb_available
-
-        if not rocksdb_available(spark):
-            missing.append("RocksDB state-store provider class in the JVM")
-        pytest.skip(
-            "transformWithStateInPandas cannot run here — missing: "
-            + "; ".join(missing)
-        )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    _write_batch(
-        src,
-        "b1.json",
-        [(1, 50.40, 30.50, 1000), (1, 50.41, 30.50, 1060), (2, 50.45, 30.52, 1000)],
-    )
-    stream = spark.readStream.schema(SCHEMA).json(str(src))
-    q = (
-        streaming_trajectory_speeds_v2(stream)
-        .writeStream.format("memory")
-        .queryName("traj_tws")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        # 300 s, not 90: the deadline only bounds the FAILURE path (the
-        # pass path exits as soon as the rows land), and 90 s was tight
-        # enough that a fully-loaded 50-min suite run flaked here once
-        # in r12 (passes in isolation on the same tree) — a wall-clock
-        # budget must absorb worst-case host contention, it costs
-        # nothing when green.
-        deadline = time.time() + 300
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM traj_tws").count() >= 1:
-                break
-            time.sleep(0.5)
-        _write_batch(src, "b2.json", [(1, 50.42, 30.50, 1120), (2, 50.46, 30.52, 1060)])
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM traj_tws").count() >= 3:
-                break
-            time.sleep(0.5)
-        rows = {
-            (r.vehicle_id, r.ts): (r.dt_s, round(r.speed_kmh, 6))
-            for r in spark.sql("SELECT * FROM traj_tws").collect()
+    # batch 2: 1100 extends (gap 40 <= 300); 3000 closes [1000..1100]x3
+    b2 = pd.DataFrame({"ts_us": [1100 * US, 3000 * US]})
+    out2 = pd.concat(list(fn((1,), iter([b2]), state)))
+    assert out2.to_dict("records") == [
+        {
+            "user_id": 1,
+            "session_start_us": 1000 * US,
+            "session_end_us": 1100 * US,
+            "n_events": 3,
         }
-    finally:
-        q.stop()
-    # same three pairs (incl. the cross-batch ones) as the GroupState twin
-    assert set(rows) == {(1, 1060), (1, 1120), (2, 1060)}
-    assert rows[(1, 1120)][0] == 60
+    ]
+    assert state.get == (3000 * US, 3000 * US, 1)
 
+    # late event widens the open session's start (batch-twin parity)
+    b3 = pd.DataFrame({"ts_us": [2950 * US]})
+    assert list(fn((1,), iter([b3]), state)) == []
+    assert state.get == (2950 * US, 3000 * US, 2)
 
-class _BurstFakeState:
-    def __init__(self, value=None):
-        self._v = value
-        self.hasTimedOut = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def setTimeoutDuration(self, _ms):
-        pass
-
-    def remove(self):
-        self._v = None
+    # the TTL firing flushes the open session exactly once
+    state.hasTimedOut = True
+    flushed = pd.concat(list(fn((1,), iter([]), state)))
+    assert flushed.to_dict("records") == [
+        {
+            "user_id": 1,
+            "session_start_us": 2950 * US,
+            "session_end_us": 3000 * US,
+            "n_events": 2,
+        }
+    ]
+    assert not state.exists
+    assert list(fn((1,), iter([]), state)) == []
 
 
 def test_burst_fn_flags_cross_batch_bursts():
@@ -452,7 +372,7 @@ def test_burst_fn_flags_cross_batch_bursts():
 
     US = 1_000_000
     fn = make_burst_fn(k=3, window_s=600, state_ttl_s=600)
-    state = _BurstFakeState()
+    state = _FakeGroupState()
     out1 = list(
         fn((7,), iter([pd.DataFrame({"ts_us": [1000 * US, 1100 * US]})]), state)
     )
@@ -488,7 +408,7 @@ def test_burst_fn_matches_batch_window_semantics():
     ts = sorted(rng.randrange(0, 100_000) * US for _ in range(60))
     k, win = 3, 14400
     fn = make_burst_fn(k=k, window_s=win, state_ttl_s=86400)
-    out = list(fn((1,), iter([pd.DataFrame({"ts_us": ts})]), _BurstFakeState()))
+    out = list(fn((1,), iter([pd.DataFrame({"ts_us": ts})]), _FakeGroupState()))
     got = sorted(t for df in out for t in df["ts_us"])
     exp = [
         ts[j]
@@ -589,7 +509,7 @@ def test_kmv_fn_order_independent_and_matches_batch_formula():
     final = []
     for order in (hashes, hashes[::-1], hashes[15:] + hashes[:15]):
         fn = make_kmv_fn(k)
-        state = _BurstFakeState()
+        state = _FakeGroupState()
         out = None
         for chunk in (order[:10], order[10:11], order[11:]):
             for df in fn(("click",), iter([pd.DataFrame({"h": chunk})]), state):
@@ -608,7 +528,7 @@ def test_kmv_fn_dedups_within_and_across_batches():
     from kyiv_traffic_bigdata_spark.streaming.stateful import make_kmv_fn
 
     fn = make_kmv_fn(8)
-    state = _BurstFakeState()
+    state = _FakeGroupState()
     h = [_md5_hash(u) for u in (1, 2, 3)]
     list(fn(("t",), iter([pd.DataFrame({"h": h + h})]), state))
     (df,) = fn(("t",), iter([pd.DataFrame({"h": h})]), state)
@@ -683,7 +603,7 @@ def test_cms_fn_cross_batch_counts_are_exact_sums():
 
     for chunks in ([5, 3, 2], [10], [1] * 10):
         fn = make_cms_fn()
-        state = _BurstFakeState()
+        state = _FakeGroupState()
         out = None
         for n in chunks:
             for df in fn((1, 7), iter([pd.DataFrame({"x": range(n)})]), state):
@@ -697,7 +617,7 @@ def test_cms_fn_ignores_empty_batches():
     from kyiv_traffic_bigdata_spark.streaming.stateful import make_cms_fn
 
     fn = make_cms_fn()
-    state = _BurstFakeState()
+    state = _FakeGroupState()
     assert list(fn((0, 0), iter([pd.DataFrame({"x": []})]), state)) == []
     assert not state.exists
 
@@ -788,7 +708,7 @@ def test_rank_cell_fn_cross_batch_counts_are_exact_sums():
 
     for chunks in ([4, 3, 3], [10], [1] * 10):
         fn = make_rank_cell_fn()
-        state = _BurstFakeState()
+        state = _FakeGroupState()
         out = None
         for n in chunks:
             for df in fn(
@@ -969,276 +889,6 @@ def test_streaming_hll_registers_match_batch_state(spark, tmp_path):
     assert est_stream.register_sum == est_batch.register_sum
 
 
-def test_tws_user_profiles_list_and_map_state_end_to_end(spark, tmp_path):
-    """TWS list+map typed state across micro-batches — also the shim
-    conformance run for the ListState/MapState wire messages (every
-    appendList/put/getValue/updateValue/values call crosses the state
-    server socket). Latest row per (user, type) must match the batch
-    recompute over the union."""
-    import pytest
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        PROFILE_RECENT_K,
-        streaming_user_profiles,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable on this platform")
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write(name, rows):
-        (src / name).write_text(
-            "\n".join(
-                json.dumps(
-                    dict(zip(("user_id", "event_type", "value", "ts"), r))
-                )
-                for r in rows
-            )
-        )
-
-    b1 = [(1, "click", 10.0, 100), (1, "view", 20.0, 200), (2, "click", 5.0, 150)]
-    b2 = [(1, "click", 30.0, 300), (1, "click", 40.0, 400), (2, "buy", 7.0, 250)]
-    write("b1.json", b1)
-    stream = spark.readStream.schema(
-        "user_id long, event_type string, value double, ts long"
-    ).json(str(src))
-    q = (
-        streaming_user_profiles(stream)
-        .writeStream.format("memory")
-        .queryName("profiles")
-        .option("checkpointLocation", str(tmp_path / "ckpt_prof"))
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM profiles").count() >= 3:
-                break
-            time.sleep(0.5)
-        write("b2.json", b2)
-        # batch 2 touches (1, click) and (2, buy) -> 2 more rows
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM profiles").count() >= 5:
-                break
-            time.sleep(0.5)
-        rows = spark.sql("SELECT * FROM profiles").collect()
-    finally:
-        q.stop()
-
-    # latest state per (user, type) = row with the max n_events
-    latest = {}
-    for r in rows:
-        k = (r.user_id, r.event_type)
-        if k not in latest or r.n_events > latest[k].n_events:
-            latest[k] = r
-
-    # batch recompute over the union
-    events = b1 + b2
-    for (u, t), want in {
-        (1, "click"): 3, (1, "view"): 1, (2, "click"): 1, (2, "buy"): 1,
-    }.items():
-        assert latest[(u, t)].n_events == want, (u, t)
-    assert latest[(1, "click")].n_total == 4
-    assert latest[(2, "buy")].n_total == 2
-
-    def recent_mean(u):
-        vals = sorted(
-            ((ts, v) for uu, _t, v, ts in events if uu == u),
-            key=lambda x: x[0],
-        )[-PROFILE_RECENT_K:]
-        return sum(v for _ts, v in vals) / len(vals)
-
-    assert abs(latest[(1, "click")].recent_mean - recent_mean(1)) < 1e-9
-    assert abs(latest[(2, "buy")].recent_mean - recent_mean(2)) < 1e-9
-
-
-@pytest.mark.slow
-def test_tws_timer_flush_end_to_end(spark, tmp_path):
-    """TWS processing-time timers: counts buffer in state and emit only
-    when the per-key timer fires — also the shim conformance run for
-    the timer wire messages (register/list/delete + the expired-timer
-    response stream). The flush emissions must partition the input:
-    their sum equals the rows written for the key."""
-    import pytest
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        streaming_idle_flush,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable on this platform")
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write(name, rows):
-        (src / name).write_text(
-            "\n".join(json.dumps({"user_id": u, "v": v}) for u, v in rows)
-        )
-
-    write("b1.json", [(1, 10), (1, 11), (1, 12)])
-    stream = spark.readStream.schema("user_id long, v long").json(str(src))
-    q = (
-        streaming_idle_flush(stream)
-        .writeStream.format("memory")
-        .queryName("flush_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_flush"))
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        beat = 0
-        flushed = 0
-        while time.time() < deadline:
-            rows = spark.sql(
-                "SELECT * FROM flush_out WHERE user_id = 1"
-            ).collect()
-            flushed = sum(r.n_flushed for r in rows)
-            if flushed >= 3:
-                break
-            # keep micro-batches coming so the armed timer gets processed
-            beat += 1
-            write(f"beat{beat}.json", [(2, beat)])
-            time.sleep(1.0)
-        assert flushed == 3, f"timer flushes sum {flushed}, want 3"
-    finally:
-        q.stop()
-
-
-def test_tws_sessionize_logic_sans_io():
-    """SessionizeProcessor per-key logic against the fake handle:
-    cross-batch extension, gap-close emission, min/max late-data
-    widening (the make_session_fn discipline), idle-timer re-arming,
-    and the expired-timer flush — platform-independent."""
-    import pandas as pd
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        SessionizeProcessor,
-    )
-
-    US = 1_000_000
-    p = SessionizeProcessor(gap_s=300, state_ttl_s=60)
-    h = _FakeHandle()
-    p.init(h)
-
-    # batch 1 opens a session; nothing closes; timer armed at now+ttl
-    b1 = pd.DataFrame({"ts_us": [1000 * US, 1060 * US]})
-    out1 = list(p.handleInputRows((1,), iter([b1]), _FakeTimerValues(5_000)))
-    assert out1 == []
-    assert h.states["open_session"].get() == (1000 * US, 1060 * US, 2)
-    assert h.timers == [5_000 + 60_000]
-
-    # batch 2: 1100 extends (gap 40 <= 300); 3000 closes [1000..1100]x3;
-    # the stale timer is replaced by a fresh one
-    b2 = pd.DataFrame({"ts_us": [1100 * US, 3000 * US]})
-    out2 = pd.concat(list(p.handleInputRows((1,), iter([b2]), _FakeTimerValues(9_000))))
-    assert out2.to_dict("records") == [
-        {
-            "user_id": 1,
-            "session_start_us": 1000 * US,
-            "session_end_us": 1100 * US,
-            "n_events": 3,
-        }
-    ]
-    assert h.states["open_session"].get() == (3000 * US, 3000 * US, 1)
-    assert h.timers == [9_000 + 60_000]
-
-    # late event widens the open session's start (batch-twin parity)
-    b3 = pd.DataFrame({"ts_us": [2950 * US]})
-    assert list(p.handleInputRows((1,), iter([b3]), _FakeTimerValues(10_000))) == []
-    assert h.states["open_session"].get() == (2950 * US, 3000 * US, 2)
-
-    # expired timer flushes the open session exactly once
-    flushed = pd.concat(list(p.handleExpiredTimer((1,), None, None)))
-    assert flushed.to_dict("records") == [
-        {
-            "user_id": 1,
-            "session_start_us": 2950 * US,
-            "session_end_us": 3000 * US,
-            "n_events": 2,
-        }
-    ]
-    assert not h.states["open_session"].exists()
-    assert list(p.handleExpiredTimer((1,), None, None)) == []
-
-
-@pytest.mark.slow
-def test_tws_sessionize_matches_group_state_twin(spark, tmp_path):
-    """End-to-end: streaming_sessionize_v2 (transformWithState) must
-    emit the same gap-closed session as the applyInPandasWithState form
-    and the batch twin — the r09 TWS-parity-breadth item. Skips only
-    where the RocksDB provider is genuinely absent."""
-    import pytest
-
-    from kyiv_traffic_bigdata_spark.operators.windows import sessionize
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        streaming_sessionize_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable on this platform")
-
-    US = 1_000_000
-    src = tmp_path / "sess2_src"
-    src.mkdir()
-
-    def write(name, rows):
-        (src / name).write_text(
-            "\n".join(json.dumps({"user_id": u, "ts_us": t * US}) for u, t in rows)
-            + "\n"
-        )
-
-    write("b1.json", [(1, 1000), (1, 1060), (2, 1000)])
-    stream = spark.readStream.schema("user_id long, ts_us long").json(str(src))
-    q = (
-        streaming_sessionize_v2(stream, gap_s=300, state_ttl_s=3600)
-        .writeStream.format("memory")
-        .queryName("sess2_out")
-        .option("checkpointLocation", str(tmp_path / "sess2_ckpt"))
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        time.sleep(2)
-        write("b2.json", [(1, 1100), (1, 3000)])
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM sess2_out").collect()
-            if rows:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-
-    assert len(rows) == 1
-    got = rows[0]
-    assert (got.user_id, got.n_events) == (1, 3)
-    assert got.session_start_us == 1000 * US and got.session_end_us == 1100 * US
-    # parity with the batch sessionizer on the full history
-    batch = spark.createDataFrame(
-        [(1, 1000 * US), (1, 1060 * US), (1, 1100 * US), (1, 3000 * US),
-         (2, 1000 * US)],
-        "user_id long, ts_us long",
-    )
-    first = {
-        (r.user_id, r.session_seq): r
-        for r in sessionize(batch, "user_id", "ts_us", 300).collect()
-    }[(1, 1)]
-    assert first.session_start_s == 1000 and first.session_end_s == 1100
-    assert first.n_events == 3
-
-
 # ---------------------------------------------------------------------------
 # Streaming Misra-Gries summary twin
 # ---------------------------------------------------------------------------
@@ -1264,7 +914,7 @@ def test_mg_fn_superset_and_lower_bounds_across_batchings():
     n = len(stream)
     for cuts in ((len(stream),), (100, 500, len(stream) - 600), (7,) * (n // 7) + (n % 7,)):
         fn = make_mg_fn(k)
-        state = _BurstFakeState()
+        state = _FakeGroupState()
         out = None
         i = 0
         for c in cuts:
@@ -1288,7 +938,7 @@ def test_mg_fn_state_is_bounded_and_empty_batches_ignored():
     from kyiv_traffic_bigdata_spark.streaming.stateful import make_mg_fn
 
     fn = make_mg_fn(3)
-    state = _BurstFakeState()
+    state = _FakeGroupState()
     assert list(fn(("s",), iter([pd.DataFrame({"token": []})]), state)) == []
     assert not state.exists
     for batch in (["a"] * 5 + [f"u{i}" for i in range(20)], ["b"] * 9):
@@ -1346,338 +996,3 @@ def test_streaming_mg_summary_end_to_end(spark, tmp_path):
         assert 60 - got.residual <= n / 5  # k=4 -> error <= n/(k+1)
     finally:
         q.stop()
-
-
-def test_tws_mg_summary_logic_sans_io():
-    """MGSummaryProcessor per-key logic against the fake handle must
-    match make_mg_fn batch-for-batch (the two APIs implement the same
-    mergeable rule): identical surviving tokens, residuals, totals, and
-    bounded state."""
-    import pandas as pd
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        MGSummaryProcessor,
-        make_mg_fn,
-    )
-
-    batches = [
-        ["a"] * 10 + [f"u{i}" for i in range(12)],
-        ["b"] * 7 + ["a"] * 3,
-        [f"v{i}" for i in range(9)] + ["b"],
-    ]
-    p = MGSummaryProcessor(k=4)
-    h = _FakeHandle()
-    p.init(h)
-    fn = make_mg_fn(4)
-    state = _BurstFakeState()
-    for chunk in batches:
-        pdf = pd.DataFrame({"token": chunk})
-        out_tws = pd.concat(
-            list(p.handleInputRows(("s",), iter([pdf]), _FakeTimerValues(0)))
-        )
-        out_gs = pd.concat(list(fn(("s",), iter([pdf]), state)))
-        a = out_tws.sort_values("token", ignore_index=True)
-        b = out_gs.sort_values("token", ignore_index=True)
-        assert a.to_dict("records") == b.to_dict("records")
-    toks, counts, n_total = h.states["mg_summary"].get()
-    assert len(toks) <= 4
-    assert n_total == sum(len(b) for b in batches)
-
-
-def test_tws_mg_summary_matches_group_state_twin(spark, tmp_path):
-    """End-to-end: streaming_mg_summary_v2 (transformWithState) must
-    reach the same merged summary as the applyInPandasWithState form —
-    TWS parity breadth for the newest stateful op. Skips only where the
-    RocksDB provider is genuinely absent."""
-    import pytest
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        streaming_mg_summary_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable on this platform")
-
-    src = tmp_path / "mg2_src"
-    src.mkdir()
-
-    def write(name, toks):
-        (src / name).write_text(
-            "\n".join(json.dumps({"source": "web", "token": t}) for t in toks)
-            + "\n"
-        )
-
-    b1 = ["hot"] * 30 + [f"r{i}" for i in range(10)]
-    b2 = ["hot"] * 30 + [f"s{i}" for i in range(10)]
-    write("b1.json", b1)
-    stream = spark.readStream.schema("source string, token string").json(str(src))
-    q = (
-        streaming_mg_summary_v2(stream, k=4)
-        .writeStream.format("memory")
-        .queryName("mg2_out")
-        .option("checkpointLocation", str(tmp_path / "mg2_ckpt"))
-        .outputMode("update")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        n = len(b1) + len(b2)
-        deadline = time.time() + 90
-        time.sleep(2)
-        write("b2.json", b2)
-        got = None
-        while time.time() < deadline:
-            rows = spark.sql(
-                "SELECT * FROM mg2_out WHERE n_total = %d AND token = 'hot'" % n
-            ).collect()
-            if rows:
-                got = rows[0]
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert got is not None, "merged summary row never appeared"
-    assert 60 - got.residual <= n / 5  # k=4 -> MG error bound n/(k+1)
-
-
-def test_tws_cell_counter_logic_sans_io():
-    """CellCounterProcessor against the fake handle must match the
-    applyInPandasWithState counter fns batch-for-batch for BOTH key
-    shapes it serves — flat CMS (j, b) and dyadic rank (g, lvl, j, b):
-    identical emitted totals and single-long state."""
-    import pandas as pd
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        CellCounterProcessor,
-        make_cms_fn,
-        make_rank_cell_fn,
-    )
-
-    # flat CMS: key (j, b); batches of 3, 0, 5 touches
-    p = CellCounterProcessor(["j", "b"])
-    h = _FakeHandle()
-    p.init(h)
-    fn = make_cms_fn()
-    state = _BurstFakeState()
-    for n in (3, 0, 5):
-        pdf = pd.DataFrame({"j": [1] * n, "b": [7] * n})
-        out_tws = list(p.handleInputRows((1, 7), iter([pdf]), _FakeTimerValues(0)))
-        out_gs = list(fn((1, 7), iter([pdf]), state))
-        assert [o.to_dict("records") for o in out_tws] == [
-            o.to_dict("records") for o in out_gs
-        ]
-    assert h.states["cell_count"].get() == (8,)
-
-    # dyadic rank: key (g, lvl, j, b)
-    p2 = CellCounterProcessor(["g", "lvl", "j", "b"])
-    h2 = _FakeHandle()
-    p2.init(h2)
-    fn2 = make_rank_cell_fn()
-    state2 = _BurstFakeState()
-    key = ("1-URGENT", 3, 0, 99)
-    for n in (2, 4):
-        pdf = pd.DataFrame({"x": list(range(n))})
-        out_tws = pd.concat(
-            list(p2.handleInputRows(key, iter([pdf]), _FakeTimerValues(0)))
-        )
-        out_gs = pd.concat(list(fn2(key, iter([pdf]), state2)))
-        assert out_tws.to_dict("records") == out_gs.to_dict("records")
-    assert h2.states["cell_count"].get() == (6,)
-
-
-def test_tws_kmv_logic_sans_io():
-    """KMVProcessor against the fake handle must match make_kmv_fn
-    batch-for-batch: same merged bottom-k state, same floor-form
-    estimate, both below and at sketch capacity."""
-    import pandas as pd
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        KMVProcessor,
-        make_kmv_fn,
-    )
-
-    p = KMVProcessor(k=4)
-    h = _FakeHandle()
-    p.init(h)
-    fn = make_kmv_fn(4)
-    state = _BurstFakeState()
-    batches = [
-        [50_000_000_000, 60_000_000_000],
-        [50_000_000_000, 10_000_000_000, 70_000_000_000],
-        [5_000_000_000, 80_000_000_000],
-    ]
-    for hashes in batches:
-        pdf = pd.DataFrame({"h": hashes})
-        out_tws = pd.concat(
-            list(p.handleInputRows(("click",), iter([pdf]), _FakeTimerValues(0)))
-        )
-        out_gs = pd.concat(list(fn(("click",), iter([pdf]), state)))
-        assert out_tws.to_dict("records") == out_gs.to_dict("records")
-    kept = h.states["kmv_hashes"].get()[0]
-    assert len(kept) == 4 and kept == sorted(kept)
-
-
-def test_tws_rank_cells_match_group_state_twin(spark, tmp_path):
-    """End-to-end: streaming_rank_sketch_cells_v2 (transformWithState)
-    must reach the same counter table as the applyInPandasWithState
-    form for the same cell stream — completing TWS breadth for the
-    sketch-cell family. Skips only where RocksDB is genuinely absent."""
-    import pytest
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        streaming_rank_sketch_cells_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable on this platform")
-
-    src = tmp_path / "qr2_src"
-    src.mkdir()
-
-    def write(name, cells):
-        (src / name).write_text(
-            "\n".join(
-                json.dumps({"g": g, "lvl": lvl, "j": j, "b": b})
-                for g, lvl, j, b in cells
-            )
-            + "\n"
-        )
-
-    # cell (gA,0,0,5) touched in both batches (2 then 3 = 5 total);
-    # (gA,1,0,9) only in batch 1; (gB,0,0,5) only in batch 2.
-    write("b1.json", [("gA", 0, 0, 5)] * 2 + [("gA", 1, 0, 9)])
-    stream = spark.readStream.schema("g string, lvl int, j int, b int").json(
-        str(src)
-    )
-    q = (
-        streaming_rank_sketch_cells_v2(stream)
-        .writeStream.format("memory")
-        .queryName("qr2_out")
-        .option("checkpointLocation", str(tmp_path / "qr2_ckpt"))
-        .outputMode("update")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        time.sleep(2)
-        write("b2.json", [("gA", 0, 0, 5)] * 3 + [("gB", 0, 0, 5)])
-        got = None
-        while time.time() < deadline:
-            rows = spark.sql(
-                "SELECT g, lvl, j, b, c FROM qr2_out "
-                "WHERE g = 'gA' AND lvl = 0 AND c = 5"
-            ).collect()
-            if rows:
-                got = {
-                    (r.g, r.lvl, r.j, r.b): r.c
-                    for r in spark.sql("SELECT * FROM qr2_out").collect()
-                }
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert got is not None, "merged cell row never appeared"
-    # update-mode memory sink keeps every refresh; the MAX per cell is
-    # the final counter value — exactly the batch sketch over the union
-    final = {}
-    for k_, c in got.items():
-        final[k_] = max(final.get(k_, 0), c)
-    assert final[("gA", 0, 0, 5)] == 5
-    assert final[("gA", 1, 0, 9)] == 1
-    assert final[("gB", 0, 0, 5)] == 1
-
-
-def test_tws_burst_logic_sans_io():
-    """BurstProcessor per-key logic against the fake handle must match
-    make_burst_fn batch-for-batch: same burst rows (incl. cross-batch
-    chains), same O(k-1) retained history, and the idle timer re-armed
-    each batch."""
-    import pandas as pd
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        BurstProcessor,
-        make_burst_fn,
-    )
-
-    M = 1_000_000
-    batches = [
-        [0 * M, 100 * M],          # no burst yet (k=3)
-        [200 * M],                 # 0,100,200 within 400s -> burst @200
-        [9_000 * M, 9_100 * M],    # far gap; 200,9000,9100 span too wide
-        [9_150 * M],               # 9000,9100,9150 -> burst @9150
-    ]
-    p = BurstProcessor(k=3, window_s=400, state_ttl_s=86400)
-    h = _FakeHandle()
-    p.init(h)
-    fn = make_burst_fn(3, 400, 86400)
-    state = _BurstFakeState()
-    for ts in batches:
-        pdf = pd.DataFrame({"ts_us": ts})
-        out_tws = list(p.handleInputRows((7,), iter([pdf]), _FakeTimerValues(0)))
-        out_gs = list(fn((7,), iter([pdf]), state))
-        a = pd.concat(out_tws).to_dict("records") if out_tws else []
-        b = pd.concat(out_gs).to_dict("records") if out_gs else []
-        assert a == b
-    assert len(h.states["burst_hist"].get()[0]) == 2  # k-1 retained
-    assert len(h.timers) == 1  # re-armed, never accumulated
-    # expiry drops the history without emitting
-    assert list(p.handleExpiredTimer((7,), _FakeTimerValues(0), None)) == []
-    assert not h.states["burst_hist"].exists()
-
-
-def test_tws_bursts_match_group_state_twin(spark, tmp_path):
-    """End-to-end: streaming_event_bursts_v2 (transformWithState) must
-    flag the same burst events as the applyInPandasWithState form,
-    including a chain split across micro-batches. Skips only where
-    RocksDB is genuinely absent."""
-    import pytest
-
-    from kyiv_traffic_bigdata_spark.streaming.stateful import (
-        streaming_event_bursts_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable on this platform")
-
-    src = tmp_path / "b2_src"
-    src.mkdir()
-    M = 1_000_000
-
-    def write(name, rows):
-        (src / name).write_text(
-            "\n".join(json.dumps({"user_id": u, "ts_us": t}) for u, t in rows)
-            + "\n"
-        )
-
-    write("b1.json", [(1, 0 * M), (1, 100 * M), (2, 0 * M)])
-    stream = spark.readStream.schema("user_id long, ts_us long").json(str(src))
-    q = (
-        streaming_event_bursts_v2(stream, k=3, window_s=400)
-        .writeStream.format("memory")
-        .queryName("b2_out")
-        .option("checkpointLocation", str(tmp_path / "b2_ckpt"))
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        time.sleep(2)
-        # cross-batch chain: user 1's third event arrives a batch later
-        write("b2.json", [(1, 200 * M), (2, 10_000 * M)])
-        got = None
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM b2_out").collect()
-            if rows:
-                got = {(r.user_id, r.ts_us, r.span_us) for r in rows}
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    # exactly user 1's 200s event bursts (span 200s back to ts 0);
-    # user 2 never accumulates 3 events inside 400 s
-    assert got == {(1, 200 * M, 200 * M)}
