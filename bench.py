@@ -159,9 +159,7 @@ def main() -> None:
     try:
         from pyspark.sql import functions as F
 
-        from kyiv_traffic_bigdata_spark.functions.text import (
-            gram_rolling_hashes_arrow,
-        )
+        from kyiv_traffic_bigdata_spark.functions.text import gram_rolling_hashes
 
         # Aggregate OVER the UDF output so Catalyst can't column-prune
         # the projection away (a bare .count() does exactly that and no
@@ -170,7 +168,7 @@ def main() -> None:
             spark.range(spark.sparkContext.defaultParallelism * 4)
             .repartition(spark.sparkContext.defaultParallelism)
             .select(
-                F.size(gram_rolling_hashes_arrow(F.lit("warmup text"), 3)).alias("s")
+                F.size(gram_rolling_hashes(F.lit("warmup text"), 3)).alias("s")
             )
             .agg(F.sum("s"))
             .collect()

@@ -2,11 +2,10 @@
 
 Pure Catalyst expressions so they run JVM-side inside whole-stage codegen
 over 100 TB document scans — with ONE deliberate exception: the rolling-
-hash hot path also ships Arrow-vectorized twins (``*_arrow``) because
-higher-order lambdas run interpreted (no codegen), and the O(n·k) hash
-fold is the dominant cost of the fingerprint/span operators; the twins
-are bit-identical (property-tested) so every oracle stays anchored on
-the expression form. Every function here has a DuckDB-SQL twin used by
+hash fold (:func:`gram_rolling_hashes`, :func:`winnowed_fps`) is an
+Arrow-vectorized UDF, because higher-order lambdas run interpreted (no
+codegen) and the O(n·k) fold is the dominant cost of the fingerprint/
+span operators. Every function here has a DuckDB-SQL twin used by
 the driver's oracle gate, so cross-engine determinism is a design
 constraint:
 
@@ -21,7 +20,7 @@ constraint:
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -102,33 +101,6 @@ def word_ngrams(tok: Column, n: int) -> Column:
     return F.when(F.size(tok) >= n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def word_ngrams_arrow(tok: Column, n: int) -> Column:
-    """Arrow-vectorized twin of :func:`word_ngrams` over a TOKEN ARRAY
-    column: distinct word n-grams in first-occurrence order (the
-    ``array_distinct`` contract), empty below n tokens. Tokenization
-    stays JVM-side (regex split is codegen'd); only the interpreted
-    per-position slice/join crosses Arrow. Bit-identical output —
-    property-tested next to the rolling-hash twins."""
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _ng(s: pd.Series) -> pd.Series:
-        out = []
-        for toks in s:
-            if toks is None:
-                out.append([])
-                continue
-            m = len(toks) - n + 1
-            if m <= 0:
-                out.append([])
-                continue
-            grams = [" ".join(toks[i : i + n]) for i in range(m)]
-            out.append(list(dict.fromkeys(grams)))
-        return pd.Series(out)
-
-    return _ng(tok)
 
 
 def char_ngrams(col: Column, n: int) -> Column:
@@ -232,13 +204,13 @@ def fingerprint(col: Column) -> Column:
     """Deterministic document fingerprint: md5 of normalized text.
 
     The exact-dedup key. (The positional rolling-hash variant is
-    :func:`gram_rolling_hashes` + :func:`winnow` in operators.dedup.)
+    :func:`winnowed_fps`, used by operators.dedup.winnow_fingerprints.)
     """
     return F.md5(normalize_text(col))
 
 
 #: Polynomial rolling-hash parameters. Base 131 over printable-ASCII
-#: codepoints mod 1e9+7: per fold step acc < 1e9, acc*131 + 126 < 2^37 —
+#: character codes mod 1e9+7: per fold step acc < 1e9, acc*131 + 126 < 2^37 —
 #: every intermediate stays far inside int64 in BOTH engines, which is
 #: what makes the hash bit-identical in the DuckDB oracle.
 ROLL_BASE = 131
@@ -251,83 +223,54 @@ def ascii_normalize(col: Column) -> Column:
     return F.regexp_replace(normalize_text(col), "[^ -~]", "")
 
 
-def codepoints(a: Column) -> Column:
-    """Codepoint array of an ASCII string column.
-
-    ``split(a, '')`` then per-char ``ascii`` — one O(n) pass; turning
-    chars into longs up front makes each k-gram fold k O(1) array reads
-    instead of k O(position) substring scans (higher-order functions run
-    interpreted, so per-element cost directly bounds throughput).
-    """
-    return F.when(F.length(a) == 0, F.array().cast("array<long>")).otherwise(
-        F.transform(F.split(a, ""), lambda c: F.ascii(c).cast("long"))
-    )
-
-
-def gram_rolling_hashes(cp: Column, k: int) -> Column:
-    """Polynomial rolling hash of every char k-gram of a codepoint array.
-
-    ``h(gram) = fold(acc*BASE + codepoint) mod MOD`` — the classic
-    Rabin-Karp position-local hash, one value per gram position, as a pure
-    ``transform``/``aggregate`` expression (no UDF). Shorter-than-k docs
-    hash to an empty array.
-    """
-    n = F.size(cp)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.aggregate(
-                F.slice(cp, i, k),
-                F.lit(0).cast("long"),
-                lambda acc, c: (acc * ROLL_BASE + c) % ROLL_MOD,
-            ),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-
-
-def gram_rolling_hashes_arrow(ascii_col: Column, k: int) -> Column:
-    """Arrow-vectorized twin of ``codepoints`` + ``gram_rolling_hashes``:
-    the IDENTICAL Rabin-Karp fold in int64 numpy (same base/mod, same
-    step order, every intermediate < 2^37), so values are bit-identical
-    to the expression path — equality is property-tested. Exists because
-    higher-order lambdas run interpreted with no codegen: the O(n·k)
-    fold costs ~ms/doc there vs vectorized C here (~100× at k=40).
-    Input must already be ascii-normalized (:func:`ascii_normalize`) —
-    normalization stays JVM-side so only the arithmetic crosses Arrow.
+def _rabin_karp(t: str | None, k: int):
+    """int64 numpy array of the Rabin-Karp hash of every char k-gram of
+    an ascii-normalized string, one per gram position:
+    ``h(gram) = fold(acc*BASE + codepoint) mod MOD``. Every intermediate
+    stays < 2^37, so int64 arithmetic is exact and the values are the
+    ones the DuckDB oracle's fold computes. Empty / shorter-than-k → empty.
     """
     import numpy as np
-    import pandas as pd
+
+    if not t or len(t) < k:
+        return np.empty(0, dtype=np.int64)
+    a = np.frombuffer(t.encode("ascii"), dtype=np.uint8).astype(np.int64)
+    m = a.size - k + 1
+    h = np.zeros(m, dtype=np.int64)
+    for j in range(k):
+        h = (h * ROLL_BASE + a[j : j + m]) % ROLL_MOD
+    return h
+
+
+def gram_rolling_hashes(ascii_col: Column, k: int) -> Column:
+    """Polynomial rolling hash of every char k-gram, one value per gram
+    position (the classic Rabin-Karp position-local hash, see
+    :func:`_rabin_karp`). An Arrow-vectorized UDF because the O(n·k)
+    fold costs ~ms/doc as an interpreted higher-order lambda vs
+    vectorized C here. Input must already be ascii-normalized
+    (:func:`ascii_normalize`) — normalization stays JVM-side so only the
+    arithmetic crosses Arrow. Shorter-than-k docs hash to an empty array.
+    """
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def _roll(s: pd.Series) -> pd.Series:
-        out = []
-        for t in s:
-            if not t or len(t) < k:
-                out.append(np.empty(0, dtype=np.int64))
-                continue
-            a = np.frombuffer(t.encode("ascii"), dtype=np.uint8).astype(
-                np.int64
-            )
-            m = a.size - k + 1
-            h = np.zeros(m, dtype=np.int64)
-            for j in range(k):
-                h = (h * ROLL_BASE + a[j : j + m]) % ROLL_MOD
-            out.append(h)
-        return pd.Series(out)
+        return pd.Series([_rabin_karp(t, k) for t in s])
 
     return _roll(ascii_col)
 
 
-def winnowed_fps_arrow(ascii_col: Column, k: int, w: int) -> Column:
-    """Arrow-vectorized ``gram_rolling_hashes`` + ``winnow`` in one UDF
-    (one Arrow crossing instead of two interpreted passes). Replicates
-    the expression path exactly: sliding-window min, then distinct
-    preserving FIRST occurrence (= ``array_distinct``); < w grams keep
-    the single minimum; empty stays empty. Equality property-tested."""
+def winnowed_fps(ascii_col: Column, k: int, w: int) -> Column:
+    """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, MOSS)
+    over :func:`gram_rolling_hashes`, in one Arrow UDF.
+
+    Keep the minimum hash of every ``w``-wide window of consecutive gram
+    hashes, deduplicated preserving FIRST occurrence — guarantees any
+    match of length ≥ w+k-1 chars shares a fingerprint while keeping
+    ~2/(w+1) of the grams. Docs with fewer than ``w`` grams keep their
+    single minimum; empty stays empty.
+    """
     import numpy as np
-    import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
     from pyspark.sql.pandas.functions import pandas_udf
 
@@ -335,18 +278,9 @@ def winnowed_fps_arrow(ascii_col: Column, k: int, w: int) -> Column:
     def _win(s: pd.Series) -> pd.Series:
         out = []
         for t in s:
-            if not t or len(t) < k:
-                out.append(np.empty(0, dtype=np.int64))
-                continue
-            a = np.frombuffer(t.encode("ascii"), dtype=np.uint8).astype(
-                np.int64
-            )
-            m = a.size - k + 1
-            h = np.zeros(m, dtype=np.int64)
-            for j in range(k):
-                h = (h * ROLL_BASE + a[j : j + m]) % ROLL_MOD
-            if m < w:
-                out.append(np.array([h.min()], dtype=np.int64))
+            h = _rabin_karp(t, k)
+            if h.size < w:  # the single minimum, or empty for no grams
+                out.append(np.sort(h)[:1])
                 continue
             mins = sliding_window_view(h, w).min(axis=1)
             _, idx = np.unique(mins, return_index=True)
@@ -354,29 +288,6 @@ def winnowed_fps_arrow(ascii_col: Column, k: int, w: int) -> Column:
         return pd.Series(out)
 
     return _win(ascii_col)
-
-
-def winnow(hashes: Column, w: int) -> Column:
-    """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, MOSS).
-
-    Keep the minimum hash of every ``w``-wide window of consecutive gram
-    hashes, deduplicated — guarantees any match of length ≥ w+k-1 chars
-    shares a fingerprint while keeping ~2/(w+1) of the grams. Docs with
-    fewer than ``w`` grams keep their single minimum; empty stays empty.
-    """
-    n = F.size(hashes)
-    return (
-        F.when(n == 0, F.array().cast("array<long>"))
-        .when(n < w, F.array(F.array_min(hashes)))
-        .otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), n - (w - 1)),
-                    lambda s: F.array_min(F.slice(hashes, s, w)),
-                )
-            )
-        )
-    )
 
 
 # --------------------------------------------------------------------------

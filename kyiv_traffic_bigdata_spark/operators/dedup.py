@@ -18,8 +18,6 @@ recomputing old signatures.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..functions.rounding import round6
@@ -56,22 +54,15 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 
 
 def shingle_index(
-    docs: DataFrame, id_col: str, text_col: str, ngram: int,
-    engine: str = "expr",
+    docs: DataFrame, id_col: str, text_col: str, ngram: int
 ) -> DataFrame:
     """Inverted index: (doc_id, shingle) with DISTINCT word n-gram shingles.
 
-    ``engine="expr"`` (default since r12) keeps the whole chain
-    pure-Catalyst — no Python boundary at all. The r12 alternating A/B
-    at sf0.1 (6 runs each, warm session) measured the higher-order
-    expression chain FASTER than the Arrow UDF (median 0.42 s vs
-    0.58 s, min 0.25 s vs 0.51 s for the full index build), reversing
-    the earlier measurement that made Arrow the default — and the expr
-    path additionally avoids shipping the token arrays across the
-    JVM↔Python boundary twice (guide §4: prefer built-ins when they
-    exist). ``engine="arrow"`` keeps the Arrow-batched UDF
-    (functions.text.word_ngrams_arrow), bit-identical
-    (property-tested), for re-measurement.
+    The whole chain is pure Catalyst — no Python boundary at all. An
+    Arrow-UDF n-gram builder lost every A/B of the full index build at
+    sf0.1 (r12: 0.42 vs 0.58 s; again on 4 cores, 6 alternating pairs:
+    0.34 vs 0.56 s at n=3, 0.38 vs 0.56 s at n=13) and was deleted: it
+    ships the token arrays across the JVM↔Python boundary twice.
 
     Staged projections on purpose: ``tokens`` (regex normalize + split) is
     materialized once per row before the n-gram stage references it.
@@ -80,7 +71,6 @@ def shingle_index(
     slower at sf0.1. CollapseProject keeps the stages separate because the
     alias is non-cheap and multiply-referenced.
     """
-    from ..functions.text import word_ngrams_arrow
     # Partitioning contract: the interpreted higher-order chain below is
     # the dominant per-row cost, so the INPUT must already be spread
     # across cores — the query layer does this once (_docs_with_tokens
@@ -91,8 +81,7 @@ def shingle_index(
     toked = docs.select(
         F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_tok")
     )
-    gram_fn = word_ngrams_arrow if engine == "arrow" else word_ngrams
-    grams = toked.select("doc_id", gram_fn(F.col("_tok"), ngram).alias("_g"))
+    grams = toked.select("doc_id", word_ngrams(F.col("_tok"), ngram).alias("_g"))
     # explode_outer + post-filter, NOT plain explode: InferFiltersFromGenerate
     # would add size(_g) > 0 under a plain explode, and predicate pushdown
     # then substitutes the whole n-gram expression into a scan-level Filter,
@@ -116,17 +105,15 @@ def shingle_index(
 #: score (recall-only, zero-false-positive pruning — same contract as LSH).
 NGRAM_MAX_DOC_FREQ = 100
 
-#: Join hint for the fat per-doc shingle-ARRAY sides of jaccard_verify.
-#: Production value is ``shuffle_merge`` (sorts and SPILLS — the r10
-#: 100× finding: shuffle-hash builds a non-spillable in-memory hash
-#: relation, which OOMs on fat array partitions once the unified region
-#: fragments). The env override exists ONLY so tools/spill_rung_ab.py
-#: can measure the merge-vs-hash cost on identical code — never set it
-#: in production, and never to ``broadcast`` (every side here scales
-#: with the corpus; tests/test_plans.py pins no-broadcast).
-ARRAY_SIDE_JOIN_HINT = os.environ.get(
-    "SPARK_GRAFT_ARRAY_JOIN_HINT", "shuffle_merge"
-)
+#: Join hint for the fat per-doc shingle-ARRAY sides of jaccard_verify:
+#: ``shuffle_merge`` sorts and SPILLS (the r10 100× finding: shuffle-hash
+#: builds a non-spillable in-memory hash relation, which OOMs on fat
+#: array partitions once the unified region fragments). A module
+#: constant, read at call time, so tools/spill_rung_ab.py can assign it
+#: to measure the merge-vs-hash cost on identical code. Never
+#: ``broadcast``: every side here scales with the corpus
+#: (tests/test_plans.py pins no-broadcast).
+ARRAY_SIDE_JOIN_HINT = "shuffle_merge"
 
 
 def jaccard_verify(
@@ -189,36 +176,17 @@ def jaccard_verify(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    threshold: float = 0.5,
-    max_doc_freq: int = NGRAM_MAX_DOC_FREQ,
+def _rare_pair_counts(
+    docs: DataFrame, id_col: str, text_col: str, ngram: int, max_doc_freq: int
 ) -> DataFrame:
-    """Near-dup pairs by exact word-n-gram Jaccard similarity.
-
-    Skew-safe single-pass shape. The inverted-index self-join runs only
-    over *rare* shingles (document frequency ≤ ``max_doc_freq`` — the
-    same posting-list cap winnow_overlap_pairs applies), so join volume
-    is Σ_rare df² — bounded by cap·|index| — instead of the df² of the
-    hottest boilerplate phrase: one shingle shared by millions of docs
-    can never quadratically blow up the shuffle. That pass counts each
-    pair's rare-shingle intersection directly (groupBy pair — no
-    distinct, no second join against the index).
-
-    Exactness is restored by **hot-shingle completion**: each doc's
-    above-cap shingles are collected into a tiny per-doc array (≤ a few
-    boilerplate phrases by construction — a doc is mostly rare shingles),
-    and for surviving pairs ``n_inter = n_rare +
-    |hot_A ∩ hot_B|`` via array_intersect. So every pair that shares at
-    least one rare shingle gets its EXACT full-set Jaccard; the only
-    recall loss is pairs sharing *exclusively* boilerplate — which a
-    near-dup score should ignore anyway. A cheap upper bound
-    (n_rare + min(|hot_A|,|hot_B|)) pre-filters before the array work.
-    Output (a<b) pairs with jaccard ≥ threshold, rounded to 6 for engine
-    portability.
+    """Rare-shingle candidate pairs with hot-shingle completion inputs —
+    the shared candidate build of :func:`ngram_jaccard_pairs` and
+    :func:`containment_pairs`: one row per (id_a < id_b) pair sharing at
+    least one shingle of document frequency ≤ ``max_doc_freq``, with
+    ``(id_a, id_b, n_rare, n_a, n_b, hot_a, hot_b)`` — the rare-shingle
+    intersection count, both full shingle-set sizes, and both sorted
+    above-cap shingle arrays (empty when a doc has none). Callers bound
+    and score ``n_inter = n_rare + |hot_a ∩ hot_b|`` themselves.
     """
     # Materialize the index once: it feeds the df split, both join sides,
     # sizes, and hot arrays; the tokenize→n-gram chain is interpreted
@@ -257,7 +225,7 @@ def ngram_jaccard_pairs(
         .agg(F.count(F.lit(1)).alias("n_rare"))
     )
     empty = F.array().cast("array<string>")
-    joined = (
+    return (
         pairs.join(sizes.withColumnRenamed("doc_id", "id_a"), "id_a")
         .withColumnRenamed("n_shingles", "n_a")
         .join(
@@ -283,6 +251,40 @@ def ngram_jaccard_pairs(
         .withColumn("hot_a", F.coalesce(F.col("hot_a"), empty))
         .withColumn("hot_b", F.coalesce(F.col("hot_b"), empty))
     )
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    ngram: int = 3,
+    threshold: float = 0.5,
+    max_doc_freq: int = NGRAM_MAX_DOC_FREQ,
+) -> DataFrame:
+    """Near-dup pairs by exact word-n-gram Jaccard similarity.
+
+    Skew-safe single-pass shape. The inverted-index self-join runs only
+    over *rare* shingles (document frequency ≤ ``max_doc_freq`` — the
+    same posting-list cap winnow_overlap_pairs applies), so join volume
+    is Σ_rare df² — bounded by cap·|index| — instead of the df² of the
+    hottest boilerplate phrase: one shingle shared by millions of docs
+    can never quadratically blow up the shuffle. That pass counts each
+    pair's rare-shingle intersection directly (groupBy pair — no
+    distinct, no second join against the index).
+
+    Exactness is restored by **hot-shingle completion**: each doc's
+    above-cap shingles are collected into a tiny per-doc array (≤ a few
+    boilerplate phrases by construction — a doc is mostly rare shingles),
+    and for surviving pairs ``n_inter = n_rare +
+    |hot_A ∩ hot_B|`` via array_intersect. So every pair that shares at
+    least one rare shingle gets its EXACT full-set Jaccard; the only
+    recall loss is pairs sharing *exclusively* boilerplate — which a
+    near-dup score should ignore anyway. A cheap upper bound
+    (n_rare + min(|hot_A|,|hot_B|)) pre-filters before the array work.
+    Output (a<b) pairs with jaccard ≥ threshold, rounded to 6 for engine
+    portability.
+    """
+    joined = _rare_pair_counts(docs, id_col, text_col, ngram, max_doc_freq)
     # upper bound on the full intersection; J is increasing in n_inter, so
     # ub(1+t) < t(n_a+n_b) proves jaccard < t without touching the arrays
     ub = F.col("n_rare") + F.least(F.size("hot_a"), F.size("hot_b"))
@@ -573,58 +575,7 @@ def containment_pairs(
     only pairs sharing exclusively hot shingles (which carry no dup
     signal by construction).
     """
-    # Int-id self-join (r13): same §2.3 narrow-key move as
-    # ngram_jaccard_pairs above — see the comment there (staged mono-id
-    # df table; n_rare is id-representation-independent).
-    idx = shingle_index(docs, id_col, text_col, ngram).transform(stage)
-    dfreq = (
-        idx.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .withColumn("_sid", F.monotonically_increasing_id())
-        .transform(stage)
-    )
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    rare = dfreq.where(F.col("_df") <= max_doc_freq).select("shingle", "_sid")
-    hot_arrs = (
-        idx.join(dfreq.where(F.col("_df") > max_doc_freq).select("shingle"), "shingle")
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("shingle")).alias("hot"))
-    )
-    pruned = idx.join(rare, "shingle").select("doc_id", "_sid")
-    a, b = pruned.alias("a"), pruned.alias("b")
-    pairs = (
-        a.join(b, "_sid")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_rare"))
-    )
-    empty = F.array().cast("array<string>")
-    joined = (
-        pairs.join(sizes.withColumnRenamed("doc_id", "id_a"), "id_a")
-        .withColumnRenamed("n_shingles", "n_a")
-        .join(
-            sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed(
-                "n_shingles", "n_b"
-            ),
-            "id_b",
-        )
-        .join(
-            hot_arrs.withColumnRenamed("doc_id", "id_a").withColumnRenamed(
-                "hot", "hot_a"
-            ),
-            "id_a",
-            "left",
-        )
-        .join(
-            hot_arrs.withColumnRenamed("doc_id", "id_b").withColumnRenamed(
-                "hot", "hot_b"
-            ),
-            "id_b",
-            "left",
-        )
-        .withColumn("hot_a", F.coalesce(F.col("hot_a"), empty))
-        .withColumn("hot_b", F.coalesce(F.col("hot_b"), empty))
-    )
+    joined = _rare_pair_counts(docs, id_col, text_col, ngram, max_doc_freq)
     # upper bound prunes before the array intersect: containment is
     # increasing in n_inter and n_inter <= n_rare + min(|hot_a|,|hot_b|)
     ub = F.col("n_rare") + F.least(F.size("hot_a"), F.size("hot_b"))
@@ -897,31 +848,18 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Per-doc winnowed rolling-hash fingerprints (north-star text op:
     document fingerprinting via rolling hash).
 
     Output: (doc_id, n_grams, fps:array<long>) — gram count plus the
-    winnowed fingerprint set. Map-only (no shuffle) on either engine.
-
-    ``engine="arrow"`` (default) computes the hash+winnow arithmetic in
-    one Arrow-vectorized UDF (functions.text.winnowed_fps_arrow) —
-    measured ~3× the whole-query throughput at sf0.1; ``"expr"`` is the
-    pure-Catalyst higher-order-lambda path, bit-identical values
-    (property-tested), kept for environments where Python workers are
-    unavailable. In the expr path each stage of the char→codepoint→
-    gram-hash→winnow chain is materialized as its own projection because
-    higher-order lambdas get no common-subexpression elimination (same
-    staging rationale as queries.q_doc_stats).
+    winnowed fingerprint set. Map-only (no shuffle): normalization stays
+    JVM-side and the hash+winnow arithmetic runs in one Arrow-vectorized
+    UDF (functions.text.winnowed_fps). The pure-Catalyst higher-order
+    lambda form of the same chain measured ~2.4× slower at sf0.1 and was
+    deleted; the DuckDB oracle's fold stays the cross-engine reference.
     """
-    from ..functions.text import (
-        ascii_normalize,
-        codepoints,
-        gram_rolling_hashes,
-        winnow,
-        winnowed_fps_arrow,
-    )
+    from ..functions.text import ascii_normalize, winnowed_fps
 
     # Partitioning contract: same as shingle_index — the caller spreads
     # the corpus across cores once (_docs_with_tokens); the ~ms/doc
@@ -929,23 +867,13 @@ def winnow_fingerprints(
     norm = docs.select(
         F.col(id_col).alias("doc_id"), ascii_normalize(F.col(text_col)).alias("_a")
     )
-    if engine == "arrow":
-        gram_count = F.greatest(
-            F.lit(0).cast("long"), (F.length("_a") - F.lit(k - 1)).cast("long")
-        )
-        return norm.select(
-            "doc_id",
-            gram_count.alias("n_grams"),
-            winnowed_fps_arrow(F.col("_a"), k, w).alias("fps"),
-        )
-    staged = norm.select("doc_id", codepoints(F.col("_a")).alias("_cp"))
-    hashed = staged.select(
-        "doc_id", gram_rolling_hashes(F.col("_cp"), k).alias("_h")
+    gram_count = F.greatest(
+        F.lit(0).cast("long"), (F.length("_a") - F.lit(k - 1)).cast("long")
     )
-    return hashed.select(
+    return norm.select(
         "doc_id",
-        F.size("_h").cast("long").alias("n_grams"),
-        winnow(F.col("_h"), w).alias("fps"),
+        gram_count.alias("n_grams"),
+        winnowed_fps(F.col("_a"), k, w).alias("fps"),
     )
 
 
@@ -968,18 +896,15 @@ def winnow_overlap_pairs(
     ``overlap = shared / (n_a + n_b - shared)`` (Jaccard over fp sets).
 
     Plan-shape constraint: the explode projection emits ONLY (doc_id, fp).
-    Higher-order expressions run interpreted (no codegen), and any column
-    derived from the fps array that survives past the Generate gets
-    inlined by projection collapse and re-evaluated per EXPLODED row —
-    measured as a >100x blowup. Set sizes are therefore recounted from the
-    exploded rows (fps is distinct, so count == size) and joined back at
-    the end, exactly like ngram_jaccard_pairs.
+    Set sizes are recounted from the exploded rows (fps is distinct, so
+    count == size) and joined back at the end, exactly like
+    ngram_jaccard_pairs.
     """
     fpi = winnow_fingerprints(docs, id_col, text_col, k, w)
     # Materialize the exploded inverted index ONCE: it feeds four
     # consumers (set sizes, stop-gram doc-freq filter, both join sides),
-    # and recomputing the interpreted rolling-hash chain per consumer is
-    # the dominant cost. localCheckpoint (not .persist()): a persist'd
+    # and recomputing the rolling-hash fold per consumer is the dominant
+    # cost. localCheckpoint (not .persist()): a persist'd
     # plan lives in the shared CacheManager until someone explicitly
     # unpersists it — and this function returns a lazy DataFrame, so
     # there is no correct place to do that; the entry leaked per call.
@@ -994,14 +919,10 @@ def winnow_overlap_pairs(
     #
     # explode_OUTER, not explode: for plain explode, Catalyst's
     # InferFiltersFromGenerate synthesizes `size(fps) > 0` and pushes it
-    # below every staged projection, inlining the whole winnow chain into
-    # one expression where the window lambda re-evaluates the gram array
-    # per position — O(n·k) becomes O(n²·k) per doc (measured: hang at
-    # 500 docs). The rule skips outer generates; the isNotNull filter on
-    # the generator OUTPUT cannot be pushed below the Generate, so the
-    # staging survives. (Lineage truncation makes this belt-and-braces
-    # for downstream consumers, but the rule fires during THIS plan's
-    # materialization too, so the staging protection still matters.)
+    # below the projection, so the fingerprint UDF runs TWICE per doc —
+    # one ArrowEvalPython for the Filter, one for the output. The rule
+    # skips outer generates; the isNotNull filter on the generator
+    # OUTPUT cannot be pushed below the Generate.
     e = (
         fpi.select("doc_id", F.explode_outer("fps").alias("fp"))
         .where(F.col("fp").isNotNull())
@@ -1050,7 +971,6 @@ def repeated_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "arrow",
 ) -> DataFrame:
     """EXACT repeated-substring spans — the ExactSubstr dedup semantic of
     Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -1083,29 +1003,20 @@ def repeated_spans(
     """
     from pyspark.sql import Window
 
-    from ..functions.text import (
-        ascii_normalize,
-        codepoints,
-        gram_rolling_hashes,
-        gram_rolling_hashes_arrow,
-    )
+    from ..functions.text import ascii_normalize, gram_rolling_hashes
 
     k = gram_len
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         ascii_normalize(F.col(text_col)).alias("_t"),
     )
-    # engine="arrow" (default): vectorized hash fold, bit-identical to
-    # the expression path (see winnow_fingerprints) — at k=40 the
-    # interpreted fold is the dominant query cost.
-    if engine == "arrow":
-        hs = gram_rolling_hashes_arrow(F.col("_t"), k)
-    else:
-        hs = gram_rolling_hashes(codepoints(F.col("_t")), k)
+    # Arrow-vectorized hash fold: at k=40 an interpreted higher-order
+    # fold would be the dominant query cost.
+    hs = gram_rolling_hashes(F.col("_t"), k)
     # Materialize the position index ONCE (dedup-module rule, cf.
     # winnow_overlap_pairs): it feeds the frequency gate AND the hit
-    # extraction, and the interpreted rolling-hash chain is the dominant
-    # per-row cost — recomputing it per consumer measured ~4x the query.
+    # extraction, and the rolling-hash fold is the dominant per-row
+    # cost — recomputing it per consumer measured ~4x the query.
     # INTS ONLY in the checkpoint: carrying the doc text per position
     # would materialize ~gram_len x the corpus; survivors re-join the
     # (corpus-sized but keyed) text side instead.
@@ -1275,16 +1186,16 @@ def cdc_chunk_rows(
     shuffle 16-byte hashes, not documents. Empty docs emit no rows
     (callers LEFT JOIN, see queries.q_doc_cdc_chunks). Boundary
     positions derive from the SAME Rabin fold as the winnowing
-    fingerprints (functions.text.gram_rolling_hashes_arrow — Arrow
-    path, bit-identical to the expression fold by property test), so
-    any engine reproduces the exact cuts.
+    fingerprints (functions.text.gram_rolling_hashes, pinned to a
+    pure-Python reference by property test), so any engine reproduces
+    the exact cuts.
     """
-    from ..functions.text import ascii_normalize, gram_rolling_hashes_arrow
+    from ..functions.text import ascii_normalize, gram_rolling_hashes
 
     a = docs.select(
         F.col(id_col).alias("doc_id"),
         ascii_normalize(F.col(text_col)).alias("_a"),
-    ).withColumn("_h", gram_rolling_hashes_arrow(F.col("_a"), k))
+    ).withColumn("_h", gram_rolling_hashes(F.col("_a"), k))
     # gram start positions (1-based) whose hash hits the boundary; the
     # cut falls after the gram's LAST char (i + k - 1). Spark's
     # sequence(1, 0) steps DOWNWARD, so the no-gram case is guarded.

@@ -12,7 +12,7 @@ expansion to claw recall back.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
+import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,7 +26,6 @@ def probe_max_sim(
     probes: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Max cosine similarity of every corpus vector to a PROBE SET —
     the semantic-decontamination gate (flag training docs too close in
@@ -36,26 +35,23 @@ def probe_max_sim(
 
     Scale shape is the kmeans-centroid pattern, not a join: the probe
     set (a benchmark suite — thousands of vectors, driver metadata)
-    ships as ONE literal matrix plus a per-probe norm literal; each
-    corpus row evaluates m fused dot-product folds and an array_max,
-    all JVM-side — map-only, zero shuffle, zero Python. Corpus size
-    only adds map tasks; probe-set size only widens the literal.
+    ships as closure metadata of ONE Arrow-batched numpy pass; each
+    corpus row is scored against every probe and reduced to its max —
+    map-only, zero shuffle. Corpus size only adds map tasks; probe-set
+    size only widens the matrix. (A JVM literal-matrix form was deleted:
+    it codegens an m-probe expression, which is plan-size-bound past a
+    few hundred probes.)
 
-    Returns ``(id, max_probe_sim)`` with the max rounded to 6 decimals
-    (cross-engine float stability; callers threshold the rounded value
-    so the gate is deterministic across engines too).
-
-    ``engine="arrow"`` (default) runs the scoring as one Arrow-batched
-    numpy pass whose dot/norm accumulation iterates the dimension axis
-    SEQUENTIALLY — the identical IEEE operation order as the expression
-    fold, so the two engines produce BIT-IDENTICAL doubles (pinned by
-    an exact-equality test; the same escalation rule as the ``*_arrow``
-    text twins). The expression path (``engine="expr"``) stays fully
-    JVM-side but codegens an m-probe literal expression — fine to a few
-    hundred probes, plan-size-bound beyond; arrow carries the probe
-    matrix as closure metadata and scales to benchmark suites of any
-    width.
+    Dot and norm accumulation iterate the dimension axis SEQUENTIALLY —
+    the same IEEE operation order as the DuckDB oracle's ``list_reduce``
+    fold, so the doubles agree bit-for-bit. Returns
+    ``(id, max_probe_sim)`` with the max rounded to 6 decimals (callers
+    threshold the rounded value, so the gate is deterministic across
+    engines too); a zero vector scores 0.0.
     """
+    import numpy as np
+    from pyspark.sql.pandas.functions import pandas_udf
+
     if not probes:
         raise ValueError("probe_max_sim needs a non-empty probe set")
     # per-probe norms — metadata math, sequential fold to mirror the
@@ -66,56 +62,32 @@ def probe_max_sim(
         for x in p:
             acc += float(x) * float(x)
         pnorms.append(acc**0.5)
+    pmat = np.asarray(
+        [[float(x) for x in p] for p in probes], dtype=np.float64
+    )  # m x d
+    pn_row = np.asarray(pnorms, dtype=np.float64)[None, :]  # 1 x m
 
-    if engine == "arrow":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.pandas.functions import pandas_udf
-
-        pmat = np.asarray(
-            [[float(x) for x in p] for p in probes], dtype=np.float64
-        )  # m x d
-        pn_row = np.asarray(pnorms, dtype=np.float64)[None, :]  # 1 x m
-
-        @pandas_udf("double")
-        def _maxsim(s: pd.Series) -> pd.Series:
-            if len(s) == 0:
-                return pd.Series([], dtype="float64")
-            v = np.stack(s.to_numpy()).astype(np.float64)  # n x d
-            n, d = v.shape
-            dots = np.zeros((n, pmat.shape[0]), dtype=np.float64)
-            vn2 = np.zeros(n, dtype=np.float64)
-            # sequential over the dimension axis = the fold's IEEE order
-            for k in range(d):
-                dots += v[:, k : k + 1] * pmat.T[k : k + 1, :]
-                vn2 += v[:, k] * v[:, k]
-            denom = pn_row * np.sqrt(vn2)[:, None]
-            sims = np.divide(
-                dots, denom, out=np.zeros_like(dots), where=denom != 0
-            )
-            return pd.Series(sims.max(axis=1))
-
-        return corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.round(_maxsim(as_double(F.col(vec_col))), 6).alias("max_probe_sim"),
+    @pandas_udf("double")
+    def _maxsim(s: pd.Series) -> pd.Series:
+        if len(s) == 0:
+            return pd.Series([], dtype="float64")
+        v = np.stack(s.to_numpy()).astype(np.float64)  # n x d
+        n, d = v.shape
+        dots = np.zeros((n, pmat.shape[0]), dtype=np.float64)
+        vn2 = np.zeros(n, dtype=np.float64)
+        # sequential over the dimension axis = the fold's IEEE order
+        for k in range(d):
+            dots += v[:, k : k + 1] * pmat.T[k : k + 1, :]
+            vn2 += v[:, k] * v[:, k]
+        denom = pn_row * np.sqrt(vn2)[:, None]
+        sims = np.divide(
+            dots, denom, out=np.zeros_like(dots), where=denom != 0
         )
+        return pd.Series(sims.max(axis=1))
 
-    from ..functions.vector import literal_matrix
-
-    probes_lit = literal_matrix([[float(x) for x in p] for p in probes])
-    norms_lit = F.expr("array(" + ", ".join(f"{v!r}d" for v in pnorms) + ")")
-    v = as_double(F.col(vec_col))
-    vn = norm(F.col(vec_col))
-    sims = F.zip_with(
-        probes_lit,
-        norms_lit,
-        lambda p, pn: F.when(pn * vn == 0, F.lit(0.0)).otherwise(
-            dot(p, v) / (pn * vn)
-        ),
-    )
     return corpus.select(
         F.col(id_col).alias("vec_id"),
-        F.round(F.array_max(sims), 6).alias("max_probe_sim"),
+        F.round(_maxsim(as_double(F.col(vec_col))), 6).alias("max_probe_sim"),
     )
 
 

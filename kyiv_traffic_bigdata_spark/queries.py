@@ -5270,8 +5270,8 @@ def q_emb_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_emb_decontaminate() -> str:
     # Dot products and norms accumulate via list_reduce — a SEQUENTIAL
     # left-to-right fold over the dimension axis, the identical IEEE
-    # operation order as the Spark side's fold (probe_max_sim's
-    # bit-identical arrow/expr contract). A plain SUM over unnested
+    # operation order as the Spark side's sequential numpy fold
+    # (probe_max_sim). A plain SUM over unnested
     # dims is engine/parallelism order-dependent and could flip the
     # thresholded `contaminated` flag for a boundary-straddling sim
     # under DuckDB parallel aggregation at larger scale (r4 ADVICE).

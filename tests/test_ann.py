@@ -260,10 +260,13 @@ def test_pq_and_semdedup_tolerate_empty_input(spark, pq_books):
     assert semdedup(empty2, cents, threshold=0.5).count() == 0
 
 
-def test_probe_max_sim_engines_bit_identical(spark):
-    """The arrow engine's sequential-dimension accumulation must produce
-    BIT-IDENTICAL doubles to the JVM expression fold (same IEEE op
-    order) — exact equality, no tolerance, including a zero vector."""
+def test_probe_max_sim_matches_python_fold(spark):
+    """probe_max_sim == a pure-Python reference that accumulates every
+    dot product and norm over the dimensions IN ORDER (the oracle's
+    sequential fold): exact equality after the 6-dp round, no
+    tolerance, every corpus id present, a zero vector scoring 0.0."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from kyiv_traffic_bigdata_spark.operators.similarity import probe_max_sim
     from kyiv_traffic_bigdata_spark.tables import load_table
 
@@ -277,11 +280,30 @@ def test_probe_max_sim_engines_bit_identical(spark):
         "vec_id long, embedding array<double>",
     )
     corpus = emb.select("vec_id", emb.embedding.cast("array<double>").alias("embedding")).unionByName(zero)
-    a = {r.vec_id: r.max_probe_sim for r in probe_max_sim(corpus, probes, engine="arrow").collect()}
-    e = {r.vec_id: r.max_probe_sim for r in probe_max_sim(corpus, probes, engine="expr").collect()}
-    assert a.keys() == e.keys() and len(a) > 100
-    assert all(a[k] == e[k] for k in a), "engines diverged"
-    assert a[999999] == 0.0  # zero vector -> defined 0.0, not NaN
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    pnorms = [fold(p, p) ** 0.5 for p in probes]
+    expected = {}
+    for r in corpus.collect():
+        v = list(r.embedding)
+        vn = fold(v, v) ** 0.5
+        best = max(
+            0.0 if pn * vn == 0 else fold(v, p) / (pn * vn)
+            for p, pn in zip(probes, pnorms)
+        )
+        # Spark's round(x, 6): HALF_UP on the double's decimal string
+        expected[r.vec_id] = float(
+            Decimal(repr(best)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+        )
+    got = {r.vec_id: r.max_probe_sim for r in probe_max_sim(corpus, probes).collect()}
+    assert got.keys() == expected.keys() and len(got) > 100
+    assert all(got[k] == expected[k] for k in got), "diverged from the fold"
+    assert got[999999] == 0.0  # zero vector -> defined 0.0, not NaN
 
 
 def test_sign_words_bit_layout_and_hamming(spark):

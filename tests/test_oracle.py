@@ -14,8 +14,10 @@ tuple-based canon missed for two rounds:
   ``"3000000000.0"`` vs Spark bigint ``"3000000000"`` (r4
   ``doc_pack_windows`` hash mismatch with value-identical rows).
 
-A separate registry assertion bans array/struct/map-typed output columns
-outright so the first class can never be registered again.
+Every query's result is also checked for two registry properties on the
+frame the test already materializes: no array/struct/map-typed output
+column (so the first class can never be registered again) and at least
+one row.
 """
 
 from __future__ import annotations
@@ -74,13 +76,40 @@ def _value_hash(canon_pdf) -> str:
 
 ORACLES = oracle_sql()
 QUERY_NAMES = [n for n in queries() if n in ORACLES]
+NO_ORACLE_NAMES = [n for n in queries() if n not in ORACLES]
+
+
+def _assert_flat_columns(name, schema):
+    """Registry-level ban: the driver's pandas canonicalizer cannot hash
+    list/dict cells, so no query may emit array/struct/map columns —
+    serialize (array_join) or explode instead."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    offenders = [
+        (f.name, f.dataType.simpleString())
+        for f in schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+    assert not offenders, (
+        f"{name}: array/struct/map output columns break the driver "
+        f"canonicalizer: {offenders}"
+    )
+
+
+def _assert_has_rows(name, n_rows):
+    """Queries should exercise real data; empty results are suspicious.
+    No known-empty allowance — tune thresholds instead of whitelisting
+    emptiness."""
+    assert n_rows > 0, f"{name} returned 0 rows at {SF_DIR}"
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck, name):
     qfn = queries()[name]
     sdf = qfn(spark, SF_DIR)
+    _assert_flat_columns(name, sdf.schema)
     spark_pdf = sdf.toPandas()
+    _assert_has_rows(name, len(spark_pdf))
 
     rel = duck.sql(ORACLES[name])
     duck_pdf = rel.df()
@@ -119,35 +148,13 @@ def test_query_matches_oracle(spark, duck, name):
     )
 
 
-def test_no_array_or_struct_output_columns(spark):
-    """Registry-level ban: the driver's pandas canonicalizer cannot hash
-    list/dict cells, so no query may emit array/struct/map columns —
-    serialize (array_join) or explode instead."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    offenders = []
-    for name, fn in queries().items():
-        for f in fn(spark, SF_DIR).schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                offenders.append((name, f.name, f.dataType.simpleString()))
-    assert not offenders, (
-        f"array/struct/map output columns break the driver canonicalizer: {offenders}"
-    )
-
-
-def test_every_query_has_rows_or_is_known_empty(spark):
-    """Queries should exercise real data; empty results are suspicious.
-
-    Known-empty allowance: none currently — tune thresholds instead of
-    whitelisting emptiness.
-    """
-    qs = queries()
-    empties = []
-    for name, fn in qs.items():
-        n = fn(spark, SF_DIR).count()
-        if n == 0:
-            empties.append(name)
-    assert not empties, f"queries returned 0 rows at sf0.001: {empties}"
+@pytest.mark.parametrize("name", NO_ORACLE_NAMES)
+def test_no_oracle_query_has_rows_and_flat_columns(spark, name):
+    """The registry properties test_query_matches_oracle checks, for the
+    queries with no oracle twin (emb_pca, doc_unigram_tokenize)."""
+    sdf = queries()[name](spark, SF_DIR)
+    _assert_flat_columns(name, sdf.schema)
+    _assert_has_rows(name, sdf.count())
 
 
 def test_driver_window_fully_oracle_checkable():

@@ -116,16 +116,19 @@ def test_doc_stats_tokenizes_once(plans):
 
 
 def test_winnow_overlap_no_inlined_hash_chain(spark, sf_dir):
-    """Regression guard for the InferFiltersFromGenerate blowup: no scan
-    or filter in the winnow pair plan may contain the inlined rolling-hash
-    chain (aggregate(slice(...)) inside a filter means the O(n·k) gram map
-    went quadratic — measured as a hang at 500 docs)."""
-    from kyiv_traffic_bigdata_spark.operators.dedup import winnow_overlap_pairs
+    """The winnow fingerprint UDF runs in exactly ONE ArrowEvalPython
+    node and no Filter re-evaluates it (a pushed-down filter over the
+    fps array would run the O(n·k) hash fold a second time per doc).
+    Checked on winnow_fingerprints, the unstaged source of the overlap
+    plan: winnow_overlap_pairs stages the exploded index, and the
+    checkpoint truncates the lineage its own plan would show."""
+    from kyiv_traffic_bigdata_spark.operators.dedup import winnow_fingerprints
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = physical_plan(winnow_overlap_pairs(docs))
+    plan = physical_plan(winnow_fingerprints(docs))
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython\b", plan)) == 1
     for m in re.finditer(r"\(\d+\) Filter\b.*?(?=\(\d+\) )", plan, re.S):
-        assert "aggregate(slice" not in m.group(0)
+        assert "_win(" not in m.group(0) and "pythonUDF" not in m.group(0)
 
 
 def test_salted_join_replicates_dim_not_fact(spark, sf_dir):
@@ -372,29 +375,17 @@ def test_priority_count_exists_is_semi_join(plans):
     assert "Distinct" not in plan
 
 
-def test_emb_decontaminate_is_map_only_literal_probes(plans, spark, sf_dir):
+def test_emb_decontaminate_is_map_only_literal_probes(plans):
     """Semantic decontamination must be the kmeans-centroid shape:
     probes as metadata, per-row scoring — no join of any kind and only
-    the round-robin balance exchange. The default engine is one Arrow
-    projection (never row-at-a-time Python); the expr engine must stay
-    pure JVM."""
+    the round-robin balance exchange. The scoring is one Arrow
+    projection (never row-at-a-time Python)."""
     plan = plans("emb_decontaminate")
     for node in ("Join", "CartesianProduct", "Exchange hashpartitioning",
                  "BatchEvalPython"):
         assert node not in plan, node
     assert exchange_count(plan) <= 1  # _emb round-robin balance only
     assert "ArrowEvalPython" in plan  # the vectorized scoring pass
-
-    from kyiv_traffic_bigdata_spark.operators.similarity import probe_max_sim
-    from kyiv_traffic_bigdata_spark.plans import physical_plan
-    from kyiv_traffic_bigdata_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    expr_plan = physical_plan(
-        probe_max_sim(emb, [[1.0] * 64], engine="expr"), "formatted"
-    )
-    for node in ("ArrowEvalPython", "BatchEvalPython", "Exchange", "Join"):
-        assert node not in expr_plan, node
 
 
 def test_doc_version_diff_single_full_outer_join(plans):

@@ -10,6 +10,7 @@ batch of generated examples instead of one job per example.
 from __future__ import annotations
 
 import base64
+import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -31,6 +32,12 @@ printable = st.text(
     alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",)),
     max_size=200,
 )
+
+
+def _ascii_normalize(t):
+    """Python reference of functions.text.ascii_normalize (on ASCII)."""
+    t = re.sub(r"\s+", " ", t.strip().lower())
+    return re.sub(r"[^ -~]", "", t)
 
 
 @given(st.lists(printable, min_size=1, max_size=30))
@@ -295,13 +302,7 @@ def test_repeated_spans_match_bruteforce(spark, texts, k):
 
     from kyiv_traffic_bigdata_spark.operators.dedup import repeated_spans
 
-    def normalize(t):
-        import re
-
-        t = re.sub(r"\s+", " ", t.strip().lower())
-        return re.sub(r"[^ -~]", "", t)
-
-    norm = [normalize(t) for t in texts]
+    norm = [_ascii_normalize(t) for t in texts]
     counts = Counter(
         t[i : i + k] for t in norm for i in range(len(t) - k + 1)
     )
@@ -346,68 +347,50 @@ def test_repeated_spans_match_bruteforce(spark, texts, k):
     st.integers(min_value=2, max_value=9),
 )
 @SETTINGS
-def test_arrow_rolling_hash_paths_bit_identical(spark, texts, k):
-    """The Arrow-vectorized rolling-hash/winnow twins must produce
-    BIT-IDENTICAL arrays to the pure-Catalyst expression path — the
-    contract that lets operators default to the fast engine while the
-    oracle/portability story stays anchored on the expression form."""
+def test_rolling_hashes_and_winnow_match_python_reference(spark, texts, k):
+    """gram_rolling_hashes / winnowed_fps == a pure-Python reference: a
+    Rabin-Karp fold with ROLL_BASE/ROLL_MOD over every k-gram of the
+    ascii-normalized text, then the minimum of every w-wide window,
+    distinct in first-occurrence order; fewer than w grams keep the
+    single minimum, no grams stay empty."""
     from kyiv_traffic_bigdata_spark.functions.text import (
+        ROLL_BASE,
+        ROLL_MOD,
         ascii_normalize,
-        codepoints,
         gram_rolling_hashes,
-        gram_rolling_hashes_arrow,
-        winnow,
-        winnowed_fps_arrow,
+        winnowed_fps,
     )
+
+    w = 3
+
+    def gram_hashes(t):
+        out = []
+        for i in range(len(t) - k + 1):
+            acc = 0
+            for c in t[i : i + k]:
+                acc = (acc * ROLL_BASE + ord(c)) % ROLL_MOD
+            out.append(acc)
+        return out
+
+    def winnow(h):
+        if len(h) < w:
+            return [min(h)] if h else []
+        mins = [min(h[i : i + w]) for i in range(len(h) - w + 1)]
+        return list(dict.fromkeys(mins))
 
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     ).select("doc_id", ascii_normalize(F.col("text")).alias("_a"))
-    w = 3
-    both = docs.select(
+    got = docs.select(
         "doc_id",
-        gram_rolling_hashes(codepoints(F.col("_a")), k).alias("h_expr"),
-        gram_rolling_hashes_arrow(F.col("_a"), k).alias("h_arrow"),
-        winnow(gram_rolling_hashes(codepoints(F.col("_a")), k), w).alias(
-            "w_expr"
-        ),
-        winnowed_fps_arrow(F.col("_a"), k, w).alias("w_arrow"),
+        gram_rolling_hashes(F.col("_a"), k).alias("h"),
+        winnowed_fps(F.col("_a"), k, w).alias("fps"),
     ).collect()
-    for r in both:
-        assert list(r.h_expr or []) == list(r.h_arrow or []), r.doc_id
-        assert list(r.w_expr or []) == list(r.w_arrow or []), r.doc_id
-
-
-@given(
-    st.lists(
-        st.text(
-            alphabet=st.characters(min_codepoint=32, max_codepoint=126),
-            min_size=0,
-            max_size=80,
-        ),
-        min_size=1,
-        max_size=8,
-    ),
-    st.integers(min_value=1, max_value=4),
-)
-@SETTINGS
-def test_arrow_word_ngrams_bit_identical(spark, texts, n):
-    from kyiv_traffic_bigdata_spark.functions.text import (
-        tokens,
-        word_ngrams,
-        word_ngrams_arrow,
-    )
-
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    ).select("doc_id", tokens(F.col("text")).alias("_tok"))
-    both = docs.select(
-        "doc_id",
-        word_ngrams(F.col("_tok"), n).alias("g_expr"),
-        word_ngrams_arrow(F.col("_tok"), n).alias("g_arrow"),
-    ).collect()
-    for r in both:
-        assert list(r.g_expr or []) == list(r.g_arrow or []), r.doc_id
+    assert len(got) == len(texts)
+    for r in got:
+        h = gram_hashes(_ascii_normalize(texts[r.doc_id]))
+        assert list(r.h) == h, r.doc_id
+        assert list(r.fps) == winnow(h), r.doc_id
 
 
 @given(
