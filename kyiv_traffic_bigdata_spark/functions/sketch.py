@@ -1,10 +1,9 @@
 """Deterministic sketch primitives shared by batch queries and their
-streaming twins.
+DuckDB oracles.
 
 The count-min bucket expansion lives here so the batch query
-(queries.q_event_cms_heavy_hitters), its DuckDB oracle, and the
-streaming counter twin (streaming.stateful.streaming_cms_counters) all
-address the IDENTICAL d×w cells: row ``j``'s hash is the portable md5
+(queries.q_event_cms_heavy_hitters) and its DuckDB oracle address the
+IDENTICAL d×w cells: row ``j``'s hash is the portable md5
 hash (functions.text.portable_hash — the only hash Spark and DuckDB
 share bit-for-bit) of the key with a ``"j:"`` prefix, so the d rows are
 independent without needing a second hash family.

@@ -88,8 +88,8 @@ HTML_TEXT_CHAIN: tuple[tuple[str, str], ...] = (
 
 def html_to_text(col: Column) -> Column:
     """Boilerplate-light text extraction from HTML — the step between
-    :mod:`..sources.warc` crawl ingest and every text operator (dedup,
-    quality gates, lang-ID). Drops script/style/comment blocks, strips
+    crawled HTML and every text operator (dedup, quality gates,
+    lang-ID). Drops script/style/comment blocks, strips
     tags, decodes the common entities, collapses whitespace. Pure
     Catalyst ``regexp_replace`` chain: map-only, codegen'd, no UDF —
     a full-fidelity DOM extractor (readability/trafilatura) is a

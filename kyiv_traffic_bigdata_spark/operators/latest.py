@@ -36,18 +36,6 @@ def latest_per_key(
     )
 
 
-def dedup_last_write_wins(
-    df: DataFrame, key_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """S2 semantics: collapse snapshot repeats, keeping the newest full row.
-
-    Used by the routes-dimension reader (reference kpt/visualize.py:48-57,
-    where later JSONL lines overwrite earlier dict entries).
-    """
-    payload = [c for c in df.columns if c not in key_cols]
-    return latest_per_key(df, key_cols, order_cols, payload)
-
-
 def dedup_exact(df: DataFrame, key_cols: list[str], tiebreak: str) -> DataFrame:
     """Batch twin of the streaming ST3 dedup: one row per key, min tiebreak.
 

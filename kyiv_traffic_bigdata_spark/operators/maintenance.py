@@ -69,44 +69,6 @@ def compact_parquet(
     return n
 
 
-def upsert_parquet(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    out_path: str,
-    order_col: str | None = None,
-) -> int:
-    """MERGE/upsert for a parquet dimension table (the routes-catalog
-    last-write-wins maintenance — SURVEY S2/ST2 — generalized): rows in
-    ``updates`` replace same-key rows in ``path``; new keys append.
-    Returns the merged row count.
-
-    Shape: one left-anti join (existing keys minus updated keys) + a
-    union — the updates side is the small one, so Catalyst broadcasts it
-    and the base table never shuffles. Write-then-swap like
-    compact_parquet: never merge in place, the old snapshot survives a
-    mid-job death. With ``order_col``, intra-``updates`` duplicates
-    resolve to the max-``order_col`` row first (deterministic
-    last-write-wins inside one batch, the S2 rule).
-    """
-    from pyspark.sql import functions as F
-
-    if order_col is not None:
-        w_cols = [F.col(c) for c in key_cols]
-        latest = updates.groupBy(*w_cols).agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in updates.columns]), F.col(order_col)
-            ).alias("_r")
-        )
-        updates = latest.select("_r.*")
-    base = spark.read.parquet(path)
-    kept = base.join(F.broadcast(updates.select(*key_cols)), key_cols, "left_anti")
-    merged = kept.unionByName(updates.select(*base.columns))
-    merged.write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path).count()
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
@@ -154,41 +116,3 @@ def snapshot_diff(
         .where(F.col("change_type").isNotNull())
         .select(*key_cols, "change_type", "old_fp", "new_fp")
     )
-
-
-def prune_snapshots(store_dir: str, keep: int = 3) -> list[str]:
-    """Warehouse GC for the versioned-snapshot store
-    (streaming/analytics.start_dimension_upsert_sink layout:
-    ``v{batch_id}/`` dirs + an atomic ``_CURRENT`` pointer): delete all
-    but the newest ``keep`` version dirs. The pointed-at version is
-    NEVER deleted regardless of age — readers resolving the pointer
-    mid-prune always find their snapshot. Returns the removed names.
-
-    Local-filesystem store, consistent with the sink it maintains (the
-    documented posture there); at 100 TB the same ordering rule applies
-    through the object-store API, and the pointer-protection invariant
-    is what makes the prune safe to run concurrently with readers."""
-    import os
-    import re
-    import shutil
-
-    if keep < 1:
-        raise ValueError("keep must be >= 1")
-    current = None
-    ptr = os.path.join(store_dir, "_CURRENT")
-    if os.path.exists(ptr):
-        with open(ptr, encoding="utf-8") as f:
-            current = f.read().strip() or None
-    versions = sorted(
-        (
-            d
-            for d in os.listdir(store_dir)
-            if re.fullmatch(r"v\d+", d)
-            and os.path.isdir(os.path.join(store_dir, d))
-        ),
-        key=lambda d: int(d[1:]),
-    )
-    doomed = [d for d in versions[:-keep] if d != current]
-    for d in doomed:
-        shutil.rmtree(os.path.join(store_dir, d))
-    return doomed

@@ -18,11 +18,11 @@ the observed slack.
 
 Chosen over KLL / t-digest deliberately: their compactions are
 order-sensitive (KLL flips coins; t-digest merges depend on arrival
-order), which breaks this repo's twin discipline. Dyadic-CMS cells are
-PLAIN SUMS — associative and commutative — so the streaming twin
-(streaming.stateful.streaming_rank_sketch_cells) reaches the
-bit-identical sketch no matter how micro-batches slice the input, the
-same exact-parity argument as the KMV bottom-k and CMS counter twins.
+order), so the same input split differently yields a different sketch.
+Dyadic-CMS cells are PLAIN SUMS — associative and commutative — so
+partial sketches over any split of the input merge to the bit-identical
+sketch, the same exact-merge argument as the KMV bottom-k and CMS
+counters.
 Cell addressing uses Spark's built-in ``xxhash64`` over the
 ``(j, level, bucket)`` long triple — NOT the md5 portable_hash the
 oracle-paired sketches use: this sketch has no DuckDB twin (no-oracle

@@ -3,8 +3,8 @@ the reference's processing-time 5 s flush (SURVEY §2.8 ST1, flagged there
 as the engine's extension surface).
 
 Batch and Structured Streaming share these shapes: ``F.window`` works in
-both; the session operator's lag+cumsum form is batch-only (streaming uses
-``session_window`` / ``applyInPandasWithState`` in streaming/ingest.py).
+both; the session operator's lag+cumsum form is batch-only (a streaming
+sessionizer would use Spark's built-in ``session_window``).
 """
 
 from __future__ import annotations

@@ -4979,7 +4979,7 @@ GROUP BY doc_id
 
 def q_doc_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML→text extraction (functions.web.html_to_text) — the step
-    between WARC crawl ingest (sources.warc) and the text operators.
+    between crawled HTML and the text operators.
     Deterministic HTML is derived per doc (head/title, style+script
     blocks, a comment, entity-encoded text) and extracted; the entity
     cases pin the order contract (tags strip BEFORE entities decode, so
@@ -8090,9 +8090,7 @@ def q_order_price_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     CMS heavy-hitters and PQ codebook oracles. Accuracy (not just
     reproducibility) stays pinned by the one-sided error-bound tests
     in tests/test_rank.py (descent never overshoots the exact
-    quantile; rank shortfall ≤ the levels·e·n/width CMS budget) and
-    exact batch↔streaming cell parity by additivity
-    (streaming.stateful.streaming_rank_sketch_cells).
+    quantile; rank shortfall ≤ the levels·e·n/width CMS budget).
 
     Scale: constant levels×depth explode off ONE orders scan, map-side
     combined to ≤ groups·levels·depth·width cells; the driver holds

@@ -1,8 +1,9 @@
 """KPT positions/routes format layer — SURVEY §2.1 S1–S4 and §2.2 P1–P5.
 
 Readers for the reference's nested-JSONL envelopes, the full Socket.IO /
-CSV message-parse pipeline as pure column expressions, and the partitioned
-writers. Reference semantics (file:line cites per function):
+CSV message-parse pipeline as pure column expressions, the partitioned
+writers, and the ST2 routes refresher. Reference semantics (file:line
+cites per function):
 
 * positions envelope: one JSONL line per 5-s flush
   (``kpt/poller/writer.py:86-91``) — ``collected_by``, ISO ingest
@@ -24,15 +25,20 @@ filter — fully codegen'd, shuffle-free. The canonical store written by
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..config import (
     KYIV_BBOX_POLLER,
     POSITION_EVENT_NAMES,
+    ROUTES_POLL_INTERVAL_S,
     BoundingBox,
 )
 from ..functions.geo import in_bbox
+from ..operators.latest import latest_per_key
 from ..schemas import POSITION, POSITIONS_ENVELOPE, ROUTES_ENVELOPE
 
 #: DDL twin of schemas.POSITION for from_csv/from_json (P1, parsers.py:24-53).
@@ -115,16 +121,57 @@ def read_routes(
     ).select("poll_ts", "poll_number", "r.id", "r.type", "r.number")
     if not latest_only:
         return exploded
-    # max_by over a packed struct: single hash aggregate, no window shuffle.
-    return (
-        exploded.groupBy("id")
-        .agg(
-            F.max_by(
-                F.struct("type", "number"), F.struct("poll_ts", "poll_number")
-            ).alias("s")
-        )
-        .select("id", "s.type", "s.number")
+    return latest_per_key(exploded, ["id"], ["poll_ts", "poll_number"], ["type", "number"])
+
+
+def start_routes_refresher(
+    spark: SparkSession,
+    fetch_routes: Callable[[], list[dict]],
+    out_path: str,
+    checkpoint_path: str,
+    interval_s: int = ROUTES_POLL_INTERVAL_S,
+) -> StreamingQuery:
+    """ST2 (poller.py:136-189): poll the (injected) route-catalog fetcher
+    every ``interval_s`` and append a timestamped snapshot partition.
+
+    The rate source provides the trigger clock + exactly-once batch ids;
+    the fetcher is driver-side (a 179-row REST call — there is nothing to
+    distribute). Failures in one poll fail that micro-batch and retry on
+    the next trigger, mirroring the reference's skip-and-continue loop.
+    The refresher only ever appends — :func:`latest_routes_snapshot`
+    reduces last-write-wins on read, so there is no read-modify-write
+    race, and the append log doubles as a slowly-changing-dimension
+    history.
+    """
+    ticks = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
     )
+
+    def poll(batch_df, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        routes = fetch_routes()
+        if not routes:
+            return
+        snapshot = spark.createDataFrame(
+            [(int(batch_id), r["id"], r["type"], r["number"]) for r in routes],
+            "poll_number long, id long, type int, number string",
+        ).withColumn("poll_ts", F.current_timestamp())
+        snapshot.write.mode("append").parquet(out_path)
+
+    return (
+        ticks.writeStream.foreachBatch(poll)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(processingTime=f"{interval_s} seconds")
+        .start()
+    )
+
+
+def latest_routes_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    """Read side of the refresher's append log: the current catalog, with
+    the same last-write-wins rule as :func:`read_routes`."""
+    snaps = spark.read.parquet(path)
+    return latest_per_key(snaps, ["id"], ["poll_ts", "poll_number"], ["type", "number"])
 
 
 # ---------------------------------------------------------------------------

@@ -85,10 +85,10 @@ def start_positions_sink(
     trigger; its WAL-rename two-phase commit becomes the checkpoint.
     """
     # 100 TB state posture: stateful stages (the TTL dedup upstream of
-    # this sink, sessionization) run on RocksDB when the JVM has it —
-    # state bounded by local disk, not executor heap. Falls back to the
-    # default in-memory provider when absent. Read at query start, so
-    # setting it here covers the whole query's stateful operators.
+    # this sink) run on RocksDB when the JVM has it — state bounded by
+    # local disk, not executor heap. Falls back to the default in-memory
+    # provider when absent. Read at query start, so setting it here
+    # covers the whole query's stateful operators.
     from .state import configure_state_store
 
     configure_state_store(positions.sparkSession)

@@ -2,14 +2,14 @@
 
 The default HDFSBackedStateStoreProvider keeps every key in executor-heap
 maps: fine for the local suite, but a large stateful job (TTL dedup over
-billions of keys, per-user sessionization) wants the RocksDB provider —
-state lives off-heap/on-disk with incremental checkpointing, so state
-size is bounded by local disk, not heap.
+billions of keys) wants the RocksDB provider — state lives off-heap/on-disk
+with incremental checkpointing, so state size is bounded by local disk,
+not heap.
 
 Spark bundles RocksDB (rocksdbjni) since 3.2, but the native library may
 be absent on exotic platforms — so selection probes the JVM and falls
 back to the default provider rather than failing query start. Tests run
-the stateful ops under BOTH providers (tests/test_stateful_streaming.py).
+the ingest graph's TTL dedup under BOTH providers (tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -34,15 +34,11 @@ def rocksdb_available(spark: SparkSession) -> bool:
         return False
 
 
-def configure_state_store(spark: SparkSession, prefer_rocksdb: bool = True) -> str:
+def configure_state_store(spark: SparkSession) -> str:
     """Set the provider for streaming queries started after this call;
     returns the provider class chosen. The conf is read at query start,
     so calling this before ``writeStream.start()`` is sufficient —
     existing checkpoints keep their original provider format."""
-    provider = (
-        ROCKSDB_PROVIDER
-        if prefer_rocksdb and rocksdb_available(spark)
-        else HDFS_PROVIDER
-    )
+    provider = ROCKSDB_PROVIDER if rocksdb_available(spark) else HDFS_PROVIDER
     spark.conf.set(_PROVIDER_CONF, provider)
     return provider

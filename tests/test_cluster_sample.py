@@ -197,72 +197,6 @@ def test_operators_tolerate_empty_inputs(spark):
     assert interval_join(some_pts, no_ivs, ["k"], "ts", "lo", "hi").count() == 0
 
 
-def test_upsert_parquet_last_write_wins(spark, tmp_path):
-    """Maintenance MERGE: updated keys replaced, new keys appended,
-    untouched keys preserved; intra-batch dupes resolve by order_col."""
-    from pyspark.sql import functions as F
-
-    from kyiv_traffic_bigdata_spark.operators.maintenance import upsert_parquet
-
-    base = str(tmp_path / "dim")
-    out = str(tmp_path / "dim_v2")
-    spark.createDataFrame(
-        [(1, "one", 0), (2, "two", 0), (3, "three", 0)],
-        "id long, label string, ver long",
-    ).write.parquet(base)
-
-    updates = spark.createDataFrame(
-        [(2, "TWO-old", 1), (2, "TWO", 2), (4, "four", 1)],
-        "id long, label string, ver long",
-    )
-    n = upsert_parquet(spark, base, updates, ["id"], out, order_col="ver")
-    assert n == 4
-    got = {r.id: (r.label, r.ver) for r in spark.read.parquet(out).collect()}
-    assert got == {
-        1: ("one", 0),       # untouched
-        2: ("TWO", 2),       # replaced by max-ver update
-        3: ("three", 0),     # untouched
-        4: ("four", 1),      # appended
-    }
-    # old snapshot intact (write-then-swap)
-    assert spark.read.parquet(base).count() == 3
-
-
-def test_upsert_broadcasts_updates_not_base(spark, tmp_path):
-    from kyiv_traffic_bigdata_spark.operators.maintenance import upsert_parquet
-
-    base = str(tmp_path / "dim")
-    spark.range(1000).selectExpr("id", "cast(id as string) label").write.parquet(base)
-    updates = spark.range(5).selectExpr("id", "'x' label")
-    # plan check: construct the anti-join the operator builds and assert broadcast
-    from pyspark.sql import functions as F
-
-    b = spark.read.parquet(base)
-    anti = b.join(F.broadcast(updates.select("id")), ["id"], "left_anti")
-    plan = anti._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    n = upsert_parquet(spark, base, updates, ["id"], str(tmp_path / "v2"))
-    assert n == 1000
-
-
-def test_upsert_is_idempotent(spark, tmp_path):
-    """Applying the same update batch to the already-merged table changes
-    nothing (MERGE idempotence — the crash-retry contract)."""
-    from kyiv_traffic_bigdata_spark.operators.maintenance import upsert_parquet
-
-    base = str(tmp_path / "v0")
-    v1, v2 = str(tmp_path / "v1"), str(tmp_path / "v2")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, label string"
-    ).write.parquet(base)
-    updates = spark.createDataFrame([(2, "B"), (3, "c")], "id long, label string")
-    upsert_parquet(spark, base, updates, ["id"], v1)
-    upsert_parquet(spark, v1, updates, ["id"], v2)
-    rows1 = sorted(map(tuple, spark.read.parquet(v1).collect()))
-    rows2 = sorted(map(tuple, spark.read.parquet(v2).collect()))
-    assert rows1 == rows2 == [(1, "a"), (2, "B"), (3, "c")]
-
-
 def test_content_hash_splits_keep_duplicates_together(spark):
     """The split key is the CONTENT fingerprint, so byte-identical docs
     (even with different ids) always land in the same split — the

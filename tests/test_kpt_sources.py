@@ -12,15 +12,18 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from kyiv_traffic_bigdata_spark.sources.kpt import (
+    latest_routes_snapshot,
     parse_messages,
     read_position_envelopes,
     read_positions,
     read_routes,
+    start_routes_refresher,
     write_position_envelopes_jsonl,
     write_positions,
 )
@@ -152,3 +155,46 @@ def test_write_read_roundtrip(spark, tmp_path):
     reread = read_positions(spark, jl)
     assert reread.count() == 2
     assert {r.vehicle_id for r in reread.collect()} == {1, 3}
+
+
+def test_routes_refresher_appends_and_reduces(spark, tmp_path):
+    calls = []
+
+    def fake_fetch():
+        calls.append(1)
+        n = len(calls)
+        # catalog evolves: route 2's number changes on later polls
+        return [
+            {"id": 1, "type": 1, "number": "1"},
+            {"id": 2, "type": 3, "number": f"99-v{n}"},
+        ]
+
+    out, ckpt = str(tmp_path / "routes"), str(tmp_path / "ckpt")
+    q = start_routes_refresher(spark, fake_fetch, out, ckpt, interval_s=1)
+    try:
+        # wait on durable output (stop() may abort an in-flight poll write)
+        deadline = time.time() + 120
+        committed = 0
+        while time.time() < deadline and committed < 4:
+            time.sleep(0.5)
+            try:
+                committed = spark.read.parquet(out).count()
+            except Exception:
+                committed = 0
+    finally:
+        q.stop()
+    snaps = spark.read.parquet(out)
+    assert snaps.count() >= 4  # at least two full polls landed
+
+    latest = {r.id: r for r in latest_routes_snapshot(spark, out).collect()}
+    assert set(latest) == {1, 2}
+    last_poll = max(r.poll_number for r in snaps.select("poll_number").collect())
+    committed_calls = snaps.select("poll_number").distinct().count()
+    assert committed_calls >= 2
+    # last write wins: the surviving number is the one from the max poll
+    survivor_version = {
+        r.poll_number: r.number
+        for r in snaps.where(F.col("id") == 2).collect()
+    }[last_poll]
+    assert latest[2].number == survivor_version
+    assert latest[1].number == "1"

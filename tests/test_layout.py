@@ -1,114 +1,16 @@
-"""Z-order layout (operators/layout.py): Morton-key correctness and the
-pruning payoff — files written Z-ordered must have narrow per-file
-min/max ranges on BOTH dimensions (what parquet stats pruning keys on),
-unlike a one-column sort which only narrows its own column."""
+"""Storage-layer tests: date-partition pruning on the positions store,
+ORC/JSON/CSV round-trips, parquet schema evolution, and the
+dataset-version diff (operators/maintenance.py:snapshot_diff)."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
-
-from kyiv_traffic_bigdata_spark.operators.layout import (
-    interleave_bits,
-    write_zordered,
-    zorder_key,
-)
-
-
-def _morton_ref(a: int, b: int, bits: int = 21) -> int:
-    z = 0
-    for i in range(bits):
-        z |= ((a >> i) & 1) << (2 * i + 1)
-        z |= ((b >> i) & 1) << (2 * i)
-    return z
-
-
-def test_interleave_matches_reference_python(spark):
-    rows = [(0, 0), (1, 0), (0, 1), (5, 9), (2**21 - 1, 2**21 - 1), (123456, 654321)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    got = df.select("a", "b", interleave_bits(F.col("a"), F.col("b")).alias("z")).collect()
-    for r in got:
-        assert r.z == _morton_ref(r.a, r.b), (r.a, r.b)
-
-
-def test_zorder_key_is_single_small_aggregate_plus_map(spark):
-    df = spark.range(1000).select(
-        F.col("id").alias("x"), (F.col("id") * 7 % 1000).alias("y")
-    )
-    out = zorder_key(df, "x", "y")
-    assert out.columns == ["x", "y", "_z"]
-    # stats join must be a broadcast, not a shuffle join
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def _file_spans(path, col):
-    spans = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(
-                [md.schema.column(i).name for i in range(md.num_columns)].index(col)
-            ).statistics
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        spans.append(hi - lo)
-    return spans
-
-
-def test_zordered_files_narrow_on_both_dims(spark, tmp_path):
-    # points on a 100x100 grid in row-major id order: a plain write keeps
-    # x runs but scatters nothing; sorting by x alone leaves y spanning
-    # the full range in every file. Z-order must narrow BOTH.
-    n = 100
-    df = spark.range(n * n).select(
-        (F.col("id") % n).alias("x"), (F.col("id") / n).cast("long").alias("y")
-    )
-    zpath = str(tmp_path / "z")
-    xpath = str(tmp_path / "xsort")
-    write_zordered(df, zpath, "x", "y", n_files=16)
-    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(xpath)
-
-    zx, zy = _file_spans(zpath, "x"), _file_spans(zpath, "y")
-    sx, sy = _file_spans(xpath, "x"), _file_spans(xpath, "y")
-    full = n - 1
-    # single-column sort: x narrow but y useless — EVERY file spans ~all of y
-    assert min(sy) >= full * 0.9
-    # z-order: most files cover a compact rectangle on BOTH dims. A file
-    # whose range boundary straddles a top-level curve-quadrant split can
-    # span a full dim — the guarantee is distributional, so assert the
-    # mean span and the straddler fraction, not a per-file max.
-    def frac_narrow(spans):
-        return sum(1 for s in spans if s <= full * 0.6) / len(spans)
-
-    assert frac_narrow(zx) >= 0.75 and frac_narrow(zy) >= 0.75
-    assert sum(zx) / len(zx) <= full * 0.5
-    assert sum(zy) / len(zy) <= full * 0.5
-    # and the payoff vs the one-column sort: mean y-span collapses
-    assert sum(zy) / len(zy) < 0.5 * (sum(sy) / len(sy))
-
-
-def test_roundtrip_preserves_rows(spark, tmp_path):
-    df = spark.range(500).select(
-        F.col("id").alias("x"), (F.col("id") * 13 % 500).alias("y")
-    )
-    path = str(tmp_path / "z2")
-    write_zordered(df, path, "x", "y", n_files=4)
-    back = spark.read.parquet(path)
-    assert back.columns == ["x", "y"]
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_date_partitioned_store_prunes_partitions(spark, tmp_path):
     """ST10 payoff: a date filter on the partitioned positions store must
     reach the scan as a PartitionFilter (pruned directories, zero I/O for
     other days) — the layout contract the daily sink exists for."""
-    from pyspark.sql import functions as F
-
     from kyiv_traffic_bigdata_spark.plans.checks import physical_plan
 
     df = spark.createDataFrame(
@@ -129,7 +31,6 @@ def test_date_partitioned_store_prunes_partitions(spark, tmp_path):
     m = re.search(r"PartitionFilters: \[(.*?)\]", plan)
     assert m and "20260207" in m.group(1), plan
     assert back.count() == 1
-
 
 
 def test_columnar_and_text_format_roundtrips(spark, sf_dir, tmp_path):

@@ -163,51 +163,6 @@ def test_simhash_neardups_no_cartesian(plans):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Bucketing posture: two tables bucketed on the join key with equal
-    bucket counts must sort-merge-join with ZERO Exchange — the
-    write-once layout replaces the per-query shuffle of the fact table,
-    which is the whole point of bucketing at 100 TB. (Spark 4 inserts
-    local Sorts regardless: bucket sort metadata is only trusted behind
-    spark.sql.legacy.bucketedTableScan.outputOrdering — a local
-    spill-aware sort, not a network shuffle, so the claim that matters
-    is the Exchange count.)"""
-    from kyiv_traffic_bigdata_spark.operators.bucketing import (
-        colocated_join,
-        write_bucketed,
-    )
-    from kyiv_traffic_bigdata_spark.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    old_wh = spark.conf.get("spark.sql.warehouse.dir", None)
-    try:
-        write_bucketed(li, "t_li_bucketed", ["l_orderkey"], 8)
-        write_bucketed(orders, "t_ord_bucketed", ["o_orderkey"], 8)
-        # force the join to be key-distributed: broadcast would hide the
-        # Exchange question entirely
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = colocated_join(
-            spark, "t_li_bucketed", "t_ord_bucketed", "l_orderkey", "o_orderkey"
-        )
-        plan = physical_plan(j, "formatted")
-        # formatted mode mentions the node in the tree AND its detail
-        # block; "present, and no shuffle joins beyond it" is the claim
-        assert sort_merge_join_count(plan) >= 1
-        assert exchange_count(plan) == 0
-
-        # sanity: the join actually runs and matches the row count
-        assert j.count() == li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS t_li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS t_ord_bucketed")
-
-
 def test_interval_join_is_equi_join_not_nested_loop(plans):
     """The range join must block on (key, bin) — a BroadcastNestedLoopJoin
     here means the BETWEEN predicate reached the join unblocked, the

@@ -249,42 +249,6 @@ def test_polling_codec_roundtrip(packets):
     assert decode_polling_payload(encode_polling_payload(packets)) == packets
 
 
-@SETTINGS
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=2**21 - 1),
-            st.integers(min_value=0, max_value=2**21 - 1),
-        ),
-        min_size=1,
-        max_size=20,
-        unique=True,
-    )
-)
-def test_morton_interleave_is_injective_and_matches_reference(spark, pairs):
-    """interleave_bits is a bijection onto 42-bit Z-values: distinct
-    (a, b) pairs never collide, and the Spark expression agrees with a
-    pure-python reference de/interleave."""
-    from pyspark.sql import functions as F
-
-    from kyiv_traffic_bigdata_spark.operators.layout import interleave_bits
-
-    df = spark.createDataFrame(pairs, "a long, b long")
-    got = df.select("a", "b", interleave_bits(F.col("a"), F.col("b")).alias("z")).collect()
-
-    def deinterleave(z):
-        a = b = 0
-        for i in range(21):
-            a |= ((z >> (2 * i + 1)) & 1) << i
-            b |= ((z >> (2 * i)) & 1) << i
-        return a, b
-
-    zs = [r.z for r in got]
-    assert len(set(zs)) == len(pairs)
-    for r in got:
-        assert deinterleave(r.z) == (r.a, r.b)
-
-
 @given(
     st.lists(
         st.text(alphabet="ab ", min_size=0, max_size=40),
