@@ -629,8 +629,8 @@ def lsh_buckets(sig: DataFrame) -> DataFrame:
     """(doc_id, band, bh) bucket memberships from a wide MinHash
     signature frame — the banded-LSH index rows. Band hashes are md5
     over the band's row slice, so the SAME doc always lands in the same
-    buckets on any engine/run (portable-hash property the incremental
-    path depends on)."""
+    buckets on any engine/run (portable-hash property: a stored bucket
+    index stays valid across runs)."""
     band_cols = [
         F.md5(
             F.concat_ws(
@@ -651,53 +651,6 @@ def lsh_buckets(sig: DataFrame) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bh")
-
-
-def incremental_lsh_pairs(
-    docs: DataFrame,
-    new_ids: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Incremental near-dup detection for a corpus increment (the daily
-    crawl batch): verified pairs where AT LEAST ONE side is new —
-    exactly ``minhash_lsh_pairs(all)`` minus the old-vs-old pairs a
-    previous run already emitted.
-
-    The probe side of the bucket join is restricted to new docs BEFORE
-    the join, so per-bucket cost drops from |bucket|² to
-    |bucket| x |new ∩ bucket| — the increment's cost tracks the
-    increment, not the corpus. Signatures/buckets are deterministic
-    (portable hashes, prefix-stable seeds), so old-side buckets computed
-    today equal the ones a stored index would hold; a production run
-    passes the persisted (doc_id, band, bh) table instead of recomputing
-    (same join from then on).
-
-    ``new_ids``: a 1-column DataFrame of new ``doc_id``s.
-    """
-    idx = shingle_index(docs, id_col, text_col, ngram).transform(stage)
-    sig = minhash_signatures(docs, id_col, text_col, ngram, index=idx)
-    buckets = lsh_buckets(sig)
-    new_buckets = buckets.join(
-        new_ids.select(F.col(new_ids.columns[0]).alias("doc_id")), "doc_id"
-    )
-    # the full-corpus bucket side must never broadcast (see
-    # minhash_lsh_pairs); the new-batch probe side MAY be small, but a
-    # shuffle join costs it nothing extra — it shuffles either way
-    a = buckets.alias("a").hint("shuffle_hash")
-    b = new_buckets.alias("b")
-    candidates = (
-        a.join(b, ["band", "bh"])
-        .where(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    return jaccard_verify(candidates, idx, threshold)
 
 
 def minhash_lsh_pairs(

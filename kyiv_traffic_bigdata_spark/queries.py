@@ -2286,9 +2286,9 @@ def _sql_weather() -> str:
 
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup resolution: connected components over the MinHash-LSH pair
-    list (operators.cluster) — every paired doc labeled with the smallest
+    list (operators.graph) — every paired doc labeled with the smallest
     doc id in its duplicate group, the id a keep-one filter retains."""
-    from .operators.cluster import connected_components
+    from .operators.graph import connected_components
 
     pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
     return connected_components(pairs).select(
@@ -2333,7 +2333,7 @@ def q_neardup_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-independently AND makes the Spark frontier iteration equal a
     depth-capped recursive-CTE oracle exactly (near-dup families are
     shallow, so the cap loses nothing real)."""
-    from .operators.cluster import bfs_depths
+    from .operators.graph import bfs_depths
 
     pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
     return bfs_depths(
@@ -4693,19 +4693,18 @@ def q_doc_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale = the max of its parts, all individually bounded: the gopher
     gate is map-only, the pair/component stage is candidate-bounded
-    (see operators/dedup.py, operators/cluster.py), the sample predicate
+    (see operators/dedup.py, operators/graph.py), the sample predicate
     is map-only, and the final assembly is one left join on doc_id."""
-    from .operators.cluster import connected_components
+    from .operators.graph import connected_components
 
     d = _docs_with_tokens(spark, sf_dir)
     g = q_doc_gopher_quality(spark, sf_dir).select(
         "doc_id", F.col("keep").alias("gopher_ok")
     )
-    comp = connected_components(DD.minhash_lsh_pairs(d, threshold=0.2))
-    canon = comp.groupBy("component").agg(F.min("node").alias("_cid"))
-    canon_flag = comp.join(canon, "component").select(
+    # the component id IS the smallest node id of the component
+    canon_flag = connected_components(DD.minhash_lsh_pairs(d, threshold=0.2)).select(
         F.col("node").alias("doc_id"),
-        (F.col("node") == F.col("_cid")).alias("_canon"),
+        (F.col("node") == F.col("component")).alias("_canon"),
     )
     sampled = TX.portable_hash(F.col("doc_id").cast("string")) < F.lit(
         int(CURATION_SAMPLE_RATE * (1 << 32))
@@ -5031,12 +5030,12 @@ PAGERANK_ITERS = 3
 
 def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the MinHash-LSH near-duplicate graph
-    (operators.pagerank) — which documents sit at the center of big
+    (operators.graph) — which documents sit at the center of big
     duplication clusters (the doc a keep-the-canonical policy should
     prefer, and the one whose removal breaks the most duplicate paths).
     Fixed 3-sweep iteration, decimal-summed 6-decimal states, so the
     result hash-matches the unrolled SQL twin exactly."""
-    from .operators.pagerank import pagerank
+    from .operators.graph import pagerank
 
     pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
     pr = pagerank(pairs, n_iter=PAGERANK_ITERS)
@@ -5050,8 +5049,8 @@ def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_pagerank_chain(pairs_ctes: str, out_col: str) -> str:
     """Unrolled PageRank CTE chain over any ``pairs(id_a, id_b)`` CTE
     block — shared by the near-dup-graph and token-graph (TextRank)
-    oracles so both stay bit-faithful to operators.pagerank."""
-    from .operators.pagerank import DAMPING
+    oracles so both stay bit-faithful to operators.graph.pagerank."""
+    from .operators.graph import DAMPING
 
     d = repr(DAMPING)
     tele = repr(1.0 - DAMPING)  # the Python-computed double, verbatim
@@ -5530,7 +5529,7 @@ def q_doc_neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the paired set corpus-scale, where a forced broadcast OOMs
     and the co-keyed shuffle AQE falls back to is the only correct
     plan."""
-    from .operators.cluster import connected_components
+    from .operators.graph import connected_components
 
     docs = _docs_with_tokens(spark, sf_dir)
     pairs = DD.minhash_lsh_pairs(docs, threshold=0.2)
@@ -7583,53 +7582,16 @@ def q_neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_components (connectivity) and neardup_triangles (local
     clustering) with the classic global-density decomposition.
 
-    Fixed ``KCORE_ROUNDS`` peel rounds, each removing nodes of degree
-    < ``KCORE_K`` and their edges — deterministic and SQL-unrollable
-    (the doc_quality_classifier discipline); on bounded-diameter dup
-    graphs the peel converges well inside the budget, and both engines
-    compute the identical fixed-depth result regardless.
-
-    Scale: every round is one count aggregate over the CURRENT edge
-    list plus two semi-join-shaped filters — all on the LSH-verified
-    pair list, never the corpus; edges shrink monotonically and each
-    round's frame is staged so the loop's plan stays flat."""
-    from .operators.staging import stage
+    At most ``KCORE_ROUNDS`` peel rounds (operators.graph.k_core), each
+    removing nodes of degree < ``KCORE_K`` and their edges — the SQL
+    twin unrolls all of them; the Spark loop stops at the fixed point,
+    where the remaining layers are no-ops. All on the LSH-verified pair
+    list, never the corpus."""
+    from .operators.graph import k_core
 
     pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
-    edges = pairs.select(
-        F.col("id_a").alias("lo"), F.col("id_b").alias("hi")
-    ).transform(stage)
-    # Early exit on a stable edge count (r12): the peel only ever
-    # REMOVES edges, so an unchanged count is a fixed point — every
-    # remaining round is the identity and skipping it cannot change
-    # the result (the SQL twin still unrolls all KCORE_ROUNDS layers;
-    # its extra layers are no-ops on the converged edge set). The
-    # count reads the just-staged checkpoint blocks — no join, no
-    # recompute — and typically saves 1-2 full peel rounds.
-    prev_n = edges.count()
-    for _ in range(KCORE_ROUNDS):
-        deg = (
-            edges.select(F.col("lo").alias("v"))
-            .unionAll(edges.select(F.col("hi").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-        )
-        keep = deg.where(F.col("_deg") >= KCORE_K).select("v")
-        edges = (
-            edges.join(keep.withColumnRenamed("v", "lo"), "lo")
-            .join(keep.withColumnRenamed("v", "hi"), "hi")
-            .select("lo", "hi")
-            .transform(stage)
-        )
-        n = edges.count()
-        if n == prev_n:
-            break
-        prev_n = n
-    return (
-        edges.select(F.col("lo").alias("doc_id"))
-        .unionAll(edges.select(F.col("hi").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
+    return k_core(pairs, KCORE_K, KCORE_ROUNDS).select(
+        F.col("node").alias("doc_id"), F.col("deg").alias("core_deg")
     )
 
 
@@ -8308,39 +8270,13 @@ def q_neardup_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense template families separate even inside one connected
     component. Fixed ``LPA_ROUNDS`` rounds with a deterministic
     tie-break make both engines bit-equal (the kcore/GD-classifier
-    discipline).
-
-    Scale: each round is one equi-join (edges × labels) + one count
-    aggregate + one argmax — the argmax is a min-of-struct aggregate,
-    NOT a per-node window; labels are staged per round so the plan
-    stays flat. Edge list = the LSH-verified pairs, never the corpus."""
-    from .operators.staging import stage
+    discipline); operators.graph.label_propagation holds the rounds.
+    Edge list = the LSH-verified pairs, never the corpus."""
+    from .operators.graph import label_propagation
 
     pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
-    und = pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
-    edges = und.unionAll(
-        und.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).transform(stage)
-    labels = edges.select(F.col("s").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
-    )
-    for _ in range(LPA_ROUNDS):
-        nbr = edges.join(
-            labels.withColumnRenamed("v", "s"), "s"
-        ).select(F.col("d").alias("v"), "label")
-        cnt = nbr.groupBy("v", "label").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
-            cnt.groupBy("v")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("label").alias("lb"))
-                ).alias("_m")
-            )
-            .select("v", F.col("_m.lb").alias("label"))
-            .transform(stage)
-        )
-    return labels.select(
-        F.col("v").alias("doc_id"), F.col("label").cast("long").alias("community")
+    return label_propagation(pairs, LPA_ROUNDS).select(
+        F.col("node").alias("doc_id"), F.col("label").cast("long").alias("community")
     )
 
 
@@ -8537,9 +8473,9 @@ def q_token_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the edge list is the bounded co-occurrence table
     (_token_pair_counts — df-floored, vocab-sized, never corpus-sized);
     each PageRank sweep is one equi-join + one decimal-summed aggregate
-    (operators.pagerank discipline), and the oracle unrolls the same
+    (operators.graph.pagerank discipline), and the oracle unrolls the same
     fixed sweeps via the shared _sql_pagerank_chain."""
-    from .operators.pagerank import pagerank
+    from .operators.graph import pagerank
 
     edges = _token_pair_counts(spark, sf_dir).select(
         F.col("tok_a").alias("id_a"), F.col("tok_b").alias("id_b")

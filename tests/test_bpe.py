@@ -165,7 +165,7 @@ def test_bpe_sample_training_applies_corpus_wide(spark):
 def test_staging_reliable_mode(spark, tmp_path):
     from kyiv_traffic_bigdata_spark.operators import staging
     from kyiv_traffic_bigdata_spark.operators.bpe import bpe_merges
-    from kyiv_traffic_bigdata_spark.operators.cluster import connected_components
+    from kyiv_traffic_bigdata_spark.operators.graph import connected_components
 
     ckpt = tmp_path / "ckpt"
     spark.sparkContext.setCheckpointDir(str(ckpt))

@@ -1,15 +1,12 @@
 """Unit tests for dedup resolution (connected components) and
-deterministic sampling (operators/cluster.py, operators/sample.py)."""
+deterministic sampling (operators/graph.py, operators/sample.py)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from kyiv_traffic_bigdata_spark.operators.cluster import (
-    connected_components,
-    duplicate_groups,
-)
+from kyiv_traffic_bigdata_spark.operators.graph import connected_components
 from kyiv_traffic_bigdata_spark.operators.sample import (
     hash_sample,
     sample_hash,
@@ -39,15 +36,6 @@ def test_components_raises_without_convergence(spark):
     e = _edges(spark, [(i, i + 1) for i in range(6)])
     with pytest.raises(RuntimeError):
         connected_components(e, max_iter=2)
-
-
-def test_duplicate_groups_summary(spark):
-    e = _edges(spark, [(5, 3), (3, 8), (20, 21)])
-    got = {
-        r.component: (r.n_members, r.canonical_id)
-        for r in duplicate_groups(e).collect()
-    }
-    assert got == {3: (3, 3), 20: (2, 20)}
 
 
 def test_stratified_sample_exact_counts_and_determinism(spark):
@@ -87,61 +75,6 @@ def test_sample_hash_matches_portable_recipe(spark):
     assert got == int(hashlib.md5(b"42").hexdigest()[:8], 16)
 
 
-def test_compact_parquet_reduces_file_count_losslessly(spark, tmp_path):
-    """Maintenance: a fragmented directory (50 files) compacts to the
-    planned count with identical content."""
-    import glob
-
-    from kyiv_traffic_bigdata_spark.operators.maintenance import (
-        compact_parquet,
-        plan_compaction,
-    )
-
-    src = str(tmp_path / "frag")
-    out = str(tmp_path / "compacted")
-    df = spark.range(0, 5000).withColumnRenamed("id", "k")
-    df.repartition(50).write.parquet(src)
-    assert len(glob.glob(src + "/part-*")) == 50
-
-    n = compact_parquet(spark, src, out, target_mb=256)
-    assert n == 1  # tiny table -> one target-sized file
-    assert len(glob.glob(out + "/part-*")) == 1
-    got = spark.read.parquet(out)
-    assert got.count() == 5000
-    assert got.join(df, "k", "left_anti").count() == 0
-
-    # sizing math: 1 GiB at 256 MiB target -> 4 files
-    assert plan_compaction(1 << 30, 256) == 4
-    assert plan_compaction(0, 256) == 1
-
-
-def test_compact_parquet_partitioned_keeps_few_files_per_partition(spark, tmp_path):
-    """partition_by compaction must not round-robin rows across all
-    tasks (that would emit tasks×partitions small files)."""
-    import glob
-
-    from kyiv_traffic_bigdata_spark.operators.maintenance import compact_parquet
-
-    src = str(tmp_path / "frag_p")
-    out = str(tmp_path / "compact_p")
-    df = (
-        spark.range(0, 4000)
-        .withColumnRenamed("id", "k")
-        .withColumn("dt", (F.col("k") % 4).cast("string"))
-    )
-    df.repartition(20).write.partitionBy("dt").parquet(src)
-    # fragmented: ~20 files per dt directory
-    assert len(glob.glob(src + "/dt=0/part-*")) > 5
-
-    compact_parquet(spark, src, out, target_mb=256, partition_by=["dt"])
-    for d in range(4):
-        files = glob.glob(out + f"/dt={d}/part-*")
-        assert len(files) == 1, f"dt={d} has {len(files)} files"
-    got = spark.read.parquet(out)
-    assert got.count() == 4000
-    assert got.select("k").join(df.select("k"), "k", "left_anti").count() == 0
-
-
 def test_weighted_hash_sample_rates_and_nesting(spark):
     """Per-stratum keep-rates land near target, unknown strata use the
     default, and raising a rate yields a superset (threshold nesting)."""
@@ -166,7 +99,7 @@ def test_operators_tolerate_empty_inputs(spark):
     """Empty partitions/tables are the steady state of incremental runs
     (a new hour with no data) — pair operators, components, sampling,
     and the interval join must return empty, not crash."""
-    from kyiv_traffic_bigdata_spark.operators.cluster import connected_components
+    from kyiv_traffic_bigdata_spark.operators.graph import connected_components
     from kyiv_traffic_bigdata_spark.operators.dedup import (
         minhash_lsh_pairs,
         ngram_jaccard_pairs,

@@ -153,54 +153,6 @@ def test_jaccard_cap_bounds_candidate_volume(spark):
     assert n_cand < 100
 
 
-def test_incremental_lsh_equals_full_minus_old_old(spark):
-    """incremental_lsh_pairs(all, new) must equal the full recompute
-    restricted to pairs touching a new doc — and emit NO old-old pair."""
-    from kyiv_traffic_bigdata_spark.operators.dedup import (
-        incremental_lsh_pairs,
-        minhash_lsh_pairs,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = []
-    for i in range(8):  # old corpus: 4 dup pairs (2k, 2k+1 identical)
-        rows.append((i, base + f" oldtail{i // 2}"))
-    # new batch: 100 dupes old doc 0; 101/102 dupe each other; 103 unique
-    rows += [
-        (100, base + " oldtail0"),
-        (101, base + " newtail"),
-        (102, base + " newtail"),
-        (103, "totally different words nothing shared here at all ok"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    new = spark.createDataFrame([(i,) for i in (100, 101, 102, 103)], "doc_id long")
-
-    full = {
-        (r.id_a, r.id_b) for r in minhash_lsh_pairs(d, threshold=0.5).collect()
-    }
-    inc = {
-        (r.id_a, r.id_b)
-        for r in incremental_lsh_pairs(d, new, threshold=0.5).collect()
-    }
-    new_ids = {100, 101, 102, 103}
-    assert inc == {p for p in full if p[0] in new_ids or p[1] in new_ids}
-    assert all(p[0] in new_ids or p[1] in new_ids for p in inc)
-    # the expected semantic pairs actually surfaced
-    assert (0, 100) in inc or (1, 100) in inc
-    assert (101, 102) in inc
-
-
-def test_incremental_lsh_empty_new_batch_is_empty(spark):
-    from kyiv_traffic_bigdata_spark.operators.dedup import incremental_lsh_pairs
-
-    d = spark.createDataFrame(
-        [(0, "alpha beta gamma delta epsilon"), (1, "alpha beta gamma delta epsilon")],
-        "doc_id long, text string",
-    )
-    empty = spark.createDataFrame([], "doc_id long")
-    assert incremental_lsh_pairs(d, empty).count() == 0
-
-
 def test_repeated_spans_exact_boundaries(spark):
     """Two docs share one 60-char run; the merged span must cover
     exactly that run in both docs (1-based inclusive, ascii-normalized

@@ -1,4 +1,4 @@
-"""PageRank operator tests (operators/pagerank.py): reference parity,
+"""PageRank operator tests (operators/graph.py:pagerank): reference parity,
 partition invariance, mass conservation, and the fixed-k contract."""
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ def _ref_pagerank(edges, n_iter=3, damping=0.85):
 
 
 def test_pagerank_matches_reference_and_is_partition_invariant(spark):
-    from kyiv_traffic_bigdata_spark.operators.pagerank import pagerank
+    from kyiv_traffic_bigdata_spark.operators.graph import pagerank
 
     # two triangles bridged by one edge + a pendant: asymmetric degrees
     edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (6, 7)]
@@ -48,7 +48,7 @@ def test_pagerank_matches_reference_and_is_partition_invariant(spark):
 
 
 def test_pagerank_empty_edges(spark):
-    from kyiv_traffic_bigdata_spark.operators.pagerank import pagerank
+    from kyiv_traffic_bigdata_spark.operators.graph import pagerank
 
     df = spark.createDataFrame([], "id_a long, id_b long")
     assert pagerank(df, n_iter=2).collect() == []

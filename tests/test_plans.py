@@ -590,6 +590,38 @@ def test_kcore_peel_equi_joins_only(plans):
     assert len(re.findall(r"\(\d+\) Window", plan)) == 0
 
 
+def test_fixpoint_runs_one_staging_job_and_one_scan_per_round(spark):
+    """The graph loops' round budget: fixpoint stages each round once and
+    checks convergence with one scan of the staged blocks — 2 jobs per
+    round. A map-only one-partition step that settles after ``r`` rounds
+    therefore costs exactly 2r jobs; an extra count() or re-join per
+    round breaks this."""
+    from kyiv_traffic_bigdata_spark.operators.graph import fixpoint
+
+    r = 3
+
+    def step(s):
+        return s.select(
+            "id",
+            F.least(F.col("v") + 1, F.lit(r - 1)).alias("v"),
+            (F.col("v") < r - 1).alias("_chg"),
+        )
+
+    start = spark.range(0, 16, numPartitions=1).withColumn("v", F.lit(0).cast("long"))
+    sc = spark.sparkContext
+    group = "fixpoint-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        out, converged = fixpoint(start, step, max_rounds=10)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert converged
+    assert jobs == 2 * r
+    assert out.columns == ["id", "v"]
+    assert {row.v for row in out.collect()} == {r - 1}
+
+
 def test_prefix_filter_ranking_window_per_doc_no_cartesian(
     spark, sf_dir, monkeypatch
 ):

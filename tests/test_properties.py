@@ -11,8 +11,9 @@ from __future__ import annotations
 
 import base64
 import re
+from collections import Counter
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -173,7 +174,7 @@ def test_winnowing_guarantee_shared_substring_shares_fingerprint(spark, cases):
 def test_connected_components_match_union_find(spark, edges):
     """Distributed min-label propagation must agree with a sequential
     union-find on arbitrary graphs (self-loops and duplicates included)."""
-    from kyiv_traffic_bigdata_spark.operators.cluster import connected_components
+    from kyiv_traffic_bigdata_spark.operators.graph import connected_components
 
     parent: dict[int, int] = {}
 
@@ -195,6 +196,83 @@ def test_connected_components_match_union_find(spark, edges):
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == expect
+
+
+#: Random small graphs (self-loops and duplicates included) plus long
+#: paths, whose diameter keeps the graph loops running for many rounds.
+small_graphs = st.one_of(
+    st.lists(st.tuples(st.integers(0, 15), st.integers(0, 15)), min_size=1, max_size=30),
+    st.integers(2, 14).map(lambda n: [(i, i + 1) for i in range(n - 1)]),
+)
+
+
+def _adjacency(edges):
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    return adj
+
+
+@SETTINGS
+@given(small_graphs, st.integers(2, 9), st.integers(1, 5))
+def test_bfs_depths_match_python_bfs(spark, edges, seed_mod, max_depth):
+    """Multi-source BFS must equal a depth-capped Python BFS: an empty
+    frontier ends the loop early, and the cap cuts a long path off."""
+    from kyiv_traffic_bigdata_spark.operators.graph import bfs_depths
+
+    adj = _adjacency(edges)
+    expect = {v: 0 for v in adj if v % seed_mod == 0}
+    frontier = set(expect)
+    for d in range(1, max_depth + 1):
+        frontier = {w for v in frontier for w in adj[v]} - expect.keys()
+        expect.update((w, d) for w in frontier)
+
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {
+        r.node: r.depth
+        for r in bfs_depths(df, seed_mod=seed_mod, max_depth=max_depth).collect()
+    }
+    assert got == expect
+
+
+@SETTINGS
+@given(small_graphs, st.integers(1, 3), st.integers(1, 5))
+@example(edges=[(i, i + 1) for i in range(11)], k=2, rounds=4)
+def test_k_core_matches_python_peel(spark, edges, k, rounds):
+    """k_core must equal exactly ``rounds`` Python peel rounds, including
+    a peel the round cap cuts short: the 12-node path needs 6 rounds."""
+    from kyiv_traffic_bigdata_spark.operators.graph import k_core
+
+    kept = list(edges)
+    for _ in range(rounds):
+        deg = Counter(v for e in kept for v in e)
+        kept = [(a, b) for a, b in kept if deg[a] >= k and deg[b] >= k]
+    expect = dict(Counter(v for e in kept for v in e))
+
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r.node: r.deg for r in k_core(df, k, rounds).collect()}
+    assert got == expect
+
+
+@SETTINGS
+@given(small_graphs, st.integers(1, 5))
+def test_label_propagation_matches_python_lpa(spark, edges, rounds):
+    """Synchronous LPA must equal a Python reference: each round every
+    node takes its neighbors' most frequent label, ties to the smallest."""
+    from kyiv_traffic_bigdata_spark.operators.graph import label_propagation
+
+    adj = _adjacency(edges)
+    expect = {v: v for v in adj}
+    for _ in range(rounds):
+        expect = {
+            v: min(c, key=lambda lb: (-c[lb], lb))
+            for v, c in ((v, Counter(expect[w] for w in adj[v])) for v in adj)
+        }
+
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r.node: r.label for r in label_propagation(df, rounds).collect()}
     assert got == expect
 
 
