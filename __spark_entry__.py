@@ -44,8 +44,6 @@ def oracle_sql() -> dict[str, str]:
     since r10: _sql_rank_sketch replicates Spark's XxHash64 in
     staged-CTE HUGEINT SQL, so its registered shape is deterministic
     end-to-end like the PQ codebooks. approx_event_stats joined the
-    oracled set in r11 by re-basing on the portable md5-register HLL —
-    the native approx_count_distinct path survives as
-    operators.aggregates.approx_grouped_stats, pinned by
-    tests/test_approx.py)."""
+    oracled set in r11 by re-basing on the portable md5-register HLL,
+    its accuracy pinned by tests/test_approx.py)."""
     return build_oracles()

@@ -19,8 +19,7 @@ Layout
                weather) and streaming sources (file replay, Socket.IO).
 ``streaming``  Structured Streaming ingest graphs (parse -> filter -> dedup
                -> partitioned sink with checkpoint recovery).
-``plans``      End-to-end analytics pipelines (the reference's
-               ``kpt/visualize.py`` workload, Spark-first).
+``plans``      Physical-plan capture (``explain()`` text as a string).
 """
 
 __version__ = "0.1.0"

@@ -57,19 +57,14 @@ def cmd_ingest(args: argparse.Namespace) -> int:
 # ---------------------------------------------------------------------------
 
 def cmd_poll(args: argparse.Namespace) -> int:  # pragma: no cover - network
-    from .streaming.transport import LiveSocketIOClient, PollingTransport
+    from .streaming.transport import (
+        LiveSocketIOClient,
+        PollingTransport,
+        TranscriptSink,
+    )
 
-    out = open(args.out, "a", encoding="utf-8")
-
-    def sink(frame: str) -> None:
-        out.write(frame.rstrip("\n") + "\n")
-        out.flush()
-
-    client = LiveSocketIOClient(PollingTransport(args.url), sink)
-    try:
-        client.run(max_frames=args.max_frames, max_connects=args.max_connects)
-    finally:
-        out.close()
+    client = LiveSocketIOClient(PollingTransport(args.url), TranscriptSink(args.out))
+    client.run(max_frames=args.max_frames, max_connects=args.max_connects)
     print(json.dumps(client.stats))
     return 0
 

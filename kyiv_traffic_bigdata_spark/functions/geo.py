@@ -96,16 +96,3 @@ def speed_bucket(speed: Column) -> Column:
     )
 
 
-def geohash_cell(lat: Column, lon: Column, cell_deg: float = 0.01) -> Column:
-    """Integer grid cell id for geo-bucketed joins.
-
-    The scale path for proximity joins: bucket both sides by cell, equi-join
-    on the cell (plus the 8 neighbors on the probe side when radius spans
-    cells), then apply the exact haversine predicate. Turns an O(n*m) cross
-    range-join into a co-partitioned equi-join.
-    """
-    ncols = int(round(360.0 / cell_deg))
-    return (
-        F.floor((lat + 90.0) / F.lit(cell_deg)) * F.lit(ncols)
-        + F.floor((lon + 180.0) / F.lit(cell_deg))
-    ).cast("long")

@@ -103,31 +103,11 @@ def word_ngrams(tok: Column, n: int) -> Column:
     )
 
 
-def char_ngrams(col: Column, n: int) -> Column:
-    """Distinct character n-grams of normalized text (for SimHash features)."""
-    norm = normalize_text(col)
-    return F.when(
-        F.length(norm) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length(norm) - (n - 1)),
-                lambda i: norm.substr(i, F.lit(n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def alpha_ratio(col: Column) -> Column:
     """Share of [A-Za-z] characters; 0.0 for empty text."""
     n = F.length(col)
     a = F.length(F.regexp_replace(col, "[^A-Za-z]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(a / n)
-
-
-def digit_ratio(col: Column) -> Column:
-    n = F.length(col)
-    d = F.length(F.regexp_replace(col, "[^0-9]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(d / n)
 
 
 def punct_ratio(col: Column) -> Column:

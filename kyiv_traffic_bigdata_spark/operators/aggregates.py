@@ -11,13 +11,13 @@ which is associative, so partial aggregation (map-side combine) on a
 1000-executor cluster produces bit-identical results to a single-threaded
 oracle. Columns that are already exact (ints, decimals) aggregate natively.
 
-Reference parity: these back SURVEY §2.5 A2 (global speed stats), A3
-(per-route stats), A7 (region counts).
+The query bodies and operators/windows.py use these for their A2/A3
+(SURVEY §2.5) style summaries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Fixed-point type used for stable double aggregation. 18 integer digits
@@ -46,55 +46,3 @@ def stable_avg(col: Column | str) -> Column:
     return (F.sum(dec(c)).cast("double") / F.count(c)).alias("stable_avg")
 
 
-def grouped_stats(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    distinct_col: str | None = None,
-    min_samples: int | None = None,
-) -> DataFrame:
-    """SURVEY A3: per-group mean/min/max/count (+ distinct entities).
-
-    ``count >= min_samples`` is the reference's F7 HAVING gate
-    (kpt/visualize.py:152-156). At scale this is one hash-aggregate with
-    map-side partials; countDistinct adds an expand — callers that can
-    tolerate error should use approx_grouped_stats instead.
-    """
-    aggs = [
-        stable_avg(value_col).alias("avg_value"),
-        F.min(value_col).alias("min_value"),
-        F.max(value_col).alias("max_value"),
-        F.count(value_col).alias("samples"),
-    ]
-    if distinct_col:
-        aggs.append(F.countDistinct(distinct_col).alias("entities"))
-    out = df.groupBy(*group_cols).agg(*aggs)
-    if min_samples:
-        out = out.where(F.col("samples") >= min_samples)
-    return out
-
-
-def approx_grouped_stats(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    distinct_col: str,
-    rsd: float = 0.01,
-) -> DataFrame:
-    """100 TB variant of grouped_stats: HLL++ distinct counts, no expand."""
-    return df.groupBy(*group_cols).agg(
-        stable_avg(value_col).alias("avg_value"),
-        F.count(value_col).alias("samples"),
-        F.approx_count_distinct(distinct_col, rsd).alias("entities_approx"),
-    )
-
-
-def global_stats(df: DataFrame, value_col: str, distinct_col: str) -> DataFrame:
-    """SURVEY A2: one-row global summary (count, entities, avg/min/max)."""
-    return df.agg(
-        F.count(F.lit(1)).alias("samples"),
-        F.countDistinct(distinct_col).alias("entities"),
-        stable_avg(value_col).alias("avg_value"),
-        F.min(value_col).alias("min_value"),
-        F.max(value_col).alias("max_value"),
-    )

@@ -1,58 +1,10 @@
-"""Greedy BPE merge training over the corpus — the tokenizer-TRAINING
-workload next to the counting/budgeting queries (queries.doc_subword_stats,
-doc_token_pair_stats).
-
-Classic byte-pair-encoding construction (Sennrich et al., 2016), Spark-
-shaped and **incremental**: the corpus-wide adjacent-pair count is built
-ONCE; each merge round then
-
-1. takes the top pair from the maintained count table (a TakeOrdered-1
-   over a table bounded by the number of distinct adjacent pairs — no
-   corpus scan);
-2. computes the count *delta* from the affected docs only (docs that
-   actually contain the adjacent pair): old-pair counts negative, new-
-   pair counts positive, folded into the table with one bounded shuffle
-   — the fastBPE / HF-tokenizers bookkeeping expressed relationally;
-3. rewrites the token array only where the pair occurs (a `when(pred,
-   fold)` guard — unaffected rows copy through without executing the
-   merge fold).
-
-The driver holds only the merge table — ``n_merges`` rows of metadata —
-never token data. Per-round corpus-wide work is one predicate map-scan
-(finding affected docs) instead of round 3's full explode→shuffle→agg +
-full-corpus rewrite + full-corpus checkpoint; everything shuffled per
-round is bounded by the affected-doc mass and the distinct-pair table.
-
-Scale notes:
-
-* the token frame is lineage-truncated every ``checkpoint_every`` rounds
-  (operators.staging — `local` or `reliable`): the guarded merge folds
-  stack as nested expressions between checkpoints, and unbounded
-  stacking re-creates the InferFilters/staging traps documented in
-  operators/dedup.py. The count table is tiny and staged every round.
-* ties break lexicographically on (a, b), so the merge sequence is a
-  pure function of the corpus — reruns and engines agree;
-* the left-to-right non-overlapping merge rule falls out of the fold:
-  once a pair merges, its product cannot immediately re-merge with the
-  consumed right element (``"a a a"`` at merge (a,a) → ``["aa","a"]``,
-  the standard BPE behavior). The delta in step 2 is computed by
-  re-counting affected docs before/after the fold, so overlap runs and
-  a == b cases are exact by construction, not by positional reasoning;
-* for very large vocabularies a deterministic hash-sample of the corpus
-  (``sample_rate``) trains the merge table on a statistically standard
-  subset while :func:`merge_pair` still applies corpus-wide — the
-  documented alternative when even one map-scan per merge is too much.
-"""
+"""Adjacent token-pair counts — the statistic one greedy BPE merge round
+(Sennrich et al., 2016) consumes, used by queries.doc_token_pair_stats."""
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.text import portable_hash, subword_tokens
-from .staging import stage
 
 
 def adjacent_pair_counts(tokens_df: DataFrame, tokens_col: str = "t") -> DataFrame:
@@ -67,189 +19,3 @@ def adjacent_pair_counts(tokens_df: DataFrame, tokens_col: str = "t") -> DataFra
         F.element_at("_t", F.col("_i") + 1).alias("b"),
     )
     return pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n"))
-
-
-def has_adjacent_pair(tokens: Column, a: str, b: str) -> Column:
-    """True iff the token array contains (a, b) at adjacent positions.
-    Cheap array_contains pre-gate short-circuits the positional scan for
-    the (common) rows that lack one of the tokens entirely."""
-    la, lb = F.lit(a), F.lit(b)
-    # Totality must not depend on Catalyst preserving the size>=2
-    # conjunct's evaluation order: clamp the sequence bound to ≥1 (an
-    # unclamped F.sequence(1, size-1) on 0/1-token arrays is DESCENDING
-    # through 0, and index 0 always throws INVALID_INDEX_OF_ZERO), and
-    # use try_element_at, since under ANSI mode (Spark 4 default) plain
-    # element_at throws on the now-possible out-of-range index instead
-    # of returning null.
-    positional = F.exists(
-        F.sequence(F.lit(1), F.greatest(F.size(tokens) - 1, F.lit(1))),
-        lambda i: (F.try_element_at(tokens, i) == la)
-        & (F.try_element_at(tokens, i + 1) == lb),
-    )
-    return (
-        (F.size(tokens) >= 2)
-        & F.array_contains(tokens, la)
-        & F.array_contains(tokens, lb)
-        & positional
-    )
-
-
-def merge_pair(tokens: Column, a: str, b: str) -> Column:
-    """Map-only rewrite of a token array with adjacent (a, b) merged
-    left-to-right (non-overlapping, the BPE rule)."""
-    la, lb = F.lit(a), F.lit(b)
-    return F.aggregate(
-        tokens,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == la)
-            & (x == lb),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.concat(la, lb)),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def _count_delta(affected: DataFrame, a: str, b: str) -> DataFrame:
-    """Pair-count delta contributed by merging (a, b) in the affected
-    docs: their old adjacent pairs negated plus their new ones."""
-    old_neg = adjacent_pair_counts(affected).select(
-        "a", "b", (-F.col("n")).cast("long").alias("n")
-    )
-    rewritten = affected.select(merge_pair(F.col("t"), a, b).alias("t"))
-    return old_neg.unionByName(adjacent_pair_counts(rewritten))
-
-
-def bpe_merges(
-    docs: DataFrame,
-    n_merges: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_every: int = 4,
-    sample_rate: float | None = None,
-) -> tuple[list[tuple[str, str, int]], DataFrame]:
-    """Train ``n_merges`` greedy BPE merges over the corpus.
-
-    Returns ``(merges, tokens_df)``: the ordered merge table
-    [(a, b, count), ...] and the final tokenized corpus
-    (id, t:array<string>) with all merges applied. Stops early when no
-    adjacent pair repeats (every count ≤ 1 carries no signal).
-
-    ``sample_rate`` (0 < r ≤ 1): train the merge table on a
-    deterministic content-hash sample of the corpus (merge COUNTS then
-    reflect the sample, and the early-stop threshold applies to sample
-    counts). The returned tokens_df still covers the full corpus with
-    the learned merges applied.
-    """
-    t = docs.select(
-        F.col(id_col).alias("id"), subword_tokens(F.col(text_col)).alias("t")
-    )
-    train = t
-    if sample_rate is not None and sample_rate < 1.0:
-        gate = F.lit(int(sample_rate * (1 << 32)))
-        train = t.where(portable_hash(F.col("id").cast("string")) < gate)
-    train = stage(train)
-    counts = stage(adjacent_pair_counts(train))
-
-    merges: list[tuple[str, str, int]] = []
-    # when training on a sample, the learned merges are also applied to
-    # the full corpus so callers still get corpus-wide tokens back
-    full = None if sample_rate is None or sample_rate >= 1.0 else stage(t)
-    rounds_since_ckpt = 0
-    for _ in range(n_merges):
-        top = (
-            counts.orderBy(F.col("n").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0].n < 2:
-            break
-        a, b, n = top[0].a, top[0].b, int(top[0].n)
-        merges.append((a, b, n))
-
-        pred = has_adjacent_pair(F.col("t"), a, b)
-        delta = _count_delta(train.where(pred), a, b)
-        counts = stage(
-            counts.unionByName(delta)
-            .groupBy("a", "b")
-            .agg(F.sum("n").cast("long").alias("n"))
-            .where(F.col("n") > 0)
-        )
-
-        guarded = F.when(pred, merge_pair(F.col("t"), a, b)).otherwise(F.col("t"))
-        train = train.select("id", guarded.alias("t"))
-        if full is not None:
-            full = full.select("id", guarded.alias("t"))
-        rounds_since_ckpt += 1
-        if rounds_since_ckpt >= checkpoint_every:
-            train = stage(train)
-            if full is not None:
-                full = stage(full)
-            rounds_since_ckpt = 0
-
-    return merges, (train if full is None else full)
-
-
-def apply_merges_arrow(tokens, merges: list[tuple]) -> "Column":
-    """Apply a trained merge table to a token-array column — map-only,
-    Arrow-batched, the merge table shipped as closure metadata (32k
-    merges ≈ a few hundred KB broadcast once per executor, never
-    shuffled). Semantics are EXACTLY the trainer's: one left-to-right
-    non-overlapping pass per merge, in training order — so
-    ``apply_merges_arrow(subword_tokens(text), merges)`` reproduces the
-    trainer's final corpus bit-for-bit (pinned in tests). A membership
-    pre-check skips passes whose tokens are absent from the doc, so the
-    common cost is far below n_merges passes.
-
-    Note this deliberately differs from rank-priority encoders (HF
-    tokenizers): those re-select the minimum-rank pair after every
-    merge, so an occurrence of an EARLIER pair created by a LATER merge
-    still gets merged; the pass-order rule — like the trainer itself —
-    leaves it. Training parity is the contract here.
-    """
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    pairs = [(m[0], m[1]) for m in merges]
-
-    @pandas_udf("array<string>")
-    def _apply(s: pd.Series) -> pd.Series:
-        def enc(seq):
-            seq = list(seq)
-            for a, b in pairs:
-                if a not in seq or b not in seq:
-                    continue
-                out, i, n = [], 0, len(seq)
-                while i < n:
-                    if i + 1 < n and seq[i] == a and seq[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(seq[i])
-                        i += 1
-                seq = out
-            return seq
-
-        return s.map(enc)
-
-    return _apply(tokens)
-
-
-def encode_tokens(
-    docs: DataFrame,
-    merges: list[tuple],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Tokenize a corpus with a FIXED trained merge table — the serving
-    half of the tokenizer story (train once with :func:`bpe_merges`,
-    encode any corpus forever after). One map-only pass over the data:
-    no iteration, no shuffle, no driver round trips — corpus size only
-    adds map tasks, which is what lets a merge table trained on a
-    sample (``sample_rate``) tokenize 100 TB."""
-    return docs.select(
-        F.col(id_col).alias("id"),
-        apply_merges_arrow(subword_tokens(F.col(text_col)), merges).alias("t"),
-    )

@@ -1,27 +1,10 @@
-"""Multimodal (binary) column plumbing — north-star operator family.
+"""Multimodal (binary) column plumbing.
 
 Pattern: media (image/audio/video) travels as an opaque ``binary`` column
-plus a typed metadata struct; decode / feature-extraction runs as
-Arrow-batched ``mapInPandas`` so bytes never cross the JVM↔Python boundary
-row-at-a-time. Two decode tiers:
-
-* **real** (:func:`real_decode` / :func:`extract_media_metadata`):
-  dimensions, channels, sample rate, duration parsed from the container
-  headers with pure stdlib byte math — PNG, BMP, GIF, JPEG, WAV need no
-  codec library at all;
-* **real pixels/samples**: uncompressed 24-bit BMP resize, GIF87a/89a
-  LZW frame decode + resize + frame sampling
-  (:func:`decode_gif_frames`), PNG zlib+unfilter decode (EVERY legal
-  depth — packed 1/2/4-bit, 8/16-bit — non-interlaced + Adam7,
-  :func:`decode_png_pixels`), baseline AND progressive JPEG
-  (operators/jpeg.py), WAV PCM windowing;
-* **stub** (:func:`fake_decode_features`): a clearly-marked
-  deterministic embedding stand-in for the feature-vector tier (no ML
-  model ships here), keeping the Spark-side contract (schema, batching,
-  partition behavior) real and tested — swapping in a real encoder is a
-  one-function change. The only pixel-tier residue left to an optional
-  codec is arithmetic-coded/12-bit JPEG (see operators/jpeg.py's
-  decision note — kept Pillow-gated deliberately).
+plus a typed metadata struct; per-payload work runs as Arrow-batched
+``mapInPandas`` so bytes never cross the JVM↔Python boundary
+row-at-a-time. :func:`extract_media_features` computes byte-level
+features only (length, md5, header bytes); no decoder ships here.
 """
 
 from __future__ import annotations
@@ -34,15 +17,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Output schema of the feature extractor (stable across the stub and any
-#: real decoder: keep width fixed, add fields only at the end).
+#: Output schema of the feature extractor (add fields only at the end).
 MEDIA_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
         T.StructField("n_bytes", T.IntegerType()),
         T.StructField("content_md5", T.StringType()),
         T.StructField("header_hex", T.StringType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
     ]
 )
 
@@ -67,146 +48,6 @@ def attach_binary_payload(
     )
 
 
-#: Header-metadata schema for :func:`extract_media_metadata` — the REAL
-#: decode path for header-parseable formats (see :func:`real_decode`).
-MEDIA_METADATA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("sample_rate_hz", T.IntegerType()),
-        T.StructField("duration_s", T.DoubleType()),
-    ]
-)
-
-_UNKNOWN = {
-    "format": None,
-    "width": None,
-    "height": None,
-    "channels": None,
-    "sample_rate_hz": None,
-    "duration_s": None,
-}
-
-
-def try_decode_header(payload: bytes) -> dict | None:
-    """Parse real media metadata from the first bytes — pure stdlib, no
-    codec library. Formats whose containers put dimensions/duration in a
-    fixed-layout header: PNG, BMP, GIF, JPEG (SOF scan), WAV (RIFF chunk
-    walk). Returns None when the payload is none of these (or truncated).
-    """
-    n = len(payload)
-    if n >= 24 and payload[:8] == b"\x89PNG\r\n\x1a\n":
-        # IHDR is mandatory-first: width/height big-endian at 16/20
-        w = int.from_bytes(payload[16:20], "big")
-        h = int.from_bytes(payload[20:24], "big")
-        return {**_UNKNOWN, "format": "png", "width": w, "height": h}
-    if n >= 26 and payload[:2] == b"BM":
-        w = int.from_bytes(payload[18:22], "little", signed=True)
-        h = int.from_bytes(payload[22:26], "little", signed=True)
-        # negative height = top-down DIB; magnitude is the pixel height
-        return {**_UNKNOWN, "format": "bmp", "width": w, "height": abs(h)}
-    if n >= 10 and payload[:6] in (b"GIF87a", b"GIF89a"):
-        w = int.from_bytes(payload[6:8], "little")
-        h = int.from_bytes(payload[8:10], "little")
-        return {**_UNKNOWN, "format": "gif", "width": w, "height": h}
-    if n >= 4 and payload[:2] == b"\xff\xd8":  # JPEG SOI
-        i = 2
-        while i + 9 < n:
-            if payload[i] != 0xFF:
-                break
-            marker = payload[i + 1]
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers carry no length
-                continue
-            seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
-            # SOF0..SOF15 minus DHT/JPG/DAC hold the frame dimensions
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                h = int.from_bytes(payload[i + 5 : i + 7], "big")
-                w = int.from_bytes(payload[i + 7 : i + 9], "big")
-                return {**_UNKNOWN, "format": "jpeg", "width": w, "height": h}
-            i += 2 + seg_len
-        return None
-    if n >= 12 and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        i, fmt, data_size = 12, None, None
-        while i + 8 <= n:
-            cid = payload[i : i + 4]
-            size = int.from_bytes(payload[i + 4 : i + 8], "little")
-            if cid == b"fmt " and i + 24 <= n:
-                fmt = {
-                    "channels": int.from_bytes(payload[i + 10 : i + 12], "little"),
-                    "sample_rate_hz": int.from_bytes(
-                        payload[i + 12 : i + 16], "little"
-                    ),
-                    "byte_rate": int.from_bytes(payload[i + 16 : i + 20], "little"),
-                }
-            elif cid == b"data":
-                data_size = size
-            i += 8 + size + (size & 1)  # chunks are word-aligned
-        if fmt is None:
-            return None
-        dur = (
-            round(data_size / fmt["byte_rate"], 6)
-            if data_size is not None and fmt["byte_rate"]
-            else None
-        )
-        return {
-            **_UNKNOWN,
-            "format": "wav",
-            "channels": fmt["channels"],
-            "sample_rate_hz": fmt["sample_rate_hz"],
-            "duration_s": dur,
-        }
-    return None
-
-
-def real_decode(payload: bytes) -> dict:
-    """Real metadata decode for header-parseable formats (PNG/BMP/GIF/
-    JPEG/WAV via :func:`try_decode_header`). Raises NotImplementedError
-    ONLY for formats that genuinely require a codec library (mp4, webm,
-    ogg, …) — none is bundled in this environment."""
-    meta = try_decode_header(payload)
-    if meta is None:
-        raise NotImplementedError(
-            "payload is not a header-parseable format (PNG/BMP/GIF/JPEG/WAV); "
-            "full media decode requires a codec library not installed here"
-        )
-    return meta
-
-
-def extract_media_metadata(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL header-metadata extraction (same mapInPandas
-    posture as :func:`extract_media_features`); unknown formats yield a
-    null-metadata row instead of failing the batch — the log-and-continue
-    stance of the reference parsers."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [
-                try_decode_header(bytes(b)) or _UNKNOWN for b in pdf["payload"]
-            ]
-            out = pd.DataFrame(metas)
-            out.insert(0, "media_id", pdf["media_id"].to_numpy())
-            yield out
-
-    return media.mapInPandas(batches, MEDIA_METADATA_SCHEMA)
-
-
-def fake_decode_features(payload: bytes, dim: int = 4) -> list[float]:
-    """Deterministic stand-in decode: fixed-dim features from byte stats."""
-    if not payload:
-        return [0.0] * dim
-    n = len(payload)
-    return [
-        float(n),
-        float(payload[0]),
-        float(payload[-1]),
-        float(sum(payload) % 997),
-    ][:dim]
-
-
 def extract_media_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload.
 
@@ -228,688 +69,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
                         lambda b: hashlib.md5(bytes(b)).hexdigest()
                     ),
                     "header_hex": payloads.map(lambda b: bytes(b)[:8].hex()),
-                    "feature": payloads.map(fake_decode_features),
                 }
             )
 
     return media.mapInPandas(batches, MEDIA_FEATURES_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Resize / frame-sample — the remaining multimodal pipeline stages.
-# Real where stdlib byte math suffices (uncompressed 24-bit BMP resize,
-# GIF LZW frame decode/resize/sampling, PNG zlib+unfilter decode, WAV
-# PCM windowing, baseline AND progressive JPEG via operators/jpeg.py);
-# `needs_codec` only for the residue no shipped decoder handles
-# (arithmetic/12-bit JPEG) when the optional codec probe (Pillow) finds
-# nothing — the plumbing (schema, Arrow batching, partitioning) is
-# identical either way.
-# ---------------------------------------------------------------------------
-
-RESIZED_IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-# ---------------------------------------------------------------------------
-# GIF87a/89a pixel decode — pure stdlib LZW (the GIF variant: variable
-# code width starting at min_code_size+1, clear/end codes, 12-bit cap).
-# With this plus the PNG decoder below, of the five header-parseable
-# formats only JPEG (DCT) still needs a codec library — probed for.
-# ---------------------------------------------------------------------------
-
-
-def _lzw_decode(min_code_size: int, data: bytes, max_pixels: int) -> bytes | None:
-    """GIF-flavored LZW decode of a de-sub-blocked code stream.
-    Returns the color-index bytes (truncated to ``max_pixels``), or None
-    on a corrupt stream. Codes are packed little-endian, LSB-first."""
-    # GIF LZW min code size is 2..8 (palette ≤ 256 entries); a larger
-    # value is a corrupt stream — and would overflow the byte-valued
-    # root table below (hypothesis-found crash, not just invalidity).
-    if not 2 <= min_code_size <= 8 or not data:
-        return None
-    clear = 1 << min_code_size
-    end = clear + 1
-    init = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(init)
-    code_size = min_code_size + 1
-    stream = int.from_bytes(data, "little")
-    nbits = len(data) * 8
-    pos = 0
-    out = bytearray()
-    prev: bytes | None = None
-    while pos + code_size <= nbits and len(out) < max_pixels:
-        code = (stream >> pos) & ((1 << code_size) - 1)
-        pos += code_size
-        if code == clear:
-            table = list(init)
-            code_size = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            if code >= len(table):
-                return None
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-        elif code == len(table):
-            entry = prev + prev[:1]  # the KwKwK case
-        else:
-            return None
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            # width bumps when the NEXT code could reference the slot
-            if len(table) == (1 << code_size) and code_size < 12:
-                code_size += 1
-        prev = entry
-    return bytes(out[:max_pixels])
-
-
-def _deinterlace(idx: bytes, w: int, h: int) -> bytes:
-    """Reorder GIF interlace passes (rows 0::8, 4::8, 2::4, 1::2) into
-    top-to-bottom scanline order."""
-    order = [
-        r for start, step in ((0, 8), (4, 8), (2, 4), (1, 2))
-        for r in range(start, h, step)
-    ]
-    out: list[bytes | None] = [None] * h
-    for src, dst in enumerate(order):
-        out[dst] = idx[src * w : (src + 1) * w]
-    return b"".join(row or b"\x00" * w for row in out)
-
-
-def decode_gif_frames(
-    payload: bytes, max_frames: int | None = None
-) -> tuple[int, int, list[dict]] | None:
-    """REAL GIF87a/89a pixel decode — pure stdlib byte math + LZW, no
-    codec library. Returns ``(screen_w, screen_h, frames)`` where each
-    frame is ``{"left", "top", "width", "height", "rgb"}`` with ``rgb``
-    as row-major 3-byte pixels mapped through the local-or-global color
-    table (interlaced frames deinterlaced). Frames are emitted as their
-    own rects — no disposal-method composition (this is the frame-
-    SAMPLING operator shape, not a playback renderer). Returns None for
-    non-GIF or corrupt payloads — log-and-continue, like the parsers."""
-    import numpy as np
-
-    b = bytes(payload)
-    n = len(b)
-    if n < 13 or b[:6] not in (b"GIF87a", b"GIF89a"):
-        return None
-    sw = int.from_bytes(b[6:8], "little")
-    sh = int.from_bytes(b[8:10], "little")
-    packed = b[10]
-    i = 13
-    gct = None
-    if packed & 0x80:
-        sz = 2 ** ((packed & 7) + 1)
-        if n < i + 3 * sz:
-            return None
-        gct = b[i : i + 3 * sz]
-        i += 3 * sz
-    frames: list[dict] = []
-    while i < n:
-        block = b[i]
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension: label + sub-blocks until 0x00
-            i += 2
-            while i < n and b[i] != 0:
-                i += 1 + b[i]
-            i += 1
-            continue
-        if block != 0x2C or i + 10 > n:
-            return None
-        left = int.from_bytes(b[i + 1 : i + 3], "little")
-        top = int.from_bytes(b[i + 3 : i + 5], "little")
-        fw = int.from_bytes(b[i + 5 : i + 7], "little")
-        fh = int.from_bytes(b[i + 7 : i + 9], "little")
-        fpacked = b[i + 9]
-        i += 10
-        ct = gct
-        if fpacked & 0x80:
-            sz = 2 ** ((fpacked & 7) + 1)
-            if n < i + 3 * sz:
-                return None
-            ct = b[i : i + 3 * sz]
-            i += 3 * sz
-        if i >= n or ct is None or fw == 0 or fh == 0:
-            return None
-        min_code = b[i]
-        i += 1
-        data = bytearray()
-        while i < n and b[i] != 0:
-            ln = b[i]
-            data += b[i + 1 : i + 1 + ln]
-            i += 1 + ln
-        if i >= n:
-            return None
-        i += 1  # past the 0x00 sub-block terminator
-        idx = _lzw_decode(min_code, bytes(data), fw * fh)
-        if idx is None or len(idx) < fw * fh:
-            return None
-        if fpacked & 0x40:
-            idx = _deinterlace(idx, fw, fh)
-        tbl = np.zeros((256, 3), dtype=np.uint8)
-        tbl[: len(ct) // 3] = np.frombuffer(
-            ct[: (len(ct) // 3) * 3], dtype=np.uint8
-        ).reshape(-1, 3)
-        arr = np.frombuffer(idx, dtype=np.uint8)
-        frames.append(
-            {
-                "left": left,
-                "top": top,
-                "width": fw,
-                "height": fh,
-                "rgb": tbl[arr].tobytes(),
-            }
-        )
-        if max_frames is not None and len(frames) >= max_frames:
-            break
-    if not frames:
-        return None
-    return sw, sh, frames
-
-
-def _rgb_to_bmp24(rgb, w: int, h: int) -> bytes:
-    """Pack a row-major (h, w, 3) RGB uint8 array as a bottom-up 24-bit
-    BMP (the BGR byte order and 4-byte row padding BMP requires)."""
-    import numpy as np
-
-    arr = np.asarray(rgb, dtype=np.uint8).reshape(h, w, 3)
-    bgr = arr[::-1, :, ::-1]  # bottom-up rows, RGB→BGR
-    stride = (w * 3 + 3) & ~3
-    body = np.zeros((h, stride), dtype=np.uint8)
-    body[:, : w * 3] = bgr.reshape(h, w * 3)
-    data = body.tobytes()
-    header = (
-        b"BM"
-        + (54 + len(data)).to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(data).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2
-        + (0).to_bytes(4, "little") * 2
-    )
-    return header + data
-
-
-def _parse_bmp24(payload: bytes):
-    """(width, height, top_down, pixel_offset) for an uncompressed
-    24-bit BMP, else None."""
-    if len(payload) < 54 or payload[:2] != b"BM":
-        return None
-    pixel_offset = int.from_bytes(payload[10:14], "little")
-    dib = int.from_bytes(payload[14:18], "little")
-    if dib < 40:
-        return None
-    w = int.from_bytes(payload[18:22], "little", signed=True)
-    h = int.from_bytes(payload[22:26], "little", signed=True)
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
-    if bpp != 24 or compression != 0 or w <= 0 or h == 0:
-        return None
-    return w, abs(h), h < 0, pixel_offset
-
-
-def resize_bmp_nearest(payload: bytes, out_w: int, out_h: int) -> bytes | None:
-    """REAL nearest-neighbor resize for uncompressed 24-bit BMPs — pure
-    numpy byte math, no codec. Returns a fresh bottom-up 24-bit BMP, or
-    None when the payload is not a supported BMP."""
-    import numpy as np
-
-    parsed = _parse_bmp24(bytes(payload))
-    if parsed is None:
-        return None
-    w, h, top_down, off = parsed
-    stride = (w * 3 + 3) & ~3
-    need = off + stride * h
-    if len(payload) < need:
-        return None
-    rows = np.frombuffer(payload, dtype=np.uint8, count=stride * h, offset=off)
-    rows = rows.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-    if top_down:
-        rows = rows[::-1]  # normalize to bottom-up
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    resized = rows[ys][:, xs]  # nearest neighbor
-    out_stride = (out_w * 3 + 3) & ~3
-    body = np.zeros((out_h, out_stride), dtype=np.uint8)
-    body[:, : out_w * 3] = resized.reshape(out_h, out_w * 3)
-    data = body.tobytes()
-    file_size = 54 + len(data)
-    header = (
-        b"BM"
-        + file_size.to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + out_w.to_bytes(4, "little", signed=True)
-        + out_h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(data).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2
-        + (0).to_bytes(4, "little") * 2
-    )
-    return header + data
-
-
-def _resize_gif_first_frame(b: bytes, out_w: int, out_h: int) -> bytes | None:
-    """Decode a GIF's first frame (real LZW) and nearest-resize it,
-    returning a 24-bit BMP, or None when not a decodable GIF."""
-    import numpy as np
-
-    decoded = decode_gif_frames(b, max_frames=1)
-    if decoded is None:
-        return None
-    _, _, frames = decoded
-    f = frames[0]
-    arr = np.frombuffer(f["rgb"], dtype=np.uint8).reshape(f["height"], f["width"], 3)
-    ys = (np.arange(out_h) * f["height"]) // out_h
-    xs = (np.arange(out_w) * f["width"]) // out_w
-    return _rgb_to_bmp24(arr[ys][:, xs], out_w, out_h)
-
-
-# ---------------------------------------------------------------------------
-# PNG pixel decode — REAL and pure stdlib: IDAT is plain DEFLATE
-# (zlib module) and the five scanline filters are byte math. With this,
-# JPEG is the only format whose pixel decode needs a codec library
-# (DCT entropy coding) — and even that is probed for below.
-# ---------------------------------------------------------------------------
-
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-#: Adam7 pass origins/steps: (x0, y0, dx, dy) per pass.
-_ADAM7 = [
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-]
-
-
-def _png_unfilter(raw: bytes, pos: int, width_bytes: int, rows: int, bpp: int):
-    """Unfilter ``rows`` scanlines of ``width_bytes`` each starting at
-    ``raw[pos]`` (Sub/Up/Average/Paeth). Returns (recon bytes, new pos)
-    or None on truncation/bad filter byte."""
-    if len(raw) - pos < rows * (width_bytes + 1):
-        return None
-    recon = bytearray(rows * width_bytes)
-    for y in range(rows):
-        f = raw[pos]
-        line = raw[pos + 1 : pos + 1 + width_bytes]
-        pos += 1 + width_bytes
-        ro = y * width_bytes
-        po = ro - width_bytes
-        if f == 0:
-            recon[ro : ro + width_bytes] = line
-        elif f == 1:  # Sub
-            for x in range(width_bytes):
-                left = recon[ro + x - bpp] if x >= bpp else 0
-                recon[ro + x] = (line[x] + left) & 0xFF
-        elif f == 2:  # Up
-            for x in range(width_bytes):
-                up = recon[po + x] if y else 0
-                recon[ro + x] = (line[x] + up) & 0xFF
-        elif f == 3:  # Average
-            for x in range(width_bytes):
-                left = recon[ro + x - bpp] if x >= bpp else 0
-                up = recon[po + x] if y else 0
-                recon[ro + x] = (line[x] + ((left + up) >> 1)) & 0xFF
-        elif f == 4:  # Paeth
-            for x in range(width_bytes):
-                a = recon[ro + x - bpp] if x >= bpp else 0
-                b = recon[po + x] if y else 0
-                c = recon[po + x - bpp] if (y and x >= bpp) else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                recon[ro + x] = (line[x] + pred) & 0xFF
-        else:
-            return None
-    return bytes(recon), pos
-
-
-def decode_png_pixels(
-    payload: bytes, max_pixels: int = 1 << 22
-) -> tuple[int, int, bytes] | None:
-    """Real PNG pixel decode (zlib IDAT inflate + Sub/Up/Average/Paeth
-    unfilters), returning ``(width, height, rgb24 bytes)``. Supports
-    EVERY legal bit depth: 8/16-bit (16-bit samples keep the high byte
-    — the standard 8-bit reduction) and the packed 1/2/4-bit depths
-    (MSB-first sub-byte samples, legal only for gray/palette per the
-    spec; gray samples scale by 255/(2^d−1), palette samples index the
-    PLTE directly). Color types 0/2/3/4/6 (gray/RGB/palette/gray+alpha/
-    RGBA; alpha dropped), non-interlaced AND Adam7 interlaced (each
-    pass unfiltered as its own sub-image — sub-byte passes pad each
-    scanline to a byte boundary per the spec — then deinterlaced into
-    the canvas). Returns None only for corrupt data — callers fall back
-    to ``needs_codec``. ``max_pixels`` bounds memory (the unfilter loop
-    is Python-level, so the cap is also the CPU bound per row)."""
-    import zlib
-
-    import numpy as np
-
-    if len(payload) < 8 or payload[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    i, n = 8, len(payload)
-    ihdr: bytes | None = None
-    plte: bytes | None = None
-    idat = bytearray()
-    while i + 8 <= n:
-        ln = int.from_bytes(payload[i : i + 4], "big")
-        typ = payload[i + 4 : i + 8]
-        data = payload[i + 8 : i + 8 + ln]
-        if len(data) < ln:
-            return None
-        if typ == b"IHDR":
-            ihdr = data
-        elif typ == b"PLTE":
-            plte = data
-        elif typ == b"IDAT":
-            idat.extend(data)
-        elif typ == b"IEND":
-            break
-        i += 12 + ln
-    if ihdr is None or len(ihdr) < 13:
-        return None
-    w = int.from_bytes(ihdr[0:4], "big")
-    h = int.from_bytes(ihdr[4:8], "big")
-    depth, ctype, comp, filt, interlace = ihdr[8:13]
-    channels = _PNG_CHANNELS.get(ctype)
-    if depth not in (1, 2, 4, 8, 16) or comp != 0 or filt != 0 or channels is None:
-        return None
-    if interlace not in (0, 1):
-        return None
-    if depth == 16 and ctype == 3:
-        return None  # 16-bit palette indices are not legal PNG
-    if depth < 8 and ctype not in (0, 3):
-        return None  # sub-byte depths are gray/palette only (spec §11.2.2)
-    if w <= 0 or h <= 0 or w * h > max_pixels:
-        return None
-    if ctype == 3 and plte is None:
-        return None
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except Exception:  # noqa: BLE001 — corrupt deflate stream
-        return None
-    sb = max(1, depth // 8)  # bytes per (unpacked) sample
-    # Filter delta distance: for sub-byte depths the spec filters whole
-    # BYTES with bpp rounded up to 1 — bit-level prediction never happens.
-    bpp = max(1, (channels * depth) // 8)
-
-    def row_bytes(cols: int) -> int:
-        """Packed scanline length: sub-byte rows pad to a byte boundary."""
-        return (cols * channels * depth + 7) // 8
-
-    def to_8bit(buf: bytes, rows: int, cols: int):
-        if depth >= 8:
-            a = np.frombuffer(buf, dtype=np.uint8).reshape(
-                rows, cols, channels, sb
-            )
-            return a[:, :, :, 0]  # high byte == the 8-bit reduction
-        # sub-byte: unpack MSB-first packed samples (single channel),
-        # drop the padding samples past `cols`, keep RAW values — gray
-        # scaling / palette lookup happens in the color-type mapping
-        a = np.frombuffer(buf, dtype=np.uint8).reshape(rows, row_bytes(cols))
-        per = 8 // depth
-        shifts = np.arange(per - 1, -1, -1, dtype=np.uint8) * depth
-        samples = (a[:, :, None] >> shifts) & ((1 << depth) - 1)
-        return samples.reshape(rows, -1)[:, :cols, None]
-
-    if interlace == 0:
-        res = _png_unfilter(raw, 0, row_bytes(w), h, bpp)
-        if res is None:
-            return None
-        arr = to_8bit(res[0], h, w)
-    else:  # Adam7: seven independently-filtered sub-images
-        arr = np.zeros((h, w, channels), dtype=np.uint8)
-        pos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            res = _png_unfilter(raw, pos, row_bytes(pw), ph, bpp)
-            if res is None:
-                return None
-            sub, pos = res
-            arr[y0:h:dy, x0:w:dx] = to_8bit(sub, ph, pw)
-
-    if depth < 8 and ctype == 0:
-        # scale d-bit gray to 8-bit: ×255/(2^d−1) = ×255/×85/×17, exact
-        arr = (arr * np.uint8(255 // ((1 << depth) - 1))).astype(np.uint8)
-    if ctype == 2:
-        rgb = arr
-    elif ctype == 6:
-        rgb = arr[:, :, :3]
-    elif ctype == 0:
-        rgb = np.repeat(arr, 3, axis=2)
-    elif ctype == 4:
-        rgb = np.repeat(arr[:, :, :1], 3, axis=2)
-    else:  # palette
-        pal = np.frombuffer(plte, dtype=np.uint8)
-        pal = pal[: (len(pal) // 3) * 3].reshape(-1, 3)
-        idxs = arr[:, :, 0]
-        if len(pal) == 0 or int(idxs.max()) >= len(pal):
-            return None
-        rgb = pal[idxs]
-    return w, h, np.ascontiguousarray(rgb).tobytes()
-
-
-def _resize_rgb_nearest(rgb: bytes, w: int, h: int, out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbor resize of a raw rgb24 buffer into a 24-bit BMP —
-    the shared tail of the GIF/PNG/codec resize paths."""
-    import numpy as np
-
-    arr = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    return _rgb_to_bmp24(arr[ys][:, xs], out_w, out_h)
-
-
-_CODEC_PROBE: list | None = None
-
-
-def optional_image_codec():
-    """Probe once for an optional image codec library (Pillow). Returns
-    the ``PIL.Image`` module or None. The stdlib paths (BMP/GIF/PNG)
-    never use it; JPEG decode flips from ``needs_codec`` to real when
-    the library happens to be installed — import-gated, never required
-    (this container ships no codec libs, so the probe returning None is
-    the tested default)."""
-    global _CODEC_PROBE
-    if _CODEC_PROBE is None:
-        try:
-            from PIL import Image  # type: ignore[import-not-found]
-
-            _CODEC_PROBE = [Image]
-        except Exception:  # noqa: BLE001 — any import failure → no codec
-            _CODEC_PROBE = [None]
-    return _CODEC_PROBE[0]
-
-
-def _resize_with_codec(b: bytes, out_w: int, out_h: int) -> bytes | None:
-    """Decode-and-resize via the optional codec library (JPEG path)."""
-    img_mod = optional_image_codec()
-    if img_mod is None:
-        return None
-    import io
-
-    import numpy as np
-
-    try:
-        with img_mod.open(io.BytesIO(b)) as im:
-            rgb = np.asarray(im.convert("RGB"), dtype=np.uint8)
-    except Exception:  # noqa: BLE001 — undecodable despite the codec
-        return None
-    h, w = rgb.shape[:2]
-    return _resize_rgb_nearest(rgb.tobytes(), w, h, out_w, out_h)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Arrow-batched image resize stage. Per row: a real resized BMP
-    (status ``resized`` — uncompressed BMPs, GIFs via stdlib LZW, PNGs
-    via stdlib zlib+unfilter, baseline AND progressive JPEGs via the
-    stdlib+numpy decoder in operators/jpeg.py), ``needs_codec`` only
-    for the exotic residue no available decoder handles
-    (arithmetic/12-bit JPEG without Pillow; corrupt entropy streams),
-    ``unsupported`` otherwise — log-and-continue, never a failed
-    batch."""
-    from .jpeg import decode_jpeg_pixels
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "status": [], "width": [], "height": [], "payload": []}
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(b)
-                resized = resize_bmp_nearest(b, width, height)
-                if resized is None:
-                    resized = _resize_gif_first_frame(b, width, height)
-                if resized is None and (png := decode_png_pixels(b)) is not None:
-                    pw, ph, rgb = png
-                    resized = _resize_rgb_nearest(rgb, pw, ph, width, height)
-                if resized is None and (jpg := decode_jpeg_pixels(b)) is not None:
-                    jw, jh, rgb = jpg
-                    resized = _resize_rgb_nearest(rgb, jw, jh, width, height)
-                if resized is None:
-                    resized = _resize_with_codec(b, width, height)
-                if resized is not None:
-                    status = "resized"
-                elif (hdr := try_decode_header(b)) is not None and hdr["format"] in (
-                    "png",
-                    "gif",
-                    "jpeg",
-                ):
-                    # gif/png land here only on corrupt/exotic streams
-                    status = "needs_codec"
-                else:
-                    status = "unsupported"
-                out["media_id"].append(mid)
-                out["status"].append(status)
-                out["width"].append(width if status == "resized" else None)
-                out["height"].append(height if status == "resized" else None)
-                out["payload"].append(resized)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, RESIZED_IMAGE_SCHEMA)
-
-
-GIF_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("left", T.IntegerType()),
-        T.StructField("top", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("rgb", T.BinaryType()),
-    ]
-)
-
-
-def sample_gif_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """REAL animation frame sampling: decode GIF87a/89a frames (stdlib
-    LZW) and emit every ``every_n``-th frame as raw RGB bytes with its
-    rect — the video-frame-sampling shape with the one animated format
-    this environment can decode without a codec. Non-GIF payloads emit
-    no rows. The fan-out happens inside the Arrow batch and is bounded
-    by total animation pixel mass, like sample_audio_frames."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": [], "frame_idx": [], "left": [], "top": [],
-                "width": [], "height": [], "rgb": [],
-            }
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                decoded = decode_gif_frames(bytes(b))
-                if decoded is None:
-                    continue
-                _, _, frames = decoded
-                for k in range(0, len(frames), max(1, every_n)):
-                    f = frames[k]
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(k)
-                    out["left"].append(f["left"])
-                    out["top"].append(f["top"])
-                    out["width"].append(f["width"])
-                    out["height"].append(f["height"])
-                    out["rgb"].append(f["rgb"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, GIF_FRAMES_SCHEMA)
-
-
-AUDIO_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("start_ms", T.LongType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("pcm", T.BinaryType()),
-    ]
-)
-
-
-def _wav_pcm(payload: bytes):
-    """(sample_rate, block_align, data_offset, data_size) or None."""
-    n = len(payload)
-    if n < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    i, rate, block = 12, None, None
-    while i + 8 <= n:
-        cid = payload[i : i + 4]
-        size = int.from_bytes(payload[i + 4 : i + 8], "little")
-        if cid == b"fmt " and i + 24 <= n:
-            rate = int.from_bytes(payload[i + 12 : i + 16], "little")
-            block = int.from_bytes(payload[i + 20 : i + 22], "little")
-        elif cid == b"data" and rate is not None and block:
-            return rate, block, i + 8, min(size, n - i - 8)
-        i += 8 + size + (size & 1)
-    return None
-
-
-def sample_audio_frames(media: DataFrame, window_ms: int = 1000) -> DataFrame:
-    """REAL audio frame sampling: slice WAV PCM into ``window_ms``
-    windows — one output row per window with the raw PCM bytes (the
-    training-data shape an audio featurizer consumes). Non-WAV payloads
-    emit no rows (video frame-sampling would need a codec; the row
-    contract is identical). Fan-out is bounded by total audio duration,
-    not row count — the explode happens inside the Arrow batch."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "frame_idx": [], "start_ms": [], "n_samples": [], "pcm": []}
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                parsed = _wav_pcm(bytes(b))
-                if parsed is None:
-                    continue
-                rate, block, off, size = parsed
-                spw = max(1, (rate * window_ms) // 1000)  # samples per window
-                bpw = spw * block
-                total = size // block
-                for k in range((total + spw - 1) // spw):
-                    chunk = bytes(b)[off + k * bpw : off + min((k + 1) * bpw, size)]
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(k)
-                    out["start_ms"].append(k * window_ms)
-                    out["n_samples"].append(len(chunk) // block)
-                    out["pcm"].append(chunk)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, AUDIO_FRAMES_SCHEMA)

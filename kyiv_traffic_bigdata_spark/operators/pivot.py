@@ -25,18 +25,3 @@ def explode_parallel_arrays(
     )
 
 
-def pivot_weather_hourly(weather: DataFrame) -> DataFrame:
-    """WeatherResponse → one row per hour (ts + 8 metric columns).
-
-    Input rows carry a ``hourly`` struct of parallel arrays (schemas
-    .WEATHER_RESPONSE). Output: ``weather_hourly(ts timestamp, …)``.
-    """
-    from ..schemas import WEATHER_HOURLY_FIELDS
-
-    cols = ["time", *WEATHER_HOURLY_FIELDS]
-    flat = weather.select(*[F.col(f"hourly.{c}").alias(c) for c in cols])
-    rows = explode_parallel_arrays(flat, cols)
-    return rows.select(
-        F.to_timestamp("time").alias("ts"),
-        *[F.col(c) for c in WEATHER_HOURLY_FIELDS],
-    )

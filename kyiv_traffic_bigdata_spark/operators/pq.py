@@ -17,8 +17,6 @@ Pieces:
   ``n_iters>0`` refines each subspace with Lloyd's (driver work is
   m × k × subdim floats of metadata — bounded at any corpus size).
 * :func:`encode_pq` — map-only argmin per subspace → ``array<int>``.
-* :func:`reconstruct` — decode a code array back to its quantized
-  vector (codebook lookup + flatten), for reconstruction-error audits.
 * :func:`adc_topk` — asymmetric distance computation: each query
   precomputes its m×k distance table ONCE (against the literal
   codebooks, before the join), so per-(query, code) scoring is m
@@ -141,23 +139,6 @@ def encode_pq(
         *keep_cols,
         codes.alias("codes"),
         err.alias("recon_sq_err"),
-    )
-
-
-def reconstruct(
-    codes: Column, books: list[list[list[float]]]
-) -> Column:
-    """Decode a PQ code array back to its quantized array<double>."""
-    m = len(books)
-    cube = _literal_cube(books)
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.element_at(
-                F.element_at(cube, s + 1),
-                F.element_at(codes, s + 1) + 1,
-            ),
-        )
     )
 
 

@@ -1,7 +1,7 @@
 """Lineage-truncation staging for iterative / multi-pass operators.
 
-Several operators (connected components, the repeated-spans position
-index, the BPE trainer) re-derive a frame round after round; without
+Several operators (the graph fixpoint loops, the repeated-spans
+position index) re-derive a frame round after round; without
 truncation the logical plan grows per round and Catalyst re-analysis
 (plus traps like InferFiltersFromConstraints) goes super-linear. The
 repo stages those frames through a checkpoint. Two modes:
@@ -29,9 +29,9 @@ repo stages those frames through a checkpoint. Two modes:
     the box — cluster deployments should point it at durable storage
     via ``SparkContext.setCheckpointDir`` first.
 
-Mode selection: the ``SPARK_GRAFT_STAGING`` env var at import, or
-:func:`set_staging` at runtime. A knob (not a per-call parameter)
-because the choice is a deployment property, not a per-operator one.
+Mode selection: the ``SPARK_GRAFT_STAGING`` env var at import. A knob
+(not a per-call parameter) because the choice is a deployment property,
+not a per-operator one.
 """
 
 from __future__ import annotations
@@ -45,13 +45,6 @@ _VALID = ("local", "reliable")
 _MODE = os.environ.get("SPARK_GRAFT_STAGING", "local")
 if _MODE not in _VALID:  # pragma: no cover - env misconfiguration
     raise ValueError(f"SPARK_GRAFT_STAGING must be one of {_VALID}, got {_MODE!r}")
-
-
-def set_staging(mode: str) -> None:
-    if mode not in _VALID:
-        raise ValueError(f"staging mode must be one of {_VALID}, got {mode!r}")
-    global _MODE
-    _MODE = mode
 
 
 def stage(df: DataFrame, eager: bool = True) -> DataFrame:

@@ -19,15 +19,6 @@ def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
-def top_bottom_k(
-    df: DataFrame, value_col: str, tiebreak_col: str, k: int
-) -> tuple[DataFrame, DataFrame]:
-    """Reference W4: (slowest-k, fastest-k) by a metric, tiebroken."""
-    slow = top_k(df, [F.col(value_col).asc(), F.col(tiebreak_col).asc()], k)
-    fast = top_k(df, [F.col(value_col).desc(), F.col(tiebreak_col).asc()], k)
-    return slow, fast
-
-
 def top_k_per_group(
     df: DataFrame,
     group_cols: list[str],

@@ -196,19 +196,6 @@ def em_train(
     return keep
 
 
-def vocab_frame(spark, vocab: list[tuple[str, float]]) -> DataFrame:
-    """(piece, prob, logprob) frame of a trained vocabulary, probs
-    rounded to 6 dp for engine-portable display. Pieces whose trained
-    probability collapsed to exactly 0 (possible when every 10-dp
-    expected-count contribution rounds to 0) are dropped — log(0)
-    raises, and a zero-probability piece is unusable by Viterbi anyway
-    (its segmentations fall back to per-char UNK_LOGPROB)."""
-    rows = [
-        (p, round(pr, 6), round(math.log(pr), 6)) for p, pr in vocab if pr > 0
-    ]
-    return spark.createDataFrame(rows, "piece string, prob double, logprob double")
-
-
 def viterbi_segment(
     word: str, logprobs: dict[str, float], max_len: int
 ) -> list[str]:

@@ -1,8 +1,1 @@
-from .checks import (  # noqa: F401
-    broadcast_join_count,
-    exchange_count,
-    parquet_scan_count,
-    physical_plan,
-    scan_filter_exprs,
-    sort_merge_join_count,
-)
+from .checks import physical_plan  # noqa: F401

@@ -563,10 +563,8 @@ def q_approx_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct: the native HLL++ estimate is engine-defined
     sampling (permanently un-oracle-able), while the portable register
     table re-derives bit-for-bit in DuckDB SQL — the same twin
-    discipline that made user_hll_sketch fully driver-green (r8). The
-    native rsd=0.01 sketch path stays available as
-    operators.aggregates.approx_grouped_stats and stays accuracy-pinned
-    in tests/test_approx.py.
+    discipline that gave user_hll_sketch a full oracle (r8).
+    tests/test_approx.py pins the estimate's accuracy.
 
     Scale shape: two PRUNED fact scans — (event_type, user_id) for the
     register partials (map-side combined to ≤ |types|·64 rows) and
@@ -1226,7 +1224,7 @@ def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics — the reference has only avg/min/max; p50/p90/p99 are the
     latency-style stats any monitoring query layer needs). Exact
     percentile needs the full value multiset per group — fine when groups
-    are few and wide; the approx_grouped_stats operator is the sketch
+    are few and wide; the rank sketch (operators.qsketch) is the sketch
     path when they aren't."""
     ev = load_table(spark, sf_dir, "events")
     pct = F.percentile("value", F.lit([0.25, 0.5, 0.9, 0.99]))
@@ -2241,8 +2239,8 @@ FROM ranked WHERE rn <= {k}
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column plumbing + Arrow-batched feature extraction
-    (decode stubbed deterministically; see operators.multimodal)."""
+    """Binary-column plumbing + Arrow-batched byte-level feature
+    extraction (length, md5, header bytes; see operators.multimodal)."""
     d = _docs_with_tokens(spark, sf_dir)
     media = attach_binary_payload(d, "doc_id", "text")
     feats = extract_media_features(media)
@@ -3958,9 +3956,8 @@ FROM documents
 def q_doc_token_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The first BPE-training iteration: the 20 most frequent ADJACENT
     pre-token pairs in the corpus (count desc, lexicographic tiebreak) —
-    exactly the statistic the greedy merge loop consumes
-    (operators.bpe.bpe_merges runs the full iteration). One explode over
-    positions + one hash aggregate with map-side partials + a
+    exactly the statistic one greedy merge round consumes. One explode
+    over positions + one hash aggregate with map-side partials + a
     TakeOrdered — no sort of the pair space."""
     from .operators.bpe import adjacent_pair_counts
 

@@ -3,7 +3,8 @@
 The reference fetches hourly history for a fixed Kyiv point
 (weather/pipeline/extract.py:24-58) and stores the struct-of-arrays JSON
 verbatim. The engine's read path: ``spark.read.schema(WEATHER_RESPONSE)
-.json(path)`` then ``operators.pivot.pivot_weather_hourly`` to rows.
+.json(path)`` then ``operators.pivot.explode_parallel_arrays`` to rows
+(CLI ``weather``).
 
 Network fetch is a driver-side connector concern (one small JSON per
 request); it is isolated behind ``fetch_weather_json`` so tests and

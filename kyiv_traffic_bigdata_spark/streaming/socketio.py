@@ -15,16 +15,12 @@ checkpoint (offsets + commits WAL) then subsumes S7/S8 recovery wholesale
 — ``readBetweenOffsets`` replays any uncommitted range, so crash recovery
 is exact instead of at-least-once.
 
-Two transports:
-
-* **transcript** (this container, all tests): replay a captured frame log
-  from disk. ``maxFramesPerBatch`` bounds each micro-batch — the
-  declarative analog of the reference's drop-oldest backpressure (ST6),
-  except nothing is ever dropped.
-* **live** (requires a WebSocket client lib, absent here): documented
-  stub raising with instructions; the protocol pieces that are pure
-  computation (handshake parse, frame classification) are implemented
-  and tested offline.
+The source replays a captured frame-per-line transcript from disk.
+``maxFramesPerBatch`` bounds each micro-batch — the declarative analog
+of the reference's drop-oldest backpressure (ST6), except nothing is
+ever dropped. Live capture is the CLI ``poll`` command: the Engine.IO
+long-polling client in streaming/transport.py appends frames to the
+transcript this source tails.
 """
 
 from __future__ import annotations
@@ -37,13 +33,9 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 #: Engine.IO protocol text frames (reference websocket_client.py:244-269).
-FRAME_OPEN = "0"  # handshake open packet prefix
 FRAME_PING = "2"
 FRAME_PONG = "3"
-FRAME_PROBE = "2probe"
-FRAME_PROBE_ACK = "3probe"
 FRAME_NS_CONNECT = "40"
-FRAME_EVENT_PREFIX = "42"
 
 
 def parse_handshake(text: str) -> tuple[str | None, int | None]:
@@ -68,18 +60,6 @@ def parse_handshake(text: str) -> tuple[str | None, int | None]:
     return None, None
 
 
-def is_protocol_frame(message: str) -> bool:
-    """True for keepalive/upgrade frames that carry no data
-    (reference _handle_message short-circuit, websocket_client.py:244-269)."""
-    return message in (
-        FRAME_PING,
-        FRAME_PONG,
-        FRAME_PROBE,
-        FRAME_PROBE_ACK,
-        FRAME_NS_CONNECT,
-    ) or message.startswith(FRAME_OPEN + "{")
-
-
 class _TranscriptStreamReader(SimpleDataSourceStreamReader):
     """Replays a frame-per-line transcript file as a stream.
 
@@ -97,9 +77,8 @@ class _TranscriptStreamReader(SimpleDataSourceStreamReader):
         path = options.get("transcript")
         if not path:
             raise ValueError(
-                "kpt_socketio: option 'transcript' is required in this "
-                "environment (live WebSocket transport needs a ws client "
-                "library not bundled here; capture a transcript and replay)"
+                "kpt_socketio: option 'transcript' is required (capture "
+                "one with the CLI 'poll' command, then replay it)"
             )
         self.path = path
         self.max_per_batch = int(options.get("maxFramesPerBatch", 10_000))

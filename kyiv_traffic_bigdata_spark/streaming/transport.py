@@ -10,16 +10,14 @@ an HTTP session that raises on 403 and is refreshed by the poller
 Spark-first restatement, three layers:
 
 1. **Sans-IO protocol core** (this module, pure functions + state
-   machine): Engine.IO payload codec, upgrade/keepalive state machine,
+   machine): Engine.IO payload codec, keepalive state machine,
    backoff and session-refresh policies. No sockets anywhere, so every
-   protocol path — including the 403 dance and the probe/upgrade
-   sequence — is unit-testable offline against the shipped
-   ``kpt_poller.log`` frames.
-2. **Transports** (pluggable duck-typed objects): a REAL stdlib
-   long-polling transport (Engine.IO's polling mode is plain HTTP
-   GET/POST — no WebSocket library needed, same urllib posture as
-   sources/weather.py), and a WebSocket transport stub that raises with
-   instructions when no ws client library is bundled.
+   protocol path — including the 403 dance — is unit-testable offline
+   against the shipped ``kpt_poller.log`` frames.
+2. **Transport**: a REAL stdlib long-polling transport (Engine.IO's
+   polling mode is plain HTTP GET/POST — no WebSocket library needed,
+   same urllib posture as sources/weather.py). The client loop takes
+   any object with the same duck type, which is how tests script it.
 3. **The Spark seam**: :class:`LiveSocketIOClient` is a tiny edge agent
    that appends raw frames to a transcript file — the very file
    ``kpt_socketio`` (streaming/socketio.py) tails as a Structured
@@ -33,14 +31,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from .socketio import (
-    FRAME_NS_CONNECT,
-    FRAME_PING,
-    FRAME_PONG,
-    FRAME_PROBE,
-    FRAME_PROBE_ACK,
-    parse_handshake,
-)
+from .socketio import FRAME_NS_CONNECT, FRAME_PING, FRAME_PONG, parse_handshake
 
 # ---------------------------------------------------------------------------
 # Engine.IO v3 polling payload codec (public protocol: each packet is
@@ -85,15 +76,6 @@ def polling_url(base_url: str, sid: str) -> str:
     return f"{base_url.rstrip('/')}/socket.io/?EIO=3&transport=polling&sid={sid}"
 
 
-def websocket_url(base_url: str, sid: str) -> str:
-    """ws(s) upgrade URL (reference websocket_client.py:210-214).
-    https → wss (the reference's production path); plain http → ws so
-    loopback test servers exercise the identical code path."""
-    scheme = "ws" if base_url.startswith("http://") else "wss"
-    host = base_url.replace("https://", "").replace("http://", "").rstrip("/")
-    return f"{scheme}://{host}/socket.io/?EIO=3&transport=websocket&sid={sid}"
-
-
 # ---------------------------------------------------------------------------
 # Sans-IO actions: the state machine returns these; the driving loop
 # performs them. Keeps every protocol decision synchronous and testable.
@@ -115,30 +97,22 @@ class Deliver:
 
 
 @dataclass(frozen=True)
-class Upgraded:
-    """The ws upgrade handshake completed; the connection is live."""
-
-
-@dataclass(frozen=True)
 class Closed:
     """The server ended the Engine.IO session (close packet ``1``) —
     the driving loop must reconnect, not keep polling a dead sid."""
 
 
 class SocketIOStateMachine:
-    """Engine.IO/Socket.IO client protocol, sans IO.
+    """Engine.IO/Socket.IO client protocol over long-polling, sans IO.
 
     Mirrors the reference's frame handling
     (websocket_client.py:244-269 ``_handle_protocol_message`` /
-    ``_handle_message``; 295-330 keepalive):
+    ``_handle_message``; 295-330 keepalive), minus its ws upgrade:
 
-    * WEBSOCKET mode (``upgrades=True``): on open → send ``2probe``;
-      ``3probe`` → send ``5`` (upgrade) + ``40`` (namespace connect),
-      connection counts as established;
-    * POLLING mode (``upgrades=False``): the session is live as soon as
-      the handshake + namespace connect complete — no probe dance, and
-      the ws-only ``5`` packet is never sent (a protocol violation on
-      polling). Keepalive pings flow immediately;
+    * the session is live as soon as the handshake + namespace connect
+      complete — no probe dance, and the ws-only ``5`` packet is never
+      sent (a protocol violation on polling). Keepalive pings flow
+      immediately;
     * server ``2`` (ping) → answer ``3`` (pong); ``3`` (pong) /
       ``6`` (noop) / ``40`` / ``0{...}`` → bookkeeping only;
     * ``1`` (close) → :class:`Closed`, never delivered downstream;
@@ -147,35 +121,23 @@ class SocketIOStateMachine:
       parser may still salvage) → delivered downstream.
     """
 
-    def __init__(
-        self,
-        ping_interval_s: float = 25.0,
-        clock=time.monotonic,
-        upgrades: bool = True,
-    ):
+    def __init__(self, ping_interval_s: float = 25.0, clock=time.monotonic):
         self.ping_interval = ping_interval_s
         self._clock = clock
-        self.upgrades = upgrades
         self.connected = False
         self._last_ping = clock()
         self.stats = {"messages": 0, "delivered": 0, "pings_sent": 0}
 
     def on_open(self) -> list:
-        """Channel established. WebSocket mode probes for the upgrade;
-        polling mode is already a working session."""
+        """Channel established: a polling session is already working."""
         self._last_ping = self._clock()
-        if not self.upgrades:
-            self.connected = True
-            return []
-        return [Send(FRAME_PROBE)]
+        self.connected = True
+        return []
 
     def on_frame(self, message: str) -> list:
         self.stats["messages"] += 1
         if not message:
             return []
-        if message == FRAME_PROBE_ACK:
-            self.connected = True
-            return [Send("5"), Send(FRAME_NS_CONNECT), Upgraded()]
         if message == FRAME_PONG:
             return []
         if message == FRAME_PING:
@@ -273,11 +235,6 @@ class PollingTransport:
     optional). Same no-extra-deps network posture as sources/weather.py.
     """
 
-    #: no ws probe dance on this transport: the session is live right
-    #: after handshake + namespace connect (the state machine skips the
-    #: upgrade path and starts keepalive pings immediately)
-    upgrades = False
-
     def __init__(self, base_url: str, timeout_s: float = 30.0):
         self.base_url = base_url
         self.timeout_s = timeout_s
@@ -347,121 +304,6 @@ class PollingTransport:
         self.close()
 
 
-class WebSocketTransport:
-    """Upgrade-path transport over the stdlib RFC 6455 client
-    (streaming/ws.py) — the reference's wss flow
-    (websocket_client.py:135-374) with zero external dependencies.
-
-    Flow: an HTTP polling handshake fetches the Engine.IO sid + ping
-    interval (the protocol requires this first step on every transport),
-    then the ws socket at :func:`websocket_url` opens and the state
-    machine runs the probe dance (``upgrades=True`` → ``2probe`` /
-    ``3probe`` / ``5`` + ``40``). ``recv`` returning ``None`` is the
-    per-``recv_tick_s`` idle tick that drives keepalive pings.
-    """
-
-    upgrades = True
-
-    def __init__(
-        self,
-        base_url: str,
-        timeout_s: float = 30.0,
-        recv_tick_s: float = 1.0,
-        connection_factory=None,
-        sid_fetch=None,
-    ):
-        from .ws import WSConnection
-
-        self.base_url = base_url
-        self.timeout_s = timeout_s
-        self.recv_tick_s = recv_tick_s
-        self.sid: str | None = None
-        self._factory = connection_factory or (
-            lambda url: WSConnection(
-                url, timeout_s=recv_tick_s, origin=base_url
-            )
-        )
-        self._sid_fetch = sid_fetch or self._http_sid_fetch
-        self._conn = None
-
-    def _http_sid_fetch(self) -> tuple[str, float]:
-        """Step 1 of the reference flow: plain HTTP polling handshake."""
-        import urllib.error
-        import urllib.request
-
-        req = urllib.request.Request(
-            handshake_url(self.base_url), headers={"Origin": self.base_url}
-        )
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
-                text = resp.read().decode("utf-8")
-        except urllib.error.HTTPError as exc:
-            raise TransportError(str(exc), status=exc.code) from exc
-        except Exception as exc:  # noqa: BLE001 — URLError, socket.timeout
-            raise TransportError(str(exc)) from exc
-        sid, ping_ms = parse_handshake(text)
-        if not sid:
-            raise TransportError(f"unparseable handshake: {text[:100]!r}")
-        return sid, (ping_ms or 25000) / 1000.0
-
-    def handshake(self) -> tuple[str, float]:
-        from .ws import WSError
-
-        sid, ping_s = self._sid_fetch()
-        conn = self._factory(websocket_url(self.base_url, sid))
-        try:
-            conn.connect()
-        except WSError as exc:
-            raise TransportError(str(exc), status=exc.status) from exc
-        except OSError as exc:
-            raise TransportError(str(exc)) from exc
-        self._conn, self.sid = conn, sid
-        return sid, ping_s
-
-    def connect(self) -> None:
-        """No-op: on the ws transport the namespace connect (``40``) is
-        emitted by the state machine after the probe ack, matching the
-        reference's upgrade ordering."""
-        if self._conn is None:
-            raise TransportError("connect before handshake")
-
-    def recv(self) -> str | None:
-        from .ws import WSError
-
-        if self._conn is None:
-            raise TransportError("recv before handshake")
-        try:
-            msg = self._conn.recv_message()
-        except WSError as exc:
-            raise TransportError(str(exc), status=exc.status) from exc
-        except ConnectionError as exc:
-            raise TransportError(str(exc)) from exc
-        if msg is None:
-            return None
-        _opcode, payload = msg
-        return payload.decode("utf-8", "replace")
-
-    def send(self, frame: str) -> None:
-        from .ws import WSError
-
-        if self._conn is None:
-            raise TransportError("send before handshake")
-        try:
-            self._conn.send_text(frame)
-        except (WSError, OSError) as exc:
-            raise TransportError(str(exc)) from exc
-
-    def close(self) -> None:
-        if self._conn is not None:
-            self._conn.close()
-        self._conn, self.sid = None, None
-
-    def refresh(self) -> None:
-        """ST9: drop the connection and session id; the next handshake
-        starts from scratch."""
-        self.close()
-
-
 # ---------------------------------------------------------------------------
 # The live client: transport + state machine + policies → transcript file
 # ---------------------------------------------------------------------------
@@ -527,13 +369,7 @@ class LiveSocketIOClient:
             connects += 1
             try:
                 _sid, ping_s = self.transport.handshake()
-                # transports advertise whether they do the ws probe dance;
-                # the stdlib polling transport is live straight away
-                self.machine = SocketIOStateMachine(
-                    ping_s,
-                    clock=self._clock,
-                    upgrades=getattr(self.transport, "upgrades", True),
-                )
+                self.machine = SocketIOStateMachine(ping_s, clock=self._clock)
                 self.transport.connect()
                 self._apply(self.machine.on_open())
                 self.session.record_success()

@@ -71,10 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register every testdata table as a temp view (normalized schema —
     events carries ts/ts_us/ts_ns like every registered query sees it)

@@ -1,0 +1,67 @@
+"""Physical-plan assertions for the plan-shape tests: each helper turns
+``explain()`` text (kyiv_traffic_bigdata_spark.plans.physical_plan) into
+an assertable fact.
+
+A correct query that shuffles the fact table where a broadcast would do,
+or re-evaluates an expensive projection inside a scan-level Filter,
+fails at scale; these counts let tests pin the good plan shapes and
+catch optimizer-interaction regressions (see
+operators.dedup.shingle_index for a real one: an inferred explode filter
+pushed a whole n-gram pipeline into the scan).
+"""
+
+from __future__ import annotations
+
+import re
+
+
+def exchange_count(plan: str) -> int:
+    """Number of shuffle exchanges (excludes broadcast + reused ones).
+
+    The scale metric: every Exchange is a full materialize-and-repartition
+    of its input. Reused exchanges are shared scans, not extra shuffles.
+    Handles both explain modes: simple (``Exchange hashpartitioning(...)``)
+    and formatted (``(5) Exchange`` + an ``Arguments: hashpartitioning``
+    detail block).
+    """
+    simple = len(re.findall(r"\bExchange (?:hash|range)partitioning", plan))
+    formatted = len(
+        re.findall(
+            r"\(\d+\) Exchange\n(?:[^\n]*\n){0,3}?Arguments: (?:hash|range)partitioning",
+            plan,
+        )
+    )
+    return max(simple, formatted)
+
+
+def broadcast_join_count(plan: str) -> int:
+    return len(re.findall(r"\bBroadcastHashJoin\b|\bBroadcastNestedLoopJoin\b", plan))
+
+
+def sort_merge_join_count(plan: str) -> int:
+    return len(re.findall(r"\bSortMergeJoin\b", plan))
+
+
+def scan_filter_exprs(plan: str) -> list[str]:
+    """DataFilters/PushedFilters attached to file scans.
+
+    Useful both positively (a selective predicate SHOULD reach the scan)
+    and negatively (an expensive derived expression should NOT — that
+    means the optimizer cloned a costly projection into the scan filter).
+    """
+    out: list[str] = []
+    for m in re.finditer(r"(?:DataFilters|PushedFilters): \[(.*?)\]", plan):
+        if m.group(1).strip():
+            out.append(m.group(1))
+    return out
+
+
+def parquet_scan_count(plan: str, table: str) -> int:
+    """Number of parquet scans of a given table in a FORMATTED plan.
+
+    Path-based reads leave the ``Scan parquet`` tree node nameless — the
+    table is only identifiable from the ``Location:`` detail line — so a
+    naive ``Scan parquet.*<table>`` regex silently matches nothing and
+    turns absence assertions vacuous. Count Location lines instead.
+    """
+    return len(re.findall(rf"Location: [^\n]*[/_]{re.escape(table)}\.parquet", plan))

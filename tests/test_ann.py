@@ -144,17 +144,34 @@ def test_pq_codes_shape_and_range(emb, pq_books):
         assert r.recon_sq_err >= 0.0
 
 
+def _pq_decode(codes, books):
+    """Reference decode of a PQ code array back to its quantized
+    array<double> (codebook lookup + flatten)."""
+    from kyiv_traffic_bigdata_spark.operators.pq import _literal_cube
+
+    cube = _literal_cube(books)
+    return F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(len(books) - 1)),
+            lambda s: F.element_at(
+                F.element_at(cube, s + 1),
+                F.element_at(codes, s + 1) + 1,
+            ),
+        )
+    )
+
+
 def test_pq_reconstruction_error_matches_decode(spark, emb, pq_books):
     """recon_sq_err must equal the squared distance to the decoded
     vector — the encode argmin and the decode lookup agree."""
     from kyiv_traffic_bigdata_spark.functions.vector import sq_dist
-    from kyiv_traffic_bigdata_spark.operators.pq import encode_pq, reconstruct
+    from kyiv_traffic_bigdata_spark.operators.pq import encode_pq
 
     enc = encode_pq(emb, pq_books, keep_cols=("embedding",))
     chk = enc.select(
         "vec_id",
         "recon_sq_err",
-        sq_dist(F.col("embedding"), reconstruct(F.col("codes"), pq_books)).alias(
+        sq_dist(F.col("embedding"), _pq_decode(F.col("codes"), pq_books)).alias(
             "direct"
         ),
     ).collect()

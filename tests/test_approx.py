@@ -4,10 +4,8 @@ r11: the registered ``approx_event_stats`` query was re-based on the
 PORTABLE md5-register HLL (operators/hll.py) so it holds a full DuckDB
 oracle — cross-engine equality is now the driver gate's job, and these
 tests pin that the estimate is a GOOD one. The native HLL++ path
-(``approx_count_distinct``, engine-defined sampling → permanently
-un-oracle-able) stays available as
-``operators.aggregates.approx_grouped_stats`` and keeps its original
-2%-at-rsd=0.01 accuracy pin here.
+(``approx_count_distinct``) is not used: its engine-defined sampling
+can never match an oracle.
 """
 
 from __future__ import annotations
@@ -44,28 +42,6 @@ def test_portable_hll_estimate_within_error_budget(spark, sf_dir):
     for t, e in exact.items():
         rel = abs(approx[t] - e) / max(e, 1)
         assert rel <= budget, (t, approx[t], e, rel)
-
-
-def test_native_approx_distinct_within_2pct(spark, sf_dir):
-    """The native HLL++ twin (rsd=0.01) must stay within 2% of the
-    exact distinct count on every group — the original accuracy
-    contract, kept on the operator the big-cluster path would use when
-    cross-engine determinism is not required."""
-    from kyiv_traffic_bigdata_spark.operators.aggregates import (
-        approx_grouped_stats,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    approx = {
-        r.event_type: r.entities_approx
-        for r in approx_grouped_stats(
-            ev, ["event_type"], "value", "user_id", rsd=0.01
-        ).collect()
-    }
-    exact = _exact_distinct(spark, sf_dir)
-    assert set(approx) == set(exact)
-    for t, e in exact.items():
-        assert abs(approx[t] - e) <= max(1, 0.02 * e), (t, approx[t], e)
 
 
 def test_approx_avg_matches_exact_path(spark, sf_dir):

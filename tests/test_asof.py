@@ -68,7 +68,8 @@ def test_tolerance_nulls_stale_matches(spark):
 
 
 def test_single_shuffle_plan(spark):
-    from kyiv_traffic_bigdata_spark.plans import exchange_count, physical_plan
+    from kyiv_traffic_bigdata_spark.plans import physical_plan
+    from plan_checks import exchange_count
 
     left, right = _frames(spark)
     plan = physical_plan(

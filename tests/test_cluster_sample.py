@@ -175,3 +175,16 @@ def test_upsample_mix_non_dyadic_fraction_parity(spark, sf_dir, monkeypatch):
     )
     want = sorted(map(tuple, con.execute(Q._sql_upsample_mix()).fetchall()))
     assert got == want
+
+
+def test_staging_reliable_mode(spark, tmp_path, monkeypatch):
+    from kyiv_traffic_bigdata_spark.operators import staging
+
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    monkeypatch.setattr(staging, "_MODE", "reliable")
+    edges = _edges(spark, [(1, 2), (2, 3), (10, 11)])
+    comp = {r.node: r.component for r in connected_components(edges).collect()}
+    assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    # reliable mode wrote real checkpoint files to durable storage
+    assert any(ckpt.rglob("*"))

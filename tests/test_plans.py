@@ -14,15 +14,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from kyiv_traffic_bigdata_spark.operators.dedup import shingle_index
-from kyiv_traffic_bigdata_spark.plans import (
+from kyiv_traffic_bigdata_spark.plans import physical_plan
+from kyiv_traffic_bigdata_spark.queries import QUERIES
+from plan_checks import (
     broadcast_join_count,
     exchange_count,
     parquet_scan_count,
-    physical_plan,
     scan_filter_exprs,
     sort_merge_join_count,
 )
-from kyiv_traffic_bigdata_spark.queries import QUERIES
 
 
 @pytest.fixture(scope="module")

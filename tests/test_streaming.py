@@ -17,11 +17,8 @@ from kyiv_traffic_bigdata_spark.streaming.ingest import (
     replay_text_stream,
     start_positions_sink,
 )
-from kyiv_traffic_bigdata_spark.streaming.socketio import (
-    is_protocol_frame,
-    parse_handshake,
-    register,
-)
+from kyiv_traffic_bigdata_spark.streaming.socketio import parse_handshake, register
+from kyiv_traffic_bigdata_spark.streaming.transport import Deliver, SocketIOStateMachine
 
 CSV = "{vid},{rid},50.45,30.52,0,0,{ts}"
 
@@ -38,10 +35,14 @@ def test_parse_handshake():
 
 
 def test_protocol_frame_classification():
-    for f_ in ["2", "3", "2probe", "3probe", "40", '0{"sid":"x"}']:
-        assert is_protocol_frame(f_), f_
+    """SocketIOStateMachine.on_frame is the one frame classifier: protocol
+    frames never reach the transcript, data frames always do."""
+    m = SocketIOStateMachine(25.0)
+    m.on_open()
+    for f_ in ["2", "3", "6", "40", '0{"sid":"x"}', ""]:
+        assert not any(isinstance(a, Deliver) for a in m.on_frame(f_)), f_
     for f_ in [frame(1, 2, 100), "1,2,50.45,30.52,0,0,100", "42x"]:
-        assert not is_protocol_frame(f_), f_
+        assert m.on_frame(f_) == [Deliver(f_)], f_
 
 
 def _run_transcript(spark, transcript, out_dir, ckpt, expect_rows):

@@ -15,12 +15,10 @@ from kyiv_traffic_bigdata_spark.streaming.transport import (
     SessionPolicy,
     SocketIOStateMachine,
     TransportError,
-    Upgraded,
-    WebSocketTransport,
     decode_polling_payload,
     encode_polling_payload,
     handshake_url,
-    websocket_url,
+    polling_url,
 )
 
 EVENT = '42["locations",["77,3,50.45,30.52,0,0,1770000000"]]'
@@ -45,9 +43,8 @@ def test_url_builders():
     assert handshake_url("https://host.example/") == (
         "https://host.example/socket.io/?EIO=3&transport=polling"
     )
-    # wss upgrade URL mirrors reference websocket_client.py:210-214
-    assert websocket_url("https://host.example", "S1D") == (
-        "wss://host.example/socket.io/?EIO=3&transport=websocket&sid=S1D"
+    assert polling_url("https://host.example", "S1D") == (
+        "https://host.example/socket.io/?EIO=3&transport=polling&sid=S1D"
     )
 
 
@@ -55,18 +52,20 @@ def test_url_builders():
 
 
 def test_upgrade_sequence():
-    """open → 2probe; 3probe → 5 + 40 + Upgraded (websocket_client.py:244-252)."""
+    """Polling never upgrades: open sends nothing and the session is
+    live at once; the open packet and namespace ack are bookkeeping,
+    and the first event is delivered (websocket_client.py:244-269)."""
     m = SocketIOStateMachine(25.0)
-    assert m.on_open() == [Send("2probe")]
-    assert not m.connected
-    acts = m.on_frame("3probe")
-    assert acts == [Send("5"), Send("40"), Upgraded()]
+    assert m.on_open() == []
     assert m.connected
+    assert m.on_frame('0{"sid":"x"}') == []
+    assert m.on_frame("40") == []
+    assert m.on_frame(EVENT) == [Deliver(EVENT)]
 
 
 def test_ping_pong_and_delivery():
     m = SocketIOStateMachine(25.0)
-    m.on_frame("3probe")
+    m.on_open()
     assert m.on_frame("2") == [Send("3")]  # server ping → pong
     assert m.on_frame("3") == []  # pong: bookkeeping only
     assert m.on_frame("40") == []  # namespace ack
@@ -79,7 +78,7 @@ def test_ping_pong_and_delivery():
 def test_keepalive_ping_on_idle():
     now = [0.0]
     m = SocketIOStateMachine(25.0, clock=lambda: now[0])
-    m.on_frame("3probe")
+    m.on_open()
     assert m.on_tick() == []  # not due yet
     now[0] = 26.0
     assert m.on_tick() == [Send("2")]
@@ -136,7 +135,7 @@ class FakeTransport:
         return result
 
     def connect(self):
-        pass
+        self.sent.append("40")  # namespace connect, as PollingTransport posts it
 
     def recv(self):
         if not self._frames:
@@ -154,13 +153,13 @@ class FakeTransport:
 
 
 def test_client_happy_path_spools_data_frames():
-    t = FakeTransport([(("sid1", 25.0), ["3probe", "40", EVENT, "2", EVENT])])
+    t = FakeTransport([(("sid1", 25.0), ["40", EVENT, "2", EVENT])])
     out = []
     c = LiveSocketIOClient(t, out.append, sleep=lambda _s: None)
     c.run(max_frames=2)
     assert out == [EVENT, EVENT]
-    # probe → upgrade(5) + ns connect(40) → pong for the server ping
-    assert t.sent == ["2probe", "5", "40", "3"]
+    # ns connect(40) → pong for the server ping; no ws probe over polling
+    assert t.sent == ["40", "3"]
     assert c.stats["connections"] == 1 and c.stats["errors"] == 0
 
 
@@ -170,7 +169,7 @@ def test_client_refreshes_on_403_then_reconnects():
     t = FakeTransport(
         [
             (TransportError("HTTP 403", status=403), []),
-            (("sid2", 25.0), ["3probe", EVENT]),
+            (("sid2", 25.0), [EVENT]),
         ]
     )
     slept = []
@@ -190,7 +189,7 @@ def test_client_backs_off_exponentially_on_failures():
             (TransportError("down"), []),
             (TransportError("down"), []),
             (TransportError("down"), []),
-            (("sid", 25.0), ["3probe", EVENT]),
+            (("sid", 25.0), [EVENT]),
         ]
     )
     slept = []
@@ -204,12 +203,13 @@ def test_client_backs_off_exponentially_on_failures():
 
 
 def test_client_reconnects_after_connection_loss():
-    """Connection drop mid-stream → new handshake, upgrade redone, no
-    frame loss across sessions (websocket_client.py:334-374 run loop)."""
+    """Connection drop mid-stream → new handshake, namespace connect
+    redone, no frame loss across sessions (websocket_client.py:334-374
+    run loop)."""
     t = FakeTransport(
         [
-            (("sid1", 25.0), ["3probe", EVENT]),  # then recv raises
-            (("sid2", 25.0), ["3probe", EVENT]),
+            (("sid1", 25.0), [EVENT]),  # then recv raises
+            (("sid2", 25.0), [EVENT]),
         ]
     )
     out = []
@@ -218,7 +218,7 @@ def test_client_reconnects_after_connection_loss():
     c.run(max_frames=2)
     assert out == [EVENT, EVENT]
     assert c.stats["connections"] == 2
-    assert t.sent.count("2probe") == 2
+    assert t.sent.count("40") == 2
 
 
 def test_client_max_connects_bounds_the_loop():
@@ -228,28 +228,18 @@ def test_client_max_connects_bounds_the_loop():
     assert c.stats["errors"] == 3
 
 
-def test_websocket_transport_duck_type_and_guards():
-    """The upgrade transport is real now (streaming/ws.py; loopback
-    integration in tests/test_ws.py). Pin the transport duck type the
-    client loop relies on, plus the pre-handshake guards."""
-    t = WebSocketTransport("https://host.example")
-    assert t.upgrades is True  # drives the machine's probe dance
-    for op in (t.connect, t.recv, lambda: t.send("2")):
-        with pytest.raises(TransportError):
-            op()
-    t.close()  # idempotent before handshake
-
-
 def test_transcript_sink_feeds_datasource_format(tmp_path):
     """End-to-end seam check: frames sunk by the live client are exactly
-    what the kpt_socketio transcript reader tails (one frame per line)."""
+    what the kpt_socketio transcript reader tails (one frame per line,
+    so an embedded newline must not split a frame in two)."""
     from kyiv_traffic_bigdata_spark.streaming.transport import TranscriptSink
 
     path = tmp_path / "live.log"
-    t = FakeTransport([(("sid", 25.0), ["3probe", EVENT, EVENT])])
+    multiline = EVENT[:-2] + '\n"]'
+    t = FakeTransport([(("sid", 25.0), [EVENT, multiline])])
     c = LiveSocketIOClient(t, TranscriptSink(str(path)), sleep=lambda _s: None)
     c.run(max_frames=2)
-    assert path.read_text().splitlines() == [EVENT, EVENT]
+    assert path.read_text().splitlines() == [EVENT, multiline.replace("\n", " ")]
 
 
 # --- golden replay of the reference's shipped poller log --------------------
@@ -260,8 +250,8 @@ REF_POLLER_LOG = "/root/reference/kpt/poller/data/remote/kpt_poller.log"
 def _sessions_from_log(path):
     """Reconstruct per-connection frame sequences from the reference's
     own poller log (kpt_poller.log): 'sending upgrade probe' starts a
-    session, 'Received probe response' is the 3probe ack, 'WS message
-    #N: <frame>' carries the (100-char-truncated) data frames."""
+    session, 'WS message #N: <frame>' carries the (100-char-truncated)
+    frames. The probe exchange itself is ws-only and is not replayed."""
     sessions, cur = [], None
     with open(path, encoding="utf-8") as fh:
         for line in fh:
@@ -270,8 +260,6 @@ def _sessions_from_log(path):
                 if cur:
                     sessions.append(cur)
                 cur = []
-            elif "Received probe response" in line and cur is not None:
-                cur.append("3probe")
             elif " - WS message #" in line and cur is not None:
                 cur.append(line.split(": ", 1)[1])
     if cur:
@@ -282,8 +270,8 @@ def _sessions_from_log(path):
 def test_state_machine_replays_reference_poller_log():
     """Golden parity: driving the sans-IO machine with the frame sequence
     reconstructed from the reference's OWN log must reproduce the
-    reference's logged behavior — one upgrade (5 + 40 sent) per
-    connection, every 42[...] frame delivered, nothing else emitted."""
+    reference's logged behavior — every 42[...] frame delivered, every
+    server ping answered with a pong, nothing else emitted."""
     import os
 
     if not os.path.exists(REF_POLLER_LOG):
@@ -294,8 +282,7 @@ def test_state_machine_replays_reference_poller_log():
     for frames in sessions:
         m = SocketIOStateMachine(25.0)
         sent, delivered = [], []
-        for act in m.on_open():
-            sent.append(act.data)
+        assert m.on_open() == [] and m.connected
         for f in frames:
             for act in m.on_frame(f):
                 if isinstance(act, Send):
@@ -304,10 +291,7 @@ def test_state_machine_replays_reference_poller_log():
                     delivered.append(act.frame)
         data_frames = [f for f in frames if f.startswith("42")]
         assert delivered == data_frames
-        # reference upgrade dance: probe out, then 5 + 40 after the ack
-        assert sent[0] == "2probe"
-        if "3probe" in frames:
-            assert m.connected and sent[1:3] == ["5", "40"]
+        assert sent == ["3"] * frames.count("2")
         total_delivered += len(delivered)
     # the log says it saw 15+ WS messages across sessions (some sessions
     # reconnect before any data frame arrives — that's fine)
@@ -377,14 +361,14 @@ def test_polling_transport_maps_http_errors():
 
 
 def test_polling_mode_is_connected_without_probe_and_pings():
-    """In polling mode (upgrades=False) the session is live immediately:
-    no 2probe is sent (ws-only packet) and keepalive pings flow."""
+    """Over polling the session is live immediately: no 2probe is sent
+    (ws-only packet) and keepalive pings flow."""
     from kyiv_traffic_bigdata_spark.streaming.transport import (
         SocketIOStateMachine,
     )
 
     now = [0.0]
-    m = SocketIOStateMachine(25.0, clock=lambda: now[0], upgrades=False)
+    m = SocketIOStateMachine(25.0, clock=lambda: now[0])
     assert m.on_open() == []  # no probe over polling
     assert m.connected
     now[0] = 26.0
@@ -395,7 +379,7 @@ def test_close_and_noop_packets_are_protocol_not_data():
     from kyiv_traffic_bigdata_spark.streaming.transport import Closed
 
     m = SocketIOStateMachine(25.0)
-    m.on_frame("3probe")
+    m.on_open()
     assert m.on_frame("6") == []  # noop: ignored
     acts = m.on_frame("1")  # close: surfaced, never delivered
     assert acts == [Closed()]
@@ -406,8 +390,8 @@ def test_close_and_noop_packets_are_protocol_not_data():
 def test_client_reconnects_on_server_close_packet():
     t = FakeTransport(
         [
-            (("sid1", 25.0), ["3probe", "1"]),  # server closes the session
-            (("sid2", 25.0), ["3probe", EVENT]),
+            (("sid1", 25.0), ["1"]),  # server closes the session
+            (("sid2", 25.0), [EVENT]),
         ]
     )
     out = []
@@ -422,7 +406,7 @@ def test_repeated_403s_back_off_instead_of_busy_looping():
     403s every fresh session must back off like any outage."""
     t = FakeTransport(
         [(TransportError("HTTP 403", status=403), [])] * 4
-        + [(("sid", 25.0), ["3probe", EVENT])]
+        + [(("sid", 25.0), [EVENT])]
     )
     slept = []
     out = []

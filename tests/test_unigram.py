@@ -26,7 +26,6 @@ from kyiv_traffic_bigdata_spark.operators.unigram import (
     seed_pieces,
     viterbi_encode,
     viterbi_segment,
-    vocab_frame,
     word_counts,
 )
 
@@ -122,11 +121,16 @@ def test_encode_reconstructs_and_counts(spark):
     assert rows[2] == [] and rows[3] == []
 
 
-def test_empty_corpus_trains_empty_and_query_stays_typed(spark, tmp_path):
+def test_empty_corpus_trains_empty_and_query_stays_typed(spark, sf_dir, tmp_path):
+    from kyiv_traffic_bigdata_spark.queries import QUERIES
+
     docs = spark.createDataFrame([], "doc_id long, text string")
     assert em_train(word_counts(docs)) == []
-    vf = vocab_frame(spark, [])
-    assert vf.count() == 0 and len(vf.schema) == 3
+    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    out = QUERIES["doc_unigram_tokenize"](spark, str(tmp_path))
+    assert out.count() == 0 and len(out.schema) == 4
 
 
 def test_unk_logprob_is_a_floor():
@@ -138,11 +142,9 @@ def test_unk_logprob_is_a_floor():
 def test_zero_probability_pieces_never_reach_log(spark):
     """A trained piece whose probability collapsed to exactly 0.0 (all
     10-dp expected-count contributions rounded to 0) must not crash
-    vocab_frame / viterbi_encode with log(0) (r09 ADVICE): it is
-    dropped, and its characters pay the UNK single-char fallback."""
+    viterbi_encode with log(0) (r09 ADVICE): it is dropped, and its
+    characters pay the UNK single-char fallback."""
     vocab = [("ab", 0.0), ("a", 0.5), ("b", 0.0), ("c", 0.5)]
-    vf = vocab_frame(spark, vocab)
-    assert {r.piece for r in vf.collect()} == {"a", "c"}
     docs = spark.createDataFrame([(1, "abca")], "doc_id long, text string")
     rows = viterbi_encode(docs, "text", vocab, max_piece_len=2).collect()
     # "ab" and "b" are unusable; "b" segments via the UNK fallback

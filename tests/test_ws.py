@@ -210,43 +210,6 @@ def test_wsconnection_loopback_text_ping_fragmentation_close():
     assert not srv.saw_unmasked_client_frame  # §5.3 client masking held
 
 
-def test_socketio_client_over_real_websocket_loopback(tmp_path):
-    """End-to-end ST5/ST7 path on a REAL socket: Engine.IO probe dance
-    over the RFC 6455 transport, two data frames spooled to the
-    transcript sink the Spark streaming source tails."""
-    from kyiv_traffic_bigdata_spark.streaming.transport import (
-        LiveSocketIOClient,
-        TranscriptSink,
-        WebSocketTransport,
-    )
-
-    def script(conn: ServerConn):
-        conn.expect_text("2probe")
-        conn.send_text("3probe")
-        conn.expect_text("5")  # upgrade packet
-        conn.expect_text("40")  # namespace connect
-        conn.send_text('42["positions",{"data":"AAA"}]')
-        conn.send_text('42["positions",{"data":"BBB"}]')
-        # the client stops at max_frames; give it a moment then close
-        conn.close()
-
-    srv = LoopbackServer(script)
-    transcript = tmp_path / "live.transcript"
-    transport = WebSocketTransport(
-        f"http://127.0.0.1:{srv.port}",
-        sid_fetch=lambda: ("sid-loopback", 25.0),
-        recv_tick_s=5.0,
-    )
-    client = LiveSocketIOClient(transport, TranscriptSink(str(transcript)))
-    client.run(max_frames=2, max_connects=1)
-    transport.close()
-    srv.join()
-    lines = transcript.read_text().splitlines()
-    assert lines == ['42["positions",{"data":"AAA"}]', '42["positions",{"data":"BBB"}]']
-    assert client.stats["connections"] == 1 and client.stats["frames"] == 2
-    assert client.machine is not None and client.machine.connected
-
-
 def test_eway_timed_capture_over_live_websocket(tmp_path):
     """S13 live binding: binary GPS frames arrive over a real socket and
     land in the capture sink as bytes; server close ends the session."""
