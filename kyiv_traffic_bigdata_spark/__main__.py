@@ -47,7 +47,7 @@ def cmd_ingest(args: argparse.Namespace) -> int:
 
     spark = _spark("kpt-ingest")
     fixes = read_positions_ordered(spark, args.positions)
-    write_positions(fixes, args.out, buckets=args.buckets)
+    write_positions(fixes, args.out)
     print(f"wrote {args.out}")
     return 0
 
@@ -256,7 +256,6 @@ def build_parser() -> argparse.ArgumentParser:
     i = sub.add_parser("ingest", help="positions JSONL -> date-partitioned parquet")
     i.add_argument("--positions", required=True)
     i.add_argument("--out", required=True)
-    i.add_argument("--buckets", type=int, default=0)
     i.set_defaults(fn=cmd_ingest)
 
     po = sub.add_parser("poll", help="live Socket.IO capture -> transcript JSONL")

@@ -4,8 +4,7 @@ The reference ships two inconsistent Kyiv bounding boxes (see SURVEY.md
 §1.2): the live poller filter uses the wider box (reference
 ``kpt/poller/config.py:34-43``) while the EWAY/OSM modules use a narrower
 one (reference ``settings.py:53``, ``eway/pipeline/ws_interceptor.py:27``).
-Bounds are therefore a *parameter* everywhere in this engine; these
-constants are the defaults.
+Each module here uses the box its reference counterpart uses.
 """
 
 from __future__ import annotations

@@ -126,9 +126,10 @@ def stopword_hits(tok: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.array_intersect(tok, F.array(*[F.lit(w) for w in words])))
 
 
-def stopword_ratio(tok: Column, words: tuple[str, ...] = QUALITY_STOPWORDS) -> Column:
-    """Share of tokens that are stopwords (occurrence-based, not distinct)."""
-    hits = F.size(F.filter(tok, lambda t: t.isin(*words)))
+def stopword_ratio(tok: Column) -> Column:
+    """Share of tokens that are QUALITY_STOPWORDS (occurrence-based, not
+    distinct)."""
+    hits = F.size(F.filter(tok, lambda t: t.isin(*QUALITY_STOPWORDS)))
     return F.when(F.size(tok) == 0, F.lit(0.0)).otherwise(hits / F.size(tok))
 
 

@@ -183,12 +183,13 @@ def map_rows(fixes: DataFrame, samples: DataFrame) -> DataFrame:
     )
 
 
-def map_center(latest: DataFrame) -> tuple[float, float]:
-    """A4 (visualize.py:189-193): center of mass of latest fixes."""
-    row = latest.agg(F.avg("lat").alias("la"), F.avg("lon").alias("lo")).collect()[0]
-    if row.la is None:
+def map_center(rows: list[dict]) -> tuple[float, float]:
+    """A4 (visualize.py:189-193): center of mass of the collected latest
+    fixes; KYIV_CENTER when there are none."""
+    if not rows:
         return KYIV_CENTER
-    return (row.la, row.lo)
+    n = len(rows)
+    return (sum(r["lat"] for r in rows) / n, sum(r["lon"] for r in rows) / n)
 
 
 #: Minimal Leaflet artifact (functional equivalent of the reference's
@@ -227,7 +228,7 @@ for (const r of rows) {
 def render_map_html(rows: DataFrame, output_path: str) -> int:
     """S15: collect <=fleet-size map rows and render the Leaflet page."""
     collected = [r.asDict() for r in rows.collect()]
-    center = map_center(rows) if collected else KYIV_CENTER
+    center = map_center(collected)
     html = _MAP_TEMPLATE.substitute(
         center_lat=center[0],
         center_lon=center[1],

@@ -33,14 +33,11 @@ def asof_join(
     right_ts: str,
     right_value_cols: list[str],
     right_tiebreak: str | None = None,
-    tolerance_s: float | None = None,
 ) -> DataFrame:
     """Left as-of join: latest right row with ``right_ts <= left_ts`` per key.
 
     Returns every left row plus ``asof_<right_ts>`` and the requested
-    right value columns (null when no right row precedes). ``tolerance_s``
-    additionally nulls matches staler than the given gap (the weather
-    use-case: ignore hours-old observations).
+    right value columns (null when no right row precedes).
     """
     l_tag = left.select(
         *key_cols,
@@ -77,12 +74,6 @@ def asof_join(
         filled = filled.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w))
 
     out = filled.where(F.col("_side") == 1)
-    if tolerance_s is not None:
-        fresh = (
-            F.col("_r_ts").cast("double") >= F.col("_ts").cast("double") - tolerance_s
-        )
-        for c in fill_cols:
-            out = out.withColumn(c, F.when(fresh, F.col(c)))
     return out.select(
         "_l.*",
         F.col("_r_ts").alias(f"asof_{right_ts}"),

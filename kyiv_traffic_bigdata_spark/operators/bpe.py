@@ -7,10 +7,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def adjacent_pair_counts(tokens_df: DataFrame, tokens_col: str = "t") -> DataFrame:
-    """(a, b, n) counts of adjacent token pairs — one explode + one
-    partial-aggregated hash aggregate."""
-    t = F.col(tokens_col)
+def adjacent_pair_counts(tokens_df: DataFrame) -> DataFrame:
+    """(a, b, n) counts of adjacent token pairs of the token-array column
+    ``t`` — one explode + one partial-aggregated hash aggregate."""
+    t = F.col("t")
     pairs = tokens_df.where(F.size(t) >= 2).select(
         F.explode(F.sequence(F.lit(1), F.size(t) - 1)).alias("_i"),
         t.alias("_t"),

@@ -33,13 +33,17 @@ LSH_BANDS = 4
 LSH_ROWS = NUM_PERM // LSH_BANDS
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1 (Mersenne); products stay < 2^63
 
+#: Word n-gram size of the near-dup shingles (the DuckDB twin is
+#: ``queries._SHINGLES``).
+SHINGLE_NGRAM = 3
+
 
 def perm_coeffs(i: int) -> tuple[int, int]:
     """Deterministic permutation coefficients (odd a, spread b)."""
     return 2 * i + 1, 7919 * i + 17
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup via normalized-text fingerprint (md5) hash-groupBy.
 
     Output: one row per distinct content — representative id (min),
@@ -47,15 +51,13 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     the cheapest possible dedup (no pairwise anything).
     """
     return (
-        docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("rep_id"), F.count(F.lit(1)).alias("copies"))
+        .agg(F.min("doc_id").alias("rep_id"), F.count(F.lit(1)).alias("copies"))
     )
 
 
-def shingle_index(
-    docs: DataFrame, id_col: str, text_col: str, ngram: int
-) -> DataFrame:
+def shingle_index(docs: DataFrame, ngram: int) -> DataFrame:
     """Inverted index: (doc_id, shingle) with DISTINCT word n-gram shingles.
 
     The whole chain is pure Catalyst — no Python boundary at all. An
@@ -78,9 +80,7 @@ def shingle_index(
     # 11s query on one core otherwise). No repartition here: operators
     # stacking their own shuffles on top of the caller's doubles the
     # exchange of raw text for nothing.
-    toked = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_tok")
-    )
+    toked = docs.select("doc_id", tokens(F.col("text")).alias("_tok"))
     grams = toked.select("doc_id", word_ngrams(F.col("_tok"), ngram).alias("_g"))
     # explode_outer + post-filter, NOT plain explode: InferFiltersFromGenerate
     # would add size(_g) > 0 under a plain explode, and predicate pushdown
@@ -176,9 +176,7 @@ def jaccard_verify(
     )
 
 
-def _rare_pair_counts(
-    docs: DataFrame, id_col: str, text_col: str, ngram: int, max_doc_freq: int
-) -> DataFrame:
+def _rare_pair_counts(docs: DataFrame, max_doc_freq: int) -> DataFrame:
     """Rare-shingle candidate pairs with hot-shingle completion inputs —
     the shared candidate build of :func:`ngram_jaccard_pairs` and
     :func:`containment_pairs`: one row per (id_a < id_b) pair sharing at
@@ -202,7 +200,7 @@ def _rare_pair_counts(
     # assignment is frozen before its two consumers (rare and hot
     # splits) read it — an unstaged mono-id recomputed under a task
     # retry could disagree between consumers (see prefix_filter_pairs).
-    idx = shingle_index(docs, id_col, text_col, ngram).transform(stage)
+    idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
     dfreq = (
         idx.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -255,9 +253,6 @@ def _rare_pair_counts(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int = NGRAM_MAX_DOC_FREQ,
 ) -> DataFrame:
@@ -284,7 +279,7 @@ def ngram_jaccard_pairs(
     Output (a<b) pairs with jaccard ≥ threshold, rounded to 6 for engine
     portability.
     """
-    joined = _rare_pair_counts(docs, id_col, text_col, ngram, max_doc_freq)
+    joined = _rare_pair_counts(docs, max_doc_freq)
     # upper bound on the full intersection; J is increasing in n_inter, so
     # ub(1+t) < t(n_a+n_b) proves jaccard < t without touching the arrays
     ub = F.col("n_rare") + F.least(F.size("hot_a"), F.size("hot_b"))
@@ -304,13 +299,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def prefix_filter_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """ALL pairs with exact shingle-set Jaccard ≥ ``threshold`` via
     **lossless prefix filtering** (the AllPairs / PPJoin candidate rule).
 
@@ -371,7 +360,7 @@ def prefix_filter_pairs(
     """
     from pyspark.sql.window import Window
 
-    idx = shingle_index(docs, id_col, text_col, ngram).transform(stage)
+    idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
     dfreq = (
         idx.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -464,9 +453,6 @@ def prefix_filter_pairs(
 
 def sorted_neighborhood_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
     window: int = 3,
     threshold: float = 0.3,
 ) -> DataFrame:
@@ -490,16 +476,13 @@ def sorted_neighborhood_pairs(
     from pyspark.sql.window import Window
     from ..functions.text import normalize_text
 
-    idx = shingle_index(docs, id_col, text_col, ngram).transform(stage)
+    idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
     arrs = idx.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("shingle")).alias("_arr"),
         F.count(F.lit(1)).alias("_n"),
     )
     base = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            normalize_text(F.col(text_col)).alias("_k"),
-        )
+        docs.select("doc_id", normalize_text(F.col("text")).alias("_k"))
         .withColumn("_blk", F.substring_index(F.col("_k"), " ", 1))
         .join(arrs, "doc_id")
     )
@@ -552,9 +535,6 @@ def sorted_neighborhood_pairs(
 
 def containment_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int = NGRAM_MAX_DOC_FREQ,
 ) -> DataFrame:
@@ -575,7 +555,7 @@ def containment_pairs(
     only pairs sharing exclusively hot shingles (which carry no dup
     signal by construction).
     """
-    joined = _rare_pair_counts(docs, id_col, text_col, ngram, max_doc_freq)
+    joined = _rare_pair_counts(docs, max_doc_freq)
     # upper bound prunes before the array intersect: containment is
     # increasing in n_inter and n_inter <= n_rare + min(|hot_a|,|hot_b|)
     ub = F.col("n_rare") + F.least(F.size("hot_a"), F.size("hot_b"))
@@ -598,17 +578,10 @@ def containment_pairs(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    num_perm: int = NUM_PERM,
-    index: DataFrame | None = None,
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, index: DataFrame | None = None) -> DataFrame:
     """Wide MinHash signature: one column ``mh_i`` per permutation.
 
-    explode shingles → portable hash → num_perm universal-hash minima via
+    explode shingles → portable hash → NUM_PERM universal-hash minima via
     conditional aggregation (single hash aggregate, no pivot shuffle).
     Docs with no shingles get no row (nothing to hash) — callers union
     them back if they must survive. ``index`` lets a caller supply an
@@ -616,11 +589,11 @@ def minhash_signatures(
     tokenize→n-gram chain is not recomputed (minhash_lsh_pairs shares one
     with its verification joins).
     """
-    idx = index if index is not None else shingle_index(docs, id_col, text_col, ngram)
+    idx = index if index is not None else shingle_index(docs, SHINGLE_NGRAM)
     hashed = idx.select("doc_id", portable_hash(F.col("shingle")).alias("h"))
     mins = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{i}")
-        for i, (a, b) in ((j, perm_coeffs(j)) for j in range(num_perm))
+        for i, (a, b) in ((j, perm_coeffs(j)) for j in range(NUM_PERM))
     ]
     return hashed.groupBy("doc_id").agg(*mins)
 
@@ -653,13 +626,7 @@ def lsh_buckets(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "bb.band", "bb.bh")
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ngram: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash → banded LSH candidates → exact-Jaccard verification.
 
     The full scale path: signatures are fixed-width (NUM_PERM ints/doc
@@ -673,8 +640,8 @@ def minhash_lsh_pairs(
     interpreted tokenize→n-gram chain is the dominant per-row cost and
     must not run once per consumer.
     """
-    idx = shingle_index(docs, id_col, text_col, ngram).transform(stage)
-    sig = minhash_signatures(docs, id_col, text_col, ngram, index=idx)
+    idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
+    sig = minhash_signatures(docs, index=idx)
     buckets = lsh_buckets(sig)
     # the bucket table is corpus × bands rows — like everything else in
     # this pipeline it must never be a broadcast build side (the
@@ -696,35 +663,38 @@ def minhash_lsh_pairs(
     return jaccard_verify(candidates, idx, threshold)
 
 
-def simhash(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-) -> DataFrame:
+#: SimHash banding parameters: 32-bit keys split into 4 bands of 8 bits.
+#: Pigeonhole guarantee: any pair within hamming distance 3 differs in at
+#: most 3 bands, so at least one band matches — banding loses NO pairs
+#: (it is an exact algorithm, not an approximation).
+SIMHASH_BITS = 32
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = 3
+
+
+def simhash(docs: DataFrame) -> DataFrame:
     """Per-doc SimHash over word-token features (portable 32-bit hashes).
 
     bit_j(doc) = 1 iff Σ_tokens (bit_j(h(token)) ? +1 : −1) > 0.
-    Computed as ONE conditional aggregate (``bits`` sums over the token
+    Computed as ONE conditional aggregate (SIMHASH_BITS sums over the token
     stream in a single groupBy, the minhash_signatures shape) — the
     earlier (token × bit-position) explode multiplied the
-    pre-aggregation row stream ×``bits``; map-side partials contained
-    it, but this form shuffles ~``bits``× less. All integer math, so
+    pre-aggregation row stream ×32; map-side partials contained
+    it, but this form shuffles ~32× less. All integer math, so
     the oracle reproduces it exactly. Hamming-distance bucketing over
     the resulting key is the near-dup query path.
     """
     tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("tokn"),
+        "doc_id", F.explode(tokens(F.col("text"))).alias("tokn")
     ).select("doc_id", portable_hash(F.col("tokn")).alias("h"))
     bit_sums = [
         F.sum(F.when(F.expr(f"(h >> {j}) & 1") == 1, 1).otherwise(-1)).alias(f"s_{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
     # one parsed expr, not a bits-deep Column tree (plan-build cost)
     combine = " + ".join(
         f"(CASE WHEN s_{j} > 0 THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
     return (
         tok.groupBy("doc_id")
@@ -733,41 +703,25 @@ def simhash(
     )
 
 
-#: SimHash banding parameters: 32-bit keys split into 4 bands of 8 bits.
-#: Pigeonhole guarantee: any pair within hamming distance 3 differs in at
-#: most 3 bands, so at least one band matches — banding loses NO pairs at
-#: the default threshold (it is an exact algorithm, not an approximation).
-SIMHASH_BITS = 32
-SIMHASH_BANDS = 4
-SIMHASH_MAX_HAMMING = 3
-
-
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-    bands: int = SIMHASH_BANDS,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-) -> DataFrame:
-    """Near-duplicate doc pairs by SimHash hamming distance ≤ ``max_hamming``.
+def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
+    """Near-duplicate doc pairs by SimHash hamming distance ≤
+    SIMHASH_MAX_HAMMING.
 
     The scale path for hamming search: instead of the O(n²) all-pairs
-    XOR, split each key into ``bands`` bit-bands and self-equi-join on
+    XOR, split each key into SIMHASH_BANDS bit-bands and self-equi-join on
     (band index, band value) — only docs agreeing on some band ever meet,
-    and with ``max_hamming < bands`` the pigeonhole principle makes that
+    and with max_hamming < bands the pigeonhole principle makes that
     blocking lossless. Each band join is a plain shuffle-hash/sort-merge
     equi-join on a compact int key, so it partitions cleanly at 100 TB;
     a candidate pair surfacing in several bands is collapsed by distinct
     before the exact bit_count(xor) verify.
     """
-    assert max_hamming < bands, "pigeonhole guarantee needs max_hamming < bands"
-    width = bits // bands
-    sh = simhash(docs, id_col, text_col, bits)
+    width = SIMHASH_BITS // SIMHASH_BANDS
+    sh = simhash(docs)
     banded = sh.select(
         "doc_id",
         "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+        F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BANDS - 1))).alias("band"),
     ).withColumn(
         "bval", F.expr(f"(simhash >> (band * {width})) & {(1 << width) - 1}")
     )
@@ -779,7 +733,7 @@ def simhash_neardup_pairs(
         .select("id_a", "id_b", "sh_a", "sh_b")
         .distinct()
         .withColumn("hamming", F.bit_count(F.expr("sh_a ^ sh_b")).cast("long"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
     )
 
@@ -795,13 +749,7 @@ WINNOW_MAX_DOC_FREQ = 20
 WINNOW_MIN_SHARED = 3
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Per-doc winnowed rolling-hash fingerprints (north-star text op:
     document fingerprinting via rolling hash).
 
@@ -817,33 +765,23 @@ def winnow_fingerprints(
     # Partitioning contract: same as shingle_index — the caller spreads
     # the corpus across cores once (_docs_with_tokens); the ~ms/doc
     # hash work here then parallelizes without a second exchange.
-    norm = docs.select(
-        F.col(id_col).alias("doc_id"), ascii_normalize(F.col(text_col)).alias("_a")
-    )
+    norm = docs.select("doc_id", ascii_normalize(F.col("text")).alias("_a"))
     gram_count = F.greatest(
-        F.lit(0).cast("long"), (F.length("_a") - F.lit(k - 1)).cast("long")
+        F.lit(0).cast("long"), (F.length("_a") - F.lit(WINNOW_K - 1)).cast("long")
     )
     return norm.select(
         "doc_id",
         gram_count.alias("n_grams"),
-        winnowed_fps(F.col("_a"), k, w).alias("fps"),
+        winnowed_fps(F.col("_a"), WINNOW_K, WINNOW_W).alias("fps"),
     )
 
 
-def winnow_overlap_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    max_doc_freq: int = WINNOW_MAX_DOC_FREQ,
-    min_shared: int = WINNOW_MIN_SHARED,
-) -> DataFrame:
-    """Doc pairs sharing ≥ ``min_shared`` winnowed fingerprints (MOSS-style
+def winnow_overlap_pairs(docs: DataFrame) -> DataFrame:
+    """Doc pairs sharing ≥ WINNOW_MIN_SHARED winnowed fingerprints (MOSS-style
     overlap detection) with a containment-style score.
 
     The standard inverted-index candidate shape: explode fingerprints,
-    drop fingerprints appearing in > ``max_doc_freq`` docs (stop-gram
+    drop fingerprints appearing in > WINNOW_MAX_DOC_FREQ docs (stop-gram
     filter — kills both noise and join skew), self-equi-join on the
     fingerprint, count per pair, then join per-doc set sizes for
     ``overlap = shared / (n_a + n_b - shared)`` (Jaccard over fp sets).
@@ -853,7 +791,7 @@ def winnow_overlap_pairs(
     count == size) and joined back at the end, exactly like
     ngram_jaccard_pairs.
     """
-    fpi = winnow_fingerprints(docs, id_col, text_col, k, w)
+    fpi = winnow_fingerprints(docs)
     # Materialize the exploded inverted index ONCE: it feeds four
     # consumers (set sizes, stop-gram doc-freq filter, both join sides),
     # and recomputing the rolling-hash fold per consumer is the dominant
@@ -885,7 +823,7 @@ def winnow_overlap_pairs(
     ok = (
         e.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") <= max_doc_freq)
+        .where(F.col("_df") <= WINNOW_MAX_DOC_FREQ)
         .select("fp")
     )
     f = e.join(ok, "fp")
@@ -896,7 +834,7 @@ def winnow_overlap_pairs(
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
+        .where(F.col("shared") >= WINNOW_MIN_SHARED)
     )
     return (
         pairs.join(sizes.withColumnRenamed("doc_id", "id_a"), "id_a")
@@ -918,17 +856,11 @@ def winnow_overlap_pairs(
     )
 
 
-def repeated_spans(
-    docs: DataFrame,
-    gram_len: int = 40,
-    min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def repeated_spans(docs: DataFrame, gram_len: int = 40) -> DataFrame:
     """EXACT repeated-substring spans — the ExactSubstr dedup semantic of
     Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
     Better"): every maximal character span covered by some ``gram_len``-
-    gram occurring ≥ ``min_count`` times in the corpus (same-doc repeats
+    gram occurring at least twice in the corpus (same-doc repeats
     included). Those spans are what a curation run clips out of the
     training text. The suffix-array construction of the paper is
     replaced by the Spark-shaped equivalent: position-local rolling
@@ -959,10 +891,7 @@ def repeated_spans(
     from ..functions.text import ascii_normalize, gram_rolling_hashes
 
     k = gram_len
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        ascii_normalize(F.col(text_col)).alias("_t"),
-    )
+    base = docs.select("doc_id", ascii_normalize(F.col("text")).alias("_t"))
     # Arrow-vectorized hash fold: at k=40 an interpreted higher-order
     # fold would be the dominant query cost.
     hs = gram_rolling_hashes(F.col("_t"), k)
@@ -981,7 +910,7 @@ def repeated_spans(
     cand = (
         pos.groupBy("_h")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .where(F.col("_c") >= min_count)
+        .where(F.col("_c") >= 2)
         .select("_h")
     )
     # hits is bounded by the true repeat mass (tiny vs the corpus) and
@@ -1006,7 +935,7 @@ def repeated_spans(
     confirmed_grams = (
         hits.groupBy("_s")
         .agg(F.count(F.lit(1)).alias("_c2"))
-        .where(F.col("_c2") >= min_count)
+        .where(F.col("_c2") >= 2)
         .select("_s")
     )
     conf = hits.join(confirmed_grams, "_s", "semi").select("doc_id", "pos")
@@ -1033,12 +962,7 @@ def repeated_spans(
     ).drop("_isle")
 
 
-def clip_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def clip_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """APPLY step of ExactSubstr dedup: remove character ranges from each
     doc's ascii-normalized text (the ranges :func:`repeated_spans` found).
     ``spans`` rows are (doc_id, span_start, span_end), 1-based inclusive,
@@ -1055,12 +979,9 @@ def clip_spans(
 
     from ..functions.text import ascii_normalize
 
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        ascii_normalize(F.col(text_col)).alias("_t"),
-    )
+    base = docs.select("doc_id", ascii_normalize(F.col("text")).alias("_t"))
     sp = spans.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.col("span_start").alias("_s"),
         F.col("span_end").alias("_e"),
     ).join(base, "doc_id")
@@ -1117,16 +1038,10 @@ CDC_K = 16
 CDC_DIV = 64
 
 
-def cdc_chunk_rows(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = CDC_K,
-    div: int = CDC_DIV,
-) -> DataFrame:
+def cdc_chunk_rows(docs: DataFrame) -> DataFrame:
     """Content-defined chunking (the Rabin/LBFS/rsync family, no
     min/max clamp): cut the ascii-normalized text after every position
-    whose k-gram Rabin hash is ≡ 0 (mod ``div``), so chunk boundaries
+    whose CDC_K-gram Rabin hash is ≡ 0 (mod CDC_DIV), so chunk boundaries
     are CONTENT-anchored — an insertion re-chunks only its own
     neighborhood, which is what makes chunk-hash storage dedup work
     across document revisions (the fixed-size splitter
@@ -1146,9 +1061,8 @@ def cdc_chunk_rows(
     from ..functions.text import ascii_normalize, gram_rolling_hashes
 
     a = docs.select(
-        F.col(id_col).alias("doc_id"),
-        ascii_normalize(F.col(text_col)).alias("_a"),
-    ).withColumn("_h", gram_rolling_hashes(F.col("_a"), k))
+        "doc_id", ascii_normalize(F.col("text")).alias("_a")
+    ).withColumn("_h", gram_rolling_hashes(F.col("_a"), CDC_K))
     # gram start positions (1-based) whose hash hits the boundary; the
     # cut falls after the gram's LAST char (i + k - 1). Spark's
     # sequence(1, 0) steps DOWNWARD, so the no-gram case is guarded.
@@ -1156,10 +1070,10 @@ def cdc_chunk_rows(
         F.size("_h") >= 1,
         F.filter(
             F.sequence(F.lit(1), F.size("_h")),
-            lambda i: F.element_at(F.col("_h"), i) % div == 0,
+            lambda i: F.element_at(F.col("_h"), i) % CDC_DIV == 0,
         ),
     ).otherwise(F.array().cast("array<int>"))
-    cuts = F.transform(pos, lambda i: (i + F.lit(k - 1)).cast("long"))
+    cuts = F.transform(pos, lambda i: (i + F.lit(CDC_K - 1)).cast("long"))
     allp = F.array_distinct(
         F.concat(
             F.array(F.lit(0).cast("long")),

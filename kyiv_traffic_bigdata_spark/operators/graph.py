@@ -45,11 +45,12 @@ from .staging import stage
 DAMPING = 0.85
 
 
-def symmetric_edges(edges: DataFrame, src: str = "id_a", dst: str = "id_b") -> DataFrame:
-    """Staged, distinct ``(a, b)`` edges in both directions. Staged once
-    because every round joins against it; without truncation each round
-    would re-execute the (possibly expensive) upstream pair pipeline."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+def symmetric_edges(edges: DataFrame) -> DataFrame:
+    """Staged, distinct ``(a, b)`` edges in both directions from the
+    ``(id_a, id_b)`` pairs. Staged once because every round joins
+    against it; without truncation each round would re-execute the
+    (possibly expensive) upstream pair pipeline."""
+    e = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     return stage(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     )
@@ -73,12 +74,7 @@ def fixpoint(
     return state, False
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; the
     component id is the smallest node id reachable from the node
     (min-label propagation, rounds = graph diameter; near-dup groups are
@@ -88,7 +84,7 @@ def connected_components(
     returning partial labels — wrong components merge documents that are
     not duplicates, which is corpus corruption, not degraded accuracy.
     """
-    sym = symmetric_edges(edges, src, dst)
+    sym = symmetric_edges(edges)
     # Seed with round 1 fused into initialization: label(v) =
     # min(v, min(neighbors)) is ONE aggregation over the edge list when
     # every label is still the identity — no join needed.
@@ -123,13 +119,7 @@ def connected_components(
     return labels
 
 
-def bfs_depths(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    seed_mod: int = 4,
-    max_depth: int = 4,
-) -> DataFrame:
+def bfs_depths(edges: DataFrame, seed_mod: int = 4, max_depth: int = 4) -> DataFrame:
     """(node, depth) multi-source BFS over the undirected pair graph:
     depth = unweighted hop distance to the NEAREST seed, seeds being
     the graph nodes with ``node % seed_mod == 0``; nodes farther than
@@ -142,7 +132,7 @@ def bfs_depths(
     equi-join and anti-joins the settled set; an empty frontier ends the
     loop early.
     """
-    sym = symmetric_edges(edges, src, dst)
+    sym = symmetric_edges(edges)
     seeds = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -232,19 +222,13 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     return labels
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 3,
-    damping: float = DAMPING,
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """(node, deg, rank) after ``n_iter`` sweeps over the symmetrized
-    edge list. Nodes are the endpoints of ``edges``; every node of a
+def pagerank(edges: DataFrame, n_iter: int = 3) -> DataFrame:
+    """(node, deg, rank) after ``n_iter`` sweeps with damping DAMPING
+    over the symmetrized edge list. Nodes are the endpoints of ``edges``; every node of a
     symmetric graph has out-degree ≥ 1, so there is no dangling-mass
     term. Rank states are 6-decimal-quantized and contributions are
     grid-summed — see the module docstring."""
-    sym = symmetric_edges(edges, src, dst)
+    sym = symmetric_edges(edges)
     # deg is staged too: it appears in every sweep's join and in the
     # final projection, and the node-sized checkpoint also makes the
     # count() below a block read.
@@ -255,7 +239,7 @@ def pagerank(
     if n == 0:
         return deg.select("node", "deg", F.lit(0.0).alias("rank"))
     r = deg.select("node", "deg", round6(F.lit(1.0) / F.lit(n)).alias("rank"))
-    teleport = F.lit(1.0 - damping) / F.lit(n)
+    teleport = F.lit(1.0 - DAMPING) / F.lit(n)
     for _ in range(n_iter):
         contrib = sym.join(r, sym.a == r.node).select(
             F.col("b").alias("node"),
@@ -269,6 +253,6 @@ def pagerank(
         r = deg.join(inflow, "node", "left").select(
             "node",
             "deg",
-            round6(teleport + F.lit(damping) * F.coalesce(F.col("_s"), F.lit(0.0))).alias("rank"),
+            round6(teleport + F.lit(DAMPING) * F.coalesce(F.col("_s"), F.lit(0.0))).alias("rank"),
         )
     return r

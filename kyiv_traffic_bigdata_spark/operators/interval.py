@@ -6,11 +6,12 @@ scan — quadratic, a non-starter at 100 TB). The standard fix is **bin
 blocking**, the temporal analogue of operators/proximity.py's grid
 cells:
 
-1. pick a bin width ≥ a high quantile of interval lengths (computed
-   with one tiny aggregate when not supplied);
+1. pick a bin width ≥ the longest interval (computed with one tiny
+   aggregate when not supplied);
 2. each interval explodes to the bins it covers (≤ 2 copies when the
-   width covers its length; longer outliers get proportionally more —
-   the explode handles any span); each point maps to exactly ONE bin;
+   width covers its length; a narrower caller-supplied width gives
+   longer intervals proportionally more — the explode handles any
+   span); each point maps to exactly ONE bin;
 3. equi-join on (keys…, bin) — hash-partitioned, AQE-skew-safe — then
    apply the exact BETWEEN predicate.
 
@@ -25,14 +26,6 @@ on an imprecise double is off-spec even when it happens to stay
 monotone. ``div`` truncates toward zero, so for negative timestamps
 bins straddling 0 merge — still lossless (assignment stays monotone and
 consistent on both sides), just marginally less selective there.
-
-Width tuning (the outlier guard): with ``bin_width=None`` the probe
-aggregate picks the ``width_quantile`` of interval lengths (default
-1.0 = the max). A single giant interval at quantile 1.0 forces a wide
-bin and drags EVERY short interval's selectivity down with it; passing
-e.g. ``width_quantile=0.95`` sizes bins for the typical interval and
-lets the rare outlier explode to many bins instead — bounded extra
-copies for a few rows beats degraded pruning for all points.
 """
 
 from __future__ import annotations
@@ -41,18 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def choose_bin_width(
-    intervals: DataFrame,
-    start_col: str,
-    end_col: str,
-    width_quantile: float = 1.0,
-) -> int:
-    """One tiny aggregate + a one-scalar collect (documented driver
-    round-trip; pass an explicit ``bin_width`` to skip the probe job).
-    ``width_quantile < 1.0`` is the outlier guard described above."""
-    w = F.col(end_col) - F.col(start_col)
-    agg = F.max(w) if width_quantile >= 1.0 else F.percentile_approx(w, width_quantile)
-    longest = intervals.agg(agg).collect()[0][0]
+def choose_bin_width(intervals: DataFrame, start_col: str, end_col: str) -> int:
+    """The longest interval: one tiny aggregate + a one-scalar collect
+    (documented driver round-trip; pass an explicit ``bin_width`` to
+    skip the probe job)."""
+    longest = intervals.agg(F.max(F.col(end_col) - F.col(start_col))).collect()[0][0]
     return max(int(longest or 1), 1)
 
 
@@ -64,14 +50,13 @@ def interval_join(
     start_col: str,
     end_col: str,
     bin_width: int | None = None,
-    width_quantile: float = 1.0,
 ) -> DataFrame:
     """Rows of ``points`` × ``intervals`` (same keys) with
     ``start ≤ ts ≤ end``. Timestamps are integers (any unit, used
     consistently); output carries all columns of both sides minus the
     internal bin."""
     if bin_width is None:
-        bin_width = choose_bin_width(intervals, start_col, end_col, width_quantile)
+        bin_width = choose_bin_width(intervals, start_col, end_col)
     bw = int(bin_width)
     iv = intervals.withColumn(
         "_bin",

@@ -39,16 +39,11 @@ from ..functions.vector import as_double, literal_matrix, sq_dist
 
 
 def initial_centroids(
-    df: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    allow_fewer: bool = False,
+    df: DataFrame, k: int, vec_col: str = "embedding", allow_fewer: bool = False
 ) -> list[list[float]]:
     """Deterministic seed: the k lowest-id vectors (collect is k rows —
     bounded metadata, same contract as similarity.ann_ivf_topk's coarse
-    quantizer). Production alternative: k-means|| style sampling; any
-    k x dim list can be passed straight to :func:`lloyd_iterations`.
+    quantizer). Production alternative: k-means|| style sampling.
 
     ``allow_fewer=True`` returns whatever the corpus holds (possibly
     fewer than k, possibly none) — the exact ``LIMIT k`` semantics of
@@ -56,7 +51,7 @@ def initial_centroids(
     and empty corpora (the r08 empty-input contract); the default stays
     a loud refusal because Lloyd TRAINING genuinely needs k seeds."""
     rows = (
-        df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
+        df.select(F.col("vec_id").alias("id"), as_double(F.col(vec_col)).alias("v"))
         .orderBy("id")
         .limit(k)
         .collect()
@@ -69,13 +64,12 @@ def initial_centroids(
 def assign_clusters(
     df: DataFrame,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Map-only nearest-centroid assignment.
 
-    Returns ``(id_col, *keep_cols, cluster_id, _sqd)`` where ``_sqd`` is
+    Returns ``(vec_id, *keep_cols, cluster_id, _sqd)`` where ``_sqd`` is
     the squared distance to the winning centroid (for inertia); ties on
     distance go to the lowest cluster id.
     """
@@ -83,7 +77,7 @@ def assign_clusters(
     vd = as_double(F.col(vec_col))
     dists = F.transform(cents, lambda c: sq_dist(vd, c))
     return df.select(
-        id_col,
+        "vec_id",
         *keep_cols,
         (F.array_position(dists, F.array_min(dists)) - 1)
         .cast("long")
@@ -92,14 +86,13 @@ def assign_clusters(
     )
 
 
+#: Lloyd's early exit: stop once the relative inertia improvement of an
+#: iteration drops below this.
+LLOYD_TOL = 1e-6
+
+
 def lloyd_iterations(
-    df: DataFrame,
-    k: int,
-    n_iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    tol: float = 1e-6,
+    df: DataFrame, k: int, n_iters: int = 10, vec_col: str = "embedding"
 ) -> tuple[DataFrame, list[list[float]], list[float]]:
     """Run Lloyd's algorithm; returns (assignments, centroids, inertia_history).
 
@@ -109,15 +102,13 @@ def lloyd_iterations(
     assignment step; it is non-increasing (asserted in tests, the
     standard Lloyd's guarantee under exact arithmetic).
 
-    Early exit when the relative inertia improvement drops below ``tol``.
+    Seeds are :func:`initial_centroids`. Early exit when the relative
+    inertia improvement drops below LLOYD_TOL.
     """
-    cents = centroids if centroids is not None else initial_centroids(df, k, id_col, vec_col)
-    if len(cents) != k:
-        raise ValueError(f"got {len(cents)} seed centroids for k={k}")
-    dim = len(cents[0])
+    cents = initial_centroids(df, k, vec_col)
     history: list[float] = []
     for _ in range(n_iters):
-        assigned = assign_clusters(df, cents, id_col, vec_col, keep_cols=(vec_col,))
+        assigned = assign_clusters(df, cents, vec_col, keep_cols=(vec_col,))
         # one pass: per-(cluster, dim) sums for the update AND global
         # inertia, so each iteration is exactly one scan + one partial-agg
         # shuffle (no join — the vector rides through the assignment).
@@ -144,33 +135,31 @@ def lloyd_iterations(
             new_cents[r.cluster_id][r._i] = float(r._sx) / float(r._n)
         cents = new_cents
         if len(history) >= 2 and history[-2] > 0:
-            if (history[-2] - history[-1]) / history[-2] < tol:
+            if (history[-2] - history[-1]) / history[-2] < LLOYD_TOL:
                 break
         if inertia == 0.0:
             break
-    final = assign_clusters(df, cents, id_col, vec_col).drop("_sqd")
+    final = assign_clusters(df, cents, vec_col).drop("_sqd")
     return final, cents, history
 
 
-def cluster_profile(
-    assigned: DataFrame, label_col: str = "label"
-) -> DataFrame:
+def cluster_profile(assigned: DataFrame) -> DataFrame:
     """Per-cluster size + majority label + purity — the curation view
     (which clusters are homogeneous enough to sample down / drop).
     Two hash aggregates + a k-row join; ties on the majority break to
     the lowest label."""
     sizes = assigned.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
     lab = (
-        assigned.groupBy("cluster_id", label_col)
+        assigned.groupBy("cluster_id", "label")
         .agg(F.count("*").alias("_c"))
         .groupBy("cluster_id")
         .agg(
             F.max_by(
                 F.struct(
-                    F.col(label_col).cast("long").alias("l"), F.col("_c").alias("c")
+                    F.col("label").cast("long").alias("l"), F.col("_c").alias("c")
                 ),
                 # max_by on (count, -label): largest count, lowest label on ties
-                F.struct(F.col("_c"), (-F.col(label_col)).cast("long")),
+                F.struct(F.col("_c"), (-F.col("label")).cast("long")),
             ).alias("_m")
         )
         .select(

@@ -56,11 +56,10 @@ def apply_changelog(
     order_cols: list[str],
     op_col: str,
     payload_cols: list[str],
-    delete_op: str = "D",
 ) -> DataFrame:
     """CDC changelog application: materialize current table state from an
     insert/update/delete stream — latest record per key wins, a delete
-    tombstone as the latest record removes the key entirely (the Debezium
+    tombstone (op ``"D"``) as the latest record removes the key entirely (the Debezium
     / Kafka-compacted-topic semantic).
 
     Same single-aggregate shape as :func:`latest_per_key` (``max_by`` over
@@ -69,4 +68,4 @@ def apply_changelog(
     result — at 100 TB the changelog shuffles once, keyed, and nothing
     else."""
     latest = latest_per_key(df, key_cols, order_cols, [op_col, *payload_cols])
-    return latest.where(F.col(op_col) != delete_op).drop(op_col)
+    return latest.where(F.col(op_col) != "D").drop(op_col)

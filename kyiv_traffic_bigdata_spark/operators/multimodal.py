@@ -28,9 +28,7 @@ MEDIA_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def attach_binary_payload(
-    df: DataFrame, id_col: str, text_col: str, media_type: str = "text/plain"
-) -> DataFrame:
+def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Wrap a column as the canonical multimodal layout:
     (media_id, payload binary, meta struct<media_type, n_bytes>).
 
@@ -42,7 +40,7 @@ def attach_binary_payload(
         F.col(id_col).alias("media_id"),
         payload.alias("payload"),
         F.struct(
-            F.lit(media_type).alias("media_type"),
+            F.lit("text/plain").alias("media_type"),
             F.octet_length(payload).alias("n_bytes"),
         ).alias("meta"),
     )

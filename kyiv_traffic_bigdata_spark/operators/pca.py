@@ -31,26 +31,27 @@ from pyspark.sql import functions as F
 from ..functions.vector import as_double, literal_matrix
 
 
-def gram_stats(df: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray, int]:
-    """(X^T X, column sums, n) accumulated distributively.
+def gram_stats(df: DataFrame) -> tuple[np.ndarray, np.ndarray, int]:
+    """(X^T X, column sums, n) of the ``embedding`` column accumulated
+    distributively.
 
     One `mapInPandas` pass emits per-Arrow-batch partials (flattened
     d*d gram + d sums + count), one aggregate sums them element-wise;
     the driver receives a single row of d*d+d+1 doubles."""
-    dim = len(df.select(vec_col).first()[0])
+    dim = len(df.select("embedding").first()[0])
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            x = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             g = x.T @ x
             yield pd.DataFrame(
                 {"part": [np.concatenate([g.ravel(), x.sum(axis=0), [float(len(x))]]).tolist()]}
             )
 
     width = dim * dim + dim + 1
-    parts = df.select(vec_col).mapInPandas(partials, schema="part array<double>")
+    parts = df.select("embedding").mapInPandas(partials, schema="part array<double>")
     summed = (
         parts.select(F.posexplode("part").alias("i", "x"))
         .groupBy("i")
@@ -66,9 +67,7 @@ def gram_stats(df: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, n
     return gram, sums, n
 
 
-def fit_pca(
-    df: DataFrame, k: int, vec_col: str = "embedding"
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def fit_pca(df: DataFrame, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Top-k principal components of the mean-centered corpus.
 
     Returns (components [k x d], explained_variance [k], mean [d]).
@@ -76,7 +75,7 @@ def fit_pca(
     cov = (X^T X)/n - mean mean^T (exact, order-independent up to float
     sum association — the accuracy contract is property-tested, not
     hash-matched)."""
-    gram, sums, n = gram_stats(df, vec_col)
+    gram, sums, n = gram_stats(df)
     if n < 2:
         raise ValueError(f"need >= 2 rows to fit PCA, got {n}")
     mean = sums / n
@@ -92,21 +91,16 @@ def fit_pca(
     return comps, vals[order], mean
 
 
-def project(
-    df: DataFrame,
-    components: np.ndarray,
-    mean: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pca",
-) -> DataFrame:
-    """Map-only projection onto the fitted components: (x - mean) · c_i
-    for each component, as one codegen'd transform over a literal
-    matrix — identical posture to kmeans assignment."""
+def project(df: DataFrame, components: np.ndarray, mean: np.ndarray) -> DataFrame:
+    """Map-only projection of ``embedding`` onto the fitted components,
+    as column ``pca``: (x - mean) · c_i for each component, as one
+    codegen'd transform over a literal matrix — identical posture to
+    kmeans assignment."""
     comp_lit = literal_matrix([list(map(float, c)) for c in components])
     mean_lit = F.expr(
         "array(" + ", ".join(f"cast({m!r} as double)" for m in mean) + ")"
     )
-    centered = F.zip_with(as_double(F.col(vec_col)), mean_lit, lambda x, m: x - m)
+    centered = F.zip_with(as_double(F.col("embedding")), mean_lit, lambda x, m: x - m)
     proj = F.transform(
         comp_lit,
         lambda c: F.aggregate(
@@ -115,4 +109,4 @@ def project(
             lambda acc, v: acc + v,
         ),
     )
-    return df.withColumn(out_col, proj)
+    return df.withColumn("pca", proj)

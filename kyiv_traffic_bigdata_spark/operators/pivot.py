@@ -14,14 +14,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def explode_parallel_arrays(
-    df: DataFrame, array_cols: list[str], keep_cols: list[str] | None = None
-) -> DataFrame:
+def explode_parallel_arrays(df: DataFrame, array_cols: list[str]) -> DataFrame:
     """One row per index across equal-length parallel array columns."""
     zipped = F.arrays_zip(*[F.col(c) for c in array_cols]).alias("_z")
-    out = df.select(*(keep_cols or []), F.explode(zipped).alias("_e"))
-    return out.select(
-        *(keep_cols or []), *[F.col(f"_e.{c}").alias(c) for c in array_cols]
-    )
+    out = df.select(F.explode(zipped).alias("_e"))
+    return out.select(*[F.col(f"_e.{c}").alias(c) for c in array_cols])
 
 

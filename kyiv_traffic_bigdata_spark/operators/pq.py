@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, sq_dist
 from .kmeans import initial_centroids, lloyd_iterations
+from .similarity import EMB_DIM
 from .topk import top_k_per_group
 
 
@@ -50,13 +51,7 @@ def _literal_cube(books: list[list[list[float]]]) -> Column:
 
 
 def fit_pq(
-    df: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    n_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
+    df: DataFrame, m: int = 4, k: int = 16, n_iters: int = 0
 ) -> list[list[list[float]]]:
     """Train m per-subspace codebooks of k codewords each.
 
@@ -65,9 +60,9 @@ def fit_pq(
     ``n_iters>0``: per-subspace Lloyd refinement (m × n_iters bounded
     aggregate jobs; codebooks are metadata, never a data-sized collect).
     """
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    subdim = dim // m
+    if EMB_DIM % m:
+        raise ValueError(f"dim {EMB_DIM} not divisible by m {m}")
+    subdim = EMB_DIM // m
     if n_iters <= 0:
         # seed books are SUBVECTORS of the k lowest-id vectors, so one
         # k-row collect of the full vectors yields every book — m
@@ -75,7 +70,7 @@ def fit_pq(
         # allow_fewer: the oracle's LIMIT-k semantics — a corpus with
         # n < k seeds n codewords; an empty corpus yields m empty books
         # (callers emit a typed empty frame, see q_emb_pq).
-        seeds = initial_centroids(df, k, id_col, vec_col, allow_fewer=True)
+        seeds = initial_centroids(df, k, allow_fewer=True)
         return [
             [v[s * subdim : (s + 1) * subdim] for v in seeds]
             for s in range(m)
@@ -83,30 +78,24 @@ def fit_pq(
     books: list[list[list[float]]] = []
     for s in range(m):
         sub = df.select(
-            id_col,
-            F.slice(as_double(F.col(vec_col)), s * subdim + 1, subdim).alias(
+            "vec_id",
+            F.slice(as_double(F.col("embedding")), s * subdim + 1, subdim).alias(
                 "_sub"
             ),
         )
-        _, cents, _ = lloyd_iterations(sub, k, n_iters, id_col, "_sub")
+        _, cents, _ = lloyd_iterations(sub, k, n_iters, "_sub")
         books.append(cents)
     return books
 
 
-def encode_pq(
-    df: DataFrame,
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Map-only PQ encode: ``(id, *keep_cols, codes array<int>,
+def encode_pq(df: DataFrame, books: list[list[list[float]]]) -> DataFrame:
+    """Map-only PQ encode: ``(vec_id, codes array<int>,
     recon_sq_err double)`` where recon_sq_err is the summed per-subspace
     quantization error ‖v − decode(codes)‖² (ties on codeword distance
     go to the lowest code, matching the SQL twin's row_number order)."""
     m, subdim = len(books), len(books[0][0])
     cube = _literal_cube(books)
-    vd = as_double(F.col(vec_col))
+    vd = as_double(F.col("embedding"))
 
     def sub_dists(s: Column) -> Column:
         sub = F.slice(vd, s * subdim + 1, subdim)
@@ -120,11 +109,7 @@ def encode_pq(
     # both read it, and lambdas get no common-subexpression elimination —
     # inlining sub_dists into each consumer evaluates the full table 3x
     # per row.
-    staged = df.select(
-        id_col,
-        *keep_cols,
-        F.transform(subspaces, sub_dists).alias("_dists"),
-    )
+    staged = df.select("vec_id", F.transform(subspaces, sub_dists).alias("_dists"))
     codes = F.transform(
         F.col("_dists"),
         lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"),
@@ -134,22 +119,13 @@ def encode_pq(
         F.lit(0.0),
         lambda a, x: a + x,
     )
-    return staged.select(
-        id_col,
-        *keep_cols,
-        codes.alias("codes"),
-        err.alias("recon_sq_err"),
-    )
+    return staged.select("vec_id", codes.alias("codes"), err.alias("recon_sq_err"))
 
 
 def adc_topk(
     queries: DataFrame,
     codes_df: DataFrame,
     books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codes_col: str = "codes",
-    codes_id_col: str = "vec_id",
     k: int = 10,
 ) -> DataFrame:
     """Approximate top-k nearest neighbors by PQ asymmetric distance.
@@ -162,7 +138,7 @@ def adc_topk(
     """
     m, subdim = len(books), len(books[0][0])
     cube = _literal_cube(books)
-    qd = as_double(F.col(vec_col))
+    qd = as_double(F.col("embedding"))
     qtab = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
         lambda s: F.transform(
@@ -170,11 +146,9 @@ def adc_topk(
             lambda c: sq_dist(F.slice(qd, s * subdim + 1, subdim), c),
         ),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), qtab.alias("_qtab")
-    )
+    q = queries.select(F.col("vec_id").alias("query_id"), qtab.alias("_qtab"))
     c = codes_df.select(
-        F.col(codes_id_col).alias("neighbor_id"), F.col(codes_col).alias("_codes")
+        F.col("vec_id").alias("neighbor_id"), F.col("codes").alias("_codes")
     )
     approx = F.aggregate(
         F.zip_with(

@@ -36,12 +36,11 @@ def proximity_join(
     right: DataFrame,
     radius_km: float,
     cell_deg: float,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     left_prefix: str = "l_",
     right_prefix: str = "r_",
 ) -> DataFrame:
-    """All (left, right) pairs with haversine distance <= ``radius_km``.
+    """All (left, right) pairs with haversine distance <= ``radius_km``
+    between their ``lat``/``lon`` columns.
 
     Returns every left column prefixed ``left_prefix``, every right column
     prefixed ``right_prefix``, plus exact ``dist_km``. Self-pairs are the
@@ -60,21 +59,21 @@ def proximity_join(
         F.explode(F.array(*[F.lit(d) for d in (-1, 0, 1)])).alias("_dlon"),
     ).select(
         "*",
-        (F.floor(F.col(f"{left_prefix}{lat_col}") / F.lit(cell_deg)) + F.col("_dlat")).alias("_clat"),
-        (F.floor(F.col(f"{left_prefix}{lon_col}") / F.lit(cell_deg)) + F.col("_dlon")).alias("_clon"),
+        (F.floor(F.col(f"{left_prefix}lat") / F.lit(cell_deg)) + F.col("_dlat")).alias("_clat"),
+        (F.floor(F.col(f"{left_prefix}lon") / F.lit(cell_deg)) + F.col("_dlon")).alias("_clon"),
     ).drop("_dlat", "_dlon")
 
     r_cells = right.select(
         *[F.col(c).alias(f"{right_prefix}{c}") for c in right.columns],
-        F.floor(F.col(f"{right_prefix}{lat_col}") / F.lit(cell_deg)).alias("_clat"),
-        F.floor(F.col(f"{right_prefix}{lon_col}") / F.lit(cell_deg)).alias("_clon"),
+        F.floor(F.col(f"{right_prefix}lat") / F.lit(cell_deg)).alias("_clat"),
+        F.floor(F.col(f"{right_prefix}lon") / F.lit(cell_deg)).alias("_clon"),
     )
 
     dist = haversine_km(
-        F.col(f"{left_prefix}{lat_col}"),
-        F.col(f"{left_prefix}{lon_col}"),
-        F.col(f"{right_prefix}{lat_col}"),
-        F.col(f"{right_prefix}{lon_col}"),
+        F.col(f"{left_prefix}lat"),
+        F.col(f"{left_prefix}lon"),
+        F.col(f"{right_prefix}lat"),
+        F.col(f"{right_prefix}lon"),
     )
     return (
         l_cells.join(r_cells, ["_clat", "_clon"])

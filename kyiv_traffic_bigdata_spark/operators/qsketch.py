@@ -105,12 +105,7 @@ def _py_cell_bucket(j: int, lvl: int, bucket: int, width: int) -> int:
     return h % width  # Python % == pmod for positive width
 
 
-def dyadic_cells(
-    value: Column,
-    levels: int = QSKETCH_LEVELS,
-    depth: int = QSKETCH_DEPTH,
-    width: int = QSKETCH_WIDTH,
-) -> Column:
+def dyadic_cells(value: Column, width: int) -> Column:
     """Array of ``(lvl, j, b)`` structs — the ``levels × depth`` sketch
     cells one integer value increments. Explode against the fact row;
     the downstream counter table is bounded by ``levels × depth ×
@@ -119,9 +114,9 @@ def dyadic_cells(
     so every hash takes the specialized 8-byte path the Python twin
     replicates."""
     entries = []
-    for lvl in range(levels):
+    for lvl in range(QSKETCH_LEVELS):
         bucket = F.shiftright(value, QSKETCH_BRANCH_BITS * lvl)
-        for j in range(depth):
+        for j in range(QSKETCH_DEPTH):
             entries.append(
                 F.struct(
                     F.lit(lvl).alias("lvl"),
@@ -140,12 +135,7 @@ def dyadic_cells(
 
 
 def build_rank_sketch(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    levels: int = QSKETCH_LEVELS,
-    depth: int = QSKETCH_DEPTH,
-    width: int = QSKETCH_WIDTH,
+    df: DataFrame, group_col: str, value_col: str, width: int = QSKETCH_WIDTH
 ) -> DataFrame:
     """Counter table ``(g, lvl, j, b, c)`` of the per-group dyadic-CMS
     sketch over a non-negative LONG value column. One constant-factor
@@ -154,9 +144,7 @@ def build_rank_sketch(
     return (
         df.select(
             F.col(group_col).alias("g"),
-            F.explode(dyadic_cells(F.col(value_col), levels, depth, width)).alias(
-                "s"
-            ),
+            F.explode(dyadic_cells(F.col(value_col), width)).alias("s"),
         )
         .select("g", "s.lvl", "s.j", "s.b")
         .groupBy("g", "lvl", "j", "b")
@@ -164,30 +152,16 @@ def build_rank_sketch(
     )
 
 
-def estimate_interval(
-    cells: dict,
-    g,
-    lvl: int,
-    bucket: int,
-    depth: int = QSKETCH_DEPTH,
-    width: int = QSKETCH_WIDTH,
-) -> int:
+def estimate_interval(cells: dict, g, lvl: int, bucket: int, width: int) -> int:
     """CMS point query for one dyadic interval: min over the d rows.
     Never underestimates the true interval count."""
     return min(
         cells.get((g, lvl, j, _py_cell_bucket(j, lvl, bucket, width)), 0)
-        for j in range(depth)
+        for j in range(QSKETCH_DEPTH)
     )
 
 
-def descend_quantile(
-    cells: dict,
-    g,
-    target: int,
-    levels: int = QSKETCH_LEVELS,
-    depth: int = QSKETCH_DEPTH,
-    width: int = QSKETCH_WIDTH,
-) -> int:
+def descend_quantile(cells: dict, g, target: int, width: int = QSKETCH_WIDTH) -> int:
     """Tree descent for the ``target``-th smallest value (1-based rank):
     starting at the domain root, at each level walk the ≤ 16 children
     left-to-right subtracting their estimated counts until the
@@ -199,10 +173,10 @@ def descend_quantile(
     queries per quantile, driver-side."""
     p = 0
     remaining = target
-    for lvl in range(levels - 1, -1, -1):
+    for lvl in range(QSKETCH_LEVELS - 1, -1, -1):
         for c in range(QSKETCH_BRANCH):
             child = (p << QSKETCH_BRANCH_BITS) | c
-            cnt = estimate_interval(cells, g, lvl, child, depth, width)
+            cnt = estimate_interval(cells, g, lvl, child, width)
             if remaining <= cnt or c == QSKETCH_BRANCH - 1:
                 p = child
                 break
@@ -217,10 +191,6 @@ def sketch_quantiles(
     quantiles: list[tuple[str, int, int]],
     group_alias: str,
     count_alias: str,
-    levels: int = QSKETCH_LEVELS,
-    depth: int = QSKETCH_DEPTH,
-    width: int = QSKETCH_WIDTH,
-    value_scale: float = 100.0,
 ) -> DataFrame:
     """Per-group quantile estimates from collected sketch cells.
 
@@ -230,8 +200,8 @@ def sketch_quantiles(
     (``(num·n + den − 1) // den``) so the sketch answers the identical
     question as the exact operator it approximates — for ANY (num, den)
     fraction, not just the num = den−1 tail quantiles the headline
-    query asks for. Values come back as ``bucket / value_scale``
-    (cents → currency by default)."""
+    query asks for. Values come back as ``bucket / 100`` (cents →
+    currency)."""
     cells = {(r["g"], r["lvl"], r["j"], r["b"]): r["c"] for r in cell_rows}
     out = []
     for g in sorted(totals):
@@ -239,8 +209,7 @@ def sketch_quantiles(
         row = [g, n]
         for _name, num, den in quantiles:
             target = (num * n + den - 1) // den
-            v = descend_quantile(cells, g, target, levels, depth, width)
-            row.append(v / value_scale)
+            row.append(descend_quantile(cells, g, target) / 100.0)
         out.append(tuple(row))
     schema = f"{group_alias} string, {count_alias} long, " + ", ".join(
         f"{name} double" for name, _, _ in quantiles

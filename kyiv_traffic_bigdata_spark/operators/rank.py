@@ -49,14 +49,13 @@ def percent_rank_gate(
     tiebreak_col: str,
     min_rank: float,
     rank_alias: str = "q_rank",
-    decimals: int = 6,
 ) -> DataFrame:
     """Keep rows whose rounded percent_rank within ``group_col`` (ordered
     by ``value_col`` asc, ``tiebreak_col`` asc) is ≥ ``min_rank``, emitting
     the exact rank — with no per-group global sort.
 
     Requires ``value_col`` to have a bounded number of distinct values per
-    group (e.g. a score rounded to ``decimals`` places); phase-2 cost is
+    group (e.g. a score rounded to 6 places); phase-2 cost is
     proportional to that bound, not to the row count.
 
     Single-row groups get rank 0.0 (Spark/DuckDB ``percent_rank``
@@ -85,7 +84,7 @@ def percent_rank_gate(
         .withColumn("_cum_before", F.coalesce(F.sum("_cnt").over(wcum), F.lit(0)))
     )
     best = _rounded_rank(
-        F.col("_cum_before") + F.col("_cnt") - 1, F.col("_n"), decimals
+        F.col("_cum_before") + F.col("_cnt") - 1, F.col("_n")
     )
     slabs = slabs.where(best >= F.lit(min_rank))
 
@@ -99,7 +98,6 @@ def percent_rank_gate(
     rank = _rounded_rank(
         F.col("_cum_before") + F.row_number().over(wrow) - 1,
         F.col("_n"),
-        decimals,
     )
     return (
         survivors.withColumn(rank_alias, rank)
@@ -114,7 +112,6 @@ def percent_rank_all(
     value_col: str,
     tiebreak_col: str,
     rank_alias: str = "q_rank",
-    decimals: int = 6,
 ) -> DataFrame:
     """Exact rounded percent_rank for EVERY row — the same three-phase
     slab shape as :func:`percent_rank_gate` (bounded slab aggregate →
@@ -145,9 +142,12 @@ def percent_rank_all(
     rank = _rounded_rank(
         F.col("_cum_before") + F.row_number().over(wrow) - 1,
         F.col("_n"),
-        decimals,
     )
     return joined.withColumn(rank_alias, rank).drop("_cnt", "_n", "_cum_before")
+
+
+#: Tiebreak-hash shards per group in :func:`bottom_k_slab`.
+BOTTOM_K_SLABS = 32
 
 
 def bottom_k_slab(
@@ -157,7 +157,6 @@ def bottom_k_slab(
     k: int,
     tiebreak_cols: list[str],
     ascending: bool = True,
-    n_slabs: int = 32,
     rank_alias: str = "_rk",
 ) -> DataFrame:
     """Exact per-group k smallest (``ascending``) or largest rows WITHOUT
@@ -166,9 +165,9 @@ def bottom_k_slab(
     Two bounded phases: (1) rank within ``(group, slab)`` — slab = a hash
     shard of the tiebreak — and keep each slab's best k (any row in the
     group's true top-k is necessarily in its own slab's top-k, so the
-    prune is lossless); (2) rank the ≤ ``n_slabs·k`` survivors per group.
+    prune is lossless); (2) rank the ≤ BOTTOM_K_SLABS·k survivors per group.
     Phase-1 windows partition by the composite key (task size =
-    group/n_slabs), phase-2's input is k-bounded — group skew never
+    group/BOTTOM_K_SLABS), phase-2's input is k-bounded — group skew never
     lands on one executor. Slab assignment only affects distribution,
     never the result, so it may use Spark's native hash.
 
@@ -179,7 +178,7 @@ def bottom_k_slab(
         (F.col(value_col).asc() if ascending else F.col(value_col).desc()),
         *[F.col(t).asc() for t in tiebreak_cols],
     ]
-    slabbed = df.withColumn("_slab", F.pmod(F.hash(*tiebreak_cols), F.lit(n_slabs)))
+    slabbed = df.withColumn("_slab", F.pmod(F.hash(*tiebreak_cols), F.lit(BOTTOM_K_SLABS)))
     w1 = Window.partitionBy(*group_cols, "_slab").orderBy(*order)
     survivors = (
         slabbed.withColumn("_srk", F.row_number().over(w1))
@@ -248,9 +247,8 @@ def _slab_join(
     )
 
 
-def _rounded_rank(rank_minus_1: Column, n: Column, decimals: int) -> Column:
-    """round((rank-1)/(n-1), d) with the n==1 → 0.0 convention."""
-    assert decimals == 6, "portable rounding is fixed at 6 decimals"
+def _rounded_rank(rank_minus_1: Column, n: Column) -> Column:
+    """round((rank-1)/(n-1), 6) with the n==1 → 0.0 convention."""
     return F.when(n > 1, round6(rank_minus_1 / (n - F.lit(1)))).otherwise(
         F.lit(0.0)
     )

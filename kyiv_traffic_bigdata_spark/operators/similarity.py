@@ -20,13 +20,12 @@ from pyspark.sql import functions as F
 from ..functions.vector import as_double, dot, hyperplane_sign_bits, norm
 from .topk import top_k_per_group
 
+#: Dimension of the driver's ``embeddings`` vectors: the width of every
+#: literal hyperplane (the DuckDB twins build the same plane tables).
+EMB_DIM = 64
 
-def probe_max_sim(
-    corpus: DataFrame,
-    probes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+
+def probe_max_sim(corpus: DataFrame, probes: list[list[float]]) -> DataFrame:
     """Max cosine similarity of every corpus vector to a PROBE SET —
     the semantic-decontamination gate (flag training docs too close in
     embedding space to any benchmark/eval item), the embedding-space
@@ -86,17 +85,23 @@ def probe_max_sim(
         return pd.Series(sims.max(axis=1))
 
     return corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(_maxsim(as_double(F.col(vec_col))), 6).alias("max_probe_sim"),
+        "vec_id",
+        F.round(_maxsim(as_double(F.col("embedding"))), 6).alias("max_probe_sim"),
+    )
+
+
+def _side(df: DataFrame, id_as: str, vec_as: str, norm_as: str, *extra):
+    """One side of a cosine join: renamed id and vector plus its norm."""
+    return df.select(
+        F.col("vec_id").alias(id_as),
+        F.col("embedding").alias(vec_as),
+        norm(F.col("embedding")).alias(norm_as),
+        *extra,
     )
 
 
 def cosine_range_search(
-    queries: DataFrame,
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    queries: DataFrame, corpus: DataFrame, threshold: float
 ) -> DataFrame:
     """All corpus neighbors within a cosine radius of each query vector
     (range query — the similarity-search complement of
@@ -114,16 +119,8 @@ def cosine_range_search(
     rounded value the filter saw."""
     from ..functions.rounding import round6
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("_cn"),
-    )
+    q = _side(queries, "query_id", "qvec", "_qn")
+    c = _side(corpus, "neighbor_id", "cvec", "_cn")
     denom = F.col("_qn") * F.col("_cn")
     sim = F.when(denom == 0, F.lit(0.0)).otherwise(
         dot(F.col("qvec"), F.col("cvec")) / denom
@@ -135,13 +132,7 @@ def cosine_range_search(
     )
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     ``broadcast(queries) × corpus`` — the corpus never shuffles; scoring is
@@ -153,16 +144,8 @@ def cosine_topk(
     # join so the O(|q| x |c|) scoring loop does one dot product per pair
     # instead of re-folding both vectors' norms 4M times. sqrt-then-multiply
     # keeps the float result identical to cosine()'s denominator.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("_cn"),
-    )
+    q = _side(queries, "query_id", "qvec", "_qn")
+    c = _side(corpus, "neighbor_id", "cvec", "_cn")
     denom = F.col("_qn") * F.col("_cn")
     sim = F.when(denom == 0, F.lit(0.0)).otherwise(
         dot(F.col("qvec"), F.col("cvec")) / denom
@@ -181,26 +164,24 @@ def cosine_topk(
     )
 
 
+#: IVF coarse-quantizer size of :func:`ann_ivf_topk`.
+IVF_CELLS = 16
+
+
 def ann_ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    n_probe: int = 2,
-    k: int = 10,
+    queries: DataFrame, corpus: DataFrame, n_probe: int = 2, k: int = 10
 ) -> DataFrame:
     """IVF-style approximate NN: coarse quantizer + inverted cell lists.
 
     The other classic ANN scale path next to hyperplane LSH (ann_lsh_topk):
 
-    1. **coarse quantizer** — ``n_cells`` centroid vectors; here the
+    1. **coarse quantizer** — IVF_CELLS centroid vectors; here the
        lowest-id corpus vectors, collected once driver-side (centroids are
        metadata-sized at any corpus scale; production would train them
        offline with k-means and pass them in the same literal form);
     2. **assignment** — every corpus vector goes to its max-cosine
        centroid cell. Centroids are L2-normalized driver-side, so the
-       per-row work is exactly ``n_cells`` dot products (the row's own
+       per-row work is exactly IVF_CELLS dot products (the row's own
        norm is a common positive factor — it cannot change the argmax):
        one ``transform`` over a literal array-of-arrays +
        ``array_position(.., array_max(..))`` — pure Catalyst, no UDF;
@@ -211,15 +192,15 @@ def ann_ivf_topk(
        hash-partitioned join; a neighbor lives in exactly one cell so no
        pair dedup is needed), exact cosine, per-query top-k.
 
-    Scoring cost drops from |Q| x |C| to ~|Q| x n_probe x |C| / n_cells.
+    Scoring cost drops from |Q| x |C| to ~|Q| x n_probe x |C| / IVF_CELLS.
     Recall vs. the exact baseline is asserted in tests, not assumed.
     """
     import math
 
     cent_rows = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
         .orderBy("id")
-        .limit(n_cells)
+        .limit(IVF_CELLS)
         .collect()
     )
     if not cent_rows:
@@ -242,19 +223,12 @@ def ann_ivf_topk(
         vd = as_double(vec)
         return F.transform(cents, lambda c: _fold_dot(vd, c))
 
-    c_scores = cell_scores(F.col(vec_col))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("_cn"),
+    c_scores = cell_scores(F.col("embedding"))
+    c = _side(
+        corpus, "neighbor_id", "cvec", "_cn",
         F.array_position(c_scores, F.array_max(c_scores)).alias("cell"),
     )
-    q_scored = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("_qn"),
-        cell_scores(F.col(vec_col)).alias("_cs"),
-    )
+    q_scored = _side(queries, "query_id", "qvec", "_qn", c_scores.alias("_cs"))
     ranked_cells = F.transform(
         F.slice(
             F.array_sort(
@@ -304,37 +278,31 @@ def _fold_dot(a, b):
 #: products per band total) so cost grows linearly with the corpus.
 #: Recall tradeoff is the standard AND/OR construction: longer bands drop
 #: per-band collision probability ((1-θ/π)^w), so at large n you raise
-#: ``bands`` (OR-construction) to claw recall back — exposed as a
-#: parameter; verification is exact either way (precision always 1).
+#: NEARDUP_BANDS (OR-construction) to claw recall back; verification is
+#: exact either way (precision always 1).
 NEARDUP_BANDS = 4
 NEARDUP_MIN_ROWS = 4
 NEARDUP_MAX_ROWS = 16
 NEARDUP_TARGET_BUCKET = 64
 
 
-def neardup_rows_per_band(
-    n_rows: int, target: int = NEARDUP_TARGET_BUCKET
-) -> int:
-    """Smallest band bit-width w with expected bucket size n/2^w ≤ target,
-    clamped to [NEARDUP_MIN_ROWS, NEARDUP_MAX_ROWS].
+def neardup_rows_per_band(n_rows: int) -> int:
+    """Smallest band bit-width w with expected bucket size n/2^w ≤
+    NEARDUP_TARGET_BUCKET, clamped to [NEARDUP_MIN_ROWS, NEARDUP_MAX_ROWS].
 
     Deterministic in n only, so the DuckDB oracle can reproduce it in SQL
     (CEIL(LOG2(n/target))) and two engines bucket identically.
     """
     import math
 
-    if n_rows <= target:
+    if n_rows <= NEARDUP_TARGET_BUCKET:
         return NEARDUP_MIN_ROWS
-    w = math.ceil(math.log2(n_rows / target))
+    w = math.ceil(math.log2(n_rows / NEARDUP_TARGET_BUCKET))
     return max(NEARDUP_MIN_ROWS, min(NEARDUP_MAX_ROWS, w))
 
 
 def cosine_neardup_pairs(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    bands: int = NEARDUP_BANDS,
     rows_per_band: int | None = None,
     threshold: float = 0.3,
 ) -> DataFrame:
@@ -343,7 +311,7 @@ def cosine_neardup_pairs(
     Banded random-hyperplane LSH blocking + exact cosine verification —
     the signature-space analogue of operators.dedup.minhash_lsh_pairs:
 
-    1. each vector gets ``bands`` sign-bit keys of ``rows_per_band`` bits
+    1. each vector gets NEARDUP_BANDS sign-bit keys of ``rows_per_band`` bits
        (literal hyperplane coefficients, functions.vector). Band b hashes
        with its own seed ("rp_b{b}"), so a band's plane list is a stable
        prefix as the width grows — re-bucketing a grown corpus reuses
@@ -355,7 +323,8 @@ def cosine_neardup_pairs(
     3. per band, vectors sharing the band key are candidates — a
        self-equi-join on (band, key), hash-partitioned, no cross join;
        skewed real-world buckets (clustered embeddings) are AQE
-       skew-join territory, and ``target`` can be lowered to split them;
+       skew-join territory, and NEARDUP_TARGET_BUCKET can be lowered to
+       split them;
     4. candidates are verified with the exact cosine >= threshold
        predicate — blocking affects recall only, never precision.
 
@@ -376,23 +345,10 @@ def cosine_neardup_pairs(
         # count() is parquet-footer metadata, not a data scan; callers on
         # non-file sources can pass rows_per_band explicitly to skip it.
         rows_per_band = neardup_rows_per_band(corpus.count())
-    band_keys = [
-        hyperplane_sign_bits(
-            F.col(vec_col), dim, rows_per_band, seed=f"rp_b{b}"
-        )
-        for b in range(bands)
-    ]
     bucketed = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_keys[b].alias("bkey"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bb"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        _band_keys(rows_per_band).alias("_bb"),
     ).select("id", "vec", "_bb.band", "_bb.bkey")
 
     def verify_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -423,58 +379,42 @@ def cosine_neardup_pairs(
     )
 
 
-def ann_lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 4,
-    k: int = 10,
-    multiprobe_bits: int = 1,
-) -> DataFrame:
+#: Hyperplanes per :func:`ann_lsh_topk` signature (see its docstring).
+LSH_PLANES = 4
+
+
+def ann_lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
     """Approximate top-k: random-hyperplane LSH buckets + in-bucket scoring.
 
     Both sides compute the same deterministic signature; queries probe
-    their own bucket plus every bucket within ``multiprobe_bits`` bit-flips
-    (n_planes choose 1 extra buckets for 1 bit — cheap, large recall win).
+    their own bucket plus every bucket one bit-flip away (LSH_PLANES
+    extra buckets — cheap, large recall win).
     Join is an equi-join on the bucket key: co-partitioned, skew-safe under
     AQE. Recall vs. the exact baseline is asserted in tests, not assumed.
 
-    Default n_planes=4 is tuned for the driver's UNIFORM random
+    LSH_PLANES=4 is tuned for the driver's UNIFORM random
     embeddings, the adversarial case for LSH: near-neighbors there sit at
     cos ~0.4 (theta ~66 deg, per-plane collision 0.63), so recall tracks
     the probed candidate fraction almost linearly and more planes only
     starve the buckets (measured on sf0.001: 4 planes -> 0.42 recall,
     8 planes -> 0.07; multi-band OR-construction bought nothing at equal
     candidate volume). Clustered real-world embeddings separate much
-    better — raise n_planes as corpus size grows to keep buckets
-    O(corpus / 2^n_planes) sized.
+    better — raise LSH_PLANES as corpus size grows to keep buckets
+    O(corpus / 2^LSH_PLANES) sized.
     """
-    sig = hyperplane_sign_bits(F.col(vec_col), dim, n_planes)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("_cn"),
-        sig.alias("bucket"),
-    )
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("_qn"),
-        sig.alias("sig"),
-    )
+    sig = hyperplane_sign_bits(F.col("embedding"), EMB_DIM, LSH_PLANES)
+    c = _side(corpus, "neighbor_id", "cvec", "_cn", sig.alias("bucket"))
+    q0 = _side(queries, "query_id", "qvec", "_qn", sig.alias("sig"))
     probes = [F.col("sig")]
-    if multiprobe_bits >= 1:
-        for i in range(n_planes):
-            flipped = F.concat(
-                F.substring(F.col("sig"), 1, i),
-                F.when(F.substring(F.col("sig"), i + 1, 1) == "1", F.lit("0")).otherwise(
-                    F.lit("1")
-                ),
-                F.substring(F.col("sig"), i + 2, n_planes - i - 1),
-            )
-            probes.append(flipped)
+    for i in range(LSH_PLANES):
+        flipped = F.concat(
+            F.substring(F.col("sig"), 1, i),
+            F.when(F.substring(F.col("sig"), i + 1, 1) == "1", F.lit("0")).otherwise(
+                F.lit("1")
+            ),
+            F.substring(F.col("sig"), i + 2, LSH_PLANES - i - 1),
+        )
+        probes.append(flipped)
     q = q0.select(
         "query_id", "qvec", "_qn", F.explode(F.array(*probes)).alias("bucket")
     ).distinct()
@@ -498,13 +438,7 @@ def ann_lsh_topk(
     )
 
 
-def hamming_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
+def hamming_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k by Hamming distance over binary sign signatures —
     the 4th ANN scale path (next to LSH buckets, IVF cells, PQ codes):
     compress every vector to 1 bit/dim (functions.vector.sign_words)
@@ -527,10 +461,10 @@ def hamming_topk(
     from ..functions.vector import hamming_distance, sign_words
 
     q = queries.select(
-        F.col(id_col).alias("query_id"), sign_words(F.col(vec_col)).alias("_qs")
+        F.col("vec_id").alias("query_id"), sign_words(F.col("embedding")).alias("_qs")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), sign_words(F.col(vec_col)).alias("_cs")
+        F.col("vec_id").alias("neighbor_id"), sign_words(F.col("embedding")).alias("_cs")
     )
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
@@ -563,11 +497,7 @@ def hamming_topk(
 
 
 def semdedup(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
+    corpus: DataFrame, centroids: list[list[float]], threshold: float = 0.35
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023):
     cluster the embedding space, then mark as redundant any vector whose
@@ -594,16 +524,16 @@ def semdedup(
 
     from .kmeans import assign_clusters
 
-    assigned = assign_clusters(
-        corpus, centroids, id_col=id_col, vec_col=vec_col, keep_cols=(vec_col,)
-    ).drop("_sqd")
+    assigned = assign_clusters(corpus, centroids, keep_cols=("embedding",)).drop(
+        "_sqd"
+    )
 
     def dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
         cid = int(pdf["cluster_id"].iloc[0])
-        mat = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
+        mat = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
         norms = np.sqrt((mat * mat).sum(axis=1))
         denom = np.outer(norms, norms)
         gram = mat @ mat.T
@@ -633,40 +563,41 @@ def semdedup(
         dedup_cluster,
         "id long, cluster_id long, kept boolean, max_prior_sim double",
     )
-    return out.withColumnRenamed("id", id_col)
+    return out.withColumnRenamed("id", "vec_id")
 
 
-def lsh_bucket_stats(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    bands: int = NEARDUP_BANDS,
-    rows_per_band: int | None = None,
-) -> DataFrame:
+def _band_keys(rows_per_band: int):
+    """``explode`` of (band, bkey) structs: one ``rows_per_band``-bit
+    sign key per band, band b hashing with its own plane seed."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    hyperplane_sign_bits(
+                        F.col("embedding"), EMB_DIM, rows_per_band, seed=f"rp_b{b}"
+                    ).alias("bkey"),
+                )
+                for b in range(NEARDUP_BANDS)
+            ]
+        )
+    )
+
+
+def lsh_bucket_stats(corpus: DataFrame, rows_per_band: int | None = None) -> DataFrame:
     """Index-health monitoring for the banded-LSH family: per-band
     bucket occupancy (bucket count, row total, max population). The
     operational check behind the adaptive-width contract — if
     ``max_bucket`` drifts far above NEARDUP_TARGET_BUCKET the corpus is
-    clustering harder than the uniform assumption and ``target`` (or
-    the band width) needs retuning BEFORE the verify stage goes
-    quadratic. Cost: the same bands × corpus explode as bucketing
-    itself, two hash aggregates, bands rows out."""
+    clustering harder than the uniform assumption and
+    NEARDUP_TARGET_BUCKET (or the band width) needs retuning BEFORE the
+    verify stage goes quadratic. Cost: the same bands × corpus explode
+    as bucketing itself, two hash aggregates, bands rows out."""
     if rows_per_band is None:
         rows_per_band = neardup_rows_per_band(corpus.count())
-    band_keys = [
-        hyperplane_sign_bits(F.col(vec_col), dim, rows_per_band, seed=f"rp_b{b}")
-        for b in range(bands)
-    ]
-    bucketed = corpus.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_keys[b].alias("bkey"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bb")
-    ).select("_bb.band", "_bb.bkey")
+    bucketed = corpus.select(_band_keys(rows_per_band).alias("_bb")).select(
+        "_bb.band", "_bb.bkey"
+    )
     occ = bucketed.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("_c"))
     return occ.groupBy("band").agg(
         F.count(F.lit(1)).alias("n_buckets"),

@@ -47,8 +47,8 @@ if _MODE not in _VALID:  # pragma: no cover - env misconfiguration
     raise ValueError(f"SPARK_GRAFT_STAGING must be one of {_VALID}, got {_MODE!r}")
 
 
-def stage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage per the active mode."""
+def stage(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and truncate its lineage per the active mode."""
     if _MODE == "reliable":
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():
@@ -72,5 +72,5 @@ def stage(df: DataFrame, eager: bool = True) -> DataFrame:
                 stacklevel=2,
             )
             sc.setCheckpointDir(fallback)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()

@@ -7,9 +7,8 @@ dt>300 s, speed<=0 or >=120 km/h — F5/F6 guards, visualize.py:12-14,75-86).
 
 Spark shape: ONE window ``partition by key order by ts`` feeding all lag
 columns — a single hash-partition shuffle + in-partition sort. At 100 TB
-this is the canonical "sort within key" pattern; if the store is bucketed
-and sorted by (key, ts) (sources.positions writes it that way), Catalyst
-elides the shuffle entirely.
+this is the canonical "sort within key" pattern; on a store bucketed
+and sorted by (key, ts), Catalyst would elide the shuffle entirely.
 """
 
 from __future__ import annotations
@@ -47,31 +46,30 @@ def trajectory_speeds(
     positions: DataFrame,
     key_col: str = "vehicle_id",
     ts_col: str = "timestamp",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     max_gap_s: int = MAX_TIME_GAP_S,
-    max_speed: float = MAX_PLAUSIBLE_SPEED_KMH,
     tiebreak_cols: list[str] | None = None,
     round_speed: int | None = None,
 ) -> DataFrame:
-    """Reference W1: per-key consecutive-fix speeds with plausibility guards.
+    """Reference W1: per-key consecutive-fix speeds of ``lat``/``lon``
+    fixes with plausibility guards.
 
     Matches kpt/visualize.py:60-88 semantics exactly:
-    keep pairs with ``0 < dt <= max_gap_s`` and ``0 < speed < max_speed``;
+    keep pairs with ``0 < dt <= max_gap_s`` and
+    ``0 < speed < MAX_PLAUSIBLE_SPEED_KMH``;
     speed = haversine_km * 3600 / dt.
 
     ``round_speed`` optionally rounds the transcendental result (needed
     when a cross-engine oracle re-computes haversine with a different libm).
     """
     lagged = consecutive_deltas(
-        positions, [key_col], ts_col, [lat_col, lon_col], tiebreak_cols
+        positions, [key_col], ts_col, ["lat", "lon"], tiebreak_cols
     )
     dt = F.col(ts_col) - F.col(f"prev_{ts_col}")
     dist = haversine_km(
-        F.col(f"prev_{lat_col}"),
-        F.col(f"prev_{lon_col}"),
-        F.col(lat_col),
-        F.col(lon_col),
+        F.col("prev_lat"),
+        F.col("prev_lon"),
+        F.col("lat"),
+        F.col("lon"),
     )
     speed: Column = dist * 3600.0 / dt
     if round_speed is not None:
@@ -81,32 +79,28 @@ def trajectory_speeds(
         .withColumn("dt_s", dt)
         .where((F.col("dt_s") > 0) & (F.col("dt_s") <= max_gap_s))
         .withColumn("speed_kmh", speed)
-        .where((F.col("speed_kmh") > 0) & (F.col("speed_kmh") < max_speed))
+        .where((F.col("speed_kmh") > 0) & (F.col("speed_kmh") < MAX_PLAUSIBLE_SPEED_KMH))
     )
 
 
 def value_rate(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_us_col: str = "ts_us",
-    value_col: str = "value",
-    tiebreak_cols: list[str] | None = None,
-    max_gap_s: int = 3600,
+    events: DataFrame, tiebreak_cols: list[str] | None = None, max_gap_s: int = 3600
 ) -> DataFrame:
-    """W1 generalized to any numeric series: per-key d(value)/dt.
+    """W1 generalized to any numeric series: per-``user_id`` d(value)/dt.
 
     The star-schema analog the correctness gate runs on ``events``:
-    dt in seconds from exact integer micros, rate = |Δvalue| / dt.
-    Pure int/double per-row arithmetic → bit-identical in any engine.
+    dt in seconds from exact integer micros ``ts_us``, rate =
+    |Δvalue| / dt. Pure int/double per-row arithmetic → bit-identical
+    in any engine.
     """
-    lagged = consecutive_deltas(events, [key_col], ts_us_col, [value_col], tiebreak_cols)
-    dt_s = (F.col(ts_us_col) - F.col(f"prev_{ts_us_col}")).cast("double") / 1e6
+    lagged = consecutive_deltas(events, ["user_id"], "ts_us", ["value"], tiebreak_cols)
+    dt_s = (F.col("ts_us") - F.col("prev_ts_us")).cast("double") / 1e6
     return (
-        lagged.where(F.col(f"prev_{ts_us_col}").isNotNull())
+        lagged.where(F.col("prev_ts_us").isNotNull())
         .withColumn("dt_s", dt_s)
         .where((F.col("dt_s") > 0) & (F.col("dt_s") <= max_gap_s))
         .withColumn(
             "rate",
-            round6(F.abs(F.col(value_col) - F.col(f"prev_{value_col}")) / F.col("dt_s")),
+            round6(F.abs(F.col("value") - F.col("prev_value")) / F.col("dt_s")),
         )
     )

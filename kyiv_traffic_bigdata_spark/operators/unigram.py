@@ -54,10 +54,11 @@ UNK_LOGPROB = -100.0
 _CONTRIB_DP = 10
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, n) distinct-word table — the one corpus-wide pass."""
+def word_counts(docs: DataFrame) -> DataFrame:
+    """(word, n) distinct-word table of the ``text`` column — the one
+    corpus-wide pass."""
     return (
-        docs.select(F.explode(_tokens_col(F.col(text_col))).alias("word"))
+        docs.select(F.explode(_tokens_col(F.col("text"))).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -232,9 +233,8 @@ def viterbi_encode(
     text_col: str,
     vocab: list[tuple[str, float]],
     max_piece_len: int = 6,
-    out_col: str = "pieces",
 ) -> DataFrame:
-    """Adds ``out_col``: the Viterbi piece segmentation of the
+    """Adds ``pieces``: the Viterbi piece segmentation of the
     normalized text (word-by-word, concatenation-preserving). The vocab
     rides the closure — bounded metadata, same as centroids.
     Zero-probability pieces are excluded (log(0) raises; excluding them
@@ -254,4 +254,4 @@ def viterbi_encode(
             out.append(pieces)
         return pd.Series(out)
 
-    return df.withColumn(out_col, seg(F.col(text_col)))
+    return df.withColumn("pieces", seg(F.col(text_col)))

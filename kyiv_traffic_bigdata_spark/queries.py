@@ -1017,7 +1017,7 @@ def _sql_lsh_bucket_prefix() -> str:
         f"({b}, {p}, {i + 1}, {c!r})"
         for b in range(SIM.NEARDUP_BANDS)
         for p, coeffs in enumerate(
-            plane_coefficients(64, SIM.NEARDUP_MAX_ROWS, seed=f"rp_b{b}")
+            plane_coefficients(SIM.EMB_DIM, SIM.NEARDUP_MAX_ROWS, seed=f"rp_b{b}")
         )
         for i, c in enumerate(coeffs)
     )
@@ -2104,8 +2104,8 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_ann_lsh() -> str:
     from .functions.vector import plane_coefficients
 
-    dim, n_planes, k = 64, 4, 10  # ann_lsh_topk defaults
-    planes = plane_coefficients(dim, n_planes, "rp")
+    n_planes, k = SIM.LSH_PLANES, 10
+    planes = plane_coefficients(SIM.EMB_DIM, n_planes, "rp")
     rows = ", ".join(
         f"({p}, {i + 1}, {c!r})"
         for p, row in enumerate(planes)
@@ -2167,7 +2167,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate NN (the second classic ANN scale path
     next to ann_lsh; recall asserted in tests vs the exact baseline).
     ORACLED as of r09 — like ann_lsh in r08, the registered shape is
-    fully deterministic end-to-end: seed centroids are the n_cells
+    fully deterministic end-to-end: seed centroids are the IVF_CELLS
     lowest-id vectors unit-normalized with a sequential Python fold
     (≡ list_reduce), cell dots are sequential folds, assignment is
     first-occurrence argmax, probes rank by (score desc, cell asc) —
@@ -2179,7 +2179,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ann_ivf() -> str:
-    n_cells, n_probe, k = 16, 4, 10  # q_ann_ivf's geometry
+    n_cells, n_probe, k = SIM.IVF_CELLS, 4, 10  # q_ann_ivf's geometry
     sq_n2 = (
         "list_reduce(list_transform({v}, x -> "
         "CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)"
@@ -2855,7 +2855,7 @@ def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs_with_tokens(spark, sf_dir)
     h = TX.portable_hash(F.col("doc_id").cast("string"))
     idx = (
-        DD.shingle_index(d, "doc_id", "text", 3)
+        DD.shingle_index(d, DD.SHINGLE_NGRAM)
         .withColumn("_probe", F.pmod(h, F.lit(PROBE_MOD)) == 0)
         .transform(stage)
     )
@@ -9699,7 +9699,7 @@ def q_doc_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0
     )
     g = (
-        DD.shingle_index(d, "doc_id", "text", CONTAM_NGRAM)
+        DD.shingle_index(d, CONTAM_NGRAM)
         .withColumn("_bench", bench_flag)
         .transform(stage)
     )

@@ -48,7 +48,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Scan-split sizing, env-tunable. The 128m default is right for
+        # Scan-split sizing. 128m is right for
         # row-group-sized cluster files (partitions must fit executor
         # memory without multiplying scheduler overhead at 100 TB task
         # counts). Shrinking it to parallelize the bench's tiny files was
@@ -67,10 +67,7 @@ def get_spark(
         # scale (shuffling a petabyte fact ahead of a partial agg), so
         # it is deliberately not done; real deployments write multi-
         # row-group files and get scan parallelism for free.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "128m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -99,18 +99,14 @@ def _decode_frames(blobs: pd.Series) -> pd.Series:
     return blobs.map(decode)
 
 
-def decode_messages(
-    raw: DataFrame,
-    value_col: str = "value",
-    min_len: int = MIN_B64_LEN,
-) -> DataFrame:
-    """Full S13 decode chain: F9 length gate → P6 base64 → P7 unpack →
-    one explode → flat GPS rows (latitude, longitude, offset + carried
-    columns)."""
-    carried = [c for c in raw.columns if c != value_col]
+def decode_messages(raw: DataFrame, min_len: int = MIN_B64_LEN) -> DataFrame:
+    """Full S13 decode chain over the ``value`` column: F9 length gate →
+    P6 base64 → P7 unpack → one explode → flat GPS rows (latitude,
+    longitude, offset + carried columns)."""
+    carried = [c for c in raw.columns if c != "value"]
     blobs = (
-        raw.where(F.length(F.col(value_col)) >= min_len)
-        .select(*carried, repair_base64(F.col(value_col)).alias("blob"))
+        raw.where(F.length(F.col("value")) >= min_len)
+        .select(*carried, repair_base64(F.col("value")).alias("blob"))
         .where(F.col("blob").isNotNull())
     )
     return (
@@ -132,15 +128,11 @@ def identify_region(lat: Column, lon: Column) -> Column:
     return expr
 
 
-def categorize(
-    gps: DataFrame,
-    lat_col: str = "latitude",
-    lon_col: str = "longitude",
-) -> DataFrame:
+def categorize(gps: DataFrame) -> DataFrame:
     """F8 (ws_interceptor.py:141-153): add ``region`` (kyiv/ukraine/other,
     narrow Kyiv box) and ``region_detail`` (named bbox for 'other') —
     one DataFrame, not the reference's three driver-side lists."""
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    lat, lon = F.col("latitude"), F.col("longitude")
     out = gps.where(valid_coords(lat, lon)).withColumn(
         "region", classify_region(lat, lon, kyiv=KYIV_BBOX_NARROW, ukraine=UKRAINE_BBOX)
     )
@@ -150,9 +142,13 @@ def categorize(
     )
 
 
-def build_report(
-    categorized: DataFrame, other_cap: int = 100, region_cap: int = 10_000
-) -> dict:
+#: Caps on the position arrays of :func:`build_report`: the reference's
+#: ``other`` cap, and the kyiv/ukraine one this engine adds.
+REPORT_OTHER_CAP = 100
+REPORT_REGION_CAP = 10_000
+
+
+def build_report(categorized: DataFrame) -> dict:
     """S14 (ws_interceptor.py:259-290): the categorized JSON report —
     summary counts plus per-region position arrays, ``other`` capped.
 
@@ -177,9 +173,9 @@ def build_report(
             "ukraine": counts.get("ukraine", 0),
             "other": counts.get("other", 0),
         },
-        "kyiv_positions": rows("kyiv", region_cap),
-        "ukraine_positions": rows("ukraine", region_cap),
-        "other_positions": rows("other", other_cap),
+        "kyiv_positions": rows("kyiv", REPORT_REGION_CAP),
+        "ukraine_positions": rows("ukraine", REPORT_REGION_CAP),
+        "other_positions": rows("other", REPORT_OTHER_CAP),
     }
 
 

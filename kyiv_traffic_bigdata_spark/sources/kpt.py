@@ -19,8 +19,7 @@ rows that the F3 parse-success filter drops — the reference's
 Scale: readers are plain ``spark.read.json`` scans with explicit schemas
 (no inference pass over 100 TB); the parse pipeline is one projection +
 filter — fully codegen'd, shuffle-free. The canonical store written by
-:func:`write_positions` is date-partitioned parquet bucketed by
-``vehicle_id`` so the W1 trajectory window can run shuffle-free.
+:func:`write_positions` is date-partitioned parquet.
 """
 
 from __future__ import annotations
@@ -35,7 +34,6 @@ from ..config import (
     KYIV_BBOX_POLLER,
     POSITION_EVENT_NAMES,
     ROUTES_POLL_INTERVAL_S,
-    BoundingBox,
 )
 from ..functions.geo import in_bbox
 from ..operators.latest import latest_per_key
@@ -103,9 +101,7 @@ def read_positions_ordered(spark: SparkSession, paths: str | list[str]) -> DataF
     )
 
 
-def read_routes(
-    spark: SparkSession, paths: str | list[str], latest_only: bool = True
-) -> DataFrame:
+def read_routes(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """S2 (visualize.py:48-57): route catalog, last-write-wins per id.
 
     The reference builds a dict so later JSONL lines overwrite earlier
@@ -119,8 +115,6 @@ def read_routes(
         F.col("poll_number"),
         F.explode("routes").alias("r"),
     ).select("poll_ts", "poll_number", "r.id", "r.type", "r.number")
-    if not latest_only:
-        return exploded
     return latest_per_key(exploded, ["id"], ["poll_ts", "poll_number"], ["type", "number"])
 
 
@@ -214,31 +208,27 @@ def coerce_position_dict(d: Column) -> Column:
     return F.when(vid.isNotNull() & rid.isNotNull(), struct)
 
 
-def parse_messages(
-    raw: DataFrame,
-    value_col: str = "value",
-    bbox: BoundingBox = KYIV_BBOX_POLLER,
-    event_names: tuple[str, ...] = POSITION_EVENT_NAMES,
-    default_ts: Column | None = None,
-) -> DataFrame:
-    """P1–P5 + F1/F3/F4 (parsers.py:115-134): raw text lines → position rows.
+def parse_messages(raw: DataFrame, default_ts: Column | None = None) -> DataFrame:
+    """P1–P5 + F1/F3/F4 (parsers.py:115-134): raw ``value`` text lines →
+    position rows; ``default_ts`` (now by default) fills a missing
+    timestamp.
 
     Dispatch order matches the reference exactly:
 
     1. bare CSV line (P1);
     2. else Socket.IO frame ``42["evt",payload]`` with evt in the
-       allowlist (P2/F4), payload exploded (P3) where each element is a
-       CSV string or a position dict (P4);
+       POSITION_EVENT_NAMES allowlist (P2/F4), payload exploded (P3)
+       where each element is a CSV string or a position dict (P4);
     3. else drop (F3).
 
-    The bbox filter (F1) applies inside the same projection, mirroring the
-    reference's parse-time pushdown (parsers.py:40-41,100). One
-    explode + one filter — no shuffle, fully codegen'd except from_csv.
+    The KYIV_BBOX_POLLER filter (F1) applies inside the same projection,
+    mirroring the reference's parse-time pushdown (parsers.py:40-41,100).
+    One explode + one filter — no shuffle, fully codegen'd except from_csv.
     """
-    v = F.col(value_col)
+    v = F.col("value")
     event = F.regexp_extract(v, SOCKETIO_FRAME_RE, 1)
     payload = F.regexp_extract(v, SOCKETIO_FRAME_RE, 2)
-    is_event = event.isin(*event_names)
+    is_event = event.isin(*POSITION_EVENT_NAMES)
 
     # P3: payload forms — array of CSV strings, array of dicts, a bare JSON
     # string, or a single dict. One normalization covers all four:
@@ -259,7 +249,7 @@ def parse_messages(
     unified = F.when(csv_direct.isNotNull(), F.array(v)).otherwise(event_elements)
 
     exploded = raw.select(
-        *[c for c in raw.columns if c != value_col],
+        *[c for c in raw.columns if c != "value"],
         F.explode(unified).alias("elem"),
     )
     elem = F.col("elem")
@@ -278,39 +268,18 @@ def parse_messages(
     )
     ts_default = default_ts if default_ts is not None else F.unix_timestamp()
     out = out.withColumn("timestamp", F.coalesce(F.col("timestamp"), ts_default.cast("long")))
-    return out.where(in_bbox(F.col("lat"), F.col("lon"), bbox))
+    return out.where(in_bbox(F.col("lat"), F.col("lon"), KYIV_BBOX_POLLER))
 
 
 # ---------------------------------------------------------------------------
 # S3 / S4 — sinks
 # ---------------------------------------------------------------------------
 
-def write_positions(
-    df: DataFrame,
-    path: str,
-    ingest_ts_col: str = "ingest_ts",
-    buckets: int = 0,
-    mode: str = "overwrite",
-) -> None:
-    """S3 canonical store: parquet partitioned by ingest date (ST10).
-
-    ``buckets > 0`` additionally buckets+sorts by (vehicle_id, timestamp)
-    (saveAsTable path) so downstream W1 windows and J2 latest-per-key
-    read pre-clustered data — at 100 TB that removes the analytics
-    shuffle entirely.
-    """
-    out = df.withColumn("date", F.date_format(F.col(ingest_ts_col), "yyyyMMdd"))
-    writer = out.write.mode(mode).partitionBy("date")
-    if buckets:
-        (
-            writer.bucketBy(buckets, "vehicle_id")
-            .sortBy("vehicle_id", "timestamp")
-            .option("path", path)
-            .format("parquet")
-            .saveAsTable(f"positions_bucketed_{abs(hash(path)) % 10**8}")
-        )
-    else:
-        writer.parquet(path)
+def write_positions(df: DataFrame, path: str) -> None:
+    """S3 canonical store: parquet partitioned by ``ingest_ts`` date
+    (ST10), replacing what ``path`` held."""
+    out = df.withColumn("date", F.date_format(F.col("ingest_ts"), "yyyyMMdd"))
+    out.write.mode("overwrite").partitionBy("date").parquet(path)
 
 
 def write_position_envelopes_jsonl(

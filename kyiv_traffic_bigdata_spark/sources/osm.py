@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import KYIV_BBOX_NARROW, BoundingBox
+from ..config import KYIV_BBOX_NARROW
 from ..schemas import GEOJSON_FEATURE_COLLECTION, OSM_ELEMENT, OSM_RESPONSE
 
 #: Default Overpass query timeout, seconds (reference importer.py:18).
@@ -77,13 +77,12 @@ def union_body(clauses: Iterable[str]) -> str:
 
 
 def overpass_query(
-    body: str,
-    bbox: BoundingBox = KYIV_BBOX_NARROW,
-    timeout_s: int = QUERY_TIMEOUT_S,
-    include_geometry: bool = True,
+    body: str, timeout_s: int = QUERY_TIMEOUT_S, include_geometry: bool = True
 ) -> str:
     """Full OverpassQL text (reference OverpassQueryBuilder.build,
-    importer.py:92-100): global-bbox header, body, recurse-down footer."""
+    importer.py:92-100): global KYIV_BBOX_NARROW header, body,
+    recurse-down footer."""
+    bbox = KYIV_BBOX_NARROW
     bbox_str = f"{bbox.lat_min},{bbox.lon_min},{bbox.lat_max},{bbox.lon_max}"
     header = f"[out:json][timeout:{timeout_s}][bbox:{bbox_str}];"
     footer = "out body;\n>;\nout skel qt;" if include_geometry else "out body;"
@@ -92,9 +91,7 @@ def overpass_query(
 
 #: The six reference datasets (importer.py:53-73,146-190) as
 #: name -> (body, include_geometry).
-def dataset_queries(
-    bbox: BoundingBox = KYIV_BBOX_NARROW, timeout_s: int = QUERY_TIMEOUT_S
-) -> dict[str, str]:
+def dataset_queries(timeout_s: int = QUERY_TIMEOUT_S) -> dict[str, str]:
     bodies: dict[str, tuple[str, bool]] = {
         "road_network": (regex_clause("way", "highway", HIGHWAY_TYPES), True),
         "narrowing": (
@@ -138,7 +135,7 @@ def dataset_queries(
         ),
     }
     return {
-        name: overpass_query(body, bbox, timeout_s, include_geometry=geom)
+        name: overpass_query(body, timeout_s, include_geometry=geom)
         for name, (body, geom) in bodies.items()
     }
 
@@ -355,17 +352,12 @@ class OverpassClient:
             raise OverpassHTTPError(status, text)
         return json.loads(text)
 
-    def fetch_dataset(
-        self,
-        name: str,
-        bbox: BoundingBox = KYIV_BBOX_NARROW,
-        out_path: str | None = None,
-    ) -> dict:
+    def fetch_dataset(self, name: str, out_path: str | None = None) -> dict:
         """Fetch one of the six reference datasets (dataset_queries);
         optionally spool the raw response to ``out_path`` — the file
         ``read_osm_elements`` ingests, so live fetch and offline replay
         share one scan path."""
-        queries = dataset_queries(bbox)
+        queries = dataset_queries()
         if name not in queries:
             raise KeyError(f"unknown dataset {name!r}; one of {sorted(queries)}")
         resp = self.execute(queries[name])

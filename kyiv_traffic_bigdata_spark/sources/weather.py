@@ -36,22 +36,21 @@ def weather_df_from_payload(spark: SparkSession, payload: dict) -> DataFrame:
 
 
 def fetch_weather_json(
-    lat: float = KYIV_LAT,
-    lon: float = KYIV_LON,
     start_date: str = "2026-01-01",
     end_date: str = "2026-01-07",
     timeout_s: int = 30,
 ):  # pragma: no cover - network path, exercised manually
     """Driver-side REST fetch (reference extract.py:24-58). Offline-safe:
-    raises RuntimeError when the network is unavailable."""
+    raises RuntimeError when the network is unavailable. Location: Kyiv
+    (KYIV_LAT, KYIV_LON)."""
     import urllib.error
     import urllib.parse
     import urllib.request
 
     params = urllib.parse.urlencode(
         {
-            "latitude": lat,
-            "longitude": lon,
+            "latitude": KYIV_LAT,
+            "longitude": KYIV_LON,
             "start_date": start_date,
             "end_date": end_date,
             "hourly": ",".join(WEATHER_HOURLY_FIELDS),

@@ -24,13 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import (
-    DEDUP_TTL_S,
-    FLUSH_INTERVAL_S,
-    KYIV_BBOX_POLLER,
-    POSITION_EVENT_NAMES,
-    BoundingBox,
-)
+from ..config import DEDUP_TTL_S, FLUSH_INTERVAL_S
 from ..sources.kpt import parse_messages
 
 
@@ -45,29 +39,18 @@ def replay_text_stream(
     return reader.load(path)
 
 
-def ingest_transform(
-    raw: DataFrame,
-    bbox: BoundingBox = KYIV_BBOX_POLLER,
-    event_names: tuple[str, ...] = POSITION_EVENT_NAMES,
-    dedup_ttl_s: int | None = DEDUP_TTL_S,
-) -> DataFrame:
+def ingest_transform(raw: DataFrame) -> DataFrame:
     """Raw frame lines → deduplicated position rows with ingest_ts.
 
     * P1–P5 + F1/F3/F4 via the shared batch/stream parse pipeline;
     * ST3: state-store dedup on (vehicle_id, timestamp) with the
-      reference's 60-s TTL expressed as an ingest-time watermark
-      (``websocket_client.py:98-125``). ``dedup_ttl_s=None`` disables it
-      (batch replays that must preserve the reference's ~10% duplicates).
+      reference's 60-s TTL (DEDUP_TTL_S) expressed as an ingest-time
+      watermark (``websocket_client.py:98-125``).
     """
-    with_ts = raw.withColumn("ingest_ts", F.current_timestamp())
-    parsed = parse_messages(
-        with_ts, bbox=bbox, event_names=event_names, default_ts=F.unix_timestamp()
-    )
-    if dedup_ttl_s is None:
-        return parsed
-    return parsed.withWatermark("ingest_ts", f"{dedup_ttl_s} seconds").dropDuplicatesWithinWatermark(
-        ["vehicle_id", "timestamp"]
-    )
+    parsed = parse_messages(raw.withColumn("ingest_ts", F.current_timestamp()))
+    return parsed.withWatermark(
+        "ingest_ts", f"{DEDUP_TTL_S} seconds"
+    ).dropDuplicatesWithinWatermark(["vehicle_id", "timestamp"])
 
 
 def start_positions_sink(
@@ -75,14 +58,15 @@ def start_positions_sink(
     out_path: str,
     checkpoint_path: str,
     fmt: str = "json",
-    trigger_seconds: int | None = FLUSH_INTERVAL_S,
     available_now: bool = False,
 ) -> StreamingQuery:
     """ST1/ST10/S3: micro-batch flush into a date-partitioned store.
 
     The reference's midnight file rotation (writer.py:18-23) becomes a
-    ``date`` partition column; its 5-s flush timer becomes the processing
-    trigger; its WAL-rename two-phase commit becomes the checkpoint.
+    ``date`` partition column; its 5-s flush timer (FLUSH_INTERVAL_S)
+    becomes the processing trigger, or ``available_now`` drains what is
+    there and stops; its WAL-rename two-phase commit becomes the
+    checkpoint.
     """
     # 100 TB state posture: stateful stages (the TTL dedup upstream of
     # this sink) run on RocksDB when the JVM has it — state bounded by
@@ -104,8 +88,8 @@ def start_positions_sink(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    else:
+        writer = writer.trigger(processingTime=f"{FLUSH_INTERVAL_S} seconds")
     return writer.start()
 
 

@@ -190,12 +190,13 @@ class SessionPolicy:
 
     Refresh immediately on 403 (cookies expired —
     session.py:49-77 raises, poller.py:173-177 refreshes), and after
-    ``max_failures`` consecutive failures of any kind
+    MAX_FAILURES consecutive failures of any kind
     (poller.py:184-187). Success resets the streak.
     """
 
-    def __init__(self, max_failures: int = 5):
-        self.max_failures = max_failures
+    MAX_FAILURES = 5
+
+    def __init__(self):
         self.consecutive_failures = 0
         self.refreshes = 0
 
@@ -205,7 +206,7 @@ class SessionPolicy:
     def record_failure(self, http_status: int | None = None) -> bool:
         """Returns True when the session must be refreshed now."""
         self.consecutive_failures += 1
-        if http_status == 403 or self.consecutive_failures >= self.max_failures:
+        if http_status == 403 or self.consecutive_failures >= self.MAX_FAILURES:
             self.consecutive_failures = 0
             self.refreshes += 1
             return True
@@ -332,21 +333,12 @@ class LiveSocketIOClient:
     Spark owns all downstream parallelism.
     """
 
-    def __init__(
-        self,
-        transport,
-        sink,
-        backoff: BackoffPolicy | None = None,
-        session: SessionPolicy | None = None,
-        sleep=time.sleep,
-        clock=time.monotonic,
-    ):
+    def __init__(self, transport, sink, sleep=time.sleep):
         self.transport = transport
         self.sink = sink
-        self.backoff = backoff or BackoffPolicy()
-        self.session = session or SessionPolicy()
+        self.backoff = BackoffPolicy()
+        self.session = SessionPolicy()
         self._sleep = sleep
-        self._clock = clock
         self.machine: SocketIOStateMachine | None = None
         self.stats = {"connections": 0, "frames": 0, "errors": 0}
 
@@ -369,7 +361,7 @@ class LiveSocketIOClient:
             connects += 1
             try:
                 _sid, ping_s = self.transport.handshake()
-                self.machine = SocketIOStateMachine(ping_s, clock=self._clock)
+                self.machine = SocketIOStateMachine(ping_s)
                 self.transport.connect()
                 self._apply(self.machine.on_open())
                 self.session.record_success()

@@ -116,15 +116,10 @@ def mask_bytes(payload: bytes, mask_key: bytes) -> bytes:
     return bytes(a ^ b for a, b in zip(payload, keystream))
 
 
-def encode_frame(
-    opcode: int,
-    payload: bytes,
-    mask_key: bytes | None = None,
-    fin: bool = True,
-) -> bytes:
-    """One frame. Client→server frames MUST carry a 4-byte ``mask_key``
-    (RFC 6455 §5.3); server frames pass None."""
-    b0 = (0x80 if fin else 0) | (opcode & 0x0F)
+def encode_frame(opcode: int, payload: bytes, mask_key: bytes | None = None) -> bytes:
+    """One unfragmented (FIN) frame. Client→server frames MUST carry a
+    4-byte ``mask_key`` (RFC 6455 §5.3); server frames pass None."""
+    b0 = 0x80 | (opcode & 0x0F)
     mask_bit = 0x80 if mask_key is not None else 0
     n = len(payload)
     if n < 126:
@@ -204,13 +199,11 @@ class WSConnection:
         url: str,
         timeout_s: float = 10.0,
         origin: str | None = None,
-        rand: "callable" = os.urandom,
         ssl_context: ssl.SSLContext | None = None,
     ):
         self.url = url
         self.timeout_s = timeout_s
         self.origin = origin
-        self._rand = rand
         self._ssl_context = ssl_context
         self._sock: socket.socket | None = None
         self._buf = b""
@@ -234,7 +227,7 @@ class WSConnection:
             ctx = self._ssl_context or ssl.create_default_context()
             raw = ctx.wrap_socket(raw, server_hostname=host)
         self._sock = raw
-        key = base64.b64encode(self._rand(16)).decode("ascii")
+        key = base64.b64encode(os.urandom(16)).decode("ascii")
         raw.sendall(build_handshake(host, resource, key, origin=self.origin))
         response = b""
         while b"\r\n\r\n" not in response:
@@ -262,7 +255,7 @@ class WSConnection:
     def _send_frame(self, opcode: int, payload: bytes) -> None:
         if self._sock is None:
             raise WSError("not connected")
-        self._sock.sendall(encode_frame(opcode, payload, mask_key=self._rand(4)))
+        self._sock.sendall(encode_frame(opcode, payload, mask_key=os.urandom(4)))
 
     def send_text(self, text: str) -> None:
         self._send_frame(OP_TEXT, text.encode("utf-8"))

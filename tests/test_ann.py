@@ -57,7 +57,7 @@ def test_ann_ivf_recall(emb, exact_pairs):
 def test_ann_ivf_more_probes_more_recall(emb, exact_pairs):
     """Probing every cell must recover the exact result set."""
     q = emb.where(F.col("vec_id") % 50 == 0)
-    rows = SIM.ann_ivf_topk(q, emb, k=10, n_cells=8, n_probe=8).collect()
+    rows = SIM.ann_ivf_topk(q, emb, k=10, n_probe=SIM.IVF_CELLS).collect()
     assert _recall(rows, exact_pairs) == 1.0
 
 
@@ -167,7 +167,7 @@ def test_pq_reconstruction_error_matches_decode(spark, emb, pq_books):
     from kyiv_traffic_bigdata_spark.functions.vector import sq_dist
     from kyiv_traffic_bigdata_spark.operators.pq import encode_pq
 
-    enc = encode_pq(emb, pq_books, keep_cols=("embedding",))
+    enc = encode_pq(emb, pq_books).join(emb, "vec_id")
     chk = enc.select(
         "vec_id",
         "recon_sq_err",

@@ -53,20 +53,6 @@ def test_duplicate_right_ts_tiebreak_deterministic(spark):
     assert out.asof_rid == 9 and out.asof_v == 2.0  # max tiebreak wins
 
 
-def test_tolerance_nulls_stale_matches(spark):
-    left = spark.createDataFrame([(1, 1000), (1, 2000)], "k long, ts long")
-    right = spark.createDataFrame([(1, 900, 5.0)], "k long, ts long, v double")
-    out = {
-        r.ts: r
-        for r in asof_join(
-            left, right, ["k"], "ts", "ts",
-            right_value_cols=["v"], tolerance_s=200,
-        ).collect()
-    }
-    assert out[1000].asof_v == 5.0  # gap 100 <= 200
-    assert out[2000].asof_v is None  # gap 1100 > 200 → stale
-
-
 def test_single_shuffle_plan(spark):
     from kyiv_traffic_bigdata_spark.plans import physical_plan
     from plan_checks import exchange_count
@@ -139,52 +125,3 @@ def test_interval_join_exact_beyond_double_precision(spark):
         ).collect()
     )
     assert got == [(0, 10), (1, 11), (2, 11)]
-
-
-def test_interval_join_outlier_width_guard(spark):
-    """width_quantile < 1 keeps ONE giant interval from inflating the
-    bin for everyone: candidate volume (equi-join matches before the
-    BETWEEN filter) must stay bounded, and the result exact."""
-    from pyspark.sql import functions as F
-
-    from kyiv_traffic_bigdata_spark.operators.interval import (
-        choose_bin_width,
-        interval_join,
-    )
-
-    # 50 short intervals (width 10) + one 100_000-wide outlier; 500 points.
-    iv = spark.createDataFrame(
-        [(1, i, i * 200, i * 200 + 10) for i in range(50)]
-        + [(1, 99, 0, 100_000)],
-        "k long, iid long, lo long, hi long",
-    )
-    pts = spark.createDataFrame(
-        [(1, i, i * 20) for i in range(500)], "k long, pid long, ts long"
-    )
-
-    w_max = choose_bin_width(iv, "lo", "hi", 1.0)
-    w_q = choose_bin_width(iv, "lo", "hi", 0.9)
-    assert w_max == 100_000 and w_q <= 10
-
-    def candidates(width):
-        binned = iv.withColumn(
-            "_bin", F.explode(F.sequence(
-                F.expr(f"lo div {width}"), F.expr(f"hi div {width}")))
-        )
-        return (
-            pts.withColumn("_bin", F.expr(f"ts div {width}"))
-            .join(binned, ["k", "_bin"]).count()
-        )
-
-    # max-width: every point lands in the outlier's giant bins alongside
-    # ~all short intervals → near points×intervals. Quantile width prunes.
-    assert candidates(w_q) < candidates(w_max) / 5
-
-    brute = sorted(
-        (r.pid, r.iid)
-        for r in pts.join(iv, "k")
-        .where((F.col("ts") >= F.col("lo")) & (F.col("ts") <= F.col("hi")))
-        .collect()
-    )
-    got = interval_join(pts, iv, ["k"], "ts", "lo", "hi", width_quantile=0.9)
-    assert sorted((r.pid, r.iid) for r in got.collect()) == brute

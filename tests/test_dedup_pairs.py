@@ -33,7 +33,7 @@ def test_identical_docs_pair_everywhere(spark):
     assert {(r.id_a, r.id_b) for r in sh} >= {(1, 2)}
     assert all(r.hamming == 0 for r in sh if (r.id_a, r.id_b) == (1, 2))
 
-    wn = winnow_overlap_pairs(d, max_doc_freq=10).collect()
+    wn = winnow_overlap_pairs(d).collect()
     ours = [r for r in wn if (r.id_a, r.id_b) == (1, 2)]
     assert len(ours) == 1 and ours[0].overlap == 1.0
 
@@ -60,7 +60,7 @@ def test_winnow_fingerprints_shape(spark):
 def test_overlap_score_monotone_in_shared_content(spark):
     half = LOREM[: len(LOREM) // 2] + " " + OTHER
     d = _docs(spark, [(1, LOREM), (2, LOREM), (3, half)])
-    wn = {(r.id_a, r.id_b): r.overlap for r in winnow_overlap_pairs(d, max_doc_freq=10).collect()}
+    wn = {(r.id_a, r.id_b): r.overlap for r in winnow_overlap_pairs(d).collect()}
     assert wn[(1, 2)] == 1.0
     if (1, 3) in wn:
         assert wn[(1, 3)] < wn[(1, 2)]
@@ -84,7 +84,7 @@ def test_jaccard_stop_shingle_cap_skew(spark):
     d = _docs(spark, rows)
 
     # with the cap at 10, every boilerplate shingle (df=32) is pruned...
-    idx = shingle_index(d, "doc_id", "text", 3)
+    idx = shingle_index(d, 3)
     dfreq = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     assert dfreq.where(F.col("df") > 10).count() > 0  # hot shingles exist
     capped = ngram_jaccard_pairs(d, threshold=0.3, max_doc_freq=10)
@@ -131,7 +131,7 @@ def test_jaccard_cap_bounds_candidate_volume(spark):
     boiler = "all rights reserved no part may be reproduced in any form"
     rows = [(i, f"{boiler} unique text fragment {i} gamma delta") for i in range(40)]
     d = _docs(spark, rows)
-    idx = shingle_index(d, "doc_id", "text", 3)
+    idx = shingle_index(d, 3)
     rare = (
         idx.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from kyiv_traffic_bigdata_spark.sources.eway import (
     GPS_SCALE,
+    REPORT_OTHER_CAP,
     build_report,
     categorize,
     decode_messages,
@@ -105,8 +106,9 @@ def test_categorize_drops_invalid_coords(spark):
 
 
 def test_report_shape_and_cap(spark):
-    msg = encode_pairs(SUDAN, *([GULF] * 5))
-    report = build_report(categorize(_decode(spark, [msg])), other_cap=3)
-    assert report["summary"] == {"total": 6, "kyiv": 0, "ukraine": 0, "other": 6}
-    assert len(report["other_positions"]) == 3
+    msg = encode_pairs(SUDAN, *([GULF] * (REPORT_OTHER_CAP + 4)))
+    report = build_report(categorize(_decode(spark, [msg])))
+    n = REPORT_OTHER_CAP + 5
+    assert report["summary"] == {"total": n, "kyiv": 0, "ukraine": 0, "other": n}
+    assert len(report["other_positions"]) == REPORT_OTHER_CAP
     assert set(report["other_positions"][0]) == {"latitude", "longitude", "offset"}

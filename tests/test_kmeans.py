@@ -55,11 +55,11 @@ def test_deterministic_across_runs(spark):
 
 
 def test_empty_cluster_keeps_previous_centroid(spark):
-    # seeds 0 and 1 are both inside blob A; after one update the loser
-    # seed must survive (not NaN / not dropped) so k stays 2
+    # the seeds (the two lowest ids, 0 and 1) are both inside blob A;
+    # after one update the loser seed must survive (not NaN / not
+    # dropped) so k stays 2
     d = _toy(spark)
-    seeds = [[0.0, 0.1], [0.1, 0.0]]
-    _, cents, _ = lloyd_iterations(d, k=2, n_iters=1, centroids=seeds)
+    _, cents, _ = lloyd_iterations(d, k=2, n_iters=1)
     assert len(cents) == 2
     assert all(all(x == x for x in c) for c in cents)  # no NaN
 

@@ -14,12 +14,14 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
 from kyiv_traffic_bigdata_spark.kpt_pipeline import (
+    KYIV_CENTER,
     fastest_routes,
     global_speed_stats,
     latest_fixes,
@@ -188,7 +190,7 @@ def test_latest_fixes_match(oracle, pipeline):
 @needs_ref
 def test_map_center_matches(oracle, pipeline):
     fixes, _, _ = pipeline
-    la, lo = map_center(latest_fixes(fixes))
+    la, lo = map_center([r.asDict() for r in latest_fixes(fixes).collect()])
     vals = oracle.latest.values()
     assert la == pytest.approx(sum(p["lat"] for p in vals) / len(vals), rel=1e-9)
     assert lo == pytest.approx(sum(p["lon"] for p in vals) / len(vals), rel=1e-9)
@@ -232,3 +234,39 @@ def test_latest_fix_tie_keeps_first_in_file_order(spark):
     got = latest_fixes(fixes).collect()
     assert len(got) == 1 and got[0].lat == 50.40  # first, not last
     os.unlink(path)
+
+
+def _rendered_center(html: str) -> tuple[float, float]:
+    m = re.search(r"setView\(\[([-\d.e]+), ([-\d.e]+)\]", html)
+    return float(m.group(1)), float(m.group(2))
+
+
+def test_render_map_centers_on_collected_rows(spark, tmp_path):
+    """The map center is the mean of the very rows the page plots, and
+    an empty fleet falls back to KYIV_CENTER."""
+    path = tmp_path / "positions.jsonl"
+    path.write_text(json.dumps({
+        "timestamp": "2026-02-07T00:00:00", "count": 3,
+        "positions": [
+            {"vehicle_id": 1, "route_id": 5, "lat": 50.40, "lon": 30.50,
+             "direction": 0, "flag": 0, "timestamp": 100},
+            {"vehicle_id": 1, "route_id": 5, "lat": 50.41, "lon": 30.51,
+             "direction": 0, "flag": 0, "timestamp": 130},
+            {"vehicle_id": 2, "route_id": 6, "lat": 50.47, "lon": 30.61,
+             "direction": 0, "flag": 0, "timestamp": 120},
+        ],
+    }) + "\n")
+    fixes = read_positions_ordered(spark, str(path))
+    rows = map_rows(fixes, speed_samples(fixes))
+    plotted = rows.collect()
+    assert len(plotted) == 2
+
+    out = tmp_path / "map.html"
+    assert render_map_html(rows, str(out)) == 2
+    la, lo = _rendered_center(out.read_text())
+    assert la == sum(r.lat for r in plotted) / 2
+    assert lo == sum(r.lon for r in plotted) / 2
+
+    empty = tmp_path / "empty.html"
+    assert render_map_html(rows.limit(0), str(empty)) == 0
+    assert _rendered_center(empty.read_text()) == KYIV_CENTER

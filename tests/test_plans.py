@@ -101,7 +101,7 @@ def test_shingle_index_scan_filter_stays_cheap(spark, sf_dir):
     cloned the whole tokenizer+n-gram pipeline into the parquet scan's
     DataFilters (2x query cost). Scan filters must stay trivial."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = physical_plan(shingle_index(docs, "doc_id", "text", 3))
+    plan = physical_plan(shingle_index(docs, 3))
     for expr in scan_filter_exprs(plan):
         assert "regexp_replace" not in expr and "transform" not in expr
 

@@ -72,12 +72,13 @@ def test_proximity_rejects_undersized_cell(spark):
 
 
 def _emb_frame(spark):
-    """20 vectors in 2 planted clusters + noise (dim 8)."""
+    """20 vectors in 2 planted clusters + noise (dim 64, the embeddings
+    table's width)."""
     import random
 
     rng = random.Random(3)
-    base_a = [1.0, 0.5, -0.3, 0.8, 0.1, -0.6, 0.4, 0.2]
-    base_b = [-0.7, 0.2, 0.9, -0.1, 0.5, 0.3, -0.8, 0.6]
+    base_a = [1.0, 0.5, -0.3, 0.8, 0.1, -0.6, 0.4, 0.2] * 8
+    base_b = [-0.7, 0.2, 0.9, -0.1, 0.5, 0.3, -0.8, 0.6] * 8
     rows = []
     for i in range(20):
         base = base_a if i % 2 == 0 else base_b
@@ -88,7 +89,7 @@ def _emb_frame(spark):
 
 def test_neardup_pairs_subset_of_exact_and_thresholded(spark):
     emb = _emb_frame(spark)
-    got = cosine_neardup_pairs(emb, dim=8, threshold=0.9).collect()
+    got = cosine_neardup_pairs(emb, threshold=0.9).collect()
     assert len(got) > 0
     # every reported pair is ordered, above threshold, and exact-verified
     rows = emb.collect()

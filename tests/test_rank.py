@@ -223,27 +223,31 @@ def test_rank_sketch_cells_partition_invariant_and_bounded(spark):
     table must be IDENTICAL under any partitioning of the input (the
     associativity that buys exact streaming parity) and bounded by
     groups x levels x depth x width regardless of row count."""
-    from kyiv_traffic_bigdata_spark.operators.qsketch import build_rank_sketch
+    from kyiv_traffic_bigdata_spark.operators.qsketch import (
+        QSKETCH_DEPTH,
+        QSKETCH_LEVELS,
+        build_rank_sketch,
+    )
 
     rows = [("a", (i * 37) % 500) for i in range(200)] + [
         ("b", (i * 91) % 300) for i in range(150)
     ]
     df = spark.createDataFrame(rows, "g string, v long")
-    levels, depth, width = 10, 2, 16
+    width = 16
     base = sorted(
         tuple(r)
         for r in build_rank_sketch(
-            df.repartition(1), "g", "v", levels, depth, width
+            df.repartition(1), "g", "v", width
         ).collect()
     )
     shuffled = sorted(
         tuple(r)
         for r in build_rank_sketch(
-            df.repartition(7, "v"), "g", "v", levels, depth, width
+            df.repartition(7, "v"), "g", "v", width
         ).collect()
     )
     assert base == shuffled
-    assert len(base) <= 2 * levels * depth * width
+    assert len(base) <= 2 * QSKETCH_LEVELS * QSKETCH_DEPTH * width
 
 
 def test_rank_sketch_interval_estimates_never_underestimate(spark):
@@ -261,16 +265,16 @@ def test_rank_sketch_interval_estimates_never_underestimate(spark):
 
     vals = [(i * 53) % 256 for i in range(300)]
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v long")
-    levels, depth, width = 8, 2, 16
+    width = 16
     cells = {
         (r["g"], r["lvl"], r["j"], r["b"]): r["c"]
-        for r in build_rank_sketch(df, "g", "v", levels, depth, width).collect()
+        for r in build_rank_sketch(df, "g", "v", width).collect()
     }
     for lvl in (0, 1, 2):
         shift = QSKETCH_BRANCH_BITS * lvl
         for bucket in range(0, max(1, 256 >> shift), 3):
             true = sum(1 for v in vals if (v >> shift) == bucket)
-            est = estimate_interval(cells, "g", lvl, bucket, depth, width)
+            est = estimate_interval(cells, "g", lvl, bucket, width)
             assert est >= true, (lvl, bucket, est, true)
 
 
@@ -331,15 +335,15 @@ def test_rank_sketch_descent_exact_when_collision_free(spark):
 
     vals = sorted((i * 17) % 100 for i in range(101))
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v long")
-    levels, depth, width = 7, 2, 4096
+    width = 4096
     cells = {
         (r["g"], r["lvl"], r["j"], r["b"]): r["c"]
-        for r in build_rank_sketch(df, "g", "v", levels, depth, width).collect()
+        for r in build_rank_sketch(df, "g", "v", width).collect()
     }
     n = len(vals)
     for num, den in ((1, 2), (9, 10), (99, 100)):
         target = (num * n + num) // den
-        got = descend_quantile(cells, "g", target, levels, depth, width)
+        got = descend_quantile(cells, "g", target, width)
         assert got == vals[target - 1], (num, den, got, vals[target - 1])
 
 

@@ -1,7 +1,8 @@
 """Every package module, and every top-level function or class in one,
 is reached from an entry point (the CLI, bench.py, __spark_entry__.py,
 perfbench/ or tools/): code only tests reach is dead code, so it either
-gets a caller or is deleted."""
+gets a caller or is deleted. Likewise every defaulted parameter of a
+reached function is set by some reached call, or it is a constant."""
 
 import importlib.util
 from pathlib import Path
@@ -35,6 +36,40 @@ PENDING = {
 }
 
 
+_DEPLOY = "deployment setting"
+_FAKE = "fake: tests inject"
+_CAP = "cap: tests lower it to reach a guarded path on tiny data"
+_TWO = "two values: a tested property compares them"
+
+#: Defaulted parameters no reached call sets, each with why it is not a
+#: constant. A new unused option fails the test: make it a constant.
+SEAMS = {
+    "kyiv_traffic_bigdata_spark/session.py:get_spark:master": f"{_DEPLOY}: Spark master URL",
+    "kyiv_traffic_bigdata_spark/session.py:get_spark:shuffle_partitions": f"{_DEPLOY}: partition count",
+    "kyiv_traffic_bigdata_spark/sources/eway.py:live_eway_recv:timeout_s": f"{_DEPLOY}: receive timeout",
+    "kyiv_traffic_bigdata_spark/sources/osm.py:OverpassClient.__init__:url": f"{_DEPLOY}: endpoint",
+    "kyiv_traffic_bigdata_spark/sources/osm.py:OverpassClient.__init__:delay_s": f"{_DEPLOY}: request pacing",
+    "kyiv_traffic_bigdata_spark/sources/osm.py:OverpassClient.__init__:timeout_s": f"{_DEPLOY}: HTTP timeout",
+    "kyiv_traffic_bigdata_spark/sources/osm.py:dataset_queries:timeout_s": f"{_DEPLOY}: server-side query timeout",
+    "kyiv_traffic_bigdata_spark/sources/weather.py:fetch_weather_json:timeout_s": f"{_DEPLOY}: HTTP timeout",
+    "kyiv_traffic_bigdata_spark/streaming/transport.py:PollingTransport.__init__:timeout_s": f"{_DEPLOY}: HTTP timeout",
+    "kyiv_traffic_bigdata_spark/streaming/ws.py:WSConnection.__init__:origin": f"{_DEPLOY}: Origin header",
+    "kyiv_traffic_bigdata_spark/streaming/ws.py:WSConnection.__init__:ssl_context": f"{_DEPLOY}: TLS trust",
+    "kyiv_traffic_bigdata_spark/sources/eway.py:TimedCapture.__init__:clock": f"{_FAKE} a clock to end the session",
+    "kyiv_traffic_bigdata_spark/sources/eway.py:live_eway_recv:connection": f"{_FAKE} a scripted WebSocket",
+    "kyiv_traffic_bigdata_spark/sources/kpt.py:parse_messages:default_ts": f"{_FAKE} a fixed clock for frames without a timestamp",
+    "kyiv_traffic_bigdata_spark/sources/osm.py:OverpassClient.__init__:clock": f"{_FAKE} a clock to check pacing",
+    "kyiv_traffic_bigdata_spark/sources/osm.py:OverpassClient.__init__:sleep": f"{_FAKE} a sleep to check pacing",
+    "kyiv_traffic_bigdata_spark/sources/osm.py:OverpassClient.__init__:transport": f"{_FAKE} an HTTP transport",
+    "kyiv_traffic_bigdata_spark/streaming/transport.py:LiveSocketIOClient.__init__:sleep": f"{_FAKE} a sleep that records backoff delays",
+    "kyiv_traffic_bigdata_spark/streaming/transport.py:SocketIOStateMachine.__init__:clock": f"{_FAKE} a clock to drive ping timing",
+    "kyiv_traffic_bigdata_spark/operators/graph.py:connected_components:max_iter": f"{_CAP}: the non-convergence RuntimeError on a 7-node path",
+    "kyiv_traffic_bigdata_spark/sources/eway.py:decode_messages:min_len": f"{_CAP}: hand-built frames shorter than the 100-char gate",
+    "kyiv_traffic_bigdata_spark/operators/qsketch.py:build_rank_sketch:width": f"{_TWO}: colliding (16) and collision-free (4096) sketches",
+    "kyiv_traffic_bigdata_spark/operators/qsketch.py:descend_quantile:width": f"{_TWO}: colliding (16) and collision-free (4096) sketches",
+}
+
+
 @pytest.fixture(scope="module")
 def reachability():
     spec = importlib.util.spec_from_file_location("reachability", TOOL)
@@ -49,3 +84,7 @@ def test_every_package_module_is_reached_from_an_entry_point(reachability):
 
 def test_only_pending_functions_are_unreached(reachability):
     assert set(reachability.unreached_functions()) == PENDING
+
+
+def test_only_seam_parameters_are_unset(reachability):
+    assert set(reachability.unset_parameters()) == SEAMS.keys()

@@ -136,7 +136,7 @@ def test_checkpoint_recovery_no_duplicates(spark, tmp_path):
     def run_once():
         raw = replay_text_stream(spark, str(src))
         q = start_positions_sink(
-            ingest_transform(raw, dedup_ttl_s=None), out, ckpt, available_now=True
+            ingest_transform(raw), out, ckpt, available_now=True
         )
         q.awaitTermination(180)
 
@@ -151,8 +151,9 @@ def test_checkpoint_recovery_no_duplicates(spark, tmp_path):
 def test_ttl_dedup_checkpoint_recovery_no_duplicates(spark, tmp_path):
     """Stateful restart: the TTL dedup state must survive a restart from
     the checkpoint, so a key replayed after the restart is still dropped
-    while a new key passes. The TTL is long enough that no slow host can
-    expire the key between the two runs."""
+    while a new key passes. However long the pause between the runs, the
+    restored watermark still trails the first run's ingest time, so the
+    key cannot have expired when the replay arrives."""
     src = tmp_path / "src"
     src.mkdir()
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -161,7 +162,7 @@ def test_ttl_dedup_checkpoint_recovery_no_duplicates(spark, tmp_path):
     def run_once():
         raw = replay_text_stream(spark, str(src))
         q = start_positions_sink(
-            ingest_transform(raw, dedup_ttl_s=600), out, ckpt, available_now=True
+            ingest_transform(raw), out, ckpt, available_now=True
         )
         q.awaitTermination(180)
 
@@ -205,7 +206,7 @@ def test_ingest_dedup_runs_on_both_state_store_providers(
     old = spark.conf.get(conf_key, None)
     try:
         q = start_positions_sink(
-            ingest_transform(replay_text_stream(spark, str(src)), dedup_ttl_s=60),
+            ingest_transform(replay_text_stream(spark, str(src))),
             str(tmp_path / "out"),
             str(tmp_path / "ckpt"),
             available_now=True,

@@ -100,13 +100,13 @@ def test_backoff_doubles_and_caps_and_resets():
 
 
 def test_session_policy_403_and_streak():
-    s = SessionPolicy(max_failures=3)
+    s = SessionPolicy()
     assert s.record_failure(None) is False
     assert s.record_failure(403) is True  # immediate on 403
     assert s.consecutive_failures == 0  # refresh resets streak
-    assert s.record_failure(None) is False
-    assert s.record_failure(None) is False
-    assert s.record_failure(None) is True  # 3rd consecutive
+    for _ in range(SessionPolicy.MAX_FAILURES - 1):
+        assert s.record_failure(None) is False
+    assert s.record_failure(None) is True  # MAX_FAILURES-th consecutive
     s.record_failure(None)
     s.record_success()
     assert s.consecutive_failures == 0

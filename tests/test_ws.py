@@ -146,8 +146,8 @@ class ServerConn:
     def send_raw(self, data: bytes):
         self._sock.sendall(data)
 
-    def send_text(self, text: str, **kw):
-        self.send_raw(encode_frame(OP_TEXT, text.encode(), **kw))
+    def send_text(self, text: str):
+        self.send_raw(encode_frame(OP_TEXT, text.encode()))
 
     def recv_frame(self) -> tuple[int, bytes]:
         while not self._pending:
@@ -192,8 +192,10 @@ def test_wsconnection_loopback_text_ping_fragmentation_close():
         op, payload = conn.recv_frame()  # the auto-pong
         assert op == OP_PONG and payload == b"x", (op, payload)
         # fragmented message: text "wor" + continuation "ld"
-        conn.send_raw(encode_frame(OP_TEXT, b"wor", fin=False))
-        conn.send_raw(encode_frame(OP_CONT, b"ld", fin=True))
+        first = bytearray(encode_frame(OP_TEXT, b"wor"))
+        first[0] &= 0x7F  # clear FIN: more fragments follow
+        conn.send_raw(bytes(first))
+        conn.send_raw(encode_frame(OP_CONT, b"ld"))
         conn.expect_text("bye")  # client's own send, masked
         conn.close()
 
