@@ -1,6 +1,7 @@
 """Benchmark harness: runs the registered query inventory at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[N] (N:
+session.CPUS, $SPARK_GRAFT_CPUS or the process's CPUs) and prints ONE
+compact JSON line:
 
     {"metric": "total_query_sec", "value": N, "unit": "sec",
      "n_queries": N, "sf": 0.1, ...}
@@ -25,6 +26,7 @@ import time
 from kyiv_traffic_bigdata_spark.queries import QUERIES
 from kyiv_traffic_bigdata_spark.session import get_spark
 from kyiv_traffic_bigdata_spark.tables import TABLE_NAMES, load_table
+from perfbench.stats import loadavg
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -132,9 +134,7 @@ def main() -> None:
     # identical code purely with sandbox load (r04 vs r06), so every
     # bench line carries the pre-run 1/5/15-min load averages.
     try:
-        with open("/proc/loadavg") as fh:
-            _la = fh.read().split()
-        loadavg_start = [float(_la[0]), float(_la[1]), float(_la[2])]
+        loadavg_start = loadavg()
     except OSError:
         loadavg_start = None
     spark = get_spark("bench")

@@ -267,6 +267,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     e = sub.add_parser("eway-capture", help="timed binary-WS capture -> JSON report")
     e.add_argument("--url", default="")
+    # the reference listener's capped session (ws_interceptor.py:17-24)
     e.add_argument("--minutes", type=float, default=3.0)
     e.add_argument("--replay", default=None, help="offline: captured b64 lines")
     e.add_argument("--out", required=True)

@@ -61,21 +61,17 @@ def valid_coords(lat: Column, lon: Column) -> Column:
     return lat.between(-90.0, 90.0) & lon.between(-180.0, 180.0)
 
 
-def classify_region(
-    lat: Column,
-    lon: Column,
-    kyiv: BoundingBox = KYIV_BBOX_NARROW,
-    ukraine: BoundingBox = UKRAINE_BBOX,
-) -> Column:
-    """First-match region label: kyiv -> ukraine -> other (reference F8).
+def classify_region(lat: Column, lon: Column) -> Column:
+    """First-match region label: kyiv (KYIV_BBOX_NARROW) -> ukraine
+    (UKRAINE_BBOX) -> other (reference F8).
 
     One ``when`` cascade instead of the reference's three output lists —
     a single DataFrame with a ``region`` column scales; three driver-side
     lists do not.
     """
     return (
-        F.when(in_bbox(lat, lon, kyiv), F.lit("kyiv"))
-        .when(in_bbox(lat, lon, ukraine), F.lit("ukraine"))
+        F.when(in_bbox(lat, lon, KYIV_BBOX_NARROW), F.lit("kyiv"))
+        .when(in_bbox(lat, lon, UKRAINE_BBOX), F.lit("ukraine"))
         .otherwise(F.lit("other"))
     )
 

@@ -119,16 +119,15 @@ def grid_sum(col: Column, dp: int) -> Column:
     return grid_sum_dec(col, dp).cast("double")
 
 
-def grid_sum_over(col: Column, dp: int, window) -> Column:
-    """Window-function form of :func:`grid_sum_dec`: the same q/r split
-    summed ``OVER window`` and recombined per output row. Shares one
-    window frame with any sibling aggregates over the same spec."""
-    n = grid_scaled(col, dp)
+def grid_sum_over(col: Column, window) -> Column:
+    """Window-function form of :func:`grid_sum_dec` for an integer-valued
+    column (0 decimals): the same q/r split summed ``OVER window`` and
+    recombined per output row. Shares one window frame with any sibling
+    aggregates over the same spec."""
+    n = grid_scaled(col, 0)
     q = F.shiftright(n, SPLIT_BITS)
     r = n.bitwiseAND(F.lit(_LO_MASK))
     total = F.sum(q).over(window).cast("decimal(38,0)") * F.lit(
         _HI_UNIT
     ).cast("decimal(7,0)") + F.sum(r).over(window).cast("decimal(38,0)")
-    if dp == 0:
-        return total
-    return total / F.lit(10**dp).cast(f"decimal({dp + 1},0)")
+    return total

@@ -152,20 +152,18 @@ def lang_id(tok: Column) -> Column:
     return expr
 
 
-def quality_score(col: Column, tok: Column | None = None) -> Column:
+def quality_score(col: Column, tok: Column) -> Column:
     """Composite [0,1] quality score: length, alpha share, stopword share.
 
     Same shape as public web-corpus quality filters (C4-style): penalize
     ultra-short docs, non-alphabetic noise, and stopword-free keyword
     stuffing. Pure arithmetic → bit-identical in the oracle.
 
-    Pass a pre-materialized ``tok`` column when composing with other
-    token-consuming expressions — the token array is referenced several
-    times below and recomputing the tokenizer per reference is the
-    dominant cost (see operators.dedup.shingle_index note).
+    ``tok`` is the pre-materialized ``tokens(col)`` column — the token
+    array is referenced several times below and recomputing the
+    tokenizer per reference is the dominant cost (see
+    operators.dedup.shingle_index note).
     """
-    if tok is None:
-        tok = tokens(col)
     ntok = F.size(tok)
     len_score = F.least(ntok / F.lit(100.0), F.lit(1.0))
     raw = (
@@ -241,16 +239,22 @@ def gram_rolling_hashes(ascii_col: Column, k: int) -> Column:
     return _roll(ascii_col)
 
 
-def winnowed_fps(ascii_col: Column, k: int, w: int) -> Column:
+#: Winnowing window: consecutive gram hashes per minimum in
+#: :func:`winnowed_fps`.
+WINNOW_W = 4
+
+
+def winnowed_fps(ascii_col: Column, k: int) -> Column:
     """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, MOSS)
     over :func:`gram_rolling_hashes`, in one Arrow UDF.
 
-    Keep the minimum hash of every ``w``-wide window of consecutive gram
-    hashes, deduplicated preserving FIRST occurrence — guarantees any
-    match of length ≥ w+k-1 chars shares a fingerprint while keeping
-    ~2/(w+1) of the grams. Docs with fewer than ``w`` grams keep their
+    Keep the minimum hash of every WINNOW_W-wide window of consecutive
+    gram hashes, deduplicated preserving FIRST occurrence — guarantees
+    any match of length ≥ w+k-1 chars shares a fingerprint while keeping
+    ~2/(w+1) of the grams. Docs with fewer than w grams keep their
     single minimum; empty stays empty.
     """
+    w = WINNOW_W
     import numpy as np
     from numpy.lib.stride_tricks import sliding_window_view
     from pyspark.sql.pandas.functions import pandas_udf

@@ -12,6 +12,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: Dimension of the driver's ``embeddings`` vectors: the width of every
+#: literal hyperplane (the DuckDB twins build the same plane tables).
+EMB_DIM = 64
+
 
 def as_double(v: Column) -> Column:
     return v.cast("array<double>")
@@ -51,7 +55,7 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
 
 
-def plane_coefficients(dim: int, n_planes: int, seed: str = "rp") -> list[list[float]]:
+def plane_coefficients(n_planes: int, seed: str) -> list[list[float]]:
     """Deterministic random-hyperplane coefficients in [-1, 1).
 
     c_{p,k} = ((int(md5("{seed}_{p}_{k}")[:8], 16) % 1000) / 500) - 1 — the
@@ -59,7 +63,7 @@ def plane_coefficients(dim: int, n_planes: int, seed: str = "rp") -> list[list[f
     are reproducible across runs, engines, and cluster topologies (a hard
     requirement for re-bucketing 100 TB of embeddings incrementally).
     Computed once driver-side: the planes are row-independent, so hashing
-    them per row would cost dim x n_planes md5s per vector for constants.
+    them per row would cost EMB_DIM x n_planes md5s per vector for constants.
     """
     import hashlib
 
@@ -68,7 +72,7 @@ def plane_coefficients(dim: int, n_planes: int, seed: str = "rp") -> list[list[f
             (int(hashlib.md5(f"{seed}_{p}_{k}".encode()).hexdigest()[:8], 16) % 1000)
             / 500.0
             - 1.0
-            for k in range(dim)
+            for k in range(EMB_DIM)
         ]
         for p in range(n_planes)
     ]
@@ -89,7 +93,7 @@ def literal_matrix(rows: list[list[float]]) -> Column:
     return F.expr(f"array({body})")
 
 
-def hyperplane_sign_bits(v: Column, dim: int, n_planes: int, seed: str = "rp") -> Column:
+def hyperplane_sign_bits(v: Column, n_planes: int, seed: str = "rp") -> Column:
     """Random-hyperplane LSH signature as a bit-string column.
 
     Each plane's sign bit is ``dot(v, plane) >= 0``; vectors in the same
@@ -107,7 +111,7 @@ def hyperplane_sign_bits(v: Column, dim: int, n_planes: int, seed: str = "rp") -
     twins use ``SUM(CAST(x * c AS DECIMAL(28,10)))``).
     """
     vd = as_double(v)
-    planes = literal_matrix(plane_coefficients(dim, n_planes, seed))
+    planes = literal_matrix(plane_coefficients(n_planes, seed))
     # one transform over a literal array-of-arrays, NOT n_planes separate
     # fold expressions: Catalyst analyzes/codegens the projection lambda
     # once, which cuts plan-compile time ~4x at n_planes=16 (the per-row

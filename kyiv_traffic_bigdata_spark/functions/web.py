@@ -100,19 +100,21 @@ def html_to_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
-def sql_html_to_text(expr: str) -> str:
-    """DuckDB twin of :func:`html_to_text` (same chain, 'g' flag)."""
-    out = expr
+def sql_html_to_text() -> str:
+    """DuckDB twin of :func:`html_to_text` over the ``html`` column (same
+    chain, 'g' flag)."""
+    out = "html"
     for pat, repl in HTML_TEXT_CHAIN:
         rq = repl.replace("'", "''")
         out = f"regexp_replace({out}, '{pat}', '{rq}', 'g')"
     return f"trim(regexp_replace({out}, '\\s+', ' ', 'g'))"
 
 
-def sql_normalize_url(expr: str) -> str:
-    """DuckDB twin of :func:`normalize_url` over a string expression —
+def sql_normalize_url() -> str:
+    """DuckDB twin of :func:`normalize_url` over the ``url`` column —
     identical regexps (RE2-safe) and identical rule order, for oracle
     parity."""
+    expr = "url"
     scheme = f"lower(regexp_extract({expr}, '{_SPLIT}', 1))"
     auth0 = f"lower(regexp_extract({expr}, '{_SPLIT}', 2))"
     auth = (

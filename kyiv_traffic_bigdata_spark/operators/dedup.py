@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..functions.rounding import round6
 
-from ..functions.text import fingerprint, portable_hash, tokens, word_ngrams
+from ..functions.text import WINNOW_W, fingerprint, portable_hash, tokens, word_ngrams
 from .staging import stage
 
 #: MinHash parameters. 16 permutations in 4 bands × 4 rows ⇒ LSH s-curve
@@ -105,6 +105,18 @@ def shingle_index(docs: DataFrame, ngram: int) -> DataFrame:
 #: score (recall-only, zero-false-positive pruning — same contract as LSH).
 NGRAM_MAX_DOC_FREQ = 100
 
+#: Pair cutoffs: shingle-set Jaccard for the near-dup pairs of
+#: ngram_jaccard_pairs and minhash_lsh_pairs (applied in jaccard_verify),
+#: of prefix_filter_pairs and of sorted_neighborhood_pairs (which pairs
+#: each doc with its next SN_WINDOW neighbors in sort order), and the
+#: directed containment cutoff of containment_pairs. The SQL twins use
+#: the same values.
+NEARDUP_JACCARD = 0.2
+PREFIX_JACCARD = 0.5
+SN_JACCARD = 0.3
+SN_WINDOW = 3
+CONTAINMENT_THRESHOLD = 0.5
+
 #: Join hint for the fat per-doc shingle-ARRAY sides of jaccard_verify:
 #: ``shuffle_merge`` sorts and SPILLS (the r10 100× finding: shuffle-hash
 #: builds a non-spillable in-memory hash relation, which OOMs on fat
@@ -116,11 +128,9 @@ NGRAM_MAX_DOC_FREQ = 100
 ARRAY_SIDE_JOIN_HINT = "shuffle_merge"
 
 
-def jaccard_verify(
-    candidates: DataFrame, idx: DataFrame, threshold: float
-) -> DataFrame:
+def jaccard_verify(candidates: DataFrame, idx: DataFrame) -> DataFrame:
     """Exact-Jaccard verification of (id_a, id_b) candidate pairs against a
-    (doc_id, shingle) inverted index.
+    (doc_id, shingle) inverted index; keeps jaccard ≥ NEARDUP_JACCARD.
 
     Work is bounded by |candidates| × shingles/doc, independent of corpus
     size. Output has NO false positives; shared by the n-gram-Jaccard
@@ -172,15 +182,15 @@ def jaccard_verify(
             "id_b",
             round6(n_inter / denom).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= NEARDUP_JACCARD)
     )
 
 
-def _rare_pair_counts(docs: DataFrame, max_doc_freq: int) -> DataFrame:
+def _rare_pair_counts(docs: DataFrame) -> DataFrame:
     """Rare-shingle candidate pairs with hot-shingle completion inputs —
     the shared candidate build of :func:`ngram_jaccard_pairs` and
     :func:`containment_pairs`: one row per (id_a < id_b) pair sharing at
-    least one shingle of document frequency ≤ ``max_doc_freq``, with
+    least one shingle of document frequency ≤ NGRAM_MAX_DOC_FREQ, with
     ``(id_a, id_b, n_rare, n_a, n_b, hot_a, hot_b)`` — the rare-shingle
     intersection count, both full shingle-set sizes, and both sorted
     above-cap shingle arrays (empty when a doc has none). Callers bound
@@ -208,9 +218,9 @@ def _rare_pair_counts(docs: DataFrame, max_doc_freq: int) -> DataFrame:
         .transform(stage)
     )
     sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    rare = dfreq.where(F.col("_df") <= max_doc_freq).select("shingle", "_sid")
+    rare = dfreq.where(F.col("_df") <= NGRAM_MAX_DOC_FREQ).select("shingle", "_sid")
     hot_arrs = (
-        idx.join(dfreq.where(F.col("_df") > max_doc_freq).select("shingle"), "shingle")
+        idx.join(dfreq.where(F.col("_df") > NGRAM_MAX_DOC_FREQ).select("shingle"), "shingle")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("shingle")).alias("hot"))
     )
@@ -251,15 +261,11 @@ def _rare_pair_counts(docs: DataFrame, max_doc_freq: int) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    max_doc_freq: int = NGRAM_MAX_DOC_FREQ,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup pairs by exact word-n-gram Jaccard similarity.
 
     Skew-safe single-pass shape. The inverted-index self-join runs only
-    over *rare* shingles (document frequency ≤ ``max_doc_freq`` — the
+    over *rare* shingles (document frequency ≤ NGRAM_MAX_DOC_FREQ — the
     same posting-list cap winnow_overlap_pairs applies), so join volume
     is Σ_rare df² — bounded by cap·|index| — instead of the df² of the
     hottest boilerplate phrase: one shingle shared by millions of docs
@@ -276,17 +282,18 @@ def ngram_jaccard_pairs(
     recall loss is pairs sharing *exclusively* boilerplate — which a
     near-dup score should ignore anyway. A cheap upper bound
     (n_rare + min(|hot_A|,|hot_B|)) pre-filters before the array work.
-    Output (a<b) pairs with jaccard ≥ threshold, rounded to 6 for engine
-    portability.
+    Output (a<b) pairs with jaccard ≥ NEARDUP_JACCARD, rounded to 6 for
+    engine portability.
     """
-    joined = _rare_pair_counts(docs, max_doc_freq)
+    t = NEARDUP_JACCARD
+    joined = _rare_pair_counts(docs)
     # upper bound on the full intersection; J is increasing in n_inter, so
     # ub(1+t) < t(n_a+n_b) proves jaccard < t without touching the arrays
     ub = F.col("n_rare") + F.least(F.size("hot_a"), F.size("hot_b"))
     n_inter = F.col("n_rare") + F.size(F.array_intersect("hot_a", "hot_b"))
     return (
         joined.where(
-            ub * (1.0 + threshold) >= threshold * (F.col("n_a") + F.col("n_b"))
+            ub * (1.0 + t) >= t * (F.col("n_a") + F.col("n_b"))
         )
         .withColumn(
             "jaccard",
@@ -294,13 +301,13 @@ def ngram_jaccard_pairs(
                 n_inter / (F.col("n_a") + F.col("n_b") - n_inter).cast("double")
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= t)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """ALL pairs with exact shingle-set Jaccard ≥ ``threshold`` via
+def prefix_filter_pairs(docs: DataFrame) -> DataFrame:
+    """ALL pairs with exact shingle-set Jaccard ≥ PREFIX_JACCARD via
     **lossless prefix filtering** (the AllPairs / PPJoin candidate rule).
 
     Unlike :func:`ngram_jaccard_pairs` (whose df-cap trades recall on
@@ -360,6 +367,7 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
+    t = PREFIX_JACCARD
     idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
     dfreq = (
         idx.groupBy("shingle")
@@ -382,7 +390,7 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     )
     prefix = enriched.where(
         F.col("_pos")
-        <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")).cast("long") + F.lit(1)
+        <= F.col("_n") - F.ceil(F.lit(t) * F.col("_n")).cast("long") + F.lit(1)
     ).select("doc_id", "_sid", "_n", "_pos")
     a, b = prefix.alias("a"), prefix.alias("b")
     # PPJoin POSITIONAL filter (Xiao/Wang/Lin/Yu, WWW 2008 — lossless,
@@ -413,8 +421,8 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
         .where(
             (F.col("a.doc_id") < F.col("b.doc_id"))
             & (
-                F.lit(1.0 + threshold) * ubound
-                >= F.lit(threshold) * (F.col("a._n") + F.col("b._n"))
+                F.lit(1.0 + t) * ubound
+                >= F.lit(t) * (F.col("a._n") + F.col("b._n"))
                 - F.lit(1e-9)
             )
         )
@@ -446,16 +454,12 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
                 / (F.col("n_a") + F.col("n_b") - n_inter).cast("double")
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= t)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def sorted_neighborhood_pairs(
-    docs: DataFrame,
-    window: int = 3,
-    threshold: float = 0.3,
-) -> DataFrame:
+def sorted_neighborhood_pairs(docs: DataFrame) -> DataFrame:
     """Blocked **sorted-neighborhood** candidate pairs (the classic
     entity-resolution blocking method): sort records within a blocking
     key, slide a fixed window down the sort order, and score only
@@ -465,8 +469,8 @@ def sorted_neighborhood_pairs(
     Block = first token of the normalized text; sort key = the full
     normalized text (doc_id tie-break, so the order — and therefore the
     output — is deterministic). Each doc is paired with its next
-    ``window`` neighbors in sort order and scored with the exact
-    shingle-set Jaccard; pairs below ``threshold`` are dropped. This is
+    SN_WINDOW neighbors in sort order and scored with the exact
+    shingle-set Jaccard; pairs below SN_JACCARD are dropped. This is
     the *multi-pass blocking* variant: windows never span blocks, which
     is exactly what makes it scale — the ranking window partitions by
     block, never one global sort on a single task. Recall is bounded by
@@ -493,7 +497,7 @@ def sorted_neighborhood_pairs(
         F.col("_n").alias("n_a"),
         *[
             c
-            for i in range(1, window + 1)
+            for i in range(1, SN_WINDOW + 1)
             for c in (
                 F.lead("doc_id", i).over(w).alias(f"_id{i}"),
                 F.lead("_arr", i).over(w).alias(f"_ar{i}"),
@@ -514,7 +518,7 @@ def sorted_neighborhood_pairs(
                         F.col(f"_nn{i}").alias("n_b"),
                         F.lit(i).cast("long").alias("gap"),
                     )
-                    for i in range(1, window + 1)
+                    for i in range(1, SN_WINDOW + 1)
                 ]
             )
         ).alias("nb"),
@@ -528,34 +532,30 @@ def sorted_neighborhood_pairs(
                 / (F.col("n_a") + F.col("n_b") - n_inter).cast("double")
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= SN_JACCARD)
         .select("id_a", "id_b", "gap", "jaccard")
     )
 
 
-def containment_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    max_doc_freq: int = NGRAM_MAX_DOC_FREQ,
-) -> DataFrame:
+def containment_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup pairs by n-gram CONTAINMENT — the asymmetric measure
     ``C(A→B) = |A∩B| / |A|`` that catches sub-document duplication
     (a short doc copied inside a long one) which symmetric Jaccard
     dilutes to ~|A|/|B| and misses entirely.
 
     Same skew-safe single-pass shape as ngram_jaccard_pairs: the
-    rare-shingle (df ≤ ``max_doc_freq``) inverted-index self-join
+    rare-shingle (df ≤ NGRAM_MAX_DOC_FREQ) inverted-index self-join
     counts each pair's rare intersection DIRECTLY (groupBy pair — no
     distinct, no second join against the index), and exactness is
     restored by hot-shingle completion (``n_inter = n_rare +
     |hot_A ∩ hot_B|`` over tiny per-doc above-cap arrays). Join volume
     is bounded by cap·|index|, never the df² of a boilerplate phrase.
     Emits one row per unordered pair (id_a < id_b) whose max directed
-    containment ≥ ``threshold``, with both directions. Recall loss:
+    containment ≥ CONTAINMENT_THRESHOLD, with both directions. Recall loss:
     only pairs sharing exclusively hot shingles (which carry no dup
     signal by construction).
     """
-    joined = _rare_pair_counts(docs, max_doc_freq)
+    joined = _rare_pair_counts(docs)
     # upper bound prunes before the array intersect: containment is
     # increasing in n_inter and n_inter <= n_rare + min(|hot_a|,|hot_b|)
     ub = F.col("n_rare") + F.least(F.size("hot_a"), F.size("hot_b"))
@@ -564,7 +564,7 @@ def containment_pairs(
     )
     n_inter = F.col("n_rare") + F.size(F.array_intersect("hot_a", "hot_b"))
     scored = (
-        joined.where(ub_c >= F.lit(threshold))
+        joined.where(ub_c >= F.lit(CONTAINMENT_THRESHOLD))
         .select(
             "id_a",
             "id_b",
@@ -574,7 +574,7 @@ def containment_pairs(
         )
     )
     return scored.where(
-        F.greatest(F.col("c_a_in_b"), F.col("c_b_in_a")) >= F.lit(threshold)
+        F.greatest(F.col("c_a_in_b"), F.col("c_b_in_a")) >= F.lit(CONTAINMENT_THRESHOLD)
     )
 
 
@@ -626,7 +626,7 @@ def lsh_buckets(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "bb.band", "bb.bh")
 
 
-def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """MinHash → banded LSH candidates → exact-Jaccard verification.
 
     The full scale path: signatures are fixed-width (NUM_PERM ints/doc
@@ -660,7 +660,7 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     # instead of re-running the full inverted-index self-join — that would
     # cost the same as an uncapped ngram_jaccard_pairs and defeat LSH's
     # purpose.
-    return jaccard_verify(candidates, idx, threshold)
+    return jaccard_verify(candidates, idx)
 
 
 #: SimHash banding parameters: 32-bit keys split into 4 bands of 8 bits.
@@ -738,13 +738,13 @@ def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-#: Winnowing parameters. k=7 char grams, window w=4 ⇒ any shared substring
+#: Winnowing parameters. k=7 char grams, window w=4 (WINNOW_W, defined
+#: with functions.text.winnowed_fps) ⇒ any shared substring
 #: of ≥ 10 chars is guaranteed a shared fingerprint; expected fingerprint
 #: density 2/(w+1) = 40% of grams. MAX_DOC_FREQ drops "stop fingerprints"
 #: (grams shared by half the corpus carry no dedup signal and are exactly
 #: the skewed keys that would blow up the pair join at scale).
 WINNOW_K = 7
-WINNOW_W = 4
 WINNOW_MAX_DOC_FREQ = 20
 WINNOW_MIN_SHARED = 3
 
@@ -772,7 +772,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     return norm.select(
         "doc_id",
         gram_count.alias("n_grams"),
-        winnowed_fps(F.col("_a"), WINNOW_K, WINNOW_W).alias("fps"),
+        winnowed_fps(F.col("_a"), WINNOW_K).alias("fps"),
     )
 
 
@@ -856,7 +856,7 @@ def winnow_overlap_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def repeated_spans(docs: DataFrame, gram_len: int = 40) -> DataFrame:
+def repeated_spans(docs: DataFrame, gram_len: int) -> DataFrame:
     """EXACT repeated-substring spans — the ExactSubstr dedup semantic of
     Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
     Better"): every maximal character span covered by some ``gram_len``-

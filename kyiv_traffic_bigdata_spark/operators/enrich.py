@@ -31,28 +31,29 @@ def broadcast_enrich(
 SALT_BUCKETS = 8
 
 
-def salted_join(fact: DataFrame, dim: DataFrame, key: str, salt_col: Column) -> DataFrame:
-    """Skew-resilient inner equi-join: salt the fact side, replicate the
-    build side.
+def salted_join(fact: DataFrame, dim: DataFrame) -> DataFrame:
+    """Skew-resilient inner equi-join of lineitem facts to a supplier
+    dimension on ``l_suppkey``: salt the fact side, replicate the build
+    side.
 
     The 100 TB answer to a hot key (SURVEY §7.4: one degenerate route id
     carries a large share of all positions): a plain shuffle join puts the
     whole hot key in ONE reducer partition. Salting splits it across
     SALT_BUCKETS partitions — the fact side gets a deterministic salt from
-    ``salt_col`` (any well-distributed existing column; no rand(), so the
+    ``l_orderkey`` (a well-distributed existing column; no rand(), so the
     plan stays deterministic and retry-safe), the dim side is exploded
     SALT_BUCKETS× (dim rows are the small side; replication is cheap), and
-    the join key becomes (key, salt). Result set is byte-identical to the
+    the join key becomes (l_suppkey, salt). Result set is byte-identical to the
     unsalted join; only the physical distribution changes. This is the
     manual form of what AQE skew-join does adaptively — kept explicit so
     pipelines can pin it where the skew is known ahead of time.
     """
-    f = fact.withColumn("_salt", F.pmod(F.xxhash64(salt_col), F.lit(SALT_BUCKETS)))
+    f = fact.withColumn("_salt", F.pmod(F.xxhash64(F.col("l_orderkey")), F.lit(SALT_BUCKETS)))
     d = dim.withColumn(
         "_salt",
         F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)).cast("array<bigint>")),
     )
-    return f.join(d, on=[key, "_salt"]).drop("_salt")
+    return f.join(d, on=["l_suppkey", "_salt"]).drop("_salt")
 
 
 def route_label(type_col: Column, number_col: Column, id_col: Column) -> Column:

@@ -119,7 +119,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     return labels
 
 
-def bfs_depths(edges: DataFrame, seed_mod: int = 4, max_depth: int = 4) -> DataFrame:
+def bfs_depths(edges: DataFrame, seed_mod: int, max_depth: int) -> DataFrame:
     """(node, depth) multi-source BFS over the undirected pair graph:
     depth = unweighted hop distance to the NEAREST seed, seeds being
     the graph nodes with ``node % seed_mod == 0``; nodes farther than
@@ -222,8 +222,13 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     return labels
 
 
-def pagerank(edges: DataFrame, n_iter: int = 3) -> DataFrame:
-    """(node, deg, rank) after ``n_iter`` sweeps with damping DAMPING
+#: PageRank sweeps (fixed so the SQL twin can unroll the same number of
+#: CTE layers).
+PAGERANK_ITERS = 3
+
+
+def pagerank(edges: DataFrame) -> DataFrame:
+    """(node, deg, rank) after PAGERANK_ITERS sweeps with damping DAMPING
     over the symmetrized edge list. Nodes are the endpoints of ``edges``; every node of a
     symmetric graph has out-degree ≥ 1, so there is no dangling-mass
     term. Rank states are 6-decimal-quantized and contributions are
@@ -240,7 +245,7 @@ def pagerank(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         return deg.select("node", "deg", F.lit(0.0).alias("rank"))
     r = deg.select("node", "deg", round6(F.lit(1.0) / F.lit(n)).alias("rank"))
     teleport = F.lit(1.0 - DAMPING) / F.lit(n)
-    for _ in range(n_iter):
+    for _ in range(PAGERANK_ITERS):
         contrib = sym.join(r, sym.a == r.node).select(
             F.col("b").alias("node"),
             round6(F.col("rank") / F.col("deg")).alias("_c"),

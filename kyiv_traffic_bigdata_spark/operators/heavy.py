@@ -45,12 +45,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def mg_candidates(values: DataFrame, col: str, k: int) -> DataFrame:
+def mg_candidates(values: DataFrame, k: int) -> DataFrame:
     """Distinct candidate heavy hitters: the union of per-partition
-    Misra-Gries summaries of capacity ``k`` over ``values[col]``.
+    Misra-Gries summaries of capacity ``k`` over ``values.token``.
 
     Guaranteed superset of every value with global frequency
-    > N/(k+1). Output: one column ``col``, ≤ k rows per input
+    > N/(k+1). Output: one column ``token``, ≤ k rows per input
     partition before the final distinct.
 
     NULLs are excluded up front (here AND in the N of
@@ -65,6 +65,7 @@ def mg_candidates(values: DataFrame, col: str, k: int) -> DataFrame:
     keys at their native type — a stringified candidate column would
     make Spark cast the join keys, risking precision loss for large
     longs and a silent type change for any non-string caller."""
+    col = "token"
     values = values.where(F.col(col).isNotNull())
     col_type = values.schema[col].dataType.simpleString()
 
@@ -83,16 +84,17 @@ def mg_candidates(values: DataFrame, col: str, k: int) -> DataFrame:
     return values.mapInPandas(summarize, f"`{col}` {col_type}").distinct()
 
 
-def heavy_hitters_exact(values: DataFrame, col: str, k: int) -> DataFrame:
+def heavy_hitters_exact(values: DataFrame, k: int) -> DataFrame:
     """Exact heavy hitters (frequency·(k+1) > N) without a full-domain
     shuffle: MG candidates → bounded-broadcast semi-join → exact counts
     of candidates only → integer-exact threshold filter.
 
-    Output: ``col`` plus ``n_occurrences`` (exact long count), only for
-    values strictly above the N/(k+1) frequency threshold. N counts
+    Output: ``token`` plus ``n_occurrences`` (exact long count), only
+    for values strictly above the N/(k+1) frequency threshold. N counts
     non-null values only (matching the candidate phase)."""
+    col = "token"
     values = values.where(F.col(col).isNotNull())
-    cands = mg_candidates(values, col, k)
+    cands = mg_candidates(values, k)
     total = values.agg(F.count(F.lit(1)).alias("_n"))
     return (
         values.join(F.broadcast(cands), col, "left_semi")

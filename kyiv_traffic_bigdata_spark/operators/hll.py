@@ -51,32 +51,29 @@ def hll_register_cols(h: Column) -> tuple[Column, Column]:
     return (h % HLL_M).alias("_reg"), rho.alias("_rho")
 
 
-def hll_registers(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: Column,
-) -> DataFrame:
-    """The sketch state: (group…, _reg, _rho) with MAX-merged rho.
+def hll_registers(df: DataFrame) -> DataFrame:
+    """The sketch state of the distinct string ``_u`` values per
+    ``event_type``: (event_type, _reg, _rho) with MAX-merged rho.
 
     One hash-aggregate with map-side combine; output is bounded by
     |groups| · m rows regardless of input size."""
-    reg, rho = hll_register_cols(portable_hash(value_col))
+    reg, rho = hll_register_cols(portable_hash(F.col("_u")))
     return (
-        df.select(*group_cols, reg, rho)
-        .groupBy(*group_cols, "_reg")
+        df.select("event_type", reg, rho)
+        .groupBy("event_type", "_reg")
         .agg(F.max("_rho").alias("_rho"))
     )
 
 
-def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Fold register rows into the HLL estimate per group.
+def hll_estimate(registers: DataFrame) -> DataFrame:
+    """Fold register rows into the HLL estimate per event_type.
 
     Carries the harmonic sum as the integer Σ 2^(27-ρ) (absent
     registers contribute 2^27 each); applies the paper's small-range
     linear-counting correction when E ≤ 2.5 m and empty registers
-    remain. Output: group…, zero_registers, register_sum, est."""
+    remain. Output: event_type, zero_registers, register_sum, est."""
     two27 = 1 << (HLL_W_BITS + 1)
-    agg = registers.groupBy(*group_cols).agg(
+    agg = registers.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("_filled"),
         F.sum(
             F.pow(F.lit(2.0), F.lit(HLL_W_BITS + 1) - F.col("_rho")).cast(
@@ -92,7 +89,7 @@ def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
         (raw <= F.lit(2.5 * HLL_M)) & (zero > 0), linear
     ).otherwise(raw)
     return agg.select(
-        *group_cols,
+        "event_type",
         zero,
         s_num.cast("long").alias("register_sum"),
         round6(est).alias("est_distinct"),

@@ -6,13 +6,12 @@ scan — quadratic, a non-starter at 100 TB). The standard fix is **bin
 blocking**, the temporal analogue of operators/proximity.py's grid
 cells:
 
-1. pick a bin width ≥ the longest interval (computed with one tiny
-   aggregate when not supplied);
+1. the caller passes a bin width, ideally ≥ the longest interval;
 2. each interval explodes to the bins it covers (≤ 2 copies when the
-   width covers its length; a narrower caller-supplied width gives
-   longer intervals proportionally more — the explode handles any
-   span); each point maps to exactly ONE bin;
-3. equi-join on (keys…, bin) — hash-partitioned, AQE-skew-safe — then
+   width covers its length; a narrower width gives longer intervals
+   proportionally more — the explode handles any span); each point
+   maps to exactly ONE bin;
+3. equi-join on (user, bin) — hash-partitioned, AQE-skew-safe — then
    apply the exact BETWEEN predicate.
 
 A matching pair meets in precisely the point's bin (which the interval
@@ -34,45 +33,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def choose_bin_width(intervals: DataFrame, start_col: str, end_col: str) -> int:
-    """The longest interval: one tiny aggregate + a one-scalar collect
-    (documented driver round-trip; pass an explicit ``bin_width`` to
-    skip the probe job)."""
-    longest = intervals.agg(F.max(F.col(end_col) - F.col(start_col))).collect()[0][0]
-    return max(int(longest or 1), 1)
-
-
 def interval_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    key_cols: list[str],
-    point_ts: str,
-    start_col: str,
-    end_col: str,
-    bin_width: int | None = None,
+    points: DataFrame, intervals: DataFrame, bin_width: int
 ) -> DataFrame:
-    """Rows of ``points`` × ``intervals`` (same keys) with
-    ``start ≤ ts ≤ end``. Timestamps are integers (any unit, used
-    consistently); output carries all columns of both sides minus the
-    internal bin."""
-    if bin_width is None:
-        bin_width = choose_bin_width(intervals, start_col, end_col)
+    """Rows of ``points`` (``user_id``, ``ts_us``) × ``intervals``
+    (``user_id``, ``err_start``, ``err_end``) of the same user with
+    ``err_start ≤ ts_us ≤ err_end``. Timestamps are integers; output
+    carries all columns of both sides minus the internal bin."""
     bw = int(bin_width)
     iv = intervals.withColumn(
         "_bin",
-        F.explode(
-            F.sequence(
-                F.expr(f"`{start_col}` div {bw}"),
-                F.expr(f"`{end_col}` div {bw}"),
-            )
-        ),
+        F.explode(F.sequence(F.expr(f"err_start div {bw}"), F.expr(f"err_end div {bw}"))),
     )
-    pt = points.withColumn("_bin", F.expr(f"`{point_ts}` div {bw}"))
+    pt = points.withColumn("_bin", F.expr(f"ts_us div {bw}"))
     return (
-        pt.join(iv, [*key_cols, "_bin"])
-        .where(
-            (F.col(point_ts) >= F.col(start_col))
-            & (F.col(point_ts) <= F.col(end_col))
-        )
+        pt.join(iv, ["user_id", "_bin"])
+        .where((F.col("ts_us") >= F.col("err_start")) & (F.col("ts_us") <= F.col("err_end")))
         .drop("_bin")
     )

@@ -36,36 +36,35 @@ def latest_per_key(
     )
 
 
-def dedup_exact(df: DataFrame, key_cols: list[str], tiebreak: str) -> DataFrame:
-    """Batch twin of the streaming ST3 dedup: one row per key, min tiebreak.
+def dedup_exact(df: DataFrame) -> DataFrame:
+    """Batch twin of the streaming ST3 dedup: one event per
+    (user_id, ts_us), the one with the smallest event_id.
 
     Unlike ``dropDuplicates`` (arbitrary survivor), the survivor is
-    deterministic: the row with the smallest ``tiebreak`` — required for
-    oracle comparison and for reproducible 100 TB backfills.
+    deterministic — required for oracle comparison and for reproducible
+    100 TB backfills.
     """
-    payload = [c for c in df.columns if c not in key_cols]
-    agg = df.groupBy(*key_cols).agg(
-        F.min_by(F.struct(*payload), F.col(tiebreak)).alias("_first")
+    keys = ["user_id", "ts_us"]
+    payload = [c for c in df.columns if c not in keys]
+    agg = df.groupBy(*keys).agg(
+        F.min_by(F.struct(*payload), F.col("event_id")).alias("_first")
     )
-    return agg.select(*key_cols, *[F.col(f"_first.{c}").alias(c) for c in payload])
+    return agg.select(*keys, *[F.col(f"_first.{c}").alias(c) for c in payload])
 
 
-def apply_changelog(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    op_col: str,
-    payload_cols: list[str],
-) -> DataFrame:
-    """CDC changelog application: materialize current table state from an
-    insert/update/delete stream — latest record per key wins, a delete
-    tombstone (op ``"D"``) as the latest record removes the key entirely (the Debezium
-    / Kafka-compacted-topic semantic).
+def apply_changelog(df: DataFrame) -> DataFrame:
+    """CDC changelog application: materialize current table state from a
+    per-user insert/update/delete stream of (user_id, event_id, ts_us,
+    op, value) — the latest record per user by (ts_us, event_id) wins, a
+    delete tombstone (op ``"D"``) as the latest record removes the user
+    entirely (the Debezium / Kafka-compacted-topic semantic).
 
     Same single-aggregate shape as :func:`latest_per_key` (``max_by`` over
     a total order, map-side partials, no window): the op column rides the
     payload struct and the tombstone filter runs on the one-row-per-key
     result — at 100 TB the changelog shuffles once, keyed, and nothing
     else."""
-    latest = latest_per_key(df, key_cols, order_cols, [op_col, *payload_cols])
-    return latest.where(F.col(op_col) != "D").drop(op_col)
+    latest = latest_per_key(
+        df, ["user_id"], ["ts_us", "event_id"], ["op", "event_id", "ts_us", "value"]
+    )
+    return latest.where(F.col("op") != "D").drop("op")

@@ -36,6 +36,12 @@ from pyspark.sql import functions as F
 from ..functions.rounding import round6
 
 
+#: Gradient-descent passes and learning rate — fixed so the oracle can
+#: unroll the same number of GD layers.
+LOGREG_ITERS = 10
+LOGREG_LR = 8.0
+
+
 def _r6(x: float) -> float:
     return math.floor(x * 1e6 + 0.5) / 1e6
 
@@ -56,14 +62,10 @@ def predict_proba(feature_cols: list[str], weights: list[float]):
 
 
 def logistic_regression_gd(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    n_iter: int = 3,
-    lr: float = 1.0,
+    df: DataFrame, feature_cols: list[str]
 ) -> tuple[list[float], int]:
-    """Train full-batch GD for ``n_iter`` passes from zero weights.
-    Returns ``(weights, n_rows)``. ``label_col`` must be 0.0/1.0."""
+    """Train full-batch GD for LOGREG_ITERS passes from zero weights on
+    the 0.0/1.0 label column ``y``. Returns ``(weights, n_rows)``."""
     n = df.count()
     if n == 0:
         raise ValueError("cannot train on an empty frame")
@@ -81,9 +83,9 @@ def logistic_regression_gd(
     parts = max(1, min(df.rdd.getNumPartitions(), -(-n // 262144)))
     train = df.coalesce(parts)
     w = [0.0] * len(feature_cols)
-    for _ in range(n_iter):
+    for _ in range(LOGREG_ITERS):
         p = predict_proba(feature_cols, w)
-        err = p - F.col(label_col)
+        err = p - F.col("y")
         aggs = [
             F.sum(round6(err * F.col(c)).cast("decimal(18,6)"))
             .cast("double")
@@ -92,7 +94,7 @@ def logistic_regression_gd(
         ]
         row = train.agg(*aggs).collect()[0]
         w = [
-            _r6(w[j] - lr * _r6(row[f"g{j}"] / n))
+            _r6(w[j] - LOGREG_LR * _r6(row[f"g{j}"] / n))
             for j in range(len(feature_cols))
         ]
     return w, n

@@ -7,27 +7,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: list[str],
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Dataset-version diff — the audit a curation pipeline runs between
-    two crawls/snapshots of the same table: which keys were ``added``,
-    ``removed``, or ``changed`` (content fingerprint differs on
-    ``compare_cols``, default: all non-key columns common to both
-    sides). Unchanged rows are dropped — at 100 TB the unchanged mass
-    dominates and nobody audits it row by row.
+    two crawls/snapshots of the documents table: which ``doc_id`` keys
+    were ``added``, ``removed``, or ``changed`` (content fingerprint of
+    ``text``, ``lang`` and ``source`` differs). Unchanged rows are
+    dropped — at 100 TB the unchanged mass dominates and nobody audits
+    it row by row.
 
     Shape: one md5 fingerprint per side (map-only) and ONE full-outer
     equi-join on the key columns — co-partitioned shuffle both sides,
     no window, no driver state; AQE handles key skew. Output is one row
-    per differing key: key cols + change_type + old_fp/new_fp.
+    per differing key: doc_id + change_type + old_fp/new_fp.
     """
-    if compare_cols is None:
-        keys = set(key_cols)
-        compare_cols = [c for c in old.columns if c not in keys and c in new.columns]
+    key_cols, compare_cols = ["doc_id"], ["text", "lang", "source"]
 
     def fp(df: DataFrame, alias: str) -> DataFrame:
         # concat_ws with a field separator + explicit null token keeps

@@ -28,16 +28,17 @@ MEDIA_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Wrap a column as the canonical multimodal layout:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
+    """Wrap documents as the canonical multimodal layout:
     (media_id, payload binary, meta struct<media_type, n_bytes>).
 
     The driver testdata has no real media, so documents' text bytes stand
-    in as payload; with real data this is the parquet/source column as-is.
+    in as payload (``doc_id`` as media_id); with real data this is the
+    parquet/source column as-is.
     """
-    payload = F.col(text_col).cast("binary")
+    payload = F.col("text").cast("binary")
     return df.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("text/plain").alias("media_type"),

@@ -11,11 +11,10 @@ literal codebook arrays — no UDF, no Arrow round trip, map-only encode.
 
 Pieces:
 
-* :func:`fit_pq` — per-subspace codebooks. ``n_iters=0`` uses the
-  deterministic seed (the k lowest-id vectors' subvectors — the same
-  oracle-expressible contract as operators.kmeans.initial_centroids);
-  ``n_iters>0`` refines each subspace with Lloyd's (driver work is
-  m × k × subdim floats of metadata — bounded at any corpus size).
+* :func:`fit_pq` — per-subspace seed codebooks: the k lowest-id
+  vectors' subvectors (the same oracle-expressible contract as
+  operators.kmeans.initial_centroids; one k-row collect of metadata,
+  bounded at any corpus size).
 * :func:`encode_pq` — map-only argmin per subspace → ``array<int>``.
 * :func:`adc_topk` — asymmetric distance computation: each query
   precomputes its m×k distance table ONCE (against the literal
@@ -30,10 +29,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import as_double, sq_dist
-from .kmeans import initial_centroids, lloyd_iterations
-from .similarity import EMB_DIM
+from ..functions.vector import EMB_DIM, as_double, sq_dist
+from .kmeans import initial_centroids
+from .similarity import TOPK
 from .topk import top_k_per_group
+
+#: PQ geometry: m subspaces × k codewords over the 64-dim embeddings.
+#: m=4/k=16 keeps the DuckDB twins tractable; at production scale you'd
+#: run m=8..16, k=256.
+PQ_M = 4
+PQ_K = 16
 
 
 def _literal_cube(books: list[list[list[float]]]) -> Column:
@@ -50,42 +55,19 @@ def _literal_cube(books: list[list[list[float]]]) -> Column:
     return F.expr(f"array({body})")
 
 
-def fit_pq(
-    df: DataFrame, m: int = 4, k: int = 16, n_iters: int = 0
-) -> list[list[list[float]]]:
-    """Train m per-subspace codebooks of k codewords each.
-
-    ``n_iters=0``: deterministic seed codebooks (k lowest-id vectors'
-    subvectors) — reproducible in SQL, used by the oracle-checked query.
-    ``n_iters>0``: per-subspace Lloyd refinement (m × n_iters bounded
-    aggregate jobs; codebooks are metadata, never a data-sized collect).
-    """
-    if EMB_DIM % m:
-        raise ValueError(f"dim {EMB_DIM} not divisible by m {m}")
-    subdim = EMB_DIM // m
-    if n_iters <= 0:
-        # seed books are SUBVECTORS of the k lowest-id vectors, so one
-        # k-row collect of the full vectors yields every book — m
-        # separate collect jobs would fetch the same rows m times.
-        # allow_fewer: the oracle's LIMIT-k semantics — a corpus with
-        # n < k seeds n codewords; an empty corpus yields m empty books
-        # (callers emit a typed empty frame, see q_emb_pq).
-        seeds = initial_centroids(df, k, allow_fewer=True)
-        return [
-            [v[s * subdim : (s + 1) * subdim] for v in seeds]
-            for s in range(m)
-        ]
-    books: list[list[list[float]]] = []
-    for s in range(m):
-        sub = df.select(
-            "vec_id",
-            F.slice(as_double(F.col("embedding")), s * subdim + 1, subdim).alias(
-                "_sub"
-            ),
-        )
-        _, cents, _ = lloyd_iterations(sub, k, n_iters, "_sub")
-        books.append(cents)
-    return books
+def fit_pq(df: DataFrame) -> list[list[list[float]]]:
+    """Seed codebooks: PQ_M per-subspace books of the PQ_K lowest-id
+    vectors' subvectors — reproducible in SQL, so the oracle-checked
+    queries rebuild them. One k-row collect of the full vectors yields
+    every book (m separate collects would fetch the same rows m times).
+    A corpus with n < PQ_K vectors seeds n codewords, an empty one m
+    empty books (the oracle's LIMIT-k semantics; callers emit a typed
+    empty frame, see q_emb_pq)."""
+    subdim = EMB_DIM // PQ_M
+    seeds = initial_centroids(df, PQ_K)
+    return [
+        [v[s * subdim : (s + 1) * subdim] for v in seeds] for s in range(PQ_M)
+    ]
 
 
 def encode_pq(df: DataFrame, books: list[list[list[float]]]) -> DataFrame:
@@ -126,9 +108,8 @@ def adc_topk(
     queries: DataFrame,
     codes_df: DataFrame,
     books: list[list[list[float]]],
-    k: int = 10,
 ) -> DataFrame:
-    """Approximate top-k nearest neighbors by PQ asymmetric distance.
+    """Approximate TOPK nearest neighbors by PQ asymmetric distance.
 
     Each query row precomputes its m×k table of subvector→codeword
     squared distances against the literal codebooks (one expression,
@@ -166,7 +147,7 @@ def adc_topk(
         scored,
         ["query_id"],
         [F.col("_adist").asc(), F.col("neighbor_id").asc()],
-        k,
+        TOPK,
     )
     return ranked.select(
         "query_id",

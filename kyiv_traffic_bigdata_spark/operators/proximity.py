@@ -1,6 +1,6 @@
 """Geo-proximity range join — SURVEY §7.3's "range join + haversine
 predicate" extension (geo enrichment: all right-side points within
-``radius_km`` of each left-side point).
+PROXIMITY_RADIUS_KM of each left-side point).
 
 The naive formulation is a cross join with a distance predicate —
 O(|L| x |R|) haversine evaluations and, worse, a Cartesian physical plan.
@@ -16,11 +16,12 @@ co-located, broadcast-able when one side is small, skew-handled by AQE —
 and the 9x left-side expansion is far cheaper than an O(n·m) cross
 product at any realistic density.
 
-Cell width is a caller decision because it encodes the worst-case
-latitude: 1 km is ~0.009° of latitude everywhere but ~0.0142° of
-longitude at Kyiv's 50.7°N (degrees-per-km grows with |lat|). Callers
-must pick ``cell_deg >= radius_km / (111.19 * cos(max_abs_lat))``.
-No antimeridian handling — fine for the reference's Kyiv/Ukraine bboxes.
+The cell width encodes the worst-case latitude: 1 km is ~0.009° of
+latitude everywhere but ~0.0142° of longitude at Kyiv's 50.7°N
+(degrees-per-km grows with |lat|), so PROXIMITY_CELL_DEG must stay
+``>= PROXIMITY_RADIUS_KM / (111.19 * cos(max_abs_lat))`` (pinned in
+tests/test_proximity.py). No antimeridian handling — fine for the
+reference's Kyiv/Ukraine bboxes.
 """
 
 from __future__ import annotations
@@ -30,25 +31,21 @@ from pyspark.sql import functions as F
 
 from ..functions.geo import haversine_km
 
+#: Join radius and grid cell width.
+PROXIMITY_RADIUS_KM = 1.0
+PROXIMITY_CELL_DEG = 0.02
 
-def proximity_join(
-    left: DataFrame,
-    right: DataFrame,
-    radius_km: float,
-    cell_deg: float,
-    left_prefix: str = "l_",
-    right_prefix: str = "r_",
-) -> DataFrame:
-    """All (left, right) pairs with haversine distance <= ``radius_km``
-    between their ``lat``/``lon`` columns.
 
-    Returns every left column prefixed ``left_prefix``, every right column
-    prefixed ``right_prefix``, plus exact ``dist_km``. Self-pairs are the
-    caller's concern (filter on ids afterwards).
+def proximity_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """All (left, right) pairs with haversine distance <=
+    PROXIMITY_RADIUS_KM between their ``lat``/``lon`` columns.
+
+    Returns every left column prefixed ``p_`` (probe), every right
+    column prefixed ``e_`` (event), plus exact ``dist_km``. Self-pairs
+    are the caller's concern (filter on ids afterwards).
     """
-    if cell_deg < radius_km / 111.0:
-        raise ValueError("cell_deg narrower than radius at the equator")
-
+    left_prefix, right_prefix = "p_", "e_"
+    cell_deg, radius_km = PROXIMITY_CELL_DEG, PROXIMITY_RADIUS_KM
     l_cells = left.select(
         *[F.col(c).alias(f"{left_prefix}{c}") for c in left.columns],
         F.explode(

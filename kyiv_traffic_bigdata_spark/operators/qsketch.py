@@ -134,17 +134,16 @@ def dyadic_cells(value: Column, width: int) -> Column:
     return F.array(*entries)
 
 
-def build_rank_sketch(
-    df: DataFrame, group_col: str, value_col: str, width: int = QSKETCH_WIDTH
-) -> DataFrame:
-    """Counter table ``(g, lvl, j, b, c)`` of the per-group dyadic-CMS
-    sketch over a non-negative LONG value column. One constant-factor
-    explode + one hash aggregate (map-side combined); output bounded by
+def build_rank_sketch(df: DataFrame, width: int = QSKETCH_WIDTH) -> DataFrame:
+    """Counter table ``(g, lvl, j, b, c)`` of the per-priority dyadic-CMS
+    sketch over order prices: ``g`` is ``o_orderpriority``, the value the
+    non-negative LONG ``_cents``. One constant-factor explode + one hash
+    aggregate (map-side combined); output bounded by
     ``groups × levels × depth × width`` rows."""
     return (
         df.select(
-            F.col(group_col).alias("g"),
-            F.explode(dyadic_cells(F.col(value_col), width)).alias("s"),
+            F.col("o_orderpriority").alias("g"),
+            F.explode(dyadic_cells(F.col("_cents"), width)).alias("s"),
         )
         .select("g", "s.lvl", "s.j", "s.b")
         .groupBy("g", "lvl", "j", "b")
@@ -184,15 +183,13 @@ def descend_quantile(cells: dict, g, target: int, width: int = QSKETCH_WIDTH) ->
     return p
 
 
-def sketch_quantiles(
-    spark: SparkSession,
-    cell_rows,
-    totals: dict,
-    quantiles: list[tuple[str, int, int]],
-    group_alias: str,
-    count_alias: str,
-) -> DataFrame:
-    """Per-group quantile estimates from collected sketch cells.
+#: (name, num, den) of the quantiles :func:`sketch_quantiles` reports.
+QSKETCH_QUANTILES = [("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)]
+
+
+def sketch_quantiles(spark: SparkSession, cell_rows, totals: dict) -> DataFrame:
+    """Per-priority QSKETCH_QUANTILES estimates (plus ``n_orders``) from
+    collected sketch cells.
 
     ``cell_rows`` is the COLLECTED bounded counter table (rows with
     g/lvl/j/b/c); ``totals`` maps group → exact n. Target ranks use the
@@ -207,11 +204,11 @@ def sketch_quantiles(
     for g in sorted(totals):
         n = totals[g]
         row = [g, n]
-        for _name, num, den in quantiles:
+        for _name, num, den in QSKETCH_QUANTILES:
             target = (num * n + den - 1) // den
             row.append(descend_quantile(cells, g, target) / 100.0)
         out.append(tuple(row))
-    schema = f"{group_alias} string, {count_alias} long, " + ", ".join(
-        f"{name} double" for name, _, _ in quantiles
+    schema = "o_orderpriority string, n_orders long, " + ", ".join(
+        f"{name} double" for name, _, _ in QSKETCH_QUANTILES
     )
     return spark.createDataFrame(out, schema)

@@ -42,42 +42,39 @@ from pyspark.sql import functions as F
 from ..functions.rounding import round6
 
 
-def percent_rank_gate(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    tiebreak_col: str,
-    min_rank: float,
-    rank_alias: str = "q_rank",
-) -> DataFrame:
-    """Keep rows whose rounded percent_rank within ``group_col`` (ordered
-    by ``value_col`` asc, ``tiebreak_col`` asc) is ≥ ``min_rank``, emitting
-    the exact rank — with no per-group global sort.
+#: Rank cutoff of :func:`percent_rank_gate` (the top quarter per language).
+GATE_MIN_RANK = 0.75
 
-    Requires ``value_col`` to have a bounded number of distinct values per
-    group (e.g. a score rounded to 6 places); phase-2 cost is
-    proportional to that bound, not to the row count.
+
+def percent_rank_gate(df: DataFrame) -> DataFrame:
+    """Keep documents whose rounded percent_rank within their ``lang``
+    (ordered by ``quality`` asc, ``doc_id`` asc) is ≥ GATE_MIN_RANK,
+    emitting the exact rank as ``q_rank`` — with no per-group global sort.
+
+    Requires ``quality`` to have a bounded number of distinct values per
+    group (a score rounded to 6 places); phase-2 cost is proportional to
+    that bound, not to the row count.
 
     Single-row groups get rank 0.0 (Spark/DuckDB ``percent_rank``
     convention) and therefore fail any positive gate.
 
-    NULL handling: rows with a NULL ``value_col`` (or group) are kept —
+    NULL handling: rows with a NULL ``quality`` (or ``lang``) are kept —
     the slab join is null-safe — and rank FIRST within their group
     (Spark's ``ASC NULLS FIRST`` window default; an oracle twin with
     NULLs present must spell ``ORDER BY v ASC NULLS FIRST``). A NULL
     therefore fails any positive gate unless the whole group is NULL.
     """
-    g, v = F.col(group_col), F.col(value_col)
+    v = F.col("quality")
 
     # Phase 1: bounded hash aggregate (map-side partials; fully parallel).
-    slabs = df.groupBy(group_col, value_col).agg(F.count(F.lit(1)).alias("_cnt"))
+    slabs = df.groupBy("lang", "quality").agg(F.count(F.lit(1)).alias("_cnt"))
 
     # Phase 2: offsets over the aggregated table. The window partitions by
     # group ONLY here, but its input is the slab table — bounded by the
     # value codomain, so one task per group is ≤ ~1e6 rows at any corpus
     # size. Drop slabs whose BEST row (the last in tiebreak order) still
     # ranks below the gate.
-    wg = Window.partitionBy(group_col)
+    wg = Window.partitionBy("lang")
     wcum = wg.orderBy(v.asc()).rowsBetween(Window.unboundedPreceding, -1)
     slabs = (
         slabs.withColumn("_n", F.sum("_cnt").over(wg))
@@ -86,34 +83,28 @@ def percent_rank_gate(
     best = _rounded_rank(
         F.col("_cum_before") + F.col("_cnt") - 1, F.col("_n")
     )
-    slabs = slabs.where(best >= F.lit(min_rank))
+    slabs = slabs.where(best >= F.lit(GATE_MIN_RANK))
 
     # Phase 3: slabs are bounded metadata — broadcast them back onto the
     # fact rows (an inner join doubles as the bulk filter), then rank
     # within the composite (group, value) key only.
-    survivors = _slab_join(df, slabs, group_col, value_col)
-    wrow = Window.partitionBy(group_col, value_col).orderBy(
-        F.col(tiebreak_col).asc()
-    )
+    survivors = _slab_join(df, slabs, "lang", "quality")
+    wrow = Window.partitionBy("lang", "quality").orderBy(F.col("doc_id").asc())
     rank = _rounded_rank(
         F.col("_cum_before") + F.row_number().over(wrow) - 1,
         F.col("_n"),
     )
     return (
-        survivors.withColumn(rank_alias, rank)
-        .where(F.col(rank_alias) >= F.lit(min_rank))
+        survivors.withColumn("q_rank", rank)
+        .where(F.col("q_rank") >= F.lit(GATE_MIN_RANK))
         .drop("_cnt", "_n", "_cum_before")
     )
 
 
-def percent_rank_all(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    tiebreak_col: str,
-    rank_alias: str = "q_rank",
-) -> DataFrame:
-    """Exact rounded percent_rank for EVERY row — the same three-phase
+def percent_rank_all(df: DataFrame) -> DataFrame:
+    """Exact rounded percent_rank ``d_rank`` of EVERY embedding within its
+    ``cluster_id`` (ordered by ``sq_dist`` asc, ``vec_id`` asc) — the same
+    three-phase
     slab shape as :func:`percent_rank_gate` (bounded slab aggregate →
     offsets over slabs → broadcast join + composite-key row_number), but
     ungated: callers that need the rank as a feature (e.g. the
@@ -122,28 +113,26 @@ def percent_rank_all(
     slab table — still bounded by the value codomain, never row count.
 
     NULL handling (keep-the-full-frame contract): rows with a NULL
-    ``value_col`` (or group) are NOT dropped — the slab join is
+    ``sq_dist`` (or cluster) are NOT dropped — the slab join is
     null-safe — and rank FIRST within their group, matching Spark's
     ``ASC NULLS FIRST`` window default (oracle twins with NULLs must
     spell ``ORDER BY v ASC NULLS FIRST``)."""
-    v = F.col(value_col)
+    v = F.col("sq_dist")
 
-    slabs = df.groupBy(group_col, value_col).agg(F.count(F.lit(1)).alias("_cnt"))
-    wg = Window.partitionBy(group_col)
+    slabs = df.groupBy("cluster_id", "sq_dist").agg(F.count(F.lit(1)).alias("_cnt"))
+    wg = Window.partitionBy("cluster_id")
     wcum = wg.orderBy(v.asc()).rowsBetween(Window.unboundedPreceding, -1)
     slabs = (
         slabs.withColumn("_n", F.sum("_cnt").over(wg))
         .withColumn("_cum_before", F.coalesce(F.sum("_cnt").over(wcum), F.lit(0)))
     )
-    joined = _slab_join(df, slabs, group_col, value_col)
-    wrow = Window.partitionBy(group_col, value_col).orderBy(
-        F.col(tiebreak_col).asc()
-    )
+    joined = _slab_join(df, slabs, "cluster_id", "sq_dist")
+    wrow = Window.partitionBy("cluster_id", "sq_dist").orderBy(F.col("vec_id").asc())
     rank = _rounded_rank(
         F.col("_cum_before") + F.row_number().over(wrow) - 1,
         F.col("_n"),
     )
-    return joined.withColumn(rank_alias, rank).drop("_cnt", "_n", "_cum_before")
+    return joined.withColumn("d_rank", rank).drop("_cnt", "_n", "_cum_before")
 
 
 #: Tiebreak-hash shards per group in :func:`bottom_k_slab`.

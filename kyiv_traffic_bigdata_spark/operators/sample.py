@@ -12,6 +12,9 @@ per-stratum k cut uses the same TakeOrdered-per-group shape as
 operators.topk. For global samples, the hash threshold variant
 (``hash_sample``) is map-only — no shuffle at all — because md5 is
 uniform: P[md5_prefix(key) < t·2^32] ≈ t.
+
+Every operator samples documents: the key is ``doc_id`` and the stratum
+is ``lang``.
 """
 
 from __future__ import annotations
@@ -22,6 +25,18 @@ from pyspark.sql import functions as F
 from ..functions.text import portable_hash
 from .topk import top_k_per_group
 
+#: Docs kept per language by :func:`stratified_sample`.
+STRATIFIED_K = 20
+
+#: Keep-fraction of :func:`hash_sample`.
+HASH_SAMPLE_FRACTION = 0.1
+
+#: Corpus-mixing rates of :func:`weighted_hash_sample`: down-sample the
+#: dominant language, keep the rare ones whole — the standard
+#: LLM-pretraining rebalance shape; other languages keep CORPUS_MIX_DEFAULT.
+CORPUS_MIX = {"en": 0.3, "zh": 1.0, "de": 0.8}
+CORPUS_MIX_DEFAULT = 0.5
+
 
 def sample_hash(key: Column) -> Column:
     """Uniform deterministic [0, 2^32) hash of a key column — the
@@ -30,50 +45,38 @@ def sample_hash(key: Column) -> Column:
     return portable_hash(key.cast("string"))
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata_cols: list[str],
-    key_col: str,
-    k: int,
-) -> DataFrame:
-    """Exactly min(k, |stratum|) rows per stratum, chosen by ascending
-    sample hash (ties broken by the key itself — total order, so the
-    selection is unique and engine-independent)."""
-    hashed = df.withColumn("_sh", sample_hash(F.col(key_col)))
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Exactly min(STRATIFIED_K, |lang|) docs per language, chosen by
+    ascending sample hash (ties broken by ``doc_id`` itself — total
+    order, so the selection is unique and engine-independent)."""
+    hashed = df.withColumn("_sh", sample_hash(F.col("doc_id")))
     out = top_k_per_group(
         hashed,
-        strata_cols,
-        [F.col("_sh").asc(), F.col(key_col).asc()],
-        k,
+        ["lang"],
+        [F.col("_sh").asc(), F.col("doc_id").asc()],
+        STRATIFIED_K,
     )
     return out.drop("_sh")
 
 
-def hash_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
-    """Map-only deterministic ~``fraction`` sample: keep rows whose sample
-    hash falls under fraction·2^32. No shuffle, no seed, same rows on any
-    engine or partitioning — the 100 TB way to cut a reproducible slice."""
-    threshold = int(fraction * (1 << 32))
-    return df.where(sample_hash(F.col(key_col)) < threshold)
+def hash_sample(df: DataFrame) -> DataFrame:
+    """Map-only deterministic ~HASH_SAMPLE_FRACTION sample: keep docs
+    whose sample hash falls under fraction·2^32. No shuffle, no seed,
+    same rows on any engine or partitioning — the 100 TB way to cut a
+    reproducible slice."""
+    threshold = int(HASH_SAMPLE_FRACTION * (1 << 32))
+    return df.where(sample_hash(F.col("doc_id")) < threshold)
 
 
-def weighted_hash_sample(
-    df: DataFrame,
-    stratum_col: str,
-    key_col: str,
-    fractions: dict[str, float],
-    default_fraction: float = 0.0,
-) -> DataFrame:
-    """Corpus mixing: keep a different deterministic fraction of each
-    stratum (e.g. up-sample rare languages, down-sample boilerplate-heavy
-    domains). Map-only like :func:`hash_sample` — the per-stratum
-    threshold is a small CASE cascade, no shuffle, no seed; re-running
-    with a larger fraction yields a superset (hash thresholds nest), so
-    mixtures can be re-weighted incrementally without re-selecting from
-    scratch."""
-    thr = F.lit(int(default_fraction * (1 << 32)))
-    for stratum, frac in sorted(fractions.items()):
+def weighted_hash_sample(df: DataFrame) -> DataFrame:
+    """Corpus mixing: keep the CORPUS_MIX fraction of each language.
+    Map-only like :func:`hash_sample` — the per-language threshold is a
+    small CASE cascade, no shuffle, no seed; a larger fraction yields a
+    superset (hash thresholds nest), so mixtures can be re-weighted
+    incrementally without re-selecting from scratch."""
+    thr = F.lit(int(CORPUS_MIX_DEFAULT * (1 << 32)))
+    for stratum, frac in sorted(CORPUS_MIX.items()):
         thr = F.when(
-            F.col(stratum_col) == stratum, F.lit(int(frac * (1 << 32)))
+            F.col("lang") == stratum, F.lit(int(frac * (1 << 32)))
         ).otherwise(thr)
-    return df.where(sample_hash(F.col(key_col)) < thr)
+    return df.where(sample_hash(F.col("doc_id")) < thr)

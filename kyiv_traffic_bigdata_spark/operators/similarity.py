@@ -20,9 +20,17 @@ from pyspark.sql import functions as F
 from ..functions.vector import as_double, dot, hyperplane_sign_bits, norm
 from .topk import top_k_per_group
 
-#: Dimension of the driver's ``embeddings`` vectors: the width of every
-#: literal hyperplane (the DuckDB twins build the same plane tables).
-EMB_DIM = 64
+#: Neighbors per query returned by cosine_topk, ann_lsh_topk and
+#: ann_ivf_topk (and operators.pq.adc_topk); the SQL twins rank to it.
+TOPK = 10
+
+#: Cosine radius of :func:`cosine_range_search`.
+RANGE_TAU = 0.2
+
+#: SemDeDup cosine threshold (chosen away from the sf test data's
+#: observed similarity values so the boolean gate can never flip on a
+#: final-ulp engine difference).
+SEMDEDUP_THRESHOLD = 0.35
 
 
 def probe_max_sim(corpus: DataFrame, probes: list[list[float]]) -> DataFrame:
@@ -100,10 +108,8 @@ def _side(df: DataFrame, id_as: str, vec_as: str, norm_as: str, *extra):
     )
 
 
-def cosine_range_search(
-    queries: DataFrame, corpus: DataFrame, threshold: float
-) -> DataFrame:
-    """All corpus neighbors within a cosine radius of each query vector
+def cosine_range_search(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """All corpus neighbors within cosine RANGE_TAU of each query vector
     (range query — the similarity-search complement of
     :func:`cosine_topk`'s top-k: "everything at least this similar",
     unbounded result count per query).
@@ -128,12 +134,12 @@ def cosine_range_search(
     return (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", round6(sim).alias("cosine_sim"))
-        .where(F.col("cosine_sim") >= F.lit(threshold))
+        .where(F.col("cosine_sim") >= F.lit(RANGE_TAU))
     )
 
 
-def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+def cosine_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Exact top-TOPK cosine neighbors for each query vector.
 
     ``broadcast(queries) × corpus`` — the corpus never shuffles; scoring is
     one codegen'd expression per (query, doc). Self-matches excluded.
@@ -157,20 +163,20 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame
         scored,
         ["query_id"],
         [F.col("_sim").desc(), F.col("neighbor_id").asc()],
-        k,
+        TOPK,
     )
     return ranked.select(
         "query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("cosine_sim")
     )
 
 
-#: IVF coarse-quantizer size of :func:`ann_ivf_topk`.
+#: IVF coarse-quantizer size of :func:`ann_ivf_topk`, and the cells each
+#: query probes in the registered ann_ivf query.
 IVF_CELLS = 16
+IVF_PROBES = 4
 
 
-def ann_ivf_topk(
-    queries: DataFrame, corpus: DataFrame, n_probe: int = 2, k: int = 10
-) -> DataFrame:
+def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, n_probe: int) -> DataFrame:
     """IVF-style approximate NN: coarse quantizer + inverted cell lists.
 
     The other classic ANN scale path next to hyperplane LSH (ann_lsh_topk):
@@ -190,7 +196,7 @@ def ann_ivf_topk(
        structs — deterministic ties);
     4. **score** — equi-join on cell id (inverted-list lookup as a
        hash-partitioned join; a neighbor lives in exactly one cell so no
-       pair dedup is needed), exact cosine, per-query top-k.
+       pair dedup is needed), exact cosine, per-query top-TOPK.
 
     Scoring cost drops from |Q| x |C| to ~|Q| x n_probe x |C| / IVF_CELLS.
     Recall vs. the exact baseline is asserted in tests, not assumed.
@@ -255,7 +261,7 @@ def ann_ivf_topk(
         .select("query_id", "neighbor_id", sim.alias("_sim"))
     )
     ranked = top_k_per_group(
-        scored, ["query_id"], [F.col("_sim").desc(), F.col("neighbor_id").asc()], k
+        scored, ["query_id"], [F.col("_sim").desc(), F.col("neighbor_id").asc()], TOPK
     )
     return ranked.select(
         "query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("cosine_sim")
@@ -279,11 +285,13 @@ def _fold_dot(a, b):
 #: Recall tradeoff is the standard AND/OR construction: longer bands drop
 #: per-band collision probability ((1-θ/π)^w), so at large n you raise
 #: NEARDUP_BANDS (OR-construction) to claw recall back; verification is
-#: exact either way (precision always 1).
+#: exact either way (precision always 1). Pairs are kept at cosine >=
+#: NEARDUP_THRESHOLD.
 NEARDUP_BANDS = 4
 NEARDUP_MIN_ROWS = 4
 NEARDUP_MAX_ROWS = 16
 NEARDUP_TARGET_BUCKET = 64
+NEARDUP_THRESHOLD = 0.3
 
 
 def neardup_rows_per_band(n_rows: int) -> int:
@@ -301,11 +309,7 @@ def neardup_rows_per_band(n_rows: int) -> int:
     return max(NEARDUP_MIN_ROWS, min(NEARDUP_MAX_ROWS, w))
 
 
-def cosine_neardup_pairs(
-    corpus: DataFrame,
-    rows_per_band: int | None = None,
-    threshold: float = 0.3,
-) -> DataFrame:
+def cosine_neardup_pairs(corpus: DataFrame, rows_per_band: int) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (north-star dedup op #5).
 
     Banded random-hyperplane LSH blocking + exact cosine verification —
@@ -316,8 +320,7 @@ def cosine_neardup_pairs(
        with its own seed ("rp_b{b}"), so a band's plane list is a stable
        prefix as the width grows — re-bucketing a grown corpus reuses
        every previously computed bit;
-    2. ``rows_per_band=None`` (default) auto-scales the width from the
-       corpus row count (one parquet-footer count job) via
+    2. callers size the width from the corpus row count with
        :func:`neardup_rows_per_band`, keeping expected bucket population
        ≤ NEARDUP_TARGET_BUCKET instead of letting buckets grow with n;
     3. per band, vectors sharing the band key are candidates — a
@@ -325,13 +328,13 @@ def cosine_neardup_pairs(
        skewed real-world buckets (clustered embeddings) are AQE
        skew-join territory, and NEARDUP_TARGET_BUCKET can be lowered to
        split them;
-    4. candidates are verified with the exact cosine >= threshold
+    4. candidates are verified with the exact cosine >= NEARDUP_THRESHOLD
        predicate — blocking affects recall only, never precision.
 
     Verification runs INSIDE each bucket as one numpy gram matrix
     (``applyInPandas``): with bucket population capped at ~target rows the
     per-bucket matmul is a bounded target² block (sub-ms), and emitting
-    only >= threshold survivors means the only shuffles are the bands ×
+    only >= NEARDUP_THRESHOLD survivors means the only shuffles are the bands ×
     corpus bucket exchange (vectors ride along: bands × row_size, bounded)
     and a final tiny pair dedup. A pair colliding in several bands is
     deduped by max(sim) — matmul blocking may differ per bucket shape, so
@@ -341,10 +344,6 @@ def cosine_neardup_pairs(
     import numpy as np
     import pandas as pd
 
-    if rows_per_band is None:
-        # count() is parquet-footer metadata, not a data scan; callers on
-        # non-file sources can pass rows_per_band explicitly to skip it.
-        rows_per_band = neardup_rows_per_band(corpus.count())
     bucketed = corpus.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").alias("vec"),
@@ -364,7 +363,7 @@ def cosine_neardup_pairs(
         denom = np.outer(norms, norms)
         sims = np.divide(gram, denom, out=np.zeros_like(gram), where=denom != 0)
         ia, ib = np.triu_indices(len(ids), k=1)
-        keep = sims[ia, ib] >= threshold
+        keep = sims[ia, ib] >= NEARDUP_THRESHOLD
         return pd.DataFrame(
             {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "sim": sims[ia[keep], ib[keep]]}
         )
@@ -383,8 +382,8 @@ def cosine_neardup_pairs(
 LSH_PLANES = 4
 
 
-def ann_lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
-    """Approximate top-k: random-hyperplane LSH buckets + in-bucket scoring.
+def ann_lsh_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Approximate top-TOPK: random-hyperplane LSH buckets + in-bucket scoring.
 
     Both sides compute the same deterministic signature; queries probe
     their own bucket plus every bucket one bit-flip away (LSH_PLANES
@@ -402,7 +401,7 @@ def ann_lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFram
     better — raise LSH_PLANES as corpus size grows to keep buckets
     O(corpus / 2^LSH_PLANES) sized.
     """
-    sig = hyperplane_sign_bits(F.col("embedding"), EMB_DIM, LSH_PLANES)
+    sig = hyperplane_sign_bits(F.col("embedding"), LSH_PLANES)
     c = _side(corpus, "neighbor_id", "cvec", "_cn", sig.alias("bucket"))
     q0 = _side(queries, "query_id", "qvec", "_qn", sig.alias("sig"))
     probes = [F.col("sig")]
@@ -431,14 +430,14 @@ def ann_lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFram
         .agg(F.max("_sim").alias("_sim"))
     )
     ranked = top_k_per_group(
-        scored, ["query_id"], [F.col("_sim").desc(), F.col("neighbor_id").asc()], k
+        scored, ["query_id"], [F.col("_sim").desc(), F.col("neighbor_id").asc()], TOPK
     )
     return ranked.select(
         "query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("cosine_sim")
     )
 
 
-def hamming_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
+def hamming_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """Exact top-k by Hamming distance over binary sign signatures —
     the 4th ANN scale path (next to LSH buckets, IVF cells, PQ codes):
     compress every vector to 1 bit/dim (functions.vector.sign_words)
@@ -496,13 +495,11 @@ def hamming_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFram
     return ranked.select("query_id", "neighbor_id", "hamming")
 
 
-def semdedup(
-    corpus: DataFrame, centroids: list[list[float]], threshold: float = 0.35
-) -> DataFrame:
+def semdedup(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023):
     cluster the embedding space, then mark as redundant any vector whose
     cosine similarity to a LOWER-ID vector in the same cluster reaches
-    ``threshold`` — the keep-one-per-semantic-neighborhood gate used to
+    SEMDEDUP_THRESHOLD — the keep-one-per-semantic-neighborhood gate used to
     prune web corpora before LLM training.
 
     Shape: nearest-centroid assignment is map-only against a literal
@@ -547,7 +544,7 @@ def semdedup(
         masked = np.where(mask, sims, -np.inf)
         has_prior = mask.any(axis=1)
         prior_max = np.where(has_prior, masked.max(axis=1, initial=-np.inf), 0.0)
-        kept = ~(masked >= threshold).any(axis=1)
+        kept = ~(masked >= SEMDEDUP_THRESHOLD).any(axis=1)
         return pd.DataFrame(
             {
                 "id": ids,
@@ -575,7 +572,7 @@ def _band_keys(rows_per_band: int):
                 F.struct(
                     F.lit(b).alias("band"),
                     hyperplane_sign_bits(
-                        F.col("embedding"), EMB_DIM, rows_per_band, seed=f"rp_b{b}"
+                        F.col("embedding"), rows_per_band, seed=f"rp_b{b}"
                     ).alias("bkey"),
                 )
                 for b in range(NEARDUP_BANDS)
@@ -584,7 +581,7 @@ def _band_keys(rows_per_band: int):
     )
 
 
-def lsh_bucket_stats(corpus: DataFrame, rows_per_band: int | None = None) -> DataFrame:
+def lsh_bucket_stats(corpus: DataFrame, rows_per_band: int) -> DataFrame:
     """Index-health monitoring for the banded-LSH family: per-band
     bucket occupancy (bucket count, row total, max population). The
     operational check behind the adaptive-width contract — if
@@ -593,8 +590,6 @@ def lsh_bucket_stats(corpus: DataFrame, rows_per_band: int | None = None) -> Dat
     NEARDUP_TARGET_BUCKET (or the band width) needs retuning BEFORE the
     verify stage goes quadratic. Cost: the same bands × corpus explode
     as bucketing itself, two hash aggregates, bands rows out."""
-    if rows_per_band is None:
-        rows_per_band = neardup_rows_per_band(corpus.count())
     bucketed = corpus.select(_band_keys(rows_per_band).alias("_bb")).select(
         "_bb.band", "_bb.bkey"
     )

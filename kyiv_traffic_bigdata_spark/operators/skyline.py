@@ -31,7 +31,7 @@ row sitting on the frontier.
 
 At 100 TB the reduce in step 1 is the only full shuffle; buckets give
 step 2 the parallelism, and step 3 touches only the per-bucket
-survivors. A finer `bucket_width` raises parallelism at the cost of a
+survivors. A finer SKYLINE_BUCKET raises parallelism at the cost of a
 slightly weaker local prune (the global sweep fixes any leak).
 """
 
@@ -41,17 +41,18 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def skyline_points_2d(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    bucket_width: float,
-) -> DataFrame:
-    """Skyline POINTS of (x_col, y_col) under minimise-both semantics.
+#: Width of the x range buckets of the local prune (in price units).
+SKYLINE_BUCKET = 100.0
 
-    Returns one row per frontier point with columns ``(x_col, y_col)``
-    — join back to the source to list all rows on those points.
+
+def skyline_points_2d(df: DataFrame) -> DataFrame:
+    """Skyline POINTS of parts' (p_retailprice, p_size) under
+    minimise-both semantics ("cheapest AND smallest").
+
+    Returns one row per frontier point with columns ``(p_retailprice,
+    p_size)`` — join back to the source to list all rows on those points.
     """
+    x_col, y_col = "p_retailprice", "p_size"
     pts = df.groupBy(x_col).agg(F.min(y_col).alias(y_col))
 
     def survives(part_cols: list[Column]) -> Column:
@@ -63,7 +64,7 @@ def skyline_points_2d(
         prev_min = F.min(y_col).over(w)
         return prev_min.isNull() | (F.col(y_col) < prev_min)
 
-    bucket = F.floor(F.col(x_col) / F.lit(float(bucket_width)))
+    bucket = F.floor(F.col(x_col) / F.lit(SKYLINE_BUCKET))
     local = (
         pts.withColumn("_bk", bucket)
         .withColumn("_keep", survives([F.col("_bk")]))

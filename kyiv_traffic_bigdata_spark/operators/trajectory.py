@@ -26,15 +26,15 @@ def consecutive_deltas(
     key_cols: list[str],
     ts_col: str,
     carry_cols: list[str],
-    tiebreak_cols: list[str] | None = None,
+    tiebreak_cols: list[str],
 ) -> DataFrame:
     """Attach ``prev_<c>`` lag-1 columns per key, ordered by (ts, tiebreak).
 
-    Deterministic ordering requires a total order — callers must pass
-    tiebreak columns whenever ts can repeat within a key (the shipped
-    reference data has ~10% duplicate keys, SURVEY §2.8 ST5).
+    Deterministic ordering requires a total order — the tiebreak columns
+    settle repeated ts within a key (the shipped reference data has ~10%
+    duplicate keys, SURVEY §2.8 ST5).
     """
-    order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in (tiebreak_cols or [])]
+    order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
     w = Window.partitionBy(*key_cols).orderBy(*order)
     out = df
     for c in [ts_col, *carry_cols]:
@@ -47,7 +47,8 @@ def trajectory_speeds(
     key_col: str = "vehicle_id",
     ts_col: str = "timestamp",
     max_gap_s: int = MAX_TIME_GAP_S,
-    tiebreak_cols: list[str] | None = None,
+    *,
+    tiebreak_cols: list[str],
     round_speed: int | None = None,
 ) -> DataFrame:
     """Reference W1: per-key consecutive-fix speeds of ``lat``/``lon``
@@ -83,17 +84,17 @@ def trajectory_speeds(
     )
 
 
-def value_rate(
-    events: DataFrame, tiebreak_cols: list[str] | None = None, max_gap_s: int = 3600
-) -> DataFrame:
-    """W1 generalized to any numeric series: per-``user_id`` d(value)/dt.
+def value_rate(events: DataFrame) -> DataFrame:
+    """W1 generalized to any numeric series: per-``user_id`` d(value)/dt
+    in (ts_us, event_id) order, over gaps of at most one week.
 
     The star-schema analog the correctness gate runs on ``events``:
     dt in seconds from exact integer micros ``ts_us``, rate =
     |Δvalue| / dt. Pure int/double per-row arithmetic → bit-identical
     in any engine.
     """
-    lagged = consecutive_deltas(events, ["user_id"], "ts_us", ["value"], tiebreak_cols)
+    max_gap_s = 604800
+    lagged = consecutive_deltas(events, ["user_id"], "ts_us", ["value"], ["event_id"])
     dt_s = (F.col("ts_us") - F.col("prev_ts_us")).cast("double") / 1e6
     return (
         lagged.where(F.col("prev_ts_us").isNotNull())

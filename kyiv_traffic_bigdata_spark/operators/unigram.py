@@ -14,7 +14,8 @@ BPE:
 * the corpus collapses ONCE to the distinct-word table (word, n) —
   training cost thereafter scales with the WORD VOCABULARY, never the
   corpus (a 100 TB corpus and its 10 GB word table train identically);
-* the candidate-piece table (≤ ``max_pieces`` rows) is driver metadata,
+* the candidate-piece table (≤ UNIGRAM_SEED_PIECES multi-char rows) is
+  driver metadata,
   broadcast into the E-step closure like centroids/codebooks;
 * each EM iteration = one mapInPandas pass over the distinct words
   (forward-backward per word, plain-Python DP on ≤ ``max_word_len``
@@ -53,6 +54,14 @@ UNK_LOGPROB = -100.0
 #: decimal sum — the layout-independence contract of the EM aggregate
 _CONTRIB_DP = 10
 
+#: Training geometry of the registered doc_unigram_tokenize query:
+#: longest piece, multi-char seed candidates, final vocabulary size and
+#: EM rounds.
+UNIGRAM_MAX_PIECE_LEN = 6
+UNIGRAM_SEED_PIECES = 256
+UNIGRAM_VOCAB = 96
+UNIGRAM_ITERS = 2
+
 
 def word_counts(docs: DataFrame) -> DataFrame:
     """(word, n) distinct-word table of the ``text`` column — the one
@@ -65,13 +74,12 @@ def word_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def seed_pieces(
-    words: DataFrame, max_piece_len: int = 6, max_pieces: int = 512
-) -> DataFrame:
+def seed_pieces(words: DataFrame) -> DataFrame:
     """Candidate pieces: every substring of every distinct word up to
-    ``max_piece_len`` chars, weighted by word frequency; the top
-    ``max_pieces`` by (weight, piece) survive, and ALL single
-    characters are retained regardless of rank (coverage guarantee).
+    UNIGRAM_MAX_PIECE_LEN chars, weighted by word frequency; the top
+    UNIGRAM_SEED_PIECES multi-char pieces by (weight, piece) survive,
+    and ALL single characters are retained regardless of rank (coverage
+    guarantee).
 
     Output: (piece, w) with integer weights — exact, so the seed set is
     trivially deterministic."""
@@ -79,7 +87,7 @@ def seed_pieces(
     lens = F.explode(
         F.sequence(
             F.lit(1),
-            F.least(F.lit(max_piece_len), F.length("word") - F.col("i") + 1),
+            F.least(F.lit(UNIGRAM_MAX_PIECE_LEN), F.length("word") - F.col("i") + 1),
         )
     ).alias("l")
     subs = (
@@ -92,15 +100,17 @@ def seed_pieces(
     top = (
         counts.where(F.length("piece") > 1)
         .orderBy(F.col("w").desc(), "piece")
-        .limit(max_pieces)
+        .limit(UNIGRAM_SEED_PIECES)
     )
     return chars.unionByName(top)
 
 
-def _forward_backward(word: str, probs: dict[str, float], max_len: int):
-    """Expected piece counts over all segmentations of one word (plain
-    float DP — deterministic: fixed iteration order, no parallel sums).
-    Returns (dict piece -> expected count, Z)."""
+def _forward_backward(word: str, probs: dict[str, float]):
+    """Expected piece counts over all segmentations of one word into
+    pieces of at most UNIGRAM_MAX_PIECE_LEN chars (plain float DP —
+    deterministic: fixed iteration order, no parallel sums). Returns
+    (dict piece -> expected count, Z)."""
+    max_len = UNIGRAM_MAX_PIECE_LEN
     n = len(word)
     alpha = [0.0] * (n + 1)
     alpha[0] = 1.0
@@ -135,28 +145,23 @@ def _forward_backward(word: str, probs: dict[str, float], max_len: int):
     return exp, z
 
 
-def em_train(
-    words: DataFrame,
-    max_piece_len: int = 6,
-    max_pieces: int = 512,
-    vocab_size: int = 128,
-    iters: int = 3,
-) -> list[tuple[str, float]]:
+def em_train(words: DataFrame) -> list[tuple[str, float]]:
     """EM-train a unigram-LM piece vocabulary over the distinct-word
-    table; returns the final ``vocab_size`` (piece, prob) pairs sorted
-    (prob desc, piece asc), single characters always retained.
+    table in UNIGRAM_ITERS rounds; returns the final UNIGRAM_VOCAB
+    (piece, prob) pairs sorted (prob desc, piece asc), single
+    characters always retained.
 
     The returned list is BIT-IDENTICAL across partition layouts: the
     only cross-row float reduction (expected-count sum per piece) runs
     on 10-dp-rounded contributions through the decimal path."""
     spark = words.sparkSession
-    seed = seed_pieces(words, max_piece_len, max_pieces).collect()
+    seed = seed_pieces(words).collect()
     if not seed:
         return []
     total_w = sum(r.w for r in seed)
     probs = {r.piece: r.w / total_w for r in sorted(seed, key=lambda r: r.piece)}
 
-    for _ in range(iters):
+    for _ in range(UNIGRAM_ITERS):
         cur = dict(probs)  # closure snapshot for this round
 
         def estep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -164,7 +169,7 @@ def em_train(
                 out_p: list[str] = []
                 out_c: list[float] = []
                 for word, n in zip(pdf["word"], pdf["n"]):
-                    exp, z = _forward_backward(word, cur, max_piece_len)
+                    exp, z = _forward_backward(word, cur)
                     if z <= 0.0:
                         continue
                     for piece, c in exp.items():
@@ -192,17 +197,17 @@ def em_train(
         ((p, pr) for p, pr in probs.items() if len(p) > 1),
         key=lambda t: (-t[1], t[0]),
     )
-    keep = chars + multis[: max(0, vocab_size - len(chars))]
+    keep = chars + multis[: max(0, UNIGRAM_VOCAB - len(chars))]
     keep.sort(key=lambda t: (-t[1], t[0]))
     return keep
 
 
-def viterbi_segment(
-    word: str, logprobs: dict[str, float], max_len: int
-) -> list[str]:
-    """Max-log-probability segmentation; deterministic tie-break
-    (on exact float ties the LONGER final piece wins, i.e. smaller
-    split point). Unseen characters cost ``UNK_LOGPROB`` each."""
+def viterbi_segment(word: str, logprobs: dict[str, float]) -> list[str]:
+    """Max-log-probability segmentation into pieces of at most
+    UNIGRAM_MAX_PIECE_LEN chars; deterministic tie-break (on exact float
+    ties the LONGER final piece wins, i.e. smaller split point). Unseen
+    characters cost ``UNK_LOGPROB`` each."""
+    max_len = UNIGRAM_MAX_PIECE_LEN
     n = len(word)
     best = [0.0] + [-math.inf] * n
     back = [0] * (n + 1)
@@ -228,14 +233,9 @@ def viterbi_segment(
     return out
 
 
-def viterbi_encode(
-    df: DataFrame,
-    text_col: str,
-    vocab: list[tuple[str, float]],
-    max_piece_len: int = 6,
-) -> DataFrame:
+def viterbi_encode(df: DataFrame, vocab: list[tuple[str, float]]) -> DataFrame:
     """Adds ``pieces``: the Viterbi piece segmentation of the
-    normalized text (word-by-word, concatenation-preserving). The vocab
+    normalized ``text`` (word-by-word, concatenation-preserving). The vocab
     rides the closure — bounded metadata, same as centroids.
     Zero-probability pieces are excluded (log(0) raises; excluding them
     makes their characters take the UNK single-char fallback, the same
@@ -250,8 +250,8 @@ def viterbi_encode(
             norm = " ".join((t or "").lower().split())
             for w in norm.split(" "):
                 if w:
-                    pieces.extend(viterbi_segment(w, logprobs, max_piece_len))
+                    pieces.extend(viterbi_segment(w, logprobs))
             out.append(pieces)
         return pd.Series(out)
 
-    return df.withColumn("pieces", seg(F.col(text_col)))
+    return df.withColumn("pieces", seg(F.col("text")))

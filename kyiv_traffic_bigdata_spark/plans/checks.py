@@ -10,9 +10,10 @@ from contextlib import redirect_stdout
 from pyspark.sql import DataFrame
 
 
-def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
-    """The explain() text for a DataFrame (captured, not printed)."""
+def physical_plan(df: DataFrame) -> str:
+    """The formatted explain() text for a DataFrame (captured, not
+    printed)."""
     buf = io.StringIO()
     with redirect_stdout(buf):
-        df.explain(mode)
+        df.explain("formatted")
     return buf.getvalue()

@@ -36,13 +36,17 @@ from .functions.gridsum import grid_sum, grid_sum_dec, grid_sum_over
 from .functions.rounding import SQL_ROUND6, round6
 from .operators import dedup as DD
 from .operators import kmeans as KM
+from .operators import sample as SAMPLE
 from .operators import similarity as SIM
 from .operators.aggregates import dec, stable_avg, stable_sum
 from .operators.enrich import broadcast_enrich
+from .operators.graph import PAGERANK_ITERS
 from .operators.latest import dedup_exact, latest_per_key
 from .operators.asof import asof_join
+from .operators.logreg import LOGREG_ITERS, LOGREG_LR
 from .operators.multimodal import attach_binary_payload, extract_media_features
 from .operators.pivot import explode_parallel_arrays
+from .operators.pq import PQ_K, PQ_M
 from .operators.proximity import proximity_join
 from .operators.topk import top_k
 from .operators.trajectory import trajectory_speeds, value_rate
@@ -89,8 +93,8 @@ def _norm(c: str) -> str:
     return _NORM.format(c=c)
 
 
-def _toks(c: str) -> str:
-    return f"string_split({_norm(c)}, ' ')"
+#: DuckDB twin of the ``text`` column's token list
+_TOKS = f"string_split({_norm('text')}, ' ')"
 
 
 _PORTABLE_HASH = "CAST(concat('0x', substr(md5({s}), 1, 8)) AS BIGINT)"
@@ -157,7 +161,7 @@ rates AS (
 
 def _rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return value_rate(ev, tiebreak_cols=["event_id"], max_gap_s=604800)
+    return value_rate(ev)
 
 
 _GEO_SPEED_BODY = f"""
@@ -371,7 +375,7 @@ GROUP BY e.event_type HAVING COUNT(*) >= 10
 def q_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling window (SURVEY ST1 generalization)."""
     ev = load_table(spark, sf_dir, "events")
-    return tumbling_stats(ev, "ts", "1 hour", ["event_type"], "value")
+    return tumbling_stats(ev)
 
 
 SQL_HOURLY = f"""
@@ -385,7 +389,7 @@ FROM events GROUP BY 1, 2
 def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (lag + running sum, SURVEY extension)."""
     ev = load_table(spark, sf_dir, "events")
-    return sessionize(ev, "user_id", "ts_us", gap_s=1800, tiebreak_cols=["event_id"])
+    return sessionize(ev)
 
 
 SQL_SESSIONS = """
@@ -535,7 +539,7 @@ def q_moving_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     user, trailing-5-row moving sum/avg of value plus running total.
     One shuffle + one in-partition sort serves all four window exprs."""
     ev = load_table(spark, sf_dir, "events")
-    return moving_stats(ev, "user_id", ["ts_us", "event_id"], "value", frame_rows=5)
+    return moving_stats(ev)
 
 
 def _sql_moving() -> str:
@@ -575,11 +579,9 @@ def q_approx_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     regs = hll_registers(
-        ev.select("event_type", F.col("user_id").cast("string").alias("_u")),
-        ["event_type"],
-        F.col("_u"),
+        ev.select("event_type", F.col("user_id").cast("string").alias("_u"))
     )
-    est = hll_estimate(regs, ["event_type"]).select(
+    est = hll_estimate(regs).select(
         "event_type", F.col("est_distinct").alias("users_est")
     )
     base = ev.groupBy("event_type").agg(
@@ -720,7 +722,7 @@ def q_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts_us", "event_id", "event_type", "value"
     )
-    return dedup_exact(ev, ["user_id", "ts_us"], "event_id")
+    return dedup_exact(ev)
 
 
 SQL_DEDUP_EVENTS = """
@@ -897,15 +899,7 @@ def q_events_asof_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     errors = ev.where(F.col("event_type") == "error").select(
         "event_id", "user_id", "ts_us", "value"
     )
-    joined = asof_join(
-        clicks,
-        errors,
-        key_cols=["user_id"],
-        left_ts="ts_us",
-        right_ts="ts_us",
-        right_value_cols=["event_id", "value"],
-        right_tiebreak="event_id",
-    )
+    joined = asof_join(clicks, errors)
     return joined.select(
         "event_id",
         "user_id",
@@ -957,10 +951,7 @@ def q_geo_nearby_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = pos.where(F.col("event_id") % 200 == 0)
     corpus = pos
-    joined = proximity_join(
-        probes, corpus, radius_km=1.0, cell_deg=0.02,
-        left_prefix="p_", right_prefix="e_",
-    )
+    joined = proximity_join(probes, corpus)
     return (
         joined.where(F.col("p_event_id") != F.col("e_event_id"))
         .select(
@@ -989,18 +980,14 @@ SELECT probe_id, event_id, round(dist, 6) AS dist_km FROM pairs WHERE dist <= 1.
 
 def q_emb_cosine_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (north-star dedup op #5): banded
-    hyperplane-LSH blocking (band bit-width auto-scaled to corpus size so
-    bucket population stays bounded) + exact cosine >= 0.3 verification
-    (operators.similarity.cosine_neardup_pairs)."""
+    hyperplane-LSH blocking (band bit-width scaled to corpus size so
+    bucket population stays bounded) + exact cosine >= NEARDUP_THRESHOLD
+    verification (operators.similarity.cosine_neardup_pairs)."""
     # width from the RAW table's count (parquet-footer metadata job);
     # counting the repartitioned frame would execute the full round-robin
     # shuffle just to learn n
     n = load_table(spark, sf_dir, "embeddings").count()
-    return SIM.cosine_neardup_pairs(
-        _emb(spark, sf_dir),
-        threshold=0.3,
-        rows_per_band=SIM.neardup_rows_per_band(n),
-    )
+    return SIM.cosine_neardup_pairs(_emb(spark, sf_dir), SIM.neardup_rows_per_band(n))
 
 
 def _sql_lsh_bucket_prefix() -> str:
@@ -1017,7 +1004,7 @@ def _sql_lsh_bucket_prefix() -> str:
         f"({b}, {p}, {i + 1}, {c!r})"
         for b in range(SIM.NEARDUP_BANDS)
         for p, coeffs in enumerate(
-            plane_coefficients(SIM.EMB_DIM, SIM.NEARDUP_MAX_ROWS, seed=f"rp_b{b}")
+            plane_coefficients(SIM.NEARDUP_MAX_ROWS, seed=f"rp_b{b}")
         )
         for i, c in enumerate(coeffs)
     )
@@ -1071,7 +1058,7 @@ cos AS (
               ELSE d / (sqrt(na.n2) * sqrt(nb.n2)) END AS sim
   FROM dots JOIN norms na ON na.vec_id = id_a JOIN norms nb ON nb.vec_id = id_b
 )
-SELECT id_a, id_b, round(sim, 6) AS cosine_sim FROM cos WHERE sim >= 0.3
+SELECT id_a, id_b, round(sim, 6) AS cosine_sim FROM cos WHERE sim >= {SIM.NEARDUP_THRESHOLD}
 """
 
 
@@ -1133,7 +1120,7 @@ def q_salted_supplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
     )
-    j = salted_join(li, sup, key="l_suppkey", salt_col=F.col("l_orderkey"))
+    j = salted_join(li, sup)
     return j.groupBy("s_nationkey").agg(
         stable_sum("l_extendedprice").alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
@@ -1285,7 +1272,7 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_doc_stats() -> str:
-    toks = _toks("text")
+    toks = _TOKS
     sw = _sw_sql(TX.QUALITY_STOPWORDS)
     swr = f"(CASE WHEN len(t) = 0 THEN 0.0 ELSE CAST(len(list_filter(t, x -> list_contains({sw}, x))) AS DOUBLE) / len(t) END)"
     alpha = "(CASE WHEN length(text) = 0 THEN 0.0 ELSE CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(text) END)"
@@ -1349,7 +1336,7 @@ def q_doc_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_langid_confusion() -> str:
     return f"""
-WITH toks AS (SELECT lang, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT lang, {_TOKS} AS t FROM documents),
 pred AS (SELECT lang, {_sql_lang_id_case()} AS pred_lang FROM toks),
 cells AS (
   SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -1451,7 +1438,7 @@ def q_doc_lang_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_LANG_TOKENS = f"""
-WITH toks AS (SELECT lang, len({_toks('text')}) AS n_tokens FROM documents)
+WITH toks AS (SELECT lang, len({_TOKS}) AS n_tokens FROM documents)
 SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
   CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
   {_savg('n_tokens', 'COUNT(n_tokens)')} AS avg_tokens
@@ -1470,25 +1457,14 @@ SELECT md5({_norm('text')}) AS fp, MIN(doc_id) AS rep_id,
 FROM documents GROUP BY 1
 """
 
-#: Stop-shingle df cap for the registered near-dup query — exposed here
-#: (not just as the operator default) so curation runs tune it in one
-#: place; the SQL oracle twin mirrors whatever this is set to. Pairs
-#: overlapping EXCLUSIVELY in above-cap boilerplate are the documented
-#: recall cost; identical docs are still always caught by doc_exact_dups
-#: (pinned in tests/test_dedup_pairs.py).
-NGRAM_QUERY_MAX_DOC_FREQ = DD.NGRAM_MAX_DOC_FREQ
-
-
 def q_ngram_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by exact n-gram Jaccard: stop-shingle-capped
-    candidate generation (df ≤ NGRAM_QUERY_MAX_DOC_FREQ) + exact
+    candidate generation (df ≤ DD.NGRAM_MAX_DOC_FREQ) + exact
     verification over the full shingle sets — the skew-safe two-phase
-    shape."""
-    return DD.ngram_jaccard_pairs(
-        _docs_with_tokens(spark, sf_dir),
-        threshold=0.2,
-        max_doc_freq=NGRAM_QUERY_MAX_DOC_FREQ,
-    )
+    shape. Pairs overlapping EXCLUSIVELY in above-cap boilerplate are
+    the documented recall cost; identical docs are still always caught
+    by doc_exact_dups (pinned in tests/test_dedup_pairs.py)."""
+    return DD.ngram_jaccard_pairs(_docs_with_tokens(spark, sf_dir))
 
 
 # Mirrors the skew-safe Spark shape: the pair join runs only over rare
@@ -1497,20 +1473,20 @@ def q_ngram_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-doc arrays), so any pair sharing ≥1 rare shingle scores its exact
 # full-set Jaccard.
 SQL_NGRAM_NEARDUPS = f"""
-WITH toks AS (SELECT doc_id, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 grams AS (SELECT doc_id, unnest({_SHINGLES.format(t='t')}) AS g FROM toks),
 sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM grams GROUP BY doc_id),
 dfreq AS (SELECT g, COUNT(*) AS df FROM grams GROUP BY g),
 pr AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_rare
   FROM grams a
-  JOIN dfreq d ON d.g = a.g AND d.df <= {NGRAM_QUERY_MAX_DOC_FREQ}
+  JOIN dfreq d ON d.g = a.g AND d.df <= {DD.NGRAM_MAX_DOC_FREQ}
   JOIN grams b ON b.g = a.g AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 ),
 hot AS (
   SELECT doc_id, list(a.g ORDER BY a.g) AS harr
-  FROM grams a JOIN dfreq d ON d.g = a.g AND d.df > {NGRAM_QUERY_MAX_DOC_FREQ}
+  FROM grams a JOIN dfreq d ON d.g = a.g AND d.df > {DD.NGRAM_MAX_DOC_FREQ}
   GROUP BY doc_id
 ),
 j AS (
@@ -1528,7 +1504,7 @@ jac AS (
          (floor((CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter)) * 1000000.0 + 0.5) / 1000000.0) AS jaccard
   FROM j
 )
-SELECT * FROM jac WHERE jaccard >= 0.2
+SELECT * FROM jac WHERE jaccard >= {DD.NEARDUP_JACCARD}
 """
 
 
@@ -1538,7 +1514,7 @@ def _sql_minhash_sig() -> str:
         for i, (a, b) in ((j, DD.perm_coeffs(j)) for j in range(DD.NUM_PERM))
     )
     return f"""
-toks AS (SELECT doc_id, {_toks('text')} AS t FROM documents),
+toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 grams AS (SELECT doc_id, unnest({_SHINGLES.format(t='t')}) AS g FROM toks),
 hashed AS (SELECT doc_id, {_PORTABLE_HASH.format(s='g')} AS h FROM grams),
 sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id)
@@ -1555,7 +1531,7 @@ SQL_MINHASH_SIG = "WITH " + _sql_minhash_sig() + "SELECT * FROM sig"
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH candidates + exact verification."""
-    return DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
+    return DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir))
 
 
 def _sql_minhash_lsh() -> str:
@@ -1586,7 +1562,7 @@ jac AS (
   FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
 )
 SELECT c.id_a, c.id_b, j.jaccard FROM cand c JOIN jac j ON c.id_a = j.id_a AND c.id_b = j.id_b
-WHERE j.jaccard >= 0.2
+WHERE j.jaccard >= {DD.NEARDUP_JACCARD}
 """
     )
 
@@ -1597,7 +1573,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_SIMHASH = f"""
-WITH toks AS (SELECT doc_id, unnest({_toks('text')}) AS tokn FROM documents),
+WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS tokn FROM documents),
 hashed AS (SELECT doc_id, {_PORTABLE_HASH.format(s='tokn')} AS h FROM toks),
 bits AS (SELECT unnest(range(0, 32)) AS bit),
 contrib AS (
@@ -1621,7 +1597,7 @@ def _sql_simhash_neardups() -> str:
     bands, width = DD.SIMHASH_BANDS, DD.SIMHASH_BITS // DD.SIMHASH_BANDS
     maxh = DD.SIMHASH_MAX_HAMMING
     return f"""
-WITH toks AS (SELECT doc_id, unnest({_toks('text')}) AS tokn FROM documents),
+WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS tokn FROM documents),
 hashed AS (SELECT doc_id, {_PORTABLE_HASH.format(s='tokn')} AS h FROM toks),
 bits AS (SELECT unnest(range(0, {DD.SIMHASH_BITS})) AS bit),
 contrib AS (
@@ -1889,7 +1865,7 @@ def q_token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_token_zipf_fit() -> str:
     return f"""
-WITH tok AS (SELECT unnest({_toks('text')}) AS term FROM documents),
+WITH tok AS (SELECT unnest({_TOKS}) AS term FROM documents),
 cnt AS (SELECT term, COUNT(*) AS c FROM tok GROUP BY term),
 top AS (
   SELECT term, c, row_number() OVER (ORDER BY c DESC, term ASC) AS r
@@ -2032,7 +2008,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-10 for query vectors (vec_id % 50 = 0)."""
     emb = _emb(spark, sf_dir)
     q = emb.where(F.col("vec_id") % 50 == 0)
-    return SIM.cosine_topk(q, emb, k=10)
+    return SIM.cosine_topk(q, emb)
 
 
 SQL_COSINE_TOPK = """
@@ -2098,14 +2074,14 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the differential actually checks."""
     emb = _emb(spark, sf_dir)
     q = emb.where(F.col("vec_id") % 50 == 0)
-    return SIM.ann_lsh_topk(q, emb, k=10)
+    return SIM.ann_lsh_topk(q, emb)
 
 
 def _sql_ann_lsh() -> str:
     from .functions.vector import plane_coefficients
 
-    n_planes, k = SIM.LSH_PLANES, 10
-    planes = plane_coefficients(SIM.EMB_DIM, n_planes, "rp")
+    n_planes, k = SIM.LSH_PLANES, SIM.TOPK
+    planes = plane_coefficients(n_planes, "rp")
     rows = ", ".join(
         f"({p}, {i + 1}, {c!r})"
         for p, row in enumerate(planes)
@@ -2175,11 +2151,11 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank) is reproducible in DuckDB and the driver hash-checks it."""
     emb = _emb(spark, sf_dir)
     q = emb.where(F.col("vec_id") % 50 == 0)
-    return SIM.ann_ivf_topk(q, emb, k=10, n_probe=4)
+    return SIM.ann_ivf_topk(q, emb, SIM.IVF_PROBES)
 
 
 def _sql_ann_ivf() -> str:
-    n_cells, n_probe, k = SIM.IVF_CELLS, 4, 10  # q_ann_ivf's geometry
+    n_cells, n_probe, k = SIM.IVF_CELLS, SIM.IVF_PROBES, SIM.TOPK
     sq_n2 = (
         "list_reduce(list_transform({v}, x -> "
         "CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)"
@@ -2242,7 +2218,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing + Arrow-batched byte-level feature
     extraction (length, md5, header bytes; see operators.multimodal)."""
     d = _docs_with_tokens(spark, sf_dir)
-    media = attach_binary_payload(d, "doc_id", "text")
+    media = attach_binary_payload(d)
     feats = extract_media_features(media)
     return feats.select(
         "media_id", F.col("n_bytes").cast("long").alias("n_bytes"),
@@ -2288,7 +2264,7 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc id in its duplicate group, the id a keep-one filter retains."""
     from .operators.graph import connected_components
 
-    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
+    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir))
     return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("component")
     )
@@ -2333,7 +2309,7 @@ def q_neardup_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     shallow, so the cap loses nothing real)."""
     from .operators.graph import bfs_depths
 
-    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
+    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir))
     return bfs_depths(
         pairs, seed_mod=BFS_SEED_MOD, max_depth=BFS_MAX_DEPTH
     ).select(F.col("node").alias("doc_id"), "depth")
@@ -2366,10 +2342,8 @@ def q_doc_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sample: exactly min(20, |stratum|) docs
     per language by content-hash order (operators.sample) — reproducible
     on any engine/partitioning, unlike seeded df.sample()."""
-    from .operators.sample import stratified_sample
-
     d = _docs_with_tokens(spark, sf_dir).select("doc_id", "lang")
-    return stratified_sample(d, ["lang"], "doc_id", 20)
+    return SAMPLE.stratified_sample(d)
 
 
 SQL_SAMPLE_BY_LANG = f"""
@@ -2382,7 +2356,7 @@ r AS (
          ROW_NUMBER() OVER (PARTITION BY lang ORDER BY sh, doc_id) AS rn
   FROM h
 )
-SELECT doc_id, lang FROM r WHERE rn <= 20
+SELECT doc_id, lang FROM r WHERE rn <= {SAMPLE.STRATIFIED_K}
 """
 
 
@@ -2390,15 +2364,13 @@ def q_doc_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-only deterministic ~10% corpus slice by hash threshold
     (operators.sample.hash_sample): no shuffle, no seed, same rows on
     any engine — reproducible dataset lineage."""
-    from .operators.sample import hash_sample
-
     d = _docs_with_tokens(spark, sf_dir).select("doc_id", "lang")
-    return hash_sample(d, "doc_id", 0.1)
+    return SAMPLE.hash_sample(d)
 
 
 SQL_HASH_SAMPLE = f"""
 SELECT doc_id, lang FROM documents
-WHERE {_PORTABLE_HASH.format(s='CAST(doc_id AS VARCHAR)')} < {int(0.1 * (1 << 32))}
+WHERE {_PORTABLE_HASH.format(s='CAST(doc_id AS VARCHAR)')} < {int(SAMPLE.HASH_SAMPLE_FRACTION * (1 << 32))}
 """
 
 
@@ -2430,9 +2402,7 @@ def q_doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         TX.quality_score(F.col("text"), tok=F.col("_tok")).alias("quality"),
     ).transform(stage)
-    return percent_rank_gate(
-        scored, "lang", "quality", "doc_id", 0.75, rank_alias="q_rank"
-    ).select("doc_id", "lang", "quality", "q_rank")
+    return percent_rank_gate(scored).select("doc_id", "lang", "quality", "q_rank")
 
 
 def _sql_quality_expr() -> str:
@@ -2445,23 +2415,19 @@ def _sql_quality_expr() -> str:
 
 
 def _sql_quality_filter() -> str:
+    from .operators.rank import GATE_MIN_RANK
+
     qual = _sql_quality_expr()
     return f"""
-WITH toks AS (SELECT doc_id, lang, text, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, lang, text, {_TOKS} AS t FROM documents),
 scored AS (SELECT doc_id, lang, {qual} AS quality FROM toks),
 ranked AS (
   SELECT doc_id, lang, quality,
          (floor((PERCENT_RANK() OVER (PARTITION BY lang ORDER BY quality ASC, doc_id ASC)) * 1000000.0 + 0.5) / 1000000.0) AS q_rank
   FROM scored
 )
-SELECT doc_id, lang, quality, q_rank FROM ranked WHERE q_rank >= 0.75
+SELECT doc_id, lang, quality, q_rank FROM ranked WHERE q_rank >= {GATE_MIN_RANK}
 """
-
-
-#: Corpus-mixing rates: down-sample the dominant language, keep the rare
-#: ones whole — the standard LLM-pretraining rebalance shape.
-CORPUS_MIX = {"en": 0.3, "zh": 1.0, "de": 0.8}
-CORPUS_MIX_DEFAULT = 0.5
 
 
 def q_doc_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2469,23 +2435,19 @@ def q_doc_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language deterministic keep-rates, map-only, reproducible on any
     engine/partitioning; thresholds nest, so re-weighting up yields a
     superset of the previous mixture."""
-    from .operators.sample import weighted_hash_sample
-
     d = _docs_with_tokens(spark, sf_dir).select("doc_id", "lang")
-    return weighted_hash_sample(
-        d, "lang", "doc_id", CORPUS_MIX, default_fraction=CORPUS_MIX_DEFAULT
-    )
+    return SAMPLE.weighted_hash_sample(d)
 
 
 def _sql_corpus_mix() -> str:
     cases = " ".join(
         f"WHEN '{k}' THEN {int(v * (1 << 32))}"
-        for k, v in sorted(CORPUS_MIX.items())
+        for k, v in sorted(SAMPLE.CORPUS_MIX.items())
     )
     return f"""
 SELECT doc_id, lang FROM documents
 WHERE {_PORTABLE_HASH.format(s='CAST(doc_id AS VARCHAR)')} <
-      CASE lang {cases} ELSE {int(CORPUS_MIX_DEFAULT * (1 << 32))} END
+      CASE lang {cases} ELSE {int(SAMPLE.CORPUS_MIX_DEFAULT * (1 << 32))} END
 """
 
 
@@ -2530,7 +2492,7 @@ def q_doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_TFIDF = f"""
-WITH toks AS (SELECT doc_id, unnest({_toks('text')}) AS term FROM documents),
+WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
 tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
 dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
 scored AS (
@@ -2612,10 +2574,7 @@ def q_clicks_after_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts_us").alias("err_start"),
         (F.col("ts_us") + F.lit(_ERR_WINDOW_US)).alias("err_end"),
     )
-    out = interval_join(
-        clicks, errors, ["user_id"], "ts_us", "err_start", "err_end",
-        bin_width=_ERR_WINDOW_US,  # known constant width: skip the probe job
-    )
+    out = interval_join(clicks, errors, _ERR_WINDOW_US)
     return out.select("user_id", "event_id", "ts_us", "err_event_id")
 
 
@@ -2688,7 +2647,7 @@ def _sql_gopher_quality() -> str:
     punct = "(CASE WHEN length(text) = 0 THEN 0.0 ELSE CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE) / length(text) END)"
     return f"""
 WITH toks AS (
-  SELECT doc_id, lang, text, {_toks('text')} AS t, {_norm('text')} AS nm
+  SELECT doc_id, lang, text, {_TOKS} AS t, {_norm('text')} AS nm
   FROM documents
 ),
 scored AS (
@@ -2743,7 +2702,7 @@ def q_doc_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_repetition_filter() -> str:
     return f"""
-WITH toks AS (SELECT doc_id, lang, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, lang, {_TOKS} AS t FROM documents),
 c AS (
   SELECT doc_id, lang,
          CAST(greatest(len(t) - 2, 0) AS BIGINT) AS n_grams,
@@ -2808,7 +2767,7 @@ def q_doc_pack_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_PACK_WINDOWS = f"""
 WITH t AS (
-  SELECT doc_id, CAST(len({_toks('text')}) AS BIGINT) AS n_tokens,
+  SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
          {_PORTABLE_HASH.format(s='CAST(doc_id AS VARCHAR)')} AS h
   FROM documents
 ),
@@ -2877,7 +2836,7 @@ def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DECONTAMINATE = f"""
-WITH toks AS (SELECT doc_id, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 grams AS (SELECT doc_id, unnest({_SHINGLES.format(t='t')}) AS g FROM toks),
 probe AS (
   SELECT doc_id FROM documents
@@ -2916,11 +2875,9 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     majority label, and purity. Assignment is map-only against a literal
     centroid matrix (operators.kmeans); the profile is two hash
     aggregates over k rows of output — flat at any corpus size. The
-    full iterative Lloyd's trainer is operators.kmeans.lloyd_iterations
-    (convergence pinned by tests/test_kmeans.py; this registered query
-    uses the deterministic seed so the DuckDB twin is expressible)."""
+    seeded single pass is what keeps the DuckDB twin expressible."""
     emb = _emb(spark, sf_dir)
-    cents = KM.initial_centroids(emb, KMEANS_K, allow_fewer=True)
+    cents = KM.initial_centroids(emb, KMEANS_K)
     if not cents:
         return _typed_empty(
             spark,
@@ -3013,7 +2970,7 @@ def q_doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_VOCAB_COVERAGE = f"""
-WITH tok AS (SELECT unnest({_toks('text')}) AS term FROM documents),
+WITH tok AS (SELECT unnest({_TOKS}) AS term FROM documents),
 cnt AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS term_count FROM tok GROUP BY term),
 ranked AS (
   SELECT term, term_count,
@@ -3117,7 +3074,7 @@ SQL_DOC_DATA_CARD = f"""
 SELECT source, lang,
        CAST(grouping(source, lang) AS BIGINT) AS gid,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(len({_toks('text')})) AS BIGINT) AS total_tokens,
+       CAST(SUM(len({_TOKS})) AS BIGINT) AS total_tokens,
        (floor((CAST(SUM(n_chars) AS DOUBLE) / COUNT(*)) * 1000000.0 + 0.5) / 1000000.0) AS avg_chars
 FROM documents GROUP BY ROLLUP(source, lang)
 HAVING COUNT(*) > 0
@@ -3173,7 +3130,7 @@ def q_event_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization Catalyst re-runs the full-data aggregate twice.
     # Its size is bounded (types x elapsed hours), so localCheckpoint
     # buys one full scan total (same pattern as the dedup indexes).
-    hourly = tumbling_stats(ev, "ts", "1 hour", ["event_type"], "value").localCheckpoint()
+    hourly = tumbling_stats(ev).localCheckpoint()
     span = hourly.groupBy("event_type").agg(
         F.min("window_start_s").alias("_lo"), F.max("window_start_s").alias("_hi")
     )
@@ -3355,11 +3312,6 @@ GROUP BY n_name
 """
 
 
-#: SemDeDup semantic-dedup cosine threshold (chosen away from the sf
-#: test data's observed similarity values so the boolean gate can never
-#: flip on a final-ulp engine difference).
-SEMDEDUP_THRESHOLD = 0.35
-
 
 def q_emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (cluster-then-dedup) curation gate over the embedding
@@ -3370,16 +3322,14 @@ def q_emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB twin tractable; at scale k grows ∝ n/target so per-
     cluster gram work stays bounded — see the operator docstring."""
     emb = _emb(spark, sf_dir)
-    cents = KM.initial_centroids(
-        load_table(spark, sf_dir, "embeddings"), KMEANS_K, allow_fewer=True
-    )
+    cents = KM.initial_centroids(load_table(spark, sf_dir, "embeddings"), KMEANS_K)
     if not cents:
         return _typed_empty(
             spark,
             "vec_id long, cluster_id long, kept boolean, "
             "max_prior_sim double",
         )
-    out = SIM.semdedup(emb, cents, threshold=SEMDEDUP_THRESHOLD)
+    out = SIM.semdedup(emb, cents)
     return out.select(
         "vec_id",
         "cluster_id",
@@ -3433,7 +3383,7 @@ prior AS (
   SELECT ib AS vec_id, MAX(s) AS ms FROM sims GROUP BY ib
 )
 SELECT a.vec_id, CAST(a.cid AS BIGINT) AS cluster_id,
-       COALESCE(prior.ms, 0.0) < {SEMDEDUP_THRESHOLD} AS kept,
+       COALESCE(prior.ms, 0.0) < {SIM.SEMDEDUP_THRESHOLD} AS kept,
        round(COALESCE(prior.ms, 0.0), 6) AS max_prior_sim
 FROM a LEFT JOIN prior ON prior.vec_id = a.vec_id
 """
@@ -3446,9 +3396,7 @@ def q_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is holding bucket populations near target or the corpus needs a
     retune before verify work goes quadratic."""
     n = load_table(spark, sf_dir, "embeddings").count()
-    occ = SIM.lsh_bucket_stats(
-        _emb(spark, sf_dir), rows_per_band=SIM.neardup_rows_per_band(n)
-    )
+    occ = SIM.lsh_bucket_stats(_emb(spark, sf_dir), SIM.neardup_rows_per_band(n))
     return occ.select(
         F.col("band").cast("long").alias("band"),
         "n_buckets",
@@ -3472,18 +3420,11 @@ FROM occ GROUP BY band
 """
 
 
-#: PQ geometry: m subspaces × k codewords over the 64-dim embeddings.
-#: m=4/k=16 keeps the DuckDB twin tractable; the operator takes any
-#: (m, k) and at production scale you'd run m=8..16, k=256.
-PQ_M = 4
-PQ_K = 16
-
-
 def q_emb_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encode of the embedding corpus
     (operators.pq): per-vector code array (m log2(k) bits ≡ a 128× cut
     vs float32 at production geometry) + reconstruction error audit.
-    Seed codebooks (n_iters=0) keep the DuckDB twin expressible — the
+    Seed codebooks keep the DuckDB twin expressible — the
     same determinism contract as emb_kmeans, including the same accepted
     risk: the oracle's per-subspace distance SUM is plain double (order-
     dependent), so an argmin could flip only if a subvector sat within
@@ -3492,7 +3433,7 @@ def q_emb_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pq import encode_pq, fit_pq
 
     raw = load_table(spark, sf_dir, "embeddings")
-    books = fit_pq(raw, m=PQ_M, k=PQ_K, n_iters=0)
+    books = fit_pq(raw)
     if not books[0]:
         # empty corpus -> empty seed books -> nothing to encode (the
         # oracle's LIMIT-k cent CTE is empty so it emits 0 rows too)
@@ -3555,7 +3496,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance approximate NN (the third ANN scale path
     next to ann_lsh/ann_ivf — this one compresses the CORPUS, not the
     candidate set). ORACLED as of r09 (completing the set: lsh r08,
-    ivf r09): with seed codebooks (n_iters=0) every stage is
+    ivf r09): with seed codebooks every stage is
     deterministic — subvector→codeword squared distances are
     sequential folds, code assignment is first-min argmin, the ADC
     score folds the m per-subspace table lookups in subspace order —
@@ -3566,7 +3507,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pq import adc_topk, encode_pq, fit_pq
 
     raw = load_table(spark, sf_dir, "embeddings")
-    books = fit_pq(raw, m=PQ_M, k=PQ_K, n_iters=0)
+    books = fit_pq(raw)
     if not books[0]:
         return _typed_empty(
             spark, "query_id long, neighbor_id long, approx_sq_dist double"
@@ -3574,11 +3515,11 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     codes = encode_pq(emb, books)
     q = emb.where(F.col("vec_id") % 50 == 0)
-    return adc_topk(q, codes, books, k=10)
+    return adc_topk(q, codes, books)
 
 
 def _sql_ann_pq() -> str:
-    m, kk, topk = PQ_M, PQ_K, 10
+    m, kk, topk = PQ_M, PQ_K, SIM.TOPK
     subdim = 64 // m
     # per-subspace sequential-fold squared distance — the identical
     # IEEE accumulation order as operators.pq's sq_dist fold
@@ -3803,7 +3744,7 @@ WITH a AS (
   SELECT CASE WHEN {h} < {SPLIT_TRAIN_MAX} THEN 'train'
               WHEN {h} < {SPLIT_VAL_MAX} THEN 'val'
               ELSE 'test' END AS split,
-         CAST(len({_toks('text')}) AS BIGINT) AS tk
+         CAST(len({_TOKS}) AS BIGINT) AS tk
   FROM documents
 ),
 tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents)
@@ -3944,10 +3885,10 @@ _SUBWORD_SQL = f"regexp_extract_all({_norm('text')}, '{TX.SUBWORD_PATTERN}')"
 
 SQL_DOC_SUBWORD_STATS = f"""
 SELECT doc_id,
-       CAST(len({_toks('text')}) AS BIGINT) AS n_ws_tokens,
+       CAST(len({_TOKS}) AS BIGINT) AS n_ws_tokens,
        CAST(len({_SUBWORD_SQL}) AS BIGINT) AS n_subwords,
        {SQL_ROUND6.format(
-    x=f"CAST(len({_SUBWORD_SQL}) AS DOUBLE) / CAST(len({_toks('text')}) AS DOUBLE)"
+    x=f"CAST(len({_SUBWORD_SQL}) AS DOUBLE) / CAST(len({_TOKS}) AS DOUBLE)"
 )} AS subword_ratio
 FROM documents
 """
@@ -4021,7 +3962,7 @@ _CHUNK_HASH = _PORTABLE_HASH.format(
 )
 
 SQL_DOC_CHUNKS = f"""
-WITH toks AS (SELECT doc_id, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 ex AS (
   SELECT doc_id, t,
          (GREATEST(0, len(t) - {CHUNK_TOKENS}) + {CHUNK_STRIDE} - 1)
@@ -4081,7 +4022,7 @@ def q_doc_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_DOC_SOURCE_DRIFT = f"""
 WITH tok AS (
-  SELECT source, unnest({_toks('text')}) AS term FROM documents
+  SELECT source, unnest({_TOKS}) AS term FROM documents
 ),
 st AS (
   SELECT source, term, CAST(COUNT(*) AS BIGINT) AS c_st
@@ -4320,7 +4261,7 @@ def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_partkey")
     avg_qty = (
-        grid_sum_over(F.col("l_quantity"), 0, w).cast("double")
+        grid_sum_over(F.col("l_quantity"), w).cast("double")
         / F.count(F.lit(1)).over(w)
     )
     j = li.withColumn("_avg_qty", avg_qty).where(
@@ -4533,7 +4474,7 @@ def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_UNIGRAM_LOGPROB = f"""
-WITH toks AS (SELECT doc_id, unnest({_toks('text')}) AS term FROM documents),
+WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
 tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
 counts AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS c FROM tf GROUP BY term),
 tot AS (SELECT CAST(SUM(c) AS BIGINT) AS total, CAST(COUNT(*) AS BIGINT) AS v FROM counts),
@@ -4699,7 +4640,7 @@ def q_doc_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("keep").alias("gopher_ok")
     )
     # the component id IS the smallest node id of the component
-    canon_flag = connected_components(DD.minhash_lsh_pairs(d, threshold=0.2)).select(
+    canon_flag = connected_components(DD.minhash_lsh_pairs(d)).select(
         F.col("node").alias("doc_id"),
         (F.col("node") == F.col("component")).alias("_canon"),
     )
@@ -4801,12 +4742,6 @@ FROM p
 """
 
 
-#: logistic-regression hyperparameters for the classifier query —
-#: fixed so the oracle can unroll the same number of GD layers
-LOGREG_ITERS = 10
-LOGREG_LR = 8.0
-
-
 def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier TRAINING as a query (operators.logreg): full-batch
     logistic regression distilling a noisy rule-based quality gate into
@@ -4851,7 +4786,7 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cols = ["f0", "f1", "f2", "f3"]
-    w, _ = logistic_regression_gd(f, cols, "y", n_iter=LOGREG_ITERS, lr=LOGREG_LR)
+    w, _ = logistic_regression_gd(f, cols)
     p = predict_proba(cols, w)
     return f.select(
         "doc_id",
@@ -4862,7 +4797,7 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_quality_classifier() -> str:
-    toks = _toks("text")
+    toks = _TOKS
     r6 = SQL_ROUND6
     d = 4
     sw = _sw_sql(TX.QUALITY_STOPWORDS)
@@ -4960,7 +4895,7 @@ def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_doc_novelty() -> str:
-    shingles = _SHINGLES.format(t=_toks("text"))
+    shingles = _SHINGLES.format(t=_TOKS)
     return f"""
 WITH g AS (
   SELECT doc_id, unnest({shingles}) AS g FROM documents
@@ -5015,14 +4950,9 @@ def _sql_html_extract() -> str:
     )
     return f"""
 WITH h AS (SELECT doc_id, {html} AS html FROM documents),
-e AS (SELECT doc_id, {sql_html_to_text('html')} AS text FROM h)
-SELECT doc_id, text, CAST(len({_toks('text')}) AS BIGINT) AS n_tokens FROM e
+e AS (SELECT doc_id, {sql_html_to_text()} AS text FROM h)
+SELECT doc_id, text, CAST(len({_TOKS}) AS BIGINT) AS n_tokens FROM e
 """
-
-
-#: PageRank sweeps for the near-dup-graph centrality query (fixed so
-#: the oracle can unroll the same number of CTE layers)
-PAGERANK_ITERS = 3
 
 
 def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5034,8 +4964,8 @@ def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     result hash-matches the unrolled SQL twin exactly."""
     from .operators.graph import pagerank
 
-    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
-    pr = pagerank(pairs, n_iter=PAGERANK_ITERS)
+    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir))
+    pr = pagerank(pairs)
     return pr.select(
         F.col("node").alias("doc_id"),
         F.col("deg").cast("long").alias("deg"),
@@ -5142,7 +5072,7 @@ def q_doc_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_mixture_weights() -> str:
-    toks = _toks("text")
+    toks = _TOKS
     return f"""
 WITH per AS (
   SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -5221,7 +5151,7 @@ WITH u AS (
     END AS url
   FROM documents
 )
-SELECT doc_id, url, {sql_normalize_url('url')} AS canon_url FROM u
+SELECT doc_id, url, {sql_normalize_url()} AS canon_url FROM u
 """
 
 
@@ -5322,7 +5252,7 @@ def q_doc_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit(" v2"))
         ).otherwise(F.col("text")),
     )
-    return snapshot_diff(old, new, ["doc_id"], compare_cols=["text", "lang", "source"])
+    return snapshot_diff(old, new)
 
 
 def _sql_version_diff() -> str:
@@ -5413,8 +5343,8 @@ def q_doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_BIGRAM_LOGPROB = f"""
 WITH toks AS (
-  SELECT doc_id, generate_subscripts({_toks('text')}, 1) AS i,
-         unnest({_toks('text')}) AS term
+  SELECT doc_id, generate_subscripts({_TOKS}, 1) AS i,
+         unnest({_TOKS}) AS term
   FROM documents
 ),
 pairs AS (
@@ -5492,7 +5422,7 @@ def _sql_domain_quality() -> str:
     qual = _sql_quality_expr()
     return f"""
 WITH toks AS (
-  SELECT doc_id, text, {_toks('text')} AS t,
+  SELECT doc_id, text, {_TOKS} AS t,
          'site' || CAST(doc_id % {DOMAIN_BUCKETS} AS VARCHAR) || '.example' AS domain
   FROM documents
 ),
@@ -5529,7 +5459,7 @@ def q_doc_neardup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import connected_components
 
     docs = _docs_with_tokens(spark, sf_dir)
-    pairs = DD.minhash_lsh_pairs(docs, threshold=0.2)
+    pairs = DD.minhash_lsh_pairs(docs)
     comp = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("_rep")
     )
@@ -5577,7 +5507,7 @@ def q_emb_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.rank import percent_rank_all
 
     emb = _emb(spark, sf_dir)
-    cents = KM.initial_centroids(emb, KMEANS_K, allow_fewer=True)
+    cents = KM.initial_centroids(emb, KMEANS_K)
     if not cents:
         return _typed_empty(
             spark,
@@ -5587,9 +5517,7 @@ def q_emb_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = KM.assign_clusters(emb, cents).select(
         "vec_id", "cluster_id", round6(F.col("_sqd")).alias("sq_dist")
     )
-    ranked = percent_rank_all(
-        assigned, "cluster_id", "sq_dist", "vec_id", rank_alias="d_rank"
-    )
+    ranked = percent_rank_all(assigned)
     return ranked.select(
         "vec_id",
         "cluster_id",
@@ -5678,7 +5606,7 @@ def _sql_blocklist_filter() -> str:
     bl = ", ".join(f"'{w}'" for w in BLOCKLIST_TOKENS)
     return f"""
 WITH t AS (
-  SELECT doc_id, {_toks('text')} AS toks FROM documents
+  SELECT doc_id, {_TOKS} AS toks FROM documents
 ),
 c AS (
   SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -5749,8 +5677,8 @@ def q_doc_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_boilerplate_segments() -> str:
     return f"""
 WITH toks AS (
-  SELECT doc_id, generate_subscripts({_toks('text')}, 1) AS i,
-         unnest({_toks('text')}) AS term
+  SELECT doc_id, generate_subscripts({_TOKS}, 1) AS i,
+         unnest({_TOKS}) AS term
   FROM documents
 ),
 seg AS (
@@ -6184,9 +6112,7 @@ def q_events_changelog_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         round6(F.col("value")).alias("value"),
     )
-    return apply_changelog(
-        ev, ["user_id"], ["ts_us", "event_id"], "op", ["event_id", "ts_us", "value"]
-    )
+    return apply_changelog(ev)
 
 
 SQL_CHANGELOG_STATE = """
@@ -6294,7 +6220,7 @@ def q_neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (small) verified near-dup pair list, never on the corpus; wedge
     volume is Σ deg², bounded because LSH verification caps the edge
     list. No cartesian anywhere."""
-    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
+    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir))
     e = pairs.select(
         F.col("id_a").alias("lo"), F.col("id_b").alias("hi")
     )  # already lo < hi
@@ -6427,10 +6353,10 @@ def _sql_doc_bm25() -> str:
     contrib = r6.format(x=f"{idf} * (tf * {BM25_K1 + 1.0}) / {denom}")
     return f"""
 WITH dl AS (
-  SELECT doc_id, CAST(len({_toks('text')}) AS BIGINT) AS dl
-  FROM documents WHERE len({_toks('text')}) > 0
+  SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS dl
+  FROM documents WHERE len({_TOKS}) > 0
 ),
-toks AS (SELECT doc_id, unnest({_toks('text')}) AS term FROM documents),
+toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
 tf AS (
   SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
   FROM toks WHERE term IN ({terms}) GROUP BY doc_id, term
@@ -6802,7 +6728,7 @@ def _sql_doc_phrase_search() -> str:
     )
     terms = ", ".join(f"'{t}'" for t in PHRASE_TERMS)
     return f"""
-WITH toks AS (SELECT doc_id, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 pos0 AS (
   SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS term
   FROM toks
@@ -7586,7 +7512,7 @@ def q_neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     list, never the corpus."""
     from .operators.graph import k_core
 
-    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
+    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir))
     return k_core(pairs, KCORE_K, KCORE_ROUNDS).select(
         F.col("node").alias("doc_id"), F.col("deg").alias("core_deg")
     )
@@ -7628,11 +7554,11 @@ def q_neardup_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥ 0.5, no df-cap recall caveat. The oracle is the NAIVE inverted
     index + full Jaccard (a genuinely independent computation), which
     the prefix-filtered plan must reproduce exactly."""
-    return DD.prefix_filter_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.5)
+    return DD.prefix_filter_pairs(_docs_with_tokens(spark, sf_dir))
 
 
 SQL_PREFIX_PAIRS = f"""
-WITH toks AS (SELECT doc_id, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 grams AS (SELECT doc_id, unnest({_SHINGLES.format(t='t')}) AS g FROM toks),
 sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM grams GROUP BY doc_id),
 pr AS (
@@ -7645,7 +7571,7 @@ jac AS (
          {SQL_ROUND6.format(x='CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter)')} AS jaccard
   FROM pr JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
 )
-SELECT * FROM jac WHERE jaccard >= 0.5
+SELECT * FROM jac WHERE jaccard >= {DD.PREFIX_JACCARD}
 """
 
 
@@ -7654,13 +7580,11 @@ def q_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     within a blocking key (first normalized token), compare each doc to
     its next 3 neighbors in sort order, keep shingle-Jaccard ≥ 0.3 —
     O(n·w) comparisons, window partitioned per block."""
-    return DD.sorted_neighborhood_pairs(
-        _docs_with_tokens(spark, sf_dir), window=3, threshold=0.3
-    )
+    return DD.sorted_neighborhood_pairs(_docs_with_tokens(spark, sf_dir))
 
 
 SQL_SORTED_NEIGHBORHOOD = f"""
-WITH toks AS (SELECT doc_id, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 grams AS (SELECT doc_id, unnest({_SHINGLES.format(t='t')}) AS g FROM toks),
 arrs AS (
   SELECT doc_id, list(g ORDER BY g) AS arr, CAST(COUNT(*) AS BIGINT) AS n
@@ -7681,14 +7605,14 @@ rn AS (
 ),
 pairs AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(b.r - a.r AS BIGINT) AS gap
-  FROM rn a JOIN rn b ON b.blk = a.blk AND b.r BETWEEN a.r + 1 AND a.r + 3
+  FROM rn a JOIN rn b ON b.blk = a.blk AND b.r BETWEEN a.r + 1 AND a.r + {DD.SN_WINDOW}
 ),
 jac AS (
   SELECT id_a, id_b, gap,
          {SQL_ROUND6.format(x='CAST(len(list_intersect(pa.arr, pb.arr)) AS DOUBLE) / (pa.n + pb.n - len(list_intersect(pa.arr, pb.arr)))')} AS jaccard
   FROM pairs JOIN arrs pa ON pa.doc_id = id_a JOIN arrs pb ON pb.doc_id = id_b
 )
-SELECT * FROM jac WHERE jaccard >= 0.3
+SELECT * FROM jac WHERE jaccard >= {DD.SN_JACCARD}
 """
 
 
@@ -8061,7 +7985,7 @@ def q_order_price_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("_cents"),
     )
-    cells = build_rank_sketch(orders, "o_orderpriority", "_cents")
+    cells = build_rank_sketch(orders)
     cell_rows = cells.collect()
     # r12: per-group totals fall out of the sketch itself — every
     # (non-null-value) row lands in exactly one bucket of each
@@ -8078,14 +8002,7 @@ def q_order_price_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in cell_rows:
         if r["lvl"] == 0 and r["j"] == 0:
             totals[r["g"]] = totals.get(r["g"], 0) + r["c"]
-    return sketch_quantiles(
-        spark,
-        cell_rows,
-        totals,
-        [("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)],
-        group_alias="o_orderpriority",
-        count_alias="n_orders",
-    )
+    return sketch_quantiles(spark, cell_rows, totals)
 
 
 def _sql_rank_sketch() -> str:
@@ -8120,6 +8037,7 @@ def _sql_rank_sketch() -> str:
         QSKETCH_BRANCH_BITS,
         QSKETCH_DEPTH,
         QSKETCH_LEVELS,
+        QSKETCH_QUANTILES,
         QSKETCH_WIDTH,
     )
 
@@ -8205,10 +8123,10 @@ def _sql_rank_sketch() -> str:
         f"JOIN {hb} h ON h.lvl = t.lvl AND h.bucket = t.bucket "
         "GROUP BY 1, 2, 3, 4)"
     )
+    qq = ", ".join(f"('{name}', {num}, {den})" for name, num, den in QSKETCH_QUANTILES)
     ctes.append(
         "targets AS (SELECT g, qname, (num * n + den - 1) // den AS remaining "
-        "FROM totals CROSS JOIN (VALUES ('p50', 1, 2), ('p90', 9, 10), "
-        "('p99', 99, 100)) AS qq(qname, num, den))"
+        f"FROM totals CROSS JOIN (VALUES {qq}) AS qq(qname, num, den))"
     )
     ctes.append(
         f"st{levels} AS (SELECT g, qname, CAST(0 AS BIGINT) AS p, remaining "
@@ -8271,7 +8189,7 @@ def q_neardup_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edge list = the LSH-verified pairs, never the corpus."""
     from .operators.graph import label_propagation
 
-    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir), threshold=0.2)
+    pairs = DD.minhash_lsh_pairs(_docs_with_tokens(spark, sf_dir))
     return label_propagation(pairs, LPA_ROUNDS).select(
         F.col("node").alias("doc_id"), F.col("label").cast("long").alias("community")
     )
@@ -8443,7 +8361,7 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_token_pmi() -> str:
     base = _SQL_TOKEN_PAIRS_CTES.format(
-        toks_expr=_toks("text"),
+        toks_expr=_TOKS,
         window=PMI_COOC_WINDOW,
         min_pairs=PMI_MIN_PAIRS,
     )
@@ -8477,7 +8395,7 @@ def q_token_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _token_pair_counts(spark, sf_dir).select(
         F.col("tok_a").alias("id_a"), F.col("tok_b").alias("id_b")
     )
-    pr = pagerank(edges, n_iter=PAGERANK_ITERS)
+    pr = pagerank(edges)
     return pr.select(
         F.col("node").alias("token"),
         F.col("deg").cast("long").alias("deg"),
@@ -8488,7 +8406,7 @@ def q_token_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_token_textrank() -> str:
     return _sql_pagerank_chain(
         _SQL_TOKEN_PAIRS_CTES.format(
-            toks_expr=_toks("text"),
+            toks_expr=_TOKS,
             window=PMI_COOC_WINDOW,
             min_pairs=PMI_MIN_PAIRS,
         ),
@@ -8832,17 +8750,15 @@ def q_event_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_event_cms() -> str:
-    def bucket(j: int, key: str) -> str:
-        return f"({_PORTABLE_HASH.format(s=f_concat(j, key))} % {CMS_WIDTH})"
-
-    def f_concat(j: int, key: str) -> str:
-        return f"concat('{j}:', {key})"
+    def bucket(j: int) -> str:
+        key = f"concat('{j}:', k)"
+        return f"({_PORTABLE_HASH.format(s=key)} % {CMS_WIDTH})"
 
     expanded = " UNION ALL ".join(
-        f"SELECT {j} AS j, {bucket(j, 'k')} AS b FROM ev" for j in range(CMS_DEPTH)
+        f"SELECT {j} AS j, {bucket(j)} AS b FROM ev" for j in range(CMS_DEPTH)
     )
     probe = " UNION ALL ".join(
-        f"SELECT k, {j} AS j, {bucket(j, 'k')} AS b FROM keys"
+        f"SELECT k, {j} AS j, {bucket(j)} AS b FROM keys"
         for j in range(CMS_DEPTH)
     )
     return f"""
@@ -9414,7 +9330,7 @@ def _sql_doc_token_entropy() -> str:
     p = "(CAST(_tf AS DOUBLE) / _n)"
     term_h = SQL_ROUND6.format(x=f"-({p} * ln({p}))")
     return f"""
-WITH toks AS (SELECT doc_id, unnest({_toks('text')}) AS term FROM documents),
+WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
 tf AS (
   SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS _tf
   FROM toks GROUP BY 1, 2
@@ -9434,25 +9350,17 @@ GROUP BY tf.doc_id
 """
 
 
-#: Containment threshold for doc_containment_dups.
-CONTAINMENT_THRESHOLD = 0.5
-
-
 def q_doc_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed n-gram containment pairs (operators.dedup
     .containment_pairs): |A∩B|/|A| — the asymmetric near-dup measure
     that catches a short doc copied INSIDE a long one, which symmetric
     Jaccard dilutes away. Rare-shingle candidate generation (df-capped,
     skew-safe) + exact candidate-bounded intersection."""
-    return DD.containment_pairs(
-        _docs_with_tokens(spark, sf_dir),
-        threshold=CONTAINMENT_THRESHOLD,
-        max_doc_freq=NGRAM_QUERY_MAX_DOC_FREQ,
-    )
+    return DD.containment_pairs(_docs_with_tokens(spark, sf_dir))
 
 
 SQL_DOC_CONTAINMENT = f"""
-WITH toks AS (SELECT doc_id, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 grams AS (SELECT doc_id, unnest({_SHINGLES.format(t='t')}) AS g FROM toks),
 dfreq AS (SELECT g, COUNT(*) AS df FROM grams GROUP BY g),
 cand AS (
@@ -9478,7 +9386,7 @@ scored AS (
   JOIN sizes sb ON sb.doc_id = id_b
 )
 SELECT * FROM scored
-WHERE GREATEST(c_a_in_b, c_b_in_a) >= {CONTAINMENT_THRESHOLD}
+WHERE GREATEST(c_a_in_b, c_b_in_a) >= {DD.CONTAINMENT_THRESHOLD}
 """
 
 
@@ -9541,10 +9449,9 @@ HAVING SUM(b) > 0
 """
 
 
-#: Range-search parameters: all neighbors of the first RANGE_N_QUERIES
-#: vectors within cosine >= RANGE_TAU.
+#: Range search: all neighbors of the first RANGE_N_QUERIES vectors
+#: within cosine >= SIM.RANGE_TAU.
 RANGE_N_QUERIES = 3
-RANGE_TAU = 0.2
 
 
 def q_emb_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9557,7 +9464,7 @@ def q_emb_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = load_table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") < RANGE_N_QUERIES
     )
-    return SIM.cosine_range_search(q, emb, threshold=RANGE_TAU)
+    return SIM.cosine_range_search(q, emb)
 
 
 SQL_EMB_RANGE_SEARCH = f"""
@@ -9587,7 +9494,7 @@ cos AS (
 )
 SELECT qid AS query_id, nid AS neighbor_id,
        {SQL_ROUND6.format(x='sim')} AS cosine_sim
-FROM cos WHERE {SQL_ROUND6.format(x='sim')} >= {RANGE_TAU}
+FROM cos WHERE {SQL_ROUND6.format(x='sim')} >= {SIM.RANGE_TAU}
 """
 
 
@@ -9621,8 +9528,8 @@ def q_user_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_type", F.col("user_id").cast("string").alias("_u")
     )
-    regs = hll_registers(events, ["event_type"], F.col("_u"))
-    est = hll_estimate(regs, ["event_type"])
+    regs = hll_registers(events)
+    est = hll_estimate(regs)
     exact = events.groupBy("event_type").agg(
         F.countDistinct("_u").alias("n_exact")
     )
@@ -9740,7 +9647,7 @@ def _sql_doc_ngram_contamination() -> str:
     split = _PORTABLE_HASH.format(s="CAST(doc_id AS VARCHAR) || ':cb'")
     return f"""
 WITH toks AS (
-  SELECT doc_id, {_toks('text')} AS t,
+  SELECT doc_id, {_TOKS} AS t,
          ({split} % {CONTAM_MOD} = 0) AS _bench
   FROM documents
 ),
@@ -9761,7 +9668,6 @@ FROM tr GROUP BY doc_id
 #: matryoshka truncation: score with the first 32 of 64 dims — the MRL
 #: deployment trade (half the index bytes) whose quality this audits.
 MRL_DIM = 32
-MRL_K = 10
 
 
 def q_emb_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9778,13 +9684,13 @@ def q_emb_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-overlap probe still reports 0."""
     emb = _emb(spark, sf_dir)
     probes = F.col("vec_id") % 50 == 0
-    full = SIM.cosine_topk(emb.where(probes), emb, k=MRL_K).select(
+    full = SIM.cosine_topk(emb.where(probes), emb).select(
         "query_id", "neighbor_id"
     )
     emb32 = emb.select(
         "vec_id", F.slice(F.col("embedding"), 1, MRL_DIM).alias("embedding")
     )
-    trunc = SIM.cosine_topk(emb32.where(probes), emb32, k=MRL_K).select(
+    trunc = SIM.cosine_topk(emb32.where(probes), emb32).select(
         "query_id", "neighbor_id"
     )
     counts = full.join(trunc, ["query_id", "neighbor_id"]).groupBy(
@@ -9795,7 +9701,7 @@ def q_emb_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.join(counts, "query_id", "left").select(
         "query_id",
         n_overlap.alias("n_overlap"),
-        round6(n_overlap / F.lit(float(MRL_K))).alias("recall_at_10"),
+        round6(n_overlap / F.lit(float(SIM.TOPK))).alias("recall_at_10"),
     )
 
 
@@ -9831,7 +9737,7 @@ sel_{name} AS (
     SELECT qid, nid,
            row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid ASC) AS rn
     FROM s_{name}
-  ) WHERE rn <= {MRL_K}
+  ) WHERE rn <= {SIM.TOPK}
 )"""
 
     return f"""
@@ -9844,7 +9750,7 @@ ov AS (
 ),
 base AS (SELECT DISTINCT vec_id AS qid FROM embeddings WHERE vec_id % 50 = 0)
 SELECT qid AS query_id, CAST(COALESCE(n, 0) AS BIGINT) AS n_overlap,
-       {SQL_ROUND6.format(x=f'COALESCE(n, 0) / {float(MRL_K)}')} AS recall_at_10
+       {SQL_ROUND6.format(x=f'COALESCE(n, 0) / {float(SIM.TOPK)}')} AS recall_at_10
 FROM base LEFT JOIN ov USING (qid)
 """
 
@@ -9920,7 +9826,7 @@ def _sql_doc_dsir_weights() -> str:
         "tf * (ln((c_t + 1.0) / (n_t + v)) - ln((c_s + 1.0) / (n_s + v)))"
     )
     return f"""
-WITH toks AS (SELECT doc_id, lang, unnest({_toks('text')}) AS term FROM documents),
+WITH toks AS (SELECT doc_id, lang, unnest({_TOKS}) AS term FROM documents),
 tf AS (
   SELECT doc_id, lang, term, CAST(COUNT(*) AS BIGINT) AS tf
   FROM toks GROUP BY 1, 2, 3
@@ -10290,7 +10196,7 @@ def q_event_hopping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side by Catalyst's TimeWindowing rule (no join), so the single
     group-by exchange is the whole shuffle story at any scale."""
     ev = load_table(spark, sf_dir, "events")
-    return hopping_stats(ev, "ts", "2 hours", "1 hour", ["event_type"], "value")
+    return hopping_stats(ev)
 
 
 SQL_HOPPING = f"""
@@ -10393,7 +10299,7 @@ def q_doc_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_DOC_GINI = f"""
 WITH hist AS (
   SELECT CAST(len(CASE WHEN length({_norm('text')}) = 0 THEN []
-                       ELSE {_toks('text')} END) AS BIGINT) AS len,
+                       ELSE {_TOKS} END) AS BIGINT) AS len,
          CAST(count(*) AS BIGINT) AS c
   FROM documents GROUP BY 1
 ), slab AS (
@@ -10473,7 +10379,7 @@ def q_event_trailing_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from .operators.windows import trailing_range_stats
 
-    return trailing_range_stats(ev, "user_id", "ts_s", "value", 3600)
+    return trailing_range_stats(ev)
 
 
 SQL_TRAILING_WINDOW = f"""
@@ -10570,7 +10476,8 @@ def q_doc_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: training touches the corpus once (distinct-word collapse);
     EM cost rides the word vocabulary; the vocab broadcast is ≤
-    UNIGRAM_VOCAB rows of driver metadata; encode is map-only."""
+    UNIGRAM_VOCAB (operators.unigram) rows of driver metadata; encode is
+    map-only."""
     from .operators.staging import stage
     from .operators.unigram import em_train, viterbi_encode, word_counts
 
@@ -10578,21 +10485,15 @@ def q_doc_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # STAGED (r12): the distinct-word table feeds the seed-piece pass
     # AND every EM iteration's mapInPandas — un-staged, each of those
     # re-ran the corpus explode + word aggregate through its lineage
-    # (3 corpus passes for iters=2). One pass; EM re-reads the bounded
-    # (word, n) checkpoint.
-    vocab = em_train(
-        word_counts(docs).transform(stage),
-        max_piece_len=6,
-        max_pieces=UNIGRAM_SEED_PIECES,
-        vocab_size=UNIGRAM_VOCAB,
-        iters=2,
-    )
+    # (3 corpus passes for 2 EM rounds). One pass; EM re-reads the
+    # bounded (word, n) checkpoint.
+    vocab = em_train(word_counts(docs).transform(stage))
     if not vocab:
         return _typed_empty(
             spark,
             "doc_id long, n_words long, n_pieces long, pieces_per_word double",
         )
-    enc = viterbi_encode(docs, "text", vocab, max_piece_len=6)
+    enc = viterbi_encode(docs, vocab)
     n_words = F.size(TX.tokens(F.col("text")))
     return enc.select(
         "doc_id",
@@ -10602,10 +10503,6 @@ def q_doc_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size("pieces") / F.greatest(n_words, F.lit(1))
         ).alias("pieces_per_word"),
     )
-
-
-UNIGRAM_SEED_PIECES = 256
-UNIGRAM_VOCAB = 96
 
 
 #: Misra-Gries summary capacity for the token heavy-hitter query —
@@ -10634,12 +10531,12 @@ def q_doc_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("token") != "")
     from .operators.heavy import heavy_hitters_exact
 
-    return heavy_hitters_exact(toks, "token", MG_HEAVY_K)
+    return heavy_hitters_exact(toks, MG_HEAVY_K)
 
 
 SQL_TOKEN_HEAVY_HITTERS = f"""
 WITH toks AS (
-  SELECT unnest({_toks('text')}) AS token FROM documents
+  SELECT unnest({_TOKS}) AS token FROM documents
   WHERE length({_norm('text')}) > 0
 ), tot AS (
   SELECT count(*) AS n FROM toks WHERE token <> ''
@@ -10754,8 +10651,8 @@ def q_doc_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_KN_LOGPROB = f"""
 WITH toks AS (
-  SELECT doc_id, generate_subscripts({_toks('text')}, 1) AS i,
-         unnest({_toks('text')}) AS term
+  SELECT doc_id, generate_subscripts({_TOKS}, 1) AS i,
+         unnest({_TOKS}) AS term
   FROM documents
 ),
 pairs AS (
@@ -11790,7 +11687,7 @@ def q_token_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_CHI2_DRIFT = f"""
 WITH toks AS (
-  SELECT unnest({_toks('text')}) AS token,
+  SELECT unnest({_TOKS}) AS token,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS en
   FROM documents
 ),
@@ -12550,12 +12447,7 @@ def q_part_price_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.skyline import skyline_points_2d
 
     part = load_table(spark, sf_dir, "part")
-    sky = skyline_points_2d(
-        part.select("p_retailprice", "p_size"),
-        x_col="p_retailprice",
-        y_col="p_size",
-        bucket_width=100.0,
-    )
+    sky = skyline_points_2d(part.select("p_retailprice", "p_size"))
     return part.join(
         F.broadcast(sky), ["p_retailprice", "p_size"]
     ).select("p_partkey", "p_brand", "p_retailprice", "p_size")
@@ -12916,7 +12808,7 @@ def q_doc_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_quality_auc() -> str:
     auc = "(CAST(r1x2 AS DOUBLE) - n1d * (n1d + 1)) / (2.0 * n1d * n0d)"
     return f"""
-WITH toks AS (SELECT lang, text, {_toks('text')} AS t FROM documents),
+WITH toks AS (SELECT lang, text, {_TOKS} AS t FROM documents),
 lab AS (
   SELECT {_sql_quality_expr()} AS score,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos

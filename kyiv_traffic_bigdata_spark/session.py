@@ -12,11 +12,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: Local cores and default shuffle partitions: the CPUs this process may
+#: run on, unless the SPARK_GRAFT_CPUS deployment override says otherwise.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
-    app_name: str = "kyiv_traffic_bigdata_spark",
+    app_name: str,
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
@@ -31,14 +33,10 @@ def get_spark(
       * UTC session time zone so timestamps compare bit-for-bit against
         UTC-naive engines (DuckDB oracle) and across clusters.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .master(master or f"local[{CPUS}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -77,7 +77,7 @@ def union_body(clauses: Iterable[str]) -> str:
 
 
 def overpass_query(
-    body: str, timeout_s: int = QUERY_TIMEOUT_S, include_geometry: bool = True
+    body: str, timeout_s: int, include_geometry: bool
 ) -> str:
     """Full OverpassQL text (reference OverpassQueryBuilder.build,
     importer.py:92-100): global KYIV_BBOX_NARROW header, body,
@@ -278,7 +278,7 @@ class OverpassHTTPError(Exception):
     """Non-2xx from the Overpass endpoint (reference raise_for_status,
     importer.py:122-133)."""
 
-    def __init__(self, status: int, body: str = ""):
+    def __init__(self, status: int, body: str):
         self.status = status
         super().__init__(f"Overpass HTTP {status}: {body[:200]}")
 
@@ -352,16 +352,15 @@ class OverpassClient:
             raise OverpassHTTPError(status, text)
         return json.loads(text)
 
-    def fetch_dataset(self, name: str, out_path: str | None = None) -> dict:
-        """Fetch one of the six reference datasets (dataset_queries);
-        optionally spool the raw response to ``out_path`` — the file
+    def fetch_dataset(self, name: str, out_path: str) -> dict:
+        """Fetch one of the six reference datasets (dataset_queries) and
+        spool the raw response to ``out_path`` — the file
         ``read_osm_elements`` ingests, so live fetch and offline replay
         share one scan path."""
         queries = dataset_queries()
         if name not in queries:
             raise KeyError(f"unknown dataset {name!r}; one of {sorted(queries)}")
         resp = self.execute(queries[name])
-        if out_path:
-            with open(out_path, "w", encoding="utf-8") as fh:
-                json.dump(resp, fh, ensure_ascii=False, indent=2)
+        with open(out_path, "w", encoding="utf-8") as fh:
+            json.dump(resp, fh, ensure_ascii=False, indent=2)
         return resp

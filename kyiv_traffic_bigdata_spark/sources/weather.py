@@ -36,9 +36,7 @@ def weather_df_from_payload(spark: SparkSession, payload: dict) -> DataFrame:
 
 
 def fetch_weather_json(
-    start_date: str = "2026-01-01",
-    end_date: str = "2026-01-07",
-    timeout_s: int = 30,
+    start_date: str, end_date: str, timeout_s: int = 30
 ):  # pragma: no cover - network path, exercised manually
     """Driver-side REST fetch (reference extract.py:24-58). Offline-safe:
     raises RuntimeError when the network is unavailable. Location: Kyiv

@@ -121,7 +121,7 @@ class SocketIOStateMachine:
       parser may still salvage) → delivered downstream.
     """
 
-    def __init__(self, ping_interval_s: float = 25.0, clock=time.monotonic):
+    def __init__(self, ping_interval_s: float, clock=time.monotonic):
         self.ping_interval = ping_interval_s
         self._clock = clock
         self.connected = False
@@ -203,7 +203,7 @@ class SessionPolicy:
     def record_success(self) -> None:
         self.consecutive_failures = 0
 
-    def record_failure(self, http_status: int | None = None) -> bool:
+    def record_failure(self, http_status: int | None) -> bool:
         """Returns True when the session must be refreshed now."""
         self.consecutive_failures += 1
         if http_status == 403 or self.consecutive_failures >= self.MAX_FAILURES:

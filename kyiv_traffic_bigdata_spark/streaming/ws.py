@@ -65,7 +65,7 @@ def accept_key(key: str) -> str:
     return base64.b64encode(digest).decode("ascii")
 
 
-def build_handshake(host: str, resource: str, key: str, origin: str | None = None) -> bytes:
+def build_handshake(host: str, resource: str, key: str, origin: str | None) -> bytes:
     """Client upgrade request (RFC 6455 §4.1)."""
     lines = [
         f"GET {resource} HTTP/1.1",
@@ -197,7 +197,7 @@ class WSConnection:
     def __init__(
         self,
         url: str,
-        timeout_s: float = 10.0,
+        timeout_s: float,
         origin: str | None = None,
         ssl_context: ssl.SSLContext | None = None,
     ):

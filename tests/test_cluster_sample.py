@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from kyiv_traffic_bigdata_spark.operators.graph import connected_components
 from kyiv_traffic_bigdata_spark.operators.sample import (
+    STRATIFIED_K,
     hash_sample,
     sample_hash,
     stratified_sample,
@@ -41,29 +42,28 @@ def test_components_raises_without_convergence(spark):
 def test_stratified_sample_exact_counts_and_determinism(spark):
     rows = [(i, "en" if i % 3 else "uk") for i in range(100)]
     df = spark.createDataFrame(rows, "doc_id long, lang string")
-    s1 = stratified_sample(df, ["lang"], "doc_id", 10)
-    s2 = stratified_sample(df.repartition(7), ["lang"], "doc_id", 10)
+    s1 = stratified_sample(df)
+    s2 = stratified_sample(df.repartition(7))
     got1 = sorted((r.lang, r.doc_id) for r in s1.collect())
     got2 = sorted((r.lang, r.doc_id) for r in s2.collect())
     assert got1 == got2  # partitioning-independent
     by_lang = {}
     for lang, _ in got1:
         by_lang[lang] = by_lang.get(lang, 0) + 1
-    assert by_lang == {"en": 10, "uk": 10}
+    assert by_lang == {"en": STRATIFIED_K, "uk": STRATIFIED_K}
     # small stratum: takes everything it has
     tiny = spark.createDataFrame([(1, "de"), (2, "de")], "doc_id long, lang string")
-    assert stratified_sample(tiny, ["lang"], "doc_id", 10).count() == 2
+    assert stratified_sample(tiny).count() == 2
 
 
 def test_hash_sample_fraction_and_stability(spark):
     df = spark.range(0, 10_000).withColumnRenamed("id", "doc_id")
-    out = hash_sample(df, "doc_id", 0.1)
+    out = hash_sample(df)
     n = out.count()
     assert 800 <= n <= 1200  # ~10% of 10k, md5-uniform
-    # deterministic: same rows again, and a subset of a larger fraction
+    # deterministic: same rows again, on any partitioning
     assert out.count() == n
-    bigger = hash_sample(df, "doc_id", 0.2)
-    assert out.join(bigger, "doc_id", "left_anti").count() == 0
+    assert hash_sample(df.repartition(7)).join(out, "doc_id", "left_anti").count() == 0
 
 
 def test_sample_hash_matches_portable_recipe(spark):
@@ -77,22 +77,19 @@ def test_sample_hash_matches_portable_recipe(spark):
 
 def test_weighted_hash_sample_rates_and_nesting(spark):
     """Per-stratum keep-rates land near target, unknown strata use the
-    default, and raising a rate yields a superset (threshold nesting)."""
+    default, and a larger rate yields a superset (threshold nesting):
+    every CORPUS_MIX rate is at least HASH_SAMPLE_FRACTION, so the hash
+    sample sits inside the mix."""
     from kyiv_traffic_bigdata_spark.operators.sample import weighted_hash_sample
 
-    rows = [(i, ["a", "b", "c"][i % 3]) for i in range(3000)]
+    rows = [(i, ["en", "zh", "xx"][i % 3]) for i in range(3000)]
     df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = weighted_hash_sample(
-        df, "lang", "doc_id", {"a": 0.2, "b": 1.0}, default_fraction=0.0
-    )
+    out = weighted_hash_sample(df)
     by = {r.lang: r.n for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert by.get("c", 0) == 0  # default 0: stratum dropped
-    assert by["b"] == 1000  # fraction 1.0 keeps everything
-    assert 120 <= by["a"] <= 280  # ~200 of 1000 at 0.2, md5-uniform
-    bigger = weighted_hash_sample(
-        df, "lang", "doc_id", {"a": 0.6, "b": 1.0}, default_fraction=0.1
-    )
-    assert out.join(bigger, ["doc_id"], "left_anti").count() == 0  # nested
+    assert by["zh"] == 1000  # fraction 1.0 keeps everything
+    assert 220 <= by["en"] <= 380  # ~300 of 1000 at 0.3, md5-uniform
+    assert 420 <= by["xx"] <= 580  # unknown language: the 0.5 default
+    assert hash_sample(df).join(out, ["doc_id"], "left_anti").count() == 0  # nested
 
 
 def test_operators_tolerate_empty_inputs(spark):
@@ -118,16 +115,14 @@ def test_operators_tolerate_empty_inputs(spark):
     no_edges = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(no_edges).count() == 0
     no_rows = spark.createDataFrame([], "doc_id long, lang string")
-    assert stratified_sample(no_rows, ["lang"], "doc_id", 5).count() == 0
-    assert weighted_hash_sample(no_rows, "lang", "doc_id", {"en": 1.0}).count() == 0
-    pts = spark.createDataFrame([], "k long, ts long")
-    ivs = spark.createDataFrame([(1, 0, 10)], "k long, lo long, hi long")
-    assert interval_join(pts, ivs, ["k"], "ts", "lo", "hi", bin_width=5).count() == 0
-    # empty INTERVALS side must also survive the auto-width probe (max of
-    # an empty frame is NULL)
-    no_ivs = spark.createDataFrame([], "k long, lo long, hi long")
-    some_pts = spark.createDataFrame([(1, 3)], "k long, ts long")
-    assert interval_join(some_pts, no_ivs, ["k"], "ts", "lo", "hi").count() == 0
+    assert stratified_sample(no_rows).count() == 0
+    assert weighted_hash_sample(no_rows).count() == 0
+    pts = spark.createDataFrame([], "user_id long, ts_us long")
+    ivs = spark.createDataFrame([(1, 0, 10)], "user_id long, err_start long, err_end long")
+    assert interval_join(pts, ivs, 5).count() == 0
+    no_ivs = spark.createDataFrame([], "user_id long, err_start long, err_end long")
+    some_pts = spark.createDataFrame([(1, 3)], "user_id long, ts_us long")
+    assert interval_join(some_pts, no_ivs, 5).count() == 0
 
 
 def test_content_hash_splits_keep_duplicates_together(spark):

@@ -72,32 +72,45 @@ def test_jaccard_stop_shingle_cap_skew(spark):
     the df cap prunes the hot shingles from candidate generation only,
     while verification still scores the full shingle sets."""
     from kyiv_traffic_bigdata_spark.operators.dedup import (
+        NGRAM_MAX_DOC_FREQ,
+        NEARDUP_JACCARD,
         ngram_jaccard_pairs,
         shingle_index,
     )
 
+    cap = NGRAM_MAX_DOC_FREQ
     boiler = "this document is provided as is without warranty of any kind"
-    rows = [(i, f"{boiler} unique payload item number {i} alpha beta") for i in range(30)]
-    # docs 100/101: true near-dups of each other (identical long tail)
+    rows = [
+        (i, f"{boiler} unique payload item number {i} alpha beta")
+        for i in range(cap + 10)
+    ]
+    # docs 1000/1001: true near-dups of each other (identical long tail)
     tail = "the quick brown fox jumps over the lazy dog repeatedly tonight"
-    rows += [(100, f"{boiler} {tail}"), (101, f"{boiler} {tail} extra")]
+    rows += [(1000, f"{boiler} {tail}"), (1001, f"{boiler} {tail} extra")]
     d = _docs(spark, rows)
 
-    # with the cap at 10, every boilerplate shingle (df=32) is pruned...
+    # every boilerplate shingle (df = cap + 12) is above the cap...
     idx = shingle_index(d, 3)
     dfreq = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    assert dfreq.where(F.col("df") > 10).count() > 0  # hot shingles exist
-    capped = ngram_jaccard_pairs(d, threshold=0.3, max_doc_freq=10)
-    got = {(r.id_a, r.id_b): r.jaccard for r in capped.collect()}
+    assert dfreq.where(F.col("df") > cap).count() > 0  # hot shingles exist
+    got = {(r.id_a, r.id_b): r.jaccard for r in ngram_jaccard_pairs(d).collect()}
     # ...the true pair (sharing rare tail shingles) still surfaces,
-    assert (100, 101) in got
+    assert (1000, 1001) in got
     # with the EXACT full-set jaccard (unchanged by candidate pruning):
-    uncapped = ngram_jaccard_pairs(d, threshold=0.3, max_doc_freq=10**9)
-    full = {(r.id_a, r.id_b): r.jaccard for r in uncapped.collect()}
-    assert got[(100, 101)] == full[(100, 101)]
-    # and boilerplate-only pairs (identical sharing, low true jaccard)
-    # are absent from both (score below threshold), capped or not.
-    assert all(k == (100, 101) or full.get(k) == v for k, v in got.items())
+    sets = {}
+    for r in idx.collect():
+        sets.setdefault(r.doc_id, set()).add(r.shingle)
+
+    def jaccard(a, b):
+        inter = len(sets[a] & sets[b])
+        return inter / (len(sets[a]) + len(sets[b]) - inter)
+
+    for (a, b), v in got.items():
+        assert abs(v - jaccard(a, b)) < 1e-6
+    # and boilerplate-only pairs — above the threshold by their full
+    # sets — never surface: they share no rare shingle
+    assert jaccard(0, 1) >= NEARDUP_JACCARD
+    assert set(got) == {(1000, 1001)}
 
 
 def test_exact_dedup_covers_boilerplate_only_identical_docs(spark):
@@ -108,19 +121,20 @@ def test_exact_dedup_covers_boilerplate_only_identical_docs(spark):
     identical-doc case, so the dedup *pipeline* (exact pass + near-dup
     pass) loses nothing at the identity end."""
     from kyiv_traffic_bigdata_spark.operators.dedup import (
+        NGRAM_MAX_DOC_FREQ,
         exact_duplicates,
         ngram_jaccard_pairs,
     )
 
     boiler = "this document is provided as is without warranty of any kind"
-    # 20 docs that are nothing but the boilerplate — all identical, every
-    # shingle at df=20, above the cap of 10
-    rows = [(i, boiler) for i in range(20)]
-    d = _docs(spark, rows)
-    pruned = ngram_jaccard_pairs(d, threshold=0.5, max_doc_freq=10)
+    # docs that are nothing but the boilerplate — all identical, every
+    # shingle's df above the NGRAM_MAX_DOC_FREQ cap
+    n = NGRAM_MAX_DOC_FREQ + 10
+    d = _docs(spark, [(i, boiler) for i in range(n)])
+    pruned = ngram_jaccard_pairs(d)
     assert pruned.count() == 0  # the known miss: hot-only overlap
     groups = exact_duplicates(d).collect()
-    assert len(groups) == 1 and groups[0].copies == 20  # ...covered here
+    assert len(groups) == 1 and groups[0].copies == n  # ...covered here
 
 
 def test_jaccard_cap_bounds_candidate_volume(spark):
@@ -278,24 +292,32 @@ def test_containment_pairs_detects_subdocument_copy(spark):
         ],
         "doc_id long, text string",
     )
-    rows = containment_pairs(docs, threshold=0.9).collect()
+    rows = containment_pairs(docs).collect()
     assert len(rows) == 1
     (r,) = rows
     assert (r.id_a, r.id_b) == (1, 2)
     assert r.c_a_in_b == 1.0          # all of doc 1's shingles in doc 2
     assert r.c_b_in_a < 0.2           # but doc 2 barely contained in 1
     # jaccard for the same pair would be ~n_inter/n_b — below 0.2 — so
-    # a symmetric threshold of 0.9 would never have surfaced this pair
+    # a symmetric threshold at the same cutoff would never surface it
 
 
 def test_containment_pairs_respects_doc_freq_cap(spark):
-    """Candidate generation must ignore shingles above the df cap: two
-    docs sharing ONLY a boilerplate shingle (df > cap) produce no pair."""
-    from kyiv_traffic_bigdata_spark.operators.dedup import containment_pairs
+    """Candidate generation must ignore shingles above the df cap: docs
+    sharing ONLY boilerplate shingles (df > cap) produce no pair, though
+    the footer is most of each doc (containment 8/11, above the
+    threshold)."""
+    from kyiv_traffic_bigdata_spark.operators.dedup import (
+        NGRAM_MAX_DOC_FREQ,
+        containment_pairs,
+    )
 
-    boiler = "same old footer text"
+    boiler = "same old footer text that every page carries at the bottom"
     docs = spark.createDataFrame(
-        [(i, f"unique{i} filler{i} words{i} " + boiler) for i in range(6)],
+        [
+            (i, f"unique{i} filler{i} words{i} " + boiler)
+            for i in range(NGRAM_MAX_DOC_FREQ + 10)
+        ],
         "doc_id long, text string",
     )
-    assert containment_pairs(docs, threshold=0.1, max_doc_freq=2).count() == 0
+    assert containment_pairs(docs).count() == 0

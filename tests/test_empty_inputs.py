@@ -39,7 +39,7 @@ TABLES = (
 #: (VERDICT #6): the seed/probe collect operators (kmeans / semdedup /
 #: cluster_prune / pq / decontaminate) now return typed empty frames
 #: matching their oracles' LIMIT-k / CROSS JOIN zero-row output, and
-#: initial_centroids(allow_fewer=True) also seeds min(n, k) clusters on
+#: initial_centroids also seeds min(n, k) clusters on
 #: a 0 < n < k corpus — the same semantics as the oracles' LIMIT k.
 #: The survivor: doc_quality_classifier TRAINS a model (iterative GD);
 #: an "empty-trained" scorer that silently scores everything 0.5 is a

@@ -39,7 +39,7 @@ def test_candidates_superset_guarantee_any_layout(spark, parts):
     k = 5
     df = _stream(spark, ZIPFISH, parts)
     n = sum(ZIPFISH.values())
-    cands = {r.token for r in mg_candidates(df, "token", k).collect()}
+    cands = {r.token for r in mg_candidates(df, k).collect()}
     must_have = {v for v, c in ZIPFISH.items() if c * (k + 1) > n}
     assert must_have, "test stream must contain at least one heavy hitter"
     assert must_have <= cands
@@ -52,7 +52,7 @@ def test_verified_output_is_exact(spark, parts):
     n = sum(ZIPFISH.values())
     got = {
         (r.token, r.n_occurrences)
-        for r in heavy_hitters_exact(df, "token", k).collect()
+        for r in heavy_hitters_exact(df, k).collect()
     }
     want = {(v, c) for v, c in ZIPFISH.items() if c * (k + 1) > n}
     assert got == want
@@ -63,7 +63,7 @@ def test_exact_threshold_boundary_is_strict(spark):
     # exactly ON the boundary and must be excluded; 25 qualifies.
     freqs = {"on_boundary": 20, "heavy": 25, "a": 5, "b": 5, "c": 5}
     df = _stream(spark, freqs, 4)
-    got = {r.token for r in heavy_hitters_exact(df, "token", 2).collect()}
+    got = {r.token for r in heavy_hitters_exact(df, 2).collect()}
     assert got == {"heavy"}
 
 
@@ -73,7 +73,7 @@ def test_tiny_capacity_still_exact(spark):
     n = sum(freqs.values())
     got = {
         (r.token, r.n_occurrences)
-        for r in heavy_hitters_exact(df, "token", 2).collect()
+        for r in heavy_hitters_exact(df, 2).collect()
     }
     want = {(v, c) for v, c in freqs.items() if c * 3 > n}
     assert got == want
@@ -87,13 +87,13 @@ def test_nulls_excluded_from_candidates_and_total(spark):
     df = spark.createDataFrame(rows, "token string").repartition(3)
     # N(non-null) = 13, k=2 -> threshold 13/3: x (10) qualifies, y (3) not.
     # With nulls wrongly counted N would be 113 and x (10*3=30 < 113) lost.
-    got = {(r.token, r.n_occurrences) for r in heavy_hitters_exact(df, "token", 2).collect()}
+    got = {(r.token, r.n_occurrences) for r in heavy_hitters_exact(df, 2).collect()}
     assert got == {("x", 10)}
 
 
 def test_empty_stream_yields_empty_frame(spark):
     df = spark.createDataFrame([], "token string")
-    out = heavy_hitters_exact(df, "token", 8)
+    out = heavy_hitters_exact(df, 8)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["token", "n_occurrences"]
 
@@ -105,13 +105,11 @@ def test_non_string_key_type_is_preserved(spark):
     past 2^53 and a silent type change for any non-string caller."""
     big = 2**62 + 7  # not exactly representable as float64
     rows = [(big,)] * 9 + [(big + 1,)] * 2 + [(12,)] * 1
-    df = spark.createDataFrame(rows, "user_id long").repartition(3)
-    from kyiv_traffic_bigdata_spark.operators.heavy import mg_candidates
-
-    cands = mg_candidates(df, "user_id", 3)
-    assert cands.schema["user_id"].dataType.simpleString() == "bigint"
-    out = heavy_hitters_exact(df, "user_id", 2)
-    assert out.schema["user_id"].dataType.simpleString() == "bigint"
+    df = spark.createDataFrame(rows, "token long").repartition(3)
+    cands = mg_candidates(df, 3)
+    assert cands.schema["token"].dataType.simpleString() == "bigint"
+    out = heavy_hitters_exact(df, 2)
+    assert out.schema["token"].dataType.simpleString() == "bigint"
     # N = 12, k = 2 -> threshold 4: only the 9-count key qualifies, and
     # it must come back bit-exact (big and big+1 collide as float64).
-    assert {(r.user_id, r.n_occurrences) for r in out.collect()} == {(big, 9)}
+    assert {(r.token, r.n_occurrences) for r in out.collect()} == {(big, 9)}

@@ -42,11 +42,9 @@ def test_hll_registers_merge_by_max(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.col("user_id").cast("string").alias("_u")
     )
-    whole = hll_registers(ev, ["event_type"], F.col("_u"))
-    h1 = hll_registers(ev.where(F.col("_u").cast("long") % 2 == 0),
-                       ["event_type"], F.col("_u"))
-    h2 = hll_registers(ev.where(F.col("_u").cast("long") % 2 == 1),
-                       ["event_type"], F.col("_u"))
+    whole = hll_registers(ev)
+    h1 = hll_registers(ev.where(F.col("_u").cast("long") % 2 == 0))
+    h2 = hll_registers(ev.where(F.col("_u").cast("long") % 2 == 1))
     merged = (
         h1.unionAll(h2)
         .groupBy("event_type", "_reg")
@@ -57,9 +55,9 @@ def test_hll_registers_merge_by_max(spark, sf_dir):
 
     # and the folded estimates agree exactly
     a = {r.event_type: r.est_distinct
-         for r in hll_estimate(whole, ["event_type"]).collect()}
+         for r in hll_estimate(whole).collect()}
     b = {r.event_type: r.est_distinct
-         for r in hll_estimate(merged, ["event_type"]).collect()}
+         for r in hll_estimate(merged).collect()}
     assert a == b
 
 
@@ -71,7 +69,7 @@ def test_hll_register_count_bounded(spark, sf_dir):
         "event_type", F.col("user_id").cast("string").alias("_u")
     )
     n_groups = ev.select("event_type").distinct().count()
-    regs = hll_registers(ev, ["event_type"], F.col("_u"))
+    regs = hll_registers(ev)
     assert regs.count() <= n_groups * HLL_M
 
 

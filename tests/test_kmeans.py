@@ -1,19 +1,14 @@
-"""Lloyd's k-means trainer (operators/kmeans.py): convergence,
-determinism, empty-cluster handling, and the curation profile. The
-registered single-pass assignment query is oracle-checked in
-test_oracle.py (emb_kmeans); these tests pin the iterative path the
-SQL twin cannot express."""
+"""Seeded nearest-centroid clustering (operators/kmeans.py): the seed
+contract, assignment tie-breaks, the curation profile and the map-only
+plan. The registered assignment query is oracle-checked in
+test_oracle.py (emb_kmeans)."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
 
 from kyiv_traffic_bigdata_spark.operators.kmeans import (
     assign_clusters,
     cluster_profile,
     initial_centroids,
-    lloyd_iterations,
 )
 
 
@@ -33,54 +28,21 @@ def _toy(spark):
     )
 
 
-def test_inertia_non_increasing_and_converges(spark):
-    d = _toy(spark)
-    assigned, cents, hist = lloyd_iterations(d, k=2, n_iters=10)
-    assert len(hist) >= 2
-    assert all(a >= b - 1e-9 for a, b in zip(hist, hist[1:]))
-    # the two blobs must separate regardless of the straggler
-    got = {r.vec_id: r.cluster_id for r in assigned.collect()}
-    assert got[0] == got[1] == got[2]
-    assert got[3] == got[4] == got[5]
-    assert got[0] != got[3]
-    assert len(cents) == 2 and len(cents[0]) == 2
-
-
-def test_deterministic_across_runs(spark):
-    d = _toy(spark)
-    a1, c1, h1 = lloyd_iterations(d, k=3, n_iters=5)
-    a2, c2, h2 = lloyd_iterations(d, k=3, n_iters=5)
-    assert c1 == c2 and h1 == h2
-    assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, a2.collect()))
-
-
-def test_empty_cluster_keeps_previous_centroid(spark):
-    # the seeds (the two lowest ids, 0 and 1) are both inside blob A;
-    # after one update the loser seed must survive (not NaN / not
-    # dropped) so k stays 2
-    d = _toy(spark)
-    _, cents, _ = lloyd_iterations(d, k=2, n_iters=1)
-    assert len(cents) == 2
-    assert all(all(x == x for x in c) for c in cents)  # no NaN
-
-
 def test_initial_centroids_are_lowest_ids(spark):
     d = _toy(spark)
     cents = initial_centroids(d, 2)
     assert cents == [[0.0, 0.1], [0.1, 0.0]]
-    with pytest.raises(ValueError):
-        initial_centroids(d, 100)
 
 
 def test_initial_centroids_allow_fewer_matches_limit_k(spark):
-    """allow_fewer=True is the oracles' LIMIT-k semantics: a corpus
-    with n < k seeds all n vectors, and an empty corpus seeds none —
-    never a refusal (the r09 degenerate-input contract)."""
+    """The oracles' LIMIT-k semantics: a corpus with n < k seeds all n
+    vectors, and an empty corpus seeds none — never a refusal (the r09
+    degenerate-input contract)."""
     d = _toy(spark)
-    all_of_them = initial_centroids(d, 100, allow_fewer=True)
+    all_of_them = initial_centroids(d, 100)
     assert len(all_of_them) == d.count()
     assert all_of_them[:2] == [[0.0, 0.1], [0.1, 0.0]]
-    assert initial_centroids(d.limit(0), 8, allow_fewer=True) == []
+    assert initial_centroids(d.limit(0), 8) == []
 
 
 def test_assignment_tie_breaks_to_lowest_cluster(spark):
@@ -94,10 +56,9 @@ def test_assignment_tie_breaks_to_lowest_cluster(spark):
 
 def test_cluster_profile_majority_and_purity(spark):
     d = _toy(spark)
-    assigned, _, _ = lloyd_iterations(d, k=2, n_iters=10)
-    prof = cluster_profile(
-        assigned.join(d.select("vec_id", "label"), "vec_id")
-    ).collect()
+    # one centroid per blob; the straggler (5,5) is nearer (9,9)
+    assigned = assign_clusters(d, [[0.0, 0.0], [9.0, 9.0]], keep_cols=("label",))
+    prof = cluster_profile(assigned).collect()
     by_n = {r.n_members: r for r in prof}
     assert set(by_n) == {3, 4}
     assert by_n[3].majority_label == 0 and by_n[3].label_purity == 1.0

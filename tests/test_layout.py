@@ -92,15 +92,16 @@ def test_schema_evolution_merge_on_read(spark, tmp_path):
 def test_snapshot_diff_classifies_and_guards_null_collisions(spark):
     from kyiv_traffic_bigdata_spark.operators.maintenance import snapshot_diff
 
+    schema = "doc_id long, text string, lang string, source string"
     old = spark.createDataFrame(
-        [(1, "a", "x"), (2, "b", "y"), (3, "c", None), (4, "d", "z")],
-        "id long, t string, u string",
+        [(1, "a", "x", "s"), (2, "b", "y", "s"), (3, "c", None, "s"), (4, "d", "z", "s")],
+        schema,
     )
     new = spark.createDataFrame(
-        [(1, "a", "x"), (2, "B", "y"), (3, "c\x00null", None), (5, "e", "w")],
-        "id long, t string, u string",
+        [(1, "a", "x", "s"), (2, "B", "y", "s"), (3, "c\x00null", None, "s"), (5, "e", "w", "s")],
+        schema,
     )
-    got = {r.id: r for r in snapshot_diff(old, new, ["id"]).collect()}
+    got = {r.doc_id: r for r in snapshot_diff(old, new).collect()}
     assert set(got) == {2, 3, 4, 5}          # id 1 unchanged -> dropped
     assert got[2].change_type == "changed"
     assert got[4].change_type == "removed" and got[4].new_fp is None
@@ -108,7 +109,3 @@ def test_snapshot_diff_classifies_and_guards_null_collisions(spark):
     # ("c", NULL) vs ("c\x00null", NULL): the field separator + null token
     # must keep these DISTINCT fingerprints (no concat collision)
     assert got[3].change_type == "changed"
-
-    # narrowing compare_cols to u leaves only the membership changes
-    # (ids 2 and 3 differ in t, not u)
-    assert snapshot_diff(old, new, ["id"], compare_cols=["u"]).count() == 2

@@ -98,7 +98,7 @@ def test_overpass_fetch_dataset_roundtrips_to_reader_file(tmp_path):
     assert sent == dataset_queries()["traffic_signals"]
     assert json.loads(out_file.read_text())["elements"][0]["lat"] == 50.45
     with pytest.raises(KeyError):
-        c.fetch_dataset("nope")
+        c.fetch_dataset("nope", out_path=str(out_file))
 
 
 def test_timed_capture_respects_deadline_and_timeouts():
@@ -132,7 +132,7 @@ def test_timed_capture_stops_on_connection_close():
         return item
 
     out = []
-    stats = TimedCapture(recv, out.append, clock=clock).run()
+    stats = TimedCapture(recv, out.append, duration_minutes=3, clock=clock).run()
     assert out == [b"frame1"]
     assert stats["closed"] and stats["messages"] == 1
 

@@ -15,7 +15,7 @@ def test_logreg_learns_separable_data_and_is_partition_invariant(spark):
     rows = [(i, 1.0, (i % 100) / 100.0, 1.0 if (i % 100) / 100.0 > 0.5 else 0.0)
             for i in range(400)]
     df = spark.createDataFrame(rows, "id long, f0 double, f1 double, y double")
-    w, n = logistic_regression_gd(df, ["f0", "f1"], "y", n_iter=15, lr=8.0)
+    w, n = logistic_regression_gd(df, ["f0", "f1"])
     assert n == 400
     assert w[1] > 0  # the separating feature gets positive weight
     scored = df.select(
@@ -24,9 +24,7 @@ def test_logreg_learns_separable_data_and_is_partition_invariant(spark):
     acc = scored.where(F.col("pred") == (F.col("y") == 1.0)).count() / 400
     assert acc >= 0.95
 
-    w2, _ = logistic_regression_gd(
-        df.repartition(13), ["f0", "f1"], "y", n_iter=15, lr=8.0
-    )
+    w2, _ = logistic_regression_gd(df.repartition(13), ["f0", "f1"])
     assert w == w2  # decimal-summed gradients: bit-identical weights
 
 
@@ -37,4 +35,4 @@ def test_logreg_rejects_empty_frame(spark):
 
     df = spark.createDataFrame([], "f0 double, y double")
     with pytest.raises(ValueError):
-        logistic_regression_gd(df, ["f0"], "y")
+        logistic_regression_gd(df, ["f0"])

@@ -13,6 +13,7 @@ import os
 from pyspark.sql import functions as F
 
 from kyiv_traffic_bigdata_spark.sources.osm import (
+    QUERY_TIMEOUT_S,
     dataset_queries,
     nodes_to_geojson_features,
     osm_elements_from_xml,
@@ -45,10 +46,10 @@ def test_query_string_parity():
 
 
 def test_overpass_header_footer():
-    q = overpass_query("(\nnode[\"ele\"];\n)")
+    q = overpass_query("(\nnode[\"ele\"];\n)", QUERY_TIMEOUT_S, True)
     assert q.startswith("[out:json][timeout:90][bbox:50.3,30.2,50.6,30.8];")
     assert q.endswith("out body;\n>;\nout skel qt;")
-    q2 = overpass_query("body", include_geometry=False)
+    q2 = overpass_query("body", QUERY_TIMEOUT_S, include_geometry=False)
     assert q2.endswith("\nbody\nout body;")
 
 

@@ -32,7 +32,7 @@ def test_pagerank_matches_reference_and_is_partition_invariant(spark):
     # two triangles bridged by one edge + a pendant: asymmetric degrees
     edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (6, 7)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.node: (r.deg, r.rank) for r in pagerank(df, n_iter=3).collect()}
+    got = {r.node: (r.deg, r.rank) for r in pagerank(df).collect()}
     deg, ref = _ref_pagerank(edges)
     assert {k: v[0] for k, v in got.items()} == deg
     for v in ref:
@@ -40,7 +40,7 @@ def test_pagerank_matches_reference_and_is_partition_invariant(spark):
     # bridge nodes (3, 4, 6) outrank the pendant (7)
     assert got[4][1] > got[7][1] and got[6][1] > got[7][1]
 
-    again = {r.node: (r.deg, r.rank) for r in pagerank(df.repartition(7), n_iter=3).collect()}
+    again = {r.node: (r.deg, r.rank) for r in pagerank(df.repartition(7)).collect()}
     assert again == got  # bit-identical under any partitioning
 
     # rank mass stays ~1 (quantization loses at most n*1e-6 per sweep)
@@ -51,4 +51,4 @@ def test_pagerank_empty_edges(spark):
     from kyiv_traffic_bigdata_spark.operators.graph import pagerank
 
     df = spark.createDataFrame([], "id_a long, id_b long")
-    assert pagerank(df, n_iter=2).collect() == []
+    assert pagerank(df).collect() == []

@@ -27,8 +27,8 @@ from plan_checks import (
 
 @pytest.fixture(scope="module")
 def plans(spark, sf_dir):
-    def get(name, mode="formatted"):
-        return physical_plan(QUERIES[name](spark, sf_dir), mode)
+    def get(name):
+        return physical_plan(QUERIES[name](spark, sf_dir))
 
     return get
 
@@ -143,7 +143,7 @@ def test_salted_join_replicates_dim_not_fact(spark, sf_dir):
     sup = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
     )
-    plan = physical_plan(salted_join(li, sup, "l_suppkey", F.col("l_orderkey")))
+    plan = physical_plan(salted_join(li, sup))
     gen_blocks = re.findall(r"\(\d+\) Generate\b.*?(?=\(\d+\) )", plan, re.S)
     assert len(gen_blocks) == 1
     assert "s_nationkey" in gen_blocks[0]
@@ -640,7 +640,7 @@ def test_prefix_filter_ranking_window_per_doc_no_cartesian(
 
     docs = load_table(spark, sf_dir, "documents")
     monkeypatch.setattr(dedup, "stage", lambda df: df)
-    plan = physical_plan(dedup.prefix_filter_pairs(docs), mode="simple")
+    plan = physical_plan(dedup.prefix_filter_pairs(docs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     specs = re.findall(r"windowspecdefinition\(([^,]+),", plan)

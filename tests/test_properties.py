@@ -86,13 +86,13 @@ def test_bbox_filter_is_a_subset(spark, rows):
 def test_dedup_exact_idempotent_and_key_unique(spark, rows):
     """ST3-as-batch: dedup(dedup(x)) == dedup(x); one row per key; output
     rows all come from the input."""
-    df = spark.createDataFrame(rows, "k long, ts long, v long")
-    once = dedup_exact(df, ["k", "ts"], tiebreak="v")
-    twice = dedup_exact(once, ["k", "ts"], tiebreak="v")
+    df = spark.createDataFrame(rows, "user_id long, ts_us long, event_id long")
+    once = dedup_exact(df)
+    twice = dedup_exact(once)
     got_once = sorted(map(tuple, once.collect()))
     got_twice = sorted(map(tuple, twice.collect()))
     assert got_once == got_twice
-    keys = [(r.k, r.ts) for r in once.collect()]
+    keys = [(r.user_id, r.ts_us) for r in once.collect()]
     assert len(keys) == len(set(keys)) == len({(k, t) for k, t, _ in rows})
     assert once.exceptAll(df).count() == 0
 
@@ -293,22 +293,20 @@ def test_interval_join_bin_blocking_is_lossless(spark, pts, ivs, bin_width):
 
     points = spark.createDataFrame(
         [(k, i, t) for i, (k, t) in enumerate(pts)] or [(0, 0, 0)],
-        "k long, pid long, ts long",
+        "user_id long, pid long, ts_us long",
     )
     intervals = spark.createDataFrame(
         [(k, i, lo, lo + w) for i, (k, lo, w) in enumerate(ivs)] or [(9, 0, 1, 2)],
-        "k long, iid long, lo long, hi long",
+        "user_id long, iid long, err_start long, err_end long",
     )
     got = sorted(
         (r.pid, r.iid)
-        for r in interval_join(
-            points, intervals, ["k"], "ts", "lo", "hi", bin_width=bin_width
-        ).collect()
+        for r in interval_join(points, intervals, bin_width).collect()
     )
     brute = sorted(
         (r.pid, r.iid)
-        for r in points.join(intervals, "k")
-        .where((F.col("ts") >= F.col("lo")) & (F.col("ts") <= F.col("hi")))
+        for r in points.join(intervals, "user_id")
+        .where((F.col("ts_us") >= F.col("err_start")) & (F.col("ts_us") <= F.col("err_end")))
         .collect()
     )
     assert got == brute
@@ -398,12 +396,13 @@ def test_rolling_hashes_and_winnow_match_python_reference(spark, texts, k):
     from kyiv_traffic_bigdata_spark.functions.text import (
         ROLL_BASE,
         ROLL_MOD,
+        WINNOW_W,
         ascii_normalize,
         gram_rolling_hashes,
         winnowed_fps,
     )
 
-    w = 3
+    w = WINNOW_W
 
     def gram_hashes(t):
         out = []
@@ -426,7 +425,7 @@ def test_rolling_hashes_and_winnow_match_python_reference(spark, texts, k):
     got = docs.select(
         "doc_id",
         gram_rolling_hashes(F.col("_a"), k).alias("h"),
-        winnowed_fps(F.col("_a"), k, w).alias("fps"),
+        winnowed_fps(F.col("_a"), k).alias("fps"),
     ).collect()
     assert len(got) == len(texts)
     for r in got:

@@ -5,12 +5,19 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from kyiv_traffic_bigdata_spark.functions.geo import haversine_km
-from kyiv_traffic_bigdata_spark.operators.proximity import proximity_join
-from kyiv_traffic_bigdata_spark.operators.similarity import cosine_neardup_pairs
+from kyiv_traffic_bigdata_spark.operators.proximity import (
+    PROXIMITY_CELL_DEG,
+    PROXIMITY_RADIUS_KM,
+    proximity_join,
+)
+from kyiv_traffic_bigdata_spark.operators.similarity import (
+    NEARDUP_THRESHOLD,
+    cosine_neardup_pairs,
+    neardup_rows_per_band,
+)
 
 
 def _points(spark, rows):
@@ -28,8 +35,8 @@ def test_proximity_equals_bruteforce(spark):
     ]
     pts = _points(spark, rows)
     got = {
-        (r.l_pid, r.r_pid)
-        for r in proximity_join(pts, pts, radius_km=1.0, cell_deg=0.02).collect()
+        (r.p_pid, r.e_pid)
+        for r in proximity_join(pts, pts).collect()
     }
     brute = {
         (r.a, r.b)
@@ -42,7 +49,7 @@ def test_proximity_equals_bruteforce(spark):
                 F.col("x.lat"), F.col("x.lon"), F.col("y.lat"), F.col("y.lon")
             ).alias("d"),
         )
-        .where(F.col("d") <= 1.0)
+        .where(F.col("d") <= PROXIMITY_RADIUS_KM)
         .collect()
     }
     assert got == brute and len(brute) >= 200  # self-pairs guarantee >= n
@@ -51,24 +58,27 @@ def test_proximity_equals_bruteforce(spark):
 def test_proximity_no_duplicate_pairs(spark):
     """3x3 probe expansion must not emit the same pair twice."""
     pts = _points(spark, [(1, 50.3001, 30.3001), (2, 50.3002, 30.3002)])
-    out = proximity_join(pts, pts, radius_km=1.0, cell_deg=0.02)
-    pairs = [(r.l_pid, r.r_pid) for r in out.collect()]
+    out = proximity_join(pts, pts)
+    pairs = [(r.p_pid, r.e_pid) for r in out.collect()]
     assert sorted(pairs) == [(1, 1), (1, 2), (2, 1), (2, 2)]
 
 
 def test_proximity_boundary_cells(spark):
     """Points straddling a cell boundary within the radius still match."""
-    # 0.019999 vs 0.020001 deg lon: adjacent cells at cell_deg=0.02
+    # 0.019999 vs 0.020001 deg lon: adjacent cells at cell width 0.02
     pts1 = _points(spark, [(1, 50.5, 30.019999)])
     pts2 = _points(spark, [(2, 50.5, 30.020001)])
-    out = proximity_join(pts1, pts2, radius_km=1.0, cell_deg=0.02).collect()
+    out = proximity_join(pts1, pts2).collect()
     assert len(out) == 1 and out[0].dist_km < 0.001
 
 
-def test_proximity_rejects_undersized_cell(spark):
-    pts = _points(spark, [(1, 50.5, 30.5)])
-    with pytest.raises(ValueError):
-        proximity_join(pts, pts, radius_km=5.0, cell_deg=0.02)
+def test_proximity_cell_covers_radius():
+    """Blocking is lossless only while a cell spans the radius in
+    longitude at the northern edge of the Ukraine bbox."""
+    from kyiv_traffic_bigdata_spark.config import UKRAINE_BBOX
+
+    deg_per_km = 1 / (111.19 * math.cos(math.radians(UKRAINE_BBOX.lat_max)))
+    assert PROXIMITY_CELL_DEG >= PROXIMITY_RADIUS_KM * deg_per_km
 
 
 def _emb_frame(spark):
@@ -89,7 +99,7 @@ def _emb_frame(spark):
 
 def test_neardup_pairs_subset_of_exact_and_thresholded(spark):
     emb = _emb_frame(spark)
-    got = cosine_neardup_pairs(emb, threshold=0.9).collect()
+    got = cosine_neardup_pairs(emb, neardup_rows_per_band(20)).collect()
     assert len(got) > 0
     # every reported pair is ordered, above threshold, and exact-verified
     rows = emb.collect()
@@ -105,11 +115,11 @@ def test_neardup_pairs_subset_of_exact_and_thresholded(spark):
         (a, b)
         for a in vecs
         for b in vecs
-        if a < b and cos(vecs[a], vecs[b]) >= 0.9
+        if a < b and cos(vecs[a], vecs[b]) >= NEARDUP_THRESHOLD
     }
     for r in got:
         assert r.id_a < r.id_b
-        assert r.cosine_sim >= 0.9 - 1e-6
+        assert r.cosine_sim >= NEARDUP_THRESHOLD - 1e-6
         assert (r.id_a, r.id_b) in exact
     # tight clusters (sigma 0.05) collide in at least one band essentially
     # always; require meaningful recall on the planted half

@@ -1,9 +1,10 @@
 """Equivalence tests for operators.rank.percent_rank_gate.
 
 The operator claims *identical* output to the monolithic
-``percent_rank() OVER (PARTITION BY g ORDER BY v, tb)`` filter. Pin that
-on data with the awkward shapes: value ties straddling the gate, groups
-entirely above/below it, and single-row groups (rank 0 by convention).
+``percent_rank() OVER (PARTITION BY lang ORDER BY quality, doc_id)``
+filter. Pin that on data with the awkward shapes: value ties straddling
+the gate, groups entirely above/below it, and single-row groups (rank 0
+by convention).
 """
 
 from __future__ import annotations
@@ -11,15 +12,30 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from kyiv_traffic_bigdata_spark.operators.rank import percent_rank_gate
+from kyiv_traffic_bigdata_spark.operators.rank import (
+    GATE_MIN_RANK,
+    percent_rank_all,
+    percent_rank_gate,
+)
+
+#: percent_rank_gate's (group, value, tiebreak) columns and rank alias
+GATE = ("lang", "quality", "doc_id", "q_rank")
+#: percent_rank_all's
+ALL = ("cluster_id", "sq_dist", "vec_id", "d_rank")
 
 
-def _monolithic(df, min_rank):
-    w = Window.partitionBy("g").orderBy(F.col("v").asc(), F.col("tb").asc())
+def _frame(spark, data, cols):
+    g, v, tb, _ = cols
+    return spark.createDataFrame(data, f"{g} string, {v} double, {tb} int")
+
+
+def _monolithic(df, cols, min_rank):
+    g, v, tb, rank = cols
+    w = Window.partitionBy(g).orderBy(F.col(v).asc(), F.col(tb).asc())
     return (
-        df.withColumn("q_rank", F.round(F.percent_rank().over(w), 6))
-        .where(F.col("q_rank") >= min_rank)
-        .select("g", "v", "tb", "q_rank")
+        df.withColumn(rank, F.round(F.percent_rank().over(w), 6))
+        .where(F.col(rank) >= min_rank)
+        .select(*cols)
     )
 
 
@@ -37,41 +53,28 @@ def test_matches_monolithic_window_with_ties(spark):
         + [("b", 5.0, 0), ("b", 6.0, 1), ("b", 7.0, 2)]
         + [("c", 9.0, 0)]
     )
-    df = spark.createDataFrame(data, "g string, v double, tb int")
-    for gate in (0.0, 0.5, 0.75, 1.0):
-        got = percent_rank_gate(df, "g", "v", "tb", gate).select(
-            "g", "v", "tb", "q_rank"
-        )
-        assert _rows(got) == _rows(_monolithic(df, gate)), gate
+    df = _frame(spark, data, GATE)
+    got = percent_rank_gate(df).select(*GATE)
+    assert _rows(got) == _rows(_monolithic(df, GATE, GATE_MIN_RANK))
 
 
 def test_single_row_groups_fail_positive_gate(spark):
-    df = spark.createDataFrame(
-        [("x", 1.0, 0), ("y", 2.0, 0)], "g string, v double, tb int"
-    )
-    assert percent_rank_gate(df, "g", "v", "tb", 0.75).count() == 0
-    # ...and a zero gate keeps them with rank 0.0
-    kept = percent_rank_gate(df, "g", "v", "tb", 0.0)
-    assert {r["q_rank"] for r in kept.collect()} == {0.0}
+    df = _frame(spark, [("x", 1.0, 0), ("y", 2.0, 0)], GATE)
+    assert percent_rank_gate(df).count() == 0
 
 
 def test_boundary_rounding_matches_window(spark):
     # 1_000 distinct ranks: rounded (rank-1)/999 values land exactly ON
     # the gate for some rows; both paths must make the same cut.
-    df = spark.createDataFrame(
-        [("g", float(i % 97), i) for i in range(1000)],
-        "g string, v double, tb int",
-    )
-    got = percent_rank_gate(df, "g", "v", "tb", 0.75)
-    exp = _monolithic(df, 0.75)
-    assert _rows(got.select("g", "v", "tb", "q_rank")) == _rows(exp)
+    df = _frame(spark, [("g", float(i % 97), i) for i in range(1000)], GATE)
+    got = percent_rank_gate(df)
+    exp = _monolithic(df, GATE, GATE_MIN_RANK)
+    assert _rows(got.select(*GATE)) == _rows(exp)
 
 
 def test_percent_rank_all_matches_monolithic_everywhere(spark):
     """The ungated variant must emit the exact monolithic rank for EVERY
     row — same tie/single-row conventions, nothing dropped."""
-    from kyiv_traffic_bigdata_spark.operators.rank import percent_rank_all
-
     data = (
         [("a", 1.0, i) for i in range(3)]
         + [("a", 2.0, i) for i in range(3)]
@@ -79,9 +82,9 @@ def test_percent_rank_all_matches_monolithic_everywhere(spark):
         + [("b", 5.0, 0), ("b", 6.0, 1), ("b", 7.0, 2)]
         + [("c", 9.0, 0)]
     )
-    df = spark.createDataFrame(data, "g string, v double, tb int")
-    got = percent_rank_all(df, "g", "v", "tb").select("g", "v", "tb", "q_rank")
-    exp = _monolithic(df, min_rank=-1.0)  # gate below 0 keeps everything
+    df = _frame(spark, data, ALL)
+    got = percent_rank_all(df).select(*ALL)
+    exp = _monolithic(df, ALL, min_rank=-1.0)  # gate below 0 keeps everything
     assert _rows(got) == _rows(exp)
     assert got.count() == len(data)
 
@@ -91,8 +94,6 @@ def test_percent_rank_all_keeps_null_values_ranked_first(spark):
     (keep-the-full-frame contract). Convention: NULLs rank FIRST within
     their group — identical to Spark's monolithic ASC NULLS FIRST
     window, which is the documented oracle spelling."""
-    from kyiv_traffic_bigdata_spark.operators.rank import percent_rank_all
-
     data = [
         ("a", None, 0),
         ("a", None, 1),
@@ -101,10 +102,10 @@ def test_percent_rank_all_keeps_null_values_ranked_first(spark):
         ("b", None, 0),  # all-NULL group: ranks 0.0 (single slab)
         (None, 3.0, 0),  # NULL group key survives too
     ]
-    df = spark.createDataFrame(data, "g string, v double, tb int")
-    got = percent_rank_all(df, "g", "v", "tb").select("g", "v", "tb", "q_rank")
+    df = _frame(spark, data, ALL)
+    got = percent_rank_all(df).select(*ALL)
     assert got.count() == len(data)
-    exp = _monolithic(df, min_rank=-1.0)
+    exp = _monolithic(df, ALL, min_rank=-1.0)
 
     def rows_nullsafe(frame):
         return sorted(
@@ -113,7 +114,7 @@ def test_percent_rank_all_keeps_null_values_ranked_first(spark):
         )
 
     assert rows_nullsafe(got) == rows_nullsafe(exp)
-    by_key = {(r["g"], r["tb"]): r["q_rank"] for r in got.collect()}
+    by_key = {(r["cluster_id"], r["vec_id"]): r["d_rank"] for r in got.collect()}
     # NULLs first: the two NULL rows of group a take ranks 0 and 1/3
     assert by_key[("a", 0)] == 0.0
     assert round(by_key[("a", 1)], 6) == round(1 / 3, 6)
@@ -126,12 +127,8 @@ def test_percent_rank_all_avoids_per_group_fact_window(spark):
     """Scale guard: the fact-row window must partition by the COMPOSITE
     (group, value) key, never by group alone — a group-only window
     would put a whole cluster's rows in one task at scale."""
-    from kyiv_traffic_bigdata_spark.operators.rank import percent_rank_all
-
-    df = spark.createDataFrame(
-        [("g", float(i % 7), i) for i in range(100)], "g string, v double, tb int"
-    )
-    plan = percent_rank_all(df, "g", "v", "tb")._jdf.queryExecution().executedPlan().toString()
+    df = _frame(spark, [("g", float(i % 7), i) for i in range(100)], ALL)
+    plan = percent_rank_all(df)._jdf.queryExecution().executedPlan().toString()
     assert "percent_rank" not in plan
 
 
@@ -217,6 +214,9 @@ def test_quantile_disc_slab_matches_sorted_reference(spark):
 # Dyadic count-min RANK sketch (operators.qsketch)
 # ---------------------------------------------------------------------------
 
+#: build_rank_sketch's input: priority and price in cents
+SKETCH_SCHEMA = "o_orderpriority string, _cents long"
+
 
 def test_rank_sketch_cells_partition_invariant_and_bounded(spark):
     """Sketch cells are plain sums of deterministic hashes — the counter
@@ -232,19 +232,11 @@ def test_rank_sketch_cells_partition_invariant_and_bounded(spark):
     rows = [("a", (i * 37) % 500) for i in range(200)] + [
         ("b", (i * 91) % 300) for i in range(150)
     ]
-    df = spark.createDataFrame(rows, "g string, v long")
+    df = spark.createDataFrame(rows, SKETCH_SCHEMA)
     width = 16
-    base = sorted(
-        tuple(r)
-        for r in build_rank_sketch(
-            df.repartition(1), "g", "v", width
-        ).collect()
-    )
+    base = sorted(tuple(r) for r in build_rank_sketch(df.repartition(1), width).collect())
     shuffled = sorted(
-        tuple(r)
-        for r in build_rank_sketch(
-            df.repartition(7, "v"), "g", "v", width
-        ).collect()
+        tuple(r) for r in build_rank_sketch(df.repartition(7, "_cents"), width).collect()
     )
     assert base == shuffled
     assert len(base) <= 2 * QSKETCH_LEVELS * QSKETCH_DEPTH * width
@@ -264,11 +256,11 @@ def test_rank_sketch_interval_estimates_never_underestimate(spark):
     )
 
     vals = [(i * 53) % 256 for i in range(300)]
-    df = spark.createDataFrame([("g", v) for v in vals], "g string, v long")
+    df = spark.createDataFrame([("g", v) for v in vals], SKETCH_SCHEMA)
     width = 16
     cells = {
         (r["g"], r["lvl"], r["j"], r["b"]): r["c"]
-        for r in build_rank_sketch(df, "g", "v", width).collect()
+        for r in build_rank_sketch(df, width).collect()
     }
     for lvl in (0, 1, 2):
         shift = QSKETCH_BRANCH_BITS * lvl
@@ -334,11 +326,11 @@ def test_rank_sketch_descent_exact_when_collision_free(spark):
     )
 
     vals = sorted((i * 17) % 100 for i in range(101))
-    df = spark.createDataFrame([("g", v) for v in vals], "g string, v long")
+    df = spark.createDataFrame([("g", v) for v in vals], SKETCH_SCHEMA)
     width = 4096
     cells = {
         (r["g"], r["lvl"], r["j"], r["b"]): r["c"]
-        for r in build_rank_sketch(df, "g", "v", width).collect()
+        for r in build_rank_sketch(df, width).collect()
     }
     n = len(vals)
     for num, den in ((1, 2), (9, 10), (99, 100)):

@@ -1,8 +1,9 @@
 """Every package module, and every top-level function or class in one,
 is reached from an entry point (the CLI, bench.py, __spark_entry__.py,
 perfbench/ or tools/): code only tests reach is dead code, so it either
-gets a caller or is deleted. Likewise every defaulted parameter of a
-reached function is set by some reached call, or it is a constant."""
+gets a caller or is deleted. Likewise every parameter of a reached
+function takes two or more values across the reached calls, or it is a
+constant; and a default some reached call relies on, or it is dropped."""
 
 import importlib.util
 from pathlib import Path
@@ -40,9 +41,11 @@ _DEPLOY = "deployment setting"
 _FAKE = "fake: tests inject"
 _CAP = "cap: tests lower it to reach a guarded path on tiny data"
 _TWO = "two values: a tested property compares them"
+_FROZEN = "frozen caller: perfbench/ passes it"
 
-#: Defaulted parameters no reached call sets, each with why it is not a
-#: constant. A new unused option fails the test: make it a constant.
+#: Parameters the reached calls fix (one value, or a default no call
+#: uses), each with why it is not a constant. A new fixed option fails
+#: the test: make it a constant.
 SEAMS = {
     "kyiv_traffic_bigdata_spark/session.py:get_spark:master": f"{_DEPLOY}: Spark master URL",
     "kyiv_traffic_bigdata_spark/session.py:get_spark:shuffle_partitions": f"{_DEPLOY}: partition count",
@@ -63,10 +66,24 @@ SEAMS = {
     "kyiv_traffic_bigdata_spark/sources/osm.py:OverpassClient.__init__:transport": f"{_FAKE} an HTTP transport",
     "kyiv_traffic_bigdata_spark/streaming/transport.py:LiveSocketIOClient.__init__:sleep": f"{_FAKE} a sleep that records backoff delays",
     "kyiv_traffic_bigdata_spark/streaming/transport.py:SocketIOStateMachine.__init__:clock": f"{_FAKE} a clock to drive ping timing",
+    "kyiv_traffic_bigdata_spark/streaming/ws.py:encode_frame:mask_key": f"{_FAKE} a WebSocket server, whose frames go unmasked",
     "kyiv_traffic_bigdata_spark/operators/graph.py:connected_components:max_iter": f"{_CAP}: the non-convergence RuntimeError on a 7-node path",
     "kyiv_traffic_bigdata_spark/sources/eway.py:decode_messages:min_len": f"{_CAP}: hand-built frames shorter than the 100-char gate",
+    "kyiv_traffic_bigdata_spark/operators/heavy.py:heavy_hitters_exact:k": f"{_CAP}: the Misra-Gries prune on streams of a few dozen values",
     "kyiv_traffic_bigdata_spark/operators/qsketch.py:build_rank_sketch:width": f"{_TWO}: colliding (16) and collision-free (4096) sketches",
     "kyiv_traffic_bigdata_spark/operators/qsketch.py:descend_quantile:width": f"{_TWO}: colliding (16) and collision-free (4096) sketches",
+    "kyiv_traffic_bigdata_spark/operators/similarity.py:ann_ivf_topk:n_probe": f"{_TWO}: IVF_PROBES recall against exhaustive IVF_CELLS probing",
+    "kyiv_traffic_bigdata_spark/operators/graph.py:bfs_depths:seed_mod": f"{_TWO}: hypothesis draws it",
+    "kyiv_traffic_bigdata_spark/operators/graph.py:bfs_depths:max_depth": f"{_TWO}: hypothesis draws it",
+    "kyiv_traffic_bigdata_spark/operators/graph.py:k_core:k": f"{_TWO}: hypothesis draws it",
+    "kyiv_traffic_bigdata_spark/operators/graph.py:k_core:rounds": f"{_TWO}: hypothesis draws it",
+    "kyiv_traffic_bigdata_spark/operators/graph.py:label_propagation:rounds": f"{_TWO}: hypothesis draws it",
+    "kyiv_traffic_bigdata_spark/operators/dedup.py:repeated_spans:gram_len": f"{_TWO}: hypothesis draws it",
+    "kyiv_traffic_bigdata_spark/operators/interval.py:interval_join:bin_width": f"{_TWO}: hypothesis draws it",
+    "kyiv_traffic_bigdata_spark/functions/text.py:winnowed_fps:k": f"{_TWO}: hypothesis draws it",
+    "kyiv_traffic_bigdata_spark/streaming/ingest.py:replay_text_stream:max_files_per_trigger": _FROZEN,
+    "kyiv_traffic_bigdata_spark/streaming/ingest.py:start_positions_sink:fmt": _FROZEN,
+    "kyiv_traffic_bigdata_spark/streaming/ingest.py:start_positions_sink:available_now": _FROZEN,
 }
 
 
@@ -86,5 +103,10 @@ def test_only_pending_functions_are_unreached(reachability):
     assert set(reachability.unreached_functions()) == PENDING
 
 
-def test_only_seam_parameters_are_unset(reachability):
-    assert set(reachability.unset_parameters()) == SEAMS.keys()
+def test_only_seam_parameters_are_fixed(reachability):
+    assert set(reachability.fixed_parameters()) == SEAMS.keys()
+
+
+def test_every_seam_has_a_keep_reason():
+    reasons = (_DEPLOY, _FAKE, _CAP, _TWO, _FROZEN)
+    assert all(why.startswith(reasons) for why in SEAMS.values())

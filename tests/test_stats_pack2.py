@@ -340,22 +340,17 @@ def test_skyline_operator_edge_cases(spark):
         (999.0, 3),  # dominated: same y, more expensive
         (999.0, 1),  # frontier
     ]
-    df = spark.createDataFrame(rows, ["x", "y"])
-    got = {
-        (r.x, r.y)
-        for r in skyline_points_2d(df, "x", "y", bucket_width=100.0)
-        .collect()
-    }
+    cols = ["p_retailprice", "p_size"]
+    df = spark.createDataFrame(rows, cols)
+    got = {tuple(r) for r in skyline_points_2d(df).select(*cols).collect()}
     assert got == {(1.0, 9), (5.0, 7), (250.0, 3), (999.0, 1)}
     assert got == set(_brute_skyline([tuple(r) for r in rows]))
 
     # single point and identical-duplicate points survive
-    dup = spark.createDataFrame([(2.0, 2), (2.0, 2)], ["x", "y"])
-    assert [
-        (r.x, r.y)
-        for r in skyline_points_2d(dup, "x", "y", bucket_width=10.0)
-        .collect()
-    ] == [(2.0, 2)]
+    dup = spark.createDataFrame([(2.0, 2), (2.0, 2)], cols)
+    assert [tuple(r) for r in skyline_points_2d(dup).select(*cols).collect()] == [
+        (2.0, 2)
+    ]
 
 
 # ------------------------------------------------------- Morton density
@@ -485,12 +480,12 @@ def test_quality_auc_matches_rank_sum(duck):
     rank-sum MATH."""
     from kyiv_traffic_bigdata_spark.queries import (
         _sql_quality_auc,
+        _TOKS,
         _sql_quality_expr,
-        _toks,
     )
 
     rows = duck.sql(
-        f"WITH toks AS (SELECT lang, text, {_toks('text')} AS t "
+        f"WITH toks AS (SELECT lang, text, {_TOKS} AS t "
         "FROM documents) "
         f"SELECT {_sql_quality_expr()}, CASE WHEN lang = 'en' THEN 1 "
         "ELSE 0 END FROM toks"

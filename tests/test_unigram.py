@@ -20,6 +20,8 @@ from itertools import combinations
 import pytest
 
 from kyiv_traffic_bigdata_spark.operators.unigram import (
+    UNIGRAM_MAX_PIECE_LEN,
+    UNIGRAM_SEED_PIECES,
     UNK_LOGPROB,
     _forward_backward,
     em_train,
@@ -49,8 +51,8 @@ PROBS = {
 
 @pytest.mark.parametrize("word", ["abab", "aba", "bbbb", "ababab"])
 def test_forward_backward_matches_bruteforce(word):
-    exp, z = _forward_backward(word, PROBS, max_len=3)
-    segs = list(_all_segmentations(word, set(PROBS), 3))
+    exp, z = _forward_backward(word, PROBS)
+    segs = list(_all_segmentations(word, set(PROBS), UNIGRAM_MAX_PIECE_LEN))
     z_ref = sum(math.prod(PROBS[p] for p in s) for s in segs)
     assert z == pytest.approx(z_ref, rel=1e-12)
     ref: dict[str, float] = {}
@@ -64,22 +66,22 @@ def test_forward_backward_matches_bruteforce(word):
 
 
 def test_forward_backward_unsegmentable_is_zero():
-    exp, z = _forward_backward("xyz", PROBS, max_len=3)
+    exp, z = _forward_backward("xyz", PROBS)
     assert z == 0.0 and exp == {}
 
 
 @pytest.mark.parametrize("word", ["abab", "ababa", "babab", "aab"])
 def test_viterbi_matches_exhaustive_argmax(word):
     lp = {p: math.log(v) for p, v in PROBS.items()}
-    got = viterbi_segment(word, lp, max_len=3)
-    segs = list(_all_segmentations(word, set(PROBS), 3))
+    got = viterbi_segment(word, lp)
+    segs = list(_all_segmentations(word, set(PROBS), UNIGRAM_MAX_PIECE_LEN))
     best = max(sum(lp[p] for p in s) for s in segs)
     assert "".join(got) == word
     assert sum(lp[p] for p in got) == pytest.approx(best, rel=1e-12)
 
 
 def test_viterbi_unknown_chars_fall_back_per_char():
-    got = viterbi_segment("q!", {"a": -1.0}, max_len=3)
+    got = viterbi_segment("q!", {"a": -1.0})
     assert got == ["q", "!"]
 
 
@@ -91,9 +93,7 @@ def test_trained_table_is_layout_independent(spark):
     tables = []
     for parts in (1, 7):
         words = word_counts(docs).repartition(parts)
-        tables.append(
-            em_train(words, max_piece_len=4, max_pieces=64, vocab_size=32, iters=3)
-        )
+        tables.append(em_train(words))
     assert tables[0] == tables[1]  # bit-identical, not approximately
     assert all(len(p) == 1 for p, _ in tables[0]) is False  # multis learned
     probs = [pr for _, pr in tables[0]]
@@ -101,9 +101,19 @@ def test_trained_table_is_layout_independent(spark):
 
 
 def test_seed_always_retains_single_chars(spark):
-    docs = spark.createDataFrame([(1, "zzzz qqqq x")], "doc_id long, text string")
-    seed = seed_pieces(word_counts(docs), max_piece_len=3, max_pieces=2).collect()
+    import hashlib
+
+    # 300 pseudo-random 6-letter words over a-p: far more distinct
+    # multi-char substrings than the seed cap
+    words = [
+        "".join(chr(97 + int(c, 16)) for c in hashlib.md5(str(i).encode()).hexdigest()[:6])
+        for i in range(300)
+    ]
+    text = " ".join(words) + " zzzz qqqq x"
+    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    seed = seed_pieces(word_counts(docs)).collect()
     chars = {r.piece for r in seed if len(r.piece) == 1}
+    assert sum(len(r.piece) > 1 for r in seed) == UNIGRAM_SEED_PIECES
     assert {"z", "q", "x"} <= chars  # cap applies to multi-char pieces only
 
 
@@ -115,7 +125,7 @@ def test_encode_reconstructs_and_counts(spark):
     vocab = [("ban", 0.3), ("ana", 0.3), ("a", 0.1), ("b", 0.1), ("n", 0.1), ("d", 0.1)]
     rows = {
         r.doc_id: r.pieces
-        for r in viterbi_encode(docs, "text", vocab, max_piece_len=3).collect()
+        for r in viterbi_encode(docs, vocab).collect()
     }
     assert "".join(rows[1]) == "bananabandana"  # normalized, word-split
     assert rows[2] == [] and rows[3] == []
@@ -135,7 +145,7 @@ def test_empty_corpus_trains_empty_and_query_stays_typed(spark, sf_dir, tmp_path
 
 def test_unk_logprob_is_a_floor():
     # a known piece always beats the UNK fallback on the same span
-    got = viterbi_segment("ab", {"ab": UNK_LOGPROB + 1.0}, max_len=2)
+    got = viterbi_segment("ab", {"ab": UNK_LOGPROB + 1.0})
     assert got == ["ab"]
 
 
@@ -146,6 +156,6 @@ def test_zero_probability_pieces_never_reach_log(spark):
     characters pay the UNK single-char fallback."""
     vocab = [("ab", 0.0), ("a", 0.5), ("b", 0.0), ("c", 0.5)]
     docs = spark.createDataFrame([(1, "abca")], "doc_id long, text string")
-    rows = viterbi_encode(docs, "text", vocab, max_piece_len=2).collect()
+    rows = viterbi_encode(docs, vocab).collect()
     # "ab" and "b" are unusable; "b" segments via the UNK fallback
     assert rows[0].pieces == ["a", "b", "c", "a"]

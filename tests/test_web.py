@@ -44,7 +44,7 @@ def test_sql_normalize_url_matches_spark_on_cases():
     con = duckdb.connect()
     for u, want in CASES:
         got = con.sql(
-            f"SELECT {sql_normalize_url('u')} FROM (SELECT ? AS u)", params=[u]
+            f"SELECT {sql_normalize_url()} FROM (SELECT ? AS url)", params=[u]
         ).fetchone()[0]
         assert got == want, f"{u!r}: {got!r} != {want!r}"
 
@@ -87,6 +87,6 @@ def test_sql_html_to_text_matches_spark_on_cases():
     expected = ["keep this", '<i>x</i> & &lt; "q"', "ok done"]
     for h, want in zip(cases, expected):
         got = con.sql(
-            f"SELECT {sql_html_to_text('h')} FROM (SELECT ? AS h)", params=[h]
+            f"SELECT {sql_html_to_text()} FROM (SELECT ? AS html)", params=[h]
         ).fetchone()[0]
         assert got == want, f"{h!r}: {got!r} != {want!r}"

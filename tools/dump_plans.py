@@ -58,7 +58,7 @@ def main() -> None:
         "",
     ]
     for name, why in HEADLINERS:
-        plan = physical_plan(QUERIES[name](spark, sf_dir), "formatted")
+        plan = physical_plan(QUERIES[name](spark, sf_dir))
         lines = plan.splitlines()
         if len(lines) > 110:
             lines = lines[:110] + [f"... ({len(lines) - 110} more lines)"]

@@ -1,6 +1,6 @@
 """Print every package module, then every top-level function or class,
-that no entry point reaches, then every defaulted parameter of a
-reached function that no reached call sets.
+that no entry point reaches, then every parameter of a reached function
+that the reached calls fix.
 
 All three passes start from the roots: the package's ``__main__.py``,
 ``bench.py``, ``__spark_entry__.py`` (entry/queries/oracle_sql),
@@ -21,19 +21,34 @@ references (``getattr(m, "f")``) do not count.
 
 The parameter pass collects every call in reached code (the roots, the
 module-level code and the bodies of the reached top-level defs) by its
-bare callee name, ``ClassName(...)`` standing for ``ClassName.__init__``.
-A defaulted parameter of a def inside a reached top-level def or class
-(methods and nested functions included; ``self``/``cls`` skipped) is
-set when a call of that name passes it by keyword, covers its position
-with positional arguments, or passes ``*args``/``**kwargs``. Bare-name
-matching again only errs towards "set": ``stage(df, eager=...)`` would
-read as set because ``queries.py`` defines local ``stage`` helpers whose
-calls pass a second positional argument.
+bare callee name, ``ClassName(...)`` standing for ``ClassName.__init__``,
+and checks each named parameter of a def inside a reached top-level def
+or class (methods and nested functions included; ``self``/``cls``
+skipped). It lists a parameter when either rule holds:
+
+* one value — across every call, the parameter takes at most one
+  distinct value (a parameter without a default needs at least one
+  call). An omitted argument counts as its default expression; a passed
+  one counts as a value only when it is a literal (``ast.literal_eval``
+  accepts it) or a name whose last identifier is UPPER_CASE (``PQ_K``,
+  ``SIM.TOPK``), and any other expression, or an argument hidden in
+  ``*args``/``**kwargs``, varies. Values compare by ``ast.dump``. A
+  defaulted parameter that no call sets is therefore listed;
+* unused default — it has a default and every call (at least one)
+  passes it explicitly.
+
+Such a parameter is a constant (or, for an unused default, a required
+parameter) unless tests/test_reachability.py's ``SEAMS`` says why not.
+Bare-name matching merges the calls of two functions that share a name.
+Extra calls only add values, so a collision can hide a fixed parameter
+but not make a varying one look fixed; the one exception is a function
+whose own calls are all invisible (a callback only the framework calls),
+which takes its values from the other function's calls.
 
 Usage:  python tools/reachability.py
 Output: one repo-relative path per unreached module, then one
 ``path:name`` per unreached function or class, then one
-``path:function:param`` per unset parameter.
+``path:function:param`` per fixed parameter.
 tests/test_reachability.py pins all three lists.
 """
 
@@ -190,35 +205,63 @@ def _functions(node: ast.AST, qual: str = "", cls: str | None = None):
             yield from _functions(child, qual, cls)
 
 
-def _defaulted(fn: ast.FunctionDef, method: bool):
-    """``(position, name)`` of each defaulted parameter, position None
-    for keyword-only ones; a method's ``self``/``cls`` is not counted."""
+def _parameters(fn: ast.FunctionDef, method: bool):
+    """``(position, name, default)`` of each named parameter, position
+    None for keyword-only ones and default None for required ones; a
+    method's ``self``/``cls`` is not counted."""
     args = fn.args
     positional = (args.posonlyargs + args.args)[int(method):]
-    first = len(positional) - len(args.defaults)
-    out = [(i, a.arg) for i, a in enumerate(positional) if i >= first]
-    out += [
-        (None, a.arg)
-        for a, d in zip(args.kwonlyargs, args.kw_defaults)
-        if d is not None
-    ]
+    defaults = [None] * (len(positional) - len(args.defaults)) + args.defaults
+    out = [(i, a.arg, d) for i, (a, d) in enumerate(zip(positional, defaults))]
+    out += [(None, a.arg, d) for a, d in zip(args.kwonlyargs, args.kw_defaults)]
     return out
 
 
-def _sets(call: ast.Call, position: int | None, name: str) -> bool:
-    keywords = {k.arg for k in call.keywords}  # None is a ``**kwargs``
-    if name in keywords or None in keywords:
+def _constant(node: ast.AST) -> bool:
+    """A literal, or a name whose last identifier is UPPER_CASE."""
+    if isinstance(node, (ast.Name, ast.Attribute)):
+        return _callee(node).isupper()
+    try:
+        ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return False
+    return True
+
+
+def _passed(call: ast.Call, position: int | None, name: str):
+    """The expression ``call`` passes for the parameter, ``None`` when it
+    omits it, or ``...`` when ``*``/``**`` hides what it passes."""
+    for k in call.keywords:
+        if k.arg == name:
+            return k.value
+    if position is not None:
+        for i, a in enumerate(call.args):
+            if isinstance(a, ast.Starred):
+                return ...
+            if i == position:
+                return a
+    if any(k.arg is None for k in call.keywords):
+        return ...
+    return None
+
+
+def _fixed(passed: list, default: ast.AST | None) -> bool:
+    """Whether the arguments ``passed`` at a parameter's calls (see
+    :func:`_passed`) fix it: one value, or an unused default."""
+    if default is not None and passed and all(v not in (None, ...) for v in passed):
         return True
-    return position is not None and (
-        len(call.args) > position
-        or any(isinstance(a, ast.Starred) for a in call.args)
-    )
+    values = set()
+    for value in passed:
+        value = default if value is None else value
+        if value in (None, ...) or (value is not default and not _constant(value)):
+            return False
+        values.add(ast.dump(value))
+    return len(values) == 1 or (not passed and default is not None)
 
 
-def unset_parameters() -> list[str]:
-    """``path:function:param`` of each defaulted parameter of a reached
-    function that no call in reached code sets, by keyword, by position
-    or through ``*``/``**``."""
+def fixed_parameters() -> list[str]:
+    """``path:function:param`` of each parameter of a reached function
+    that the reached calls fix, by the module docstring's two rules."""
     defs, done, code = _reached_defs()
     reached = [site for name in done for site in defs[name]]
     calls: dict[str, list[ast.Call]] = {}
@@ -230,12 +273,13 @@ def unset_parameters() -> list[str]:
     for where, top in reached:
         wrapper = ast.Module(body=[top], type_ignores=[])
         for qual, key, fn, method in _functions(wrapper):
-            for position, param in _defaulted(fn, method):
-                if not any(_sets(c, position, param) for c in calls.get(key, ())):
+            sites = calls.get(key, [])
+            for position, param, default in _parameters(fn, method):
+                if _fixed([_passed(c, position, param) for c in sites], default):
                     out.append(f"{where}:{qual}:{param}")
     return sorted(out)
 
 
 if __name__ == "__main__":
-    for line in unreached() + unreached_functions() + unset_parameters():
+    for line in unreached() + unreached_functions() + fixed_parameters():
         print(line)
