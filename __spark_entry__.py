@@ -12,7 +12,9 @@ comparison locally at sf0.001 so mismatches never reach the driver.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,21 +31,30 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return dict(QUERIES)
+    """One entry per implemented operator from SURVEY.md §2, least
+    recently verified first.
+
+    The correctness check reads only the first 50 entries. The order is
+    queries with an oracle before those without, then the last round in
+    which the name appears in a CORRECTNESS_r{N}.json next to this file
+    (0 if never), then the name. Each new ledger file moves the window
+    onto the next-stalest queries."""
+    last: dict[str, int] = {}
+    for path in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name in json.loads(path.read_text()):
+            last[name] = max(rnd, last.get(name, 0))
+    oracles = build_oracles()
+    order = sorted(
+        QUERIES, key=lambda n: (n not in oracles, last.get(n, 0), n)
+    )
+    return {name: QUERIES[name] for name in order}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for each query
-    (emb_pca omitted: DuckDB has no
-    eigen solver, accuracy pinned by tests/test_pca.py numpy parity;
-    doc_unigram_tokenize omitted: the EM lattice / Viterbi DP are not
-    SQL-expressible, pinned by tests/test_unigram.py brute-force
-    references. The whole ANN family is fully oracled — ann_lsh in
-    r08, ann_ivf and ann_pq in r09 — and so is the dyadic rank sketch
-    since r10: _sql_rank_sketch replicates Spark's XxHash64 in
-    staged-CTE HUGEINT SQL, so its registered shape is deterministic
-    end-to-end like the PQ codebooks. approx_event_stats joined the
-    oracled set in r11 by re-basing on the portable md5-register HLL,
-    its accuracy pinned by tests/test_approx.py)."""
+    """DuckDB-runnable ANSI SQL twin for each query but two: emb_pca
+    (DuckDB has no eigen solver; tests/test_pca.py pins it against
+    numpy) and doc_unigram_tokenize (its EM lattice and Viterbi DP are
+    not SQL-expressible; tests/test_unigram.py pins it against
+    brute-force references)."""
     return build_oracles()

@@ -242,16 +242,9 @@ def main() -> None:
     # over consecutive runs is the steady-state number a cluster would see.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
-    # SORTED execution order, deliberately decoupled from QUERIES'
-    # registration order: registration order is the driver's rotating
-    # 50-slot correctness window, which reshuffles every round — and a
-    # query's wall time at local[32] depends measurably on its position
-    # in the 200-query session (JVM heap/GC/codegen-cache state), so
-    # iterating in registration order made every rotation move DOZENS
-    # of untouched queries in the idle map (the r10 "geo_trajectory
-    # 0.50→1.15 s with zero code change" mystery). Sorted order is
-    # stable across rotations, so round-over-round map diffs compare
-    # each query at the same session position.
+    # Sorted by name: a query's wall time depends on its position in the
+    # session (JVM heap/GC/codegen-cache state), so a fixed order keeps
+    # map diffs comparable query by query.
     for name, fn in sorted(QUERIES.items()):
         samples = []
         for _ in range(runs):

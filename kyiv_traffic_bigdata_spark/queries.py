@@ -13131,463 +13131,222 @@ GROUP BY t.event_type
 # Registry
 # --------------------------------------------------------------------------
 
-# Registration order is load-bearing: the driver's CORRECTNESS harness
-# verifies the FIRST 50 entries only (proven by the r2→r3 coverage
-# diff), so the first 50 slots are rotated each round toward the
-# queries with the least hard driver evidence. History note: the r10
-# window verified the newly-oracled rank sketch, the five r10
-# statistics queries, the remaining r06 cohort, and the stalest r07
-# queries; the r11 window below verifies the newly-oracled
-# approx_event_stats, refreshes the flagship's r6-stale hash row,
-# clears the whole r07 cohort plus the 2 stalest r08 queries (the r10
-# VERDICT asks #1/#3/#5), and verifies the 15 r11 statistics/UQ/
-# multi-criteria additions (never-checked = stalest by the
-# invariant). The rotation is no longer
-# narrated prose: test_rotation_ledger_window_is_least_recent computes
-# the name → last-driver-round ledger from the CORRECTNESS_r*.json
-# files and fails if any window slot re-verifies a query fresher than
-# the stalest non-window oracle-checkable query (flagship exempt).
-# tests/test_oracle.py also enforces marker position, no duplicate
-# keys, and all-window-slots-oracled (no-oracle approximates pinned at
-# the very tail so no window slot is spent on a permanent no_oracle
-# row).
+#: Every registered query with its DuckDB oracle SQL, or None where no SQL
+#: twin exists. A query's name is its function name without ``q_``. The
+#: order carries no meaning: __spark_entry__.queries() computes the
+#: verification order from the CORRECTNESS_r*.json ledger.
+REGISTRY: tuple[tuple[QueryFn, str | None], ...] = (
+    (q_pricing_summary, SQL_PRICING),
+    (q_top_parts, SQL_TOP_PARTS),
+    (q_lineitem_enriched, SQL_ENRICHED),
+    (q_latest_event_per_user, SQL_LATEST),
+    (q_event_value_rate, SQL_RATE),
+    (q_event_type_rate_stats, SQL_RATE_STATS),
+    (q_hourly_event_stats, SQL_HOURLY),
+    (q_user_sessions, SQL_SESSIONS),
+    (q_user_session_windows, SQL_SESSION_WINDOWS),
+    (q_event_retention, SQL_EVENT_RETENTION),
+    (q_moving_event_stats, _sql_moving()),
+    (q_approx_event_stats, _sql_approx_event_stats()),
+    (q_event_props_stats, SQL_PROPS),
+    (q_event_type_pivot, SQL_PIVOT),
+    (q_value_buckets, SQL_BUCKETS),
+    (q_dedup_events, SQL_DEDUP_EVENTS),
+    (q_top_customers, SQL_TOP_CUSTOMERS),
+    (q_global_event_stats, SQL_GLOBAL_STATS),
+    (q_geo_trajectory, SQL_GEO_TRAJ),
+    (q_geo_speed_by_type, SQL_GEO_SPEED_STATS),
+    (q_geo_region_counts, SQL_GEO_REGIONS),
+    (q_orders_without_lineitems, SQL_ANTI),
+    (q_active_customers, SQL_SEMI),
+    (q_event_union, SQL_UNION),
+    (q_events_asof_error, SQL_ASOF),
+    (q_geo_nearby_events, SQL_GEO_NEARBY),
+    (q_emb_cosine_neardups, _sql_emb_neardups()),
+    (q_sales_rollup, SQL_ROLLUP),
+    (q_salted_supplier_stats, SQL_SALTED),
+    (q_top_orders_per_priority, SQL_TOP_PER_GROUP),
+    (q_sales_cube, SQL_CUBE),
+    (q_value_percentiles, SQL_PERCENTILES),
+    (q_doc_stats, _sql_doc_stats()),
+    (q_doc_langid_confusion, _sql_langid_confusion()),
+    (q_event_anomaly_profile, SQL_EVENT_ANOMALY),
+    (q_doc_lang_token_stats, SQL_LANG_TOKENS),
+    (q_doc_exact_dups, SQL_EXACT_DUPS),
+    (q_ngram_neardups, SQL_NGRAM_NEARDUPS),
+    (q_minhash_signatures, SQL_MINHASH_SIG),
+    (q_minhash_lsh_pairs, _sql_minhash_lsh()),
+    (q_simhash, SQL_SIMHASH),
+    (q_simhash_neardups, _sql_simhash_neardups()),
+    (q_winnow_fingerprints, _sql_winnow_fps()),
+    (q_winnow_overlap, _sql_winnow_overlap()),
+    (q_doc_cdc_chunks, _sql_doc_cdc_chunks()),
+    (q_token_zipf_fit, _sql_token_zipf_fit()),
+    (q_user_ab_lift, _sql_user_ab_lift()),
+    (q_cosine_topk, SQL_COSINE_TOPK),
+    (q_embedding_norms, SQL_EMB_NORMS),
+    (q_ann_lsh, _sql_ann_lsh()),
+    (q_ann_ivf, _sql_ann_ivf()),
+    (q_multimodal_features, SQL_MULTIMODAL),
+    (q_weather_pivot, _sql_weather()),
+    (q_neardup_components, _sql_neardup_components()),
+    (q_neardup_bfs_depths, _sql_neardup_bfs()),
+    (q_doc_sample_by_lang, SQL_SAMPLE_BY_LANG),
+    (q_doc_hash_sample, SQL_HASH_SAMPLE),
+    (q_doc_quality_filter, _sql_quality_filter()),
+    (q_doc_corpus_mix, _sql_corpus_mix()),
+    (q_doc_tfidf_terms, SQL_TFIDF),
+    (q_emb_quantized, SQL_QUANTIZED),
+    (q_clicks_after_error, SQL_CLICKS_AFTER_ERROR),
+    (q_doc_gopher_quality, _sql_gopher_quality()),
+    (q_doc_repetition_filter, _sql_repetition_filter()),
+    (q_doc_pack_windows, SQL_PACK_WINDOWS),
+    (q_doc_decontaminate, SQL_DECONTAMINATE),
+    (q_emb_kmeans, SQL_EMB_KMEANS),
+    (q_doc_vocab_coverage, SQL_VOCAB_COVERAGE),
+    (q_event_funnel, SQL_EVENT_FUNNEL),
+    (q_doc_data_card, SQL_DOC_DATA_CARD),
+    (q_event_gap_fill, SQL_EVENT_GAP_FILL),
+    (q_event_pivot_roundtrip, SQL_PIVOT_ROUNDTRIP),
+    (q_shipping_priority, SQL_SHIPPING_PRIORITY),
+    (q_local_supplier_volume, SQL_LOCAL_SUPPLIER_VOLUME),
+    (q_emb_semdedup, SQL_EMB_SEMDEDUP),
+    (q_ann_index_stats, _sql_ann_index_stats()),
+    (q_emb_pq, SQL_EMB_PQ),
+    (q_ann_pq, _sql_ann_pq()),
+    (q_doc_repeated_spans, SQL_DOC_REPEATED_SPANS),
+    (q_doc_clip_repeated, _sql_clip_repeated()),
+    (q_doc_splits, _sql_doc_splits()),
+    (q_event_audience_overlap, SQL_EVENT_AUDIENCE_OVERLAP),
+    (q_doc_upsample_mix, _sql_upsample_mix()),
+    (q_doc_subword_stats, SQL_DOC_SUBWORD_STATS),
+    (q_doc_token_pair_stats, SQL_TOKEN_PAIR_STATS),
+    (q_doc_chunks, SQL_DOC_CHUNKS),
+    (q_doc_source_drift, SQL_DOC_SOURCE_DRIFT),
+    (q_forecast_revenue, SQL_FORECAST_REVENUE),
+    (q_priority_count, SQL_PRIORITY_COUNT),
+    (q_returned_items, SQL_RETURNED_ITEMS),
+    (q_promo_revenue, SQL_PROMO_REVENUE),
+    (q_top_revenue_supplier, SQL_TOP_REVENUE_SUPPLIER),
+    (q_small_quantity_revenue, SQL_SMALL_QUANTITY_REVENUE),
+    (q_large_orders, SQL_LARGE_ORDERS),
+    (q_brand_discount_revenue, SQL_BRAND_DISCOUNT_REVENUE),
+    (q_idle_rich_customers, SQL_IDLE_RICH_CUSTOMERS),
+    (q_doc_unigram_logprob, SQL_UNIGRAM_LOGPROB),
+    (q_emb_pca, None),
+    (q_emb_pca_invariants, SQL_EMB_PCA_INVARIANTS),
+    (q_doc_curation_pipeline, _sql_curation_pipeline()),
+    (q_doc_pii_scrub, _sql_pii_scrub()),
+    (q_doc_quality_classifier, _sql_quality_classifier()),
+    (q_doc_novelty, _sql_doc_novelty()),
+    (q_doc_html_extract, _sql_html_extract()),
+    (q_neardup_pagerank, _sql_neardup_pagerank()),
+    (q_doc_mixture_weights, _sql_mixture_weights()),
+    (q_doc_url_normalize, _sql_url_normalize()),
+    (q_emb_decontaminate, _sql_emb_decontaminate()),
+    (q_doc_version_diff, _sql_version_diff()),
+    (q_doc_bigram_logprob, SQL_BIGRAM_LOGPROB),
+    (q_doc_domain_quality, _sql_domain_quality()),
+    (q_doc_neardup_keep, _sql_neardup_keep()),
+    (q_emb_cluster_prune, _sql_emb_cluster_prune()),
+    (q_doc_blocklist_filter, _sql_blocklist_filter()),
+    (q_doc_boilerplate_segments, _sql_boilerplate_segments()),
+    (q_nation_trade_volume, SQL_NATION_TRADE_VOLUME),
+    (q_nation_market_share, SQL_NATION_MARKET_SHARE),
+    (q_product_line_profit, SQL_PRODUCT_LINE_PROFIT),
+    (q_customer_order_distribution, SQL_CUSTOMER_ORDER_DISTRIBUTION),
+    (q_emb_signbits, _sql_emb_signbits()),
+    (q_ann_hamming, _sql_ann_hamming()),
+    (q_ann_hamming_rerank, _sql_ann_hamming_rerank()),
+    (q_events_changelog_state, SQL_CHANGELOG_STATE),
+    (q_doc_scd2_history, SQL_DOC_SCD2),
+    (q_neardup_triangles, _sql_neardup_triangles()),
+    (q_doc_bm25_topk, _sql_doc_bm25()),
+    (q_orders_profile, _sql_orders_profile()),
+    (q_emb_dim_stats, SQL_EMB_DIM_STATS),
+    (q_event_seasonality, SQL_EVENT_SEASONALITY),
+    (q_join_skew_profile, SQL_JOIN_SKEW_PROFILE),
+    (q_doc_phrase_search, _sql_doc_phrase_search()),
+    (q_customer_rfm_segments, _sql_customer_rfm()),
+    (q_bloom_join_filter, _sql_bloom_join_filter()),
+    (q_purchase_attribution, SQL_PURCHASE_ATTRIBUTION),
+    (q_fk_integrity_audit, _sql_fk_integrity_audit()),
+    (q_doc_hybrid_rrf, _sql_doc_hybrid_rrf()),
+    (q_event_markov_transitions, SQL_MARKOV_TRANSITIONS),
+    (q_doc_cross_lang_dups, SQL_CROSS_LANG_DUPS),
+    (q_part_type_yoy_growth, SQL_PART_TYPE_YOY),
+    (q_neardup_kcore, _sql_neardup_kcore()),
+    (q_neardup_prefix_pairs, SQL_PREFIX_PAIRS),
+    (q_sorted_neighborhood_pairs, SQL_SORTED_NEIGHBORHOOD),
+    (q_event_top_paths, SQL_EVENT_TOP_PATHS),
+    (q_user_distinct_sketch, SQL_USER_DISTINCT_SKETCH),
+    (q_user_overlap_sketch, SQL_USER_OVERLAP_SKETCH),
+    (q_doc_priority_sample, SQL_PRIORITY_SAMPLE),
+    (q_order_price_quantiles, SQL_ORDER_PRICE_QUANTILES),
+    (q_order_price_rank_sketch, _sql_rank_sketch()),
+    (q_neardup_communities, _sql_neardup_communities()),
+    (q_token_pmi, _sql_token_pmi()),
+    (q_token_textrank, _sql_token_textrank()),
+    (q_neardup_link_prediction, _sql_neardup_link_prediction()),
+    (q_event_assoc_rules, SQL_EVENT_ASSOC_RULES),
+    (q_event_type_ewma, SQL_EVENT_TYPE_EWMA),
+    (q_event_cms_heavy_hitters, _sql_event_cms()),
+    (q_min_cost_supplier, SQL_MIN_COST_SUPPLIER),
+    (q_important_part_value, SQL_IMPORTANT_PART_VALUE),
+    (q_late_shipment_priority, SQL_LATE_SHIPMENT_PRIORITY),
+    (q_supplier_part_variety, SQL_SUPPLIER_PART_VARIETY),
+    (q_dominant_part_suppliers, SQL_DOMINANT_PART_SUPPLIERS),
+    (q_suppliers_kept_waiting, SQL_SUPPLIERS_KEPT_WAITING),
+    (q_doc_token_entropy, _sql_doc_token_entropy()),
+    (q_doc_containment_dups, SQL_DOC_CONTAINMENT),
+    (q_event_bursts, SQL_EVENT_BURSTS),
+    (q_emb_range_search, SQL_EMB_RANGE_SEARCH),
+    (q_user_hll_sketch, _sql_user_hll_sketch()),
+    (q_doc_ngram_contamination, _sql_doc_ngram_contamination()),
+    (q_emb_mrl_recall, _sql_emb_mrl_recall()),
+    (q_doc_dsir_weights, _sql_doc_dsir_weights()),
+    (q_emb_hard_negatives, SQL_EMB_HARD_NEGATIVES),
+    (q_emb_hard_negatives_mined, _sql_emb_hard_negatives_mined()),
+    (q_emb_outliers, _sql_emb_outliers()),
+    (q_event_hopping_stats, SQL_HOPPING),
+    (q_user_cumulative_uniques, SQL_CUMULATIVE_UNIQUES),
+    (q_doc_length_gini, SQL_DOC_GINI),
+    (q_order_priority_marginals, SQL_ORDER_MARGINALS),
+    (q_event_trailing_window_stats, SQL_TRAILING_WINDOW),
+    (q_part_name_fuzzy_matches, SQL_FUZZY_MATCHES),
+    (q_doc_unigram_tokenize, None),
+    (q_doc_token_heavy_hitters, SQL_TOKEN_HEAVY_HITTERS),
+    (q_doc_kn_logprob, SQL_KN_LOGPROB),
+    (q_event_ks_drift, SQL_KS_DRIFT),
+    (q_event_mwu_drift, SQL_MWU_DRIFT),
+    (q_event_welch_drift, SQL_WELCH_DRIFT),
+    (q_event_cusum_shift, SQL_CUSUM_SHIFT),
+    (q_event_psi_drift, _sql_psi_drift()),
+    (q_event_winsor_stats, SQL_WINSOR_STATS),
+    (q_event_value_mad, SQL_EVENT_MAD),
+    (q_brand_price_ols, _ols_sql()),
+    (q_token_chi2_drift, SQL_CHI2_DRIFT),
+    (q_doc_gate_agreement, _sql_gate_agreement()),
+    (q_order_benford_digits, _sql_benford()),
+    (q_event_js_divergence, SQL_JS_DIVERGENCE),
+    (q_user_kaplan_meier, SQL_KAPLAN_MEIER),
+    (q_event_poisson_bootstrap, _sql_poisson_bootstrap()),
+    (q_part_price_skyline, SQL_PART_SKYLINE),
+    (q_geo_morton_density, _sql_morton_density()),
+    (q_event_trend_robust, SQL_TREND_ROBUST),
+    (q_doc_quality_auc, _sql_quality_auc()),
+    (q_event_markov_entropy, SQL_MARKOV_ENTROPY),
+    (q_event_conformal_interval, _sql_conformal_interval()),
+)
+
 QUERIES: dict[str, QueryFn] = {
-    # r13 window composition (driver verifies the FIRST 50 entries).
-    # Machine-checked by tests/test_oracle.py::test_rotation_ledger_
-    # window_is_least_recent against the CORRECTNESS_r*.json ledger.
-    # Post-r12 ledger histogram: r9x49, r10x50, r11x50, r12x50 — so
-    # the window = the whole remaining r09 cohort (49, stalest) + the
-    # stalest r10 slot. This also lands driver re-proof on 13 of the
-    # r12-touched paths (r12 VERDICT ask #1): doc_cdc_chunks, the
-    # graph family (bfs/kcore/communities), neardup_prefix_pairs,
-    # top_customers, important_part_value, dominant_part_suppliers,
-    # order_priority_marginals, min_cost_supplier, doc_containment_dups,
-    # doc_token_entropy and the rank sketch; the rest of the ask list
-    # carries r10/r11 evidence and cannot enter without violating the
-    # least-recent invariant (freshest_in <= stalest_out) while 49
-    # r9-stale queries wait — they head the staged r14 section below.
-    # (a) the full remaining 49-query r09-evidence cohort, prior order;
-    "user_cumulative_uniques": q_user_cumulative_uniques,
-    "part_name_fuzzy_matches": q_part_name_fuzzy_matches,
-    "doc_token_heavy_hitters": q_doc_token_heavy_hitters,
-    "event_trailing_window_stats": q_event_trailing_window_stats,
-    "neardup_bfs_depths": q_neardup_bfs_depths,
-    "order_priority_marginals": q_order_priority_marginals,
-    "doc_length_gini": q_doc_length_gini,
-    "emb_hard_negatives_mined": q_emb_hard_negatives_mined,
-    "doc_cdc_chunks": q_doc_cdc_chunks,
-    "token_zipf_fit": q_token_zipf_fit,
-    "user_ab_lift": q_user_ab_lift,
-    "ann_ivf": q_ann_ivf,
-    "ann_pq": q_ann_pq,
-    "moving_event_stats": q_moving_event_stats,
-    "event_props_stats": q_event_props_stats,
-    "event_type_pivot": q_event_type_pivot,
-    "value_buckets": q_value_buckets,
-    "dedup_events": q_dedup_events,
-    "top_customers": q_top_customers,
-    "global_event_stats": q_global_event_stats,
-    "geo_speed_by_type": q_geo_speed_by_type,
-    "geo_region_counts": q_geo_region_counts,
-    "orders_without_lineitems": q_orders_without_lineitems,
-    "active_customers": q_active_customers,
-    "min_cost_supplier": q_min_cost_supplier,
-    "important_part_value": q_important_part_value,
-    "late_shipment_priority": q_late_shipment_priority,
-    "supplier_part_variety": q_supplier_part_variety,
-    "dominant_part_suppliers": q_dominant_part_suppliers,
-    "suppliers_kept_waiting": q_suppliers_kept_waiting,
-    "doc_token_entropy": q_doc_token_entropy,
-    "doc_containment_dups": q_doc_containment_dups,
-    "event_bursts": q_event_bursts,
-    "emb_range_search": q_emb_range_search,
-    "neardup_kcore": q_neardup_kcore,
-    "neardup_prefix_pairs": q_neardup_prefix_pairs,
-    "sorted_neighborhood_pairs": q_sorted_neighborhood_pairs,
-    "event_top_paths": q_event_top_paths,
-    "user_distinct_sketch": q_user_distinct_sketch,
-    "doc_priority_sample": q_doc_priority_sample,
-    "order_price_quantiles": q_order_price_quantiles,
-    "user_overlap_sketch": q_user_overlap_sketch,
-    "neardup_communities": q_neardup_communities,
-    "token_pmi": q_token_pmi,
-    "neardup_link_prediction": q_neardup_link_prediction,
-    "event_assoc_rules": q_event_assoc_rules,
-    "event_type_ewma": q_event_type_ewma,
-    "event_cms_heavy_hitters": q_event_cms_heavy_hitters,
-    "cosine_topk": q_cosine_topk,
-    # (b) the stalest r10 slot (first in prior r10 order; also the
-    #     r12 rank-sketch single-scan change, per VERDICT ask #1).
-    "order_price_rank_sketch": q_order_price_rank_sketch,
-    # ---- slots above are inside the driver's 50-query verification
-    # window; everything below holds an r10/r11/r12 driver-green row
-    # and rides the driver-faithful local replica until its next
-    # rotation. Non-window entries are kept stalest-first so the head
-    # of this section IS the staged r14 window (tools/rotation.py
-    # re-derives it from the ledger either way). ----
-    # r10 driver-green
-    "doc_kn_logprob": q_doc_kn_logprob,
-    "event_ks_drift": q_event_ks_drift,
-    "event_value_mad": q_event_value_mad,
-    "brand_price_ols": q_brand_price_ols,
-    "token_chi2_drift": q_token_chi2_drift,
-    "doc_gate_agreement": q_doc_gate_agreement,
-    "embedding_norms": q_embedding_norms,
-    "event_union": q_event_union,
-    "events_asof_error": q_events_asof_error,
-    "emb_cosine_neardups": q_emb_cosine_neardups,
-    "doc_stats": q_doc_stats,
-    "doc_sample_by_lang": q_doc_sample_by_lang,
-    "doc_lang_token_stats": q_doc_lang_token_stats,
-    "doc_exact_dups": q_doc_exact_dups,
-    "geo_nearby_events": q_geo_nearby_events,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "minhash_signatures": q_minhash_signatures,
-    "multimodal_features": q_multimodal_features,
-    "neardup_components": q_neardup_components,
-    "ngram_neardups": q_ngram_neardups,
-    "sales_cube": q_sales_cube,
-    "sales_rollup": q_sales_rollup,
-    "salted_supplier_stats": q_salted_supplier_stats,
-    "simhash": q_simhash,
-    "simhash_neardups": q_simhash_neardups,
-    "top_orders_per_priority": q_top_orders_per_priority,
-    "value_percentiles": q_value_percentiles,
-    "weather_pivot": q_weather_pivot,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "winnow_overlap": q_winnow_overlap,
-    "bloom_join_filter": q_bloom_join_filter,
-    "doc_hybrid_rrf": q_doc_hybrid_rrf,
-    "doc_phrase_search": q_doc_phrase_search,
-    "event_seasonality": q_event_seasonality,
-    "fk_integrity_audit": q_fk_integrity_audit,
-    "join_skew_profile": q_join_skew_profile,
-    "purchase_attribution": q_purchase_attribution,
-    "token_textrank": q_token_textrank,
-    "emb_dim_stats": q_emb_dim_stats,
-    "customer_rfm_segments": q_customer_rfm_segments,
-    "orders_profile": q_orders_profile,
-    "ann_index_stats": q_ann_index_stats,
-    "brand_discount_revenue": q_brand_discount_revenue,
-    "clicks_after_error": q_clicks_after_error,
-    "doc_chunks": q_doc_chunks,
-    "doc_clip_repeated": q_doc_clip_repeated,
-    "doc_corpus_mix": q_doc_corpus_mix,
-    "doc_curation_pipeline": q_doc_curation_pipeline,
-    "doc_data_card": q_doc_data_card,
-    # r11 driver-green (incl. the flagship, whose entry() smoke runs every round regardless)
-    "approx_event_stats": q_approx_event_stats,
-    "geo_trajectory": q_geo_trajectory,
-    "doc_decontaminate": q_doc_decontaminate,
-    "doc_gopher_quality": q_doc_gopher_quality,
-    "doc_hash_sample": q_doc_hash_sample,
-    "doc_langid_confusion": q_doc_langid_confusion,
-    "doc_pii_scrub": q_doc_pii_scrub,
-    "doc_quality_filter": q_doc_quality_filter,
-    "doc_repeated_spans": q_doc_repeated_spans,
-    "doc_repetition_filter": q_doc_repetition_filter,
-    "doc_source_drift": q_doc_source_drift,
-    "doc_splits": q_doc_splits,
-    "doc_subword_stats": q_doc_subword_stats,
-    "doc_tfidf_terms": q_doc_tfidf_terms,
-    "doc_token_pair_stats": q_doc_token_pair_stats,
-    "doc_unigram_logprob": q_doc_unigram_logprob,
-    "doc_upsample_mix": q_doc_upsample_mix,
-    "doc_version_diff": q_doc_version_diff,
-    "doc_vocab_coverage": q_doc_vocab_coverage,
-    "emb_decontaminate": q_emb_decontaminate,
-    "emb_kmeans": q_emb_kmeans,
-    "emb_semdedup": q_emb_semdedup,
-    "event_anomaly_profile": q_event_anomaly_profile,
-    "event_audience_overlap": q_event_audience_overlap,
-    "event_funnel": q_event_funnel,
-    "event_gap_fill": q_event_gap_fill,
-    "event_pivot_roundtrip": q_event_pivot_roundtrip,
-    "forecast_revenue": q_forecast_revenue,
-    "idle_rich_customers": q_idle_rich_customers,
-    "large_orders": q_large_orders,
-    "local_supplier_volume": q_local_supplier_volume,
-    "neardup_pagerank": q_neardup_pagerank,
-    "priority_count": q_priority_count,
-    "user_hll_sketch": q_user_hll_sketch,
-    "doc_ngram_contamination": q_doc_ngram_contamination,
-    "event_mwu_drift": q_event_mwu_drift,
-    "event_welch_drift": q_event_welch_drift,
-    "event_cusum_shift": q_event_cusum_shift,
-    "event_psi_drift": q_event_psi_drift,
-    "event_winsor_stats": q_event_winsor_stats,
-    "order_benford_digits": q_order_benford_digits,
-    "event_js_divergence": q_event_js_divergence,
-    "user_kaplan_meier": q_user_kaplan_meier,
-    "event_poisson_bootstrap": q_event_poisson_bootstrap,
-    "part_price_skyline": q_part_price_skyline,
-    "geo_morton_density": q_geo_morton_density,
-    "event_trend_robust": q_event_trend_robust,
-    "doc_quality_auc": q_doc_quality_auc,
-    "event_markov_entropy": q_event_markov_entropy,
-    "event_conformal_interval": q_event_conformal_interval,
-    # r12 driver-green
-    "emb_pca_invariants": q_emb_pca_invariants,
-    "emb_mrl_recall": q_emb_mrl_recall,
-    "doc_dsir_weights": q_doc_dsir_weights,
-    "emb_hard_negatives": q_emb_hard_negatives,
-    "emb_outliers": q_emb_outliers,
-    "ann_lsh": q_ann_lsh,
-    "promo_revenue": q_promo_revenue,
-    "returned_items": q_returned_items,
-    "shipping_priority": q_shipping_priority,
-    "small_quantity_revenue": q_small_quantity_revenue,
-    "top_revenue_supplier": q_top_revenue_supplier,
-    "doc_url_normalize": q_doc_url_normalize,
-    "doc_mixture_weights": q_doc_mixture_weights,
-    "doc_html_extract": q_doc_html_extract,
-    "doc_novelty": q_doc_novelty,
-    "doc_quality_classifier": q_doc_quality_classifier,
-    "emb_quantized": q_emb_quantized,
-    "emb_pq": q_emb_pq,
-    "doc_pack_windows": q_doc_pack_windows,
-    "doc_bigram_logprob": q_doc_bigram_logprob,
-    "doc_domain_quality": q_doc_domain_quality,
-    "doc_neardup_keep": q_doc_neardup_keep,
-    "emb_cluster_prune": q_emb_cluster_prune,
-    "doc_blocklist_filter": q_doc_blocklist_filter,
-    "doc_boilerplate_segments": q_doc_boilerplate_segments,
-    "nation_trade_volume": q_nation_trade_volume,
-    "nation_market_share": q_nation_market_share,
-    "product_line_profit": q_product_line_profit,
-    "customer_order_distribution": q_customer_order_distribution,
-    "emb_signbits": q_emb_signbits,
-    "ann_hamming": q_ann_hamming,
-    "ann_hamming_rerank": q_ann_hamming_rerank,
-    "events_changelog_state": q_events_changelog_state,
-    "doc_scd2_history": q_doc_scd2_history,
-    "neardup_triangles": q_neardup_triangles,
-    "doc_bm25_topk": q_doc_bm25_topk,
-    "event_markov_transitions": q_event_markov_transitions,
-    "doc_cross_lang_dups": q_doc_cross_lang_dups,
-    "part_type_yoy_growth": q_part_type_yoy_growth,
-    "pricing_summary": q_pricing_summary,
-    "top_parts": q_top_parts,
-    "lineitem_enriched": q_lineitem_enriched,
-    "latest_event_per_user": q_latest_event_per_user,
-    "event_value_rate": q_event_value_rate,
-    "event_type_rate_stats": q_event_type_rate_stats,
-    "hourly_event_stats": q_hourly_event_stats,
-    "user_sessions": q_user_sessions,
-    "user_session_windows": q_user_session_windows,
-    "event_retention": q_event_retention,
-    "event_hopping_stats": q_event_hopping_stats,
-    # ---- no-oracle approximates: permanently at the tail so they
-    # never occupy a driver verification slot (accuracy pinned by
-    # recall/error tests, not a SQL twin). r12 note: emb_pca now has a
-    # PARTIAL oracle via the emb_pca_invariants window query (trace
-    # dual-computed, eigen invariants CHECK-pinned); the raw projection
-    # query itself stays un-SQL-able (DuckDB has no eigen solver), as
-    # does the EM/Viterbi DP in doc_unigram_tokenize. ----
-    "emb_pca": q_emb_pca,
-    "doc_unigram_tokenize": q_doc_unigram_tokenize,
+    fn.__name__.removeprefix("q_"): fn for fn, _ in REGISTRY
 }
 
 
 def build_oracles() -> dict[str, str]:
     return {
-        "emb_pca_invariants": SQL_EMB_PCA_INVARIANTS,
-        "approx_event_stats": _sql_approx_event_stats(),
-        "event_mwu_drift": SQL_MWU_DRIFT,
-        "event_welch_drift": SQL_WELCH_DRIFT,
-        "event_cusum_shift": SQL_CUSUM_SHIFT,
-        "event_psi_drift": _sql_psi_drift(),
-        "event_winsor_stats": SQL_WINSOR_STATS,
-        "order_benford_digits": _sql_benford(),
-        "event_js_divergence": SQL_JS_DIVERGENCE,
-        "user_kaplan_meier": SQL_KAPLAN_MEIER,
-        "event_poisson_bootstrap": _sql_poisson_bootstrap(),
-        "part_price_skyline": SQL_PART_SKYLINE,
-        "geo_morton_density": _sql_morton_density(),
-        "event_trend_robust": SQL_TREND_ROBUST,
-        "doc_quality_auc": _sql_quality_auc(),
-        "event_markov_entropy": SQL_MARKOV_ENTROPY,
-        "event_conformal_interval": _sql_conformal_interval(),
-        "order_price_rank_sketch": _sql_rank_sketch(),
-        "doc_kn_logprob": SQL_KN_LOGPROB,
-        "event_ks_drift": SQL_KS_DRIFT,
-        "event_value_mad": SQL_EVENT_MAD,
-        "brand_price_ols": _ols_sql(),
-        "token_chi2_drift": SQL_CHI2_DRIFT,
-        "doc_gate_agreement": _sql_gate_agreement(),
-        "event_hopping_stats": SQL_HOPPING,
-        "user_cumulative_uniques": SQL_CUMULATIVE_UNIQUES,
-        "part_name_fuzzy_matches": SQL_FUZZY_MATCHES,
-        "doc_token_heavy_hitters": SQL_TOKEN_HEAVY_HITTERS,
-        "event_trailing_window_stats": SQL_TRAILING_WINDOW,
-        "neardup_bfs_depths": _sql_neardup_bfs(),
-        "order_priority_marginals": SQL_ORDER_MARGINALS,
-        "doc_length_gini": SQL_DOC_GINI,
-        "user_hll_sketch": _sql_user_hll_sketch(),
-        "doc_ngram_contamination": _sql_doc_ngram_contamination(),
-        "emb_mrl_recall": _sql_emb_mrl_recall(),
-        "doc_dsir_weights": _sql_doc_dsir_weights(),
-        "emb_hard_negatives": SQL_EMB_HARD_NEGATIVES,
-        "emb_hard_negatives_mined": _sql_emb_hard_negatives_mined(),
-        "doc_cdc_chunks": _sql_doc_cdc_chunks(),
-        "ann_ivf": _sql_ann_ivf(),
-        "ann_pq": _sql_ann_pq(),
-        "token_zipf_fit": _sql_token_zipf_fit(),
-        "user_ab_lift": _sql_user_ab_lift(),
-        "emb_outliers": _sql_emb_outliers(),
-        "ann_lsh": _sql_ann_lsh(),
-        "min_cost_supplier": SQL_MIN_COST_SUPPLIER,
-        "important_part_value": SQL_IMPORTANT_PART_VALUE,
-        "late_shipment_priority": SQL_LATE_SHIPMENT_PRIORITY,
-        "supplier_part_variety": SQL_SUPPLIER_PART_VARIETY,
-        "dominant_part_suppliers": SQL_DOMINANT_PART_SUPPLIERS,
-        "suppliers_kept_waiting": SQL_SUPPLIERS_KEPT_WAITING,
-        "doc_token_entropy": _sql_doc_token_entropy(),
-        "neardup_kcore": _sql_neardup_kcore(),
-        "neardup_prefix_pairs": SQL_PREFIX_PAIRS,
-        "sorted_neighborhood_pairs": SQL_SORTED_NEIGHBORHOOD,
-        "event_top_paths": SQL_EVENT_TOP_PATHS,
-        "user_distinct_sketch": SQL_USER_DISTINCT_SKETCH,
-        "doc_priority_sample": SQL_PRIORITY_SAMPLE,
-        "order_price_quantiles": SQL_ORDER_PRICE_QUANTILES,
-        "user_overlap_sketch": SQL_USER_OVERLAP_SKETCH,
-        "neardup_communities": _sql_neardup_communities(),
-        "token_pmi": _sql_token_pmi(),
-        "neardup_link_prediction": _sql_neardup_link_prediction(),
-        "token_textrank": _sql_token_textrank(),
-        "event_assoc_rules": SQL_EVENT_ASSOC_RULES,
-        "event_type_ewma": SQL_EVENT_TYPE_EWMA,
-        "event_cms_heavy_hitters": _sql_event_cms(),
-        "doc_containment_dups": SQL_DOC_CONTAINMENT,
-        "event_bursts": SQL_EVENT_BURSTS,
-        "emb_range_search": SQL_EMB_RANGE_SEARCH,
-        "pricing_summary": SQL_PRICING,
-        "top_parts": SQL_TOP_PARTS,
-        "lineitem_enriched": SQL_ENRICHED,
-        "latest_event_per_user": SQL_LATEST,
-        "event_value_rate": SQL_RATE,
-        "event_type_rate_stats": SQL_RATE_STATS,
-        "hourly_event_stats": SQL_HOURLY,
-        "user_sessions": SQL_SESSIONS,
-        "user_session_windows": SQL_SESSION_WINDOWS,
-        "event_retention": SQL_EVENT_RETENTION,
-        "moving_event_stats": _sql_moving(),
-        "event_props_stats": SQL_PROPS,
-        "event_type_pivot": SQL_PIVOT,
-        "value_buckets": SQL_BUCKETS,
-        "dedup_events": SQL_DEDUP_EVENTS,
-        "top_customers": SQL_TOP_CUSTOMERS,
-        "global_event_stats": SQL_GLOBAL_STATS,
-        "geo_trajectory": SQL_GEO_TRAJ,
-        "geo_speed_by_type": SQL_GEO_SPEED_STATS,
-        "geo_region_counts": SQL_GEO_REGIONS,
-        "fk_integrity_audit": _sql_fk_integrity_audit(),
-        "join_skew_profile": SQL_JOIN_SKEW_PROFILE,
-        "orders_profile": _sql_orders_profile(),
-        "orders_without_lineitems": SQL_ANTI,
-        "active_customers": SQL_SEMI,
-        "event_union": SQL_UNION,
-        "events_asof_error": SQL_ASOF,
-        "geo_nearby_events": SQL_GEO_NEARBY,
-        "emb_cosine_neardups": _sql_emb_neardups(),
-        "sales_rollup": SQL_ROLLUP,
-        "sales_cube": SQL_CUBE,
-        "top_orders_per_priority": SQL_TOP_PER_GROUP,
-        "salted_supplier_stats": SQL_SALTED,
-        "value_percentiles": SQL_PERCENTILES,
-        "doc_stats": _sql_doc_stats(),
-        "doc_lang_token_stats": SQL_LANG_TOKENS,
-        "doc_exact_dups": SQL_EXACT_DUPS,
-        "ngram_neardups": SQL_NGRAM_NEARDUPS,
-        "minhash_signatures": SQL_MINHASH_SIG,
-        "minhash_lsh_pairs": _sql_minhash_lsh(),
-        "simhash": SQL_SIMHASH,
-        "simhash_neardups": _sql_simhash_neardups(),
-        "winnow_fingerprints": _sql_winnow_fps(),
-        "winnow_overlap": _sql_winnow_overlap(),
-        "cosine_topk": SQL_COSINE_TOPK,
-        "embedding_norms": SQL_EMB_NORMS,
-        "multimodal_features": SQL_MULTIMODAL,
-        "weather_pivot": _sql_weather(),
-        "neardup_components": _sql_neardup_components(),
-        "doc_sample_by_lang": SQL_SAMPLE_BY_LANG,
-        "doc_hash_sample": SQL_HASH_SAMPLE,
-        "doc_hybrid_rrf": _sql_doc_hybrid_rrf(),
-        "doc_tfidf_terms": SQL_TFIDF,
-        "emb_quantized": SQL_QUANTIZED,
-        "clicks_after_error": SQL_CLICKS_AFTER_ERROR,
-        "doc_corpus_mix": _sql_corpus_mix(),
-        "doc_quality_filter": _sql_quality_filter(),
-        "doc_gopher_quality": _sql_gopher_quality(),
-        "doc_repetition_filter": _sql_repetition_filter(),
-        "doc_pack_windows": SQL_PACK_WINDOWS,
-        "doc_decontaminate": SQL_DECONTAMINATE,
-        "emb_kmeans": SQL_EMB_KMEANS,
-        "doc_vocab_coverage": SQL_VOCAB_COVERAGE,
-        "event_funnel": SQL_EVENT_FUNNEL,
-        "doc_data_card": SQL_DOC_DATA_CARD,
-        "event_gap_fill": SQL_EVENT_GAP_FILL,
-        "event_pivot_roundtrip": SQL_PIVOT_ROUNDTRIP,
-        "event_seasonality": SQL_EVENT_SEASONALITY,
-        "shipping_priority": SQL_SHIPPING_PRIORITY,
-        "local_supplier_volume": SQL_LOCAL_SUPPLIER_VOLUME,
-        "purchase_attribution": SQL_PURCHASE_ATTRIBUTION,
-        "returned_items": SQL_RETURNED_ITEMS,
-        "forecast_revenue": SQL_FORECAST_REVENUE,
-        "priority_count": SQL_PRIORITY_COUNT,
-        "promo_revenue": SQL_PROMO_REVENUE,
-        "top_revenue_supplier": SQL_TOP_REVENUE_SUPPLIER,
-        "small_quantity_revenue": SQL_SMALL_QUANTITY_REVENUE,
-        "large_orders": SQL_LARGE_ORDERS,
-        "bloom_join_filter": _sql_bloom_join_filter(),
-        "brand_discount_revenue": SQL_BRAND_DISCOUNT_REVENUE,
-        "idle_rich_customers": SQL_IDLE_RICH_CUSTOMERS,
-        "emb_semdedup": SQL_EMB_SEMDEDUP,
-        "emb_pq": SQL_EMB_PQ,
-        "doc_chunks": SQL_DOC_CHUNKS,
-        "doc_subword_stats": SQL_DOC_SUBWORD_STATS,
-        "doc_token_pair_stats": SQL_TOKEN_PAIR_STATS,
-        "doc_upsample_mix": _sql_upsample_mix(),
-        "event_audience_overlap": SQL_EVENT_AUDIENCE_OVERLAP,
-        "doc_repeated_spans": SQL_DOC_REPEATED_SPANS,
-        "doc_clip_repeated": _sql_clip_repeated(),
-        "doc_splits": _sql_doc_splits(),
-        "doc_langid_confusion": _sql_langid_confusion(),
-        "event_anomaly_profile": SQL_EVENT_ANOMALY,
-        "ann_index_stats": _sql_ann_index_stats(),
-        "doc_source_drift": SQL_DOC_SOURCE_DRIFT,
-        "doc_unigram_logprob": SQL_UNIGRAM_LOGPROB,
-        "doc_curation_pipeline": _sql_curation_pipeline(),
-        "doc_phrase_search": _sql_doc_phrase_search(),
-        "doc_pii_scrub": _sql_pii_scrub(),
-        "doc_version_diff": _sql_version_diff(),
-        "emb_decontaminate": _sql_emb_decontaminate(),
-        "doc_url_normalize": _sql_url_normalize(),
-        "doc_mixture_weights": _sql_mixture_weights(),
-        "neardup_pagerank": _sql_neardup_pagerank(),
-        "doc_html_extract": _sql_html_extract(),
-        "doc_novelty": _sql_doc_novelty(),
-        "doc_quality_classifier": _sql_quality_classifier(),
-        "doc_bigram_logprob": SQL_BIGRAM_LOGPROB,
-        "doc_domain_quality": _sql_domain_quality(),
-        "doc_neardup_keep": _sql_neardup_keep(),
-        "emb_cluster_prune": _sql_emb_cluster_prune(),
-        "emb_dim_stats": SQL_EMB_DIM_STATS,
-        "doc_blocklist_filter": _sql_blocklist_filter(),
-        "doc_boilerplate_segments": _sql_boilerplate_segments(),
-        "nation_trade_volume": SQL_NATION_TRADE_VOLUME,
-        "nation_market_share": SQL_NATION_MARKET_SHARE,
-        "product_line_profit": SQL_PRODUCT_LINE_PROFIT,
-        "customer_order_distribution": SQL_CUSTOMER_ORDER_DISTRIBUTION,
-        "customer_rfm_segments": _sql_customer_rfm(),
-        "emb_signbits": _sql_emb_signbits(),
-        "ann_hamming": _sql_ann_hamming(),
-        "ann_hamming_rerank": _sql_ann_hamming_rerank(),
-        "events_changelog_state": SQL_CHANGELOG_STATE,
-        "doc_scd2_history": SQL_DOC_SCD2,
-        "neardup_triangles": _sql_neardup_triangles(),
-        "doc_bm25_topk": _sql_doc_bm25(),
-        "event_markov_transitions": SQL_MARKOV_TRANSITIONS,
-        "doc_cross_lang_dups": SQL_CROSS_LANG_DUPS,
-        "part_type_yoy_growth": SQL_PART_TYPE_YOY,
+        fn.__name__.removeprefix("q_"): sql
+        for fn, sql in REGISTRY
+        if sql is not None
     }

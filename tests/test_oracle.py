@@ -162,7 +162,11 @@ def test_driver_window_fully_oracle_checkable():
     queries only — every one of those slots must carry an oracle twin
     (a no-oracle query in the window burns a verification slot on a
     permanent `no_oracle` row). No-oracle approximates belong at the
-    tail."""
+    tail. No two registry rows may share a name: the dict would keep
+    only one of them."""
+    from kyiv_traffic_bigdata_spark.queries import QUERIES, REGISTRY
+
+    assert len(QUERIES) == len(REGISTRY)
     names = list(queries())
     window = names[:50]
     missing = [n for n in window if n not in ORACLES]
@@ -175,110 +179,35 @@ def test_driver_window_fully_oracle_checkable():
     )
 
 
-def test_registry_window_marker_and_no_duplicate_keys():
-    """Bookkeeping invariants the dict literal cannot enforce itself:
-
-    1. The `slots above are inside the driver's 50-query verification
-       window` marker comment in queries.py must sit exactly after the
-       50th entry — otherwise the round's coverage notes silently lie
-       about which queries earned driver rows (r5 had it at 51).
-    2. The QUERIES literal must not contain duplicate keys: Python
-       dedupes them silently (first insertion wins), which corrupts the
-       window bookkeeping without any behavioral signal.
-    """
-    import re
-    from pathlib import Path
-
-    import kyiv_traffic_bigdata_spark.queries as qmod
-
-    src = Path(qmod.__file__).read_text()
-    m = re.search(r"QUERIES: dict\[str, QueryFn\] = \{(.*?)\n\}", src, re.S)
-    assert m, "QUERIES literal not found"
-    body = m.group(1)
-    keys = re.findall(r'^\s*"(\w+)":', body, re.M)
-    dups = sorted({k for k in keys if keys.count(k) > 1})
-    assert not dups, f"duplicate keys in QUERIES literal: {dups}"
-
-    n_before_marker = None
-    seen = 0
-    for line in body.split("\n"):
-        if re.match(r'\s*"(\w+)":', line):
-            seen += 1
-        if "slots above are inside" in line:
-            n_before_marker = seen
-            break
-    assert n_before_marker == 50, (
-        f"window marker sits after entry {n_before_marker}, expected 50"
-    )
-
-
 def test_rotation_ledger_window_is_least_recent():
-    """Machine-checked window rotation (r06 VERDICT ask #5 — the r05
-    off-by-one and the r06 stale header both happened because the
-    composition was narrated in comments, not asserted).
+    """The 50 window slots cover the least recently verified queries.
 
     Ledger: name → latest round with a driver CORRECTNESS row, computed
     from the CORRECTNESS_r*.json files at the repo root (never-checked
-    queries ledger at 0). Invariant: no window slot may re-verify a
-    query FRESHER than the stalest non-window oracle-checkable query —
-    i.e. the 50 slots always cover least-recent driver evidence. The
-    flagship (`geo_trajectory`, = driver entry(), smoke-checked every
-    round regardless) is exempt on both sides; ties across the boundary
-    are allowed (a stale cohort larger than the window must split).
-
-    Green-stability (r09 VERDICT what's-wrong #1): a window composed in
-    session N is least-recent *as of the evidence available when it was
-    composed* — i.e. through round N−1. When the driver then lands
-    CORRECTNESS_rN.json for exactly that window, the full ledger shows
-    the window at rN (freshest), which is the EXPECTED end state of a
-    correct rotation, not staleness. So the invariant is checked twice:
-    against the full ledger (pre-driver state: the window was just
-    rotated onto stale slots) and against the ledger EXCLUDING the
-    newest CORRECTNESS file (post-driver state: the window was
-    least-recent per the evidence it was composed from). Either passing
-    means the rotation is correct; an un-rotated window fails BOTH
-    (its slots are fresh even before the newest file).
-    """
+    queries ledger at 0). No window slot may re-verify a query FRESHER
+    than the stalest non-window oracle-checkable query; ties across the
+    boundary are allowed (a stale cohort larger than the window must
+    split)."""
     import json
     import re
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
-    rounds: dict[int, list[str]] = {}
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
+    ledger: dict[str, int] = {}
+    for f in root.glob("CORRECTNESS_r*.json"):
         rnd = int(re.search(r"r0*(\d+)", f.stem).group(1))
-        rounds[rnd] = list(json.loads(f.read_text()))
+        for q in json.loads(f.read_text()):
+            ledger[q] = max(rnd, ledger.get(q, 0))
 
     names = list(queries())
-    flagship = "geo_trajectory"
-    window = [n for n in names[:50] if n != flagship]
-    non_window = [
-        n for n in names[50:] if n in ORACLES and n != flagship
-    ]
-
-    def violation(exclude_round: int | None) -> str | None:
-        ledger: dict[str, int] = {}
-        for rnd, qs in rounds.items():
-            if rnd == exclude_round:
-                continue
-            for q in qs:
-                ledger[q] = max(rnd, ledger.get(q, 0))
-        freshest_in = max(window, key=lambda n: ledger.get(n, 0))
-        stalest_out = min(non_window, key=lambda n: ledger.get(n, 0))
-        if ledger.get(freshest_in, 0) <= ledger.get(stalest_out, 0):
-            return None
-        return (
-            f"window slot {freshest_in!r} (driver evidence "
-            f"r{ledger.get(freshest_in, 0)}) is fresher than non-window "
-            f"{stalest_out!r} (r{ledger.get(stalest_out, 0)})"
-        )
-
-    full = violation(exclude_round=None)
-    sans_newest = violation(exclude_round=max(rounds)) if rounds else None
-    assert full is None or sans_newest is None, (
-        f"{full}; still true excluding the newest CORRECTNESS file "
-        f"(r{max(rounds)}): {sans_newest} — rotate the registry so the "
-        "50 slots cover least-recent evidence"
+    window = names[:50]
+    non_window = [n for n in names[50:] if n in ORACLES]
+    freshest_in = max(window, key=lambda n: ledger.get(n, 0))
+    stalest_out = min(non_window, key=lambda n: ledger.get(n, 0))
+    assert ledger.get(freshest_in, 0) <= ledger.get(stalest_out, 0), (
+        f"window slot {freshest_in!r} (verified in "
+        f"r{ledger.get(freshest_in, 0)}) is fresher than non-window "
+        f"{stalest_out!r} (r{ledger.get(stalest_out, 0)})"
     )
 
 
