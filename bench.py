@@ -128,11 +128,11 @@ def map_refresh_verdict(
 
 
 def main() -> None:
-    # Host-contention evidence, captured BEFORE Spark spins up its own
-    # 32 threads (by the end of the run loadavg mostly measures the
-    # bench itself): the replay rate has swung 122k-241k pos/s on
-    # identical code purely with sandbox load (r04 vs r06), so every
-    # bench line carries the pre-run 1/5/15-min load averages.
+    # Host-contention evidence, captured BEFORE Spark spins up one task
+    # thread per session CPU (by the end of the run loadavg mostly
+    # measures the bench itself): the replay rate has swung 122k-241k
+    # pos/s on identical code purely with sandbox load (r04 vs r06), so
+    # every bench line carries the pre-run 1/5/15-min load averages.
     try:
         loadavg_start = loadavg()
     except OSError:
@@ -211,7 +211,8 @@ def main() -> None:
             # this, not host load: an idle-host r07 run still read
             # 110k). The engine's actual sustained parse throughput
             # needs a saturated job: replay the same capture 64x in one
-            # read (64 splits across the 32 cores).
+            # read (64 splits: one task each, enough to keep up to 64
+            # session cores busy).
             sat = read_positions(spark, [ref_pos] * 64)
             # Guard the 64x-replay premise: if a Spark version ever
             # dedupes duplicate paths in its file index, the rate below
@@ -236,8 +237,9 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             errors["ingest_throughput"] = str(exc).splitlines()[0][:300]
 
-    # Best-of-N per query: local[32] shows ±10-20% run-to-run noise, so a
-    # single sample makes round-over-round comparisons noise artifacts.
+    # Best-of-N per query: repeated runs differ by ±10-20% (measured on
+    # local[32]), so a single sample makes round-over-round comparisons
+    # noise artifacts.
     # The first run also pays that query's codegen/broadcast warmup; min
     # over consecutive runs is the steady-state number a cluster would see.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))

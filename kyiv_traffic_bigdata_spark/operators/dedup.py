@@ -18,7 +18,9 @@ recomputing old signatures.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..functions.rounding import round6
 
@@ -106,204 +108,176 @@ def shingle_index(docs: DataFrame, ngram: int) -> DataFrame:
 NGRAM_MAX_DOC_FREQ = 100
 
 #: Pair cutoffs: shingle-set Jaccard for the near-dup pairs of
-#: ngram_jaccard_pairs and minhash_lsh_pairs (applied in jaccard_verify),
-#: of prefix_filter_pairs and of sorted_neighborhood_pairs (which pairs
-#: each doc with its next SN_WINDOW neighbors in sort order), and the
-#: directed containment cutoff of containment_pairs. The SQL twins use
-#: the same values.
+#: ngram_jaccard_pairs and minhash_lsh_pairs, of prefix_filter_pairs and
+#: of sorted_neighborhood_pairs (which pairs each doc with its next
+#: SN_WINDOW neighbors in sort order), and the directed containment
+#: cutoff of containment_pairs. The SQL twins use the same values.
 NEARDUP_JACCARD = 0.2
 PREFIX_JACCARD = 0.5
 SN_JACCARD = 0.3
 SN_WINDOW = 3
 CONTAINMENT_THRESHOLD = 0.5
 
-#: Join hint for the fat per-doc shingle-ARRAY sides of jaccard_verify:
-#: ``shuffle_merge`` sorts and SPILLS (the r10 100× finding: shuffle-hash
-#: builds a non-spillable in-memory hash relation, which OOMs on fat
-#: array partitions once the unified region fragments). A module
-#: constant, read at call time, so tools/spill_rung_ab.py can assign it
-#: to measure the merge-vs-hash cost on identical code. Never
-#: ``broadcast``: every side here scales with the corpus
-#: (tests/test_plans.py pins no-broadcast).
+#: Join hint for the per-doc sides of the pair joins: ``shuffle_merge``
+#: sorts and SPILLS, while a shuffle-hash build is a non-spillable
+#: in-memory hash relation that OOMs on fat array partitions. Never
+#: ``broadcast``: a per-doc table scales with the corpus and the size
+#: estimate of a staged table undershoots (tests/test_plans.py pins
+#: no-broadcast).
 ARRAY_SIDE_JOIN_HINT = "shuffle_merge"
 
 
-def jaccard_verify(candidates: DataFrame, idx: DataFrame) -> DataFrame:
-    """Exact-Jaccard verification of (id_a, id_b) candidate pairs against a
-    (doc_id, shingle) inverted index; keeps jaccard ≥ NEARDUP_JACCARD.
+def shingle_ids(docs: DataFrame) -> DataFrame:
+    """The shared index of the near-dup pair operators: staged
+    ``(doc_id, _sid, _df, _h)`` rows, one per distinct shingle of each doc.
 
-    Work is bounded by |candidates| × shingles/doc, independent of corpus
-    size. Output has NO false positives; shared by the n-gram-Jaccard
-    and MinHash-LSH paths so both report identical scores for the same
-    pair.
+    Every pair decision needs shingle IDENTITY, never the text, so each
+    distinct shingle gets an injective int64 ``_sid``
+    (monotonically_increasing_id on the per-shingle table — partition id
+    ⊕ offset, collision-free by construction, unlike a hash) next to its
+    document frequency ``_df`` and its portable hash ``_h`` (the MinHash
+    input), each computed once per distinct shingle. Joins, windows and
+    set arrays downstream then run on 8-byte longs instead of ~30-byte
+    n-gram strings.
 
-    Shape (r09, found by the 100× scale point): the index collapses to
-    ONE row per doc — its distinct shingle array — before any pair
-    work, so the per-pair intersection is in-row ``array_intersect``
-    math and the only joins are candidates ⋈ doc-array equi-joins by
-    doc id. The previous shape joined candidates against the EXPLODED
-    index twice (a candidates × shingles/doc fan-out shuffle) and let
-    the planner pick join strategies; size estimates for the
-    checkpoint-staged index undershoot so badly that the 36.8M-row
-    index became a broadcast build side and OOM'd an 8 GB driver at
-    100× sf0.1. Every table here scales with the corpus (candidates ∝
-    near-dup density × n, doc arrays = one row per doc), so the
-    doc-array sides carry explicit join hints — nothing in this
-    function may ever broadcast.
-
-    Hint choice (r10, found by the 100× BFS scale point): the doc-array
-    sides pin ``shuffle_merge``, NOT ``shuffle_hash`` — a shuffle-hash
-    join must materialize its whole build partition as an in-memory
-    hash relation (NON-spillable by design), and a partition of
-    shingle ARRAYS is fat: at 100× the 64 MB relation page could not be
-    acquired once concurrent tasks fragmented the unified region
-    (r09's shuffle_hash pin fixed the broadcast OOM but parked the
-    fragility one level down). Sort-merge streams both sorted sides
-    and SPILLS — the extra sort of the one-row-per-doc array table is
-    noise next to the pipeline, and the no-broadcast pin is exactly as
-    satisfied. The narrow-row bucket self-joins keep shuffle_hash
-    (their builds are bounded and thin; no sort needed).
+    Three stages. The index, because the interpreted tokenize→n-gram
+    chain feeds both the df aggregate and the id join. The df table,
+    BEFORE anything reads its ids: mono-ids are assigned per partition
+    at evaluation time, so a df table recomputed under a task retry
+    (shuffle fetch order is nondeterministic) could hand two readers
+    different ids for the same shingle; the checkpoint freezes one
+    assignment (lost blocks fail the job — no silent recompute). The
+    joined rows, because every operator reads them at least twice.
+    Answers do not depend on which ids come out: ``_sid`` is injective,
+    and (_df, _sid) is a global total order.
     """
-    doc_sh = idx.groupBy("doc_id").agg(
-        F.collect_set("shingle").alias("_sh")
-    )
-    a = doc_sh.select(
-        F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sha")
-    ).hint(ARRAY_SIDE_JOIN_HINT)
-    b = doc_sh.select(
-        F.col("doc_id").alias("id_b"), F.col("_sh").alias("_shb")
-    ).hint(ARRAY_SIDE_JOIN_HINT)
-    paired = candidates.join(a, "id_a").join(b, "id_b")
-    n_inter = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-    denom = (F.size("_sha") + F.size("_shb") - n_inter).cast("double")
-    return (
-        paired.select(
-            "id_a",
-            "id_b",
-            round6(n_inter / denom).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= NEARDUP_JACCARD)
-    )
-
-
-def _rare_pair_counts(docs: DataFrame) -> DataFrame:
-    """Rare-shingle candidate pairs with hot-shingle completion inputs —
-    the shared candidate build of :func:`ngram_jaccard_pairs` and
-    :func:`containment_pairs`: one row per (id_a < id_b) pair sharing at
-    least one shingle of document frequency ≤ NGRAM_MAX_DOC_FREQ, with
-    ``(id_a, id_b, n_rare, n_a, n_b, hot_a, hot_b)`` — the rare-shingle
-    intersection count, both full shingle-set sizes, and both sorted
-    above-cap shingle arrays (empty when a doc has none). Callers bound
-    and score ``n_inter = n_rare + |hot_a ∩ hot_b|`` themselves.
-    """
-    # Materialize the index once: it feeds the df split, both join sides,
-    # sizes, and hot arrays; the tokenize→n-gram chain is interpreted
-    # higher-order lambdas and must not run per consumer.
-    #
-    # Int-id self-join (r13, guide §2.3 — same move as
-    # prefix_filter_pairs): the rare self-join shuffles the pruned index
-    # TWICE keyed by the n-gram string; n_rare only needs shingle
-    # IDENTITY, so the df table assigns each distinct shingle an
-    # injective int64 ``_sid`` (mono-id, collision-free by construction)
-    # and the self-join ships (doc_id, long) rows instead of
-    # (doc_id, ~27-byte string). The df table is STAGED so the id
-    # assignment is frozen before its two consumers (rare and hot
-    # splits) read it — an unstaged mono-id recomputed under a task
-    # retry could disagree between consumers (see prefix_filter_pairs).
     idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
     dfreq = (
         idx.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .withColumn("_sid", F.monotonically_increasing_id())
+        .select(
+            "shingle",
+            "_df",
+            F.monotonically_increasing_id().alias("_sid"),
+            portable_hash(F.col("shingle")).alias("_h"),
+        )
         .transform(stage)
     )
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    rare = dfreq.where(F.col("_df") <= NGRAM_MAX_DOC_FREQ).select("shingle", "_sid")
-    hot_arrs = (
-        idx.join(dfreq.where(F.col("_df") > NGRAM_MAX_DOC_FREQ).select("shingle"), "shingle")
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("shingle")).alias("hot"))
+    return idx.join(dfreq, "shingle").drop("shingle").transform(stage)
+
+
+def _pair_sides(pairs: DataFrame, per_doc: DataFrame) -> DataFrame:
+    """``pairs`` joined to the ``per_doc`` row of ``id_a`` and of ``id_b``;
+    per-doc column ``c`` arrives as ``c_a`` and ``c_b``."""
+
+    def side(s: str) -> DataFrame:
+        return per_doc.select(
+            F.col("doc_id").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in per_doc.columns if c != "doc_id"],
+        ).hint(ARRAY_SIDE_JOIN_HINT)
+
+    return pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+
+
+def _jaccard(n_inter: Column, n_a: Column, n_b: Column) -> Column:
+    return round6(n_inter / (n_a + n_b - n_inter).cast("double"))
+
+
+def jaccard_verify(candidates: DataFrame, ids: DataFrame, t: float) -> DataFrame:
+    """Exact full-set Jaccard of ``(id_a, id_b, …)`` candidate pairs over
+    :func:`shingle_ids` rows: the candidate columns plus ``jaccard``, for
+    the pairs with jaccard ≥ ``t``.
+
+    The index collapses to ONE row per doc — its ``_sid`` set — before
+    any pair work, so the intersection is in-row ``array_intersect``
+    math and the only joins are candidates ⋈ set-table equi-joins by
+    doc id. Work is bounded by |candidates| × shingles/doc; output has
+    no false positives, and every operator reports the same score for
+    the same pair.
+    """
+    sets = ids.groupBy("doc_id").agg(F.collect_list("_sid").alias("s"))
+    n_inter = F.size(F.array_intersect("s_a", "s_b"))
+    return (
+        _pair_sides(candidates, sets)
+        .withColumn("jaccard", _jaccard(n_inter, F.size("s_a"), F.size("s_b")))
+        .where(F.col("jaccard") >= t)
+        .select(*candidates.columns, "jaccard")
     )
-    pruned = idx.join(rare, "shingle").select("doc_id", "_sid")
-    a, b = pruned.alias("a"), pruned.alias("b")
+
+
+def _rare_pair_counts(
+    ids: DataFrame, keep: Callable[[Column, Column, Column], Column]
+) -> DataFrame:
+    """Exact intersection sizes ``(id_a, id_b, n_inter, n_a, n_b)`` of the
+    id_a < id_b pairs that share at least one RARE shingle (document
+    frequency ≤ NGRAM_MAX_DOC_FREQ) and pass ``keep(n_inter, n_a, n_b)``,
+    the caller's cutoff, which must be nondecreasing in ``n_inter`` — the
+    candidate build of :func:`ngram_jaccard_pairs` and
+    :func:`containment_pairs`.
+
+    Skew-safe single pass: the self-join runs only over rare shingles,
+    so join volume is Σ_rare df² — bounded by cap·|index| — instead of
+    the df² of the hottest boilerplate phrase, and it counts each pair's
+    rare intersection directly (groupBy pair — no distinct, no second
+    join against the index). Each rare row carries its doc's set size
+    ``n`` and above-cap count ``nh``, so ``keep`` on the upper bound
+    ``n_rare + min(nh_a, nh_b)`` drops the pairs that cannot pass before
+    any per-doc join. **Hot-shingle completion** then restores exactness
+    for the survivors: ``n_inter = n_rare + |hot_a ∩ hot_b|`` over each
+    doc's above-cap ``_sid`` array (a few boilerplate phrases by
+    construction). The only recall loss is pairs sharing exclusively
+    boilerplate.
+    """
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("doc_id")
+    is_hot = F.col("_df") > NGRAM_MAX_DOC_FREQ
+    rows = ids.select(
+        "doc_id",
+        "_sid",
+        is_hot.alias("_hot"),
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.count(F.when(is_hot, 1)).over(w).alias("nh"),
+    )
+    rare = rows.where(~F.col("_hot"))
+    a, b = rare.alias("a"), rare.alias("b")
     pairs = (
         a.join(b, "_sid")
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .groupBy(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            F.col("a.n").alias("n_a"),
+            F.col("b.n").alias("n_b"),
+            F.col("a.nh").alias("nh_a"),
+            F.col("b.nh").alias("nh_b"),
+        )
         .agg(F.count(F.lit(1)).alias("n_rare"))
     )
-    empty = F.array().cast("array<string>")
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    ub = F.col("n_rare") + F.least("nh_a", "nh_b")
+    hot = rows.groupBy("doc_id").agg(
+        F.collect_list(F.when(F.col("_hot"), F.col("_sid"))).alias("hot")
+    )
+    n_inter = F.col("n_rare") + F.size(F.array_intersect("hot_a", "hot_b"))
     return (
-        pairs.join(sizes.withColumnRenamed("doc_id", "id_a"), "id_a")
-        .withColumnRenamed("n_shingles", "n_a")
-        .join(
-            sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed(
-                "n_shingles", "n_b"
-            ),
-            "id_b",
-        )
-        .join(
-            hot_arrs.withColumnRenamed("doc_id", "id_a").withColumnRenamed(
-                "hot", "hot_a"
-            ),
-            "id_a",
-            "left",
-        )
-        .join(
-            hot_arrs.withColumnRenamed("doc_id", "id_b").withColumnRenamed(
-                "hot", "hot_b"
-            ),
-            "id_b",
-            "left",
-        )
-        .withColumn("hot_a", F.coalesce(F.col("hot_a"), empty))
-        .withColumn("hot_b", F.coalesce(F.col("hot_b"), empty))
+        _pair_sides(pairs.where(keep(ub, n_a, n_b)), hot)
+        .select("id_a", "id_b", n_inter.alias("n_inter"), "n_a", "n_b")
+        .where(keep(F.col("n_inter"), n_a, n_b))
     )
 
 
 def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
-    """Near-dup pairs by exact word-n-gram Jaccard similarity.
+    """Near-dup (id_a < id_b) pairs by exact word-n-gram Jaccard ≥
+    NEARDUP_JACCARD over the rare-shingle candidates of
+    :func:`_rare_pair_counts`, rounded to 6 for engine portability."""
 
-    Skew-safe single-pass shape. The inverted-index self-join runs only
-    over *rare* shingles (document frequency ≤ NGRAM_MAX_DOC_FREQ — the
-    same posting-list cap winnow_overlap_pairs applies), so join volume
-    is Σ_rare df² — bounded by cap·|index| — instead of the df² of the
-    hottest boilerplate phrase: one shingle shared by millions of docs
-    can never quadratically blow up the shuffle. That pass counts each
-    pair's rare-shingle intersection directly (groupBy pair — no
-    distinct, no second join against the index).
+    def keep(n_inter: Column, n_a: Column, n_b: Column) -> Column:
+        return _jaccard(n_inter, n_a, n_b) >= NEARDUP_JACCARD
 
-    Exactness is restored by **hot-shingle completion**: each doc's
-    above-cap shingles are collected into a tiny per-doc array (≤ a few
-    boilerplate phrases by construction — a doc is mostly rare shingles),
-    and for surviving pairs ``n_inter = n_rare +
-    |hot_A ∩ hot_B|`` via array_intersect. So every pair that shares at
-    least one rare shingle gets its EXACT full-set Jaccard; the only
-    recall loss is pairs sharing *exclusively* boilerplate — which a
-    near-dup score should ignore anyway. A cheap upper bound
-    (n_rare + min(|hot_A|,|hot_B|)) pre-filters before the array work.
-    Output (a<b) pairs with jaccard ≥ NEARDUP_JACCARD, rounded to 6 for
-    engine portability.
-    """
-    t = NEARDUP_JACCARD
-    joined = _rare_pair_counts(docs)
-    # upper bound on the full intersection; J is increasing in n_inter, so
-    # ub(1+t) < t(n_a+n_b) proves jaccard < t without touching the arrays
-    ub = F.col("n_rare") + F.least(F.size("hot_a"), F.size("hot_b"))
-    n_inter = F.col("n_rare") + F.size(F.array_intersect("hot_a", "hot_b"))
-    return (
-        joined.where(
-            ub * (1.0 + t) >= t * (F.col("n_a") + F.col("n_b"))
-        )
-        .withColumn(
-            "jaccard",
-            round6(
-                n_inter / (F.col("n_a") + F.col("n_b") - n_inter).cast("double")
-            ),
-        )
-        .where(F.col("jaccard") >= t)
-        .select("id_a", "id_b", "jaccard")
-    )
+    pairs = _rare_pair_counts(shingle_ids(docs), keep)
+    jaccard = _jaccard(F.col("n_inter"), F.col("n_a"), F.col("n_b"))
+    return pairs.select("id_a", "id_b", jaccard.alias("jaccard"))
 
 
 def prefix_filter_pairs(docs: DataFrame) -> DataFrame:
@@ -313,106 +287,55 @@ def prefix_filter_pairs(docs: DataFrame) -> DataFrame:
     Unlike :func:`ngram_jaccard_pairs` (whose df-cap trades recall on
     pairs overlapping only in boilerplate) this operator is exact with
     NO recall caveat: order the shingle universe globally by
-    (document-frequency asc, shingle asc) and keep only each doc's first
+    (document-frequency asc, _sid asc) and keep only each doc's first
     ``n - ceil(t·n) + 1`` shingles in that order (its *prefix*). Two
     sets with Jaccard ≥ t must overlap in ≥ ceil(t·n) elements, so by
     pigeonhole their prefixes share at least one shingle — joining on
-    prefix shingles alone loses nothing. Verification then computes the
-    exact Jaccard from the full sorted shingle arrays.
+    prefix shingles alone loses nothing, under ANY global total order.
 
     Scale shape: the self-join runs ONLY over prefix shingles, and the
     rarest-first ordering means hot boilerplate shingles are the first
     ones *excluded* from prefixes — candidate volume is Σ df_p² over
     near-rarest shingles, the same skew-safety the df-cap buys, but
-    earned without giving up exactness. The per-doc ranking window
-    partitions by doc_id (bounded by doc length); full shingle arrays
-    ride two equi-joins exactly like ngram_jaccard_pairs' hot arrays.
-
-    Shuffle budget (r07 VERDICT ask): the index crosses the wire twice
-    — once by shingle for the document-frequency join, once by doc_id
-    for a single window pass that computes the set size (_n) AND the
-    rank (_pos) together; the verification arrays aggregate the SAME
-    staged enriched frame, so the index is never re-shuffled a third
-    time (the old aggregate-then-join form shuffled it per derived
-    table, and without staging the self-join's a/b aliases re-derive
-    the whole join+window chain four times — measured 8 exchanges).
-    _df stays a groupBy+join on purpose: a window-count over
-    partitionBy(shingle) would put a hot boilerplate shingle's whole
-    posting list in one task (windows can't be skew-split), while the
-    join form is AQE-skew-splittable.
-
-    Int-id verify (r13, guide §2.3 "shuffle keys and metadata instead
-    of payloads"): the r12 dissection showed the VERIFY tail — two
-    shuffle_merge joins shipping each candidate pair its full sorted
-    SHINGLE-STRING arrays — at ~65% of the query (4.5 s of 7.0 s at
-    sf0.1; staging 2.4 s, candidates 0.6 s). Every downstream decision
-    only needs shingle IDENTITY, never the text, so each distinct
-    shingle gets an injective int64 ``_sid`` (monotonically_increasing_id
-    on the df table — partition id ⊕ offset, collision-free BY
-    CONSTRUCTION, unlike a hash) and everything past the one
-    idx ⋈ dfreq join — the window rank, the prefix self-join key, the
-    sorted verify arrays, the array_intersect — runs on 8-byte longs
-    instead of ~30-byte n-gram strings. The df table is staged FIRST:
-    mono-ids are assigned per partition at evaluation time, so an
-    unstaged df table recomputed under a task retry (shuffle fetch
-    order is nondeterministic) could hand two consumers different ids
-    for the same shingle; the localCheckpoint freezes one assignment
-    (lost blocks fail the job — no silent recompute; same argument as
-    guide §2.5's deterministic-synthetic-key rule). Output is
-    invariant: prefix filtering is lossless under ANY global total
-    order, and (_df asc, _sid asc) is one; the exact Jaccard per pair
-    is id-representation-independent because _sid is injective. The
-    naive all-pairs DuckDB twin (no ids, no candidates) re-proves both
-    claims at every SF.
+    earned without giving up exactness. The ranking window partitions
+    by doc_id (bounded by doc length); ``_df`` comes from the shared
+    index's groupBy+join, never a window over partitionBy(shingle),
+    which would put a hot shingle's whole posting list in one task.
     """
     from pyspark.sql.window import Window
 
     t = PREFIX_JACCARD
-    idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
-    dfreq = (
-        idx.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .withColumn("_sid", F.monotonically_increasing_id())
-        .transform(stage)
+    ids = shingle_ids(docs)
+    w = Window.partitionBy("doc_id")
+    rarest_first = w.orderBy(F.col("_df").asc(), F.col("_sid").asc())
+    ranked = ids.select(
+        "doc_id",
+        "_sid",
+        F.count(F.lit(1)).over(w).alias("_n"),
+        F.row_number().over(rarest_first).alias("_pos"),
     )
-    w_n = Window.partitionBy("doc_id")
-    w = Window.partitionBy("doc_id").orderBy(F.col("_df").asc(), F.col("_sid").asc())
-    enriched = (
-        idx.join(dfreq, "shingle")
-        .withColumn("_n", F.count(F.lit(1)).over(w_n))
-        .withColumn("_pos", F.row_number().over(w))
-        .select("doc_id", "_sid", "_n", "_pos")
-        .transform(stage)
-    )
-    arrs = enriched.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("_sid")).alias("_arr"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    prefix = enriched.where(
+    prefix = ranked.where(
         F.col("_pos")
         <= F.col("_n") - F.ceil(F.lit(t) * F.col("_n")).cast("long") + F.lit(1)
-    ).select("doc_id", "_sid", "_n", "_pos")
+    )
     a, b = prefix.alias("a"), prefix.alias("b")
-    # PPJoin POSITIONAL filter (Xiao/Wang/Lin/Yu, WWW 2008 — lossless,
-    # r12): at a prefix hit on shingle s at global-order positions
-    # (p_a, p_b), every common element other than s that could still be
-    # counted ranks after s in BOTH docs, so the overlap is bounded by
+    # PPJoin POSITIONAL filter (Xiao/Wang/Lin/Yu, WWW 2008 — lossless):
+    # at a prefix hit on shingle s at global-order positions (p_a, p_b),
+    # every common element other than s that could still be counted
+    # ranks after s in BOTH docs, so the overlap is bounded by
     # ubound = 1 + min(n_a − p_a, n_b − p_b). J ≥ t needs overlap ≥
     # t·(n_a+n_b)/(1+t); pairs whose ubound can't reach that die HERE,
-    # before the distinct and the fat-array verify joins (measured 409k
-    # → far fewer candidates at sf0.1; the filter also subsumes the
-    # AllPairs length filter — for n_a = min the bound reduces to
-    # n_a ≥ t·n_b). OR-semantics across multiple prefix hits of the
-    # same pair are automatic (distinct runs after the filter), which
-    # is what makes the per-hit bound lossless: the FIRST shared
-    # element in global order has no common elements before it, and it
-    # sits in both prefixes whenever J ≥ t (the AllPairs prefix
-    # guarantee), so at least that hit always survives for a true
-    # pair. The 1e-9 slack keeps float rounding from ever rejecting an
-    # exact-boundary pair (an extra candidate is free; a lost pair is
-    # corruption). Verified independently by the naive-oracle gate at
-    # sf0.001/0.01/0.1 — the oracle computes ALL pairs with no
-    # candidate step, so any recall loss fails the hash compare.
+    # before the distinct and the verify joins (the filter also subsumes
+    # the AllPairs length filter — for n_a = min the bound reduces to
+    # n_a ≥ t·n_b). OR-semantics across multiple prefix hits of the same
+    # pair are automatic (distinct runs after the filter), which is what
+    # makes the per-hit bound lossless: the FIRST shared element in
+    # global order has no common elements before it, and it sits in
+    # both prefixes whenever J ≥ t, so at least that hit always survives
+    # for a true pair. The 1e-9 slack keeps float rounding from ever
+    # rejecting an exact-boundary pair (an extra candidate is free; a
+    # lost pair is corruption). The naive all-pairs DuckDB twin (no ids,
+    # no candidates) re-proves losslessness at every SF.
     ubound = F.lit(1) + F.least(
         F.col("a._n") - F.col("a._pos"), F.col("b._n") - F.col("b._pos")
     )
@@ -429,34 +352,7 @@ def prefix_filter_pairs(docs: DataFrame) -> DataFrame:
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    n_inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    return (
-        cand.join(
-            arrs.select(
-                F.col("doc_id").alias("id_a"),
-                F.col("_arr").alias("arr_a"),
-                F.col("_n").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            arrs.select(
-                F.col("doc_id").alias("id_b"),
-                F.col("_arr").alias("arr_b"),
-                F.col("_n").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            round6(
-                n_inter.cast("long")
-                / (F.col("n_a") + F.col("n_b") - n_inter).cast("double")
-            ),
-        )
-        .where(F.col("jaccard") >= t)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return jaccard_verify(cand, ids, t)
 
 
 def sorted_neighborhood_pairs(docs: DataFrame) -> DataFrame:
@@ -468,73 +364,46 @@ def sorted_neighborhood_pairs(docs: DataFrame) -> DataFrame:
 
     Block = first token of the normalized text; sort key = the full
     normalized text (doc_id tie-break, so the order — and therefore the
-    output — is deterministic). Each doc is paired with its next
-    SN_WINDOW neighbors in sort order and scored with the exact
-    shingle-set Jaccard; pairs below SN_JACCARD are dropped. This is
-    the *multi-pass blocking* variant: windows never span blocks, which
-    is exactly what makes it scale — the ranking window partitions by
-    block, never one global sort on a single task. Recall is bounded by
-    the blocking choice (documented, standard for the method); exact
-    near-dup recall is ngram_jaccard_pairs / prefix_filter_pairs' job.
+    output — is deterministic). Only docs with shingles take a place in
+    the order. Each doc is paired with its next SN_WINDOW neighbors in
+    sort order and scored with the exact shingle-set Jaccard; pairs
+    below SN_JACCARD are dropped. This is the *multi-pass blocking*
+    variant: windows never span blocks, which is exactly what makes it
+    scale — the ranking window partitions by block, never one global
+    sort on a single task. Recall is bounded by the blocking choice
+    (documented, standard for the method); exact near-dup recall is
+    ngram_jaccard_pairs / prefix_filter_pairs' job.
     """
     from pyspark.sql.window import Window
     from ..functions.text import normalize_text
 
-    idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
-    arrs = idx.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("shingle")).alias("_arr"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    base = (
+    ids = shingle_ids(docs)
+    keyed = (
         docs.select("doc_id", normalize_text(F.col("text")).alias("_k"))
         .withColumn("_blk", F.substring_index(F.col("_k"), " ", 1))
-        .join(arrs, "doc_id")
+        .join(
+            ids.select("doc_id").distinct().hint(ARRAY_SIDE_JOIN_HINT),
+            "doc_id",
+            "left_semi",
+        )
     )
     w = Window.partitionBy("_blk").orderBy(F.col("_k").asc(), F.col("doc_id").asc())
-    led = base.select(
+    led = keyed.select(
         F.col("doc_id").alias("id_a"),
-        F.col("_arr").alias("arr_a"),
-        F.col("_n").alias("n_a"),
+        *[F.lead("doc_id", i).over(w).alias(f"_id{i}") for i in range(1, SN_WINDOW + 1)],
+    )
+    neighbors = F.array(
         *[
-            c
+            F.struct(F.col(f"_id{i}").alias("id_b"), F.lit(i).cast("long").alias("gap"))
             for i in range(1, SN_WINDOW + 1)
-            for c in (
-                F.lead("doc_id", i).over(w).alias(f"_id{i}"),
-                F.lead("_arr", i).over(w).alias(f"_ar{i}"),
-                F.lead("_n", i).over(w).alias(f"_nn{i}"),
-            )
-        ],
+        ]
     )
-    neigh = led.select(
-        "id_a",
-        "arr_a",
-        "n_a",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.col(f"_id{i}").alias("id_b"),
-                        F.col(f"_ar{i}").alias("arr_b"),
-                        F.col(f"_nn{i}").alias("n_b"),
-                        F.lit(i).cast("long").alias("gap"),
-                    )
-                    for i in range(1, SN_WINDOW + 1)
-                ]
-            )
-        ).alias("nb"),
-    ).select("id_a", "arr_a", "n_a", "nb.*").where(F.col("id_b").isNotNull())
-    n_inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    return (
-        neigh.withColumn(
-            "jaccard",
-            round6(
-                n_inter.cast("long")
-                / (F.col("n_a") + F.col("n_b") - n_inter).cast("double")
-            ),
-        )
-        .where(F.col("jaccard") >= SN_JACCARD)
-        .select("id_a", "id_b", "gap", "jaccard")
+    cand = (
+        led.select("id_a", F.explode(neighbors).alias("nb"))
+        .select("id_a", "nb.*")
+        .where(F.col("id_b").isNotNull())
     )
+    return jaccard_verify(cand, ids, SN_JACCARD)
 
 
 def containment_pairs(docs: DataFrame) -> DataFrame:
@@ -543,59 +412,46 @@ def containment_pairs(docs: DataFrame) -> DataFrame:
     (a short doc copied inside a long one) which symmetric Jaccard
     dilutes to ~|A|/|B| and misses entirely.
 
-    Same skew-safe single-pass shape as ngram_jaccard_pairs: the
-    rare-shingle (df ≤ NGRAM_MAX_DOC_FREQ) inverted-index self-join
-    counts each pair's rare intersection DIRECTLY (groupBy pair — no
-    distinct, no second join against the index), and exactness is
-    restored by hot-shingle completion (``n_inter = n_rare +
-    |hot_A ∩ hot_B|`` over tiny per-doc above-cap arrays). Join volume
-    is bounded by cap·|index|, never the df² of a boilerplate phrase.
-    Emits one row per unordered pair (id_a < id_b) whose max directed
-    containment ≥ CONTAINMENT_THRESHOLD, with both directions. Recall loss:
-    only pairs sharing exclusively hot shingles (which carry no dup
-    signal by construction).
+    Candidates and exact intersections come from the skew-safe
+    rare-shingle pass of :func:`_rare_pair_counts`. Emits one row per
+    unordered pair (id_a < id_b) whose max directed containment ≥
+    CONTAINMENT_THRESHOLD, with both directions. Recall loss: only
+    pairs sharing exclusively hot shingles (which carry no dup signal
+    by construction).
     """
-    joined = _rare_pair_counts(docs)
-    # upper bound prunes before the array intersect: containment is
-    # increasing in n_inter and n_inter <= n_rare + min(|hot_a|,|hot_b|)
-    ub = F.col("n_rare") + F.least(F.size("hot_a"), F.size("hot_b"))
-    ub_c = F.greatest(
-        ub / F.col("n_a").cast("double"), ub / F.col("n_b").cast("double")
-    )
-    n_inter = F.col("n_rare") + F.size(F.array_intersect("hot_a", "hot_b"))
-    scored = (
-        joined.where(ub_c >= F.lit(CONTAINMENT_THRESHOLD))
-        .select(
-            "id_a",
-            "id_b",
-            n_inter.cast("long").alias("n_inter"),
-            round6(n_inter / F.col("n_a").cast("double")).alias("c_a_in_b"),
-            round6(n_inter / F.col("n_b").cast("double")).alias("c_b_in_a"),
-        )
-    )
-    return scored.where(
-        F.greatest(F.col("c_a_in_b"), F.col("c_b_in_a")) >= F.lit(CONTAINMENT_THRESHOLD)
+
+    def contained(n_inter: Column, n: Column) -> Column:
+        return round6(n_inter / n.cast("double"))
+
+    def keep(n_inter: Column, n_a: Column, n_b: Column) -> Column:
+        best = F.greatest(contained(n_inter, n_a), contained(n_inter, n_b))
+        return best >= CONTAINMENT_THRESHOLD
+
+    pairs = _rare_pair_counts(shingle_ids(docs), keep)
+    n_inter = F.col("n_inter")
+    return pairs.select(
+        "id_a",
+        "id_b",
+        "n_inter",
+        contained(n_inter, F.col("n_a")).alias("c_a_in_b"),
+        contained(n_inter, F.col("n_b")).alias("c_b_in_a"),
     )
 
 
-def minhash_signatures(docs: DataFrame, index: DataFrame | None = None) -> DataFrame:
-    """Wide MinHash signature: one column ``mh_i`` per permutation.
+def minhash_signatures(ids: DataFrame) -> DataFrame:
+    """Wide MinHash signature over :func:`shingle_ids` rows: one column
+    ``mh_i`` per permutation.
 
-    explode shingles → portable hash → NUM_PERM universal-hash minima via
+    NUM_PERM universal-hash minima over the portable shingle hash via
     conditional aggregation (single hash aggregate, no pivot shuffle).
     Docs with no shingles get no row (nothing to hash) — callers union
-    them back if they must survive. ``index`` lets a caller supply an
-    already-materialized (doc_id, shingle) inverted index so the
-    tokenize→n-gram chain is not recomputed (minhash_lsh_pairs shares one
-    with its verification joins).
+    them back if they must survive.
     """
-    idx = index if index is not None else shingle_index(docs, SHINGLE_NGRAM)
-    hashed = idx.select("doc_id", portable_hash(F.col("shingle")).alias("h"))
     mins = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{i}")
+        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{i}")
         for i, (a, b) in ((j, perm_coeffs(j)) for j in range(NUM_PERM))
     ]
-    return hashed.groupBy("doc_id").agg(*mins)
+    return ids.groupBy("doc_id").agg(*mins)
 
 
 def lsh_buckets(sig: DataFrame) -> DataFrame:
@@ -604,26 +460,20 @@ def lsh_buckets(sig: DataFrame) -> DataFrame:
     over the band's row slice, so the SAME doc always lands in the same
     buckets on any engine/run (portable-hash property: a stored bucket
     index stays valid across runs)."""
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                ",", *[F.col(f"mh_{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-            )
-        ).alias(f"band_{b}")
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(
+                F.concat_ws(
+                    ",", *[F.col(f"mh_{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
+                )
+            ).alias("bh"),
+        )
         for b in range(LSH_BANDS)
     ]
-    banded = sig.select("doc_id", *band_cols)
-    return banded.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"band_{b}").alias("bh"))
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bh")
+    return sig.select("doc_id", F.explode(F.array(*bands)).alias("bb")).select(
+        "doc_id", "bb.band", "bb.bh"
+    )
 
 
 def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
@@ -634,19 +484,12 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     (band, band_signature) so cost tracks true near-dup density, not n².
     Verification recomputes exact Jaccard on candidates only, so the output
     has NO false positives — misses only pairs the s-curve filters out.
-
-    The shingle inverted index is materialized once (operators.staging.stage) and
-    shared between signature generation and the verification joins — the
-    interpreted tokenize→n-gram chain is the dominant per-row cost and
-    must not run once per consumer.
     """
-    idx = shingle_index(docs, SHINGLE_NGRAM).transform(stage)
-    sig = minhash_signatures(docs, index=idx)
-    buckets = lsh_buckets(sig)
-    # the bucket table is corpus × bands rows — like everything else in
-    # this pipeline it must never be a broadcast build side (the
-    # jaccard_verify docstring's r09 OOM rationale), so the self-join
-    # is pinned shuffle_hash
+    ids = shingle_ids(docs)
+    buckets = lsh_buckets(minhash_signatures(ids))
+    # the bucket table is corpus × bands rows: never a broadcast build
+    # side (see ARRAY_SIDE_JOIN_HINT), so the self-join is pinned
+    # shuffle_hash — its rows are narrow and need no sort
     a = buckets.alias("a").hint("shuffle_hash")
     b = buckets.alias("b")
     candidates = (
@@ -655,12 +498,7 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    # Exact-Jaccard verification bounded by the candidate set (shared
-    # jaccard_verify): intersect shingles only for LSH-surfaced pairs
-    # instead of re-running the full inverted-index self-join — that would
-    # cost the same as an uncapped ngram_jaccard_pairs and defeat LSH's
-    # purpose.
-    return jaccard_verify(candidates, idx)
+    return jaccard_verify(candidates, ids, NEARDUP_JACCARD)
 
 
 #: SimHash banding parameters: 32-bit keys split into 4 bands of 8 bits.

@@ -1523,7 +1523,7 @@ sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id)
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width MinHash signatures (scale path for near-dedup)."""
-    return DD.minhash_signatures(_docs_with_tokens(spark, sf_dir))
+    return DD.minhash_signatures(DD.shingle_ids(_docs_with_tokens(spark, sf_dir)))
 
 
 SQL_MINHASH_SIG = "WITH " + _sql_minhash_sig() + "SELECT * FROM sig"

@@ -38,6 +38,20 @@ def broadcast_join_count(plan: str) -> int:
     return len(re.findall(r"\bBroadcastHashJoin\b|\bBroadcastNestedLoopJoin\b", plan))
 
 
+def broadcast_join_keys(plan: str) -> set[str]:
+    """Column names (expression ids stripped) that the BroadcastHashJoins
+    of a FORMATTED plan are keyed on, both sides."""
+    keys: set[str] = set()
+    for m in re.finditer(
+        r"\(\d+\) BroadcastHashJoin[^\n]*\n(?:[^\n]*\n)??"
+        r"Left keys \[\d+\]: \[([^\]]*)\]\nRight keys \[\d+\]: \[([^\]]*)\]",
+        plan,
+    ):
+        for side in m.groups():
+            keys.update(re.sub(r"#\d+L?$", "", k.strip()) for k in side.split(","))
+    return keys
+
+
 def sort_merge_join_count(plan: str) -> int:
     return len(re.findall(r"\bSortMergeJoin\b", plan))
 

@@ -70,12 +70,19 @@ def test_jaccard_stop_shingle_cap_skew(spark):
     """A boilerplate sentence shared by EVERY doc must not blow up
     candidate generation, and must not change surfaced pair scores:
     the df cap prunes the hot shingles from candidate generation only,
-    while verification still scores the full shingle sets."""
+    while verification still scores the full shingle sets. Every pair
+    operator on the shared shingle-id index reports the brute-force
+    full-set score, and a pair at exactly J = PREFIX_JACCARD is kept."""
     from kyiv_traffic_bigdata_spark.operators.dedup import (
         NGRAM_MAX_DOC_FREQ,
         NEARDUP_JACCARD,
+        PREFIX_JACCARD,
+        containment_pairs,
+        minhash_lsh_pairs,
         ngram_jaccard_pairs,
+        prefix_filter_pairs,
         shingle_index,
+        sorted_neighborhood_pairs,
     )
 
     cap = NGRAM_MAX_DOC_FREQ
@@ -87,6 +94,11 @@ def test_jaccard_stop_shingle_cap_skew(spark):
     # docs 1000/1001: true near-dups of each other (identical long tail)
     tail = "the quick brown fox jumps over the lazy dog repeatedly tonight"
     rows += [(1000, f"{boiler} {tail}"), (1001, f"{boiler} {tail} extra")]
+    # docs 2000/2001: 6 shingles each, 4 shared, 8 in the union
+    rows += [
+        (2000, "kappa lambda mu nu xi omicron pi rho"),
+        (2001, "kappa lambda mu nu xi omicron sigma tau"),
+    ]
     d = _docs(spark, rows)
 
     # every boilerplate shingle (df = cap + 12) is above the cap...
@@ -105,12 +117,29 @@ def test_jaccard_stop_shingle_cap_skew(spark):
         inter = len(sets[a] & sets[b])
         return inter / (len(sets[a]) + len(sets[b]) - inter)
 
+    assert jaccard(2000, 2001) == PREFIX_JACCARD
     for (a, b), v in got.items():
         assert abs(v - jaccard(a, b)) < 1e-6
     # and boilerplate-only pairs — above the threshold by their full
     # sets — never surface: they share no rare shingle
     assert jaccard(0, 1) >= NEARDUP_JACCARD
-    assert set(got) == {(1000, 1001)}
+    assert set(got) == {(1000, 1001), (2000, 2001)}
+
+    scored = {
+        "minhash": minhash_lsh_pairs(d).collect(),
+        "prefix": prefix_filter_pairs(d).collect(),
+        "sorted_neighborhood": sorted_neighborhood_pairs(d).collect(),
+    }
+    # the exact-boundary pair is kept by the >= cutoff
+    assert {(r.id_a, r.id_b) for r in scored["prefix"]} >= {(1000, 1001), (2000, 2001)}
+    for name, pairs in scored.items():
+        assert pairs, name
+        for r in pairs:
+            assert abs(r.jaccard - jaccard(r.id_a, r.id_b)) < 1e-6, (name, r)
+    contained = containment_pairs(d).collect()
+    assert {(r.id_a, r.id_b) for r in contained} >= {(1000, 1001), (2000, 2001)}
+    for r in contained:
+        assert r.n_inter == len(sets[r.id_a] & sets[r.id_b])
 
 
 def test_exact_dedup_covers_boilerplate_only_identical_docs(spark):

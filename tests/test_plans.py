@@ -18,6 +18,7 @@ from kyiv_traffic_bigdata_spark.plans import physical_plan
 from kyiv_traffic_bigdata_spark.queries import QUERIES
 from plan_checks import (
     broadcast_join_count,
+    broadcast_join_keys,
     exchange_count,
     parquet_scan_count,
     scan_filter_exprs,
@@ -1117,16 +1118,32 @@ def test_r09_additions_plan_shapes(plans):
 
 
 def test_minhash_pipeline_never_broadcasts(plans):
-    """r09 scale find, pinned: every table in the MinHash-LSH pipeline
-    (bucket table, candidate pairs, per-doc shingle arrays) scales with
-    the corpus, so NO join in the plan may be broadcast — the staged
-    index's size estimate undershoots badly enough that a 36.8M-row
-    index became a broadcast build side and OOM'd an 8 GB driver at
-    the 100x scale point before the shuffle_hash pins."""
-    plan = plans("minhash_lsh_pairs")
-    assert "BroadcastHashJoin" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    """Every table in the near-dup pair pipelines scales with the corpus
+    (bucket table, candidate pairs, per-doc shingle-id sets), and the
+    size estimate of a staged table undershoots badly enough that a
+    36.8M-row index became a broadcast build side and OOM'd an 8 GB
+    driver at 100x sf0.1. So the MinHash-LSH plan has no broadcast join
+    at all, no pair operator broadcasts a per-doc table (a join keyed on
+    id_a / id_b / doc_id), and none ships per-doc shingle STRING arrays:
+    the sets are built from the shared int64 shingle-id index."""
+    by_name = {
+        name: plans(name)
+        for name in (
+            "minhash_lsh_pairs",
+            "neardup_prefix_pairs",
+            "sorted_neighborhood_pairs",
+            "ngram_neardups",
+            "doc_containment_dups",
+        )
+    }
+    minhash = by_name["minhash_lsh_pairs"]
+    assert "BroadcastHashJoin" not in minhash
+    assert "BroadcastNestedLoopJoin" not in minhash
+    assert "CartesianProduct" not in minhash
+    for name, plan in by_name.items():
+        assert not broadcast_join_keys(plan) & {"id_a", "id_b", "doc_id"}, name
+        assert "collect_set(shingle" not in plan, name
+        assert "collect_list(shingle" not in plan, name
 
 
 def test_r09_late_additions_plan_shapes(plans):
