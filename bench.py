@@ -190,18 +190,18 @@ def main() -> None:
     ref_pos = "/root/reference/data/kpt_positions_20260207.jsonl"
     if os.path.exists(ref_pos):
         try:
-            from kyiv_traffic_bigdata_spark.sources.kpt import read_positions
+            from kyiv_traffic_bigdata_spark.sources.kpt import read_positions_ordered
 
             # warm until C2 JIT reaches steady state: one run only gets
             # ~60% of the plateau rate (measured: 68k->120k over ~6
             # iterations on an idle host) — an under-warmed sample reads
             # as a phantom regression between rounds
             for _ in range(5):
-                read_positions(spark, ref_pos).count()
+                read_positions_ordered(spark, ref_pos).count()
             rates = []
             for _ in range(5):
                 t0 = time.perf_counter()
-                n = read_positions(spark, ref_pos).count()
+                n = read_positions_ordered(spark, ref_pos).count()
                 rates.append(n / (time.perf_counter() - t0))
             ingest_stats["ingest_positions_per_sec"] = round(max(rates), 1)
             # The shipped capture is ONE 3 MB file = one input split =
@@ -213,7 +213,7 @@ def main() -> None:
             # needs a saturated job: replay the same capture 64x in one
             # read (64 splits: one task each, enough to keep up to 64
             # session cores busy).
-            sat = read_positions(spark, [ref_pos] * 64)
+            sat = read_positions_ordered(spark, [ref_pos] * 64)
             # Guard the 64x-replay premise: if a Spark version ever
             # dedupes duplicate paths in its file index, the rate below
             # would silently be 64x wrong. n was just measured on the

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, dot, hyperplane_sign_bits, norm
@@ -98,13 +98,58 @@ def probe_max_sim(corpus: DataFrame, probes: list[list[float]]) -> DataFrame:
     )
 
 
-def _side(df: DataFrame, id_as: str, vec_as: str, norm_as: str, *extra):
-    """One side of a cosine join: renamed id and vector plus its norm."""
-    return df.select(
-        F.col("vec_id").alias(id_as),
-        F.col("embedding").alias(vec_as),
-        norm(F.col("embedding")).alias(norm_as),
-        *extra,
+def cosine_sides(
+    queries: DataFrame,
+    corpus: DataFrame,
+    q_extra=(),
+    c_extra=(),
+    c_id: str = "neighbor_id",
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of an exact-cosine join, ``(query_id, qvec, _qn,
+    *q_extra)`` and ``(c_id, cvec, _cn, *c_extra)``, each row carrying
+    its own L2 norm. Norms are per row, not per pair: attached before the
+    join, the O(|q| x |c|) scoring loop does one dot product per pair
+    instead of re-folding both vectors' norms for every pair."""
+
+    def side(df, id_as, vec_as, norm_as, extra):
+        return df.select(
+            F.col("vec_id").alias(id_as),
+            F.col("embedding").alias(vec_as),
+            norm(F.col("embedding")).alias(norm_as),
+            *extra,
+        )
+
+    return (
+        side(queries, "query_id", "qvec", "_qn", q_extra),
+        side(corpus, c_id, "cvec", "_cn", c_extra),
+    )
+
+
+def cosine_sim() -> Column:
+    """The exact cosine of a joined :func:`cosine_sides` pair, 0.0 when
+    either vector is all-zero. The dot and both norms are sequential
+    double folds (functions.vector), and the denominator multiplies the
+    two square roots, so the double equals functions.vector.cosine's."""
+    denom = F.col("_qn") * F.col("_cn")
+    return F.when(denom == 0, F.lit(0.0)).otherwise(
+        dot(F.col("qvec"), F.col("cvec")) / denom
+    )
+
+
+def top_cosine(scored: DataFrame, k: int = TOPK) -> DataFrame:
+    """Top-k ``_sim`` rows per query: ranked on the unrounded score with
+    the neighbor id as tiebreak, emitted with every other column of
+    ``scored`` plus ``cosine_sim``, the score rounded to 6 decimals
+    (cross-engine float stability)."""
+    ranked = top_k_per_group(
+        scored,
+        ["query_id"],
+        [F.col("_sim").desc(), F.col("neighbor_id").asc()],
+        k,
+    )
+    return ranked.select(
+        *[c for c in scored.columns if c != "_sim"],
+        F.round(F.col("_sim"), 6).alias("cosine_sim"),
     )
 
 
@@ -125,15 +170,10 @@ def cosine_range_search(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     rounded value the filter saw."""
     from ..functions.rounding import round6
 
-    q = _side(queries, "query_id", "qvec", "_qn")
-    c = _side(corpus, "neighbor_id", "cvec", "_cn")
-    denom = F.col("_qn") * F.col("_cn")
-    sim = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("qvec"), F.col("cvec")) / denom
-    )
+    q, c = cosine_sides(queries, corpus)
     return (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", round6(sim).alias("cosine_sim"))
+        .select("query_id", "neighbor_id", round6(cosine_sim()).alias("cosine_sim"))
         .where(F.col("cosine_sim") >= F.lit(RANGE_TAU))
     )
 
@@ -143,31 +183,12 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
 
     ``broadcast(queries) × corpus`` — the corpus never shuffles; scoring is
     one codegen'd expression per (query, doc). Self-matches excluded.
-    Scores rounded to 6 decimals (cross-engine float stability); ranking
-    uses the unrounded score with id tiebreak for determinism.
     """
-    # norms are per-row, not per-pair: attach them to each side before the
-    # join so the O(|q| x |c|) scoring loop does one dot product per pair
-    # instead of re-folding both vectors' norms 4M times. sqrt-then-multiply
-    # keeps the float result identical to cosine()'s denominator.
-    q = _side(queries, "query_id", "qvec", "_qn")
-    c = _side(corpus, "neighbor_id", "cvec", "_cn")
-    denom = F.col("_qn") * F.col("_cn")
-    sim = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("qvec"), F.col("cvec")) / denom
-    )
+    q, c = cosine_sides(queries, corpus)
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id", "neighbor_id", sim.alias("_sim")
+        "query_id", "neighbor_id", cosine_sim().alias("_sim")
     )
-    ranked = top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("_sim").desc(), F.col("neighbor_id").asc()],
-        TOPK,
-    )
-    return ranked.select(
-        "query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("cosine_sim")
-    )
+    return top_cosine(scored)
 
 
 #: IVF coarse-quantizer size of :func:`ann_ivf_topk`, and the cells each
@@ -182,9 +203,11 @@ def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, n_probe: int) -> DataFra
     The other classic ANN scale path next to hyperplane LSH (ann_lsh_topk):
 
     1. **coarse quantizer** — IVF_CELLS centroid vectors; here the
-       lowest-id corpus vectors, collected once driver-side (centroids are
-       metadata-sized at any corpus scale; production would train them
-       offline with k-means and pass them in the same literal form);
+       lowest-id corpus vectors (the k-means seed,
+       operators.kmeans.initial_centroids), collected once driver-side
+       (centroids are metadata-sized at any corpus scale; production
+       would train them offline with k-means and pass them in the same
+       literal form);
     2. **assignment** — every corpus vector goes to its max-cosine
        centroid cell. Centroids are L2-normalized driver-side, so the
        per-row work is exactly IVF_CELLS dot products (the row's own
@@ -203,13 +226,11 @@ def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, n_probe: int) -> DataFra
     """
     import math
 
-    cent_rows = (
-        corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
-        .orderBy("id")
-        .limit(IVF_CELLS)
-        .collect()
-    )
-    if not cent_rows:
+    from ..functions.vector import literal_matrix
+    from .kmeans import initial_centroids
+
+    seeds = initial_centroids(corpus, IVF_CELLS)
+    if not seeds:
         # empty corpus: no quantizer, no cells, no candidates — a typed
         # empty frame, matching the SQL twin's empty seed CTE (an empty
         # centroid literal would break zip_with's type resolution)
@@ -218,23 +239,18 @@ def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, n_probe: int) -> DataFra
         )
 
     def _unit(v):  # driver-side L2 normalize; zero vector -> zero dots
-        n = math.sqrt(sum(float(x) * float(x) for x in v))
-        return [float(x) / n for x in v] if n else [0.0] * len(v)
+        n = math.sqrt(sum(x * x for x in v))
+        return [x / n for x in v] if n else [0.0] * len(v)
 
-    from ..functions.vector import literal_matrix
-
-    cents = literal_matrix([_unit(r.v) for r in cent_rows])
-
-    def cell_scores(vec):  # dot against every unit centroid: rank == cosine rank
-        vd = as_double(vec)
-        return F.transform(cents, lambda c: _fold_dot(vd, c))
-
-    c_scores = cell_scores(F.col("embedding"))
-    c = _side(
-        corpus, "neighbor_id", "cvec", "_cn",
-        F.array_position(c_scores, F.array_max(c_scores)).alias("cell"),
+    cents = literal_matrix([_unit(v) for v in seeds])
+    # dot against every unit centroid: rank == cosine rank
+    c_scores = F.transform(cents, lambda c: dot(F.col("embedding"), c))
+    q_scored, c = cosine_sides(
+        queries,
+        corpus,
+        q_extra=(c_scores.alias("_cs"),),
+        c_extra=(F.array_position(c_scores, F.array_max(c_scores)).alias("cell"),),
     )
-    q_scored = _side(queries, "query_id", "qvec", "_qn", c_scores.alias("_cs"))
     ranked_cells = F.transform(
         F.slice(
             F.array_sort(
@@ -251,27 +267,12 @@ def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, n_probe: int) -> DataFra
     q = q_scored.select(
         "query_id", "qvec", "_qn", F.explode(ranked_cells).alias("cell")
     )
-    denom = F.col("_qn") * F.col("_cn")
-    sim = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("qvec"), F.col("cvec")) / denom
-    )
     scored = (
         c.join(q, "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("_sim"))
+        .select("query_id", "neighbor_id", cosine_sim().alias("_sim"))
     )
-    ranked = top_k_per_group(
-        scored, ["query_id"], [F.col("_sim").desc(), F.col("neighbor_id").asc()], TOPK
-    )
-    return ranked.select(
-        "query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("cosine_sim")
-    )
-
-
-def _fold_dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    return top_cosine(scored)
 
 
 #: banding layout for cosine_neardup_pairs — 4 bands whose sign-bit width
@@ -292,6 +293,22 @@ NEARDUP_MIN_ROWS = 4
 NEARDUP_MAX_ROWS = 16
 NEARDUP_TARGET_BUCKET = 64
 NEARDUP_THRESHOLD = 0.3
+
+
+def _gram_cosine(ids, vecs):
+    """``(ids sorted, their pairwise cosine matrix)`` for one bucket or
+    cluster: one BLAS gram over the id-ordered rows, 0.0 where either
+    vector is all-zero. Sorting by id makes the matrix independent of
+    how the rows arrived."""
+    import numpy as np
+
+    order = np.argsort(ids)
+    mat = np.stack(vecs[order]).astype(np.float64)
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    gram = mat @ mat.T
+    denom = np.outer(norms, norms)
+    sims = np.divide(gram, denom, out=np.zeros_like(gram), where=denom != 0)
+    return ids[order], sims
 
 
 def neardup_rows_per_band(n_rows: int) -> int:
@@ -354,14 +371,7 @@ def cosine_neardup_pairs(corpus: DataFrame, rows_per_band: int) -> DataFrame:
         empty = pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
         if len(pdf) < 2:
             return empty
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        mat = np.stack(pdf["vec"].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        gram = mat @ mat.T
-        denom = np.outer(norms, norms)
-        sims = np.divide(gram, denom, out=np.zeros_like(gram), where=denom != 0)
+        ids, sims = _gram_cosine(pdf["id"].to_numpy(), pdf["vec"].to_numpy())
         ia, ib = np.triu_indices(len(ids), k=1)
         keep = sims[ia, ib] >= NEARDUP_THRESHOLD
         return pd.DataFrame(
@@ -402,8 +412,9 @@ def ann_lsh_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     O(corpus / 2^LSH_PLANES) sized.
     """
     sig = hyperplane_sign_bits(F.col("embedding"), LSH_PLANES)
-    c = _side(corpus, "neighbor_id", "cvec", "_cn", sig.alias("bucket"))
-    q0 = _side(queries, "query_id", "qvec", "_qn", sig.alias("sig"))
+    q0, c = cosine_sides(
+        queries, corpus, q_extra=(sig.alias("sig"),), c_extra=(sig.alias("bucket"),)
+    )
     probes = [F.col("sig")]
     for i in range(LSH_PLANES):
         flipped = F.concat(
@@ -417,24 +428,15 @@ def ann_lsh_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     q = q0.select(
         "query_id", "qvec", "_qn", F.explode(F.array(*probes)).alias("bucket")
     ).distinct()
-    denom = F.col("_qn") * F.col("_cn")
-    sim = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("qvec"), F.col("cvec")) / denom
-    )
     scored = (
         c.join(q, "bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("_sim"))
+        .select("query_id", "neighbor_id", cosine_sim().alias("_sim"))
         # multiprobe can reach the same neighbor via several buckets
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("_sim").alias("_sim"))
     )
-    ranked = top_k_per_group(
-        scored, ["query_id"], [F.col("_sim").desc(), F.col("neighbor_id").asc()], TOPK
-    )
-    return ranked.select(
-        "query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("cosine_sim")
-    )
+    return top_cosine(scored)
 
 
 def hamming_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -526,15 +528,10 @@ def semdedup(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
     )
 
     def dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
+        ids, sims = _gram_cosine(
+            pdf["vec_id"].to_numpy(), pdf["embedding"].to_numpy()
+        )
         cid = int(pdf["cluster_id"].iloc[0])
-        mat = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        denom = np.outer(norms, norms)
-        gram = mat @ mat.T
-        sims = np.divide(gram, denom, out=np.zeros_like(gram), where=denom != 0)
         # strictly-lower-triangle mask: sims[i, j] for j < i are the
         # similarities to smaller-id mates. Mask (not zero-fill) so an
         # all-negative prior row reports its raw negative max — matching

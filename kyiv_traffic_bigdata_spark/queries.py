@@ -2004,6 +2004,39 @@ FROM j
 # Similarity search (embeddings table)
 # --------------------------------------------------------------------------
 
+def _sql_cosine(where: str, vec: str = "embedding", p: str = "") -> str:
+    """CTE chain ``{p}qe, {p}ce, {p}norms, {p}dots, {p}cos``, the oracle
+    twin of operators.similarity.cosine_sides/cosine_sim: ``{p}cos``
+    holds the exact cosine ``sim`` of every ``(qid, nid)`` pair with
+    ``qid != nid``, queries being the ``embeddings`` rows matching
+    ``where``, vectors the ``vec`` expression; 0.0 when either vector is
+    all-zero. ``p`` prefixes the names so one query can hold two chains."""
+    return f"""{p}qe AS (
+  SELECT vec_id AS qid, generate_subscripts({vec}, 1) AS i,
+         CAST(unnest({vec}) AS DOUBLE) AS x
+  FROM embeddings WHERE {where}
+),
+{p}ce AS (
+  SELECT vec_id AS nid, generate_subscripts({vec}, 1) AS i,
+         CAST(unnest({vec}) AS DOUBLE) AS y
+  FROM embeddings
+),
+{p}norms AS (SELECT nid, SUM(y * y) AS n2 FROM {p}ce GROUP BY nid),
+{p}dots AS (
+  SELECT qid, nid, SUM(x * y) AS d
+  FROM {p}qe JOIN {p}ce USING (i) GROUP BY qid, nid
+),
+{p}cos AS (
+  SELECT qid, {p}dots.nid AS nid,
+         CASE WHEN sqrt(nq.n2) * sqrt(nc.n2) = 0 THEN 0.0
+              ELSE d / (sqrt(nq.n2) * sqrt(nc.n2)) END AS sim
+  FROM {p}dots
+  JOIN {p}norms nq ON nq.nid = {p}dots.qid
+  JOIN {p}norms nc ON nc.nid = {p}dots.nid
+  WHERE qid != {p}dots.nid
+)"""
+
+
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-10 for query vectors (vec_id % 50 = 0)."""
     emb = _emb(spark, sf_dir)
@@ -2011,35 +2044,14 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.cosine_topk(q, emb)
 
 
-SQL_COSINE_TOPK = """
-WITH qe AS (
-  SELECT vec_id AS qid, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings WHERE vec_id % 50 = 0
-),
-ce AS (
-  SELECT vec_id AS nid, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS y
-  FROM embeddings
-),
-norms AS (SELECT nid, SUM(y * y) AS n2 FROM ce GROUP BY nid),
-dots AS (
-  SELECT qid, nid, SUM(x * y) AS d
-  FROM qe JOIN ce USING (i) GROUP BY qid, nid
-),
-cos AS (
-  SELECT qid, dots.nid AS nid,
-         CASE WHEN sqrt(nq.n2) * sqrt(nc.n2) = 0 THEN 0.0
-              ELSE d / (sqrt(nq.n2) * sqrt(nc.n2)) END AS sim
-  FROM dots JOIN norms nq ON nq.nid = dots.qid JOIN norms nc ON nc.nid = dots.nid
-  WHERE qid != dots.nid
-),
+SQL_COSINE_TOPK = f"""
+WITH {_sql_cosine("vec_id % 50 = 0")},
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid ASC) AS rn
   FROM cos
 )
 SELECT qid AS query_id, nid AS neighbor_id, round(sim, 6) AS cosine_sim
-FROM ranked WHERE rn <= 10
+FROM ranked WHERE rn <= {SIM.TOPK}
 """
 
 
@@ -2865,6 +2877,30 @@ SELECT *, containment >= {CONTAMINATION_THRESHOLD} AS contaminated FROM j
 #: Cluster-curation defaults: 8 clusters over the 64-dim embeddings.
 KMEANS_K = 8
 
+#: CTE chain ``cent, dists, assign``, the oracle twin of
+#: operators.kmeans.initial_centroids + assign_clusters: ``assign``
+#: holds each embedding's nearest seed centroid ``cid`` (the KMEANS_K
+#: lowest-id vectors) and its squared distance ``d``, ties to the lowest
+#: cid. The distance folds SEQUENTIALLY (list_reduce) like the Spark
+#: side's F.aggregate, so the doubles — and hence the argmin, the
+#: rounded distance and any rank on it — match bit for bit.
+_SQL_NEAREST_CENTROID = f"""cent AS (
+  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cvec
+  FROM embeddings ORDER BY vec_id LIMIT {KMEANS_K}
+),
+dists AS (
+  SELECT e.vec_id, c.cid,
+         list_reduce(list_transform(list_zip(e.embedding, c.cvec), s ->
+           (CAST(struct_extract(s, 1) AS DOUBLE) - CAST(struct_extract(s, 2) AS DOUBLE)) *
+           (CAST(struct_extract(s, 1) AS DOUBLE) - CAST(struct_extract(s, 2) AS DOUBLE))
+         ), (a, b) -> a + b) AS d
+  FROM embeddings e CROSS JOIN cent c
+),
+assign AS (
+  SELECT vec_id, cid, d FROM dists
+  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) = 1
+)"""
+
 #: Tokenizer-vocabulary construction: top-N corpus terms.
 VOCAB_TOP_K = 100
 
@@ -2889,31 +2925,8 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_EMB_KMEANS = f"""
-WITH cent AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT {KMEANS_K}
-),
-ee AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-),
-ce AS (
-  SELECT cid, generate_subscripts(cvec, 1) AS i,
-         CAST(unnest(cvec) AS DOUBLE) AS y
-  FROM cent
-),
-dists AS (
-  SELECT vec_id, label, cid, SUM((x - y) * (x - y)) AS d
-  FROM ee JOIN ce ON ee.i = ce.i
-  GROUP BY vec_id, label, cid
-),
-assign AS (
-  SELECT vec_id, label, cid,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-  FROM dists
-),
-a AS (SELECT vec_id, label, cid FROM assign WHERE rn = 1),
+WITH {_SQL_NEAREST_CENTROID},
+a AS (SELECT vec_id, label, cid FROM assign JOIN embeddings USING (vec_id)),
 sizes AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_members FROM a GROUP BY cid),
 labcnt AS (SELECT cid, label, COUNT(*) AS c FROM a GROUP BY cid, label),
 maj AS (
@@ -3339,36 +3352,17 @@ def q_emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_EMB_SEMDEDUP = f"""
-WITH cent AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT {KMEANS_K}
-),
+WITH {_SQL_NEAREST_CENTROID},
 ee AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
          CAST(unnest(embedding) AS DOUBLE) AS x
   FROM embeddings
 ),
-ce AS (
-  SELECT cid, generate_subscripts(cvec, 1) AS i,
-         CAST(unnest(cvec) AS DOUBLE) AS y
-  FROM cent
-),
-dists AS (
-  SELECT vec_id, cid, SUM((x - y) * (x - y)) AS d
-  FROM ee JOIN ce ON ee.i = ce.i
-  GROUP BY vec_id, cid
-),
-assign AS (
-  SELECT vec_id, cid,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-  FROM dists
-),
-a AS (SELECT vec_id, cid FROM assign WHERE rn = 1),
 norms AS (SELECT vec_id, SUM(x * x) AS n2 FROM ee GROUP BY 1),
 dots AS (
   SELECT aa.vec_id AS ia, bb.vec_id AS ib, SUM(xa.x * xb.x) AS d
-  FROM a aa
-  JOIN a bb ON aa.cid = bb.cid AND aa.vec_id < bb.vec_id
+  FROM assign aa
+  JOIN assign bb ON aa.cid = bb.cid AND aa.vec_id < bb.vec_id
   JOIN ee xa ON xa.vec_id = aa.vec_id
   JOIN ee xb ON xb.vec_id = bb.vec_id AND xb.i = xa.i
   GROUP BY 1, 2
@@ -3385,7 +3379,7 @@ prior AS (
 SELECT a.vec_id, CAST(a.cid AS BIGINT) AS cluster_id,
        COALESCE(prior.ms, 0.0) < {SIM.SEMDEDUP_THRESHOLD} AS kept,
        round(COALESCE(prior.ms, 0.0), 6) AS max_prior_sim
-FROM a LEFT JOIN prior ON prior.vec_id = a.vec_id
+FROM assign a LEFT JOIN prior ON prior.vec_id = a.vec_id
 """
 
 
@@ -5528,33 +5522,12 @@ def q_emb_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_emb_cluster_prune() -> str:
-    # squared distances fold SEQUENTIALLY (list_reduce) like the Spark
-    # side's F.aggregate — bit-identical doubles, so the rounded
-    # distance and hence the rank/prune flag cannot straddle engines.
-    sqd = (
-        "list_reduce(list_transform(list_zip(embedding, cvec), s -> "
-        "(CAST(struct_extract(s, 1) AS DOUBLE) - CAST(struct_extract(s, 2) AS DOUBLE)) * "
-        "(CAST(struct_extract(s, 1) AS DOUBLE) - CAST(struct_extract(s, 2) AS DOUBLE))"
-        "), (a, b) -> a + b)"
-    )
     return f"""
-WITH cent AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cvec
-  FROM embeddings ORDER BY vec_id LIMIT {KMEANS_K}
-),
-dists AS (
-  SELECT e.vec_id, c.cid, {sqd} AS d
-  FROM embeddings e CROSS JOIN cent c
-),
-assign AS (
-  SELECT vec_id, cid, d,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-  FROM dists
-),
+WITH {_SQL_NEAREST_CENTROID},
 a AS (
   SELECT vec_id, CAST(cid AS BIGINT) AS cluster_id,
          (floor(d * 1000000.0 + 0.5) / 1000000.0) AS sq_dist
-  FROM assign WHERE rn = 1
+  FROM assign
 ),
 ranked AS (
   SELECT vec_id, cluster_id, sq_dist,
@@ -7206,25 +7179,12 @@ def q_doc_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     can never swap shortlist ranks cross-engine."""
     from pyspark.sql import Window
 
-    from .functions.vector import dot, norm
-
     bm = q_doc_bm25_topk(spark, sf_dir)
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qvec"), norm(F.col("embedding")).alias("_qn")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("embedding").alias("cvec"),
-        norm(F.col("embedding")).alias("_cn"),
-    )
-    denom = F.col("_qn") * F.col("_cn")
-    sim = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("qvec"), F.col("cvec")) / denom
-    )
+    q, c = SIM.cosine_sides(emb.where(F.col("vec_id") == 0), emb, c_id="doc_id")
     scored = (
         c.join(F.broadcast(q), F.col("doc_id") != 0)
-        .select("doc_id", round6(sim).alias("_sim"))
+        .select("doc_id", round6(SIM.cosine_sim()).alias("_sim"))
     )
     short = top_k(
         scored, [F.col("_sim").desc(), F.col("doc_id").asc()], BM25_TOPN
@@ -7262,27 +7222,7 @@ def _sql_doc_hybrid_rrf() -> str:
     )
     return f"""
 WITH bm AS MATERIALIZED ({_sql_doc_bm25()}),
-qe AS (
-  SELECT generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings WHERE vec_id = 0
-),
-ce AS (
-  SELECT vec_id AS nid, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS y
-  FROM embeddings
-),
-norms AS (SELECT nid, SUM(y * y) AS n2 FROM ce GROUP BY nid),
-dots AS (
-  SELECT nid, SUM(x * y) AS d FROM qe JOIN ce USING (i) GROUP BY nid
-),
-cos AS (
-  SELECT dots.nid,
-         CASE WHEN sqrt(nq.n2) * sqrt(nc.n2) = 0 THEN 0.0
-              ELSE d / (sqrt(nq.n2) * sqrt(nc.n2)) END AS sim
-  FROM dots JOIN norms nq ON nq.nid = 0 JOIN norms nc ON nc.nid = dots.nid
-  WHERE dots.nid != 0
-),
+{_sql_cosine("vec_id = 0")},
 cr0 AS (
   SELECT nid AS doc_id,
          row_number() OVER (
@@ -9468,30 +9408,7 @@ def q_emb_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_EMB_RANGE_SEARCH = f"""
-WITH qe AS (
-  SELECT vec_id AS qid, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings WHERE vec_id < {RANGE_N_QUERIES}
-),
-ce AS (
-  SELECT vec_id AS nid, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS y
-  FROM embeddings
-),
-norms AS (SELECT nid, SUM(y * y) AS n2 FROM ce GROUP BY nid),
-dots AS (
-  SELECT qid, nid, SUM(x * y) AS d
-  FROM qe JOIN ce USING (i) GROUP BY qid, nid
-),
-cos AS (
-  SELECT qid, dots.nid AS nid,
-         CASE WHEN sqrt(nq.n2) * sqrt(nc.n2) = 0 THEN 0.0
-              ELSE d / (sqrt(nq.n2) * sqrt(nc.n2)) END AS sim
-  FROM dots
-  JOIN norms nq ON nq.nid = dots.qid
-  JOIN norms nc ON nc.nid = dots.nid
-  WHERE qid != dots.nid
-)
+WITH {_sql_cosine(f"vec_id < {RANGE_N_QUERIES}")}
 SELECT qid AS query_id, nid AS neighbor_id,
        {SQL_ROUND6.format(x='sim')} AS cosine_sim
 FROM cos WHERE {SQL_ROUND6.format(x='sim')} >= {SIM.RANGE_TAU}
@@ -9706,37 +9623,13 @@ def q_emb_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_emb_mrl_recall() -> str:
-    def topk(vec_expr: str, name: str) -> str:
-        return f"""
-q_{name} AS (
-  SELECT vec_id AS qid, generate_subscripts({vec_expr}, 1) AS i,
-         CAST(unnest({vec_expr}) AS DOUBLE) AS x
-  FROM embeddings WHERE vec_id % 50 = 0
-),
-c_{name} AS (
-  SELECT vec_id AS nid, generate_subscripts({vec_expr}, 1) AS i,
-         CAST(unnest({vec_expr}) AS DOUBLE) AS y
-  FROM embeddings
-),
-n_{name} AS (SELECT nid, SUM(y * y) AS n2 FROM c_{name} GROUP BY nid),
-d_{name} AS (
-  SELECT qid, nid, SUM(x * y) AS d
-  FROM q_{name} JOIN c_{name} USING (i) GROUP BY qid, nid
-),
-s_{name} AS (
-  SELECT qid, d_{name}.nid AS nid,
-         CASE WHEN sqrt(nq.n2) * sqrt(nc.n2) = 0 THEN 0.0
-              ELSE d / (sqrt(nq.n2) * sqrt(nc.n2)) END AS sim
-  FROM d_{name}
-  JOIN n_{name} nq ON nq.nid = d_{name}.qid
-  JOIN n_{name} nc ON nc.nid = d_{name}.nid
-  WHERE qid != d_{name}.nid
-),
+    def topk(vec: str, name: str) -> str:
+        return f"""{_sql_cosine("vec_id % 50 = 0", vec, f"{name}_")},
 sel_{name} AS (
   SELECT qid, nid FROM (
     SELECT qid, nid,
            row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid ASC) AS rn
-    FROM s_{name}
+    FROM {name}_cos
   ) WHERE rn <= {SIM.TOPK}
 )"""
 
@@ -9877,25 +9770,12 @@ def q_emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows never reach ranking), and take top-k per anchor with the
     shared rank convention (raw sim desc, id tiebreak; rounded on
     output)."""
-    from .functions.vector import dot, norm
-    from .operators.topk import top_k_per_group
-
     emb = _emb(spark, sf_dir)
-    a = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("qvec"),
-        norm(F.col("embedding")).alias("_qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("cvec"),
-        norm(F.col("embedding")).alias("_cn"),
-    )
-    denom = F.col("_qn") * F.col("_cn")
-    sim = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot(F.col("qvec"), F.col("cvec")) / denom
+    a, c = SIM.cosine_sides(
+        emb.where(F.col("vec_id") % 50 == 0),
+        emb,
+        q_extra=(F.col("label").alias("query_label"),),
+        c_extra=(F.col("label").alias("neighbor_label"),),
     )
     scored = c.join(
         F.broadcast(a), F.col("query_label") != F.col("neighbor_label")
@@ -9904,52 +9784,20 @@ def q_emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("query_label").cast("long").alias("query_label"),
         "neighbor_id",
         F.col("neighbor_label").cast("long").alias("neighbor_label"),
-        sim.alias("_sim"),
+        SIM.cosine_sim().alias("_sim"),
     )
-    ranked = top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("_sim").desc(), F.col("neighbor_id").asc()],
-        HARDNEG_K,
-    )
-    return ranked.select(
-        "query_id",
-        "query_label",
-        "neighbor_id",
-        "neighbor_label",
-        F.round(F.col("_sim"), 6).alias("cosine_sim"),
-    )
+    return SIM.top_cosine(scored, HARDNEG_K)
 
 
 SQL_EMB_HARD_NEGATIVES = f"""
-WITH qe AS (
-  SELECT vec_id AS qid, label AS qlabel, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings WHERE vec_id % 50 = 0
-),
-ce AS (
-  SELECT vec_id AS nid, label AS nlabel, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS y
-  FROM embeddings
-),
-norms AS (SELECT nid, SUM(y * y) AS n2 FROM ce GROUP BY nid),
-dots AS (
-  SELECT qid, ANY_VALUE(qlabel) AS qlabel, nid, ANY_VALUE(nlabel) AS nlabel,
-         SUM(x * y) AS d
-  FROM qe JOIN ce USING (i) GROUP BY qid, nid
-),
-cos AS (
-  SELECT qid, qlabel, dots.nid AS nid, nlabel,
-         CASE WHEN sqrt(nq.n2) * sqrt(nc.n2) = 0 THEN 0.0
-              ELSE d / (sqrt(nq.n2) * sqrt(nc.n2)) END AS sim
-  FROM dots
-  JOIN norms nq ON nq.nid = dots.qid
-  JOIN norms nc ON nc.nid = dots.nid
-  WHERE qlabel != nlabel
-),
+WITH {_sql_cosine("vec_id % 50 = 0")},
 ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid ASC) AS rn
+  SELECT qid, ql.label AS qlabel, nid, nl.label AS nlabel, sim,
+         row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid ASC) AS rn
   FROM cos
+  JOIN embeddings ql ON ql.vec_id = qid
+  JOIN embeddings nl ON nl.vec_id = nid
+  WHERE ql.label != nl.label
 )
 SELECT qid AS query_id, CAST(qlabel AS BIGINT) AS query_label,
        nid AS neighbor_id, CAST(nlabel AS BIGINT) AS neighbor_label,

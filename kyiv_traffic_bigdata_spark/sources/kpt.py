@@ -39,12 +39,6 @@ from ..functions.geo import in_bbox
 from ..operators.latest import latest_per_key
 from ..schemas import POSITION, POSITIONS_ENVELOPE, ROUTES_ENVELOPE
 
-#: DDL twin of schemas.POSITION for from_csv/from_json (P1, parsers.py:24-53).
-POSITION_DDL = (
-    "vehicle_id LONG, route_id LONG, lat DOUBLE, lon DOUBLE, "
-    "direction INT, flag INT, timestamp LONG"
-)
-
 #: Socket.IO text frame: ``42["event",<payload>]`` (parsers.py:13-14).
 SOCKETIO_FRAME_RE = r'^42\["(\w+)",(.*)\]\s*$'
 
@@ -65,25 +59,13 @@ def read_position_envelopes(spark: SparkSession, paths: str | list[str]) -> Data
     return spark.read.schema(POSITIONS_ENVELOPE).json(paths)
 
 
-def read_positions(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """S1 (visualize.py:39-45): concat all ``positions`` arrays.
+def read_positions_ordered(spark: SparkSession, paths: str | list[str]) -> DataFrame:
+    """S1 (visualize.py:39-45): concat all ``positions`` arrays, with the
+    reference's *file order* made explicit.
 
     Output: one row per vehicle fix + ``ingest_ts`` (envelope collection
     time — the watermark-safe clock, SURVEY ST4) alongside the stale
     device ``timestamp``.
-    """
-    env = read_position_envelopes(spark, paths)
-    return (
-        env.select(
-            F.to_timestamp(F.col("timestamp")).alias("ingest_ts"),
-            F.explode("positions").alias("p"),
-        )
-        .select("ingest_ts", "p.*")
-    )
-
-
-def read_positions_ordered(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """S1 with the reference's *file order* made explicit.
 
     ``visualize.py`` concatenates envelope lines sequentially, and several
     of its operators are order-dependent (stable sort ties, last-seen route
@@ -175,7 +157,7 @@ def latest_routes_snapshot(spark: SparkSession, path: str) -> DataFrame:
 def parse_csv_position(value: Column) -> Column:
     """P1 (parsers.py:24-53): 7-field CSV line → position struct, null if
     wrong arity or any cast fails (reference drops on first bad cast)."""
-    parsed = F.from_csv(value, POSITION_DDL)
+    parsed = F.from_csv(value, POSITION.simpleString())
     ok = (
         (F.size(F.split(value, ",", -1)) == 7)
         & parsed["vehicle_id"].isNotNull()

@@ -14,6 +14,33 @@ from __future__ import annotations
 
 import re
 
+from kyiv_traffic_bigdata_spark.plans import physical_plan
+
+
+def final_plan(df) -> str:
+    """Execute ``df`` and return its FORMATTED plan as AQE left it.
+
+    After execution the formatted text still holds the pre-execution
+    tree (an ``== Initial Plan ==`` section) and the detail blocks of
+    its nodes, so a substring test on the whole text also sees the
+    joins AQE replaced. The text is cut at that section, and only the
+    detail blocks of nodes in the final tree are kept: what remains is
+    what actually ran."""
+    df.collect()
+    plan = physical_plan(df)
+    tree, initial, rest = plan.partition("+- == Initial Plan ==")
+    if not initial:  # no adaptive wrapper: the static plan is what ran
+        return plan
+    ids = set(re.findall(r"\((\d+)\)", tree))
+    blocks = [
+        b
+        for b in rest.split("\n\n")[1:]
+        if (m := re.match(r"\s*\((\d+)\) ", b)) and m.group(1) in ids
+    ]
+    final = tree + "\n\n".join(blocks)
+    assert "isFinalPlan=true" in final, "AQE did not finalize the plan"
+    return final
+
 
 def exchange_count(plan: str) -> int:
     """Number of shuffle exchanges (excludes broadcast + reused ones).

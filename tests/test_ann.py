@@ -29,12 +29,37 @@ def exact_pairs(emb):
     }
 
 
+@pytest.fixture(scope="module")
+def exact_scores(emb):
+    """``cosine_sim`` of EVERY (query, corpus vector) pair, from the one
+    exact scorer with cosine_topk's rounding."""
+    q, c = SIM.cosine_sides(emb.where(F.col("vec_id") % 50 == 0), emb)
+    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+    return {
+        (r.query_id, r.neighbor_id): r.cosine_sim
+        for r in scored.select(
+            "query_id",
+            "neighbor_id",
+            F.round(SIM.cosine_sim(), 6).alias("cosine_sim"),
+        ).collect()
+    }
+
+
 def _recall(approx_rows, exact):
     found = {(r.query_id, r.neighbor_id) for r in approx_rows}
     return len(found & exact) / len(exact)
 
 
-def test_ann_lsh_recall(emb, exact_pairs):
+def _assert_exact_scores(approx_rows, exact_scores):
+    """An approximate path may miss neighbors, never misscore one: every
+    pair it returns carries the exact scorer's cosine for that pair."""
+    assert approx_rows
+    for r in approx_rows:
+        pair = (r.query_id, r.neighbor_id)
+        assert r.cosine_sim == exact_scores[pair], pair
+
+
+def test_ann_lsh_recall(emb, exact_pairs, exact_scores):
     q = emb.where(F.col("vec_id") % 50 == 0)
     rows = SIM.ann_lsh_topk(q, emb).collect()
     # every query answered with a full k, and ids come from the corpus
@@ -45,20 +70,23 @@ def test_ann_lsh_recall(emb, exact_pairs):
     # observed 0.42 on sf0.001 with 4 planes + 1-bit multiprobe (uniform
     # random embeddings are LSH's adversarial case — see operator docstring)
     assert _recall(rows, exact_pairs) >= 0.3
+    _assert_exact_scores(rows, exact_scores)
 
 
-def test_ann_ivf_recall(emb, exact_pairs):
+def test_ann_ivf_recall(emb, exact_pairs, exact_scores):
     q = emb.where(F.col("vec_id") % 50 == 0)
     rows = SIM.ann_ivf_topk(q, emb, SIM.IVF_PROBES).collect()
     # observed ~0.57 on sf0.001 with 16 cells / 4 probes
     assert _recall(rows, exact_pairs) >= 0.4
+    _assert_exact_scores(rows, exact_scores)
 
 
-def test_ann_ivf_more_probes_more_recall(emb, exact_pairs):
+def test_ann_ivf_more_probes_more_recall(emb, exact_pairs, exact_scores):
     """Probing every cell must recover the exact result set."""
     q = emb.where(F.col("vec_id") % 50 == 0)
     rows = SIM.ann_ivf_topk(q, emb, SIM.IVF_CELLS).collect()
     assert _recall(rows, exact_pairs) == 1.0
+    _assert_exact_scores(rows, exact_scores)
 
 
 # ---------------------------------------------------------------------------

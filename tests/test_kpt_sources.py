@@ -21,7 +21,7 @@ from kyiv_traffic_bigdata_spark.sources.kpt import (
     latest_routes_snapshot,
     parse_messages,
     read_position_envelopes,
-    read_positions,
+    read_positions_ordered,
     read_routes,
     start_routes_refresher,
     write_position_envelopes_jsonl,
@@ -119,7 +119,7 @@ def test_read_positions_golden_counts(spark):
     # (SURVEY §6 fleet-cardinality row: 2,339 vehicles, 263 route ids).
     env = read_position_envelopes(spark, REF_POSITIONS)
     assert env.count() == 125
-    pos = read_positions(spark, REF_POSITIONS)
+    pos = read_positions_ordered(spark, REF_POSITIONS)
     agg = pos.agg(
         F.count("*").alias("n"),
         F.countDistinct("vehicle_id").alias("veh"),
@@ -152,7 +152,7 @@ def test_write_read_roundtrip(spark, tmp_path):
 
     jl = str(tmp_path / "pos_jsonl")
     write_position_envelopes_jsonl(df, jl)
-    reread = read_positions(spark, jl)
+    reread = read_positions_ordered(spark, jl)
     assert reread.count() == 2
     assert {r.vehicle_id for r in reread.collect()} == {1, 3}
 

@@ -20,6 +20,7 @@ from plan_checks import (
     broadcast_join_count,
     broadcast_join_keys,
     exchange_count,
+    final_plan,
     parquet_scan_count,
     scan_filter_exprs,
     sort_merge_join_count,
@@ -377,13 +378,11 @@ def test_neardup_keep_broadcasts_component_table_at_runtime(spark, sf_dir):
     heavily duplicated crawl can make the paired set corpus-scale,
     where a forced broadcast OOMs) — so the broadcast must come from
     AQE's runtime conversion when the component table is actually
-    small, which it is here. Pin the EXECUTED plan: no sort-merge left
-    join survives to runtime."""
-    df = QUERIES["doc_neardup_keep"](spark, sf_dir)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in executed
-    assert "SortMergeJoin LeftOuter" not in executed
+    small, which it is here. Pin the EXECUTED plan: the doc_id join
+    broadcasts and no sort-merge join survives to runtime."""
+    executed = final_plan(QUERIES["doc_neardup_keep"](spark, sf_dir))
+    assert "doc_id" in broadcast_join_keys(executed)
+    assert sort_merge_join_count(executed) == 0
 
 
 def test_cluster_prune_no_per_cluster_fact_window(plans):
@@ -745,11 +744,10 @@ def test_token_pmi_equi_self_join_and_broadcast_marginals(plans):
 def test_pmi_marginals_broadcast_at_runtime(spark, sf_dir):
     """AQE must convert the unhinted vocab-marginal joins to broadcasts
     when the aggregated tfreq is actually small (runtime sizes, not
-    static estimates)."""
-    df = QUERIES["token_pmi"](spark, sf_dir)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in executed
+    static estimates). Reads the EXECUTED plan: both marginal joins,
+    keyed on tok_a and tok_b, ran as broadcasts."""
+    executed = final_plan(QUERIES["token_pmi"](spark, sf_dir))
+    assert {"tok_a", "tok_b"} <= broadcast_join_keys(executed)
 
 
 def test_link_prediction_wedge_plan_broadcast_degrees(plans):
@@ -1117,7 +1115,7 @@ def test_r09_additions_plan_shapes(plans):
     assert parquet_scan_count(ab, "events") == 1
 
 
-def test_minhash_pipeline_never_broadcasts(plans):
+def test_minhash_pipeline_never_broadcasts(plans, spark, sf_dir):
     """Every table in the near-dup pair pipelines scales with the corpus
     (bucket table, candidate pairs, per-doc shingle-id sets), and the
     size estimate of a staged table undershoots badly enough that a
@@ -1125,7 +1123,10 @@ def test_minhash_pipeline_never_broadcasts(plans):
     driver at 100x sf0.1. So the MinHash-LSH plan has no broadcast join
     at all, no pair operator broadcasts a per-doc table (a join keyed on
     id_a / id_b / doc_id), and none ships per-doc shingle STRING arrays:
-    the sets are built from the shared int64 shingle-id index."""
+    the sets are built from the shared int64 shingle-id index. The
+    per-doc rule holds in the executed plans too, after AQE's runtime
+    join conversions (the ``_sid`` self-joins are not covered: they
+    still become runtime broadcasts)."""
     by_name = {
         name: plans(name)
         for name in (
@@ -1144,6 +1145,8 @@ def test_minhash_pipeline_never_broadcasts(plans):
         assert not broadcast_join_keys(plan) & {"id_a", "id_b", "doc_id"}, name
         assert "collect_set(shingle" not in plan, name
         assert "collect_list(shingle" not in plan, name
+        executed = final_plan(QUERIES[name](spark, sf_dir))
+        assert not broadcast_join_keys(executed) & {"id_a", "id_b", "doc_id"}, name
 
 
 def test_r09_late_additions_plan_shapes(plans):
