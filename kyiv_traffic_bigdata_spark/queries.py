@@ -86,6 +86,28 @@ def _savg(expr: str, cnt: str) -> str:
     return f"{_ssum(expr)} / {cnt}"
 
 
+def _sql_quantile_disc(
+    src: str, quantiles: list[tuple[str, int, int]], n: str = "n"
+) -> str:
+    """SELECT body, the oracle twin of operators.rank.quantile_disc_slab:
+    per group ``g`` of the relation ``src`` (columns ``g`` and ``v``),
+    the row count ``n`` and, for each ``(alias, num, den)`` of
+    ``quantiles``, the smallest ``v`` whose cumulative count reaches the
+    integer rank (num·n + den − 1) // den = ⌈num·n/den⌉."""
+    sels = "".join(
+        f",\n       MIN(CASE WHEN cm >= ({num} * n + {den - 1}) // {den}"
+        f" THEN v END) AS {alias}"
+        for alias, num, den in quantiles
+    )
+    return f"""SELECT g, CAST(MAX(n) AS BIGINT) AS {n}{sels}
+FROM (
+  SELECT g, v, SUM(c) OVER (PARTITION BY g ORDER BY v ASC) AS cm,
+         SUM(c) OVER (PARTITION BY g) AS n
+  FROM (SELECT g, v, COUNT(*) AS c FROM {src} GROUP BY g, v)
+)
+GROUP BY g"""
+
+
 _NORM = r"regexp_replace(lower(trim({c})), '\s+', ' ', 'g')"
 
 
@@ -593,43 +615,45 @@ def q_approx_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_approx_event_stats() -> str:
-    """DuckDB twin of the portable-HLL stats — shares the register
-    derivation with _sql_user_hll_sketch (operators/hll.py constants)."""
+def _sql_hll_est() -> str:
+    """CTEs ``r``, ``regs``, ``agg`` and ``est``, the DuckDB twin of
+    operators/hll.py's ``hll_registers`` + ``hll_estimate`` over
+    (event_type, user_id) of ``events``: ``est`` holds per event type
+    ``zero_registers``, ``register_sum`` and the rounded estimate
+    ``est``."""
     from .operators.hll import HLL_ALPHA, HLL_M, HLL_W_BITS
 
-    two_w = 1 << (HLL_W_BITS + 1)
-    scale = repr(HLL_ALPHA * HLL_M * HLL_M * two_w)
+    two_w = 1 << (HLL_W_BITS + 1)  # 2^27, the rho-sum grid
+    scale = repr(HLL_ALPHA * HLL_M * HLL_M * two_w)  # one shared literal
     h = _PORTABLE_HASH.format(s="CAST(user_id AS VARCHAR)")
     est = f"""CASE WHEN {scale} / register_sum <= {2.5 * HLL_M}
                    AND zero_registers > 0
               THEN {float(HLL_M)} * ln({float(HLL_M)} / zero_registers)
               ELSE {scale} / register_sum END"""
-    return f"""
-WITH r AS (
+    return f"""r AS (
   SELECT event_type, {h} % {HLL_M} AS _reg,
          {HLL_W_BITS + 1} - length(ltrim(bin({h} // {HLL_M}), '0')) AS _rho
   FROM events
 ),
 regs AS (SELECT event_type, _reg, MAX(_rho) AS _rho FROM r GROUP BY 1, 2),
 agg AS (
-  SELECT event_type, COUNT(*) AS _filled,
-         SUM(CAST(pow(2.0, {HLL_W_BITS + 1} - _rho) AS BIGINT)) AS _sf
+  SELECT event_type,
+         CAST({HLL_M} - COUNT(*) AS BIGINT) AS zero_registers,
+         CAST(SUM(CAST(pow(2.0, {HLL_W_BITS + 1} - _rho) AS BIGINT))
+              + ({HLL_M} - COUNT(*)) * {two_w} AS BIGINT) AS register_sum
   FROM regs GROUP BY 1
 ),
-est AS (
-  SELECT event_type,
-         CAST({HLL_M} - _filled AS BIGINT) AS zero_registers,
-         CAST(_sf + ({HLL_M} - _filled) * {two_w} AS BIGINT) AS register_sum
-  FROM agg
-),
+est AS (SELECT *, {SQL_ROUND6.format(x=est)} AS est FROM agg)"""
+
+
+SQL_APPROX_EVENT_STATS = f"""
+WITH {_sql_hll_est()},
 base AS (
   SELECT event_type, {_savg('value', 'COUNT(value)')} AS avg_value,
          CAST(COUNT(value) AS BIGINT) AS samples
   FROM events GROUP BY 1
 )
-SELECT base.event_type, base.avg_value, base.samples,
-       {SQL_ROUND6.format(x=est)} AS users_est
+SELECT base.event_type, base.avg_value, base.samples, est.est AS users_est
 FROM base JOIN est USING (event_type)
 """
 
@@ -6579,6 +6603,10 @@ FROM prof
 """
 
 
+#: Per-key row-count quantiles of the join-skew profile.
+SKEW_QS = [("p50", 1, 2), ("p99", 99, 100)]
+
+
 def q_join_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic for the lineitem→orders key — the
     pre-flight check that decides whether a shuffle join needs salting
@@ -6604,7 +6632,7 @@ def q_join_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_key.select(F.lit("all").alias("g"), F.col("cnt").alias("v")),
         "g",
         "v",
-        [("p50", 1, 2), ("p99", 99, 100)],
+        SKEW_QS,
         count_alias="n_keys",
     ).select("n_keys", "p50", "p99")
     totals = per_key.agg(
@@ -6633,23 +6661,16 @@ WITH per_key AS (
   SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM lineitem GROUP BY 1
 ),
-hist AS (SELECT cnt AS v, CAST(COUNT(*) AS BIGINT) AS c FROM per_key GROUP BY 1),
-cumh AS (SELECT v, SUM(c) OVER (ORDER BY v ASC) AS cum, SUM(c) OVER () AS n
-         FROM hist),
-q AS (
-  SELECT MAX(n) AS n_keys,
-         MIN(CASE WHEN cum >= (1 * n + 1) // 2 THEN v END) AS p50,
-         MIN(CASE WHEN cum >= (99 * n + 99) // 100 THEN v END) AS p99
-  FROM cumh
-),
+q AS ({_sql_quantile_disc(
+    "(SELECT 'all' AS g, cnt AS v FROM per_key)", SKEW_QS, "n_keys"
+)}),
 t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total_rows,
              CAST(MAX(cnt) AS BIGINT) AS max_per_key FROM per_key)
-SELECT CAST(n_keys AS BIGINT) AS n_keys, total_rows,
+SELECT n_keys, total_rows,
        CAST(p50 AS BIGINT) AS p50_per_key, CAST(p99 AS BIGINT) AS p99_per_key,
        max_per_key,
        {SQL_ROUND6.format(x="max_per_key * CAST(n_keys AS DOUBLE) / CAST(total_rows AS DOUBLE)")} AS skew_max_over_mean
 FROM t CROSS JOIN q
-WHERE total_rows IS NOT NULL
 """
 
 
@@ -6716,6 +6737,10 @@ GROUP BY 1
 """
 
 
+#: RFM score boundaries: the exact population quartiles.
+RFM_QUARTILES = [("p25", 1, 4), ("p50", 2, 4), ("p75", 3, 4)]
+
+
 def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation — the retail-analytics staple: score
     every ordering customer 1–4 on Recency (latest order date),
@@ -6744,17 +6769,16 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.staging import stage
 
     stats = stats.transform(stage)
-    QS = [("p25", 1, 4), ("p50", 2, 4), ("p75", 3, 4)]
 
     def quartiles(col, prefix):
         q = quantile_disc_slab(
             stats.select(F.lit("all").alias("g"), F.col(col).alias("v")),
             "g",
             "v",
-            QS,
+            RFM_QUARTILES,
         )
         return q.select(
-            *[F.col(a).alias(f"{prefix}_{a}") for a, _, _ in QS]
+            *[F.col(a).alias(f"{prefix}_{a}") for a, _, _ in RFM_QUARTILES]
         )
 
     def score(col, prefix):
@@ -6786,19 +6810,12 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_customer_rfm() -> str:
-    def qblock(metric: str, prefix: str) -> str:
-        ranks = {"p25": "(1 * n + 3) // 4", "p50": "(2 * n + 3) // 4",
-                 "p75": "(3 * n + 3) // 4"}
-        sels = ", ".join(
-            f"MIN(CASE WHEN cum >= {r} THEN v END) AS {prefix}_{a}"
-            for a, r in ranks.items()
-        )
+    def qblock(metric: str) -> str:
         return f"""
-{prefix}h AS (SELECT {metric} AS v, CAST(COUNT(*) AS BIGINT) AS c
-              FROM stats GROUP BY 1),
-{prefix}c AS (SELECT v, SUM(c) OVER (ORDER BY v ASC) AS cum,
-                     SUM(c) OVER () AS n FROM {prefix}h),
-{prefix}q AS (SELECT {sels} FROM {prefix}c)"""
+{metric}q AS ({_sql_quantile_disc(
+    f"(SELECT 'all' AS g, {metric} AS v FROM stats)",
+    [(f"{metric}_{a}", num, den) for a, num, den in RFM_QUARTILES],
+)})"""
 
     score = (
         "1 + (CASE WHEN {x} > {p}_p25 THEN 1 ELSE 0 END)"
@@ -6811,7 +6828,7 @@ WITH stats AS MATERIALIZED (
          CAST(COUNT(*) AS BIGINT) AS f,
          round({_ssum('o_totalprice')}, 6) AS m
   FROM orders GROUP BY 1
-),{qblock('r', 'r')},{qblock('f', 'f')},{qblock('m', 'm')},
+),{qblock('r')},{qblock('f')},{qblock('m')},
 scored AS (
   SELECT m,
          {score.format(x='stats.r', p='r')} AS r_score,
@@ -7860,6 +7877,10 @@ FROM rk WHERE rn <= {PRIORITY_K}
 """
 
 
+#: Order-value quantiles per priority.
+ORDER_PRICE_QS = [("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)]
+
+
 def q_order_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact discrete p50/p90/p99 of order value per order priority —
     the distributed-exact-quantile operator (operators.rank.
@@ -7873,27 +7894,18 @@ def q_order_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders").select("o_orderpriority", "o_totalprice"),
         "o_orderpriority",
         "o_totalprice",
-        [("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)],
+        ORDER_PRICE_QS,
         count_alias="n_orders",
     )
 
 
-SQL_ORDER_PRICE_QUANTILES = """
-WITH h AS (
-  SELECT o_orderpriority AS g, o_totalprice AS v, COUNT(*) AS c
-  FROM orders GROUP BY 1, 2
-),
-cum AS (
-  SELECT g, v,
-         SUM(c) OVER (PARTITION BY g ORDER BY v ASC) AS cm,
-         SUM(c) OVER (PARTITION BY g) AS n
-  FROM h
-)
-SELECT g AS o_orderpriority, CAST(MAX(n) AS BIGINT) AS n_orders,
-       MIN(CASE WHEN cm >= (1 * n + 1) // 2 THEN v END) AS p50,
-       MIN(CASE WHEN cm >= (9 * n + 9) // 10 THEN v END) AS p90,
-       MIN(CASE WHEN cm >= (99 * n + 99) // 100 THEN v END) AS p99
-FROM cum GROUP BY g
+SQL_ORDER_PRICE_QUANTILES = f"""
+WITH q AS ({_sql_quantile_disc(
+    "(SELECT o_orderpriority AS g, o_totalprice AS v FROM orders)",
+    ORDER_PRICE_QS,
+    "n_orders",
+)})
+SELECT g AS o_orderpriority, n_orders, p50, p90, p99 FROM q
 """
 
 
@@ -9459,39 +9471,14 @@ def q_user_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_user_hll_sketch() -> str:
-    from .operators.hll import HLL_ALPHA, HLL_M, HLL_W_BITS
-
-    two_w = 1 << (HLL_W_BITS + 1)  # 2^27, the rho-sum grid
-    scale = repr(HLL_ALPHA * HLL_M * HLL_M * two_w)  # one shared literal
-    h = _PORTABLE_HASH.format(s="CAST(user_id AS VARCHAR)")
-    return f"""
-WITH r AS (
-  SELECT event_type, {h} % {HLL_M} AS _reg,
-         {HLL_W_BITS + 1} - length(ltrim(bin({h} // {HLL_M}), '0')) AS _rho
-  FROM events
-),
-regs AS (SELECT event_type, _reg, MAX(_rho) AS _rho FROM r GROUP BY 1, 2),
-agg AS (
-  SELECT event_type, COUNT(*) AS _filled,
-         SUM(CAST(pow(2.0, {HLL_W_BITS + 1} - _rho) AS BIGINT)) AS _sf
-  FROM regs GROUP BY 1
-),
-est AS (
-  SELECT event_type,
-         CAST({HLL_M} - _filled AS BIGINT) AS zero_registers,
-         CAST(_sf + ({HLL_M} - _filled) * {two_w} AS BIGINT) AS register_sum
-  FROM agg
-),
+SQL_USER_HLL_SKETCH = f"""
+WITH {_sql_hll_est()},
 ex AS (
   SELECT event_type, CAST(COUNT(DISTINCT CAST(user_id AS VARCHAR)) AS BIGINT) AS n_exact
   FROM events GROUP BY 1
 )
 SELECT est.event_type, ex.n_exact, est.zero_registers, est.register_sum,
-       {SQL_ROUND6.format(x=f'''CASE WHEN {scale} / register_sum <= {2.5 * HLL_M}
-                   AND zero_registers > 0
-              THEN {float(HLL_M)} * ln({float(HLL_M)} / zero_registers)
-              ELSE {scale} / register_sum END''')} AS est_users
+       est.est AS est_users
 FROM est JOIN ex USING (event_type)
 """
 
@@ -10527,6 +10514,88 @@ FROM j GROUP BY doc_id
 """
 
 
+def _midpoint(ev: DataFrame) -> DataFrame:
+    """1-row ``_mid``: the midpoint of ``ev``'s ts_us range, where the
+    event-statistics family splits time into two halves.
+
+    INTEGER floor division (`div`), never via double: a double
+    (min+max)/2 then cast truncates (3.5 → 3) while DuckDB's BIGINT
+    cast rounds half-to-even (3.5 → 4) — a 1 µs midpoint skew that
+    flips boundary events between halves. Floor division is identical
+    in both engines on the non-negative ts_us domain (the oracles use
+    `//`), and stays exact past 2^53 µs where the double path would
+    already have lost integer precision."""
+    return ev.agg(F.expr("(min(ts_us) + max(ts_us)) div 2").alias("_mid"))
+
+
+def _halves(ev: DataFrame) -> DataFrame:
+    """``(event_type, value, _a)`` per row of ``ev``: ``_a`` is 1 in the
+    first time half (ts_us at or before the midpoint, which rides a
+    1-row broadcast) and 0 in the second. Oracle twin:
+    :func:`_sql_halves`."""
+    return ev.crossJoin(F.broadcast(_midpoint(ev))).select(
+        "event_type",
+        "value",
+        F.when(F.col("ts_us") <= F.col("_mid"), F.lit(1))
+        .otherwise(F.lit(0))
+        .alias("_a"),
+    )
+
+
+def _half_counts(df: DataFrame, *keys: str, more: tuple = ()) -> DataFrame:
+    """``df`` (a :func:`_halves` frame) grouped by ``keys``: ``_ca`` and
+    ``_cb`` count its first- and second-half rows, next to the
+    aggregates ``more``. Oracle twin: :data:`_SQL_HALF_COUNTS`."""
+    return df.groupBy(*keys).agg(
+        F.sum("_a").alias("_ca"),
+        F.sum(F.lit(1) - F.col("_a")).alias("_cb"),
+        *more,
+    )
+
+
+def _half_totals(df: DataFrame) -> DataFrame:
+    """``df`` (a :func:`_half_counts` frame) with each event type's
+    half sizes ``_na``/``_nb``, summed over a window on the bounded
+    count slab."""
+    from pyspark.sql import Window
+
+    wg = Window.partitionBy("event_type")
+    return df.withColumn("_na", F.sum("_ca").over(wg)).withColumn(
+        "_nb", F.sum("_cb").over(wg)
+    )
+
+
+def _sql_halves(value: bool = True) -> str:
+    """CTEs ``ev``, ``mid`` and ``sided``, the oracle twin of
+    :func:`_halves`: ``sided`` holds ``(event_type, value, a)`` per
+    event with a non-NULL value (``value=False``: per event, without
+    the value column), ``a`` = 1 in the first time half."""
+    v, keep = ("value, ", " WHERE value IS NOT NULL") if value else ("", "")
+    return f"""ev AS (SELECT event_type, {v}epoch_us(ts) AS ts_us FROM events{keep}),
+mid AS (SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS m FROM ev),
+sided AS (
+  SELECT event_type, {v}CASE WHEN ts_us <= mid.m THEN 1 ELSE 0 END AS a
+  FROM ev CROSS JOIN mid
+)"""
+
+
+#: Oracle twin of :func:`_half_counts`' two sums, over a ``sided`` CTE.
+_SQL_HALF_COUNTS = (
+    "CAST(SUM(a) AS BIGINT) AS ca, CAST(SUM(1 - a) AS BIGINT) AS cb"
+)
+
+#: CTE ``hist`` over :func:`_sql_halves`, shared by the KS and MWU
+#: twins: the (event_type, value) half counts ``ca``/``cb`` with each
+#: type's half sizes ``na``/``nb`` (:func:`_half_totals`).
+_SQL_HALF_HIST = f"""{_sql_halves()},
+hist AS (
+  SELECT event_type, value, ca, cb,
+         SUM(ca) OVER (PARTITION BY event_type) AS na,
+         SUM(cb) OVER (PARTITION BY event_type) AS nb
+  FROM (SELECT event_type, value, {_SQL_HALF_COUNTS} FROM sided GROUP BY 1, 2)
+)"""
+
+
 def q_event_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample KOLMOGOROV-SMIRNOV drift per event type: the exact KS
     statistic between the value distribution of the first and second
@@ -10544,37 +10613,17 @@ def q_event_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     type, the gini/quantile-slab discipline) → one cumulative window
     over the bounded slab → one max aggregate. The time midpoint rides
     a 1-row broadcast; NULL values are excluded on both engines."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    # midpoint in INTEGER floor division (`div`), never via double: a
-    # double (min+max)/2 then cast truncates (3.5 → 3) while DuckDB's
-    # BIGINT cast rounds half-to-even (3.5 → 4) — a 1 µs midpoint skew
-    # that flips boundary events between halves. Floor division is
-    # identical in both engines on the non-negative ts_us domain
-    # (oracle uses `//`), and stays exact past 2^53 µs where the
-    # double path would already have lost integer precision.
-    mid = ev.agg(F.expr("(min(ts_us) + max(ts_us)) div 2").alias("_mid"))
-    sided = ev.crossJoin(F.broadcast(mid)).select(
-        "event_type",
-        "value",
-        F.when(F.col("ts_us") <= F.col("_mid"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("_a"),
-    )
-    hist = sided.groupBy("event_type", "value").agg(
-        F.sum("_a").alias("_ca"),
-        F.sum(F.lit(1) - F.col("_a")).alias("_cb"),
-    )
     from pyspark.sql import Window
 
-    wg = Window.partitionBy("event_type")
-    wcum = wg.orderBy(F.col("value").asc()).rowsBetween(
-        Window.unboundedPreceding, 0
+    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    hist = _half_totals(_half_counts(_halves(ev), "event_type", "value"))
+    wcum = (
+        Window.partitionBy("event_type")
+        .orderBy(F.col("value").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = (
-        hist.withColumn("_na", F.sum("_ca").over(wg))
-        .withColumn("_nb", F.sum("_cb").over(wg))
-        .withColumn("_cuma", F.sum("_ca").over(wcum))
-        .withColumn("_cumb", F.sum("_cb").over(wcum))
+    cum = hist.withColumn("_cuma", F.sum("_ca").over(wcum)).withColumn(
+        "_cumb", F.sum("_cb").over(wcum)
     )
     return (
         cum.where((F.col("_na") > 0) & (F.col("_nb") > 0))
@@ -10612,26 +10661,12 @@ def q_event_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_KS_DRIFT = f"""
-WITH ev AS (
-  SELECT event_type, value, epoch_us(ts) AS ts_us FROM events
-  WHERE value IS NOT NULL
-),
-mid AS (SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS m FROM ev),
-hist AS (
-  SELECT event_type, value,
-         CAST(SUM(CASE WHEN ts_us <= mid.m THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-         CAST(SUM(CASE WHEN ts_us <= mid.m THEN 0 ELSE 1 END) AS BIGINT) AS cb
-  FROM ev CROSS JOIN mid GROUP BY 1, 2
-),
+WITH {_SQL_HALF_HIST},
 cum AS (
-  SELECT event_type,
-         SUM(ca) OVER (PARTITION BY event_type) AS na,
-         SUM(cb) OVER (PARTITION BY event_type) AS nb,
-         SUM(ca) OVER (PARTITION BY event_type ORDER BY value ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
-         SUM(cb) OVER (PARTITION BY event_type ORDER BY value ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb
+  SELECT event_type, na, nb, SUM(ca) OVER w AS cuma, SUM(cb) OVER w AS cumb
   FROM hist
+  WINDOW w AS (PARTITION BY event_type ORDER BY value ASC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 ),
 agg AS (
   SELECT event_type, CAST(MAX(na) AS BIGINT) AS n_first,
@@ -10648,7 +10683,7 @@ FROM agg
 
 
 def q_event_mwu_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample MANN-WHITNEY U drift per event type (r11): the
+    """Two-sample MANN-WHITNEY U drift per event type: the
     rank-based member of the drift-test family, next to the exact KS
     (`event_ks_drift` — sup-distance, sensitive to any shape change)
     and χ² (`token_chi2_drift`): MWU/AUC reads stochastic dominance —
@@ -10667,33 +10702,18 @@ def q_event_mwu_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Products ride decimal(38,0) (R reaches n² — past long at ~3e9 rows
     per type, real at the 100 TB posture); the final u2 cast to long
     documents the same domain bound the KS d_num carries."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    mid = ev.agg(F.expr("(min(ts_us) + max(ts_us)) div 2").alias("_mid"))
-    sided = ev.crossJoin(F.broadcast(mid)).select(
-        "event_type",
-        "value",
-        F.when(F.col("ts_us") <= F.col("_mid"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("_a"),
-    )
-    hist = sided.groupBy("event_type", "value").agg(
-        F.sum("_a").alias("_ca"),
-        F.sum(F.lit(1) - F.col("_a")).alias("_cb"),
-    )
     from pyspark.sql import Window
 
-    wg = Window.partitionBy("event_type")
-    wcum = wg.orderBy(F.col("value").asc()).rowsBetween(
-        Window.unboundedPreceding, 0
+    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    hist = _half_totals(_half_counts(_halves(ev), "event_type", "value"))
+    wcum = (
+        Window.partitionBy("event_type")
+        .orderBy(F.col("value").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
     cnt = F.col("_ca") + F.col("_cb")
-    cum = (
-        hist.withColumn("_na", F.sum("_ca").over(wg))
-        .withColumn("_nb", F.sum("_cb").over(wg))
-        .withColumn(
-            "_mr2",
-            F.lit(2) * (F.sum(cnt).over(wcum) - cnt) + cnt + F.lit(1),
-        )
+    cum = hist.withColumn(
+        "_mr2", F.lit(2) * (F.sum(cnt).over(wcum) - cnt) + cnt + F.lit(1)
     )
     agg = (
         cum.where((F.col("_na") > 0) & (F.col("_nb") > 0))
@@ -10732,21 +10752,9 @@ def q_event_mwu_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_MWU_DRIFT = f"""
-WITH ev AS (
-  SELECT event_type, value, epoch_us(ts) AS ts_us FROM events
-  WHERE value IS NOT NULL
-),
-mid AS (SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS m FROM ev),
-hist AS (
-  SELECT event_type, value,
-         CAST(SUM(CASE WHEN ts_us <= mid.m THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-         CAST(SUM(CASE WHEN ts_us <= mid.m THEN 0 ELSE 1 END) AS BIGINT) AS cb
-  FROM ev CROSS JOIN mid GROUP BY 1, 2
-),
+WITH {_SQL_HALF_HIST},
 cum AS (
-  SELECT event_type, ca, cb,
-         SUM(ca) OVER (PARTITION BY event_type) AS na,
-         SUM(cb) OVER (PARTITION BY event_type) AS nb,
+  SELECT event_type, ca, na, nb,
          2 * (SUM(ca + cb) OVER (PARTITION BY event_type ORDER BY value ASC
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - (ca + cb))
            + (ca + cb) + 1 AS mr2
@@ -10775,7 +10783,7 @@ FROM u
 
 def q_event_welch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WELCH's unequal-variance t-test per event type between the two
-    time halves (r11) — the PARAMETRIC member of the drift family: KS
+    time halves — the PARAMETRIC member of the drift family: KS
     reads any distributional change, MWU reads dominance, Welch reads
     specifically "did the MEAN move, given each half's own variance?"
     with the Welch–Satterthwaite effective df an experimentation
@@ -10793,39 +10801,35 @@ def q_event_welch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form. The midpoint rides the same 1-row broadcast and
     integer `div 2` convention as the KS/MWU twins."""
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    mid = ev.agg(F.expr("(min(ts_us) + max(ts_us)) div 2").alias("_mid"))
-    a = F.col("ts_us") <= F.col("_mid")
+    a, b = F.col("_a") == 1, F.col("_a") == 0
     v = F.col("value")
     # value is a 2-dp grid column (squares on the 4-dp grid); the CASE
-    # branches pass NULL through the grid split exactly like the old
-    # decimal cast did (r12, functions.gridsum)
-    m = (
-        ev.crossJoin(F.broadcast(mid))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.when(a, 1)).alias("_n1"),
-            F.count(F.when(~a, 1)).alias("_n2"),
+    # branches pass NULL through the grid split exactly like a decimal
+    # cast does
+    m = _half_counts(
+        _halves(ev),
+        "event_type",
+        more=(
             grid_sum(F.when(a, v), 2).alias("_s1"),
-            grid_sum(F.when(~a, v), 2).alias("_s2"),
+            grid_sum(F.when(b, v), 2).alias("_s2"),
             grid_sum(F.when(a, v * v), 4).alias("_q1"),
-            grid_sum(F.when(~a, v * v), 4).alias("_q2"),
-        )
-        .where((F.col("_n1") > 0) & (F.col("_n2") > 0))
-    )
-    n1d, n2d = F.col("_n1").cast("double"), F.col("_n2").cast("double")
+            grid_sum(F.when(b, v * v), 4).alias("_q2"),
+        ),
+    ).where((F.col("_ca") > 0) & (F.col("_cb") > 0))
+    n1d, n2d = F.col("_ca").cast("double"), F.col("_cb").cast("double")
     stats = m.select(
         "event_type",
-        F.col("_n1").alias("n_first"),
-        F.col("_n2").alias("n_second"),
+        F.col("_ca").alias("n_first"),
+        F.col("_cb").alias("n_second"),
         (F.col("_s1") / n1d).alias("_m1"),
         (F.col("_s2") / n2d).alias("_m2"),
         F.when(
-            F.col("_n1") > 1,
+            F.col("_ca") > 1,
             (F.col("_q1") - n1d * (F.col("_s1") / n1d) * (F.col("_s1") / n1d))
             / (n1d - 1.0),
         ).alias("_v1"),
         F.when(
-            F.col("_n2") > 1,
+            F.col("_cb") > 1,
             (F.col("_q2") - n2d * (F.col("_s2") / n2d) * (F.col("_s2") / n2d))
             / (n2d - 1.0),
         ).alias("_v2"),
@@ -10855,34 +10859,28 @@ def q_event_welch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_WELCH_DRIFT = f"""
-WITH ev AS (
-  SELECT event_type, value, epoch_us(ts) AS ts_us FROM events
-  WHERE value IS NOT NULL
-),
-mid AS (SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS m FROM ev),
+WITH {_sql_halves()},
 m AS (
-  SELECT event_type,
-         CAST(COUNT(CASE WHEN ts_us <= mid.m THEN 1 END) AS BIGINT) AS n1,
-         CAST(COUNT(CASE WHEN ts_us > mid.m THEN 1 END) AS BIGINT) AS n2,
-         {_ssum('CASE WHEN ts_us <= mid.m THEN value END')} AS s1,
-         {_ssum('CASE WHEN ts_us > mid.m THEN value END')} AS s2,
-         {_ssum('CASE WHEN ts_us <= mid.m THEN value * value END')} AS q1,
-         {_ssum('CASE WHEN ts_us > mid.m THEN value * value END')} AS q2
-  FROM ev CROSS JOIN mid GROUP BY 1
+  SELECT event_type, {_SQL_HALF_COUNTS},
+         {_ssum('CASE WHEN a = 1 THEN value END')} AS s1,
+         {_ssum('CASE WHEN a = 0 THEN value END')} AS s2,
+         {_ssum('CASE WHEN a = 1 THEN value * value END')} AS q1,
+         {_ssum('CASE WHEN a = 0 THEN value * value END')} AS q2
+  FROM sided GROUP BY 1
 ),
 stats AS (
-  SELECT event_type, n1 AS n_first, n2 AS n_second,
-         s1 / CAST(n1 AS DOUBLE) AS m1,
-         s2 / CAST(n2 AS DOUBLE) AS m2,
-         CASE WHEN n1 > 1 THEN
-           (q1 - CAST(n1 AS DOUBLE) * (s1 / CAST(n1 AS DOUBLE))
-                 * (s1 / CAST(n1 AS DOUBLE))) / (CAST(n1 AS DOUBLE) - 1.0)
+  SELECT event_type, ca AS n_first, cb AS n_second,
+         s1 / CAST(ca AS DOUBLE) AS m1,
+         s2 / CAST(cb AS DOUBLE) AS m2,
+         CASE WHEN ca > 1 THEN
+           (q1 - CAST(ca AS DOUBLE) * (s1 / CAST(ca AS DOUBLE))
+                 * (s1 / CAST(ca AS DOUBLE))) / (CAST(ca AS DOUBLE) - 1.0)
          END AS v1,
-         CASE WHEN n2 > 1 THEN
-           (q2 - CAST(n2 AS DOUBLE) * (s2 / CAST(n2 AS DOUBLE))
-                 * (s2 / CAST(n2 AS DOUBLE))) / (CAST(n2 AS DOUBLE) - 1.0)
+         CASE WHEN cb > 1 THEN
+           (q2 - CAST(cb AS DOUBLE) * (s2 / CAST(cb AS DOUBLE))
+                 * (s2 / CAST(cb AS DOUBLE))) / (CAST(cb AS DOUBLE) - 1.0)
          END AS v2
-  FROM m WHERE n1 > 0 AND n2 > 0
+  FROM m WHERE ca > 0 AND cb > 0
 ),
 vp AS (
   SELECT event_type, n_first, n_second, m1, m2, v1, v2,
@@ -11028,7 +11026,7 @@ PSI_DECILES = [(f"_d{i}", i, 10) for i in range(1, 10)]
 
 
 def q_event_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """POPULATION STABILITY INDEX per event type (r11) — the credit-
+    """POPULATION STABILITY INDEX per event type — the credit-
     risk/ML-monitoring industry's standard drift score: decile buckets
     are frozen on the FIRST half's value distribution, the second
     half's population shares are compared bucket-by-bucket, and
@@ -11052,14 +11050,7 @@ def q_event_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.rank import quantile_disc_slab
 
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    mid = ev.agg(F.expr("(min(ts_us) + max(ts_us)) div 2").alias("_mid"))
-    sided = ev.crossJoin(F.broadcast(mid)).select(
-        "event_type",
-        "value",
-        F.when(F.col("ts_us") <= F.col("_mid"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("_a"),
-    )
+    sided = _halves(ev)
     edges = quantile_disc_slab(
         sided.where(F.col("_a") == 1),
         "event_type",
@@ -11072,21 +11063,14 @@ def q_event_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket = F.when(
             F.col("value") <= F.col(name), F.lit(int(name[2:]))
         ).otherwise(bucket)
-    cells = (
-        sided.join(F.broadcast(edges), "event_type")
-        .select("event_type", "_a", bucket.alias("_b"))
-        .groupBy("event_type", "_b")
-        .agg(
-            F.sum("_a").alias("_ca"),
-            F.sum(F.lit(1) - F.col("_a")).alias("_cb"),
-        )
+    cells = _half_counts(
+        sided.join(F.broadcast(edges), "event_type").select(
+            "event_type", "_a", bucket.alias("_b")
+        ),
+        "event_type",
+        "_b",
     )
-    from pyspark.sql import Window
-
-    wg = Window.partitionBy("event_type")
-    tot = cells.withColumn("_na", F.sum("_ca").over(wg)).withColumn(
-        "_nb", F.sum("_cb").over(wg)
-    )
+    tot = _half_totals(cells)
     p = F.col("_ca").cast("double") / F.col("_na").cast("double")
     q = F.col("_cb").cast("double") / F.col("_nb").cast("double")
     term = (p - q) * F.log(p / q)
@@ -11106,48 +11090,21 @@ def q_event_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_psi_drift() -> str:
-    edge_sel = ",\n         ".join(
-        f"MIN(CASE WHEN cm >= ({num} * n + {den - 1}) // {den} THEN v END)"
-        f" AS d{num}"
-        for _, num, den in PSI_DECILES
-    )
     chain = " ".join(
-        f"WHEN s.value <= e.d{num} THEN {num}" for _, num, den in PSI_DECILES
+        f"WHEN s.value <= e.{name} THEN {num}" for name, num, _ in PSI_DECILES
+    )
+    edges = _sql_quantile_disc(
+        "(SELECT event_type AS g, value AS v FROM sided WHERE a = 1)",
+        PSI_DECILES,
     )
     p = "CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)"
     q = "CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)"
     return f"""
-WITH ev AS (
-  SELECT event_type, value, epoch_us(ts) AS ts_us FROM events
-  WHERE value IS NOT NULL
-),
-mid AS (SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS m FROM ev),
-sided AS (
-  SELECT event_type, value,
-         CASE WHEN ts_us <= mid.m THEN 1 ELSE 0 END AS a
-  FROM ev CROSS JOIN mid
-),
-h1 AS (
-  SELECT event_type, value AS v, COUNT(*) AS c FROM sided
-  WHERE a = 1 GROUP BY 1, 2
-),
-c1 AS (
-  SELECT event_type, v,
-         SUM(c) OVER (PARTITION BY event_type ORDER BY v ASC) AS cm,
-         SUM(c) OVER (PARTITION BY event_type) AS n
-  FROM h1
-),
-edges AS (
-  SELECT event_type,
-         {edge_sel}
-  FROM c1 GROUP BY event_type
-),
+WITH {_sql_halves()},
+edges AS ({edges}),
 cells AS (
-  SELECT s.event_type,
-         CASE {chain} ELSE 10 END AS b,
-         CAST(SUM(s.a) AS BIGINT) AS ca,
-         CAST(SUM(1 - s.a) AS BIGINT) AS cb
-  FROM sided s JOIN edges e ON e.event_type = s.event_type
+  SELECT s.event_type, CASE {chain} ELSE 10 END AS b, {_SQL_HALF_COUNTS}
+  FROM sided s JOIN edges e ON e.g = s.event_type
   GROUP BY 1, 2
 ),
 tot AS (
@@ -11170,8 +11127,12 @@ GROUP BY event_type
 """
 
 
+#: Winsorizing clip bounds: the exact discrete p05 and p95.
+WINSOR_BOUNDS = [("p05", 1, 20), ("p95", 19, 20)]
+
+
 def q_event_winsor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WINSORIZED per-type stats (r11): clip values to the exact
+    """WINSORIZED per-type stats: clip values to the exact
     discrete [p05, p95] before the mean — the robust-estimation
     counterpart to the MAD (MAD makes dispersion outlier-proof,
     winsorizing makes the LOCATION estimate outlier-proof; the raw
@@ -11195,11 +11156,7 @@ def q_event_winsor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "value")
     )
     bounds = quantile_disc_slab(
-        ev,
-        "event_type",
-        "value",
-        [("p05", 1, 20), ("p95", 19, 20)],
-        count_alias="n_values",
+        ev, "event_type", "value", WINSOR_BOUNDS, count_alias="n_values"
     )
     w = F.greatest(F.least(F.col("value"), F.col("p95")), F.col("p05"))
     return (
@@ -11210,7 +11167,7 @@ def q_event_winsor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("p05").alias("p05"),
             F.max("p95").alias("p95"),
             # value (and its clamp to the 2-dp order-statistic bounds)
-            # stays on the 2-dp grid: exact int64 grid sums (r12)
+            # stays on the 2-dp grid: exact int64 grid sums
             (grid_sum(F.col("value"), 2) / F.count("value")).alias(
                 "mean_raw"
             ),
@@ -11241,19 +11198,7 @@ SQL_WINSOR_STATS = f"""
 WITH ev AS (
   SELECT event_type AS g, value AS v FROM events WHERE value IS NOT NULL
 ),
-h1 AS (SELECT g, v, COUNT(*) AS c FROM ev GROUP BY 1, 2),
-c1 AS (
-  SELECT g, v,
-         SUM(c) OVER (PARTITION BY g ORDER BY v ASC) AS cm,
-         SUM(c) OVER (PARTITION BY g) AS n
-  FROM h1
-),
-bounds AS (
-  SELECT g, CAST(MAX(n) AS BIGINT) AS n_values,
-         MIN(CASE WHEN cm >= (1 * n + 19) // 20 THEN v END) AS p05,
-         MIN(CASE WHEN cm >= (19 * n + 19) // 20 THEN v END) AS p95
-  FROM c1 GROUP BY g
-)
+bounds AS ({_sql_quantile_disc('ev', WINSOR_BOUNDS, 'n_values')})
 SELECT ev.g AS event_type,
        MAX(bounds.n_values) AS n_values,
        MAX(bounds.p05) AS p05,
@@ -11307,36 +11252,16 @@ def q_event_value_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_EVENT_MAD = """
+SQL_EVENT_MAD = f"""
 WITH ev AS (
   SELECT event_type AS g, value AS v FROM events WHERE value IS NOT NULL
 ),
-h1 AS (SELECT g, v, COUNT(*) AS c FROM ev GROUP BY 1, 2),
-c1 AS (
-  SELECT g, v,
-         SUM(c) OVER (PARTITION BY g ORDER BY v ASC) AS cm,
-         SUM(c) OVER (PARTITION BY g) AS n
-  FROM h1
-),
-med AS (
-  SELECT g, CAST(MAX(n) AS BIGINT) AS n_values,
-         MIN(CASE WHEN cm >= (1 * n + 1) // 2 THEN v END) AS med
-  FROM c1 GROUP BY g
-),
-dev AS (
-  SELECT ev.g, ABS(ev.v - med.med) AS av, med.n_values, med.med
-  FROM ev JOIN med ON med.g = ev.g
-),
-h2 AS (SELECT g, av, n_values, med, COUNT(*) AS c FROM dev GROUP BY 1, 2, 3, 4),
-c2 AS (
-  SELECT g, av, n_values, med,
-         SUM(c) OVER (PARTITION BY g ORDER BY av ASC) AS cm,
-         SUM(c) OVER (PARTITION BY g) AS n
-  FROM h2
-)
-SELECT g AS event_type, MAX(n_values) AS n_values, MAX(med) AS med,
-       MIN(CASE WHEN cm >= (1 * n + 1) // 2 THEN av END) AS mad
-FROM c2 GROUP BY g
+med AS ({_sql_quantile_disc('ev', [('med', 1, 2)], 'n_values')}),
+mad AS ({_sql_quantile_disc(
+    '(SELECT g, ABS(ev.v - med.med) AS v FROM ev JOIN med USING (g))',
+    [('mad', 1, 2)],
+)})
+SELECT g AS event_type, n_values, med, mad FROM med JOIN mad USING (g)
 """
 
 
@@ -11806,30 +11731,20 @@ def q_event_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSD(P‖Q) = ½·KL(P‖M) + ½·KL(Q‖M), M = (P+Q)/2, reported as the
     per-type contribution so the drifting types are directly ranked.
 
-    Determinism: integer midpoint split (`div 2`, the ks-drift
-    convention), shares over exact counts, log2 on identical IEEE
-    doubles, per-type term emitted directly (no cross-row sum order to
-    pin — each contribution is ≥ 0 by the log-sum inequality, so the
-    portable floor-round applies).
+    Determinism: integer midpoint split (:func:`_midpoint`), shares
+    over exact counts, log2 on identical IEEE doubles, per-type term
+    emitted directly (no cross-row sum order to pin — each
+    contribution is ≥ 0 by the log-sum inequality, so the portable
+    floor-round applies).
 
     Scale: ONE fact pass to |types| cells; the half totals ride a
     broadcast 1-row aggregate; everything after the first hash
     aggregate is map-side arithmetic on a bounded slab."""
     ev = load_table(spark, sf_dir, "events")
-    mid = ev.agg(F.expr("(min(ts_us) + max(ts_us)) div 2").alias("_mid"))
-    cells = (
-        ev.crossJoin(F.broadcast(mid))
-        .select(
-            "event_type",
-            F.when(F.col("ts_us") <= F.col("_mid"), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("_a"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum("_a").cast("long").alias("n_first"),
-            F.sum(F.lit(1) - F.col("_a")).cast("long").alias("n_second"),
-        )
+    cells = _half_counts(_halves(ev), "event_type").select(
+        "event_type",
+        F.col("_ca").alias("n_first"),
+        F.col("_cb").alias("n_second"),
     )
     tots = cells.agg(
         F.sum("n_first").alias("_na"), F.sum("n_second").alias("_nb")
@@ -11858,30 +11773,22 @@ def q_event_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_JS_DIVERGENCE = f"""
-WITH ev AS (SELECT event_type, epoch_us(ts) AS ts_us FROM events),
-mid AS (SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS m FROM ev),
-cells AS (
-  SELECT event_type,
-         CAST(SUM(CASE WHEN ts_us <= mid.m THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_first,
-         CAST(SUM(CASE WHEN ts_us <= mid.m THEN 0 ELSE 1 END) AS BIGINT)
-           AS n_second
-  FROM ev CROSS JOIN mid GROUP BY event_type, mid.m
-),
-tots AS (SELECT SUM(n_first) AS na, SUM(n_second) AS nb FROM cells)
-SELECT event_type, n_first, n_second,
+WITH {_sql_halves(value=False)},
+cells AS (SELECT event_type, {_SQL_HALF_COUNTS} FROM sided GROUP BY 1),
+tots AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM cells)
+SELECT event_type, ca AS n_first, cb AS n_second,
        {SQL_ROUND6.format(x="p")} AS p_share,
        {SQL_ROUND6.format(x="q")} AS q_share,
        {SQL_ROUND6.format(
-           x="(CASE WHEN n_first > 0 THEN p * log2(p / ((p + q) / 2.0))"
+           x="(CASE WHEN ca > 0 THEN p * log2(p / ((p + q) / 2.0))"
              " ELSE 0.0 END"
-             " + CASE WHEN n_second > 0 THEN q * log2(q / ((p + q) / 2.0))"
+             " + CASE WHEN cb > 0 THEN q * log2(q / ((p + q) / 2.0))"
              " ELSE 0.0 END) / 2.0"
        )} AS jsd_term_bits
 FROM (
-  SELECT event_type, n_first, n_second,
-         CAST(n_first AS DOUBLE) / CAST(na AS DOUBLE) AS p,
-         CAST(n_second AS DOUBLE) / CAST(nb AS DOUBLE) AS q
+  SELECT event_type, ca, cb,
+         CAST(ca AS DOUBLE) / CAST(na AS DOUBLE) AS p,
+         CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE) AS q
   FROM cells CROSS JOIN tots
   WHERE na > 0 AND nb > 0
 ) s
@@ -12813,27 +12720,18 @@ def q_event_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (med, n_cal) and q̂ tables are collected and re-enter as literal
     maps, giving exactly FOUR pruned fact passes — midpoint, median
     slab, score slab, test pass — the logical minimum for this op."""
+    from pyspark.sql import Window
+
     from .operators.rank import quantile_disc_slab
 
     ev = load_table(spark, sf_dir, "events").where(
         F.col("value").isNotNull()
     )
-    mid_row = ev.agg(
-        F.expr("(min(ts_us) + max(ts_us)) div 2").alias("_mid")
-    ).collect()[0][0]
-    if mid_row is None:
-        return ev.select(
-            "event_type",
-            F.lit(0).cast("long").alias("n_cal"),
-            F.lit(0).cast("long").alias("n_test"),
-            F.lit(0.0).alias("med"),
-            F.lit(0.0).alias("qhat"),
-            F.lit(0.0).alias("coverage"),
-        ).limit(0)
-    cal = ev.where(F.col("ts_us") <= F.lit(mid_row)).select(
+    mid = _midpoint(ev).collect()[0][0]
+    cal = ev.where(F.col("ts_us") <= F.lit(mid)).select(
         "event_type", "value"
     )
-    med_rows = quantile_disc_slab(
+    med_rows = [] if mid is None else quantile_disc_slab(
         cal, "event_type", "value", [("med", 1, 2)], count_alias="n_cal"
     ).collect()
     if not med_rows:
@@ -12856,8 +12754,6 @@ def q_event_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("value") - med_map[F.col("event_type")]).alias("_s"),
     )
     # rank ceil((n+1)*(1-alpha)) clamped to n, on the SCORE slab.
-    from pyspark.sql import Window
-
     sc = scores.groupBy("event_type", "_s").agg(
         F.count(F.lit(1)).alias("_c")
     )
@@ -12892,7 +12788,7 @@ def q_event_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qhat_map = F.create_map(
         *[F.lit(x) for r in qhat_rows for x in (r["event_type"], r["qhat"])]
     )
-    test = ev.where(F.col("ts_us") > F.lit(mid_row)).select(
+    test = ev.where(F.col("ts_us") > F.lit(mid)).select(
         "event_type", "value"
     )
     med_c = med_map[F.col("event_type")]
@@ -12918,47 +12814,31 @@ def q_event_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_conformal_interval() -> str:
     num = CONFORMAL_ALPHA_DEN - CONFORMAL_ALPHA_NUM
     den = CONFORMAL_ALPHA_DEN
+    med = _sql_quantile_disc(
+        "(SELECT event_type AS g, value AS v FROM sided WHERE a = 1)",
+        [("med", 1, 2)],
+        "n_cal",
+    )
     return f"""
-WITH ev AS (
-  SELECT event_type, value, epoch_us(ts) AS ts_us FROM events
-  WHERE value IS NOT NULL
-),
-mid AS (SELECT (MIN(ts_us) + MAX(ts_us)) // 2 AS m FROM ev),
-sided AS (
-  SELECT event_type, value, ts_us <= mid.m AS cal FROM ev CROSS JOIN mid
-),
-calh AS (SELECT event_type, value FROM sided WHERE cal),
-h1 AS (SELECT event_type, value AS v, COUNT(*) AS c FROM calh GROUP BY 1, 2),
-c1 AS (
-  SELECT event_type, v,
-         SUM(c) OVER (PARTITION BY event_type ORDER BY v ASC) AS cm,
-         SUM(c) OVER (PARTITION BY event_type) AS n
-  FROM h1
-),
-med AS (
-  SELECT event_type, CAST(MAX(n) AS BIGINT) AS n_cal,
-         MIN(CASE WHEN cm >= (1 * n + 1) // 2 THEN v END) AS med
-  FROM c1 GROUP BY event_type
-),
-scores AS (
-  SELECT c.event_type, abs(c.value - m.med) AS s
-  FROM calh c JOIN med m ON m.event_type = c.event_type
-),
-s1 AS (SELECT event_type, s, COUNT(*) AS c FROM scores GROUP BY 1, 2),
+WITH {_sql_halves()},
+med AS ({med}),
 s2 AS (
-  SELECT event_type, s,
-         SUM(c) OVER (PARTITION BY event_type ORDER BY s ASC) AS cm,
-         SUM(c) OVER (PARTITION BY event_type) AS n
-  FROM s1
+  SELECT g, s,
+         SUM(c) OVER (PARTITION BY g ORDER BY s ASC) AS cm,
+         SUM(c) OVER (PARTITION BY g) AS n
+  FROM (
+    SELECT g, abs(value - med) AS s, COUNT(*) AS c
+    FROM sided JOIN med ON med.g = sided.event_type
+    WHERE a = 1 GROUP BY 1, 2
+  )
 ),
 qh AS (
-  SELECT event_type,
+  SELECT g,
          MIN(CASE WHEN cm >= LEAST((({num} * (n + 1)) + {den} - 1)
                                    // {den}, n)
                   THEN s END) AS qhat
-  FROM s2 GROUP BY event_type
-),
-testh AS (SELECT event_type, value FROM sided WHERE NOT cal)
+  FROM s2 GROUP BY g
+)
 SELECT t.event_type,
        CAST(MAX(m.n_cal) AS BIGINT) AS n_cal,
        CAST(COUNT(*) AS BIGINT) AS n_test,
@@ -12968,9 +12848,10 @@ SELECT t.event_type,
            x="CAST(count_if(abs(t.value - m.med) <= q.qhat) AS DOUBLE)"
              " / CAST(COUNT(*) AS DOUBLE)"
        )} AS coverage
-FROM testh t
-JOIN med m ON m.event_type = t.event_type
-JOIN qh q ON q.event_type = t.event_type
+FROM sided t
+JOIN med m ON m.g = t.event_type
+JOIN qh q ON q.g = t.event_type
+WHERE t.a = 0
 GROUP BY t.event_type
 """
 
@@ -12995,7 +12876,7 @@ REGISTRY: tuple[tuple[QueryFn, str | None], ...] = (
     (q_user_session_windows, SQL_SESSION_WINDOWS),
     (q_event_retention, SQL_EVENT_RETENTION),
     (q_moving_event_stats, _sql_moving()),
-    (q_approx_event_stats, _sql_approx_event_stats()),
+    (q_approx_event_stats, SQL_APPROX_EVENT_STATS),
     (q_event_props_stats, SQL_PROPS),
     (q_event_type_pivot, SQL_PIVOT),
     (q_value_buckets, SQL_BUCKETS),
@@ -13149,7 +13030,7 @@ REGISTRY: tuple[tuple[QueryFn, str | None], ...] = (
     (q_doc_containment_dups, SQL_DOC_CONTAINMENT),
     (q_event_bursts, SQL_EVENT_BURSTS),
     (q_emb_range_search, SQL_EMB_RANGE_SEARCH),
-    (q_user_hll_sketch, _sql_user_hll_sketch()),
+    (q_user_hll_sketch, SQL_USER_HLL_SKETCH),
     (q_doc_ngram_contamination, _sql_doc_ngram_contamination()),
     (q_emb_mrl_recall, _sql_emb_mrl_recall()),
     (q_doc_dsir_weights, _sql_doc_dsir_weights()),

@@ -19,8 +19,11 @@ import pytest
 from kyiv_traffic_bigdata_spark.queries import (
     CUSUM_HOUR_US,
     SQL_CUSUM_SHIFT,
+    SQL_EVENT_MAD,
+    SQL_KS_DRIFT,
     SQL_MWU_DRIFT,
     SQL_WELCH_DRIFT,
+    _sql_quantile_disc,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -57,6 +60,73 @@ def _halves(rows):
 
 def _round6(x: float) -> float:
     return math.floor(x * 1e6 + 0.5) / 1e6
+
+
+def _disc(sorted_vals, num, den):
+    """The ceil(num/den * n)-th smallest value (1-based), exact."""
+    return sorted_vals[-(-num * len(sorted_vals) // den) - 1]
+
+
+def test_quantile_disc_matches_sorted_list():
+    """The shared discrete-quantile CTE picks the ceil(p*n)-th value of
+    the sorted group, on ties, on a one-row group and at p = 1/20, 1/2
+    and 99/100."""
+    groups = {
+        "ties": [3.0, 1.0, 2.0, 2.0, 2.0, 5.0, 5.0, 9.0, 1.0, 2.0],
+        "one": [7.5],
+        "wide": [float(i % 37) for i in range(250)],
+    }
+    fracs = [("p05", 1, 20), ("p50", 1, 2), ("p99", 99, 100)]
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW t AS SELECT * FROM (VALUES "
+        + ", ".join(f"('{g}', {v})" for g, vs in groups.items() for v in vs)
+        + ") AS x(g, v)"
+    )
+    got = {
+        r[0]: r[1:]
+        for r in con.sql(_sql_quantile_disc("t", fracs, "n_rows")).fetchall()
+    }
+    con.close()
+    assert set(got) == set(groups)
+    for g, vs in groups.items():
+        sv = sorted(vs)
+        assert got[g] == (len(sv), *(_disc(sv, n, d) for _, n, d in fracs))
+
+
+def test_ks_matches_textbook_sup_distance(duck, rows):
+    """The KS statistic recomputed as sup|F_a - F_b| over the pooled
+    values, from the two halves' empirical CDFs, must match the oracle;
+    its integer numerator max|cum_a*n_b - cum_b*n_a| must match exactly."""
+    got = {r[0]: r for r in duck.sql(SQL_KS_DRIFT).fetchall()}
+    for t, (a, b) in _halves(rows).items():
+        if not a or not b:
+            assert t not in got
+            continue
+        na, nb = len(a), len(b)
+        d_num, sup = 0, 0.0
+        for x in sorted(set(a + b)):
+            ca = sum(1 for v in a if v <= x)
+            cb = sum(1 for v in b if v <= x)
+            d_num = max(d_num, abs(ca * nb - cb * na))
+            sup = max(sup, abs(ca / na - cb / nb))
+        name, n1, n2, g_num, ks = got[t]
+        assert (n1, n2, g_num) == (na, nb, d_num)
+        assert ks == pytest.approx(sup, abs=1e-6)
+
+
+def test_mad_matches_sorted_list_median(duck, rows):
+    """MAD recomputed as the lower median of |v - med| with med the
+    lower median of the values, both read off sorted lists."""
+    vals: dict[str, list[float]] = {}
+    for t, v, _ in rows:
+        vals.setdefault(t, []).append(v)
+    got = {r[0]: r for r in duck.sql(SQL_EVENT_MAD).fetchall()}
+    assert set(got) == set(vals)
+    for t, vs in vals.items():
+        med = _disc(sorted(vs), 1, 2)
+        mad = _disc(sorted(abs(v - med) for v in vs), 1, 2)
+        assert got[t] == (t, len(vs), med, mad)
 
 
 def test_mwu_matches_textbook_midranks(duck, rows):

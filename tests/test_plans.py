@@ -744,10 +744,29 @@ def test_token_pmi_equi_self_join_and_broadcast_marginals(plans):
 def test_pmi_marginals_broadcast_at_runtime(spark, sf_dir):
     """AQE must convert the unhinted vocab-marginal joins to broadcasts
     when the aggregated tfreq is actually small (runtime sizes, not
-    static estimates). Reads the EXECUTED plan: both marginal joins,
-    keyed on tok_a and tok_b, ran as broadcasts."""
-    executed = final_plan(QUERIES["token_pmi"](spark, sf_dir))
-    assert {"tok_a", "tok_b"} <= broadcast_join_keys(executed)
+    static estimates). The static threshold is off here and AQE's own
+    is set explicitly (it defaults to the static one), so only AQE can
+    plan these broadcasts: the static plan has no broadcast keyed on
+    tok_a or tok_b, and the EXECUTED plan has both."""
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    spark.conf.set(keys[0], "-1")
+    spark.conf.set(keys[1], "32m")
+    try:
+        df = QUERIES["token_pmi"](spark, sf_dir)
+        static = broadcast_join_keys(physical_plan(df))
+        executed = broadcast_join_keys(final_plan(df))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert not {"tok_a", "tok_b"} & static
+    assert {"tok_a", "tok_b"} <= executed
 
 
 def test_link_prediction_wedge_plan_broadcast_degrees(plans):
