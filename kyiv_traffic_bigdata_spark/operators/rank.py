@@ -201,8 +201,12 @@ def quantile_disc_slab(
     the target rank ceil(num·n/den) is computed in INTEGER arithmetic
     ((num·n + den − 1) div den), so both engines agree exactly — a
     double ceil(0.9·n) rounds up spuriously whenever 0.9·n lands just
-    above an integer in binary."""
-    hist = df.groupBy(group_col, value_col).agg(F.count(F.lit(1)).alias("_c"))
+    above an integer in binary.
+
+    NULL values count in neither ``n`` nor the cumulative counts (their
+    bin counts 0), so a group's quantiles are those of its non-NULL
+    values; a group of NULLs only keeps its row with n = 0."""
+    hist = df.groupBy(group_col, value_col).agg(F.count(value_col).alias("_c"))
     wg = Window.partitionBy(group_col)
     wcum = wg.orderBy(F.col(value_col).asc()).rowsBetween(
         Window.unboundedPreceding, 0

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import KYIV_BBOX_NARROW, UKRAINE_BBOX
@@ -38,7 +38,7 @@ from .operators import dedup as DD
 from .operators import kmeans as KM
 from .operators import sample as SAMPLE
 from .operators import similarity as SIM
-from .operators.aggregates import dec, stable_avg, stable_sum
+from .operators.aggregates import STABLE_DECIMAL, dec, stable_avg, stable_sum
 from .operators.enrich import broadcast_enrich
 from .operators.graph import PAGERANK_ITERS
 from .operators.latest import dedup_exact, latest_per_key
@@ -54,8 +54,6 @@ from .operators.windows import hopping_stats, moving_stats, sessionize, tumbling
 from .tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-DEC = "DECIMAL(28,10)"
 
 
 def _typed_empty(spark: SparkSession, schema: str) -> DataFrame:
@@ -79,7 +77,7 @@ def _ssum(expr: str) -> str:
     roundings, off by ulps), while the string parse — like Spark's
     BigDecimal.doubleValue() — is correctly rounded.
     """
-    return f"CAST(CAST(SUM(CAST({expr} AS {DEC})) AS VARCHAR) AS DOUBLE)"
+    return f"CAST(CAST(SUM(CAST({expr} AS {STABLE_DECIMAL})) AS VARCHAR) AS DOUBLE)"
 
 
 def _savg(expr: str, cnt: str) -> str:
@@ -93,7 +91,8 @@ def _sql_quantile_disc(
     per group ``g`` of the relation ``src`` (columns ``g`` and ``v``),
     the row count ``n`` and, for each ``(alias, num, den)`` of
     ``quantiles``, the smallest ``v`` whose cumulative count reaches the
-    integer rank (num·n + den − 1) // den = ⌈num·n/den⌉."""
+    integer rank (num·n + den − 1) // den = ⌈num·n/den⌉. NULL values of
+    ``v`` count in neither ``n`` nor the cumulative count."""
     sels = "".join(
         f",\n       MIN(CASE WHEN cm >= ({num} * n + {den - 1}) // {den}"
         f" THEN v END) AS {alias}"
@@ -103,7 +102,7 @@ def _sql_quantile_disc(
 FROM (
   SELECT g, v, SUM(c) OVER (PARTITION BY g ORDER BY v ASC) AS cm,
          SUM(c) OVER (PARTITION BY g) AS n
-  FROM (SELECT g, v, COUNT(*) AS c FROM {src} GROUP BY g, v)
+  FROM (SELECT g, v, COUNT(v) AS c FROM {src} GROUP BY g, v)
 )
 GROUP BY g"""
 
@@ -117,6 +116,40 @@ def _norm(c: str) -> str:
 
 #: DuckDB twin of the ``text`` column's token list
 _TOKS = f"string_split({_norm('text')}, ' ')"
+
+
+def _sql_term_counts(*keys: str) -> str:
+    """The ``toks`` (keys…, term) and ``tf`` (keys…, term, tf) CTEs over
+    ``documents``: the twin of :func:`_term_counts`."""
+    k = "".join(f"{c}, " for c in keys)
+    return f"""toks AS (SELECT {k}unnest({_TOKS}) AS term FROM documents),
+tf AS (SELECT {k}term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY ALL)"""
+
+
+#: ``toks`` (doc_id, i, term): each token of ``documents`` with its
+#: 1-based position
+_SQL_POS_TOKS = f"""toks AS (
+  SELECT doc_id, generate_subscripts({_TOKS}, 1) AS i,
+         unnest({_TOKS}) AS term
+  FROM documents
+)"""
+
+#: ``toks`` plus ``tf`` (doc_id, a, b, tf): each adjacent token pair's
+#: count per doc — the twin of :func:`_bigram_counts`
+_SQL_BIGRAM_COUNTS = f"""{_SQL_POS_TOKS},
+tf AS (
+  SELECT t1.doc_id, t1.term AS a, t2.term AS b, CAST(COUNT(*) AS BIGINT) AS tf
+  FROM toks t1 JOIN toks t2 ON t2.doc_id = t1.doc_id AND t2.i = t1.i + 1
+  GROUP BY ALL
+)"""
+
+
+def _sql_mean_logprob(logp: str, n: str, alias: str) -> str:
+    """SELECT over the CTE ``j`` (doc_id, tf, …): the twin of
+    :func:`_mean_logprob`."""
+    mean = SQL_ROUND6.format(x=f"{_ssum(f'tf * {logp}')} / SUM(tf)")
+    return f"""SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS {n}, {mean} AS {alias}
+FROM j GROUP BY doc_id"""
 
 
 _PORTABLE_HASH = "CAST(concat('0x', substr(md5({s}), 1, 8)) AS BIGINT)"
@@ -161,7 +194,7 @@ def _geo_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RATE_SQL_BODY = """
+_RATE_SQL_BODY = f"""
 WITH lagged AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
          lag(epoch_us(ts)) OVER w AS prev_ts_us,
@@ -172,7 +205,7 @@ WITH lagged AS (
 rates AS (
   SELECT user_id, event_id, ts_us,
          CAST(ts_us - prev_ts_us AS DOUBLE) / 1000000.0 AS dt_s,
-         (floor((abs(value - prev_value) / (CAST(ts_us - prev_ts_us AS DOUBLE) / 1000000.0)) * 1000000.0 + 0.5) / 1000000.0) AS rate
+         {SQL_ROUND6.format(x='abs(value - prev_value) / (CAST(ts_us - prev_ts_us AS DOUBLE) / 1000000.0)')} AS rate
   FROM lagged
   WHERE prev_ts_us IS NOT NULL
     AND CAST(ts_us - prev_ts_us AS DOUBLE) / 1000000.0 > 0
@@ -242,6 +275,51 @@ def _docs_with_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raw text is far cheaper than the maps it balances.
     return load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
+    )
+
+
+def _doc_terms(docs: DataFrame, *keys: str | Column) -> DataFrame:
+    """``(keys…, term)``: one row per token of each document's text."""
+    return docs.select(*keys, F.explode(TX.tokens(F.col("text"))).alias("term"))
+
+
+def _term_counts(docs: DataFrame, *keys: str) -> DataFrame:
+    """``(keys…, term, tf)``: each term's count per key, or over the
+    whole corpus when no key is given. Twin: :func:`_sql_term_counts`."""
+    return (
+        _doc_terms(docs, *keys)
+        .groupBy(*keys, "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
+def _bigram_counts(docs: DataFrame) -> DataFrame:
+    """``(doc_id, a, b, tf)``: each adjacent token pair's count per doc.
+    The pairs come from zipping two slices of the token array, so there
+    is no self-join; docs with fewer than two tokens have none. Twin:
+    :data:`_SQL_BIGRAM_COUNTS`."""
+    t = F.col("_t")
+    pairs = F.arrays_zip(
+        F.slice(t, 1, F.size(t) - 1).alias("a"),
+        F.slice(t, 2, F.size(t) - 1).alias("b"),
+    )
+    return (
+        docs.select("doc_id", TX.tokens(F.col("text")).alias("_t"))
+        .where(F.size(t) >= 2)
+        .select("doc_id", F.explode(pairs).alias("_p"))
+        .select("doc_id", F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
+        .groupBy("doc_id", "a", "b")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
+def _mean_logprob(j: DataFrame, logp: Column, n: str, alias: str) -> DataFrame:
+    """Per doc of ``j`` (doc_id, tf, …): the token count Σ tf as ``n``
+    and the mean log-probability round6(Σ tf·logp / Σ tf) as ``alias``,
+    the sum decimal-stable. Twin: :func:`_sql_mean_logprob`."""
+    return j.groupBy("doc_id").agg(
+        F.sum("tf").alias(n),
+        round6(stable_sum(F.col("tf") * logp) / F.sum("tf")).alias(alias),
     )
 
 
@@ -569,7 +647,7 @@ def _sql_moving() -> str:
     run = "ROWS UNBOUNDED PRECEDING"
     ordr = "PARTITION BY user_id ORDER BY epoch_us(ts), event_id"
     wsum = (
-        f"CAST(CAST(SUM(CAST(value AS {DEC})) OVER ({ordr} {{frame}})"
+        f"CAST(CAST(SUM(CAST(value AS {STABLE_DECIMAL})) OVER ({ordr} {{frame}})"
         " AS VARCHAR) AS DOUBLE)"
     )
     return f"""
@@ -1047,7 +1125,7 @@ ce AS (
 ),
 pl(band, p, i, c) AS (VALUES {vals}),
 proj AS (
-  SELECT vec_id, band, p, SUM(CAST(y * c AS {DEC})) AS s
+  SELECT vec_id, band, p, SUM(CAST(y * c AS {STABLE_DECIMAL})) AS s
   FROM ce JOIN pl USING (i)
   WHERE p < (SELECT w FROM params)
   GROUP BY 1, 2, 3
@@ -1296,20 +1374,16 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_doc_stats() -> str:
-    toks = _TOKS
-    sw = _sw_sql(TX.QUALITY_STOPWORDS)
-    swr = f"(CASE WHEN len(t) = 0 THEN 0.0 ELSE CAST(len(list_filter(t, x -> list_contains({sw}, x))) AS DOUBLE) / len(t) END)"
     alpha = "(CASE WHEN length(text) = 0 THEN 0.0 ELSE CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(text) END)"
     punct = "(CASE WHEN length(text) = 0 THEN 0.0 ELSE CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE) / length(text) END)"
-    qual = f"(floor((0.4 * least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) + 0.3 * {alpha} + 0.3 * {swr}) * 1000000.0 + 0.5) / 1000000.0)"
     return f"""
-WITH toks AS (SELECT *, {toks} AS t FROM documents)
+WITH toks AS (SELECT *, {_TOKS} AS t FROM documents)
 SELECT doc_id, lang,
   CAST(len(t) AS BIGINT) AS n_tokens,
   CAST(length({_norm('text')}) AS BIGINT) AS n_chars_norm,
-  (floor(({alpha}) * 1000000.0 + 0.5) / 1000000.0) AS alpha_ratio,
-  (floor(({punct}) * 1000000.0 + 0.5) / 1000000.0) AS punct_ratio,
-  {qual} AS quality,
+  {SQL_ROUND6.format(x=alpha)} AS alpha_ratio,
+  {SQL_ROUND6.format(x=punct)} AS punct_ratio,
+  {_sql_quality_expr()} AS quality,
   md5({_norm('text')}) AS fp,
   {_sql_lang_id_case()} AS pred_lang
 FROM toks
@@ -1525,7 +1599,7 @@ j AS (
 ),
 jac AS (
   SELECT id_a, id_b,
-         (floor((CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter)) * 1000000.0 + 0.5) / 1000000.0) AS jaccard
+         {SQL_ROUND6.format(x='CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter)')} AS jaccard
   FROM j
 )
 SELECT * FROM jac WHERE jaccard >= {DD.NEARDUP_JACCARD}
@@ -1582,7 +1656,7 @@ inter AS (
   GROUP BY 1, 2
 ),
 jac AS (
-  SELECT id_a, id_b, (floor((CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter)) * 1000000.0 + 0.5) / 1000000.0) AS jaccard
+  SELECT id_a, id_b, {SQL_ROUND6.format(x='CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter)')} AS jaccard
   FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
 )
 SELECT c.id_a, c.id_b, j.jaccard FROM cand c JOIN jac j ON c.id_a = j.id_a AND c.id_b = j.id_b
@@ -1724,7 +1798,7 @@ def _sql_winnow_overlap() -> str:
 ok AS (SELECT fp FROM e GROUP BY fp HAVING count(*) <= {cap}),
 f AS (SELECT e.doc_id, e.n_fps, e.fp FROM e JOIN ok USING (fp))
 SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS shared,
-  (floor((CAST(count(*) AS DOUBLE) / (a.n_fps + b.n_fps - count(*))) * 1000000.0 + 0.5) / 1000000.0) AS overlap
+  {SQL_ROUND6.format(x='CAST(count(*) AS DOUBLE) / (a.n_fps + b.n_fps - count(*))')} AS overlap
 FROM f a JOIN f b ON a.fp = b.fp AND a.doc_id < b.doc_id
 GROUP BY a.doc_id, b.doc_id, a.n_fps, b.n_fps
 HAVING count(*) >= {min_shared}
@@ -1854,26 +1928,23 @@ def q_token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (< 2 distinct terms) emit 0 rows rather than a 0/0 division."""
     from pyspark.sql import Window
 
-    d = _docs_with_tokens(spark, sf_dir)
-    counts = (
-        d.select(F.explode(TX.tokens(F.col("text"))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    by_freq = [F.col("tf").desc(), F.col("term").asc()]
+    top = (
+        _term_counts(_docs_with_tokens(spark, sf_dir))
+        .orderBy(*by_freq)
+        .limit(ZIPF_TOP_TERMS)
     )
-    top = counts.orderBy(
-        F.col("cnt").desc(), F.col("term").asc()
-    ).limit(ZIPF_TOP_TERMS)
-    w = Window.orderBy(F.col("cnt").desc(), F.col("term").asc())
+    w = Window.orderBy(*by_freq)
     pts = top.select(
         round6(F.log(F.row_number().over(w).cast("double"))).alias("x"),
-        round6(F.log(F.col("cnt").cast("double"))).alias("y"),
+        round6(F.log(F.col("tf").cast("double"))).alias("y"),
     )
     s = pts.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
-        F.sum(dec(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
+        stable_sum("x").alias("sx"),
+        stable_sum("y").alias("sy"),
+        stable_sum(F.col("x") * F.col("y")).alias("sxy"),
+        stable_sum(F.col("x") * F.col("x")).alias("sxx"),
     )
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -1889,15 +1960,14 @@ def q_token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_token_zipf_fit() -> str:
     return f"""
-WITH tok AS (SELECT unnest({_TOKS}) AS term FROM documents),
-cnt AS (SELECT term, COUNT(*) AS c FROM tok GROUP BY term),
+WITH {_sql_term_counts()},
 top AS (
-  SELECT term, c, row_number() OVER (ORDER BY c DESC, term ASC) AS r
-  FROM cnt ORDER BY c DESC, term ASC LIMIT {ZIPF_TOP_TERMS}
+  SELECT term, tf, row_number() OVER (ORDER BY tf DESC, term ASC) AS r
+  FROM tf ORDER BY tf DESC, term ASC LIMIT {ZIPF_TOP_TERMS}
 ),
 pts AS (
   SELECT {SQL_ROUND6.format(x='ln(CAST(r AS DOUBLE))')} AS x,
-         {SQL_ROUND6.format(x='ln(CAST(c AS DOUBLE))')} AS y
+         {SQL_ROUND6.format(x='ln(CAST(tf AS DOUBLE))')} AS y
   FROM top
 ),
 s AS (
@@ -2136,7 +2206,7 @@ def _sql_ann_lsh() -> str:
 WITH planes(p, i, c) AS (VALUES {rows}),
 e AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
              CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-dots AS (SELECT vec_id, p, SUM(CAST(x * c AS {DEC})) AS d
+dots AS (SELECT vec_id, p, SUM(CAST(x * c AS {STABLE_DECIMAL})) AS d
          FROM e JOIN planes USING (i) GROUP BY vec_id, p),
 sig AS (SELECT vec_id,
                string_agg(CASE WHEN d >= 0 THEN '1' ELSE '0' END, ''
@@ -2447,7 +2517,7 @@ def _sql_quality_expr() -> str:
     sw = _sw_sql(TX.QUALITY_STOPWORDS)
     swr = f"(CASE WHEN len(t) = 0 THEN 0.0 ELSE CAST(len(list_filter(t, x -> list_contains({sw}, x))) AS DOUBLE) / len(t) END)"
     alpha = "(CASE WHEN length(text) = 0 THEN 0.0 ELSE CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / length(text) END)"
-    return f"(floor((0.4 * least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) + 0.3 * {alpha} + 0.3 * {swr}) * 1000000.0 + 0.5) / 1000000.0)"
+    return SQL_ROUND6.format(x=f"0.4 * least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) + 0.3 * {alpha} + 0.3 * {swr}")
 
 
 def _sql_quality_filter() -> str:
@@ -2459,7 +2529,7 @@ WITH toks AS (SELECT doc_id, lang, text, {_TOKS} AS t FROM documents),
 scored AS (SELECT doc_id, lang, {qual} AS quality FROM toks),
 ranked AS (
   SELECT doc_id, lang, quality,
-         (floor((PERCENT_RANK() OVER (PARTITION BY lang ORDER BY quality ASC, doc_id ASC)) * 1000000.0 + 0.5) / 1000000.0) AS q_rank
+         {SQL_ROUND6.format(x='PERCENT_RANK() OVER (PARTITION BY lang ORDER BY quality ASC, doc_id ASC)')} AS q_rank
   FROM scored
 )
 SELECT doc_id, lang, quality, q_rank FROM ranked WHERE q_rank >= {GATE_MIN_RANK}
@@ -2504,14 +2574,9 @@ def q_doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = load_table(spark, sf_dir, "documents").count()
     from .operators.staging import stage
 
-    tok = d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("term"))
     # tf feeds the document frequencies AND the scoring join — STAGED
     # (r07) so the tokenize subtree derives once, not twice.
-    tf = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .transform(stage)
-    )
+    tf = _term_counts(d, "doc_id").transform(stage)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = tf.join(dfreq, "term").select(
         "doc_id",
@@ -2528,8 +2593,7 @@ def q_doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_TFIDF = f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
+WITH {_sql_term_counts('doc_id')},
 dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
 scored AS (
   SELECT doc_id, term,
@@ -2567,7 +2631,7 @@ def q_emb_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_QUANTIZED = """
+SQL_QUANTIZED = f"""
 WITH m AS (
   SELECT vec_id, embedding,
          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS mx
@@ -2578,7 +2642,7 @@ s AS (
          CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END AS scale
   FROM m
 )
-SELECT vec_id, (floor((scale) * 1000000.0 + 0.5) / 1000000.0) AS scale,
+SELECT vec_id, {SQL_ROUND6.format(x='scale')} AS scale,
        array_to_string(
          list_transform(embedding,
                         x -> CAST(CAST(round(CAST(x AS DOUBLE) * scale) AS INTEGER) AS VARCHAR)),
@@ -2689,10 +2753,10 @@ WITH toks AS (
 scored AS (
   SELECT doc_id, lang, CAST(len(t) AS BIGINT) AS n_tokens,
          CASE WHEN len(t) > 0
-              THEN (floor((CAST(length(nm) - (len(t) - 1) AS DOUBLE) / len(t)) * 1000000.0 + 0.5) / 1000000.0)
+              THEN {SQL_ROUND6.format(x='CAST(length(nm) - (len(t) - 1) AS DOUBLE) / len(t)')}
               ELSE 0.0 END AS mean_tok_len,
-         (floor(({alpha}) * 1000000.0 + 0.5) / 1000000.0) AS alpha_ratio,
-         (floor(({punct}) * 1000000.0 + 0.5) / 1000000.0) AS symbol_ratio
+         {SQL_ROUND6.format(x=alpha)} AS alpha_ratio,
+         {SQL_ROUND6.format(x=punct)} AS symbol_ratio
   FROM toks
 )
 SELECT *,
@@ -2748,7 +2812,7 @@ c AS (
 s AS (
   SELECT *,
          CASE WHEN n_grams > 0
-              THEN (floor((CAST(n_grams - n_distinct_grams AS DOUBLE) / n_grams) * 1000000.0 + 0.5) / 1000000.0)
+              THEN {SQL_ROUND6.format(x='CAST(n_grams - n_distinct_grams AS DOUBLE) / n_grams')}
               ELSE 0.0 END AS dup_gram_ratio
   FROM c
 )
@@ -2891,7 +2955,7 @@ hits AS (
 ),
 j AS (
   SELECT s.doc_id, s.n_grams, COALESCE(h.n_hit, 0) AS n_hit,
-         (floor((CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / s.n_grams) * 1000000.0 + 0.5) / 1000000.0) AS containment
+         {SQL_ROUND6.format(x='CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / s.n_grams')} AS containment
   FROM sizes s LEFT JOIN hits h USING (doc_id)
 )
 SELECT *, containment >= {CONTAMINATION_THRESHOLD} AS contaminated FROM j
@@ -2960,7 +3024,7 @@ maj AS (
 )
 SELECT s.cid AS cluster_id, s.n_members,
        CAST(m.label AS BIGINT) AS majority_label,
-       (floor((CAST(m.c AS DOUBLE) / s.n_members) * 1000000.0 + 0.5) / 1000000.0) AS label_purity
+       {SQL_ROUND6.format(x='CAST(m.c AS DOUBLE) / s.n_members')} AS label_purity
 FROM sizes s JOIN maj m ON m.cid = s.cid AND m.rn = 1
 """
 
@@ -2980,16 +3044,15 @@ def q_doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.staging import stage
 
-    d = _docs_with_tokens(spark, sf_dir)
-    tok = d.select(F.explode(TX.tokens(F.col("text"))).alias("term"))
-    counts = tok.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("term_count")
-    ).transform(stage)
+    counts = (
+        _term_counts(_docs_with_tokens(spark, sf_dir))
+        .withColumnRenamed("tf", "term_count")
+        .transform(stage)
+    )
     total = counts.agg(F.sum("term_count").alias("_total"))
-    topk = counts.orderBy(
-        F.col("term_count").desc(), F.col("term").asc()
-    ).limit(VOCAB_TOP_K)
-    w = Window.orderBy(F.col("term_count").desc(), F.col("term").asc())
+    by_freq = [F.col("term_count").desc(), F.col("term").asc()]
+    topk = counts.orderBy(*by_freq).limit(VOCAB_TOP_K)
+    w = Window.orderBy(*by_freq)
     ranked = topk.select(
         "term",
         F.row_number().over(w).cast("long").alias("rank"),
@@ -3007,17 +3070,16 @@ def q_doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_VOCAB_COVERAGE = f"""
-WITH tok AS (SELECT unnest({_TOKS}) AS term FROM documents),
-cnt AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS term_count FROM tok GROUP BY term),
+WITH {_sql_term_counts()},
 ranked AS (
-  SELECT term, term_count,
-         CAST(row_number() OVER (ORDER BY term_count DESC, term ASC) AS BIGINT) AS rank,
-         SUM(term_count) OVER () AS _total,
-         SUM(term_count) OVER (ORDER BY term_count DESC, term ASC) AS _cum
-  FROM cnt
+  SELECT term, tf AS term_count,
+         CAST(row_number() OVER (ORDER BY tf DESC, term ASC) AS BIGINT) AS rank,
+         SUM(tf) OVER () AS _total,
+         SUM(tf) OVER (ORDER BY tf DESC, term ASC) AS _cum
+  FROM tf
 )
 SELECT term, rank, term_count,
-       (floor((CAST(_cum AS DOUBLE) / CAST(_total AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0) AS cum_share
+       {SQL_ROUND6.format(x='CAST(_cum AS DOUBLE) / CAST(_total AS DOUBLE)')} AS cum_share
 FROM ranked WHERE rank <= {VOCAB_TOP_K}
 """
 
@@ -3112,13 +3174,13 @@ SELECT source, lang,
        CAST(grouping(source, lang) AS BIGINT) AS gid,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(len({_TOKS})) AS BIGINT) AS total_tokens,
-       (floor((CAST(SUM(n_chars) AS DOUBLE) / COUNT(*)) * 1000000.0 + 0.5) / 1000000.0) AS avg_chars
+       {SQL_ROUND6.format(x='CAST(SUM(n_chars) AS DOUBLE) / COUNT(*)')} AS avg_chars
 FROM documents GROUP BY ROLLUP(source, lang)
 HAVING COUNT(*) > 0
 """
 
 
-SQL_EVENT_FUNNEL = """
+SQL_EVENT_FUNNEL = f"""
 WITH v AS (
   SELECT user_id, MIN(epoch_us(ts)) AS t FROM events
   WHERE event_type = 'view' GROUP BY user_id
@@ -3144,7 +3206,7 @@ n AS (
   SELECT 3, 'purchase_after_click', (SELECT COUNT(*) FROM p)
 )
 SELECT step, stage, users,
-       (floor((CAST(users AS DOUBLE) / (SELECT GREATEST(COUNT(*), 1) FROM v)) * 1000000.0 + 0.5) / 1000000.0) AS conversion
+       {SQL_ROUND6.format(x='CAST(users AS DOUBLE) / (SELECT GREATEST(COUNT(*), 1) FROM v)')} AS conversion
 FROM n
 """
 
@@ -3264,14 +3326,12 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     )
-    revenue = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
-        DEC
-    )
+    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     j = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .agg(stable_sum(revenue).alias("revenue"))
     )
     out = j.select(
         "l_orderkey",
@@ -4014,48 +4074,35 @@ def q_doc_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero rescans past the bounded sources×vocab table."""
     from .operators.staging import stage
 
-    d = _docs_with_tokens(spark, sf_dir)
-    tok = d.select("source", F.explode(TX.tokens(F.col("text"))).alias("term"))
-    st = (
-        tok.groupBy("source", "term")
-        .agg(F.count(F.lit(1)).alias("c_st"))
-        .transform(stage)
-    )
-    s_tot = st.groupBy("source").agg(F.sum("c_st").alias("n_s"))
-    g = st.groupBy("term").agg(F.sum("c_st").alias("c_t"))
+    st = _term_counts(_docs_with_tokens(spark, sf_dir), "source").transform(stage)
+    s_tot = st.groupBy("source").agg(F.sum("tf").alias("n_s"))
+    g = st.groupBy("term").agg(F.sum("tf").alias("c_t"))
     g_tot = g.agg(F.sum("c_t").alias("_n"))
     j = (
         st.join(g, "term")
         .join(F.broadcast(s_tot), "source")
         .crossJoin(F.broadcast(g_tot))
     )
-    p = F.col("c_st").cast("double") / F.col("n_s").cast("double")
+    p = F.col("tf").cast("double") / F.col("n_s").cast("double")
     q = F.col("c_t").cast("double") / F.col("_n").cast("double")
-    contrib = (p * F.log(p / q)).cast(DEC)
     return j.groupBy("source").agg(
         F.max("n_s").alias("n_tokens"),
-        F.round(F.sum(contrib).cast("double"), 6).alias("kl_vs_corpus"),
+        F.round(stable_sum(p * F.log(p / q)), 6).alias("kl_vs_corpus"),
     )
 
 
 SQL_DOC_SOURCE_DRIFT = f"""
-WITH tok AS (
-  SELECT source, unnest({_TOKS}) AS term FROM documents
-),
-st AS (
-  SELECT source, term, CAST(COUNT(*) AS BIGINT) AS c_st
-  FROM tok GROUP BY 1, 2
-),
-s_tot AS (SELECT source, CAST(SUM(c_st) AS BIGINT) AS n_s FROM st GROUP BY 1),
-g AS (SELECT term, CAST(SUM(c_st) AS BIGINT) AS c_t FROM st GROUP BY 1),
+WITH {_sql_term_counts('source')},
+s_tot AS (SELECT source, CAST(SUM(tf) AS BIGINT) AS n_s FROM tf GROUP BY 1),
+g AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS c_t FROM tf GROUP BY 1),
 g_tot AS (SELECT CAST(SUM(c_t) AS BIGINT) AS n FROM g),
 j AS (
-  SELECT st.source, st.c_st, st.term, g.c_t, s_tot.n_s, g_tot.n
-  FROM st JOIN g USING (term) JOIN s_tot USING (source) CROSS JOIN g_tot
+  SELECT tf.source, tf.tf, tf.term, g.c_t, s_tot.n_s, g_tot.n
+  FROM tf JOIN g USING (term) JOIN s_tot USING (source) CROSS JOIN g_tot
 )
 SELECT source, MAX(n_s) AS n_tokens,
        round({_ssum(
-    "(CAST(c_st AS DOUBLE) / CAST(n_s AS DOUBLE)) * ln((CAST(c_st AS DOUBLE) / CAST(n_s AS DOUBLE)) / (CAST(c_t AS DOUBLE) / CAST(n AS DOUBLE)))"
+    "(CAST(tf AS DOUBLE) / CAST(n_s AS DOUBLE)) * ln((CAST(tf AS DOUBLE) / CAST(n_s AS DOUBLE)) / (CAST(c_t AS DOUBLE) / CAST(n AS DOUBLE)))"
 )}, 6) AS kl_vs_corpus
 FROM j GROUP BY source
 """
@@ -4142,15 +4189,13 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
     )
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    revenue = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
-        DEC
-    )
+    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     agg = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .agg(stable_sum(revenue).alias("revenue"))
     )
     return top_k(agg, [F.col("revenue").desc(), F.col("c_custkey").asc()], 20)
 
@@ -4235,11 +4280,9 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
-    revenue = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
-        DEC
-    )
+    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     rev = li.groupBy("l_suppkey").agg(
-        F.sum(revenue).cast("double").alias("total_revenue")
+        stable_sum(revenue).alias("total_revenue")
     ).transform(stage)
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
     supp = load_table(spark, sf_dir, "supplier")
@@ -4381,11 +4424,9 @@ def q_brand_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_quantity").between(20.0, 40.0)
         )
     )
-    revenue = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
-        DEC
-    )
+    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return j.where(cond).agg(
-        F.sum(revenue).cast("double").alias("revenue"),
+        stable_sum(revenue).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -4467,42 +4508,25 @@ def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     one documents scan, zero rescans past the aggregated tf."""
     from .operators.staging import stage
 
-    d = _docs_with_tokens(spark, sf_dir)
-    tok = d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("term"))
-    tf = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .transform(stage)
-    )
+    tf = _term_counts(_docs_with_tokens(spark, sf_dir), "doc_id").transform(stage)
     counts = tf.groupBy("term").agg(F.sum("tf").alias("c"))
     totals = counts.agg(
         F.sum("c").alias("_total"), F.count(F.lit(1)).alias("_v")
     )
     j = tf.join(counts, "term").crossJoin(F.broadcast(totals))
-    contrib = (
-        F.col("tf")
-        * F.log((F.col("c") + F.lit(1.0)) / (F.col("_total") + F.col("_v")))
-    ).cast(DEC)
-    return j.groupBy("doc_id").agg(
-        F.sum("tf").alias("n_tokens"),
-        F.round(F.sum(contrib).cast("double") / F.sum("tf"), 6).alias(
-            "avg_logprob"
-        ),
-    )
+    logp = F.log((F.col("c") + F.lit(1.0)) / (F.col("_total") + F.col("_v")))
+    return _mean_logprob(j, logp, "n_tokens", "avg_logprob")
 
 
 SQL_UNIGRAM_LOGPROB = f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
+WITH {_sql_term_counts('doc_id')},
 counts AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS c FROM tf GROUP BY term),
 tot AS (SELECT CAST(SUM(c) AS BIGINT) AS total, CAST(COUNT(*) AS BIGINT) AS v FROM counts),
 j AS (
   SELECT tf.doc_id, tf.tf, counts.c, tot.total, tot.v
   FROM tf JOIN counts USING (term) CROSS JOIN tot
 )
-SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
-       round({_ssum('tf * ln((c + 1.0) / (total + v))')} / SUM(tf), 6) AS avg_logprob
-FROM j GROUP BY doc_id
+{_sql_mean_logprob('ln((c + 1.0) / (total + v))', 'n_tokens', 'avg_logprob')}
 """
 
 
@@ -4586,7 +4610,7 @@ def q_emb_pca_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     trace_df = g.agg(
         F.count(F.lit(1)).cast("int").alias("dim"),
         F.max("n").alias("n_vecs"),
-        F.sum(dec(var_j)).cast("double").alias("_tr"),
+        stable_sum(var_j).alias("_tr"),
     )
     # bounded driver metadata (1 row) — the kmeans-centroid convention
     trace_row = trace_df.first()
@@ -4846,9 +4870,13 @@ def _sql_quality_classifier() -> str:
     def sig() -> str:
         return f"1.0 / (1.0 + exp(-({z()})))"
 
+    # f and every w{i} are MATERIALIZED: each gradient step reads f,
+    # and each step reads the previous weights twice (gradient and
+    # update). Inlined, DuckDB recomputed the features per step and the
+    # weight chain grew twofold per step (over 100x slower).
     layers = [
         f"toks AS (SELECT doc_id, {toks} AS t FROM documents)",
-        f"f AS (SELECT doc_id, {label} AS y, "
+        f"f AS MATERIALIZED (SELECT doc_id, {label} AS y, "
         + ", ".join(feat_exprs)
         + " FROM toks)",
         "n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM f)",
@@ -4869,7 +4897,8 @@ def _sql_quality_classifier() -> str:
             for j in range(d)
         )
         layers.append(
-            f"w{i} AS (SELECT {wsel} FROM w{i - 1} w CROSS JOIN g{i} g CROSS JOIN n)"
+            f"w{i} AS MATERIALIZED"
+            f" (SELECT {wsel} FROM w{i - 1} w CROSS JOIN g{i} g CROSS JOIN n)"
         )
     prob = r6.format(x=sig())
     return (
@@ -5312,64 +5341,31 @@ def q_doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast; the log-prob sum goes through decimal like every
     double sum in this module. Docs with < 2 tokens have no bigram and
     drop out on both engines."""
+    from .operators.staging import stage
+
     d = _docs_with_tokens(spark, sf_dir)
-    t = TX.tokens(F.col("text"))
-    pairs = (
-        d.select("doc_id", t.alias("_t"))
-        .where(F.size("_t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("_t", 1, F.size("_t") - 1).alias("a"),
-                    F.slice("_t", 2, F.size("_t") - 1).alias("b"),
-                )
-            ).alias("_p"),
-        )
-        .select("doc_id", F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
-    )
     # STAGED (r07): tf feeds the bigram marginals AND the scoring join —
     # un-staged Catalyst re-derived the zip/explode subtree per use
     # (four documents scans); staging leaves one scan for the unigram
     # marginal (which genuinely needs the raw token stream — the last
     # token of each doc starts no bigram, so ca is not derivable from tf).
-    from .operators.staging import stage
-
-    tf = (
-        pairs.groupBy("doc_id", "a", "b")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .transform(stage)
-    )
+    tf = _bigram_counts(d).transform(stage)
     cab = tf.groupBy("a", "b").agg(F.sum("tf").alias("cab"))
-    tok = d.select(F.explode(t).alias("a"))
     # ca (vocab-sized) feeds |V| and the scoring join — staged for the
     # same single-derivation reason as tf, leaving ONE documents scan.
-    ca = tok.groupBy("a").agg(F.count(F.lit(1)).alias("ca")).transform(stage)
+    ca = (
+        _term_counts(d)
+        .select(F.col("term").alias("a"), F.col("tf").alias("ca"))
+        .transform(stage)
+    )
     v = ca.agg(F.count(F.lit(1)).alias("_v"))
     j = tf.join(cab, ["a", "b"]).join(ca, "a").crossJoin(F.broadcast(v))
-    contrib = (
-        F.col("tf")
-        * F.log((F.col("cab") + F.lit(1.0)) / (F.col("ca") + F.col("_v")))
-    ).cast(DEC)
-    return j.groupBy("doc_id").agg(
-        F.sum("tf").alias("n_bigrams"),
-        F.round(F.sum(contrib).cast("double") / F.sum("tf"), 6).alias(
-            "avg_bigram_logprob"
-        ),
-    )
+    logp = F.log((F.col("cab") + F.lit(1.0)) / (F.col("ca") + F.col("_v")))
+    return _mean_logprob(j, logp, "n_bigrams", "avg_bigram_logprob")
 
 
 SQL_BIGRAM_LOGPROB = f"""
-WITH toks AS (
-  SELECT doc_id, generate_subscripts({_TOKS}, 1) AS i,
-         unnest({_TOKS}) AS term
-  FROM documents
-),
-pairs AS (
-  SELECT t1.doc_id, t1.term AS a, t2.term AS b
-  FROM toks t1 JOIN toks t2 ON t2.doc_id = t1.doc_id AND t2.i = t1.i + 1
-),
-tf AS (SELECT doc_id, a, b, CAST(COUNT(*) AS BIGINT) AS tf FROM pairs GROUP BY 1, 2, 3),
+WITH {_SQL_BIGRAM_COUNTS},
 cab AS (SELECT a, b, CAST(SUM(tf) AS BIGINT) AS cab FROM tf GROUP BY a, b),
 ca AS (SELECT term AS a, CAST(COUNT(*) AS BIGINT) AS ca FROM toks GROUP BY term),
 vv AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM ca),
@@ -5377,9 +5373,7 @@ j AS (
   SELECT tf.doc_id, tf.tf, cab.cab, ca.ca, vv.v
   FROM tf JOIN cab USING (a, b) JOIN ca USING (a) CROSS JOIN vv
 )
-SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-       round({_ssum('tf * ln((cab + 1.0) / (ca + v))')} / SUM(tf), 6) AS avg_bigram_logprob
-FROM j GROUP BY doc_id
+{_sql_mean_logprob('ln((cab + 1.0) / (ca + v))', 'n_bigrams', 'avg_bigram_logprob')}
 """
 
 
@@ -5550,14 +5544,14 @@ def _sql_emb_cluster_prune() -> str:
 WITH {_SQL_NEAREST_CENTROID},
 a AS (
   SELECT vec_id, CAST(cid AS BIGINT) AS cluster_id,
-         (floor(d * 1000000.0 + 0.5) / 1000000.0) AS sq_dist
+         {SQL_ROUND6.format(x='d')} AS sq_dist
   FROM assign
 ),
 ranked AS (
   SELECT vec_id, cluster_id, sq_dist,
-         (floor((PERCENT_RANK() OVER (
-            PARTITION BY cluster_id ORDER BY sq_dist ASC, vec_id ASC
-          )) * 1000000.0 + 0.5) / 1000000.0) AS d_rank
+         {SQL_ROUND6.format(
+             x='PERCENT_RANK() OVER ('
+               'PARTITION BY cluster_id ORDER BY sq_dist ASC, vec_id ASC)')} AS d_rank
   FROM a
 )
 SELECT vec_id, cluster_id, sq_dist, d_rank,
@@ -5611,8 +5605,8 @@ c AS (
   FROM t WHERE len(toks) > 0
 )
 SELECT doc_id, n_tokens, n_hits,
-       (floor((CAST(n_hits AS DOUBLE) / n_tokens) * 1000000.0 + 0.5) / 1000000.0) AS hit_ratio,
-       ((floor((CAST(n_hits AS DOUBLE) / n_tokens) * 1000000.0 + 0.5) / 1000000.0) > {BLOCKLIST_TAU}) AS blocked
+       {SQL_ROUND6.format(x='CAST(n_hits AS DOUBLE) / n_tokens')} AS hit_ratio,
+       ({SQL_ROUND6.format(x='CAST(n_hits AS DOUBLE) / n_tokens')} > {BLOCKLIST_TAU}) AS blocked
 FROM c
 """
 
@@ -5673,11 +5667,7 @@ def q_doc_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_boilerplate_segments() -> str:
     return f"""
-WITH toks AS (
-  SELECT doc_id, generate_subscripts({_TOKS}, 1) AS i,
-         unnest({_TOKS}) AS term
-  FROM documents
-),
+WITH {_SQL_POS_TOKS},
 seg AS (
   SELECT doc_id, (i - 1) // {BOILERPLATE_SEG_TOKENS} AS seg_idx,
          string_agg(term, ' ' ORDER BY i) AS seg
@@ -5691,7 +5681,7 @@ j AS (
 SELECT doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_segments,
        CAST(SUM(CASE WHEN boiler THEN 1 ELSE 0 END) AS BIGINT) AS n_boilerplate,
-       (floor((SUM(CASE WHEN boiler THEN 1.0 ELSE 0.0 END) / COUNT(*)) * 1000000.0 + 0.5) / 1000000.0) AS boilerplate_share,
+       {SQL_ROUND6.format(x='SUM(CASE WHEN boiler THEN 1.0 ELSE 0.0 END) / COUNT(*)')} AS boilerplate_share,
        CAST(SUM(CASE WHEN boiler THEN 0 ELSE len(string_split(seg, ' ')) END) AS BIGINT) AS kept_tokens
 FROM j GROUP BY doc_id
 """
@@ -5834,7 +5824,7 @@ agg AS (
   FROM base GROUP BY o_year
 )
 SELECT o_year, total_revenue, nation_revenue,
-       (floor((nation_revenue / total_revenue) * 1000000.0 + 0.5) / 1000000.0) AS mkt_share
+       {SQL_ROUND6.format(x='nation_revenue / total_revenue')} AS mkt_share
 FROM agg
 """
 
@@ -6072,9 +6062,9 @@ ce AS (SELECT vec_id AS neighbor_id, embedding AS cv, {sq.format(v='embedding')}
        FROM embeddings),
 scored AS (
   SELECT s.query_id, s.neighbor_id, s.hamming,
-         floor((CASE WHEN qn * cn = 0 THEN 0.0
-                ELSE {dotf.format(p='qv', c='cv')} / (qn * cn) END) * 1000000.0 + 0.5)
-           / 1000000.0 AS cosine_sim
+         {SQL_ROUND6.format(
+             x=f"CASE WHEN qn * cn = 0 THEN 0.0"
+               f" ELSE {dotf.format(p='qv', c='cv')} / (qn * cn) END")} AS cosine_sim
   FROM shortlist s JOIN qe USING (query_id) JOIN ce USING (neighbor_id)
 ),
 rranked AS (
@@ -6112,11 +6102,11 @@ def q_events_changelog_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_changelog(ev)
 
 
-SQL_CHANGELOG_STATE = """
+SQL_CHANGELOG_STATE = f"""
 WITH log AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,
          CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-         (floor(value * 1000000.0 + 0.5) / 1000000.0) AS value
+         {SQL_ROUND6.format(x='value')} AS value
   FROM events
 ),
 ranked AS (
@@ -6287,7 +6277,6 @@ def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a sort. Zero-token docs are excluded from dl (as the old exploded
     aggregate did implicitly)."""
     d = _docs_with_tokens(spark, sf_dir)
-    terms = [t for t in BM25_QUERY_TERMS]
     from .operators.staging import stage
 
     # dl feeds BOTH the 1-row totals aggregate and the scoring join;
@@ -6299,17 +6288,15 @@ def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("dl") > 0)
         .transform(stage)
     )
-    qtok = d.select(
-        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("term")
-    ).where(F.col("term").isin(*terms))
-
     # tf feeds BOTH the df aggregate and the scoring join; without
     # staging the corpus-wide explode subtree executes twice (verified:
     # no AQE exchange reuse here). The staged frame is ≤ |matching
     # docs| × |query terms| rows — bounded metadata, not corpus-sized.
+    # The term filter is on a grouping key, so it pushes below the
+    # count to the explode.
     tf = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
+        _term_counts(d, "doc_id")
+        .where(F.col("term").isin(*BM25_QUERY_TERMS))
         .transform(stage)
     )
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -6332,7 +6319,7 @@ def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     contrib = round6(idf * (F.col("tf") * F.lit(BM25_K1 + 1.0)) / denom)
     scored = j.groupBy("doc_id").agg(
-        F.round(F.sum(contrib.cast(DEC)).cast("double"), 6).alias("bm25"),
+        F.round(stable_sum(contrib), 6).alias("bm25"),
         F.count(F.lit(1)).alias("n_matched_terms"),
     )
     from .operators.topk import top_k
@@ -6344,21 +6331,19 @@ def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_doc_bm25() -> str:
     terms = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
-    r6 = "(floor(({x}) * 1000000.0 + 0.5) / 1000000.0)"
     idf = "ln((n - df + 0.5) / (df + 0.5) + 1.0)"
     denom = f"(tf + {BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * dl / avgdl))"
-    contrib = r6.format(x=f"{idf} * (tf * {BM25_K1 + 1.0}) / {denom}")
+    contrib = SQL_ROUND6.format(x=f"{idf} * (tf * {BM25_K1 + 1.0}) / {denom}")
     return f"""
 WITH dl AS (
   SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS dl
   FROM documents WHERE len({_TOKS}) > 0
 ),
-toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-tf AS (
-  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM toks WHERE term IN ({terms}) GROUP BY doc_id, term
+{_sql_term_counts('doc_id')},
+dfreq AS (
+  SELECT term, CAST(COUNT(*) AS BIGINT) AS df
+  FROM tf WHERE term IN ({terms}) GROUP BY term
 ),
-dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
 tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
@@ -7300,7 +7285,7 @@ def q_event_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_MARKOV_TRANSITIONS = """
+SQL_MARKOV_TRANSITIONS = f"""
 WITH seq AS (
   SELECT user_id, event_type,
          lead(event_type) OVER (
@@ -7315,7 +7300,7 @@ m AS (
 ),
 tot AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS row_n FROM m GROUP BY from_type)
 SELECT m.from_type, m.next_type, m.n,
-       (floor((CAST(m.n AS DOUBLE) / tot.row_n) * 1000000.0 + 0.5) / 1000000.0) AS p
+       {SQL_ROUND6.format(x='CAST(m.n AS DOUBLE) / tot.row_n')} AS p
 FROM m JOIN tot USING (from_type)
 """
 
@@ -7442,8 +7427,9 @@ WITH yearly AS (
 SELECT p_type, o_year, revenue,
        CASE WHEN lag(revenue) OVER (PARTITION BY p_type ORDER BY o_year) IS NOT NULL
              AND lag(revenue) OVER (PARTITION BY p_type ORDER BY o_year) <> 0
-            THEN (floor(((revenue - lag(revenue) OVER (PARTITION BY p_type ORDER BY o_year))
-                         / lag(revenue) OVER (PARTITION BY p_type ORDER BY o_year)) * 1000000.0 + 0.5) / 1000000.0)
+            THEN {SQL_ROUND6.format(
+                x='(revenue - lag(revenue) OVER (PARTITION BY p_type ORDER BY o_year))'
+                  ' / lag(revenue) OVER (PARTITION BY p_type ORDER BY o_year)')}
        END AS yoy_growth
 FROM yearly
 """
@@ -8446,9 +8432,7 @@ def q_neardup_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a", "b")
         .agg(
             F.count(F.lit(1)).cast("long").alias("common_neighbors"),
-            F.round(F.sum(term.cast(DEC)).cast("double"), 6).alias(
-                "adamic_adar"
-            ),
+            F.round(stable_sum(term), 6).alias("adamic_adar"),
         )
         .select(
             F.col("a").alias("id_a"),
@@ -9133,7 +9117,7 @@ def q_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_DOMINANT_PART_SUPPLIERS = f"""
 WITH sq AS (
-  SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS {DEC})) AS _q
+  SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS {STABLE_DECIMAL})) AS _q
   FROM lineitem JOIN part ON l_partkey = p_partkey
   WHERE contains(p_name, '{DOMINANT_PART_MARKER}')
   GROUP BY 1, 2
@@ -9256,21 +9240,20 @@ def q_doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline."""
     from pyspark.sql import Window
 
-    d = _docs_with_tokens(spark, sf_dir)
-    tok = d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("term"))
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("_tf"))
     w = Window.partitionBy("doc_id")
-    tf = tf.withColumn("_n", F.sum("_tf").over(w)).withColumn(
-        "_d", F.count(F.lit(1)).over(w)
+    tf = (
+        _term_counts(_docs_with_tokens(spark, sf_dir), "doc_id")
+        .withColumn("_n", F.sum("tf").over(w))
+        .withColumn("_d", F.count(F.lit(1)).over(w))
     )
-    p = F.col("_tf").cast("double") / F.col("_n").cast("double")
+    p = F.col("tf").cast("double") / F.col("_n").cast("double")
     term_h = round6(-(p * F.log(p)))
     return (
         tf.groupBy("doc_id")
         .agg(
             F.max("_n").cast("long").alias("n_tokens"),
             F.max("_d").cast("long").alias("n_distinct"),
-            F.round(F.sum(term_h.cast(DEC)).cast("double"), 6).alias("entropy"),
+            F.round(stable_sum(term_h), 6).alias("entropy"),
             round6(
                 F.max("_d").cast("double") / F.max("_n").cast("double")
             ).alias("ttr"),
@@ -9279,16 +9262,12 @@ def q_doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_doc_token_entropy() -> str:
-    p = "(CAST(_tf AS DOUBLE) / _n)"
+    p = "(CAST(tf.tf AS DOUBLE) / _n)"
     term_h = SQL_ROUND6.format(x=f"-({p} * ln({p}))")
     return f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-tf AS (
-  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS _tf
-  FROM toks GROUP BY 1, 2
-),
+WITH {_sql_term_counts('doc_id')},
 per_doc AS (
-  SELECT doc_id, CAST(SUM(_tf) AS BIGINT) AS _n,
+  SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS _n,
          CAST(COUNT(*) AS BIGINT) AS _d
   FROM tf GROUP BY 1
 )
@@ -9652,14 +9631,7 @@ def q_doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.staging import stage
 
     d = _docs_with_tokens(spark, sf_dir)
-    tok = d.select(
-        "doc_id", "lang", F.explode(TX.tokens(F.col("text"))).alias("term")
-    )
-    tf = (
-        tok.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .transform(stage)
-    )
+    tf = _term_counts(d, "doc_id", "lang").transform(stage)
     c_s = tf.groupBy("term").agg(F.sum("tf").alias("c_s"))
     c_t = (
         tf.where(F.col("lang") == "en")
@@ -9682,35 +9654,16 @@ def q_doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(totals))
         .withColumn("c_t", F.coalesce(F.col("c_t"), F.lit(0)))
     )
-    contrib = (
-        F.col("tf")
-        * (
-            F.log(
-                (F.col("c_t") + F.lit(1.0)) / (F.col("_n_t") + F.col("_v"))
-            )
-            - F.log(
-                (F.col("c_s") + F.lit(1.0)) / (F.col("_n_s") + F.col("_v"))
-            )
-        )
-    ).cast(DEC)
-    return j.groupBy("doc_id").agg(
-        F.sum("tf").alias("n_tokens"),
-        round6(F.sum(contrib).cast("double") / F.sum("tf")).alias(
-            "dsir_weight"
-        ),
-    )
+    logp = F.log(
+        (F.col("c_t") + F.lit(1.0)) / (F.col("_n_t") + F.col("_v"))
+    ) - F.log((F.col("c_s") + F.lit(1.0)) / (F.col("_n_s") + F.col("_v")))
+    return _mean_logprob(j, logp, "n_tokens", "dsir_weight")
 
 
 def _sql_doc_dsir_weights() -> str:
-    ratio = (
-        "tf * (ln((c_t + 1.0) / (n_t + v)) - ln((c_s + 1.0) / (n_s + v)))"
-    )
+    logp = "(ln((c_t + 1.0) / (n_t + v)) - ln((c_s + 1.0) / (n_s + v)))"
     return f"""
-WITH toks AS (SELECT doc_id, lang, unnest({_TOKS}) AS term FROM documents),
-tf AS (
-  SELECT doc_id, lang, term, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM toks GROUP BY 1, 2, 3
-),
+WITH {_sql_term_counts('doc_id', 'lang')},
 cs AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS c_s FROM tf GROUP BY term),
 ct AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS c_t FROM tf WHERE lang = 'en' GROUP BY term),
 tot AS (
@@ -9723,9 +9676,7 @@ j AS (
   FROM tf JOIN cs USING (term) LEFT JOIN ct USING (term)
   CROSS JOIN tot CROSS JOIN tt
 )
-SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
-       {SQL_ROUND6.format(x=f"{_ssum(ratio)} / SUM(tf)")} AS dsir_weight
-FROM j GROUP BY doc_id
+{_sql_mean_logprob(logp, 'n_tokens', 'dsir_weight')}
 """
 
 
@@ -9905,9 +9856,9 @@ ce AS (SELECT vec_id AS neighbor_id, CAST(label AS BIGINT) AS neighbor_label,
        FROM embeddings),
 scored AS (
   SELECT s.query_id, query_label, s.neighbor_id, neighbor_label, s.hamming,
-         floor((CASE WHEN qn * cn = 0 THEN 0.0
-                ELSE {_SQL_SEQ_DOT.format(p='qv', c='cv')} / (qn * cn) END) * 1000000.0 + 0.5)
-           / 1000000.0 AS cosine_sim
+         {SQL_ROUND6.format(
+             x=f"CASE WHEN qn * cn = 0 THEN 0.0"
+               f" ELSE {_SQL_SEQ_DOT.format(p='qv', c='cv')} / (qn * cn) END")} AS cosine_sim
   FROM shortlist s JOIN qe USING (query_id) JOIN ce USING (neighbor_id)
   WHERE query_label <> neighbor_label
 ),
@@ -9954,15 +9905,14 @@ def q_emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "label")
         .agg(
             F.sqrt(
-                F.sum(dec((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))))
-                .cast("double")
+                stable_sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c")))
             ).alias("_d")
         )
     )
     moments = dists.groupBy("label").agg(
         F.count(F.lit(1)).alias("_n"),
         stable_avg("_d").alias("_mu"),
-        (F.sum(dec(F.col("_d") * F.col("_d"))).cast("double") / F.count(F.lit(1))).alias("_ex2"),
+        (stable_sum(F.col("_d") * F.col("_d")) / F.count(F.lit(1))).alias("_ex2"),
     )
     # Zero-variance labels (e.g. a singleton label) have std = 0; both
     # engines emit z = 0.0 / not-outlier instead of dividing by zero
@@ -10220,7 +10170,7 @@ def q_event_trailing_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame
 SQL_TRAILING_WINDOW = f"""
 SELECT user_id, epoch_us(ts) // 1000000 AS ts_s, value,
   CAST(COUNT(*) OVER w AS BIGINT) AS n_trailing,
-  CAST(CAST(SUM(CAST(value AS {DEC})) OVER w AS VARCHAR) AS DOUBLE)
+  CAST(CAST(SUM(CAST(value AS {STABLE_DECIMAL})) OVER w AS VARCHAR) AS DOUBLE)
     AS sum_trailing
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) // 1000000
@@ -10360,9 +10310,8 @@ def q_doc_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable-summaries proof sketch). The MG intermediate depends on
     partition layout; the verified OUTPUT is exact and layout-free,
     which is why a plain GROUP BY … HAVING oracle exists."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(TX.tokens(F.col("text"))).alias("token")
+    toks = _doc_terms(load_table(spark, sf_dir, "documents")).select(
+        F.col("term").alias("token")
     ).filter(F.col("token") != "")
     from .operators.heavy import heavy_hitters_exact
 
@@ -10370,17 +10319,11 @@ def q_doc_token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_TOKEN_HEAVY_HITTERS = f"""
-WITH toks AS (
-  SELECT unnest({_TOKS}) AS token FROM documents
-  WHERE length({_norm('text')}) > 0
-), tot AS (
-  SELECT count(*) AS n FROM toks WHERE token <> ''
-)
-SELECT token, CAST(count(*) AS BIGINT) AS n_occurrences
-FROM toks, tot
-WHERE token <> ''
-GROUP BY token, tot.n
-HAVING count(*) * {MG_HEAVY_K + 1} > tot.n
+WITH {_sql_term_counts()},
+tot AS (SELECT SUM(tf) AS n FROM tf WHERE term <> '')
+SELECT term AS token, tf AS n_occurrences
+FROM tf, tot
+WHERE term <> '' AND tf * {MG_HEAVY_K + 1} > tot.n
 """
 
 
@@ -10437,27 +10380,7 @@ def q_doc_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents scan total; no windows; AQE handles hot-gram skew."""
     from .operators.staging import stage
 
-    d = _docs_with_tokens(spark, sf_dir)
-    t = TX.tokens(F.col("text"))
-    pairs = (
-        d.select("doc_id", t.alias("_t"))
-        .where(F.size("_t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("_t", 1, F.size("_t") - 1).alias("a"),
-                    F.slice("_t", 2, F.size("_t") - 1).alias("b"),
-                )
-            ).alias("_p"),
-        )
-        .select("doc_id", F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
-    )
-    tf = (
-        pairs.groupBy("doc_id", "a", "b")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .transform(stage)
-    )
+    tf = _bigram_counts(_docs_with_tokens(spark, sf_dir)).transform(stage)
     cab = tf.groupBy("a", "b").agg(F.sum("tf").alias("cab")).transform(stage)
     astats = cab.groupBy("a").agg(
         F.sum("cab").alias("ca"), F.count(F.lit(1)).alias("n1f")
@@ -10475,26 +10398,11 @@ def q_doc_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(F.col("cab") - d_, F.lit(0.0))
         + d_ * F.col("n1f") * (F.col("n1r") / F.col("_t"))
     ) / F.col("ca")
-    contrib = (F.col("tf") * F.log(prob)).cast(DEC)
-    return j.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("n_bigrams"),
-        round6(F.sum(contrib).cast("double") / F.sum("tf")).alias(
-            "avg_kn_logprob"
-        ),
-    )
+    return _mean_logprob(j, F.log(prob), "n_bigrams", "avg_kn_logprob")
 
 
 SQL_KN_LOGPROB = f"""
-WITH toks AS (
-  SELECT doc_id, generate_subscripts({_TOKS}, 1) AS i,
-         unnest({_TOKS}) AS term
-  FROM documents
-),
-pairs AS (
-  SELECT t1.doc_id, t1.term AS a, t2.term AS b
-  FROM toks t1 JOIN toks t2 ON t2.doc_id = t1.doc_id AND t2.i = t1.i + 1
-),
-tf AS (SELECT doc_id, a, b, CAST(COUNT(*) AS BIGINT) AS tf FROM pairs GROUP BY 1, 2, 3),
+WITH {_SQL_BIGRAM_COUNTS},
 cab AS (SELECT a, b, CAST(SUM(tf) AS BIGINT) AS cab FROM tf GROUP BY a, b),
 astats AS (SELECT a, CAST(SUM(cab) AS BIGINT) AS ca,
                   CAST(COUNT(*) AS BIGINT) AS n1f FROM cab GROUP BY a),
@@ -10505,12 +10413,9 @@ j AS (
   FROM tf JOIN cab USING (a, b) JOIN astats USING (a) JOIN n1r USING (b)
   CROSS JOIN tt
 )
-SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-       {SQL_ROUND6.format(x=_ssum(
-           'tf * ln((GREATEST(cab - ' + str(KN_DISCOUNT) + ', 0.0)'
-           ' + ' + str(KN_DISCOUNT) + ' * n1f * (n1r / t)) / ca)'
-       ) + ' / SUM(tf)')} AS avg_kn_logprob
-FROM j GROUP BY doc_id
+{_sql_mean_logprob(
+    f'ln((GREATEST(cab - {KN_DISCOUNT}, 0.0) + {KN_DISCOUNT} * n1f * (n1r / t)) / ca)',
+    'n_bigrams', 'avg_kn_logprob')}
 """
 
 
@@ -11082,9 +10987,7 @@ def q_event_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("_na").cast("long").alias("n_first"),
             F.max("_nb").cast("long").alias("n_second"),
             F.count_if(used).cast("long").alias("n_buckets_used"),
-            round6(
-                F.sum(F.when(used, term).cast(DEC)).cast("double")
-            ).alias("psi"),
+            round6(stable_sum(F.when(used, term))).alias("psi"),
         )
     )
 
@@ -11117,11 +11020,10 @@ SELECT event_type,
        CAST(MAX(na) AS BIGINT) AS n_first,
        CAST(MAX(nb) AS BIGINT) AS n_second,
        CAST(count_if(ca > 0 AND cb > 0) AS BIGINT) AS n_buckets_used,
-       {SQL_ROUND6.format(
-           x=f"CAST(CAST(SUM(CAST(CASE WHEN ca > 0 AND cb > 0 THEN"
-             f" (({p}) - ({q})) * ln(({p}) / ({q})) END AS {DEC}))"
-             f" AS VARCHAR) AS DOUBLE)"
-       )} AS psi
+       {SQL_ROUND6.format(x=_ssum(
+           f"CASE WHEN ca > 0 AND cb > 0 THEN"
+           f" (({p}) - ({q})) * ln(({p}) / ({q})) END"
+       ))} AS psi
 FROM tot WHERE na > 0 AND nb > 0
 GROUP BY event_type
 """
@@ -11426,12 +11328,11 @@ def q_token_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one explode → (token, side) counts (map-side combine) →
     1-row margin broadcast → map-only χ² → TakeOrdered top-k (no full
     sort)."""
-    d = _docs_with_tokens(spark, sf_dir)
-    toks = d.select(
-        F.explode(TX.tokens(F.col("text"))).alias("token"),
+    toks = _doc_terms(
+        _docs_with_tokens(spark, sf_dir),
         F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0)).alias("_en"),
     )
-    counts = toks.groupBy("token").agg(
+    counts = toks.groupBy("term").agg(
         F.sum("_en").alias("a"),
         F.sum(F.lit(1) - F.col("_en")).alias("b"),
     )
@@ -11448,7 +11349,7 @@ def q_token_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = (a + b + c + dd) * ((a * dd - b * c) * (a * dd - b * c))
     den = ((a + b) * (c + dd)) * ((a + c) * (b + dd))
     scored = j.select(
-        "token",
+        F.col("term").alias("token"),
         F.col("a").cast("long").alias("n_en"),
         F.col("b").cast("long").alias("n_rest"),
         round6(num / den).alias("chi2"),
@@ -11459,15 +11360,12 @@ def q_token_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_CHI2_DRIFT = f"""
-WITH toks AS (
-  SELECT unnest({_TOKS}) AS token,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS en
-  FROM documents
-),
+WITH {_sql_term_counts('lang')},
 counts AS (
-  SELECT token, CAST(SUM(en) AS BIGINT) AS a,
-         CAST(SUM(1 - en) AS BIGINT) AS b
-  FROM toks GROUP BY token
+  SELECT term AS token,
+         CAST(SUM(CASE WHEN lang = 'en' THEN tf ELSE 0 END) AS BIGINT) AS a,
+         CAST(SUM(CASE WHEN lang = 'en' THEN 0 ELSE tf END) AS BIGINT) AS b
+  FROM tf GROUP BY term
 ),
 margins AS (SELECT SUM(a) AS na, SUM(b) AS nb FROM counts),
 scored AS (
@@ -11677,7 +11575,7 @@ def q_order_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         round6(F.col("_e")).alias("benford_share"),
         round6(
-            F.sum(term.cast(DEC)).over(wp).cast("double")
+            F.sum(dec(term)).over(wp).cast("double")
         ).alias("chi2"),
     )
 
@@ -11717,7 +11615,7 @@ SELECT o_orderpriority, digit, n,
          AS obs_share,
        {SQL_ROUND6.format(x="e")} AS benford_share,
        {SQL_ROUND6.format(
-           x=f"CAST(CAST(SUM(CAST({term} AS {DEC})) OVER "
+           x=f"CAST(CAST(SUM(CAST({term} AS {STABLE_DECIMAL})) OVER "
              f"(PARTITION BY o_orderpriority) AS VARCHAR) AS DOUBLE)"
        )} AS chi2
 FROM tot
@@ -11880,7 +11778,7 @@ def q_user_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("n_death") >= F.col("n_risk"), 1).otherwise(0)
             ).over(w_curr),
         )
-        .withColumn("_cumln", F.sum(F.col("_term").cast(DEC)).over(w_curr))
+        .withColumn("_cumln", F.sum(dec("_term")).over(w_curr))
     )
     return staged.select(
         "duration_h",
@@ -11924,7 +11822,7 @@ folded AS (
          SUM(CAST(CASE WHEN n_death > 0 AND n_death < n_risk
                   THEN ln(1.0 - CAST(n_death AS DOUBLE)
                                 / CAST(n_risk AS DOUBLE))
-                  ELSE 0.0 END AS {DEC})) OVER w AS cumln
+                  ELSE 0.0 END AS {STABLE_DECIMAL})) OVER w AS cumln
   FROM staged
   WINDOW w AS (ORDER BY duration_h ROWS BETWEEN UNBOUNDED PRECEDING
                AND CURRENT ROW)
@@ -12158,8 +12056,7 @@ weighted AS (
 ),
 cells AS (
   SELECT event_type, b,
-         CAST(CAST(SUM(CAST(w * value AS {DEC})) AS VARCHAR) AS DOUBLE)
-           / CAST(SUM(w) AS DOUBLE) AS bm
+         {_ssum('w * value')} / CAST(SUM(w) AS DOUBLE) AS bm
   FROM weighted GROUP BY event_type, b
   HAVING SUM(w) > 0
 ),
@@ -12643,7 +12540,7 @@ def q_event_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("state")
         .agg(
             F.max("_row").cast("long").alias("n_out"),
-            F.sum(F.col("_hterm").cast(DEC)).cast("double").alias("_h"),
+            stable_sum("_hterm").alias("_h"),
         )
     )
     tot = per_state.agg(F.sum("n_out").alias("_tot"))
@@ -12673,10 +12570,10 @@ rowed AS (
 ),
 per_state AS (
   SELECT state, CAST(MAX(row_n) AS BIGINT) AS n_out,
-         CAST(CAST(SUM(CAST(
-           -(CAST(n AS DOUBLE) / CAST(row_n AS DOUBLE))
-             * log2(CAST(n AS DOUBLE) / CAST(row_n AS DOUBLE))
-           AS {DEC})) AS VARCHAR) AS DOUBLE) AS h
+         {_ssum(
+             "-(CAST(n AS DOUBLE) / CAST(row_n AS DOUBLE))"
+             " * log2(CAST(n AS DOUBLE) / CAST(row_n AS DOUBLE))"
+         )} AS h
   FROM rowed GROUP BY state
 ),
 tot AS (SELECT SUM(n_out) AS t FROM per_state)

@@ -69,18 +69,24 @@ def _disc(sorted_vals, num, den):
 
 def test_quantile_disc_matches_sorted_list():
     """The shared discrete-quantile CTE picks the ceil(p*n)-th value of
-    the sorted group, on ties, on a one-row group and at p = 1/20, 1/2
+    the sorted group, on ties, on a one-row group, on a group with a
+    NULL (which counts in neither n nor the ranks) and at p = 1/20, 1/2
     and 99/100."""
     groups = {
         "ties": [3.0, 1.0, 2.0, 2.0, 2.0, 5.0, 5.0, 9.0, 1.0, 2.0],
         "one": [7.5],
         "wide": [float(i % 37) for i in range(250)],
+        "nulls": [None, 1.0, 2.0, 3.0],  # p50 = 2.0 over n = 3
     }
     fracs = [("p05", 1, 20), ("p50", 1, 2), ("p99", 99, 100)]
     con = duckdb.connect()
     con.sql(
         "CREATE VIEW t AS SELECT * FROM (VALUES "
-        + ", ".join(f"('{g}', {v})" for g, vs in groups.items() for v in vs)
+        + ", ".join(
+            f"('{g}', {'NULL' if v is None else v})"
+            for g, vs in groups.items()
+            for v in vs
+        )
         + ") AS x(g, v)"
     )
     got = {
@@ -90,7 +96,7 @@ def test_quantile_disc_matches_sorted_list():
     con.close()
     assert set(got) == set(groups)
     for g, vs in groups.items():
-        sv = sorted(vs)
+        sv = sorted(v for v in vs if v is not None)
         assert got[g] == (len(sv), *(_disc(sv, n, d) for _, n, d in fracs))
 
 

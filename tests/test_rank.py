@@ -178,8 +178,9 @@ def test_bottom_k_slab_windows_stay_composite_then_bounded(spark):
 def test_quantile_disc_slab_matches_sorted_reference(spark):
     """quantile_disc_slab must equal the textbook discrete quantile
     (sorted[ceil(p*n)-1]) for every group — including ties, singleton
-    groups, and n where p*n lands exactly on an integer (the boundary
-    the integer-arithmetic rank exists for)."""
+    groups, n where p*n lands exactly on an integer (the boundary
+    the integer-arithmetic rank exists for), and a group with a NULL,
+    which counts in neither n nor the ranks."""
     import math
 
     from kyiv_traffic_bigdata_spark.operators.rank import quantile_disc_slab
@@ -189,16 +190,18 @@ def test_quantile_disc_slab_matches_sorted_reference(spark):
         "single": [42],
         "exact_boundary": list(range(1, 21)),  # p50 rank = exactly 10
         "two": [7, 5],
+        "nulls": [None, 1, 2, 3],  # p50 = 2 over n = 3
     }
     rows = [(g, v) for g, vs in groups.items() for v in vs]
     df = spark.createDataFrame(rows, "g string, v int")
     qs = [("p25", 1, 4), ("p50", 1, 2), ("p90", 9, 10)]
     got = {
-        r["g"]: (r["p25"], r["p50"], r["p90"])
+        r["g"]: (r["n"], r["p25"], r["p50"], r["p90"])
         for r in quantile_disc_slab(df, "g", "v", qs).collect()
     }
     for g, vs in groups.items():
-        s, n = sorted(vs), len(vs)
+        s = sorted(v for v in vs if v is not None)
+        n = len(s)
         want = tuple(
             s[(num * n + den - 1) // den - 1] for _, num, den in qs
         )
@@ -207,7 +210,7 @@ def test_quantile_disc_slab_matches_sorted_reference(spark):
             (num * n + den - 1) // den == math.ceil(num / den * n)
             for _, num, den in qs
         )
-        assert got[g] == want, (g, got[g], want)
+        assert got[g] == (n, *want), (g, got[g], want)
 
 
 # ---------------------------------------------------------------------------
